@@ -10,13 +10,13 @@ import org.apache.spark.sql.types.StructType
   * README.md:31-32). There is no JVM sqlglot, so the shim is a documented
   * construct-level rewriter: Spark SQL already accepts most of the shared
   * ANSI surface natively (TRY_CAST, ILIKE, IS NOT DISTINCT FROM, `x DIV y`,
-  * `||` concat, EXISTS higher-order functions — verified by probing), and the
-  * rewriter translates the constructs it does not:
+  * `||` concat, EXISTS higher-order functions, `==` equality, `expr::TYPE`
+  * casts, `LIMIT ALL` — verified by probing), and the rewriter translates
+  * the constructs it does not:
   *
   * [[Dialect.DuckDbish]]:
-  *   - `==` equality (reference tests/test_execute.py:90)
-  *   - `expr::TYPE` cast → `CAST(expr AS TYPE)`
   *   - `"ident"` double-quoted identifiers → backtick-quoted
+  *   - unsized `VARCHAR`/`TEXT` casts → STRING
   *   - `a // b` integer division → `a DIV b` (both truncate toward zero —
   *     measured against the oracle DuckDB and gated with negative operands)
   *   - `strftime(ts, '%Y-%m')` → `date_format(ts, 'yyyy-MM')` (C format
@@ -61,11 +61,13 @@ import org.apache.spark.sql.types.StructType
   * DECODE, DATEADD/DATEDIFF with Redshift part abbreviations, bare
   * VARCHAR/TEXT casts, GETDATE/LEN renames, LISTAGG pass-through.
   *
-  * Everything the rewriter does is textual and literal-span-aware: content
-  * of single-quoted SQL string literals is never touched. DuckDB/Trino
-  * literals are ANSI ('' doubling, backslash plain — backslashes are doubled
-  * for Spark's escaping parser); Snowflake/BigQuery literals use backslash
-  * escapes exactly as Spark does and are scanned accordingly.
+  * Everything the rewriter does is textual, over the spans of one lexer
+  * ([[Dialect.lex]]): string literals, quoted identifiers and comments are
+  * opaque to every pass, which never matches or splices inside them. The
+  * ten ANSI-literal dialects ('' doubling, backslash plain) run
+  * [[Dialect.escapeBackslashLiterals]] as their first step, and the other
+  * five already escape with backslashes as Spark does, so every later
+  * pass lexes Spark's literal syntax and needs no per-dialect flag.
   */
 sealed trait Dialect {
   def rewrite(spark: SparkSession, sql: String,
@@ -166,7 +168,7 @@ object Dialect {
     */
   case object DuckDbish extends Dialect {
     override val literalBackslashEscapes: Boolean = false
-    // word-boundary + optional space before '(' + literal-span filtered: a
+    // word-boundary + optional space before '(' + span filtered: a
     // READ_JSON mention inside a string literal must NOT raise, and
     // `READ_JSON ('x')` with a space must still be caught.
     private val unsupportedRe =
@@ -183,24 +185,23 @@ object Dialect {
 
     def rewrite(spark: SparkSession, sql: String,
         schemas: Map[String, StructType]): String = {
-      val spans = literalSpans(sql)
-      unsupportedRe.findAllMatchIn(sql).find(m => outsideLiterals(spans, m.start))
+      val spans = lex(sql, backslashEscapes = false) // raw DuckDB text: ANSI literals
+      unsupportedRe.findAllMatchIn(sql).find(m => spans.outside(m.start))
         .foreach { m =>
           throw new graft.UnsupportedError(
             s"dialect construct ${m.group(1)}(...) is not supported; use READ_CSV or register a table")
         }
       val steps: Seq[String => String] = Seq(
         escapeBackslashLiterals, // FIRST: later steps generate Spark-escaped literals
-        rewriteDoubleEquals,
-        rewriteDoubleQuotedIdents(_),
+        rewriteDoubleQuotedIdents,
         s => rewriteQualify(s, spark = Some(spark)),
         s => rewriteDistinctOn(s, spark = Some(spark)),
         rewriteExclude,
-        s => rewriteStarReplace(spark, s, esc = false),
-        s => rewriteGenerateSeriesTable(s, esc = false),
-        s => rewriteArrayLiteral(s, esc = false),
+        s => rewriteStarReplace(spark, s),
+        rewriteGenerateSeriesTable,
+        rewriteArrayLiteral,
         rewriteIntDiv,
-        rewriteColonCast,
+        rewriteRsBareTypes, // DuckDB's unsized VARCHAR/TEXT
         // DuckDB's `list(x)` is an array_agg ALIAS — renamed BEFORE the
         // FILTER and array_agg rewrites so the collect-family FILTER
         // struct wrap and the ordered/keep-null/DISTINCT paths all
@@ -211,7 +212,7 @@ object Dialect {
         // collect_list, r15 verdict item 5); the list_* renames below
         // are distinct names and unaffected
         s => renameFunctions(s, Map("list" -> "array_agg")),
-        s => rewriteAggFilter(s, esc = true),
+        rewriteAggFilter,
         // DuckDB shares the inline-ORDER-BY array_agg but defaults to
         // NULLS LAST in BOTH sort directions (Postgres flips on DESC);
         // bare array_agg keeps NULL elements (struct wrap, r15)
@@ -224,7 +225,7 @@ object Dialect {
         // LAST: membership null-placement pin (DuckDB sorts NULLS LAST
         // both ways) — after every rewrite that emits or carries a
         // window / truncated ORDER BY
-        s => pinSortNulls(s, alwaysLast = true, esc = true))
+        s => pinSortNulls(s, alwaysLast = true))
       rewriteReadCsv(spark, steps.foldLeft(sql)((s, f) => f(s)), schemas)
     }
   }
@@ -249,11 +250,10 @@ object Dialect {
       // and backslash is a plain character inside string literals.
       val steps: Seq[String => String] = Seq(
         escapeBackslashLiterals,
-        rewriteDoubleEquals,
-        rewriteDoubleQuotedIdents(_),
+        rewriteDoubleQuotedIdents,
         rewriteTrinoDateFns,
         rewriteTrinoTry,
-        s => rewriteAggFilter(s, esc = true),
+        rewriteAggFilter,
         // Trino's array_agg takes the inline ORDER BY too; its default
         // null ordering is NULLS LAST regardless of direction (r16
         // second review — previously mis-pinned to the Postgres
@@ -261,8 +261,8 @@ object Dialect {
         // are kept — in the bare form too (struct wrap, r15)
         s => rewritePgArrayAgg(s, descNullsLast = true),
         rewriteKeepNullArrayAgg,
-        s => rewriteArrayLiteral(s, esc = false),
-        s => rewriteUnnest(s, esc = false),
+        rewriteArrayLiteral,
+        rewriteUnnest,
         s => renameFunctions(s, renames),
         // Trino speaks the full ANSI paging surface (r16 — raw parse
         // errors before): FETCH FIRST n ROWS WITH TIES rides the shared
@@ -276,7 +276,7 @@ object Dialect {
         // default is NULLS LAST regardless of direction (r16 second
         // review: the first wiring mis-grouped Trino with the
         // nulls-largest dialects)
-        s => pinSortNulls(s, alwaysLast = true, esc = true))
+        s => pinSortNulls(s, alwaysLast = true))
       steps.foldLeft(sql)((s, f) => f(s))
     }
   }
@@ -288,7 +288,7 @@ object Dialect {
     * `timestampdiff`), `TO_VARCHAR` with Snowflake date format elements.
     * `NVL`/`NVL2`/`TRY_CAST`/`ILIKE` are already Spark-native. Snowflake
     * string literals use backslash escapes (matching Spark's default parser),
-    * so literals are scanned with `backslashEscapes = true` and NOT doubled.
+    * so they are NOT doubled.
     */
   case object Snowflakeish extends Dialect {
     override val nameFold: NameFold = NameFold.Upper
@@ -302,8 +302,8 @@ object Dialect {
     def rewrite(spark: SparkSession, sql: String,
         schemas: Map[String, StructType]): String = {
       val steps: Seq[String => String] = Seq(
-        s => renameFunctions(s, renames, esc = true), // to_char joins to_varchar
-        s => rewriteDoubleQuotedIdents(s, esc = true),
+        s => renameFunctions(s, renames), // to_char joins to_varchar
+        rewriteDoubleQuotedIdents,
         // Snowflake supports `SELECT TOP n` (no PERCENT/TIES — those
         // spellings are T-SQL's and Snowflake's parser rejects them —
         // a NAMED error, not the silent T-SQL-semantics superset, r17).
@@ -317,7 +317,7 @@ object Dialect {
         // before MINUS silently limit the COMBINED result)
         s => rewriteTsqlTop(s, Some(spark), allowPercentTies = false,
           minusIsSetOp = true),
-        s => rewriteQualify(s, esc = true, spark = Some(spark)),
+        s => rewriteQualify(s, spark = Some(spark)),
         // Snowflake spells ordered array_agg WITHIN GROUP; its nulls sort
         // highest (last-on-ASC/first-on-DESC, like Postgres) and — unlike
         // Postgres — NULL VALUES are silently dropped from the array
@@ -333,7 +333,7 @@ object Dialect {
         // LAST: membership null-placement pin (Snowflake sorts nulls
         // largest — r16 review: the TOP wiring's LIMIT made the
         // statement ORDER BY placement membership-relevant)
-        s => pinSortNulls(s, esc = true))
+        s => pinSortNulls(s))
       steps.foldLeft(sql)((s, f) => f(s))
     }
   }
@@ -368,9 +368,9 @@ object Dialect {
     def rewrite(spark: SparkSession, sql: String,
         schemas: Map[String, StructType]): String = {
       val steps: Seq[String => String] = Seq(
-        s => rewriteQualify(s, esc = true, spark = Some(spark)),
-        s => rewriteStarReplace(spark, s, esc = true),
-        s => rewriteUnnest(s, esc = true),
+        s => rewriteQualify(s, spark = Some(spark)),
+        s => rewriteStarReplace(spark, s),
+        rewriteUnnest,
         rewriteBqSubscript,
         rewriteFormatDate,
         rewriteBqDateDiff,
@@ -379,15 +379,15 @@ object Dialect {
         rewriteBqGenerateArray,
         // IGNORE-NULLS ordered aggregation; BigQuery sorts nulls SMALLEST
         rewriteBqArrayAgg,
-        s => renameWords(s, typeRenames, esc = true),
-        s => renameFunctions(s, renames, esc = true))
+        s => renameWords(s, typeRenames),
+        s => renameFunctions(s, renames))
       steps.foldLeft(sql)((s, f) => f(s))
     }
   }
 
   /** MySQL-ish surface (reference core.py:66 — `dialect` accepts "mysql").
     * MySQL string literals use backslash escapes exactly as Spark's default
-    * parser does (esc = true, no doubling), and backtick identifiers are
+    * parser does (no doubling), and backtick identifiers are
     * already Spark's quoting. Constructs translated:
     *   - `LIMIT offset, count` → `LIMIT count OFFSET offset`
     *   - `DATE_FORMAT(x, '%d/%m/%Y')` / `STR_TO_DATE(s, 'fmt')` — MySQL `%`
@@ -415,7 +415,7 @@ object Dialect {
         rewriteMysqlDateFns,
         rewriteMysqlDayNames,
         rewriteMysqlLocate,
-        s => renameFunctions(s, renames, esc = true))
+        s => renameFunctions(s, renames))
       steps.foldLeft(sql)((s, f) => f(s))
     }
   }
@@ -440,16 +440,14 @@ object Dialect {
         schemas: Map[String, StructType]): String = {
       val steps: Seq[String => String] = Seq(
         escapeBackslashLiterals,
-        rewriteDoubleEquals,
-        rewriteDoubleQuotedIdents(_),
+        rewriteDoubleQuotedIdents,
         // DISTINCT ON is Postgres's OWN construct (DuckDB copied it) —
         // wired here since r16; runs before the FETCH/paging rewrites
         // like the DuckDB chain runs it before its LIMIT forms
         s => rewriteDistinctOn(s, spark = Some(spark)),
-        rewriteColonCast,
-        s => rewriteAggFilter(s, esc = true),
-        s => rewriteGenerateSeriesTable(s, esc = false),
-        s => rewriteArrayLiteral(s, esc = false),
+        rewriteAggFilter,
+        rewriteGenerateSeriesTable,
+        rewriteArrayLiteral,
         // FROM-clause UNNEST is everyday Postgres (r19 — a raw Spark
         // parse error before): the comma-FROM lateral spelling, WITH
         // ORDINALITY, and the multi-array zip all ride the shared
@@ -458,7 +456,7 @@ object Dialect {
         // After rewriteArrayLiteral (so ARRAY[…] args arrive in call
         // form), before the renames (string_to_array inside an UNNEST
         // argument renames in place afterwards).
-        s => rewriteUnnest(s, esc = false),
+        rewriteUnnest,
         rewriteRsBareTypes, // unsized VARCHAR/TEXT casts are Postgres-legal too
         rewritePgToChar,
         rewritePgRegexMatch,
@@ -468,13 +466,12 @@ object Dialect {
         // bare array_agg keeps NULL elements (struct wrap, r15)
         s => rewritePgArrayAgg(s, descNullsLast = false),
         rewriteKeepNullArrayAgg,
-        rewriteLimitAll,        // LIMIT ALL → no limit (Postgres no-op spelling)
         s => rewriteFetchFirstWithTies(s, Some(spark)), // FETCH FIRST n ROWS WITH TIES (rank filter)
         rewriteTsqlOffsetFetch, // ANSI OFFSET…FETCH paging (Postgres-legal)
         rewriteFetchFirst,      // …and the standalone FETCH FIRST n
         s => renameFunctions(s, renames),
         // LAST: membership null-placement pin (Postgres sorts nulls largest)
-        s => pinSortNulls(s, esc = true))
+        s => pinSortNulls(s))
       steps.foldLeft(sql)((s, f) => f(s))
     }
   }
@@ -492,11 +489,10 @@ object Dialect {
         schemas: Map[String, StructType]): String = {
       val steps: Seq[String => String] = Seq(
         escapeBackslashLiterals,
-        rewriteDoubleEquals,
-        rewriteDoubleQuotedIdents(_),
+        rewriteDoubleQuotedIdents,
         rewriteSqliteStrftime,
         rewriteSqliteDateFn,
-        s => rewriteAggFilter(s, esc = true),
+        rewriteAggFilter,
         rewriteSqliteGlob)
       steps.foldLeft(sql)((s, f) => f(s))
     }
@@ -520,7 +516,7 @@ object Dialect {
         schemas: Map[String, StructType]): String = {
       val steps: Seq[String => String] = Seq(
         escapeBackslashLiterals,
-        rewriteDoubleQuotedIdents(_),
+        rewriteDoubleQuotedIdents,
         rewriteOracleDecode,
         rewriteOracleToDate,
         rewritePgToChar,
@@ -529,10 +525,9 @@ object Dialect {
         s => rewriteFetchFirstWithTies(s, Some(spark)), // FETCH FIRST n ROWS WITH TIES (rank filter)
         rewriteTsqlOffsetFetch, // Oracle 12c OFFSET…FETCH paging
         rewriteFetchFirst,      // …and the standalone FETCH FIRST n
-        s => rewriteWord(s, "MINUS", "EXCEPT"),
-        s => rewriteWord(s, "SYSDATE", "current_timestamp()"),
+        s => renameWords(s, Map("MINUS" -> "EXCEPT", "SYSDATE" -> "current_timestamp()")),
         // LAST: membership null-placement pin (Oracle sorts nulls largest)
-        s => pinSortNulls(s, esc = true))
+        s => pinSortNulls(s))
       steps.foldLeft(sql)((s, f) => f(s))
     }
   }
@@ -574,7 +569,7 @@ object Dialect {
         rewriteTsqlDateAdd,
         rewriteTsqlDateDiff,
         rewriteTsqlDatePart,
-        s => renameFunctions(s, renames, esc = true))
+        s => renameFunctions(s, renames))
       steps.foldLeft(sql)((s, f) => f(s))
     }
   }
@@ -590,20 +585,18 @@ object Dialect {
     * NVL2, POSITION, SPLIT_PART are Spark-4-native pass-throughs.
     * Redshift string literals process backslash escapes (Postgres
     * `standard_conforming_strings = off` ancestry) exactly as Spark's
-    * parser does, so literals are scanned with esc and not doubled.
+    * parser does, so literals are not doubled.
     */
   case object RedshiftIsh extends Dialect {
     // inherits literalBackslashEscapes = true: Redshift literals process
-    // backslash escapes (see the class doc above), matching this shim's
-    // own rewrites, which all scan with `esc = true`
+    // backslash escapes (see the class doc above), as Spark's do
     private val renames = Map(
       "getdate" -> "current_timestamp", "sysdate" -> "current_timestamp",
       "len" -> "length", "strpos" -> "instr", "charindex" -> "locate")
     def rewrite(spark: SparkSession, sql: String,
         schemas: Map[String, StructType]): String = {
       val steps: Seq[String => String] = Seq(
-        s => rewriteDoubleQuotedIdents(s, esc = true),
-        rewriteColonCast,
+        rewriteDoubleQuotedIdents,
         rewriteOracleDecode,
         rewriteOracleToDate,
         rewritePgToChar,
@@ -611,10 +604,10 @@ object Dialect {
         rewriteRsDateAdd,
         rewriteRsDateDiff,
         rewriteRsBareTypes,
-        s => rewriteQualify(s, esc = true, spark = Some(spark)),
-        s => renameFunctions(s, renames, esc = true),
+        s => rewriteQualify(s, spark = Some(spark)),
+        s => renameFunctions(s, renames),
         // LAST: membership null-placement pin (Redshift sorts nulls largest)
-        s => pinSortNulls(s, esc = true))
+        s => pinSortNulls(s))
       steps.foldLeft(sql)((s, f) => f(s))
     }
   }
@@ -649,7 +642,7 @@ object Dialect {
         // "ident" → `ident` FIRST: Teradata quotes identifiers with
         // double quotes, and the keyword rewriters below must see them
         // as identifiers (their span filter covers both quote styles)
-        s => rewriteDoubleQuotedIdents(s, esc = true),
+        rewriteDoubleQuotedIdents,
         rewriteTeradataSel,
         rewriteTeradataComparators,
         rewriteTeradataInfixMod,
@@ -660,10 +653,10 @@ object Dialect {
         // tail, and the TIES/PERCENT path (r18) hands the qualify rewrite
         // INTO the rank builder so the filtered rows are ranked
         s => rewriteTsqlTop(s, Some(spark),
-          qualifyRewrite = Some(q => rewriteQualify(q, esc = true, spark = Some(spark))),
+          qualifyRewrite = Some(q => rewriteQualify(q, spark = Some(spark))),
           minusIsSetOp = true), // MINUS is a Teradata set operator
-        s => rewriteQualify(s, esc = true, spark = Some(spark)),
-        s => renameFunctions(s, renames, esc = true))
+        s => rewriteQualify(s, spark = Some(spark)),
+        s => renameFunctions(s, renames))
       steps.foldLeft(sql)((s, f) => f(s))
     }
   }
@@ -686,8 +679,8 @@ object Dialect {
     * `if(c,a,b)`, `concat`, `lower`/`upper`, `coalesce`, `length`,
     * backtick identifiers, and `%` modulo are Spark-native
     * pass-throughs. ClickHouse string literals use backslash escapes
-    * exactly as Spark's default parser does, so literals are scanned
-    * with `backslashEscapes = true` and not doubled.
+    * exactly as Spark's default parser does, so literals are not
+    * doubled.
     */
   case object ClickHouseIsh extends Dialect {
     override val nameFold: NameFold = NameFold.Sensitive
@@ -710,10 +703,10 @@ object Dialect {
         rewriteChUniq,
         rewriteChEmpty,
         rewriteChPosition,
-        s => renameFunctions(s, renames, esc = true),
+        s => renameFunctions(s, renames),
         // LAST: membership null-placement pin (ClickHouse defaults to
         // NULLS LAST in both sort directions, like DuckDB)
-        s => pinSortNulls(s, alwaysLast = true, esc = true))
+        s => pinSortNulls(s, alwaysLast = true))
       steps.foldLeft(sql)((s, f) => f(s))
     }
   }
@@ -772,7 +765,7 @@ object Dialect {
         rewriteTableauDateTrunc,
         rewriteTableauDateName,
         rewriteTableauSplit,
-        s => renameFunctions(s, renames, esc = true))
+        s => renameFunctions(s, renames))
       steps.foldLeft(sql)((s, f) => f(s))
     }
   }
@@ -802,14 +795,14 @@ object Dialect {
         schemas: Map[String, StructType]): String = {
       val steps: Seq[String => String] = Seq(
         escapeBackslashLiterals,
-        s => rewriteDoubleQuotedIdents(s, esc = true),
-        s => rewriteExasolAddUnits(s),
-        s => rewriteExasolBetweenUnits(s),
-        s => rewriteExasolTrunc(s),
+        rewriteDoubleQuotedIdents,
+        rewriteExasolAddUnits,
+        rewriteExasolBetweenUnits,
+        rewriteExasolTrunc,
         rewriteOracleDecode,
         rewriteOracleToDate,
         rewritePgToChar,
-        s => rewriteTeradataZeroNull(s))
+        rewriteTeradataZeroNull)
       steps.foldLeft(sql)((s, f) => f(s))
     }
   }
@@ -844,142 +837,144 @@ object Dialect {
         schemas: Map[String, StructType]): String = {
       val steps: Seq[String => String] = Seq(
         escapeBackslashLiterals,
-        s => rewriteDoubleQuotedIdents(s, esc = true),
-        s => rewriteDruidTime(s),
-        s => rewriteDruidDiv(s),
-        s => renameFunctions(s, renames, esc = true))
+        rewriteDoubleQuotedIdents,
+        rewriteDruidTime,
+        rewriteDruidDiv,
+        s => renameFunctions(s, renames))
       steps.foldLeft(sql)((s, f) => f(s))
     }
   }
 
-  // ---- literal-span machinery ---------------------------------------------
+  // ---- the lexer ----------------------------------------------------------
 
-  /** [start, end) spans of single-quoted string literals. ANSI/DuckDB/Trino
-    * literals escape ONLY via doubled quotes ('') — a backslash is a plain
-    * character (a literal like 'C:\' must close at its quote, or every
-    * rewrite after it lands in the wrong place). Snowflake/BigQuery literals
-    * use backslash escapes (as Spark's default parser does) — pass
-    * `backslashEscapes = true` for those dialects. Every rewrite below
-    * leaves these spans untouched.
+  /** What an opaque region of SQL text is. */
+  private[graft] sealed trait SpanKind
+  private[graft] object SpanKind {
+    /** `'…'` string literal (and `"…"` where the dialect reads it as one). */
+    case object Literal extends SpanKind
+    /** `"…"` or `` `…` `` quoted identifier. */
+    case object Ident extends SpanKind
+    /** `-- …` line comment or `/* … */` block comment (hints included). */
+    case object Comment extends SpanKind
+  }
+
+  /** One opaque region: `[start, end)` of the text it was lexed from. */
+  private[graft] final case class Span(start: Int, end: Int, kind: SpanKind)
+
+  /** The lexer's answer for one text: its opaque regions, sorted and
+    * non-overlapping. "Which span holds position i" is a binary search,
+    * because passes ask it once per regex match or even per character.
     */
-  private[graft] def literalSpans(sql: String,
-      backslashEscapes: Boolean = false): Vector[(Int, Int)] = {
-    val spans = Vector.newBuilder[(Int, Int)]
+  private[graft] final class Spans(val all: Vector[Span]) {
+    private def indexAt(i: Int): Int = {
+      var lo = 0
+      var hi = all.length - 1
+      while (lo <= hi) {
+        val mid = (lo + hi) >>> 1
+        val s = all(mid)
+        if (i < s.start) hi = mid - 1
+        else if (i >= s.end) lo = mid + 1
+        else return mid
+      }
+      -1
+    }
+    def at(i: Int): Option[Span] = {
+      val k = indexAt(i)
+      if (k < 0) None else Some(all(k))
+    }
+    def outside(i: Int): Boolean = indexAt(i) < 0
+    def hasComment: Boolean = all.exists(_.kind == SpanKind.Comment)
+  }
+
+  /** The shim's one lexer: string literals, quoted identifiers and
+    * comments in a single left-to-right pass. Interleaving matters: an
+    * apostrophe inside a comment or a quoted identifier must not open a
+    * literal, and a comment marker inside a literal must not open a
+    * comment. Every pass runs on text whose literals already use Spark's
+    * syntax (the ANSI-literal dialects run [[escapeBackslashLiterals]]
+    * first), so the defaults are Spark's: backslash escapes in `'…'`,
+    * `"…"` an identifier. Only scans over a dialect's RAW text pass that
+    * dialect's own rules. Quotes of every style escape by doubling.
+    *
+    * Bracketed comments NEST, as in Spark (SPARK-28880), Postgres and
+    * DuckDB. MySQL and Snowflake do not nest, so there a comment holding
+    * a second opener reads as unclosed and swallows the statement tail
+    * into one opaque span; rewrites never splice into opaque text and
+    * Spark's parser applies the same rule, so such input fails loudly
+    * at the parser.
+    */
+  private[graft] def lex(s: String, backslashEscapes: Boolean = true,
+      doubleQuotedIsString: Boolean = false): Spans = {
+    val b = Vector.newBuilder[Span]
     var i = 0
-    while (i < sql.length) {
-      if (sql.charAt(i) == '\'') {
-        val start = i
+    while (i < s.length) {
+      val c = s.charAt(i)
+      val st = i
+      if (c == '\'' || c == '"' || c == '`') {
+        val isString = c == '\'' || (c == '"' && doubleQuotedIsString)
         i += 1
         var done = false
-        while (i < sql.length && !done) {
-          val c = sql.charAt(i)
-          if (backslashEscapes && c == '\\' && i + 1 < sql.length) i += 2
-          else if (c == '\'' && i + 1 < sql.length && sql.charAt(i + 1) == '\'') i += 2
-          else if (c == '\'') { done = true; i += 1 }
+        while (i < s.length && !done) {
+          val ch = s.charAt(i)
+          if (isString && backslashEscapes && ch == '\\' && i + 1 < s.length) i += 2
+          else if (ch == c && i + 1 < s.length && s.charAt(i + 1) == c) i += 2
+          else { done = ch == c; i += 1 }
+        }
+        b += Span(st, i, if (isString) SpanKind.Literal else SpanKind.Ident)
+      } else if (c == '-' && s.startsWith("-", i + 1)) {
+        val e = s.indexOf('\n', i)
+        i = if (e < 0) s.length else e + 1
+        b += Span(st, i, SpanKind.Comment)
+      } else if (c == '/' && s.startsWith("*", i + 1)) {
+        var d = 1
+        i += 2
+        while (i < s.length && d > 0) {
+          if (s.startsWith("/*", i)) { d += 1; i += 2 }
+          else if (s.startsWith("*/", i)) { d -= 1; i += 2 }
           else i += 1
         }
-        spans += ((start, i))
+        b += Span(st, i, SpanKind.Comment)
       } else i += 1
     }
-    spans.result()
+    new Spans(b.result())
   }
 
-  /** Double every backslash inside string literals. DuckDB/Trino treat `\`
-    * in a literal as a plain character; Spark's default parser processes it
-    * as an escape — without this, 'C:\' swallows its closing quote and
-    * '\n' silently becomes a newline.
+  /** Double every backslash inside string literals. The ANSI-literal
+    * dialects treat `\` in a literal as a plain character; Spark's parser
+    * processes it as an escape — without this, 'C:\' swallows its closing
+    * quote and '\n' silently becomes a newline. Runs first in those
+    * dialects, so it lexes their raw text by their own rule.
     */
-  private[graft] def escapeBackslashLiterals(sql: String): String = {
-    val spans = literalSpans(sql)
-    val out = new StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\\' && !outsideLiterals(spans, i)) out.append("\\\\")
-      else out.append(c)
-      i += 1
+  private[graft] def escapeBackslashLiterals(sql: String): String =
+    replaceSpans(sql, lex(sql, backslashEscapes = false)) {
+      case Span(a, b, SpanKind.Literal) => Some(sql.substring(a, b).replace("\\", "\\\\"))
+      case _ => None
     }
-    out.toString
+
+  /** `sql` with each span the function maps to Some(text) replaced. */
+  private def replaceSpans(sql: String, spans: Spans)(f: Span => Option[String]): String = {
+    val out = new StringBuilder
+    var last = 0
+    spans.all.foreach { sp =>
+      f(sp).foreach { text =>
+        out.append(sql.substring(last, sp.start)).append(text)
+        last = sp.end
+      }
+    }
+    out.append(sql.substring(last)).toString
   }
 
-  private def outsideLiterals(spans: Vector[(Int, Int)], i: Int): Boolean =
-    !spans.exists(s => i >= s._1 && i < s._2)
-
-  /** `==` → `=` outside string literals. */
-  private[graft] def rewriteDoubleEquals(sql: String): String = {
-    val spans = literalSpans(sql)
-    val out = new StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      if (outsideLiterals(spans, i) && sql.charAt(i) == '=' &&
-          i + 1 < sql.length && sql.charAt(i + 1) == '=') {
-        out.append('='); i += 2
-      } else { out.append(sql.charAt(i)); i += 1 }
-    }
-    out.toString
-  }
-
-  /** DuckDB `"ident"` → Spark backtick `ident` (doubled "" inside becomes a
+  /** ANSI `"ident"` → Spark backtick `ident` (doubled "" inside becomes a
     * literal quote). Spark's default parser reads double quotes as string
     * literals, which would silently change semantics — so always rewrite.
     */
-  private[graft] def rewriteDoubleQuotedIdents(sql: String, esc: Boolean = false): String = {
-    val spans = literalSpans(sql, esc)
-    val out = new StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      if (outsideLiterals(spans, i) && sql.charAt(i) == '"') {
-        val ident = new StringBuilder
-        i += 1
-        var done = false
-        while (i < sql.length && !done) {
-          val c = sql.charAt(i)
-          if (c == '"' && i + 1 < sql.length && sql.charAt(i + 1) == '"') {
-            ident.append('"'); i += 2
-          } else if (c == '"') { done = true; i += 1 }
-          else { ident.append(c); i += 1 }
-        }
-        out.append('`').append(ident.toString.replace("`", "``")).append('`')
-      } else { out.append(sql.charAt(i)); i += 1 }
-    }
-    out.toString
-  }
-
-  /** Start index of the operand ending at `e` (inclusive): a string literal,
-    * a parenthesized/bracketed tail with its leading function name, or an
-    * identifier/number. Shared by `rewriteColonCast` and `rewriteIntDiv`.
-    */
-  private def operandStart(cur: String, spans: Vector[(Int, Int)], e: Int): Int =
-    cur.charAt(e) match {
-      case '\'' =>
-        // end of a string literal: find its span
-        spans.find(s => s._2 - 1 == e).map(_._1).getOrElse(
-          throw new graft.UnsupportedError(s"unbalanced string literal at $e in: $cur"))
-      case ')' | ']' =>
-        var depth = 0
-        var j = e
-        var start = -1
-        while (j >= 0 && start < 0) {
-          if (outsideLiterals(spans, j)) {
-            val c = cur.charAt(j)
-            if (c == ')' || c == ']') depth += 1
-            else if (c == '(' || c == '[') { depth -= 1; if (depth == 0) start = j }
-          }
-          j -= 1
-        }
-        if (start < 0)
-          throw new graft.UnsupportedError(s"unbalanced parens at $e in: $cur")
-        // include a leading function name: floor(x)::T casts floor(x)
-        var k = start - 1
-        while (k >= 0 && (cur.charAt(k).isLetterOrDigit || cur.charAt(k) == '_')) k -= 1
-        k + 1
-      case c if c.isLetterOrDigit || c == '_' || c == '.' || c == '`' =>
-        var k = e
-        while (k >= 0 && (cur.charAt(k).isLetterOrDigit ||
-            "._`".indexOf(cur.charAt(k)) >= 0)) k -= 1
-        k + 1
-      case other =>
-        throw new graft.UnsupportedError(s"cannot parse operand '$other' at $e in: $cur")
+  private[graft] def rewriteDoubleQuotedIdents(sql: String): String =
+    replaceSpans(sql, lex(sql)) {
+      case Span(a, b, SpanKind.Ident) if sql.charAt(a) == '"' =>
+        val closed = b - a >= 2 && sql.charAt(b - 1) == '"'
+        val ident = sql.substring(a + 1, if (closed) b - 1 else b).replace("\"\"", "\"")
+        Some("`" + ident.replace("`", "``") + "`")
+      case _ => None
     }
 
   /** DuckDB `a // b` integer division → Spark `a DIV b`. Measured against
@@ -991,68 +986,8 @@ object Dialect {
     * is out of scope. `//` cannot appear in any other SQL construct outside
     * a string literal, so the token rewrite is unambiguous.
     */
-  private[graft] def rewriteIntDiv(sql: String): String = {
-    val spans = literalSpans(sql)
-    val out = new StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      if (outsideLiterals(spans, i) && sql.charAt(i) == '/' &&
-          i + 1 < sql.length && sql.charAt(i + 1) == '/') {
-        out.append(" DIV "); i += 2
-      } else { out.append(sql.charAt(i)); i += 1 }
-    }
-    out.toString
-  }
-
-  /** `expr::TYPE` → `CAST(expr AS TYPE)`. The operand is recovered by
-    * scanning left: a string literal, a parenthesized/bracketed tail with its
-    * leading function name (`floor(x)::BIGINT`), or an identifier/number.
-    * TYPE is a single word with optional `(p[,s])` args (DECIMAL(12,2));
-    * multi-word types (DOUBLE PRECISION) are not shimmed. Chained casts work
-    * because each pass rewrites the leftmost `::` and re-scans.
-    */
-  private[graft] def rewriteColonCast(sql: String): String = {
-    var cur = sql
-    var guard = 0
-    while (guard < 64) {
-      val spans = literalSpans(cur)
-      val idx = {
-        var i = 0
-        var found = -1
-        while (i < cur.length - 1 && found < 0) {
-          if (cur.charAt(i) == ':' && cur.charAt(i + 1) == ':' && outsideLiterals(spans, i))
-            found = i
-          else i += 1
-        }
-        found
-      }
-      if (idx < 0) return cur
-      // --- type name after `::`
-      var t = idx + 2
-      while (t < cur.length && cur.charAt(t) == ' ') t += 1
-      val tStart = t
-      while (t < cur.length && (cur.charAt(t).isLetterOrDigit || cur.charAt(t) == '_')) t += 1
-      if (t == tStart)
-        throw new graft.UnsupportedError(s"cannot parse type after '::' at $idx in: $cur")
-      // optional (p[,s]) precision args
-      var tEnd = t
-      if (tEnd < cur.length && cur.charAt(tEnd) == '(') {
-        val close = cur.indexOf(')', tEnd)
-        if (close > 0 && cur.substring(tEnd + 1, close).forall(c => c.isDigit || c == ',' || c == ' '))
-          tEnd = close + 1
-      }
-      val typ = cur.substring(tStart, tEnd)
-      // --- operand before `::`
-      var e = idx - 1
-      while (e >= 0 && cur.charAt(e) == ' ') e -= 1
-      if (e < 0) throw new graft.UnsupportedError(s"no operand before '::' in: $cur")
-      val opStart = operandStart(cur, spans, e)
-      val operand = cur.substring(opStart, e + 1)
-      cur = cur.substring(0, opStart) + s"CAST($operand AS $typ)" + cur.substring(tEnd)
-      guard += 1
-    }
-    throw new graft.UnsupportedError("too many '::' casts in one statement (>64)")
-  }
+  private[graft] def rewriteIntDiv(sql: String): String =
+    replaceOutside(sql, "//".r)(_ => " DIV ")
 
   /** C strftime codes → Java SimpleDateFormat-style pattern for
     * `date_format`. Literal letters are quoted ('T'), `'` becomes `''`.
@@ -1093,7 +1028,6 @@ object Dialect {
     out.toString
   }
 
-  /** Find the `)` matching the `(` at `open` (literal-span aware). */
   /** The innermost parenthesized span enclosing position `at`:
     * Some((open, close)) indices of the paren pair, None at depth 0 or
     * on unbalanced text. Shared by the subquery-level WITH TIES /
@@ -1102,13 +1036,13 @@ object Dialect {
     * CTE body — is rewritten in place, then the caller rescans the
     * splice.
     */
-  private def enclosingParen(sql: String, spans: Vector[(Int, Int)],
+  private def enclosingParen(sql: String, spans: Spans,
       at: Int): Option[(Int, Int)] = {
     var i = at - 1
     var d = 0
     var open = -1
     while (i >= 0 && open < 0) {
-      if (outsideLiterals(spans, i)) {
+      if (spans.outside(i)) {
         val c = sql.charAt(i)
         if (c == ')') d += 1
         else if (c == '(') { if (d == 0) open = i else d -= 1 }
@@ -1122,11 +1056,12 @@ object Dialect {
     }
   }
 
-  private def matchParen(sql: String, spans: Vector[(Int, Int)], open: Int): Int = {
+  /** Find the `)` matching the `(` at `open`, skipping the lexer's spans. */
+  private def matchParen(sql: String, spans: Spans, open: Int): Int = {
     var depth = 0
     var i = open
     while (i < sql.length) {
-      if (outsideLiterals(spans, i)) {
+      if (spans.outside(i)) {
         val c = sql.charAt(i)
         if (c == '(') depth += 1
         else if (c == ')') { depth -= 1; if (depth == 0) return i }
@@ -1136,14 +1071,14 @@ object Dialect {
     -1
   }
 
-  /** Split `sql[from, to)` on top-level commas (literal-span aware). */
-  private def splitArgs(sql: String, spans: Vector[(Int, Int)], from: Int, to: Int): Seq[String] = {
+  /** Split `sql[from, to)` on top-level commas, skipping the lexer's spans. */
+  private def splitArgs(sql: String, spans: Spans, from: Int, to: Int): Seq[String] = {
     val args = Seq.newBuilder[String]
     var depth = 0
     var last = from
     var i = from
     while (i < to) {
-      if (outsideLiterals(spans, i)) {
+      if (spans.outside(i)) {
         val c = sql.charAt(i)
         if (c == '(' || c == '[') depth += 1
         else if (c == ')' || c == ']') depth -= 1
@@ -1167,8 +1102,8 @@ object Dialect {
     var changed = true
     while (changed) {
       changed = false
-      val spans = literalSpans(cur)
-      re.findAllMatchIn(cur).find(m => outsideLiterals(spans, m.start)).foreach { m =>
+      val spans = lex(cur)
+      re.findAllMatchIn(cur).find(m => spans.outside(m.start)).foreach { m =>
         val open = cur.indexOf('(', m.start)
         val close = matchParen(cur, spans, open)
         if (close < 0) throw new graft.UnsupportedError(s"unbalanced strftime( in: $cur")
@@ -1201,8 +1136,8 @@ object Dialect {
     var changed = true
     while (changed) {
       changed = false
-      val spans = literalSpans(cur)
-      re.findAllMatchIn(cur).find(m => outsideLiterals(spans, m.start)).foreach { m =>
+      val spans = lex(cur)
+      re.findAllMatchIn(cur).find(m => spans.outside(m.start)).foreach { m =>
         val open = cur.indexOf('(', m.start)
         val close = matchParen(cur, spans, open)
         if (close < 0) throw new graft.UnsupportedError(s"unbalanced string_split( in: $cur")
@@ -1224,170 +1159,43 @@ object Dialect {
     cur
   }
 
-  /** Rename `from(` → `to(` at word boundaries, outside string literals. */
-  private[graft] def renameFunctions(sql: String, renames: Map[String, String],
-      esc: Boolean = false): String = {
-    renames.foldLeft(sql) { case (cur, (from, to)) =>
-      val spans = literalSpans(cur, esc)
-      val re = ("(?i)\\b" + java.util.regex.Pattern.quote(from) + "\\s*\\(").r
-      val out = new StringBuilder
-      var last = 0
-      re.findAllMatchIn(cur).foreach { m =>
-        if (outsideLiterals(spans, m.start)) {
-          out.append(cur.substring(last, m.start)).append(to).append('(')
-          last = m.end
-        }
+  /** `sql` with every match of `re` that starts outside the lexer's
+    * spans replaced by `f(match)`.
+    */
+  private def replaceOutside(sql: String, re: scala.util.matching.Regex)(
+      f: scala.util.matching.Regex.Match => String): String = {
+    val spans = lex(sql)
+    val out = new StringBuilder
+    var last = 0
+    re.findAllMatchIn(sql).foreach { m =>
+      if (spans.outside(m.start)) {
+        out.append(sql.substring(last, m.start)).append(f(m))
+        last = m.end
       }
-      out.append(cur.substring(last))
-      out.toString
     }
+    out.append(sql.substring(last)).toString
   }
 
-  /** Rename bare words (type names like INT64 → BIGINT) at word boundaries,
-    * outside string literals.
+  /** Rename `from(` → `to(` at word boundaries, outside string literals,
+    * quoted identifiers and comments.
     */
-  private[graft] def renameWords(sql: String, renames: Map[String, String],
-      esc: Boolean = false): String = {
+  private[graft] def renameFunctions(sql: String, renames: Map[String, String]): String =
     renames.foldLeft(sql) { case (cur, (from, to)) =>
-      val spans = literalSpans(cur, esc)
-      val re = ("(?i)\\b" + java.util.regex.Pattern.quote(from) + "\\b").r
-      val out = new StringBuilder
-      var last = 0
-      re.findAllMatchIn(cur).foreach { m =>
-        if (outsideLiterals(spans, m.start)) {
-          out.append(cur.substring(last, m.start)).append(to)
-          last = m.end
-        }
-      }
-      out.append(cur.substring(last))
-      out.toString
+      replaceOutside(cur, ("(?i)\\b" + java.util.regex.Pattern.quote(from) + "\\s*\\(").r)(
+        _ => to + "(")
     }
-  }
+
+  /** Rename bare words (type names like INT64 → BIGINT, Teradata keyword
+    * operators) at word boundaries, outside string literals, quoted
+    * identifiers (a column named `lt` quoted as `"lt"` stays a column)
+    * and comments.
+    */
+  private[graft] def renameWords(sql: String, renames: Map[String, String]): String =
+    renames.foldLeft(sql) { case (cur, (from, to)) =>
+      replaceOutside(cur, ("(?i)\\b" + java.util.regex.Pattern.quote(from) + "\\b").r)(_ => to)
+    }
 
   // ---- Teradata -----------------------------------------------------------
-
-  /** Spans of single-quoted string literals PLUS double-quoted and
-    * backtick-quoted identifiers — the regions a KEYWORD rewriter must
-    * never touch (a column named `lt` quoted as `"lt"` is an identifier,
-    * not the LT comparator). Quote-doubling escapes both quote styles.
-    */
-  private[graft] def literalAndIdentSpans(sql: String,
-      backslashEscapes: Boolean = false): Vector[(Int, Int)] = {
-    val spans = Vector.newBuilder[(Int, Int)]
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'') {
-        val start = i
-        i += 1
-        var done = false
-        while (i < sql.length && !done) {
-          val ch = sql.charAt(i)
-          if (backslashEscapes && ch == '\\' && i + 1 < sql.length) i += 2
-          else if (ch == '\'' && i + 1 < sql.length && sql.charAt(i + 1) == '\'') i += 2
-          else if (ch == '\'') { done = true; i += 1 }
-          else i += 1
-        }
-        spans += ((start, i))
-      } else if (c == '"' || c == '`') {
-        val start = i
-        i += 1
-        var done = false
-        while (i < sql.length && !done) {
-          if (sql.charAt(i) == c && i + 1 < sql.length && sql.charAt(i + 1) == c) i += 2
-          else if (sql.charAt(i) == c) { done = true; i += 1 }
-          else i += 1
-        }
-        spans += ((start, i))
-      } else i += 1
-    }
-    spans.result()
-  }
-
-  /** One-pass lexer over the three opaque region kinds at once —
-    * string literals, quoted identifiers (both with quote-doubling
-    * escapes), and SQL comments (`-- …\n`, `/* … */`) — returning the
-    * spans plus whether any comment was seen. Interleaving matters
-    * (r16 fourth review): scanning literals FIRST let an apostrophe
-    * inside a comment flip literal parity and expose a real string
-    * literal's contents as clause text (or hide a real clause inside a
-    * bogus literal span).
-    */
-  private[graft] def opaqueSpans(s: String,
-      backslashEscapes: Boolean = false): (Vector[(Int, Int)], Boolean) = {
-    val kinds = opaqueSpanKinds(s, backslashEscapes)
-    (kinds.map { case (a, b, _) => (a, b) }, kinds.exists(_._3))
-  }
-
-  /** [[opaqueSpans]]'s underlying lexer with the span KIND kept —
-    * `(start, end, isComment)` — so callers that must treat comments
-    * differently from literals/quoted identifiers (e.g.
-    * [[blankComments]], which erases only the comment spans) can tell
-    * them apart without a second parse.
-    */
-  private[graft] def opaqueSpanKinds(s: String,
-      backslashEscapes: Boolean = false): Vector[(Int, Int, Boolean)] = {
-    val b = Vector.newBuilder[(Int, Int, Boolean)]
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') {
-        val st = i
-        i += 1
-        var done = false
-        while (i < s.length && !done) {
-          val ch = s.charAt(i)
-          if (backslashEscapes && ch == '\\' && i + 1 < s.length) i += 2
-          else if (ch == '\'' && i + 1 < s.length && s.charAt(i + 1) == '\'') i += 2
-          else if (ch == '\'') { done = true; i += 1 }
-          else i += 1
-        }
-        b += ((st, i, false))
-      } else if (c == '"' || c == '`') {
-        val st = i
-        i += 1
-        var done = false
-        while (i < s.length && !done) {
-          if (s.charAt(i) == c && i + 1 < s.length && s.charAt(i + 1) == c) i += 2
-          else if (s.charAt(i) == c) { done = true; i += 1 }
-          else i += 1
-        }
-        b += ((st, i, false))
-      } else if (c == '-' && i + 1 < s.length && s.charAt(i + 1) == '-') {
-        val e = s.indexOf('\n', i)
-        val end = if (e < 0) s.length else e + 1
-        b += ((i, end, true))
-        i = end
-      } else if (c == '/' && i + 1 < s.length && s.charAt(i + 1) == '*') {
-        // bracketed comments NEST in Spark (SPARK-28880) and in
-        // Postgres/DuckDB — ending at the first */ would leave the
-        // outer comment's tail as live statement text (r17 review).
-        // DELIBERATE Spark-lexer alignment (r18, from ADVICE): MySQL
-        // (and arguably Snowflake) do NOT nest — there, `/* a /* b */`
-        // is a complete comment, and this lexer reads it as unclosed,
-        // swallowing the statement tail into one opaque span. The
-        // blast radius is pathological inputs only: rewrites decline
-        // on opaque text (never splice into it), and Spark's own
-        // parser applies the SAME nesting rule to whatever passes
-        // through, so a divergent input dies loudly at the parser
-        // instead of silently changing meaning. If a non-nesting
-        // source dialect ever needs exact comment semantics, thread a
-        // per-dialect nesting flag like `backslashEscapes`.
-        val st = i
-        var d = 1
-        i += 2
-        while (i < s.length && d > 0) {
-          if (s.charAt(i) == '/' && i + 1 < s.length && s.charAt(i + 1) == '*') {
-            d += 1; i += 2
-          } else if (s.charAt(i) == '*' && i + 1 < s.length && s.charAt(i + 1) == '/') {
-            d -= 1; i += 2
-          } else i += 1
-        }
-        b += ((st, i, true))
-      } else i += 1
-    }
-    b.result()
-  }
 
   /** Replace every SQL comment span with spaces of the same length,
     * leaving literals and quoted identifiers (and their contents, even
@@ -1398,50 +1206,45 @@ object Dialect {
     * instead of silently declining (r16 "what's wrong" item 1: the
     * decline reverted the site to Spark's null polarity with no error).
     */
-  private[graft] def blankComments(s: String,
-      backslashEscapes: Boolean = false): String = {
-    val kinds = opaqueSpanKinds(s, backslashEscapes)
-    if (!kinds.exists(_._3)) return s
-    val out = new StringBuilder(s)
-    kinds.foreach { case (a, b, isComment) =>
-      // Spark optimizer HINTS (`/*+ … */`) are comments to the lexer
-      // but plan directives to Spark — blanking one silently drops a
-      // BROADCAST/REPARTITION and changes the physical plan (r17
-      // review). A hint is honored by Spark ONLY directly after a
-      // SELECT keyword, so only THAT position is preserved (second r17
-      // review pass: preserving `/*+` text elsewhere — mid-select-list,
-      // inside ORDER BY keys — broke item naming and key splitting that
-      // blanking used to keep clean, for positions where the hint is
-      // inert anyway). A kept hint stays opaque for span purposes
-      // (parens inside it never skew a depth map) and, being a
-      // self-terminating block span, cannot swallow appended syntax
-      // the way a `--` line comment can.
-      val isHint = b - a >= 3 && s.charAt(a) == '/' && s.charAt(a + 1) == '*' &&
-        s.charAt(a + 2) == '+'
-      val afterSelect = isHint && {
-        // scan back over whitespace AND over prior comment/hint spans
-        // (third r17 review pass: Spark honors `SELECT /*+h1*/ /*+h2*/`
-        // and `SELECT /* note */ /*+h*/` — both hints must survive —
-        // and skipping spans whole also stops the word SELECT INSIDE a
-        // preceding comment from falsely qualifying an inert hint)
-        var j = a - 1
-        var moved = true
-        while (moved) {
-          moved = false
-          while (j >= 0 && s.charAt(j).isWhitespace) { j -= 1; moved = true }
-          kinds.find { case (ka, kb, kc) => kc && j >= ka && j < kb }
-            .foreach { case (ka, _, _) => j = ka - 1; moved = true }
-        }
-        j >= 5 && s.regionMatches(true, j - 5, "SELECT", 0, 6) &&
-          (j - 6 < 0 || {
-            val c = s.charAt(j - 6); !c.isLetterOrDigit && c != '_'
-          })
+  private[graft] def blankComments(s: String): String = {
+    val spans = lex(s)
+    if (!spans.hasComment) return s
+    // Spark optimizer HINTS (`/*+ … */`) are comments to the lexer
+    // but plan directives to Spark — blanking one silently drops a
+    // BROADCAST/REPARTITION and changes the physical plan (r17
+    // review). A hint is honored by Spark ONLY directly after a
+    // SELECT keyword, so only THAT position is preserved (second r17
+    // review pass: preserving `/*+` text elsewhere — mid-select-list,
+    // inside ORDER BY keys — broke item naming and key splitting that
+    // blanking used to keep clean, for positions where the hint is
+    // inert anyway). A kept hint stays opaque for span purposes
+    // (parens inside it never skew a depth map) and, being a
+    // self-terminating block span, cannot swallow appended syntax
+    // the way a `--` line comment can.
+    def afterSelect(a: Int): Boolean = {
+      // scan back over whitespace AND over prior comment/hint spans
+      // (third r17 review pass: Spark honors `SELECT /*+h1*/ /*+h2*/`
+      // and `SELECT /* note */ /*+h*/` — both hints must survive —
+      // and skipping spans whole also stops the word SELECT INSIDE a
+      // preceding comment from falsely qualifying an inert hint)
+      var j = a - 1
+      var moved = true
+      while (moved) {
+        moved = false
+        while (j >= 0 && s.charAt(j).isWhitespace) { j -= 1; moved = true }
+        spans.at(j).filter(_.kind == SpanKind.Comment)
+          .foreach { sp => j = sp.start - 1; moved = true }
       }
-      if (isComment && !(isHint && afterSelect)) {
-        var i = a; while (i < b) { out.setCharAt(i, ' '); i += 1 }
-      }
+      j >= 5 && s.regionMatches(true, j - 5, "SELECT", 0, 6) &&
+        (j - 6 < 0 || {
+          val c = s.charAt(j - 6); !c.isLetterOrDigit && c != '_'
+        })
     }
-    out.toString
+    replaceSpans(s, spans) {
+      case Span(a, b, SpanKind.Comment) if !(s.startsWith("/*+", a) && b - a >= 3 && afterSelect(a)) =>
+        Some(" " * (b - a))
+      case _ => None
+    }
   }
 
   /** The optimizer hint directly after the SELECT at `selIdx`, as
@@ -1452,7 +1255,7 @@ object Dialect {
     * had already appeared).
     */
   private def leadingHint(sql: String, selIdx: Int,
-      spans: Vector[(Int, Int)]): (String, Int) = {
+      spans: Spans): (String, Int) = {
     val out = new StringBuilder
     var end = selIdx + "SELECT".length
     var hs = end
@@ -1465,10 +1268,10 @@ object Dialect {
       more = false
       while (hs < sql.length && sql.charAt(hs).isWhitespace) hs += 1
       if (sql.startsWith("/*+", hs)) {
-        spans.find(_._1 == hs).foreach { case (a, b) =>
-          out.append(sql.substring(a, b)).append(' ')
-          hs = b
-          end = b
+        spans.at(hs).foreach { sp =>
+          out.append(sql.substring(sp.start, sp.end)).append(' ')
+          hs = sp.end
+          end = sp.end
           more = true
         }
       }
@@ -1484,7 +1287,7 @@ object Dialect {
     * the trio had been duplicated between them).
     */
   private def hintAndDistinct(sql: String, selIdx: Int,
-      spans: Vector[(Int, Int)], onDistinctOn: => String): (String, Boolean, Int) = {
+      spans: Spans, onDistinctOn: => String): (String, Boolean, Int) = {
     val (hint, afterHint) = leadingHint(sql, selIdx, spans)
     val rest = sql.substring(afterHint)
     if ("(?is)^\\s*DISTINCT\\s+ON\\b".r.findFirstIn(rest).isDefined)
@@ -1493,39 +1296,19 @@ object Dialect {
     (hint, dm.isDefined, afterHint + dm.map(_.end).getOrElse(0))
   }
 
-  /** [[renameWords]] over [[literalAndIdentSpans]] — keyword rewriting
-    * that leaves quoted identifiers untouched.
-    */
-  private def renameWordsOutsideIdents(sql: String,
-      renames: Map[String, String]): String =
-    renames.foldLeft(sql) { case (cur, (from, to)) =>
-      val spans = literalAndIdentSpans(cur, backslashEscapes = true)
-      val re = ("(?i)\\b" + java.util.regex.Pattern.quote(from) + "\\b").r
-      val out = new StringBuilder
-      var last = 0
-      re.findAllMatchIn(cur).foreach { m =>
-        if (outsideLiterals(spans, m.start)) {
-          out.append(cur.substring(last, m.start)).append(to)
-          last = m.end
-        }
-      }
-      out.append(cur.substring(last))
-      out.toString
-    }
-
   /** `SEL` → `SELECT` — Teradata's statement-keyword abbreviation. Word
     * boundary, literal- and quoted-identifier-filtered (quote a column
     * actually named `sel` to keep it an identifier).
     */
   private[graft] def rewriteTeradataSel(sql: String): String =
-    renameWordsOutsideIdents(sql, Map("sel" -> "SELECT"))
+    renameWords(sql, Map("sel" -> "SELECT"))
 
   /** Teradata keyword comparison operators — `EQ NE LT LE GT GE` → the
     * symbol forms. Word-boundary, literal- and quoted-identifier-filtered
     * (quote a column named like an operator keyword to keep it).
     */
   private[graft] def rewriteTeradataComparators(sql: String): String =
-    renameWordsOutsideIdents(sql, Map("eq" -> "=", "ne" -> "<>", "lt" -> "<",
+    renameWords(sql, Map("eq" -> "=", "ne" -> "<>", "lt" -> "<",
       "le" -> "<=", "gt" -> ">", "ge" -> ">="))
 
   /** Infix `MOD` → `%`. Infix vs the Spark-native `MOD(a, b)` CALL is
@@ -1536,28 +1319,16 @@ object Dialect {
     * misclassify the perfectly-valid `a MOD (b + 1)`. Teradata's MOD
     * result sign follows the dividend, exactly like Spark's `%`.
     */
-  private[graft] def rewriteTeradataInfixMod(sql: String): String = {
-    val spans = literalAndIdentSpans(sql, backslashEscapes = true)
-    val re = "(?i)\\bMOD\\b".r
-    val out = new StringBuilder
-    var last = 0
-    re.findAllMatchIn(sql).foreach { m =>
-      if (outsideLiterals(spans, m.start)) {
-        var p = m.start - 1
-        while (p >= 0 && sql.charAt(p).isWhitespace) p -= 1
-        val infix = p >= 0 && {
-          val c = sql.charAt(p)
-          c.isLetterOrDigit || c == '_' || c == ')' || c == '`' || c == '"'
-        }
-        if (infix) {
-          out.append(sql.substring(last, m.start)).append("%")
-          last = m.end
-        }
+  private[graft] def rewriteTeradataInfixMod(sql: String): String =
+    replaceOutside(sql, "(?i)\\bMOD\\b".r) { m =>
+      var p = m.start - 1
+      while (p >= 0 && sql.charAt(p).isWhitespace) p -= 1
+      val infix = p >= 0 && {
+        val c = sql.charAt(p)
+        c.isLetterOrDigit || c == '_' || c == ')' || c == '`' || c == '"'
       }
+      if (infix) "%" else m.matched
     }
-    out.append(sql.substring(last))
-    out.toString
-  }
 
   /** Teradata `**` exponent → `power(l, r)` for BOUNDED operand forms:
     * a number (optionally signed on the right, scientific notation
@@ -1576,11 +1347,9 @@ object Dialect {
     var changed = true
     while (changed) {
       changed = false
-      val spans = literalAndIdentSpans(cur, backslashEscapes = true)
-      def spanAt(i: Int): Option[(Int, Int)] =
-        spans.find(sp => i >= sp._1 && i < sp._2)
+      val spans = lex(cur)
       val idx = "\\*\\*".r.findAllMatchIn(cur)
-        .find(m => spanAt(m.start).isEmpty).map(_.start)
+        .find(m => spans.at(m.start).isEmpty).map(_.start)
       idx.foreach { at =>
         def isIdent(c: Char) = c.isLetterOrDigit || c == '_' || c == '.'
         def raise(side: String): Nothing = throw new graft.UnsupportedError(
@@ -1591,8 +1360,8 @@ object Dialect {
           var i = closeExclusive - 1
           var depth = 0
           while (i >= 0) {
-            spanAt(i) match {
-              case Some(sp) => i = sp._1 - 1
+            spans.at(i) match {
+              case Some(sp) => i = sp.start - 1
               case None =>
                 val c = cur.charAt(i)
                 if (c == ')') depth += 1
@@ -1607,8 +1376,8 @@ object Dialect {
           var i = open
           var depth = 0
           while (i < cur.length) {
-            spanAt(i) match {
-              case Some(sp) => i = sp._2
+            spans.at(i) match {
+              case Some(sp) => i = sp.end
               case None =>
                 val c = cur.charAt(i)
                 if (c == '(') depth += 1
@@ -1622,8 +1391,8 @@ object Dialect {
         var e = at
         while (e > 0 && cur.charAt(e - 1).isWhitespace) e -= 1
         var s = e
-        if (s > 0 && spanAt(s - 1).isDefined) {
-          s = spanAt(s - 1).get._1 // quoted identifier operand
+        if (s > 0 && spans.at(s - 1).isDefined) {
+          s = spans.at(s - 1).get.start // quoted identifier operand
         } else if (s > 0 && cur.charAt(s - 1) == ')') {
           s = groupStart(s)
           while (s > 0 && isIdent(cur.charAt(s - 1))) s -= 1 // call name
@@ -1648,8 +1417,8 @@ object Dialect {
             re += 1
             while (re < cur.length && cur.charAt(re).isWhitespace) re += 1
           }
-          if (re < cur.length && spanAt(re).isDefined) {
-            re = spanAt(re).get._2 // quoted identifier operand
+          if (re < cur.length && spans.at(re).isDefined) {
+            re = spans.at(re).get.end // quoted identifier operand
           } else if (re < cur.length && cur.charAt(re) == '(') {
             re = groupEnd(re)
           } else {
@@ -1673,7 +1442,7 @@ object Dialect {
     * (argument-count checked — both are strictly unary in Teradata).
     */
   private[graft] def rewriteTeradataZeroNull(sql: String): String =
-    rewriteCall(sql, "zeroifnull|nullifzero", esc = true) { (name, args) =>
+    rewriteCall(sql, "zeroifnull|nullifzero") { (name, args) =>
       if (args.length != 1)
         throw new graft.UnsupportedError(s"$name expects a single argument")
       if (name.equalsIgnoreCase("zeroifnull")) s"coalesce(${args(0)}, 0)"
@@ -1689,7 +1458,7 @@ object Dialect {
     * names. The transform must not emit a call that itself matches `names`
     * (guarded at 256 passes).
     */
-  private def rewriteCall(sql: String, names: String, esc: Boolean = false)(
+  private def rewriteCall(sql: String, names: String)(
       transform: (String, Seq[String]) => String): String = {
     val re = ("(?i)\\b(" + names + ")\\s*\\(").r
     var cur = sql
@@ -1700,8 +1469,8 @@ object Dialect {
       guard += 1
       if (guard > 256)
         throw new graft.UnsupportedError(s"rewrite of $names did not terminate")
-      val spans = literalSpans(cur, esc)
-      re.findAllMatchIn(cur).find(m => outsideLiterals(spans, m.start)).foreach { m =>
+      val spans = lex(cur)
+      re.findAllMatchIn(cur).find(m => spans.outside(m.start)).foreach { m =>
         val open = m.end - 1 // the regex consumed through '('
         val close = matchParen(cur, spans, open)
         if (close < 0)
@@ -1729,14 +1498,14 @@ object Dialect {
 
   // ---- QUALIFY ------------------------------------------------------------
 
-  /** Paren depth before each character (literal-span aware). */
-  private def depthAt(sql: String, spans: Vector[(Int, Int)]): Array[Int] = {
+  /** Paren depth before each character, skipping the lexer's spans. */
+  private def depthAt(sql: String, spans: Spans): Array[Int] = {
     val d = new Array[Int](sql.length + 1)
     var depth = 0
     var i = 0
     while (i < sql.length) {
       d(i) = depth
-      if (outsideLiterals(spans, i)) {
+      if (spans.outside(i)) {
         val c = sql.charAt(i)
         if (c == '(') depth += 1 else if (c == ')') depth -= 1
       }
@@ -1749,10 +1518,10 @@ object Dialect {
   /** First word-boundary match of `kw` at paren depth 0, outside literals,
     * at or after `from`; -1 if none.
     */
-  private def topLevelKeyword(sql: String, spans: Vector[(Int, Int)],
+  private def topLevelKeyword(sql: String, spans: Spans,
       depth: Array[Int], kw: String, from: Int = 0): Int =
     ("(?i)\\b" + kw + "\\b").r.findAllMatchIn(sql)
-      .find(m => m.start >= from && depth(m.start) == 0 && outsideLiterals(spans, m.start))
+      .find(m => m.start >= from && depth(m.start) == 0 && spans.outside(m.start))
       .map(_.start).getOrElse(-1)
 
   /** Output-column name of a select-list item: the identifier after a
@@ -1827,7 +1596,7 @@ object Dialect {
     */
   private def resolveOrdinalSortKeys(ord: String, items: Seq[String],
       construct: String): String = {
-    val oSpans = literalSpans(ord, backslashEscapes = true)
+    val oSpans = lex(ord)
     val ordinalRe =
       "(?is)^(\\d+)((?:\\s+(?:ASC|DESC))?(?:\\s+NULLS\\s+(?:FIRST|LAST))?)\\s*$".r
     splitArgs(ord, oSpans, 0, ord.length).map(_.trim).map { part =>
@@ -1869,7 +1638,7 @@ object Dialect {
     * (pred) AS __qual` is valid Spark); only the names come from the
     * expansion.
     */
-  private[graft] def rewriteQualify(sql0: String, esc: Boolean = false,
+  private[graft] def rewriteQualify(sql0: String,
       spark: Option[SparkSession] = None): String = {
     // comments are normalized to whitespace up front (r17 review):
     // [[blankComments]] is length-preserving, so no offset shifts; a
@@ -1879,8 +1648,8 @@ object Dialect {
     // trailing `--` comment at the end of the inner statement (a
     // confirmed parse-error repro on legal Snowflake text). Statements
     // the rewrite does not touch are returned byte-identical (sql0).
-    val sql = blankComments(sql0, esc)
-    val spans = opaqueSpans(sql, esc)._1
+    val sql = blankComments(sql0)
+    val spans = lex(sql)
     val depth = depthAt(sql, spans)
     val qIdx = topLevelKeyword(sql, spans, depth, "QUALIFY")
     if (qIdx < 0) {
@@ -1889,15 +1658,15 @@ object Dialect {
       // Snowflake idiom): rewrite the innermost parenthesized statement
       // containing the clause in place, then rescan the splice
       val m = "(?i)\\bQUALIFY\\b".r.findAllMatchIn(sql)
-        .find(mm => outsideLiterals(spans, mm.start) && depth(mm.start) > 0)
+        .find(mm => spans.outside(mm.start) && depth(mm.start) > 0)
         .getOrElse(return sql0)
       val (open, close) = enclosingParen(sql, spans, m.start)
         .getOrElse(return sql0)
       val inner = sql.substring(open + 1, close)
-      val rebuilt = rewriteQualify(inner, esc, spark)
+      val rebuilt = rewriteQualify(inner, spark)
       if (rebuilt == inner) return sql0 // not a rewritable inner statement — stay loud
       return rewriteQualify(
-        sql.substring(0, open + 1) + rebuilt + sql.substring(close), esc, spark)
+        sql.substring(0, open + 1) + rebuilt + sql.substring(close), spark)
     }
     val afterQ = qIdx + "QUALIFY".length
     val boundary = Seq("ORDER", "LIMIT")
@@ -1908,13 +1677,13 @@ object Dialect {
     val pred = sql.substring(afterQ, boundary).trim
     val tail = sql.substring(boundary)
     if (pred.isEmpty) throw new graft.UnsupportedError("QUALIFY requires a predicate")
-    val predSpans = opaqueSpans(pred, esc)._1
+    val predSpans = lex(pred)
     val hasWindow = "(?i)\\bOVER\\s*\\(".r.findAllMatchIn(pred)
-      .exists(m => outsideLiterals(predSpans, m.start))
+      .exists(m => predSpans.outside(m.start))
     if (!hasWindow) {
       s"SELECT * FROM ( $inner ) __qualify WHERE $pred $tail"
     } else {
-      val iSpans = opaqueSpans(inner, esc)._1
+      val iSpans = lex(inner)
       val iDepth = depthAt(inner, iSpans)
       val selIdx = topLevelKeyword(inner, iSpans, iDepth, "SELECT")
       val fromIdx = topLevelKeyword(inner, iSpans, iDepth, "FROM")
@@ -1957,31 +1726,10 @@ object Dialect {
     * touched — the EXCEPT set operator never follows `*`.
     */
   private[graft] def rewriteExclude(sql: String): String = {
-    val spans = literalSpans(sql)
-    val withParens = new StringBuilder
-    var last = 0
-    val re = """(?i)\*\s*EXCLUDE\s*\(""".r
-    re.findAllMatchIn(sql).foreach { m =>
-      if (outsideLiterals(spans, m.start)) {
-        withParens.append(sql.substring(last, m.start)).append("* EXCEPT (")
-        last = m.end
-      }
-    }
-    withParens.append(sql.substring(last))
-    val cur = withParens.toString
+    val withParens = replaceOutside(sql, """(?i)\*\s*EXCLUDE\s*\(""".r)(_ => "* EXCEPT (")
     // bare single-column form: * EXCLUDE col
-    val spans2 = literalSpans(cur)
-    val re2 = """(?i)\*\s*EXCLUDE\s+([A-Za-z_][A-Za-z0-9_]*)""".r
-    val out = new StringBuilder
-    last = 0
-    re2.findAllMatchIn(cur).foreach { m =>
-      if (outsideLiterals(spans2, m.start)) {
-        out.append(cur.substring(last, m.start)).append("* EXCEPT (").append(m.group(1)).append(")")
-        last = m.end
-      }
-    }
-    out.append(cur.substring(last))
-    out.toString
+    replaceOutside(withParens, """(?i)\*\s*EXCLUDE\s+([A-Za-z_][A-Za-z0-9_]*)""".r)(
+      m => s"* EXCEPT (${m.group(1)})")
   }
 
   /** DuckDB/BigQuery `SELECT * REPLACE (expr AS col[, …]) FROM <table>` —
@@ -2030,7 +1778,7 @@ object Dialect {
     * [[rewriteStarReplace]] and [[expandStarItems]] (r17 review: the
     * two copies had already started to drift).
     */
-  private def parseReplaceItems(text: String, spans: Vector[(Int, Int)],
+  private def parseReplaceItems(text: String, spans: Spans,
       open: Int, close: Int, errPrefix: String): Map[String, String] = {
     val pairs = splitArgs(text, spans, open + 1, close).map(_.trim).map { r =>
       "(?is)^(.*\\S)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*|`[^`]+`)$".r
@@ -2103,8 +1851,7 @@ object Dialect {
     kept
   }
 
-  private[graft] def rewriteStarReplace(spark: SparkSession, sql: String,
-      esc: Boolean): String = {
+  private[graft] def rewriteStarReplace(spark: SparkSession, sql: String): String = {
     // an EXCLUDE/EXCEPT clause may sit BETWEEN the star and REPLACE —
     // DuckDB's combined `* EXCLUDE (…) REPLACE (…)` (r19; its grammar
     // puts EXCLUDE first — the reverse order is a DuckDB error too and
@@ -2153,9 +1900,9 @@ object Dialect {
       // below): a ')' in the REPLACE list, a FROM, or a star clause
       // inside a COMMENT must not terminate the paren match, hijack
       // the FROM-token scan, or trigger the rewrite
-      val spans = opaqueSpans(cur, esc)._1
+      val spans = lex(cur)
       re.findAllMatchIn(cur)
-        .flatMap(m => if (outsideLiterals(spans, m.start))
+        .flatMap(m => if (spans.outside(m.start))
           starAt(cur, m.start).map { case (s0, q) => (m, s0, q) } else None)
         .nextOption() match {
         case None => return cur
@@ -2176,7 +1923,7 @@ object Dialect {
           // against the wrong table's schema
           val fromTok = "(?i)\\bFROM\\b".r.findAllMatchIn(cur)
             .find(mm => mm.start > close && depth(mm.start) == d0 &&
-              outsideLiterals(spans, mm.start))
+              spans.outside(mm.start))
             .getOrElse(throw new graft.UnsupportedError(
               "* REPLACE requires a FROM <table> at the same query level"))
           val afterFrom = cur.substring(fromTok.end)
@@ -2209,7 +1956,7 @@ object Dialect {
               // for the paren match (r19, from ADVICE): a `)` inside a
               // comment within the derived text must not end the match
               // early and truncate the subquery
-              val fSpans = opaqueSpans(afterFrom, esc)._1
+              val fSpans = lex(afterFrom)
               val dClose = matchParen(afterFrom, fSpans, wsLen)
               if (dClose < 0)
                 throw new graft.UnsupportedError(
@@ -2282,15 +2029,15 @@ object Dialect {
     * LIMIT. Like QUALIFY, select items must be nameable (alias or bare
     * column) so the outer projection can re-select them.
     */
-  private[graft] def rewriteDistinctOn(sql0: String, esc: Boolean = false,
+  private[graft] def rewriteDistinctOn(sql0: String,
       spark: Option[SparkSession] = None): String = {
     // comments normalized to whitespace up front (r17, as in
     // [[rewriteQualify]]): keyword/paren text inside a comment cannot
     // trigger the rewrite or skew the depth map, and the emitted
     // single-line window splice cannot be swallowed by a trailing `--`
     // comment. Untouched statements return byte-identical (sql0).
-    val sql = blankComments(sql0, esc)
-    val spans = opaqueSpans(sql, esc)._1
+    val sql = blankComments(sql0)
+    val spans = lex(sql)
     val depth = depthAt(sql, spans)
     // SPAN-BASED detection (third r17 review pass: a regex hint-group
     // `(/\*\+.*?\*/)?` could span LIVE SQL between two unrelated */
@@ -2305,7 +2052,7 @@ object Dialect {
         .map(m2 => DonSite(selStart, afterHint + m2.end - 1, hint))
     }
     val selStarts = "(?i)\\bSELECT\\b".r.findAllMatchIn(sql)
-      .filter(mm => outsideLiterals(spans, mm.start)).map(_.start).toList
+      .filter(mm => spans.outside(mm.start)).map(_.start).toList
     // lazy sweeps: donAt copies the statement tail, so stop at the
     // first hit instead of probing every SELECT (r17 review)
     val site = selStarts.iterator.filter(depth(_) == 0).map(donAt)
@@ -2318,10 +2065,10 @@ object Dialect {
         val (open, close) = enclosingParen(sql, spans, nested.selStart)
           .getOrElse(return sql0)
         val inner = sql.substring(open + 1, close)
-        val rebuilt = rewriteDistinctOn(inner, esc, spark)
+        val rebuilt = rewriteDistinctOn(inner, spark)
         if (rebuilt == inner) return sql0 // not a rewritable inner statement — stay loud
         return rewriteDistinctOn(
-          sql.substring(0, open + 1) + rebuilt + sql.substring(close), esc, spark)
+          sql.substring(0, open + 1) + rebuilt + sql.substring(close), spark)
       }
     val keysOpen = site.keysOpen
     val keysClose = matchParen(sql, spans, keysOpen)
@@ -2404,7 +2151,7 @@ object Dialect {
     }
 
   private[graft] def rewriteSnowDateAdd(sql: String): String =
-    rewriteCall(sql, "dateadd", esc = true) { (fn, args) =>
+    rewriteCall(sql, "dateadd") { (fn, args) =>
       if (args.length != 3)
         throw new graft.UnsupportedError(s"$fn expects (part, n, expr)")
       dateAddExpr(snowPart(args(0), fn), args(1), args(2))
@@ -2438,7 +2185,7 @@ object Dialect {
     * Monday — Snowflake's WEEK_START=0 ISO-like default).
     */
   private[graft] def rewriteSnowDateDiff(sql: String): String =
-    rewriteCall(sql, "datediff", esc = true) { (fn, args) =>
+    rewriteCall(sql, "datediff") { (fn, args) =>
       if (args.length != 3)
         throw new graft.UnsupportedError(s"$fn expects (part, start, end)")
       boundaryDateDiff(snowPart(args(0), fn), args(1), args(2), "0001-01-01", "date_diff")
@@ -2480,7 +2227,7 @@ object Dialect {
     * numeric picture formats raise).
     */
   private[graft] def rewriteToVarchar(sql: String): String =
-    rewriteCall(sql, "to_varchar", esc = true) { (fn, args) =>
+    rewriteCall(sql, "to_varchar") { (fn, args) =>
       args match {
         case Seq(x) => s"CAST($x AS STRING)"
         case Seq(x, SingleLiteral(f)) =>
@@ -2497,7 +2244,7 @@ object Dialect {
     * codes with the format FIRST → `date_format(d, javaPattern)`.
     */
   private[graft] def rewriteFormatDate(sql: String): String =
-    rewriteCall(sql, "format_date|format_timestamp", esc = true) { (fn, args) =>
+    rewriteCall(sql, "format_date|format_timestamp") { (fn, args) =>
       args match {
         case Seq(SingleLiteral(f), x) =>
           val java = translateStrftimeFormat(f)
@@ -2513,7 +2260,7 @@ object Dialect {
     * proleptic 0001-01-07 is a Sunday).
     */
   private[graft] def rewriteBqDateDiff(sql: String): String =
-    rewriteCall(sql, "date_diff|timestamp_diff", esc = true) { (fn, args) =>
+    rewriteCall(sql, "date_diff|timestamp_diff") { (fn, args) =>
       if (args.length != 3)
         throw new graft.UnsupportedError(s"$fn expects (end, start, part)")
       boundaryDateDiff(snowPart(args(2), fn), args(1), args(0), "0001-01-07", "datediff")
@@ -2527,7 +2274,7 @@ object Dialect {
     * `DATE_FORMAT` is rewritten to Spark's function of the SAME name with a
     * translated pattern — the second visit sees no `%` codes and declines).
     */
-  private def rewriteCallOpt(sql: String, names: String, esc: Boolean = false)(
+  private def rewriteCallOpt(sql: String, names: String)(
       transform: (String, Seq[String]) => Option[String]): String = {
     val re = ("(?i)\\b(" + names + ")\\s*\\(").r
     var cur = sql
@@ -2535,8 +2282,8 @@ object Dialect {
     var guard = 0
     while (guard < 256) {
       guard += 1
-      val spans = literalSpans(cur, esc)
-      re.findAllMatchIn(cur).find(m => m.start >= from && outsideLiterals(spans, m.start)) match {
+      val spans = lex(cur)
+      re.findAllMatchIn(cur).find(m => m.start >= from && spans.outside(m.start)) match {
         case None => return cur
         case Some(m) =>
           val open = m.end - 1
@@ -2602,11 +2349,11 @@ object Dialect {
     * translated pattern, which a rescanning rewriter would translate
     * again and corrupt).
     */
-  private def rewriteCallOnePass(sql: String, names: String, esc: Boolean = false)(
+  private def rewriteCallOnePass(sql: String, names: String)(
       transform: (String, Seq[String]) => String): String = {
     val re = ("(?i)\\b(" + names + ")\\s*\\(").r
-    val spans = literalSpans(sql, esc)
-    re.findAllMatchIn(sql).find(m => outsideLiterals(spans, m.start)) match {
+    val spans = lex(sql)
+    re.findAllMatchIn(sql).find(m => spans.outside(m.start)) match {
       case None => sql
       case Some(m) =>
         val open = m.end - 1
@@ -2614,9 +2361,9 @@ object Dialect {
         if (close < 0)
           throw new graft.UnsupportedError(s"unbalanced ${m.group(1)}( in: $sql")
         val args = splitArgs(sql, spans, open + 1, close)
-          .map(a => rewriteCallOnePass(a, names, esc)(transform)).map(_.trim)
+          .map(a => rewriteCallOnePass(a, names)(transform)).map(_.trim)
         sql.substring(0, m.start) + transform(m.group(1), args) +
-          rewriteCallOnePass(sql.substring(close + 1), names, esc)(transform)
+          rewriteCallOnePass(sql.substring(close + 1), names)(transform)
     }
   }
 
@@ -2634,7 +2381,7 @@ object Dialect {
     * re-scanned, so the translated pattern cannot be re-translated.
     */
   private[graft] def rewriteMysqlDateFns(sql: String): String =
-    rewriteCallOnePass(sql, "date_format|str_to_date", esc = true) { (fn, args) =>
+    rewriteCallOnePass(sql, "date_format|str_to_date") { (fn, args) =>
       args match {
         case Seq(x, SingleLiteral(f)) =>
           val java = translateMysqlFormat(f).replace("'", "''")
@@ -2659,15 +2406,15 @@ object Dialect {
     * (`GROUP_CONCAT(a, b)` concatenation form) are not shimmed — raise.
     */
   private[graft] def rewriteGroupConcat(sql: String): String =
-    rewriteCall(sql, "group_concat", esc = true) { (fn, args) =>
+    rewriteCall(sql, "group_concat") { (fn, args) =>
       if (args.length != 1)
         throw new graft.UnsupportedError(
           s"$fn with multiple expressions is not supported; use CONCAT_WS inside it")
       val arg = args.head
-      val spans = literalSpans(arg, backslashEscapes = true)
+      val spans = lex(arg)
       val depth = depthAt(arg, spans)
       def find(re: String): Option[scala.util.matching.Regex.Match] =
-        re.r.findAllMatchIn(arg).find(m => depth(m.start) == 0 && outsideLiterals(spans, m.start))
+        re.r.findAllMatchIn(arg).find(m => depth(m.start) == 0 && spans.outside(m.start))
       val sepM = find("""(?i)\bSEPARATOR\b""")
       val ordM = find("""(?i)\bORDER\s+BY\b""")
       val sep = sepM match {
@@ -2692,28 +2439,16 @@ object Dialect {
     * comma form only occurs in a LIMIT clause, so the token rewrite is
     * unambiguous at any nesting depth.
     */
-  private[graft] def rewriteMysqlLimit(sql: String): String = {
-    val spans = literalSpans(sql, backslashEscapes = true)
-    val re = """(?i)\bLIMIT\s+(\d+)\s*,\s*(\d+)""".r
-    val out = new StringBuilder
-    var last = 0
-    re.findAllMatchIn(sql).foreach { m =>
-      if (outsideLiterals(spans, m.start)) {
-        out.append(sql.substring(last, m.start))
-          .append("LIMIT ").append(m.group(2)).append(" OFFSET ").append(m.group(1))
-        last = m.end
-      }
-    }
-    out.append(sql.substring(last))
-    out.toString
-  }
+  private[graft] def rewriteMysqlLimit(sql: String): String =
+    replaceOutside(sql, """(?i)\bLIMIT\s+(\d+)\s*,\s*(\d+)""".r)(
+      m => s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}")
 
   /** MySQL `LOCATE(substr, str)` → Spark `instr(str, substr)` (swapped
     * argument order, same 1-based / 0-when-absent contract). The 3-argument
     * start-position form has no Spark builtin — raise.
     */
   private[graft] def rewriteMysqlLocate(sql: String): String =
-    rewriteCall(sql, "locate", esc = true) { (fn, args) =>
+    rewriteCall(sql, "locate") { (fn, args) =>
       args match {
         case Seq(sub, str) => s"instr($str, $sub)"
         case _ => throw new graft.UnsupportedError(
@@ -2797,8 +2532,8 @@ object Dialect {
     var changed = true
     while (changed) {
       changed = false
-      val spans = literalSpans(cur, backslashEscapes = true)
-      re.findAllMatchIn(cur).find(m => outsideLiterals(spans, m.start)).foreach { m =>
+      val spans = lex(cur)
+      re.findAllMatchIn(cur).find(m => spans.outside(m.start)).foreach { m =>
         val pat = m.group(1).replace("\\\\", "\\").replace("''", "'")
         val rx = new StringBuilder("^")
         pat.foreach {
@@ -2916,37 +2651,21 @@ object Dialect {
     * return differently-ordered rows.
     */
   private[graft] def rewriteOracleRownum(sql: String): String = {
-    val spans = literalSpans(sql, backslashEscapes = true)
+    val spans = lex(sql)
     val tail = """(?i)\bWHERE\s+ROWNUM\s*(<=|<)\s*(\d+)\s*$""".r
-    tail.findFirstMatchIn(sql).filter(m => outsideLiterals(spans, m.start)) match {
+    tail.findFirstMatchIn(sql).filter(m => spans.outside(m.start)) match {
       case Some(m) =>
         val n = m.group(2).toLong
         sql.substring(0, m.start) + s"LIMIT ${if (m.group(1) == "<") n - 1 else n}"
       case None =>
         """(?i)\bROWNUM\b""".r.findAllMatchIn(sql)
-          .find(m => outsideLiterals(spans, m.start)).foreach { _ =>
+          .find(m => spans.outside(m.start)).foreach { _ =>
             throw new graft.UnsupportedError(
               "ROWNUM is only supported as a trailing 'WHERE ROWNUM <= n'; " +
                 "use ORDER BY ... LIMIT for top-k")
           }
         sql
     }
-  }
-
-  /** Whole-word, literal-span-aware keyword replacement (`MINUS` →
-    * `EXCEPT`, `SYSDATE` → `current_timestamp()`).
-    */
-  private[graft] def rewriteWord(sql: String, from: String, to: String): String = {
-    val spans = literalSpans(sql, backslashEscapes = true)
-    val re = ("(?i)\\b" + from + "\\b").r
-    val out = new StringBuilder
-    var last = 0
-    re.findAllMatchIn(sql).filter(m => outsideLiterals(spans, m.start)).foreach { m =>
-      out.append(sql.substring(last, m.start)).append(to)
-      last = m.end
-    }
-    out.append(sql.substring(last))
-    out.toString
   }
 
   // ---- T-SQL-ish helpers --------------------------------------------------
@@ -2974,19 +2693,8 @@ object Dialect {
     * brackets cannot nest and `]` cannot appear inside, so a flat scan is
     * exact). Literal spans untouched.
     */
-  private[graft] def rewriteBracketIdents(sql: String): String = {
-    val spans = literalSpans(sql, backslashEscapes = true)
-    val re = """\[([^\[\]]+)\]""".r
-    val out = new StringBuilder
-    var last = 0
-    re.findAllMatchIn(sql).filter(m => outsideLiterals(spans, m.start)).foreach { m =>
-      out.append(sql.substring(last, m.start))
-        .append('`').append(m.group(1)).append('`')
-      last = m.end
-    }
-    out.append(sql.substring(last))
-    out.toString
-  }
+  private[graft] def rewriteBracketIdents(sql: String): String =
+    replaceOutside(sql, """\[([^\[\]]+)\]""".r)(m => s"`${m.group(1)}`")
 
   /** `SELECT TOP n …` / `SELECT TOP (n) …` → `SELECT … LIMIT n`, with the
     * LIMIT inserted at the END of that SELECT's scope: the first `)` that
@@ -3087,10 +2795,10 @@ object Dialect {
       // re-emitted by armHint below. Spans are OPAQUE (hints included) so
       // a paren or keyword inside a preserved hint cannot skew the scope
       // scan either.
-      val blanked = blankComments(cur, backslashEscapes = true)
-      val spans = opaqueSpans(blanked, backslashEscapes = true)._1
+      val blanked = blankComments(cur)
+      val spans = lex(blanked)
       val siteOpt = selRe.findAllMatchIn(blanked)
-        .filter(sm => outsideLiterals(spans, sm.start))
+        .filter(sm => spans.outside(sm.start))
         .flatMap { sm =>
           val (_, afterHint) = leadingHint(blanked, sm.start, spans)
           topTail.findFirstMatchIn(blanked.substring(afterHint)).map { tm =>
@@ -3127,7 +2835,7 @@ object Dialect {
           val dmap = depthAt(blanked, spans)
           "(?is)\\bMINUS\\s+(?:(?:ALL|DISTINCT)\\s+)?(?:SELECT\\b|\\()".r
             .findAllMatchIn(blanked)
-            .find(mm => outsideLiterals(spans, mm.start) && dmap(mm.start) == 0)
+            .find(mm => spans.outside(mm.start) && dmap(mm.start) == 0)
             .foreach(_ => throw new graft.UnsupportedError(
               "MINUS as a set operation is not supported on this " +
                 "dialect's chain (spell it EXCEPT) — a TOP cannot be " +
@@ -3140,7 +2848,7 @@ object Dialect {
         var scopeEnd = blanked.length
         var found = false
         while (i < blanked.length && !found) {
-          if (!outsideLiterals(spans, i)) i += 1
+          if (!spans.outside(i)) i += 1
           else {
             val c = blanked.charAt(i)
             if (c == '(') { depth += 1; i += 1 }
@@ -3181,7 +2889,7 @@ object Dialect {
         // hint-preserved by the blanking).
         val armBlank = blanked.substring(m.end, scopeEnd)
         lazy val armOrderIdx = {
-          val aSpans = literalSpans(armBlank, backslashEscapes = true)
+          val aSpans = lex(armBlank)
           topLevelKeyword(armBlank, aSpans, depthAt(armBlank, aSpans), "ORDER")
         }
         // an optimizer hint directly after `TOP n` (`SELECT TOP 100 /*+
@@ -3196,8 +2904,8 @@ object Dialect {
         // greedy whitespace runs straight through the blanked hint bytes,
         // so m.end is already past it — collect the original hint spans
         // lying within [m.start, m.end)
-        val armHint = opaqueSpanKinds(cur, backslashEscapes = true)
-          .collect { case (a, b, true) if a >= m.start && b <= m.end &&
+        val armHint = lex(cur).all
+          .collect { case Span(a, b, SpanKind.Comment) if a >= m.start && b <= m.end &&
               b - a >= 3 && cur.charAt(a + 1) == '*' && cur.charAt(a + 2) == '+' =>
             cur.substring(a, b) + " "
           }.mkString
@@ -3340,7 +3048,7 @@ object Dialect {
     * FORMATTING — there is no Spark cast equivalent, so it raises.
     */
   private[graft] def rewriteTsqlConvert(sql: String): String =
-    rewriteCall(sql, "convert", esc = true) { (fn, args) =>
+    rewriteCall(sql, "convert") { (fn, args) =>
       if (args.length != 2)
         throw new graft.UnsupportedError(
           s"$fn expects (type, expr); style arguments are not supported")
@@ -3371,7 +3079,7 @@ object Dialect {
     * behavior as Snowflake's, different part-abbreviation set.
     */
   private[graft] def rewriteTsqlDateAdd(sql: String): String =
-    rewriteCall(sql, "dateadd", esc = true) { (fn, args) =>
+    rewriteCall(sql, "dateadd") { (fn, args) =>
       if (args.length != 3)
         throw new graft.UnsupportedError(s"$fn expects (part, n, expr)")
       dateAddExpr(tsqlPart(args(0), fn), args(1), args(2))
@@ -3383,7 +3091,7 @@ object Dialect {
     * 0001-01-07) where Snowflake's is a Monday.
     */
   private[graft] def rewriteTsqlDateDiff(sql: String): String =
-    rewriteCall(sql, "datediff", esc = true) { (fn, args) =>
+    rewriteCall(sql, "datediff") { (fn, args) =>
       if (args.length != 3)
         throw new graft.UnsupportedError(s"$fn expects (part, start, end)")
       boundaryDateDiff(tsqlPart(args(0), fn), args(1), args(2), "0001-01-07", "date_diff")
@@ -3400,11 +3108,11 @@ object Dialect {
     // comment-blanked scan / original splice, like [[rewriteFetchFirst]]
     // (r18 review): an OFFSET…FETCH inside a comment must not splice,
     // and a comment between the clause's tokens must not hide it
-    val blanked = blankComments(sql, backslashEscapes = true)
-    val spans = literalSpans(blanked, backslashEscapes = true)
+    val blanked = blankComments(sql)
+    val spans = lex(blanked)
     val out = new StringBuilder
     var last = 0
-    re.findAllMatchIn(blanked).filter(m => outsideLiterals(spans, m.start)).foreach { m =>
+    re.findAllMatchIn(blanked).filter(m => spans.outside(m.start)).foreach { m =>
       val repl =
         if (m.group(2) != null) s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}"
         else s"OFFSET ${m.group(1)}"
@@ -3422,7 +3130,7 @@ object Dialect {
     * one for half the year.
     */
   private[graft] def rewriteTsqlDatePart(sql: String): String =
-    rewriteCall(sql, "datepart", esc = true) { (fn, args) =>
+    rewriteCall(sql, "datepart") { (fn, args) =>
       if (args.length != 2)
         throw new graft.UnsupportedError(s"$fn expects (part, expr)")
       tsqlPart(args(0), fn) match {
@@ -3436,19 +3144,9 @@ object Dialect {
     * ` NOT RLIKE ` (whitespace-delimited binary form only — a unary `~`
     * is Spark's bitwise NOT and is left alone; literal spans untouched).
     */
-  private[graft] def rewritePgRegexMatch(sql: String): String = {
-    val spans = literalSpans(sql, backslashEscapes = true)
-    val re = """(?<=\s)(!~|~)(?=\s)""".r
-    val out = new StringBuilder
-    var last = 0
-    re.findAllMatchIn(sql).filter(m => outsideLiterals(spans, m.start)).foreach { m =>
-      out.append(sql.substring(last, m.start))
-      out.append(if (m.group(1) == "!~") "NOT RLIKE" else "RLIKE")
-      last = m.end
-    }
-    out.append(sql.substring(last))
-    out.toString
-  }
+  private[graft] def rewritePgRegexMatch(sql: String): String =
+    replaceOutside(sql, """(?<=\s)(!~|~)(?=\s)""".r)(
+      m => if (m.group(1) == "!~") "NOT RLIKE" else "RLIKE")
 
   /** Postgres EXTRACT fields that differ from Spark's same-named ones:
     * `EPOCH` → `unix_timestamp(x)` (second precision — the integral
@@ -3483,15 +3181,15 @@ object Dialect {
     * and passes through.
     */
   private[graft] def rewritePgStringAgg(sql: String): String =
-    rewriteCallOpt(sql, "string_agg", esc = true) { (_, args) =>
+    rewriteCallOpt(sql, "string_agg") { (_, args) =>
       args match {
         // a multi-key ORDER BY splits at its top-level commas, so rejoin
         // everything after the expression before locating the clause
         case x +: restParts if restParts.nonEmpty =>
           val rest = restParts.mkString(", ")
-          val spans = literalSpans(rest, backslashEscapes = true)
+          val spans = lex(rest)
           """(?i)\bORDER\s+BY\b""".r.findAllMatchIn(rest)
-            .find(m => outsideLiterals(spans, m.start))
+            .find(m => spans.outside(m.start))
             .map { m =>
               val sep = rest.substring(0, m.start).trim
               val ord = rest.substring(m.end).trim
@@ -3536,7 +3234,7 @@ object Dialect {
     */
   private[graft] def rewritePgArrayAgg(sql: String,
       descNullsLast: Boolean, skipNullValues: Boolean = false): String =
-    rewriteCallOpt(sql, "array_agg", esc = true) { (fn, args) =>
+    rewriteCallOpt(sql, "array_agg") { (fn, args) =>
       orderedCollectExpr(fn, args.mkString(", ").trim, descNullsLast,
         ascNullsFirst = false, skipNullValues = skipNullValues)
     }
@@ -3551,12 +3249,12 @@ object Dialect {
     * fix — shared by the windowed-FILTER and keep-null collect
     * rewrites so the two cannot drift).
     */
-  private def consumeOverSpec(after: String, esc: Boolean,
+  private def consumeOverSpec(after: String,
       context: => String): Option[(String, Int)] =
     "(?is)^(\\s*OVER\\b\\s*)".r.findFirstMatchIn(after).map { om =>
       val p = om.end
       if (p < after.length && after.charAt(p) == '(') {
-        val oc = matchParen(after, literalSpans(after, esc), p)
+        val oc = matchParen(after, lex(after), p)
         if (oc < 0)
           throw new graft.UnsupportedError(s"unbalanced OVER ( in: $context")
         (after.substring(p, oc + 1), oc + 1)
@@ -3590,9 +3288,9 @@ object Dialect {
     var guard = 0
     while (guard < 256) {
       guard += 1
-      val spans = literalSpans(cur, backslashEscapes = true)
+      val spans = lex(cur)
       re.findAllMatchIn(cur)
-        .find(m => m.start >= from && outsideLiterals(spans, m.start)) match {
+        .find(m => m.start >= from && spans.outside(m.start)) match {
         case None => return cur
         case Some(m) =>
           val open = m.end - 1
@@ -3600,10 +3298,10 @@ object Dialect {
           if (close < 0)
             throw new graft.UnsupportedError(s"unbalanced array_agg( in: $cur")
           val arg = cur.substring(open + 1, close).trim
-          val aSpans = literalSpans(arg, backslashEscapes = true)
+          val aSpans = lex(arg)
           val aDepth = depthAt(arg, aSpans)
           val hasOrder = "(?i)\\bORDER\\s+BY\\b".r.findAllMatchIn(arg)
-            .exists(mm => aDepth(mm.start) == 0 && outsideLiterals(aSpans, mm.start))
+            .exists(mm => aDepth(mm.start) == 0 && aSpans.outside(mm.start))
           val marked = arg.contains("'__f'") ||
             "(?i)\\braise_error\\s*\\(".r.findFirstIn(arg).isDefined
           if (hasOrder || marked || arg.isEmpty ||
@@ -3621,7 +3319,7 @@ object Dialect {
             val base = s"$collectFn(named_struct('__v', $v))"
             val after = cur.substring(close + 1)
             val (replacement, consumed) =
-              consumeOverSpec(after, esc = true, cur) match {
+              consumeOverSpec(after, cur) match {
                 case Some((spec, specEnd)) =>
                   (s"transform($base OVER $spec, s -> s.__v)", specEnd)
                 case None => (s"transform($base, s -> s.__v)", 0)
@@ -3668,21 +3366,21 @@ object Dialect {
       descNullsLast: Boolean, ascNullsFirst: Boolean,
       skipNullValues: Boolean,
       valueWrap: String => String = identity): Option[String] = {
-      val spans = literalSpans(joined, backslashEscapes = true)
+      val spans = lex(joined)
       val depth = depthAt(joined, spans)
       """(?i)\bORDER\s+BY\b""".r.findAllMatchIn(joined)
-        .find(m => depth(m.start) == 0 && outsideLiterals(spans, m.start))
+        .find(m => depth(m.start) == 0 && spans.outside(m.start))
         .map { m =>
           val x0 = joined.substring(0, m.start).trim
           val ordAll = joined.substring(m.end).trim
           val (isDistinct, x) =
             "(?is)^DISTINCT\\s+(.*)$".r.findFirstMatchIn(x0)
               .map(mm => (true, mm.group(1).trim)).getOrElse((false, x0))
-          val xSpans = literalSpans(x, backslashEscapes = true)
+          val xSpans = lex(x)
           if (x.isEmpty || splitArgs(x, xSpans, 0, x.length).length != 1)
             throw new graft.UnsupportedError(
               s"$fn takes exactly one aggregated expression, got: $x")
-          val oSpans = literalSpans(ordAll, backslashEscapes = true)
+          val oSpans = lex(ordAll)
           // per key: `expr [ASC|DESC] [NULLS FIRST|LAST]`
           val keys = splitArgs(ordAll, oSpans, 0, ordAll.length).map(_.trim).map { k0 =>
             val explicitNullsLast =
@@ -3781,20 +3479,20 @@ object Dialect {
     * documented narrowing of an order-undefined contract.
     */
   private[graft] def rewriteBqArrayAgg(sql: String): String =
-    rewriteCallOpt(sql, "array_agg", esc = true) { (fn, args) =>
+    rewriteCallOpt(sql, "array_agg") { (fn, args) =>
       val joined = args.mkString(", ").trim
-      val spans = literalSpans(joined, backslashEscapes = true)
+      val spans = lex(joined)
       val depth = depthAt(joined, spans)
       def topLevel(re: String): Option[scala.util.matching.Regex.Match] =
         re.r.findAllMatchIn(joined)
-          .find(m => depth(m.start) == 0 && outsideLiterals(spans, m.start))
+          .find(m => depth(m.start) == 0 && spans.outside(m.start))
       val limitM = topLevel("(?i)\\bLIMIT\\s+(\\d+)\\s*$")
       val core0 = limitM.map(m => joined.substring(0, m.start)).getOrElse(joined).trim
-      val cSpans = literalSpans(core0, backslashEscapes = true)
+      val cSpans = lex(core0)
       val cDepth = depthAt(core0, cSpans)
       def inCore(re: String): Option[scala.util.matching.Regex.Match] =
         re.r.findAllMatchIn(core0)
-          .find(m => cDepth(m.start) == 0 && outsideLiterals(cSpans, m.start))
+          .find(m => cDepth(m.start) == 0 && cSpans.outside(m.start))
       val ign = inCore("(?i)\\bIGNORE\\s+NULLS\\b")
       ign match {
         case None =>
@@ -3869,9 +3567,9 @@ object Dialect {
     var guard = 0
     while (guard < 256) {
       guard += 1
-      val spans = literalSpans(cur, backslashEscapes = true)
+      val spans = lex(cur)
       re.findAllMatchIn(cur)
-        .find(m => m.start >= from && outsideLiterals(spans, m.start)) match {
+        .find(m => m.start >= from && spans.outside(m.start)) match {
         case None => return cur
         case Some(m) =>
           val open = m.end - 1
@@ -3882,7 +3580,7 @@ object Dialect {
           "(?is)^\\s*WITHIN\\s+GROUP\\s*\\(".r.findFirstMatchIn(after) match {
             case None => from = close + 1
             case Some(w) =>
-              val aSpans = literalSpans(after, backslashEscapes = true)
+              val aSpans = lex(after)
               val wOpen = w.end - 1
               val wClose = matchParen(after, aSpans, wOpen)
               if (wClose < 0)
@@ -3967,7 +3665,7 @@ object Dialect {
     "bit_and", "bit_or", "bit_xor", "sum_distinct",
     "hll_sketch_agg", "try_sum", "try_avg")
 
-  private[graft] def rewriteAggFilter(sql: String, esc: Boolean = false): String = {
+  private[graft] def rewriteAggFilter(sql: String): String = {
     val re = "(?i)\\)\\s*FILTER\\s*\\(".r
     val distinctRe = "(?is)^DISTINCT\\s+(.*)$".r
     val whereRe = "(?is)^WHERE\\b(.*)$".r
@@ -3979,9 +3677,9 @@ object Dialect {
       guard += 1
       if (guard > 256)
         throw new graft.UnsupportedError("FILTER rewrite did not terminate")
-      val spans = literalSpans(cur, esc)
+      val spans = lex(cur)
       re.findAllMatchIn(cur)
-        .find(m => outsideLiterals(spans, m.start) && outsideLiterals(spans, m.end - 1))
+        .find(m => spans.outside(m.start) && spans.outside(m.end - 1))
         .foreach { m =>
           val aggClose = m.start // the aggregate call's ')'
           val filtOpen = m.end - 1 // the '(' after FILTER
@@ -3998,7 +3696,7 @@ object Dialect {
           var i = aggClose
           var aggOpen = -1
           while (i >= 0 && aggOpen < 0) {
-            if (outsideLiterals(spans, i)) {
+            if (spans.outside(i)) {
               val c = cur.charAt(i)
               if (c == ')') depth += 1
               else if (c == '(') { depth -= 1; if (depth == 0) aggOpen = i }
@@ -4044,13 +3742,13 @@ object Dialect {
               // NULL elements in array_agg, so the bare CASE wrap would
               // conflate a genuine NULL element with a filtered-out row
               if (Set("array_agg", "collect_list", "collect_set").contains(f)) {
-                val aSpans = literalSpans(a, esc)
+                val aSpans = lex(a)
                 val aDepth = depthAt(a, aSpans)
                 // an ordered collect (`array_agg(x ORDER BY y)`, pre-rewrite)
                 // has no correct wrap at all (the downstream struct collect
                 // would surface filtered rows as NULLs) — named fail-fast
                 if ("(?i)\\bORDER\\s+BY\\b".r.findAllMatchIn(a)
-                    .exists(mm => aDepth(mm.start) == 0 && outsideLiterals(aSpans, mm.start)))
+                    .exists(mm => aDepth(mm.start) == 0 && aSpans.outside(mm.start)))
                   throw new graft.UnsupportedError(
                     s"FILTER on an inline-ORDER-BY $f is outside the shimmed " +
                       "surface (the CASE wrap would inject the filtered rows " +
@@ -4068,7 +3766,7 @@ object Dialect {
                 val wrapped = s"$fn(${prefix}CASE WHEN $cond THEN " +
                   s"named_struct('__f', $v) END)"
                 val after = cur.substring(filtClose + 1)
-                consumeOverSpec(after, esc, cur) match {
+                consumeOverSpec(after, cur) match {
                   case Some((spec, specEnd)) =>
                     spanEnd = filtClose + 1 + specEnd
                     s"transform($wrapped OVER $spec, s -> s.__f)"
@@ -4114,7 +3812,7 @@ object Dialect {
     * Snowflake/T-SQL spelling, Redshift part vocabulary.
     */
   private[graft] def rewriteRsDateAdd(sql: String): String =
-    rewriteCall(sql, "dateadd", esc = true) { (fn, args) =>
+    rewriteCall(sql, "dateadd") { (fn, args) =>
       if (args.length != 3)
         throw new graft.UnsupportedError(s"$fn expects (part, n, expr)")
       dateAddExpr(rsPart(args(0), fn), args(1), args(2))
@@ -4125,24 +3823,23 @@ object Dialect {
     * DATEDIFF(week) boundary.
     */
   private[graft] def rewriteRsDateDiff(sql: String): String =
-    rewriteCall(sql, "datediff", esc = true) { (fn, args) =>
+    rewriteCall(sql, "datediff") { (fn, args) =>
       if (args.length != 3)
         throw new graft.UnsupportedError(s"$fn expects (part, start, end)")
       boundaryDateDiff(rsPart(args(0), fn), args(1), args(2), "0001-01-07", "date_diff")
     }
 
-  /** Bare `VARCHAR`/`TEXT`/`BPCHAR` (no length) in the type position of
-    * a `CAST`/`TRY_CAST` → STRING — Redshift and Postgres cast to
-    * unsized VARCHAR freely (`x::TEXT` arrives here already
-    * CAST-spelled by the colon rewrite), Spark's parser demands a
-    * length. ONLY the cast-argument position is rewritten: a column or
-    * alias legitimately NAMED text/varchar (`SELECT body AS text`) is
-    * code, not a type — an earlier whole-text word rewrite corrupted
-    * exactly that. Sized `VARCHAR(n)` doesn't match the trailing
-    * pattern and passes through Spark-native.
+  /** Bare `VARCHAR`/`TEXT`/`BPCHAR` (no length) in a type position →
+    * STRING — Redshift, Postgres and DuckDB cast to unsized VARCHAR
+    * freely, Spark's parser demands a length. Two positions are type
+    * positions: the type argument of a `CAST`/`TRY_CAST` and the type
+    * after a `::` cast (Spark parses `::` itself). A column or alias
+    * legitimately NAMED text/varchar (`SELECT body AS text`) is code,
+    * not a type — an earlier whole-text word rewrite corrupted exactly
+    * that. Sized `VARCHAR(n)` passes through Spark-native.
     */
-  private[graft] def rewriteRsBareTypes(sql: String): String =
-    rewriteCallOpt(sql, "cast|try_cast", esc = true) { (fn, args) =>
+  private[graft] def rewriteRsBareTypes(sql: String): String = {
+    val casts = rewriteCallOpt(sql, "cast|try_cast") { (fn, args) =>
       args match {
         case Seq(one) =>
           """(?is)^(.*\sAS\s+)(VARCHAR|TEXT|BPCHAR)\s*$""".r.findFirstMatchIn(one)
@@ -4150,6 +3847,8 @@ object Dialect {
         case _ => None
       }
     }
+    replaceOutside(casts, """(?i)::\s*(?:VARCHAR|TEXT|BPCHAR)\b(?!\s*\()""".r)(_ => "::STRING")
+  }
 
   // ---- ClickHouse-ish helpers --------------------------------------------
 
@@ -4161,7 +3860,7 @@ object Dialect {
     * fail-soft choice and matches what SQL users expect of the CASE form).
     */
   private[graft] def rewriteChAggIf(sql: String): String =
-    rewriteCallOpt(sql, "countIf|sumIf|avgIf|minIf|maxIf", esc = true) { (fn, args) =>
+    rewriteCallOpt(sql, "countIf|sumIf|avgIf|minIf|maxIf") { (fn, args) =>
       (fn.toLowerCase, args) match {
         case ("countif", Seq(c)) => Some(s"count_if($c)")
         case ("countif", Seq(x, c)) => Some(s"count(CASE WHEN $c THEN $x END)")
@@ -4177,7 +3876,7 @@ object Dialect {
 
   /** `multiIf(c1, v1, …, cN, vN, else)` → searched CASE. */
   private[graft] def rewriteChMultiIf(sql: String): String =
-    rewriteCallOpt(sql, "multiIf", esc = true) { (_, args) =>
+    rewriteCallOpt(sql, "multiIf") { (_, args) =>
       if (args.length < 3 || args.length % 2 == 0)
         throw new graft.UnsupportedError(
           "multiIf expects cond,value pairs plus a final else")
@@ -4196,7 +3895,7 @@ object Dialect {
     rewriteCallOpt(sql,
       "toYYYYMMDD|toYYYYMM|toYear|toMonth|toDayOfMonth|toDate|toString|" +
         "toInt32|toInt64|toFloat64|toStartOfYear|toStartOfMonth|" +
-        "toStartOfDay|toUnixTimestamp", esc = true) { (fn, args) =>
+        "toStartOfDay|toUnixTimestamp") { (fn, args) =>
       if (args.length != 1)
         throw new graft.UnsupportedError(s"ClickHouse $fn expects one argument")
       val x = args.head
@@ -4230,7 +3929,7 @@ object Dialect {
     * silently change the result type).
     */
   private[graft] def rewriteChFormatDateTime(sql: String): String =
-    rewriteCallOpt(sql, "formatDateTime|fromUnixTimestamp", esc = true) { (fn, args) =>
+    rewriteCallOpt(sql, "formatDateTime|fromUnixTimestamp") { (fn, args) =>
       if (fn.equalsIgnoreCase("formatdatetime")) args match {
         case Seq(x, SingleLiteral(f)) =>
           Some(s"date_format($x, '${translateMysqlFormat(f).replace("'", "''")}')")
@@ -4255,7 +3954,7 @@ object Dialect {
     * ('weekday N', 'unixepoch', fractional offsets) raise.
     */
   private[graft] def rewriteSqliteDateFn(sql: String): String =
-    rewriteCallOpt(sql, "date", esc = true) { (_, args) =>
+    rewriteCallOpt(sql, "date") { (_, args) =>
       args match {
         case Seq(x) => Some(s"CAST($x AS DATE)")
         case base +: mods =>
@@ -4296,8 +3995,7 @@ object Dialect {
     * have no direct Spark spelling).
     */
   private[graft] def rewriteChArrayHof(sql: String): String =
-    rewriteCallOpt(sql, "arrayMap|arrayFilter|arrayExists|arrayAll|arrayCount",
-      esc = true) { (fn, args) =>
+    rewriteCallOpt(sql, "arrayMap|arrayFilter|arrayExists|arrayAll|arrayCount") { (fn, args) =>
       args match {
         case Seq(lam, arr) => Some(fn.toLowerCase match {
           case "arraymap" => s"transform($arr, $lam)"
@@ -4318,7 +4016,7 @@ object Dialect {
     * [[rewriteStringSplit]].
     */
   private[graft] def rewriteChSplit(sql: String): String =
-    rewriteCallOpt(sql, "splitByChar|splitByString", esc = true) { (_, args) =>
+    rewriteCallOpt(sql, "splitByChar|splitByString") { (_, args) =>
       args match {
         case Seq(sepArg, s) =>
           val sep = sepArg match {
@@ -4338,7 +4036,7 @@ object Dialect {
     * approx_count_distinct (ClickHouse's uniq is itself approximate).
     */
   private[graft] def rewriteChUniq(sql: String): String =
-    rewriteCallOpt(sql, "uniqExact|uniq", esc = true) { (fn, args) =>
+    rewriteCallOpt(sql, "uniqExact|uniq") { (fn, args) =>
       if (args.isEmpty)
         throw new graft.UnsupportedError(s"ClickHouse $fn expects arguments")
       Some(if (fn.equalsIgnoreCase("uniqexact"))
@@ -4348,7 +4046,7 @@ object Dialect {
 
   /** `empty(s)` / `notEmpty(s)` string emptiness tests. */
   private[graft] def rewriteChEmpty(sql: String): String =
-    rewriteCallOpt(sql, "notEmpty|empty", esc = true) { (fn, args) =>
+    rewriteCallOpt(sql, "notEmpty|empty") { (fn, args) =>
       args match {
         case Seq(x) => Some(
           if (fn.equalsIgnoreCase("empty")) s"(length($x) = 0)"
@@ -4363,7 +4061,7 @@ object Dialect {
     * through untouched.
     */
   private[graft] def rewriteChPosition(sql: String): String =
-    rewriteCallOpt(sql, "position", esc = true) { (_, args) =>
+    rewriteCallOpt(sql, "position") { (_, args) =>
       args match {
         case Seq(h, n) => Some(s"locate($n, $h)")
         case _ => None
@@ -4422,7 +4120,7 @@ object Dialect {
     * through).
     */
   private[graft] def rewriteMysqlDayNames(sql: String): String =
-    rewriteCall(sql, "dayname|monthname|weekday", esc = true) { (fn, args) =>
+    rewriteCall(sql, "dayname|monthname|weekday") { (fn, args) =>
       if (args.length != 1)
         throw new graft.UnsupportedError(s"$fn expects one argument")
       fn.toLowerCase match {
@@ -4569,7 +4267,7 @@ object Dialect {
       replaceRe.findFirstMatchIn(it) match {
         case Some(rm) =>
           val q = Option(rm.group(1))
-          val itSpans = literalSpans(it, backslashEscapes = true)
+          val itSpans = lex(it)
           val open = rm.end - 1
           val close = matchParen(it, itSpans, open)
           // trailing text AFTER the REPLACE list (a REPLACE-then-EXCLUDE
@@ -4752,15 +4450,15 @@ object Dialect {
     * start and end with a quoted identifier).
     */
   private def normalizeExprText(x: String): String = {
-    val sp = literalAndIdentSpans(x, backslashEscapes = true)
+    val sp = lex(x)
     val sb = new StringBuilder
     var i = 0
     while (i < x.length) {
-      if (outsideLiterals(sp, i) && x.charAt(i).isWhitespace) {
+      if (sp.outside(i) && x.charAt(i).isWhitespace) {
         sb.append(' ')
-        while (i < x.length && outsideLiterals(sp, i) &&
+        while (i < x.length && sp.outside(i) &&
           x.charAt(i).isWhitespace) i += 1
-      } else if (outsideLiterals(sp, i)) {
+      } else if (sp.outside(i)) {
         sb.append(Character.toLowerCase(x.charAt(i))); i += 1
       } else { sb.append(x.charAt(i)); i += 1 }
     }
@@ -4838,11 +4536,11 @@ object Dialect {
     // trailing `--` comment swallowing the appended syntax. A trailing
     // comment AFTER the ties clause is legal SQL and now passes the
     // trailing-text check instead of raising.
-    val sql = blankComments(sql0, backslashEscapes = true)
+    val sql = blankComments(sql0)
     // opaque (not literal-only) spans: optimizer hints survive the
     // blanking, and a comma or paren inside `/*+ REPARTITION(3, c) */`
     // must not split select items or skew the depth map
-    val spans = opaqueSpans(sql, backslashEscapes = true)._1
+    val spans = lex(sql)
     val depth = depthAt(sql, spans)
     // set-operation detection runs BEFORE the single-SELECT shape check:
     // a parenthesized first arm — `(SELECT …) UNION (SELECT …) ORDER BY
@@ -4861,7 +4559,7 @@ object Dialect {
         "\\s+(?:(?:ALL|DISTINCT)\\s+)?" +
         "(?:SELECT\\b|VALUES\\b|TABLE\\b|WITH\\b|(?:\\(\\s*)+(?:SELECT|VALUES|TABLE|WITH)\\b)").r
       armRe.findAllMatchIn(sql).exists(mm =>
-        depth(mm.start) == 0 && outsideLiterals(spans, mm.start))
+        depth(mm.start) == 0 && spans.outside(mm.start))
     }
     if (setOpHit) {
       /* WITH TIES / PERCENT over a set operation (r17 — a named
@@ -4915,7 +4613,7 @@ object Dialect {
       val byName = names.map(nm => nm.toLowerCase -> nm).toMap
       val ordText = sql.substring(orderIdx0 + "ORDER".length, ordEnd).trim
         .replaceAll("(?i)^BY\\s+", "")
-      val oSpans = literalSpans(ordText, backslashEscapes = true)
+      val oSpans = lex(ordText)
       val resolved = splitArgs(ordText, oSpans, 0, ordText.length)
         .map(_.trim).map { part =>
           val (e, sfx) = splitSortSuffix(part)
@@ -5000,7 +4698,7 @@ object Dialect {
     val qSpans = spans
     val clauseQualify = "(?i)\\bQUALIFY\\b".r.findAllMatchIn(sql)
       .filter(_ => qualifyIsClause)
-      .filter(m => depth(m.start) == 0 && outsideLiterals(qSpans, m.start))
+      .filter(m => depth(m.start) == 0 && qSpans.outside(m.start))
       .flatMap { m =>
         // previous token, skipping whitespace AND opaque spans (a
         // comment's own `*/` or `--` characters are not operators —
@@ -5010,9 +4708,7 @@ object Dialect {
         while (moved) {
           moved = false
           while (j >= 0 && Character.isWhitespace(sql.charAt(j))) { j -= 1; moved = true }
-          qSpans.find { case (a, b) => j >= a && j < b }.foreach { case (a, _) =>
-            j = a - 1; moved = true
-          }
+          qSpans.at(j).foreach { sp => j = sp.start - 1; moved = true }
         }
         var b0 = j + 1
         while (b0 > 0 && (Character.isLetterOrDigit(sql.charAt(b0 - 1)) ||
@@ -5070,7 +4766,7 @@ object Dialect {
     // per sort key: [alias-resolve] then pin the dialect's default null
     // placement when none is spelled (Spark would otherwise flip it)
     def keyParts(o: String, resolveAliases: Boolean): Seq[String] = {
-      val oSpans = literalSpans(o, backslashEscapes = true)
+      val oSpans = lex(o)
       splitArgs(o, oSpans, 0, o.length).map(_.trim).map { part0 =>
         val part =
           if (!resolveAliases) part0
@@ -5212,7 +4908,7 @@ object Dialect {
       // BY expressions must appear in the select list").
       val itemNames = items.map(itemName(_, construct))
       val resolveKey = distinctKeyResolver(items, itemNames, construct)
-      val oSpans = literalSpans(ord, backslashEscapes = true)
+      val oSpans = lex(ord)
       val dKeyParts = splitArgs(ord, oSpans, 0, ord.length).map(_.trim).map { part =>
         val (e, sfx) = splitSortSuffix(part)
         val resolved =
@@ -5385,17 +5081,7 @@ object Dialect {
     * (DISTINCT ON's row_number, LIMIT BY's, a materialized QUALIFY
     * predicate) are pinned too.
     */
-  private[graft] def pinSortNulls(sql: String, alwaysLast: Boolean = false,
-      esc: Boolean = false): String = {
-    // OPAQUE spans — the regions where no clause keyword, paren, or
-    // ORDER BY can live: string literals + quoted identifiers
-    // ([[literalAndIdentSpans]]: a backticked column named `limit` or
-    // `a--b` is neither a keyword nor a comment — r16 second/third
-    // reviews) + SQL comments (`-- …\n`, `/* … */`): an ORDER BY or
-    // LIMIT spelled inside a COMMENT is text, not a clause (the third
-    // review's confirmed repro: a comment mentioning ORDER BY before a
-    // real LIMIT swallowed the LIMIT into the comment).
-    def opaque(s: String): Vector[(Int, Int)] = opaqueSpans(s, esc)._1
+  private[graft] def pinSortNulls(sql: String, alwaysLast: Boolean = false): String = {
     def pinKeys(keysText0: String): Option[String] = {
       // a COMMENT inside the key region would swallow the appended pin
       // (and, trim-joined onto one line, the clause after it — a silent
@@ -5409,24 +5095,23 @@ object Dialect {
       // but only OUTSIDE literal/quoted-identifier spans, where the
       // bytes are content.
       val keysText = {
-        val blanked = blankComments(keysText0, esc)
+        val blanked = blankComments(keysText0)
         if (blanked == keysText0) keysText0
         else {
-          val sp = opaqueSpans(blanked, esc)._1
+          val sp = lex(blanked)
           val out = new StringBuilder
           var i = 0
           while (i < blanked.length) {
-            if (blanked.charAt(i).isWhitespace && outsideLiterals(sp, i)) {
+            if (blanked.charAt(i).isWhitespace && sp.outside(i)) {
               out.append(' ')
               while (i < blanked.length && blanked.charAt(i).isWhitespace &&
-                outsideLiterals(sp, i)) i += 1
+                sp.outside(i)) i += 1
             } else { out.append(blanked.charAt(i)); i += 1 }
           }
           out.toString
         }
       }
-      val (kSpans, _) = opaqueSpans(keysText, esc)
-      val parts = splitArgs(keysText, kSpans, 0, keysText.length)
+      val parts = splitArgs(keysText, lex(keysText), 0, keysText.length)
       if (parts.exists(_.trim.isEmpty)) return None // malformed — leave loud
       Some(parts.map(_.trim).map { part =>
         if ("(?is)\\bNULLS\\s+(FIRST|LAST)\\s*$".r.findFirstIn(part).isDefined) part
@@ -5439,12 +5124,12 @@ object Dialect {
       var cur = s
       // recurse into this scope's paren groups, back to front so the
       // recorded indices stay valid through the splices
-      val spans0 = opaque(cur)
+      val spans0 = lex(cur)
       val depth0 = depthAt(cur, spans0)
       val groups = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Boolean)]
       var i = 0
       while (i < cur.length) {
-        if (cur.charAt(i) == '(' && outsideLiterals(spans0, i) && depth0(i) == 0) {
+        if (cur.charAt(i) == '(' && spans0.outside(i) && depth0(i) == 0) {
           val close = matchParen(cur, spans0, i)
           if (close > i) {
             var j = i - 1
@@ -5477,18 +5162,18 @@ object Dialect {
       // front (a site's start index stays valid because every earlier
       // splice happened at a later position); spans/depth are
       // recomputed per splice since the tail text has changed
-      val spans1 = opaque(cur)
+      val spans1 = lex(cur)
       val depth1 = depthAt(cur, spans1)
       val sites = "(?is)\\bORDER\\s+BY\\b".r.findAllMatchIn(cur)
-        .filter(m => depth1(m.start) == 0 && outsideLiterals(spans1, m.start))
+        .filter(m => depth1(m.start) == 0 && spans1.outside(m.start))
         .map(_.end).toList
       sites.reverseIterator.foreach { keysStart =>
-        val spans = opaque(cur)
+        val spans = lex(cur)
         val depth = depthAt(cur, spans)
         def bound(kws: Seq[String]): Int = kws
           .map(kw => ("(?i)\\b" + kw + "\\b").r.findAllMatchIn(cur)
             .find(m => m.start >= keysStart && depth(m.start) == 0 &&
-              outsideLiterals(spans, m.start))
+              spans.outside(m.start))
             .map(_.start).getOrElse(-1))
           .filter(_ >= 0).sorted.headOption.getOrElse(-1)
         val keysEnd =
@@ -5508,47 +5193,6 @@ object Dialect {
     process(sql, isWindowSpec = false)
   }
 
-  /** Postgres `LIMIT ALL` — a spelled-out "no limit" (query builders
-    * emit it when a limit parameter is absent); Spark's parser rejects
-    * it. Stripped wherever it appears outside literals — the meaning is
-    * identical at any nesting level — keeping any OFFSET clause, which
-    * Spark 4 supports natively (r16).
-    */
-  private[graft] def rewriteLimitAll(sql: String): String = {
-    // opaque (comment- and quoted-identifier-aware) spans, r17 ADVICE:
-    // `LIMIT ALL` inside a comment or a backtick-quoted identifier is
-    // text, not a clause — stripping it would corrupt the statement.
-    // The SCAN runs over the comment-blanked text (length-preserving,
-    // r18 ADVICE: `LIMIT /* c */ ALL` — a comment BETWEEN the tokens —
-    // is legal Postgres and used to reach Spark as a raw parse error),
-    // while the SPLICE edits the original so comments outside the
-    // stripped clause survive byte-identical.
-    val blanked = blankComments(sql, backslashEscapes = true)
-    val spans = opaqueSpans(sql, backslashEscapes = true)._1
-    val out = new StringBuilder
-    var last = 0
-    // the match consumes its LEADING whitespace so the splice leaves no
-    // double space behind — UNLESS, in the ORIGINAL text, that
-    // whitespace holds a newline terminating a `--` line comment (r17
-    // review: consuming it spliced the kept OFFSET clause INTO the
-    // comment — a silent wrong answer) or any opaque-span boundary (the
-    // "whitespace" was a blanked comment): then the splice starts at
-    // the LIMIT token itself and the original bytes survive.
-    """(?i)(\s*)\bLIMIT\s+ALL\b""".r.findAllMatchIn(blanked)
-      .filter(m => outsideLiterals(spans, m.end - 1)).foreach { m =>
-        val tokStart = m.start + m.group(1).length
-        val safeStart =
-          if (sql.substring(m.start, tokStart).contains('\n') ||
-              spans.exists { case (_, b) => b > m.start && b <= tokStart })
-            tokStart
-          else m.start
-        out.append(sql.substring(last, safeStart))
-        last = m.end
-      }
-    out.append(sql.substring(last))
-    out.toString
-  }
-
   /** ANSI/Postgres-13 `ORDER BY … [OFFSET m ROWS] FETCH FIRST n ROWS
     * WITH TIES` (r14; OFFSET combination r15) → [[buildWithTies]]'s
     * rank filter with the nulls-largest default placement both wired
@@ -5566,14 +5210,14 @@ object Dialect {
     // function's own depth map (a commented '(' used to misroute a
     // top-level FETCH into the subquery branch and die on "unbalanced
     // subquery"); statements without a FETCH…TIES return byte-identical
-    val s0 = blankComments(sql, backslashEscapes = true).trim
+    val s0 = blankComments(sql).trim
     // the count is optional in ANSI/Postgres — `FETCH FIRST ROW WITH
     // TIES` defaults to 1 (r14 verdict item 4)
     val re = """(?i)\bFETCH\s+(?:FIRST|NEXT)\s+(?:(\d+)\s+)?ROWS?\s+WITH\s+TIES\b""".r
-    val spans0 = literalSpans(s0, backslashEscapes = true)
+    val spans0 = lex(s0)
     val depth0 = depthAt(s0, spans0)
     val mAny = re.findAllMatchIn(s0)
-      .find(mm => outsideLiterals(spans0, mm.start))
+      .find(mm => spans0.outside(mm.start))
       .getOrElse(return sql)
     if (depth0(mAny.start) > 0) {
       // SUBQUERY-level WITH TIES (r15 — a raw Spark parse error before):
@@ -5612,10 +5256,10 @@ object Dialect {
     // strip the OFFSET clause, re-locate the FETCH clause, and hand the
     // skip count to the builder's rank/row_number membership rule
     val s = s0.substring(0, om.start) + s0.substring(om.end)
-    val spans = literalSpans(s, backslashEscapes = true)
+    val spans = lex(s)
     val depth = depthAt(s, spans)
     val m = re.findAllMatchIn(s)
-      .find(mm => depth(mm.start) == 0 && outsideLiterals(spans, mm.start))
+      .find(mm => depth(mm.start) == 0 && spans.outside(mm.start))
       .getOrElse(return sql)
     buildWithTies(s, Option(m.group(1)).getOrElse("1"), m.start, m.end,
       nullsLargest = true, offset = Some(om.group(1)), spark = spark,
@@ -5640,13 +5284,13 @@ object Dialect {
       spark: Option[SparkSession] = None): String = {
     // comments blanked up front — same depth-map hazard as
     // [[rewriteFetchFirstWithTies]] (r17 review)
-    val s0 = blankComments(sql, backslashEscapes = true).trim
+    val s0 = blankComments(sql).trim
     val re =
       """(?i)\bFETCH\s+(?:FIRST|NEXT)\s+(\d+(?:\.\d+)?)\s+PERCENT\s+ROWS?\s+(ONLY|WITH\s+TIES)\b""".r
-    val spans0 = literalSpans(s0, backslashEscapes = true)
+    val spans0 = lex(s0)
     val depth0 = depthAt(s0, spans0)
     val m0 = re.findAllMatchIn(s0)
-      .find(mm => depth0(mm.start) == 0 && outsideLiterals(spans0, mm.start))
+      .find(mm => depth0(mm.start) == 0 && spans0.outside(mm.start))
       .getOrElse(return sql)
     def build(s: String, m: scala.util.matching.Regex.Match,
         off: Option[String]): String =
@@ -5670,10 +5314,10 @@ object Dialect {
         "OFFSET combined with FETCH … PERCENT requires a literal row count " +
           s"immediately before the FETCH clause, got: ${s0.substring(om.start, m0.start).trim}")
     val s = s0.substring(0, om.start) + s0.substring(om.end)
-    val spans = literalSpans(s, backslashEscapes = true)
+    val spans = lex(s)
     val depth = depthAt(s, spans)
     val m = re.findAllMatchIn(s)
-      .find(mm => depth(mm.start) == 0 && outsideLiterals(spans, mm.start))
+      .find(mm => depth(mm.start) == 0 && spans.outside(mm.start))
       .getOrElse(return sql)
     build(s, m, Some(om.group(1)))
   }
@@ -5690,11 +5334,11 @@ object Dialect {
     // the clause's tokens must not hide it); splices edit the original,
     // so comments outside the replaced clause survive.
     val re = """(?i)\bFETCH\s+(?:FIRST|NEXT)\s+(?:(\d+)\s+)?ROWS?\s+ONLY""".r
-    val blanked = blankComments(sql, backslashEscapes = true)
-    val spans = literalSpans(blanked, backslashEscapes = true)
+    val blanked = blankComments(sql)
+    val spans = lex(blanked)
     val out = new StringBuilder
     var last = 0
-    re.findAllMatchIn(blanked).filter(m => outsideLiterals(spans, m.start)).foreach { m =>
+    re.findAllMatchIn(blanked).filter(m => spans.outside(m.start)).foreach { m =>
       out.append(sql.substring(last, m.start))
         .append(s"LIMIT ${Option(m.group(1)).getOrElse("1")}")
       last = m.end
@@ -5708,7 +5352,7 @@ object Dialect {
     * names some engines return for the same function names).
     */
   private[graft] def rewriteSnowDayMonthName(sql: String): String =
-    rewriteCall(sql, "dayname|monthname", esc = true) { (fn, args) =>
+    rewriteCall(sql, "dayname|monthname") { (fn, args) =>
       if (args.length != 1)
         throw new graft.UnsupportedError(s"$fn expects one argument")
       val pat = if (fn.equalsIgnoreCase("dayname")) "EEE" else "MMM"
@@ -5721,8 +5365,7 @@ object Dialect {
     * INTERVAL is Spark's own signature and passes through untouched.
     */
   private[graft] def rewriteBqDateAddSub(sql: String): String =
-    rewriteCallOpt(sql, "date_add|date_sub|timestamp_add|timestamp_sub",
-        esc = true) { (fn, args) =>
+    rewriteCallOpt(sql, "date_add|date_sub|timestamp_add|timestamp_sub") { (fn, args) =>
       args match {
         case Seq(x, iv) =>
           """(?is)^INTERVAL\s+(.*\S)\s+([a-zA-Z]+)$""".r
@@ -5750,7 +5393,7 @@ object Dialect {
     * matches sequence's.
     */
   private[graft] def rewriteBqGenerateArray(sql: String): String =
-    rewriteCall(sql, "generate_array", esc = true) { (fn, args) =>
+    rewriteCall(sql, "generate_array") { (fn, args) =>
       args match {
         case Seq(a, b) =>
           s"(CASE WHEN ($a) <= ($b) THEN sequence(($a), ($b)) " +
@@ -5770,7 +5413,7 @@ object Dialect {
     * rather than silently regex-interpreting.
     */
   private[graft] def rewriteBqSplit(sql: String): String =
-    rewriteCallOpt(sql, "split", esc = true) { (fn, args) =>
+    rewriteCallOpt(sql, "split") { (fn, args) =>
       args match {
         case Seq(s) => Some(s"split($s, ',')")
         case Seq(s, d) =>
@@ -5844,7 +5487,7 @@ object Dialect {
     * every alias/ORDINALITY/OFFSET/zip form composes the same way
     * (r19 review — it fell through to a raw Spark parse error).
     */
-  private[graft] def rewriteUnnest(sql: String, esc: Boolean): String = {
+  private[graft] def rewriteUnnest(sql: String): String = {
     // `FROM` as a "joiner": UNNEST as the FIRST (or only) FROM item —
     // `SELECT x FROM UNNEST(…) AS t(x)`, the most common standalone
     // Postgres/BigQuery spelling (r19 review: it fell through to a raw
@@ -5863,8 +5506,8 @@ object Dialect {
       // alternative — must neither fire the rewrite nor skew the
       // argument paren match (the sibling star rewrite got the same
       // generalization this round)
-      val spans = opaqueSpans(cur, esc)._1
-      re.findAllMatchIn(cur).find(m => outsideLiterals(spans, m.start)) match {
+      val spans = lex(cur)
+      re.findAllMatchIn(cur).find(m => spans.outside(m.start)) match {
         case None => return cur
         case Some(m) =>
           val joiner = m.group(1).trim.toUpperCase
@@ -6008,14 +5651,14 @@ object Dialect {
     * with a cast, in Trino bare) becomes `array()`. A bare subscript
     * (`arr[1]`) has no ARRAY keyword and is never touched.
     */
-  private[graft] def rewriteArrayLiteral(sql: String, esc: Boolean): String = {
+  private[graft] def rewriteArrayLiteral(sql: String): String = {
     val re = "(?i)\\bARRAY\\s*\\[".r
     var cur = sql
     var guard = 0
     while (guard < 64) {
       guard += 1
-      val spans = literalSpans(cur, esc)
-      re.findAllMatchIn(cur).find(m => outsideLiterals(spans, m.start)) match {
+      val spans = lex(cur)
+      re.findAllMatchIn(cur).find(m => spans.outside(m.start)) match {
         case None => return cur
         case Some(m) =>
           val open = m.end - 1
@@ -6024,7 +5667,7 @@ object Dialect {
           var i = open
           var close = -1
           while (i < cur.length && close < 0) {
-            if (outsideLiterals(spans, i)) {
+            if (spans.outside(i)) {
               val c = cur.charAt(i)
               if (c == '[') depth += 1
               else if (c == ']') { depth -= 1; if (depth == 0) close = i }
@@ -6078,16 +5721,16 @@ object Dialect {
     var guard = 0
     while (guard < 32) {
       guard += 1
-      val spans = literalSpans(cur, backslashEscapes = true)
-      re.findAllMatchIn(cur).find(m => outsideLiterals(spans, m.start)) match {
+      val spans = lex(cur)
+      re.findAllMatchIn(cur).find(m => spans.outside(m.start)) match {
         case None => return cur
         case Some(m) =>
           val outer = m.group(1) != null
           val rest0 = cur.substring(m.end)
-          val rSpans = literalSpans(rest0, backslashEscapes = true)
+          val rSpans = lex(rest0)
           val rDepth = depthAt(rest0, rSpans)
           val joinStop = joinCut.findAllMatchIn(rest0)
-            .find(jm => rDepth(jm.start) == 0 && outsideLiterals(rSpans, jm.start))
+            .find(jm => rDepth(jm.start) == 0 && rSpans.outside(jm.start))
             .map(_.start)
           val stop = (clauseEnders
             .map(k => topLevelKeyword(rest0, rSpans, rDepth, k)) ++ joinStop.toSeq)
@@ -6137,9 +5780,9 @@ object Dialect {
     * carrying an AS pass through untouched.
     */
   private[graft] def rewriteTsqlPivot(sql: String): String = {
-    val spans = literalSpans(sql, backslashEscapes = true)
+    val spans = lex(sql)
     val matches = "(?i)\\bPIVOT\\s*\\(".r.findAllMatchIn(sql)
-      .filter(m => outsideLiterals(spans, m.start)).toList
+      .filter(m => spans.outside(m.start)).toList
     if (matches.isEmpty) return sql
     var cur = sql
     // right-to-left so earlier match indices stay valid after edits
@@ -6149,7 +5792,7 @@ object Dialect {
       if (close < 0)
         throw new graft.UnsupportedError(s"unbalanced PIVOT( in: $cur")
       val body = cur.substring(open + 1, close)
-      val bSpans = literalSpans(body, backslashEscapes = true)
+      val bSpans = lex(body)
       val bDepth = depthAt(body, bSpans)
       val inIdx = topLevelKeyword(body, bSpans, bDepth, "IN")
       if (inIdx < 0)
@@ -6212,12 +5855,12 @@ object Dialect {
     // Statements the rewrite does not touch return byte-identical (sql0);
     // SELECT-adjacent optimizer hints survive the blanking and are
     // re-emitted on the inner select below.
-    val sql = blankComments(sql0, backslashEscapes = true)
-    val spans = opaqueSpans(sql, backslashEscapes = true)._1
+    val sql = blankComments(sql0)
+    val spans = lex(sql)
     val depth = depthAt(sql, spans)
     def topLevel(re: String): Option[scala.util.matching.Regex.Match] =
       re.r.findAllMatchIn(sql)
-        .find(mm => depth(mm.start) == 0 && outsideLiterals(spans, mm.start))
+        .find(mm => depth(mm.start) == 0 && spans.outside(mm.start))
     // offset spellings first — the bare pattern cannot match them (a `,`
     // or OFFSET sits where it requires BY), so the match is unambiguous
     val (m, off, n) =
@@ -6267,7 +5910,7 @@ object Dialect {
     val otherEnder = enderShapes.flatMap { case (kw, re) =>
       re.r.findAllMatchIn(sql)
         .filter(mm => mm.start >= byStart && depth(mm.start) == 0 &&
-          outsideLiterals(spans, mm.start))
+          spans.outside(mm.start))
         .map(kw -> _.start)
     }.sortBy(_._2).headOption
     otherEnder.foreach { case (kw, idx) =>
@@ -6296,7 +5939,7 @@ object Dialect {
         .orElse(implicitAlias(it).map { case (e, a) => a.toLowerCase -> e })
     }.toMap
     def resolveAliases(ord: String): String = {
-      val oSpans = literalSpans(ord, backslashEscapes = true)
+      val oSpans = lex(ord)
       splitArgs(ord, oSpans, 0, ord.length).map(_.trim).map { part =>
         "(?s)^([A-Za-z_][A-Za-z0-9_]*)(.*)$".r.findFirstMatchIn(part) match {
           case Some(pm) if aliasExpr.contains(pm.group(1).toLowerCase) =>
@@ -6323,7 +5966,7 @@ object Dialect {
       val resolveKey =
         distinctKeyResolver(items, itemNames, "LIMIT BY under SELECT DISTINCT")
       def resolveOut(text: String, ordinals: Boolean): String = {
-        val tSpans = literalSpans(text, backslashEscapes = true)
+        val tSpans = lex(text)
         splitArgs(text, tSpans, 0, text.length).map(_.trim).map { part =>
           val (e, sfx) = splitSortSuffix(part)
           val resolved =
@@ -6372,8 +6015,8 @@ object Dialect {
     var guard = 0
     while (guard < 32) {
       guard += 1
-      val spans = literalSpans(cur, backslashEscapes = true)
-      re.findAllMatchIn(cur).find(m => outsideLiterals(spans, m.start)) match {
+      val spans = lex(cur)
+      re.findAllMatchIn(cur).find(m => spans.outside(m.start)) match {
         case None => return cur
         case Some(m) =>
           val outer = m.group(1).equalsIgnoreCase("OUTER")
@@ -6405,8 +6048,7 @@ object Dialect {
     */
   private[graft] def rewriteSnowTryTo(sql: String): String =
     rewriteCall(sql,
-      "try_to_number|try_to_decimal|try_to_numeric|try_to_double|try_to_date|try_to_boolean",
-      esc = true) { (fn, args) =>
+      "try_to_number|try_to_decimal|try_to_numeric|try_to_double|try_to_date|try_to_boolean") { (fn, args) =>
       val f = fn.toLowerCase
       (f, args) match {
         case ("try_to_number" | "try_to_decimal" | "try_to_numeric", Seq(x)) =>
@@ -6439,14 +6081,14 @@ object Dialect {
     * both. SELECT-position generate_series (DuckDB's scalar-context
     * list form) is outside the shimmed surface and fails at the parser.
     */
-  private[graft] def rewriteGenerateSeriesTable(sql: String, esc: Boolean): String = {
+  private[graft] def rewriteGenerateSeriesTable(sql: String): String = {
     val re = "(?i)(,|\\bCROSS\\s+JOIN\\b|\\bFROM\\b)\\s*GENERATE_SERIES\\s*\\(".r
     var cur = sql
     var guard = 0
     while (guard < 32) {
       guard += 1
-      val spans = literalSpans(cur, esc)
-      re.findAllMatchIn(cur).find(m => outsideLiterals(spans, m.start)) match {
+      val spans = lex(cur)
+      re.findAllMatchIn(cur).find(m => spans.outside(m.start)) match {
         case None => return cur
         case Some(m) =>
           val joiner = m.group(1).trim.toUpperCase
@@ -6500,8 +6142,8 @@ object Dialect {
     var guard = 0
     while (guard < 256) {
       guard += 1
-      val spans = literalSpans(cur, backslashEscapes = true)
-      re.findAllMatchIn(cur).find(m => outsideLiterals(spans, m.start)) match {
+      val spans = lex(cur)
+      re.findAllMatchIn(cur).find(m => spans.outside(m.start)) match {
         case None => return cur
         case Some(m) =>
           val open = m.end - 1
@@ -6545,36 +6187,36 @@ object Dialect {
     * walks backwards over identifier characters, `.` chains, and balanced
     * `(...)`/`[...]` suffix groups.
     */
-  private def primaryStartBefore(sql: String, spans: Vector[(Int, Int)],
+  private def primaryStartBefore(sql: String, spans: Spans,
       posEx: Int): Int = {
     var i = posEx - 1
     while (i >= 0 && sql.charAt(i).isWhitespace) i -= 1
-    var consumed = false
     while (i >= 0) {
       val c = sql.charAt(i)
-      if (!outsideLiterals(spans, i)) return i + 1
+      val sp = spans.at(i)
+      if (sp.exists(_.kind == SpanKind.Ident)) i = sp.get.start - 1 // a quoted name is one token
+      else if (sp.isDefined) return i + 1
       else if (c == ')' || c == ']') {
         val o = backwardMatch(sql, spans, i)
         if (o < 0) return i + 1
-        i = o - 1; consumed = true
-      } else if (c.isLetterOrDigit || c == '_' || c == '.' || c == '`') {
-        i -= 1; consumed = true
-      } else return i + 1
+        i = o - 1
+      } else if (c.isLetterOrDigit || c == '_' || c == '.') i -= 1
+      else return i + 1
     }
     0
   }
 
   /** Index of the opener matching the closer at `closeIdx`, scanning
-    * backwards (literal-aware); -1 when unbalanced.
+    * backwards over the lexer's spans; -1 when unbalanced.
     */
-  private def backwardMatch(sql: String, spans: Vector[(Int, Int)],
+  private def backwardMatch(sql: String, spans: Spans,
       closeIdx: Int): Int = {
     val closeC = sql.charAt(closeIdx)
     val openC = if (closeC == ')') '(' else '['
     var depth = 0
     var i = closeIdx
     while (i >= 0) {
-      if (outsideLiterals(spans, i)) {
+      if (spans.outside(i)) {
         val c = sql.charAt(i)
         if (c == closeC) depth += 1
         else if (c == openC) { depth -= 1; if (depth == 0) return i }
@@ -6621,8 +6263,8 @@ object Dialect {
     var guard = 0
     while (guard < 64) {
       guard += 1
-      val spans = literalSpans(cur, backslashEscapes = true)
-      re.findAllMatchIn(cur).find(m => outsideLiterals(spans, m.start)) match {
+      val spans = lex(cur)
+      re.findAllMatchIn(cur).find(m => spans.outside(m.start)) match {
         case None => return cur
         case Some(m) =>
           val open = m.end - 1
@@ -6676,7 +6318,7 @@ object Dialect {
                 if (objectMode) {
                   val wc = "(?is)^named_struct\\s*\\(".r.findFirstMatchIn(in0)
                     .filter { cm =>
-                      val iSpans = literalSpans(in0, backslashEscapes = true)
+                      val iSpans = lex(in0)
                       matchParen(in0, iSpans, cm.end - 1) == in0.length - 1
                     }
                   wc.map(cm => "map(" + in0.substring(cm.end)).getOrElse(in0)
@@ -6710,9 +6352,9 @@ object Dialect {
           var metaFound = true
           while (metaFound && metaGuard < 256) {
             metaGuard += 1
-            val nSpans = literalSpans(next, backslashEscapes = true)
+            val nSpans = lex(next)
             metaRe.findAllMatchIn(next)
-              .find(mm => outsideLiterals(nSpans, mm.start)) match {
+              .find(mm => nSpans.outside(mm.start)) match {
               case None => metaFound = false
               case Some(mm) =>
                 val repl = mm.group(1).toLowerCase match {
@@ -6764,7 +6406,7 @@ object Dialect {
       if (args.length != 1)
         throw new graft.UnsupportedError("TRY takes exactly one expression")
       val a = args.head
-      val spans = literalSpans(a)
+      val spans = lex(a)
       def wholeCall(name: String): Option[String] = {
         ("(?is)^" + name + "\\s*\\(").r.findFirstMatchIn(a).flatMap { mm =>
           val close = matchParen(a, spans, mm.end - 1)
@@ -6778,7 +6420,7 @@ object Dialect {
         var at = -1
         var i = 0
         while (i < a.length) {
-          if (outsideLiterals(spans, i)) {
+          if (spans.outside(i)) {
             val c = a.charAt(i)
             if (c == '(' || c == '[') depth += 1
             else if (c == ')' || c == ']') depth -= 1
@@ -6808,7 +6450,7 @@ object Dialect {
     * Tableau's functional conditional is IIF, never a bare `IF(...)`.
     */
   private[graft] def rewriteTableauIfBlock(sql: String): String =
-    renameWordsOutsideIdents(sql, Map("if" -> "CASE WHEN", "elseif" -> "WHEN"))
+    renameWords(sql, Map("if" -> "CASE WHEN", "elseif" -> "WHEN"))
 
   /** `IIF(test, then, else[, unknown])` → null-aware simple CASE.
     * Tableau sends an UNKNOWN (NULL) test to the optional 4th argument
@@ -6820,7 +6462,7 @@ object Dialect {
     * CASE default exactly as Tableau specifies.
     */
   private[graft] def rewriteTableauIif(sql: String): String =
-    rewriteCall(sql, "iif", esc = true) { (fn, args) =>
+    rewriteCall(sql, "iif") { (fn, args) =>
       args match {
         case Seq(c, t, f) =>
           s"(CASE ($c) WHEN TRUE THEN $t WHEN FALSE THEN $f END)"
@@ -6835,7 +6477,7 @@ object Dialect {
     * as the distinct count).
     */
   private[graft] def rewriteTableauCountd(sql: String): String =
-    rewriteCall(sql, "countd", esc = true) { (fn, args) =>
+    rewriteCall(sql, "countd") { (fn, args) =>
       if (args.length != 1)
         throw new graft.UnsupportedError(s"$fn expects a single argument")
       s"count(DISTINCT ${args(0)})"
@@ -6862,7 +6504,7 @@ object Dialect {
     * `'weekday'`/`'dayofyear'` are extraction-only parts and raise.
     */
   private[graft] def rewriteTableauDateAdd(sql: String): String =
-    rewriteCall(sql, "dateadd", esc = true) { (fn, args) =>
+    rewriteCall(sql, "dateadd") { (fn, args) =>
       if (args.length != 3)
         throw new graft.UnsupportedError(s"$fn expects ('part', n, expr)")
       tableauPart(args(0), fn) match {
@@ -6878,7 +6520,7 @@ object Dialect {
     * anchor the T-SQL/Redshift shims use).
     */
   private[graft] def rewriteTableauDateDiff(sql: String): String =
-    rewriteCall(sql, "datediff", esc = true) { (fn, args) =>
+    rewriteCall(sql, "datediff") { (fn, args) =>
       if (args.length != 3)
         throw new graft.UnsupportedError(s"$fn expects ('part', start, end)")
       boundaryDateDiff(tableauPart(args(0), fn), args(1), args(2),
@@ -6892,7 +6534,7 @@ object Dialect {
     * neither `weekofyear` (ISO) nor any other Spark builtin.
     */
   private[graft] def rewriteTableauDatePart(sql: String): String =
-    rewriteCall(sql, "datepart", esc = true) { (fn, args) =>
+    rewriteCall(sql, "datepart") { (fn, args) =>
       if (args.length != 2)
         throw new graft.UnsupportedError(s"$fn expects ('part', expr)")
       tableauPart(args(0), fn) match {
@@ -6909,7 +6551,7 @@ object Dialect {
     * `'weekday'`/`'dayofyear'` are not truncation units.
     */
   private[graft] def rewriteTableauDateTrunc(sql: String): String =
-    rewriteCall(sql, "datetrunc", esc = true) { (fn, args) =>
+    rewriteCall(sql, "datetrunc") { (fn, args) =>
       if (args.length != 2)
         throw new graft.UnsupportedError(s"$fn expects ('part', expr)")
       tableauPart(args(0), fn) match {
@@ -6927,7 +6569,7 @@ object Dialect {
     * DATEPART value. `'week'` raises as in DATEPART.
     */
   private[graft] def rewriteTableauDateName(sql: String): String =
-    rewriteCall(sql, "datename", esc = true) { (fn, args) =>
+    rewriteCall(sql, "datename") { (fn, args) =>
       if (args.length != 2)
         throw new graft.UnsupportedError(s"$fn expects ('part', expr)")
       tableauPart(args(0), fn) match {
@@ -6948,7 +6590,7 @@ object Dialect {
     * mode). Two-argument `split` is Spark-native and passes through.
     */
   private[graft] def rewriteTableauSplit(sql: String): String =
-    rewriteCallOpt(sql, "split", esc = true) { (fn, args) =>
+    rewriteCallOpt(sql, "split") { (fn, args) =>
       args match {
         case Seq(s, d, n) =>
           if (!d.matches("(?s)^'.*'$"))
@@ -6982,8 +6624,7 @@ object Dialect {
     */
   private[graft] def rewriteExasolAddUnits(sql: String): String =
     rewriteCallOnePass(sql,
-      "add_days|add_weeks|add_months|add_years|add_hours|add_minutes|add_seconds",
-      esc = true) { (fn, args) =>
+      "add_days|add_weeks|add_months|add_years|add_hours|add_minutes|add_seconds") { (fn, args) =>
       if (args.length != 2)
         throw new graft.UnsupportedError(s"$fn expects (datetime, count)")
       val (x, n) = (args(0), args(1))
@@ -7014,8 +6655,7 @@ object Dialect {
     * month conventions differ — fail fast at Spark's resolver).
     */
   private[graft] def rewriteExasolBetweenUnits(sql: String): String =
-    rewriteCall(sql, "days_between|hours_between|minutes_between|seconds_between",
-      esc = true) { (fn, args) =>
+    rewriteCall(sql, "days_between|hours_between|minutes_between|seconds_between") { (fn, args) =>
       if (args.length != 2)
         throw new graft.UnsupportedError(s"$fn expects (datetime, datetime)")
       val (a, b) = (args(0), args(1))
@@ -7040,7 +6680,7 @@ object Dialect {
   private[graft] def rewriteExasolTrunc(sql: String): String =
     // one-pass: the output is itself a trunc(...) call for the
     // DATE-grain formats — a re-scanning rewriter would loop on it
-    rewriteCallOnePass(sql, "trunc|truncate", esc = true) { (fn, args) =>
+    rewriteCallOnePass(sql, "trunc|truncate") { (fn, args) =>
       args match {
         case Seq(x, SingleLiteral(f)) =>
           f.toUpperCase match {
@@ -7080,8 +6720,7 @@ object Dialect {
   private[graft] def rewriteDruidTime(sql: String): String =
     rewriteCallOnePass(sql,
       "time_floor|time_ceil|time_shift|time_extract|time_format|time_parse|" +
-        "millis_to_timestamp|timestamp_to_millis",
-      esc = true) { (fn, args) =>
+        "millis_to_timestamp|timestamp_to_millis") { (fn, args) =>
       def ts(x: String) = s"CAST($x AS TIMESTAMP)"
       (fn.toLowerCase, args) match {
         case ("time_floor", Seq(x, SingleLiteral(p))) =>
@@ -7130,7 +6769,7 @@ object Dialect {
     * exactly Spark's `DIV`).
     */
   private[graft] def rewriteDruidDiv(sql: String): String =
-    rewriteCall(sql, "div", esc = true) { (_, args) =>
+    rewriteCall(sql, "div") { (_, args) =>
       if (args.length != 2)
         throw new graft.UnsupportedError("DIV expects (x, y)")
       s"(CAST(${args(0)} AS BIGINT) DIV CAST(${args(1)} AS BIGINT))"

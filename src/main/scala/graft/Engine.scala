@@ -29,9 +29,12 @@ object Engine {
     *                Names may be 1–3 levels ("t", "db.t", "cat.db.t"); nested
     *                names are registered under a mangled flat view name and
     *                qualified references in the SQL are rewritten to match.
-    * @param dialect input dialect shim — [[Dialect.Spark]] (no-op) or
-    *                [[Dialect.DuckDbish]] (the constructs the reference's own
-    *                test corpus uses: `==` equality, READ_CSV table function).
+    * @param dialect input dialect shim — [[Dialect.Spark]] (no rewrite, the
+    *                default) or any dialect [[Dialect.forName]] returns
+    *                (DuckDB, Trino, Snowflake, BigQuery, MySQL, Postgres,
+    *                SQLite, Oracle, T-SQL, Redshift, Teradata, ClickHouse,
+    *                Tableau, Exasol, Druid); its rewrite turns the text
+    *                into Spark SQL before Spark parses it.
     */
   def execute(
       spark: SparkSession,
@@ -61,9 +64,7 @@ object Engine {
     // schemas also reach the dialect: READ_CSV applies a declared schema for
     // its alias instead of an inference scan (reference executor.py:303-305)
     val rewritten = dialect.rewrite(spark,
-      flattenQualifiedNames(sql, tables.keys,
-        doubleQuotedIsString = dialect.doubleQuotedIsString,
-        backslashEscapes = dialect.literalBackslashEscapes), schemas)
+      flattenQualifiedNames(sql, tables.keys, dialect), schemas)
     try spark.sql(rewritten)
     catch {
       case e: org.apache.spark.sql.catalyst.parser.ParseException =>
@@ -156,57 +157,32 @@ object Engine {
 
   /** Rewrite qualified references to registered nested tables into their
     * flat view names. Only names the caller registered are touched, and
-    * only OUTSIDE string literals (a literal `'db.t'` must survive); the
-    * replacement is literal (no regex group semantics for `$` in names).
+    * only outside string literals and comments (a literal `'db.t'` must
+    * survive); the replacement is literal (no regex group semantics for
+    * `$` in names). This scan reads the dialect's RAW text, so it lexes
+    * by the dialect's own rules: `"…"` is a string where the dialect
+    * reads it as one (Spark's default parser does — `"db.t"` must
+    * survive) and an identifier elsewhere (an ANSI `"db.t"` must flatten
+    * to resolve against the flat view, as a backticked one does), and
+    * backslash escapes apply only where the dialect's literals use them
+    * ([[Dialect.literalBackslashEscapes]]) — scanning an ANSI `'C:\'`
+    * with escapes would swallow its closing quote.
     */
   private def flattenQualifiedNames(sql: String, names: Iterable[String],
-      doubleQuotedIsString: Boolean = true,
-      backslashEscapes: Boolean = true): String = {
+      dialect: Dialect): String = {
     val nested = names.filter(_.contains(".")).toSeq.sortBy(-_.length)
-    if (nested.isEmpty) return sql
-    val res = nested.foldLeft((sql: CharSequence)) { (cur, n) =>
+    nested.foldLeft(sql) { (s, n) =>
+      val spans = Dialect.lex(s, dialect.literalBackslashEscapes, dialect.doubleQuotedIsString)
       val re = ("(?i)\\b" + java.util.regex.Pattern.quote(n) + "\\b").r
-      val s = cur.toString
       val out = new StringBuilder
       var last = 0
       re.findAllMatchIn(s).foreach { m =>
-        if (!insideStringLiteral(s, m.start, doubleQuotedIsString, backslashEscapes)) {
+        if (spans.at(m.start).forall(_.kind == Dialect.SpanKind.Ident)) {
           out.append(s.substring(last, m.start)).append(flatName(n))
           last = m.end
         }
       }
-      out.append(s.substring(last))
-      out.toString
+      out.append(s.substring(last)).toString
     }
-    res.toString
-  }
-
-  /** Is position `pos` inside a string literal? Single-quoted always;
-    * double-quoted only when the dialect reads `"…"` as a STRING
-    * (Spark's default parser does — `"db.t"` must survive the name
-    * flattening — but ANSI dialects read it as an IDENTIFIER that must
-    * flatten to resolve against the flat view, so there the scanner
-    * treats `"…"` as code). Backtick-quoted identifiers are never
-    * skipped for the same reason. Backslash escapes are honored only for
-    * dialects whose literals use them ([[Dialect.literalBackslashEscapes]]
-    * — Spark/MySQL/Snowflake/BigQuery family); ANSI-literal dialects
-    * (DuckDB/Trino/Postgres/...) treat backslash as a plain character, so
-    * `'C:\'` closes at its quote there — honoring the escape would
-    * swallow the closing quote and corrupt every span after it.
-    */
-  private[graft] def insideStringLiteral(s: String, pos: Int,
-      doubleQuotedIsString: Boolean = true,
-      backslashEscapes: Boolean = true): Boolean = {
-    var quote: Char = 0
-    var i = 0
-    while (i < pos) {
-      val c = s.charAt(i)
-      if (quote != 0 && backslashEscapes && c == '\\') i += 1 // skip escaped char
-      else if (quote == 0 &&
-          (c == '\'' || (c == '"' && doubleQuotedIsString))) quote = c
-      else if (c == quote) quote = 0
-      i += 1
-    }
-    quote != 0
   }
 }

@@ -347,8 +347,8 @@ object TpchQueries {
     * then l1's own key). One lineitem scan instead of three (plan diff:
     * 3 lineitem scans + semi + anti → 1 scan + 1 keyed window).
     * Row-for-row identical to the subquery spelling at sf0.1 and sf0.01
-    * (R20Prof `q21ab` asserts collected-row equality; the oracle runs
-    * the same SQL in DuckDB and the driver hash-checks it).
+    * (collected-row equality was checked when the rewrite landed; the
+    * DuckDB oracle runs the same SQL and `tools/check.py` compares it).
     */
   val q21: Q = same("q21_waiting_supplier",
     """SELECT s_name, COUNT(*) AS numwait

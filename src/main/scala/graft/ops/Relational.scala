@@ -1243,7 +1243,7 @@ object Relational {
       bucketCol: String = "bucket"): DataFrame = {
     require(buckets > 0, "buckets must be positive")
     import org.apache.spark.sql.expressions.Window
-    requireNoWorkingCols(df, "globalNtile", "__pid", "__rank", "__off", "__ntot")
+    requireNoWorkingCols(df, "globalNtile", bucketCol, "__pid", "__rank", "__off", "__ntot")
     // range width from a measured row count (metadata-cheap on
     // scan-backed frames), not the session constant: a bench-scale input
     // range-partitions into a handful of real partitions instead of a

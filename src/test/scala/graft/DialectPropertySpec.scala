@@ -34,15 +34,45 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
   private def sample(seed: Long): (String, List[String], List[String]) =
     sqlGen.apply(Gen.Parameters.default, Seed(seed)).get
 
+  /** Contents of the single-quoted literals of ANSI-spelled `sql`. */
   private def literalContents(sql: String): List[String] =
-    Dialect.literalSpans(sql).map { case (s, e) =>
-      sql.substring(s + 1, e - 1).replace("''", "'")
+    Dialect.lex(sql, backslashEscapes = false).all.collect {
+      case Dialect.Span(s, e, Dialect.SpanKind.Literal) =>
+        sql.substring(s + 1, e - 1).replace("''", "'")
     }.toList
 
-  test("literalSpans recovers exactly the literals the text was built from") {
+  /** Contents of the literals of Spark-spelled `sql` (backslash escapes
+    * and '' doubling both decoded).
+    */
+  private def sparkLiteralContents(sql: String): List[String] =
+    Dialect.lex(sql).all.collect {
+      case Dialect.Span(s, e, Dialect.SpanKind.Literal) =>
+        "\\\\(.)|''".r.replaceAllIn(sql.substring(s + 1, e - 1),
+          m => java.util.regex.Matcher.quoteReplacement(
+            Option(m.group(1)).getOrElse("'")))
+    }.toList
+
+  private def ansi(c: String): String = "'" + c.replace("'", "''") + "'"
+  private def sparkLit(c: String): String =
+    "'" + c.replace("\\", "\\\\").replace("'", "\\'") + "'"
+  /** Spark's parse of `sql`, as a plan tree with expression ids elided. */
+  private def parse(sql: String): String =
+    org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parsePlan(sql)
+      .treeString.replaceAll("#\\d+", "")
+  private def twoLits(seed: Long): (String, String) = {
+    val l = Gen.listOfN(2, litContent).apply(Gen.Parameters.default, Seed(seed)).get
+    (l(0), l(1))
+  }
+  private val ansiDialects = Seq(Dialect.DuckDbish, Dialect.Trinoish,
+    Dialect.Postgresish, Dialect.SqliteIsh)
+
+  test("lex recovers exactly the literals the text was built from") {
     (1L to 200L).foreach { seed =>
       val (sql, _, lits) = sample(seed)
       assert(literalContents(sql) === lits, s"seed=$seed sql=<$sql>")
+      // …and, after the ANSI escape step, under Spark's literal rules
+      assert(sparkLiteralContents(Dialect.escapeBackslashLiterals(sql)) === lits,
+        s"seed=$seed sql=<$sql>")
     }
   }
 
@@ -57,41 +87,50 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     }
   }
 
-  test("rewriteDoubleEquals touches only code segments, never literal content") {
-    (1L to 200L).foreach { seed =>
-      val (sql, codes, lits) = sample(seed)
-      val out = Dialect.rewriteDoubleEquals(sql)
-      val expected = codes.map(_.replace("==", "="))
-        .zipAll(lits.map(c => "'" + c.replace("'", "''") + "'"), "", "")
-        .map { case (c, l) => c + l }.mkString
-      assert(out === expected, s"seed=$seed sql=<$sql>")
+  test("== reaches Spark's parser as equality with literal bytes preserved") {
+    for (seed <- 1L to 200L; d <- ansiDialects) {
+      val (a, b) = twoLits(seed)
+      val out = d.rewrite(null, s"SELECT x == 1 AS e, ${ansi(a)} == ${ansi(b)} AS l FROM t")
+      assert(parse(out) ===
+        parse(s"SELECT x = 1 AS e, ${sparkLit(a)} = ${sparkLit(b)} AS l FROM t"),
+        s"seed=$seed $d out=<$out>")
     }
   }
 
   test("renameFunctions preserves every literal byte-for-byte") {
     (1L to 200L).foreach { seed =>
       val (sql, _, lits) = sample(seed)
-      val out = Dialect.renameFunctions(sql, Map("len" -> "length", "epoch" -> "ep"))
-      assert(literalContents(out) === lits, s"seed=$seed sql=<$sql> out=<$out>")
+      val out = Dialect.renameFunctions(Dialect.escapeBackslashLiterals(sql),
+        Map("len" -> "length", "epoch" -> "ep"))
+      assert(sparkLiteralContents(out) === lits, s"seed=$seed sql=<$sql> out=<$out>")
     }
   }
 
-  test("rewriteColonCast leaves no '::' outside literals and preserves literals") {
-    (1L to 200L).foreach { seed =>
-      val (sql, _, lits) = sample(seed)
-      // '::' at the very start of a code segment may legitimately fail
-      // ("no operand"); only successful rewrites are constrained
-      val rewritten =
-        try Some(Dialect.rewriteColonCast(sql))
-        catch { case _: UnsupportedError => None }
-      rewritten.foreach { out =>
-        assert(literalContents(out) === lits, s"seed=$seed sql=<$sql> out=<$out>")
-        val spans = Dialect.literalSpans(out)
-        val outside = out.indices.filter(i =>
-          i + 1 < out.length && out.charAt(i) == ':' && out.charAt(i + 1) == ':' &&
-            !spans.exists(s => i >= s._1 && i < s._2))
-        assert(outside.isEmpty, s"seed=$seed residual :: in <$out>")
-      }
+  test(":: casts reach Spark's parser as casts with literal bytes preserved") {
+    for (seed <- 1L to 200L; d <- Seq(Dialect.DuckDbish, Dialect.Postgresish)) {
+      val (a, b) = twoLits(seed)
+      val out = d.rewrite(null, s"SELECT ${ansi(a)}::INT AS c, x::BIGINT::STRING AS d, " +
+        s"floor(y)::DECIMAL(12,2) AS f, ${ansi(b)} AS s FROM t")
+      assert(parse(out) === parse(s"SELECT CAST(${sparkLit(a)} AS INT) AS c, " +
+        "CAST(CAST(x AS BIGINT) AS STRING) AS d, " +
+        s"CAST(floor(y) AS DECIMAL(12,2)) AS f, ${sparkLit(b)} AS s FROM t"),
+        s"seed=$seed $d out=<$out>")
+    }
+  }
+
+  test("rewrite time stays linear: a 3,200-literal IN list rewrites in under 1 s") {
+    // machine-generated SQL: every literal carries an embedded '' and a
+    // doubled backslash (valid under both ANSI and backslash-escape rules)
+    val sql = (0 until 3200).map(i => s"'v$i it''s C:\\\\d'")
+      .mkString("SELECT k FROM t WHERE s IN (", ", ", ") ORDER BY k")
+    for (d <- Seq(Dialect.DuckDbish, Dialect.Trinoish, Dialect.Snowflakeish,
+        Dialect.Postgresish)) {
+      val best = (1 to 3).map { _ =>
+        val t0 = System.nanoTime()
+        d.rewrite(null, sql)
+        (System.nanoTime() - t0) / 1e6
+      }.min
+      assert(best < 1000.0, s"$d took $best ms on ${sql.length} chars")
     }
   }
 
@@ -536,7 +575,7 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(Dialect.forName("teradata") === Dialect.TeradataIsh)
     assert(Dialect.forName("dune") === Dialect.Trinoish)
     assert(Dialect.forName("drill") === Dialect.Spark)
-    // literalAndIdentSpans: quote-doubling escapes in all three styles,
+    // the lexer: quote-doubling escapes in all three styles,
     // and code between spans stays rewritable
     val mixed = """SELECT "a""lt" FROM t WHERE x LT 'it''s ''lt''' AND y lt 2"""
     assert(Dialect.rewriteTeradataComparators(mixed) ===
@@ -607,18 +646,18 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
       "sqliteDateFn" -> Dialect.rewriteSqliteDateFn,
       // round-11 rewriters (star REPLACE needs a live session — covered
       // by its SemanticsSpec/gate instead)
-      "unnest" -> ((s: String) => Dialect.rewriteUnnest(s, esc = false)),
+      "unnest" -> ((s: String) => Dialect.rewriteUnnest(s)),
       "snowFlatten" -> Dialect.rewriteSnowFlatten,
       "bqSubscript" -> Dialect.rewriteBqSubscript,
       "trinoTry" -> Dialect.rewriteTrinoTry,
       "generateSeriesTable" ->
-        ((s: String) => Dialect.rewriteGenerateSeriesTable(s, esc = false)),
+        ((s: String) => Dialect.rewriteGenerateSeriesTable(s)),
       "exasolAddUnits" -> Dialect.rewriteExasolAddUnits,
       "chArrayJoin" -> Dialect.rewriteChArrayJoin,
       "tsqlApply" -> Dialect.rewriteTsqlApply,
       "snowTryTo" -> Dialect.rewriteSnowTryTo,
-      "arrayLiteral" -> ((s: String) => Dialect.rewriteArrayLiteral(s, esc = false)),
-      "aggFilter" -> ((s: String) => Dialect.rewriteAggFilter(s, esc = false)),
+      "arrayLiteral" -> ((s: String) => Dialect.rewriteArrayLiteral(s)),
+      "aggFilter" -> ((s: String) => Dialect.rewriteAggFilter(s)),
       // round-13 rewriters
       "chLimitBy" -> ((s: String) => Dialect.rewriteChLimitBy(s)),
       "tsqlPivot" -> Dialect.rewriteTsqlPivot,
@@ -830,49 +869,48 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
   test("unnest/flatten/try: table-valued rewrites and the TRY family") {
     // BigQuery UNNEST with 0-based WITH OFFSET → posexplode
     assert(Dialect.rewriteUnnest(
-      "SELECT x FROM t, UNNEST(arr) AS x WITH OFFSET AS o WHERE k = 1", esc = true) ===
+      "SELECT x FROM t, UNNEST(arr) AS x WITH OFFSET AS o WHERE k = 1") ===
       "SELECT x FROM t LATERAL VIEW posexplode(arr) __unnest_x AS o, x WHERE k = 1")
     // bare alias, no offset → explode; CROSS JOIN joiner
     assert(Dialect.rewriteUnnest(
-      "SELECT x FROM t CROSS JOIN UNNEST(arr) x", esc = true) ===
+      "SELECT x FROM t CROSS JOIN UNNEST(arr) x") ===
       "SELECT x FROM t LATERAL VIEW explode(arr) __unnest_x AS x")
     // bare WITH OFFSET (BigQuery-legal): the implicit column is `offset`,
     // and a following clause keyword is NOT captured as the alias
     assert(Dialect.rewriteUnnest(
-      "SELECT x FROM t, UNNEST(arr) AS x WITH OFFSET WHERE k = 1", esc = true) ===
+      "SELECT x FROM t, UNNEST(arr) AS x WITH OFFSET WHERE k = 1") ===
       "SELECT x FROM t LATERAL VIEW posexplode(arr) __unnest_x AS offset, x WHERE k = 1")
     // LEFT JOIN … ON TRUE keeps empty-array rows → OUTER
     assert(Dialect.rewriteUnnest(
-      "SELECT x FROM t LEFT JOIN UNNEST(arr) AS x ON TRUE", esc = true) ===
+      "SELECT x FROM t LEFT JOIN UNNEST(arr) AS x ON TRUE") ===
       "SELECT x FROM t LATERAL VIEW OUTER explode(arr) __unnest_x AS x")
     // Trino single-column table alias t(x)
     assert(Dialect.rewriteUnnest(
-      "SELECT tok FROM t CROSS JOIN UNNEST(split(s, '-')) AS u(tok)", esc = false) ===
+      "SELECT tok FROM t CROSS JOIN UNNEST(split(s, '-')) AS u(tok)") ===
       "SELECT tok FROM t LATERAL VIEW explode(split(s, '-')) u AS tok")
     // Trino WITH ORDINALITY (r13): 1-based BIGINT ordinal built inside
     // the array via inline(transform) — the +1 lives in per-row codegen
     assert(Dialect.rewriteUnnest(
-      "SELECT x FROM t CROSS JOIN UNNEST(arr) WITH ORDINALITY AS u(x, ord)", esc = false) ===
+      "SELECT x FROM t CROSS JOIN UNNEST(arr) WITH ORDINALITY AS u(x, ord)") ===
       "SELECT x FROM t LATERAL VIEW inline(transform(arr, (__unv, __uni) -> " +
         "struct(__unv AS x, CAST(__uni + 1 AS BIGINT) AS ord))) u AS x, ord")
     // ordinality REQUIRES the two-column table alias; one column (or the
     // BigQuery bare-alias mix) fails fast
     intercept[UnsupportedError](Dialect.rewriteUnnest(
-      "SELECT 1 FROM t CROSS JOIN UNNEST(a) WITH ORDINALITY AS u(x)", esc = false))
+      "SELECT 1 FROM t CROSS JOIN UNNEST(a) WITH ORDINALITY AS u(x)"))
     intercept[UnsupportedError](Dialect.rewriteUnnest(
-      "SELECT 1 FROM t CROSS JOIN UNNEST(a) WITH ORDINALITY x", esc = false))
+      "SELECT 1 FROM t CROSS JOIN UNNEST(a) WITH ORDINALITY x"))
     // multi-array zip (r18 — Trino positional zip; NULL-pads the
     // shorter array, empty/NULL inputs yield zero rows)
     assert(Dialect.rewriteUnnest(
-      "SELECT x, y FROM t CROSS JOIN UNNEST(a, b) AS u(x, y)", esc = false) ===
+      "SELECT x, y FROM t CROSS JOIN UNNEST(a, b) AS u(x, y)") ===
       "SELECT x, y FROM t LATERAL VIEW inline(transform(array_repeat(0, " +
         "greatest(size(a), size(b))), (__unv, __uni) -> " +
         "struct(try_element_at(a, __uni + 1) AS x, try_element_at(b, __uni + 1) AS y))) " +
         "u AS x, y")
     // … WITH ORDINALITY appends the 1-based BIGINT index as the last column
     assert(Dialect.rewriteUnnest(
-      "SELECT x FROM t LEFT JOIN UNNEST(a, b) WITH ORDINALITY AS u(x, y, i) ON TRUE",
-      esc = false) ===
+      "SELECT x FROM t LEFT JOIN UNNEST(a, b) WITH ORDINALITY AS u(x, y, i) ON TRUE") ===
       "SELECT x FROM t LATERAL VIEW OUTER inline(transform(array_repeat(0, " +
         "greatest(size(a), size(b))), (__unv, __uni) -> " +
         "struct(try_element_at(a, __uni + 1) AS x, try_element_at(b, __uni + 1) AS y, " +
@@ -880,61 +918,60 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // the per-array column list is REQUIRED (no bare-alias multi form),
     // and the count must match
     intercept[UnsupportedError](Dialect.rewriteUnnest(
-      "SELECT 1 FROM t CROSS JOIN UNNEST(a, b) AS u", esc = false))
+      "SELECT 1 FROM t CROSS JOIN UNNEST(a, b) AS u"))
     intercept[UnsupportedError](Dialect.rewriteUnnest(
-      "SELECT 1 FROM t CROSS JOIN UNNEST(a, b) AS u(x)", esc = false))
+      "SELECT 1 FROM t CROSS JOIN UNNEST(a, b) AS u(x)"))
     intercept[UnsupportedError](Dialect.rewriteUnnest(
-      "SELECT 1 FROM t, UNNEST(a) WHERE k = 1", esc = true)) // missing alias
+      "SELECT 1 FROM t, UNNEST(a) WHERE k = 1")) // missing alias
     // a literal containing ', UNNEST(' is never touched
-    assert(Dialect.rewriteUnnest("SELECT ', UNNEST(x) AS y' AS s FROM t", esc = true) ===
+    assert(Dialect.rewriteUnnest("SELECT ', UNNEST(x) AS y' AS s FROM t") ===
       "SELECT ', UNNEST(x) AS y' AS s FROM t")
     // Postgres explicit-LATERAL spellings (r19): the LATERAL keyword is
     // consumed — LATERAL VIEW is lateral by construction — under both
     // the comma-FROM and CROSS JOIN joiners, single and multi array
     assert(Dialect.rewriteUnnest(
-      "SELECT tok FROM t, LATERAL UNNEST(arr) AS u(tok) WHERE k = 1", esc = false) ===
+      "SELECT tok FROM t, LATERAL UNNEST(arr) AS u(tok) WHERE k = 1") ===
       "SELECT tok FROM t LATERAL VIEW explode(arr) u AS tok WHERE k = 1")
     assert(Dialect.rewriteUnnest(
-      "SELECT x, y FROM t CROSS JOIN LATERAL UNNEST(a, b) AS u(x, y)", esc = false) ===
+      "SELECT x, y FROM t CROSS JOIN LATERAL UNNEST(a, b) AS u(x, y)") ===
       "SELECT x, y FROM t LATERAL VIEW inline(transform(array_repeat(0, " +
         "greatest(size(a), size(b))), (__unv, __uni) -> " +
         "struct(try_element_at(a, __uni + 1) AS x, try_element_at(b, __uni + 1) AS y))) " +
         "u AS x, y")
     // a relation actually NAMED lateral (no UNNEST call after it) is untouched
-    assert(Dialect.rewriteUnnest("SELECT a FROM t, lateral l WHERE k = 1", esc = false) ===
+    assert(Dialect.rewriteUnnest("SELECT a FROM t, lateral l WHERE k = 1") ===
       "SELECT a FROM t, lateral l WHERE k = 1")
     // UNNEST as the FIRST/only FROM item (r19 review — a raw parse
     // error before): a FROM-less generator subquery; plain, LATERAL,
     // ORDINALITY, OFFSET, and zip forms all compose
     assert(Dialect.rewriteUnnest(
-      "SELECT x FROM UNNEST(array(1, 2)) AS t(x) WHERE x > 1", esc = false) ===
+      "SELECT x FROM UNNEST(array(1, 2)) AS t(x) WHERE x > 1") ===
       "SELECT x FROM (SELECT explode(array(1, 2)) AS x) t WHERE x > 1")
     assert(Dialect.rewriteUnnest(
-      "SELECT x FROM LATERAL UNNEST(arr) AS t(x)", esc = false) ===
+      "SELECT x FROM LATERAL UNNEST(arr) AS t(x)") ===
       "SELECT x FROM (SELECT explode(arr) AS x) t")
     assert(Dialect.rewriteUnnest(
-      "SELECT x FROM UNNEST(arr) WITH ORDINALITY AS t(x, i)", esc = false) ===
+      "SELECT x FROM UNNEST(arr) WITH ORDINALITY AS t(x, i)") ===
       "SELECT x FROM (SELECT inline(transform(arr, (__unv, __uni) -> " +
         "struct(__unv AS x, CAST(__uni + 1 AS BIGINT) AS i)))) t")
     assert(Dialect.rewriteUnnest(
-      "SELECT x FROM UNNEST(arr) AS x WITH OFFSET AS o", esc = true) ===
+      "SELECT x FROM UNNEST(arr) AS x WITH OFFSET AS o") ===
       "SELECT x FROM (SELECT posexplode(arr) AS (o, x)) __unnest_x")
     assert(Dialect.rewriteUnnest(
-      "SELECT x, y FROM UNNEST(a, b) AS t(x, y)", esc = false) ===
+      "SELECT x, y FROM UNNEST(a, b) AS t(x, y)") ===
       "SELECT x, y FROM (SELECT inline(transform(array_repeat(0, " +
         "greatest(size(a), size(b))), (__unv, __uni) -> " +
         "struct(try_element_at(a, __uni + 1) AS x, try_element_at(b, __uni + 1) AS y)))) t")
     // a second UNNEST item after a first-position one composes via the
     // comma pass
     assert(Dialect.rewriteUnnest(
-      "SELECT x, y FROM UNNEST(a) AS t(x), UNNEST(b) AS u(y)", esc = false) ===
+      "SELECT x, y FROM UNNEST(a) AS t(x), UNNEST(b) AS u(y)") ===
       "SELECT x, y FROM (SELECT explode(a) AS x) t LATERAL VIEW explode(b) u AS y")
     // comment text mentioning FROM UNNEST( neither fires the rewrite
     // nor skews the real one's paren match (r19 second review —
     // opaque spans)
     assert(Dialect.rewriteUnnest(
-      "SELECT x /* docs: FROM UNNEST( */ FROM t, UNNEST(t.arr) AS u(x)",
-      esc = false) ===
+      "SELECT x /* docs: FROM UNNEST( */ FROM t, UNNEST(t.arr) AS u(x)") ===
       "SELECT x /* docs: FROM UNNEST( */ FROM t LATERAL VIEW explode(t.arr) u AS x")
 
     // BigQuery array subscripts → element_at family (base recovered by
@@ -1427,7 +1464,7 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // supplies its rewrite (r18 — Teradata; a named fail-fast before):
     // QUALIFY filters FIRST, then the rank runs over the filtered rows
     locally {
-      val qr = Some((q: String) => Dialect.rewriteQualify(q, esc = true))
+      val qr = Some((q: String) => Dialect.rewriteQualify(q))
       assert(Dialect.rewriteTsqlTop(
         "SELECT TOP 2 WITH TIES g FROM t QUALIFY row_number() OVER (ORDER BY v) = 1 ORDER BY g",
         qualifyRewrite = qr) ===
@@ -1527,32 +1564,6 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(Dialect.rewriteFetchFirstWithTies(
       "SELECT DISTINCT g FROM t ORDER BY g FETCH FIRST 0 ROWS WITH TIES") ===
       "SELECT g FROM ( SELECT DISTINCT g FROM t ) __wtq LIMIT 0")
-    // LIMIT ALL (Postgres no-limit spelling) strips cleanly, OFFSET kept
-    assert(Dialect.rewriteLimitAll("SELECT g FROM t ORDER BY g LIMIT ALL OFFSET 5") ===
-      "SELECT g FROM t ORDER BY g OFFSET 5")
-    assert(Dialect.rewriteLimitAll("SELECT 'LIMIT ALL' AS s FROM t") ===
-      "SELECT 'LIMIT ALL' AS s FROM t")
-    // …and inside a comment or a backticked identifier it is text, not
-    // a clause (r17 ADVICE — literal-only spans used to strip it)
-    assert(Dialect.rewriteLimitAll("SELECT g FROM t -- LIMIT ALL\nORDER BY g") ===
-      "SELECT g FROM t -- LIMIT ALL\nORDER BY g")
-    assert(Dialect.rewriteLimitAll("SELECT `LIMIT ALL` FROM t") ===
-      "SELECT `LIMIT ALL` FROM t")
-    // a line comment immediately BEFORE the clause keeps its
-    // terminating newline — consuming it spliced the kept OFFSET into
-    // the comment, a silent wrong answer (r17 review)
-    assert(Dialect.rewriteLimitAll(
-      "SELECT g FROM t ORDER BY g -- note\nLIMIT ALL OFFSET 2") ===
-      "SELECT g FROM t ORDER BY g -- note\n OFFSET 2")
-    // a comment BETWEEN the tokens (r18 ADVICE): the scan runs over the
-    // comment-blanked text, so `LIMIT /* c */ ALL` strips like the
-    // contiguous spelling instead of reaching Spark as a parse error
-    assert(Dialect.rewriteLimitAll(
-      "SELECT g FROM t LIMIT /* c */ ALL OFFSET 2") ===
-      "SELECT g FROM t OFFSET 2")
-    assert(Dialect.rewriteLimitAll(
-      "SELECT g FROM t ORDER BY g LIMIT -- why\n ALL") ===
-      "SELECT g FROM t ORDER BY g")
     // a QUALIFY or DISTINCT ON keyword inside a comment does not
     // trigger those rewrites (r17 ADVICE — comment-unaware spans let
     // the nested path splice against comment text)
@@ -1932,23 +1943,23 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // generate_series table function: uncorrelated FROM → explode subquery,
     // correlated comma form → LATERAL VIEW (implicit-lateral semantics)
     assert(Dialect.rewriteGenerateSeriesTable(
-      "SELECT g.i FROM generate_series(1, 5) AS g(i)", esc = false) ===
+      "SELECT g.i FROM generate_series(1, 5) AS g(i)") ===
       "SELECT g.i FROM (SELECT explode(sequence(1, 5)) AS i) g")
     assert(Dialect.rewriteGenerateSeriesTable(
-      "SELECT d FROM t, generate_series(0, t.n) AS gs(d)", esc = false) ===
+      "SELECT d FROM t, generate_series(0, t.n) AS gs(d)") ===
       "SELECT d FROM t LATERAL VIEW explode(sequence(0, t.n)) gs AS d")
     // bare alias names the column; the generator alias is made distinct
     assert(Dialect.rewriteGenerateSeriesTable(
-      "SELECT g FROM t CROSS JOIN generate_series(1, 3) g", esc = false) ===
+      "SELECT g FROM t CROSS JOIN generate_series(1, 3) g") ===
       "SELECT g FROM t LATERAL VIEW explode(sequence(1, 3)) __gs_g AS g")
     // scalar-position generate_series is untouched (no FROM/comma joiner)
     assert(Dialect.rewriteGenerateSeriesTable(
-      "SELECT len(generate_series(1, 3)) AS n", esc = false) ===
+      "SELECT len(generate_series(1, 3)) AS n") ===
       "SELECT len(generate_series(1, 3)) AS n")
     intercept[UnsupportedError](Dialect.rewriteGenerateSeriesTable(
-      "SELECT 1 FROM generate_series(1, 2, 3, 4) g", esc = false))
+      "SELECT 1 FROM generate_series(1, 2, 3, 4) g"))
     intercept[UnsupportedError](Dialect.rewriteGenerateSeriesTable(
-      "SELECT 1 FROM generate_series(1, 5) WHERE 1 = 1", esc = false)) // no alias
+      "SELECT 1 FROM generate_series(1, 5) WHERE 1 = 1")) // no alias
 
     // ClickHouse ARRAY JOIN clause → LATERAL VIEW; LEFT keeps empties
     assert(Dialect.rewriteChArrayJoin(
@@ -1983,16 +1994,16 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     intercept[UnsupportedError](Dialect.rewriteSnowTryTo("TRY_TO_DATE(x, 'YYYY')"))
 
     // ARRAY[…] literal → array(…); nests inside-out; subscripts untouched
-    assert(Dialect.rewriteArrayLiteral("SELECT ARRAY[1, 2, 3]", esc = false) ===
+    assert(Dialect.rewriteArrayLiteral("SELECT ARRAY[1, 2, 3]") ===
       "SELECT array(1, 2, 3)")
     assert(Dialect.rewriteArrayLiteral(
-      "SELECT ARRAY[ARRAY[1, 2], ARRAY[f(x)]][1]", esc = false) ===
+      "SELECT ARRAY[ARRAY[1, 2], ARRAY[f(x)]][1]") ===
       "SELECT array(array(1, 2), array(f(x)))[1]")
-    assert(Dialect.rewriteArrayLiteral("SELECT ARRAY[]", esc = false) ===
+    assert(Dialect.rewriteArrayLiteral("SELECT ARRAY[]") ===
       "SELECT array()")
-    assert(Dialect.rewriteArrayLiteral("SELECT arr[1] FROM t", esc = false) ===
+    assert(Dialect.rewriteArrayLiteral("SELECT arr[1] FROM t") ===
       "SELECT arr[1] FROM t")
-    assert(Dialect.rewriteArrayLiteral("SELECT 'ARRAY[1]' FROM t", esc = false) ===
+    assert(Dialect.rewriteArrayLiteral("SELECT 'ARRAY[1]' FROM t") ===
       "SELECT 'ARRAY[1]' FROM t")
   }
 
@@ -2041,12 +2052,12 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // untouched — the rewriter never needs the session when it does not
     // fire, so null proves the no-op
     val mul = "SELECT price * replace(name, 'a', 'b') AS x FROM t"
-    assert(Dialect.rewriteStarReplace(null, mul, esc = false) === mul)
+    assert(Dialect.rewriteStarReplace(null, mul) === mul)
     val mulParen = "SELECT (qty * REPLACE(s, 'x', 'y')) AS x FROM t"
-    assert(Dialect.rewriteStarReplace(null, mulParen, esc = false) === mulParen)
+    assert(Dialect.rewriteStarReplace(null, mulParen) === mulParen)
     // literal trigger text stays untouched too
     val lit = "SELECT '* REPLACE (v AS v)' AS s FROM t"
-    assert(Dialect.rewriteStarReplace(null, lit, esc = false) === lit)
+    assert(Dialect.rewriteStarReplace(null, lit) === lit)
     // a qualified star whose QUALIFIER is not in select-list position is
     // still multiplication: `price * q.* REPLACE…` cannot arise, but
     // `x.y * REPLACE(s, 'a', 'b')` (qualified COLUMN times the string
@@ -2054,7 +2065,7 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // is the qualifier `x`, whose own context (`SELECT a,`? no — after
     // `=`) is not star position
     val qualMul = "SELECT k FROM t WHERE v = x.y * REPLACE(s, 'a', 'b')"
-    assert(Dialect.rewriteStarReplace(null, qualMul, esc = false) === qualMul)
+    assert(Dialect.rewriteStarReplace(null, qualMul) === qualMul)
   }
 
   test("aggregate FILTER (WHERE …) clause rewrite") {
@@ -2145,54 +2156,52 @@ class QualifiedStarReplaceSpec extends SparkSpec {
       .createOrReplaceTempView("star_repl_t")
     // alias form
     val out1 = Dialect.rewriteStarReplace(spark,
-      "SELECT t.* REPLACE (v * 2 AS v) FROM star_repl_t t ORDER BY k", esc = false)
+      "SELECT t.* REPLACE (v * 2 AS v) FROM star_repl_t t ORDER BY k")
     assert(out1 === "SELECT `k`, (v * 2) AS `v`, `s` FROM star_repl_t t ORDER BY k")
     // bare table name as the qualifier (no alias declared)
     val out2 = Dialect.rewriteStarReplace(spark,
-      "SELECT star_repl_t.* REPLACE (upper(s) AS s) FROM star_repl_t", esc = false)
+      "SELECT star_repl_t.* REPLACE (upper(s) AS s) FROM star_repl_t")
     assert(out2 === "SELECT `k`, `v`, (upper(s)) AS `s` FROM star_repl_t")
     // unresolvable qualifier names the construct in the error
     val err = intercept[UnsupportedError](Dialect.rewriteStarReplace(spark,
-      "SELECT zz.* REPLACE (v * 2 AS v) FROM star_repl_t t", esc = false))
+      "SELECT zz.* REPLACE (v * 2 AS v) FROM star_repl_t t"))
     assert(err.getMessage.contains("qualified star zz.*"))
     // an ALIASED table's original name is not addressable (DuckDB binder
     // semantics) — fails loudly too
     val err2 = intercept[UnsupportedError](Dialect.rewriteStarReplace(spark,
-      "SELECT star_repl_t.* REPLACE (v * 2 AS v) FROM star_repl_t t", esc = false))
+      "SELECT star_repl_t.* REPLACE (v * 2 AS v) FROM star_repl_t t"))
     assert(err2.getMessage.contains("does not resolve"))
     // unqualified star in the same session still expands (span math
     // unchanged when no qualifier precedes)
     val out3 = Dialect.rewriteStarReplace(spark,
-      "SELECT * REPLACE (v + 1 AS v) FROM star_repl_t", esc = false)
+      "SELECT * REPLACE (v + 1 AS v) FROM star_repl_t")
     assert(out3 === "SELECT `k`, (v + 1) AS `v`, `s` FROM star_repl_t")
     // derived-table FROM (r18 — a named error before): the star expands
     // from the ANALYZED subquery schema, replacement in position
     val out4 = Dialect.rewriteStarReplace(spark,
-      "SELECT * REPLACE (v * 10 AS v) FROM (SELECT k, v FROM star_repl_t WHERE k = 1) d ORDER BY k",
-      esc = false)
+      "SELECT * REPLACE (v * 10 AS v) FROM (SELECT k, v FROM star_repl_t WHERE k = 1) d ORDER BY k")
     assert(out4 === "SELECT `k`, (v * 10) AS `v` " +
       "FROM (SELECT k, v FROM star_repl_t WHERE k = 1) d ORDER BY k")
     // qualified star over the derived table's alias
     val out5 = Dialect.rewriteStarReplace(spark,
-      "SELECT d.* REPLACE (k + 1 AS k) FROM (SELECT k, s FROM star_repl_t) d", esc = false)
+      "SELECT d.* REPLACE (k + 1 AS k) FROM (SELECT k, s FROM star_repl_t) d")
     assert(out5 === "SELECT (k + 1) AS `k`, `s` FROM (SELECT k, s FROM star_repl_t) d")
     // qualifier that is not the derived alias fails loudly
     val err3 = intercept[UnsupportedError](Dialect.rewriteStarReplace(spark,
-      "SELECT zz.* REPLACE (k + 1 AS k) FROM (SELECT k FROM star_repl_t) d", esc = false))
+      "SELECT zz.* REPLACE (k + 1 AS k) FROM (SELECT k FROM star_repl_t) d"))
     assert(err3.getMessage.contains("does not resolve"))
     // a JOIN after the derived table still fails loudly (the star would
     // cover both sides in DuckDB)
     intercept[UnsupportedError](Dialect.rewriteStarReplace(spark,
       "SELECT * REPLACE (k + 1 AS k) FROM (SELECT k FROM star_repl_t) d " +
-        "JOIN star_repl_t u ON d.k = u.k", esc = false))
+        "JOIN star_repl_t u ON d.k = u.k"))
     // a replacement naming a column the subquery lacks fails loudly
     intercept[UnsupportedError](Dialect.rewriteStarReplace(spark,
-      "SELECT * REPLACE (v + 1 AS v) FROM (SELECT k FROM star_repl_t) d", esc = false))
+      "SELECT * REPLACE (v + 1 AS v) FROM (SELECT k FROM star_repl_t) d"))
     // a ')' inside a comment within the derived subquery no longer ends
     // the paren match early (r19, from ADVICE: opaque spans)
     assert(Dialect.rewriteStarReplace(spark,
-      "SELECT * REPLACE (v + 1 AS v) FROM (SELECT k, v /* ) */ FROM star_repl_t) d",
-      esc = false) ===
+      "SELECT * REPLACE (v + 1 AS v) FROM (SELECT k, v /* ) */ FROM star_repl_t) d") ===
       "SELECT `k`, (v + 1) AS `v` FROM (SELECT k, v /* ) */ FROM star_repl_t) d")
   }
 
@@ -2203,16 +2212,16 @@ class QualifiedStarReplaceSpec extends SparkSpec {
       .createOrReplaceTempView("star_exrep_t")
     // paren EXCLUDE list, then REPLACE over the KEPT columns
     assert(Dialect.rewriteStarReplace(spark,
-      "SELECT * EXCLUDE (s, w) REPLACE (v * 2 AS v) FROM star_exrep_t", esc = false) ===
+      "SELECT * EXCLUDE (s, w) REPLACE (v * 2 AS v) FROM star_exrep_t") ===
       "SELECT `k`, (v * 2) AS `v` FROM star_exrep_t")
     // bare single-column EXCLUDE spelling
     assert(Dialect.rewriteStarReplace(spark,
-      "SELECT * EXCLUDE w REPLACE (upper(s) AS s) FROM star_exrep_t", esc = false) ===
+      "SELECT * EXCLUDE w REPLACE (upper(s) AS s) FROM star_exrep_t") ===
       "SELECT `k`, `v`, (upper(s)) AS `s` FROM star_exrep_t")
     // the EXCEPT keyword spelling ([[rewriteExclude]]-normalized or
     // BigQuery-native) composes the same way
     assert(Dialect.rewriteStarReplace(spark,
-      "SELECT * EXCEPT (s) REPLACE (v + 1 AS v) FROM star_exrep_t", esc = false) ===
+      "SELECT * EXCEPT (s) REPLACE (v + 1 AS v) FROM star_exrep_t") ===
       "SELECT `k`, (v + 1) AS `v`, `w` FROM star_exrep_t")
     // …and through the DuckDB chain end-to-end (rewriteExclude first)
     assert(Dialect.DuckDbish.rewrite(spark,
@@ -2221,43 +2230,43 @@ class QualifiedStarReplaceSpec extends SparkSpec {
     // replacing an EXCLUDED column is a named error (DuckDB's own order:
     // the column is gone before REPLACE runs)
     assert(intercept[UnsupportedError](Dialect.rewriteStarReplace(spark,
-      "SELECT * EXCLUDE (v) REPLACE (v * 2 AS v) FROM star_exrep_t", esc = false))
+      "SELECT * EXCLUDE (v) REPLACE (v * 2 AS v) FROM star_exrep_t"))
       .getMessage.contains("EXCLUDE list already drops"))
     // excluding a column the relation lacks is a named error
     assert(intercept[UnsupportedError](Dialect.rewriteStarReplace(spark,
-      "SELECT * EXCLUDE (zz) REPLACE (v * 2 AS v) FROM star_exrep_t", esc = false))
+      "SELECT * EXCLUDE (zz) REPLACE (v * 2 AS v) FROM star_exrep_t"))
       .getMessage.contains("EXCLUDE names column zz"))
     // excluding EVERY column leaves the REPLACE target nowhere to bind —
     // a named error either way (missing target or already-dropped target)
     intercept[UnsupportedError](Dialect.rewriteStarReplace(spark,
       "SELECT * EXCLUDE (k, v, s) REPLACE (w + 1 AS w) FROM " +
-        "(SELECT k, v, s FROM star_exrep_t) d", esc = false))
+        "(SELECT k, v, s FROM star_exrep_t) d"))
     // the combined clause composes with a derived FROM
     assert(Dialect.rewriteStarReplace(spark,
       "SELECT * EXCLUDE (s) REPLACE (k + 1 AS k) FROM " +
-        "(SELECT k, s, w FROM star_exrep_t) d", esc = false) ===
+        "(SELECT k, s, w FROM star_exrep_t) d") ===
       "SELECT (k + 1) AS `k`, `w` FROM (SELECT k, s, w FROM star_exrep_t) d")
     // a twice-excluded column raises DuckDB's duplicate-entry binder
     // error instead of silently deduping (r19 review)
     assert(intercept[UnsupportedError](Dialect.rewriteStarReplace(spark,
-      "SELECT * EXCLUDE (s, s) REPLACE (v * 2 AS v) FROM star_exrep_t", esc = false))
+      "SELECT * EXCLUDE (s, s) REPLACE (v * 2 AS v) FROM star_exrep_t"))
       .getMessage.contains("more than once"))
     // an empty EXCLUDE list / blank entry raises (DuckDB syntax error)
     // instead of silently degrading to a plain * REPLACE
     assert(intercept[UnsupportedError](Dialect.rewriteStarReplace(spark,
-      "SELECT * EXCLUDE () REPLACE (v * 2 AS v) FROM star_exrep_t", esc = false))
+      "SELECT * EXCLUDE () REPLACE (v * 2 AS v) FROM star_exrep_t"))
       .getMessage.contains("empty entry"))
     intercept[UnsupportedError](Dialect.rewriteStarReplace(spark,
-      "SELECT * EXCLUDE (s,) REPLACE (v * 2 AS v) FROM star_exrep_t", esc = false))
+      "SELECT * EXCLUDE (s,) REPLACE (v * 2 AS v) FROM star_exrep_t"))
     // comment opacity across the whole rewrite (r19 review — the fix
     // had landed on the derived-FROM paren only): a ')' inside a
     // comment in the REPLACE list, and a FROM inside a comment before
     // the real FROM, neither corrupts the rewrite
     assert(Dialect.rewriteStarReplace(spark,
-      "SELECT * REPLACE (v + 1 /* ) */ AS v) FROM star_exrep_t", esc = false) ===
+      "SELECT * REPLACE (v + 1 /* ) */ AS v) FROM star_exrep_t") ===
       "SELECT `k`, (v + 1 /* ) */) AS `v`, `s`, `w` FROM star_exrep_t")
     assert(Dialect.rewriteStarReplace(spark,
-      "SELECT * REPLACE (v + 1 AS v) /* FROM zz */ FROM star_exrep_t", esc = false) ===
+      "SELECT * REPLACE (v + 1 AS v) /* FROM zz */ FROM star_exrep_t") ===
       "SELECT `k`, (v + 1) AS `v`, `s`, `w` /* FROM zz */ FROM star_exrep_t")
   }
 }

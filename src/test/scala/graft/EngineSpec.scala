@@ -465,15 +465,19 @@ class EngineSpec extends SparkSpec {
   }
 
   test("dialect: == rewrite preserves string literals (ANSI '' doubling, backslash plain)") {
-    assert(Dialect.rewriteDoubleEquals("SELECT 'a==b' WHERE x == 1") ===
-      "SELECT 'a==b' WHERE x = 1")
+    // Spark parses `==` itself; the DuckDB rewrite must leave it and the
+    // literals around it intact
+    def one(sql: String): String = Engine.execute(spark, sql, Map("t1" -> t1),
+      Dialect.DuckDbish).collect().map(_.getString(0)).toSeq match {
+      case Seq(v) => v
+      case other => fail(s"expected one row, got $other")
+    }
+    assert(one("SELECT 'a==b' AS s FROM t1 WHERE a == 't_6'") === "a==b")
     // '' doubling: the == inside must survive
-    assert(Dialect.rewriteDoubleEquals("SELECT 'a''==b' WHERE x == 1") ===
-      "SELECT 'a''==b' WHERE x = 1")
+    assert(one("SELECT 'a''==b' AS s FROM t1 WHERE a == 't_6'") === "a'==b")
     // ANSI: backslash is a plain char — a trailing-backslash literal closes
     // at its quote instead of swallowing the rest of the statement
-    assert(Dialect.rewriteDoubleEquals("SELECT 'C:\\' WHERE x == 1") ===
-      "SELECT 'C:\\' WHERE x = 1")
+    assert(one("SELECT 'C:\\' AS s FROM t1 WHERE a == 't_6'") === "C:\\")
     // and the Spark-side escape step doubles it so Spark's parser agrees
     assert(Dialect.escapeBackslashLiterals("SELECT 'C:\\' || x") ===
       "SELECT 'C:\\\\' || x")
@@ -555,10 +559,10 @@ class EngineSpec extends SparkSpec {
       Dialect.rewriteOracleRownum("SELECT ROWNUM, a FROM t"))
     assert(Dialect.rewriteOracleRownum("SELECT 'ROWNUM <= 3' AS s FROM t") ===
       "SELECT 'ROWNUM <= 3' AS s FROM t") // literal untouched
-    assert(Dialect.rewriteWord("SELECT a FROM t MINUS SELECT a FROM u", "MINUS", "EXCEPT") ===
+    assert(Dialect.renameWords("SELECT a FROM t MINUS SELECT a FROM u", Map("MINUS" -> "EXCEPT")) ===
       "SELECT a FROM t EXCEPT SELECT a FROM u")
-    assert(Dialect.rewriteWord("SELECT 'minus here' || SYSDATE FROM t", "SYSDATE",
-      "current_timestamp()") === "SELECT 'minus here' || current_timestamp() FROM t")
+    assert(Dialect.renameWords("SELECT 'minus here' || SYSDATE FROM t",
+      Map("SYSDATE" -> "current_timestamp()")) === "SELECT 'minus here' || current_timestamp() FROM t")
   }
 
   test("dialect: Snowflakeish constructs — textual rewrites") {
@@ -653,19 +657,26 @@ class EngineSpec extends SparkSpec {
   }
 
   test("dialect: :: cast rewrite — literal, column, function-call, chained") {
-    assert(Dialect.rewriteColonCast("SELECT '7'::INT") === "SELECT CAST('7' AS INT)")
-    assert(Dialect.rewriteColonCast("SELECT t.x::BIGINT FROM t") ===
-      "SELECT CAST(t.x AS BIGINT) FROM t")
-    assert(Dialect.rewriteColonCast("SELECT floor(x)::BIGINT") ===
-      "SELECT CAST(floor(x) AS BIGINT)")
-    assert(Dialect.rewriteColonCast("SELECT (a || b)::VARCHAR(20)") ===
-      "SELECT CAST((a || b) AS VARCHAR(20))")
-    assert(Dialect.rewriteColonCast("SELECT x::INT::VARCHAR(9)") ===
-      "SELECT CAST(CAST(x AS INT) AS VARCHAR(9))")
-    assert(Dialect.rewriteColonCast("SELECT d::DECIMAL(12,2)") ===
-      "SELECT CAST(d AS DECIMAL(12,2))")
-    // '::' inside a string literal is untouched
-    assert(Dialect.rewriteColonCast("SELECT 'a::b'") === "SELECT 'a::b'")
+    // Spark parses `::` itself: each cast reaches it through the DuckDB
+    // and Postgres rewrites and yields the cast value and type
+    for (d <- Seq(Dialect.DuckDbish, Dialect.Postgresish)) {
+      val df = Engine.execute(spark,
+        """SELECT '7'::INT AS i, t.c::BIGINT AS l, floor(t.b)::BIGINT AS f,
+          |  (a || 'z')::VARCHAR(20) AS v, c::INT::VARCHAR(9) AS cc,
+          |  b::DECIMAL(12,2) AS d, 'a::b' AS s
+          |FROM t1 t WHERE a = 't_13'""".stripMargin, Map("t1" -> t1), d)
+      assert(df.schema.map(_.dataType.simpleString) ===
+        Seq("int", "bigint", "bigint", "string", "string", "decimal(12,2)", "string"))
+      val r = df.collect().head
+      assert(r.getInt(0) === 7)
+      assert(r.getLong(1) === 6L)
+      assert(r.getLong(2) === 3L)
+      assert(r.getString(3) === "t_13z")
+      assert(r.getString(4) === "6")
+      assert(r.getDecimal(5) === new java.math.BigDecimal("3.25"))
+      // '::' inside a string literal is untouched
+      assert(r.getString(6) === "a::b")
+    }
   }
 
   test("dialect: double-quoted identifiers and // int division") {
@@ -885,5 +896,80 @@ class EngineSpec extends SparkSpec {
     assert(df.schema("a").dataType === org.apache.spark.sql.types.IntegerType)
     val got = df.orderBy("b").collect()
     assert(got.map(r => Option(r.get(0))).toSeq === Seq(Some(7), None))
+  }
+
+  test("postgres: LIMIT ALL is no limit, OFFSET kept; as text it stays text") {
+    // Spark parses LIMIT ALL itself, comments between its tokens included
+    def rows(sql: String) =
+      Engine.execute(spark, sql, Map("t" -> t1), Dialect.Postgresish).collect()
+    assert(rows("SELECT c AS g FROM t ORDER BY g, a LIMIT ALL OFFSET 5").length === 95)
+    assert(rows("SELECT 'LIMIT ALL' AS s FROM t").map(_.getString(0)).toSet ===
+      Set("LIMIT ALL"))
+    assert(rows("SELECT c AS g FROM t -- LIMIT ALL\nORDER BY g").length === 100)
+    val quoted = Engine.execute(spark, "SELECT a AS `LIMIT ALL` FROM t",
+      Map("t" -> t1), Dialect.Postgresish)
+    assert(quoted.columns.toSeq === Seq("LIMIT ALL"))
+    assert(quoted.count() === 100)
+    // a line comment immediately BEFORE the clause, and comments
+    // BETWEEN its tokens
+    assert(rows("SELECT c AS g FROM t ORDER BY g, a -- note\nLIMIT ALL OFFSET 2")
+      .length === 98)
+    assert(rows("SELECT c AS g FROM t LIMIT /* c */ ALL OFFSET 2").length === 98)
+    val all = rows("SELECT c AS g FROM t ORDER BY g LIMIT -- why\n ALL")
+    assert(all.length === 100)
+    assert(all.map(_.getInt(0)).toSeq === (0 until 100).map(_ % 7).sorted)
+  }
+
+  // ---- the lexer: passes see comments and quoted identifiers ----------
+
+  test("duckdb: an apostrophe in a quoted alias does not hide the rest of the statement") {
+    val r = Engine.execute(spark,
+      """SELECT 1 AS "it's", list_contains(list_value(1, 2), 1) AS has""",
+      dialect = Dialect.DuckDbish).collect().head
+    assert(r.getInt(0) === 1)
+    assert(r.getBoolean(1))
+  }
+
+  test("duckdb: an apostrophe in a comment does not hide the operator after it") {
+    val r = Engine.execute(spark, "SELECT /* it's */ 7 // 2 AS q",
+      dialect = Dialect.DuckDbish).collect().head
+    assert(r.getLong(0) === 3L)
+  }
+
+  test("duckdb: == inside a quoted identifier is part of the name") {
+    val df = Engine.execute(spark, "SELECT 1 AS \"a==b\"", dialect = Dialect.DuckDbish)
+    assert(df.columns.toSeq === Seq("a==b"))
+  }
+
+  test("name flattening: an apostrophe in a comment does not hide the table name") {
+    val n = Engine.execute(spark, "/* it's */ SELECT COUNT(*) AS n FROM db.t",
+      Map("db.t" -> t1)).collect().head.getLong(0)
+    assert(n === 100L)
+  }
+
+  test("postgres: :: after CASE … END casts the whole CASE") {
+    val rows = Engine.execute(spark,
+      "SELECT a, CASE WHEN c > 3 THEN 'hi' ELSE 'lo' END::VARCHAR(3) AS s " +
+        "FROM t1 WHERE a IN ('t_3', 't_4') ORDER BY a",
+      Map("t1" -> t1), Dialect.Postgresish).collect()
+    assert(rows.map(r => (r.getString(0), r.getString(1))).toSeq ===
+      Seq(("t_3", "lo"), ("t_4", "hi")))
+  }
+
+  test("postgres: :: after a typed literal casts the typed literal") {
+    val r = Engine.execute(spark, "SELECT DATE '2024-01-02'::TIMESTAMP AS ts",
+      dialect = Dialect.Postgresish)
+    assert(r.schema.head.dataType === org.apache.spark.sql.types.TimestampType)
+    assert(r.collect().head.getTimestamp(0) ===
+      java.sql.Timestamp.valueOf("2024-01-02 00:00:00"))
+  }
+
+  test("duckdb: unsized VARCHAR and TEXT casts map to STRING") {
+    val r = Engine.execute(spark,
+      "SELECT c::VARCHAR AS v1, CAST(c AS VARCHAR) AS v2, c :: text AS v3, " +
+        "TRY_CAST(c AS TEXT) AS v4, a AS varchar FROM t1 WHERE a = 't_13'",
+      Map("t1" -> t1), Dialect.DuckDbish)
+    assert(r.schema.map(_.dataType.simpleString) === Seq.fill(5)("string"))
+    assert(r.collect().head.toSeq === Seq("6", "6", "6", "6", "t_13"))
   }
 }

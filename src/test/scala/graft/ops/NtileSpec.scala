@@ -46,4 +46,17 @@ class NtileSpec extends SparkSpec {
     compare((1 to 5000).map(i => (rnd.nextLong(), i.toLong)), 8)
     compare((1 to 5000).map(i => (0L, i.toLong)), 8) // total order only via id
   }
+
+  test("globalNtile refuses an input column named like its bucket column") {
+    initLog()
+    import spark.implicits._
+    val df = Seq((1L, 9L), (2L, 9L)).toDF("v", "bucket")
+    val e = intercept[IllegalArgumentException](
+      Relational.globalNtile(df, 2, Seq(col("v"))))
+    assert(e.getMessage.contains("bucket"))
+    // a distinct bucketCol keeps the input column intact
+    val out = Relational.globalNtile(df, 2, Seq(col("v")), bucketCol = "nt")
+      .select("v", "bucket", "nt").as[(Long, Long, Long)].collect().sorted.toSeq
+    assert(out === Seq((1L, 9L, 1L), (2L, 9L, 2L)))
+  }
 }
