@@ -64,10 +64,15 @@ import org.apache.spark.sql.types.StructType
   * Everything the rewriter does is textual, over the spans of one lexer
   * ([[Dialect.lex]]): string literals, quoted identifiers and comments are
   * opaque to every pass, which never matches or splices inside them. The
-  * ten ANSI-literal dialects ('' doubling, backslash plain) run
-  * [[Dialect.escapeBackslashLiterals]] as their first step, and the other
-  * five already escape with backslashes as Spark does, so every later
-  * pass lexes Spark's literal syntax and needs no per-dialect flag.
+  * first step of a pipeline turns the dialect's literals into Spark's
+  * syntax ([[Dialect.sparkLiterals]]): the ten ANSI-literal dialects (''
+  * doubling, backslash plain) double their backslashes, and MySQL and
+  * Tableau turn `"…"` strings into `'…'` literals. The other dialects
+  * already escape with backslashes as Spark does, so every later pass
+  * lexes Spark's literal syntax and needs no per-dialect flag. The
+  * function-call passes share one rewriter ([[Dialect.rewriteCalls]]),
+  * which lexes once, rewrites a call's arguments before the call and
+  * never rescans its output, so each pass is linear in the SQL's length.
   */
 sealed trait Dialect {
   def rewrite(spark: SparkSession, sql: String,
@@ -387,8 +392,9 @@ object Dialect {
 
   /** MySQL-ish surface (reference core.py:66 — `dialect` accepts "mysql").
     * MySQL string literals use backslash escapes exactly as Spark's default
-    * parser does (no doubling), and backtick identifiers are
-    * already Spark's quoting. Constructs translated:
+    * parser does (no doubling); `"…"` strings become `'…'` literals first,
+    * and backtick identifiers are already Spark's quoting. Constructs
+    * translated:
     *   - `LIMIT offset, count` → `LIMIT count OFFSET offset`
     *   - `DATE_FORMAT(x, '%d/%m/%Y')` / `STR_TO_DATE(s, 'fmt')` — MySQL `%`
     *     codes (`%i` minutes, `%M` month name) → Java patterns; STR_TO_DATE
@@ -410,6 +416,7 @@ object Dialect {
     def rewrite(spark: SparkSession, sql: String,
         schemas: Map[String, StructType]): String = {
       val steps: Seq[String => String] = Seq(
+        s => sparkLiterals(s, literalBackslashEscapes, doubleQuotedIsString),
         rewriteMysqlLimit,
         rewriteGroupConcat,
         rewriteMysqlDateFns,
@@ -738,8 +745,8 @@ object Dialect {
     * STARTSWITH / ENDSWITH / TRIM / ABS / POWER / ROUND are
     * Spark-native pass-throughs.
     * Tableau string literals treat backslash as a plain character →
-    * escaped for Spark's parser; Tableau's double-quoted STRINGS parse
-    * as Spark double-quoted literals natively. Unquoted identifiers
+    * escaped for Spark's parser; Tableau's double-quoted STRINGS keep
+    * Spark's backslash escapes and become `'…'` literals. Unquoted identifiers
     * fold case-insensitively (sqlglot default) → Lower.
     */
   case object TableauIsh extends Dialect {
@@ -754,7 +761,7 @@ object Dialect {
     def rewrite(spark: SparkSession, sql: String,
         schemas: Map[String, StructType]): String = {
       val steps: Seq[String => String] = Seq(
-        escapeBackslashLiterals,
+        s => sparkLiterals(s, literalBackslashEscapes, doubleQuotedIsString),
         rewriteBracketIdents,
         rewriteTableauIfBlock,
         rewriteTableauIif,
@@ -891,10 +898,12 @@ object Dialect {
     * apostrophe inside a comment or a quoted identifier must not open a
     * literal, and a comment marker inside a literal must not open a
     * comment. Every pass runs on text whose literals already use Spark's
-    * syntax (the ANSI-literal dialects run [[escapeBackslashLiterals]]
+    * syntax (the dialects whose literals differ run [[sparkLiterals]]
     * first), so the defaults are Spark's: backslash escapes in `'…'`,
     * `"…"` an identifier. Only scans over a dialect's RAW text pass that
-    * dialect's own rules. Quotes of every style escape by doubling.
+    * dialect's own rules. Quotes of every style escape by doubling, and a
+    * `"…"` string honors backslash escapes in every dialect that reads
+    * one (Spark, MySQL, Tableau).
     *
     * Bracketed comments NEST, as in Spark (SPARK-28880), Postgres and
     * DuckDB. MySQL and Snowflake do not nest, so there a comment holding
@@ -916,7 +925,7 @@ object Dialect {
         var done = false
         while (i < s.length && !done) {
           val ch = s.charAt(i)
-          if (isString && backslashEscapes && ch == '\\' && i + 1 < s.length) i += 2
+          if (isString && (backslashEscapes || c == '"') && ch == '\\' && i + 1 < s.length) i += 2
           else if (ch == c && i + 1 < s.length && s.charAt(i + 1) == c) i += 2
           else { done = ch == c; i += 1 }
         }
@@ -939,17 +948,46 @@ object Dialect {
     new Spans(b.result())
   }
 
-  /** Double every backslash inside string literals. The ANSI-literal
-    * dialects treat `\` in a literal as a plain character; Spark's parser
-    * processes it as an escape — without this, 'C:\' swallows its closing
-    * quote and '\n' silently becomes a newline. Runs first in those
-    * dialects, so it lexes their raw text by their own rule.
+  /** Rewrite a dialect's string literals into Spark's syntax. Runs first,
+    * so it lexes the raw text by the dialect's own rules:
+    *  - without `backslashEscapes` (the ANSI-literal dialects) every
+    *    backslash in a literal is doubled: those dialects read `\` as a
+    *    plain character, Spark's parser as an escape, so 'C:\' would
+    *    swallow its closing quote and '\n' silently become a newline;
+    *  - with `doubleQuotedIsString` (MySQL, Tableau) each `"…"` string
+    *    becomes a `'…'` literal, so later passes, which lex `"…"` as an
+    *    identifier, never mis-read one holding `\"`.
     */
-  private[graft] def escapeBackslashLiterals(sql: String): String =
-    replaceSpans(sql, lex(sql, backslashEscapes = false)) {
-      case Span(a, b, SpanKind.Literal) => Some(sql.substring(a, b).replace("\\", "\\\\"))
+  private[graft] def sparkLiterals(sql: String, backslashEscapes: Boolean,
+      doubleQuotedIsString: Boolean): String =
+    replaceSpans(sql, lex(sql, backslashEscapes, doubleQuotedIsString)) {
+      case Span(a, b, SpanKind.Literal) if sql.charAt(a) == '"' =>
+        singleQuoted(sql.substring(a, b))
+      case Span(a, b, SpanKind.Literal) if !backslashEscapes =>
+        Some(sql.substring(a, b).replace("\\", "\\\\"))
       case _ => None
     }
+
+  /** [[sparkLiterals]] for the ANSI-literal dialects. */
+  private[graft] def escapeBackslashLiterals(sql: String): String =
+    sparkLiterals(sql, backslashEscapes = false, doubleQuotedIsString = false)
+
+  /** A `"…"` string (backslash escapes kept, `""` a quote) as the same
+    * string in Spark's `'…'` syntax; None when it is unterminated, which
+    * Spark's parser then rejects.
+    */
+  private def singleQuoted(lit: String): Option[String] = {
+    val out = new java.lang.StringBuilder("'")
+    var i = 1
+    while (i < lit.length) {
+      val c = lit.charAt(i)
+      if (c == '\\' && i + 1 < lit.length) { out.append(lit, i, i + 2); i += 2 }
+      else if (c == '"' && i + 1 < lit.length) { out.append('"'); i += 2 }
+      else if (c == '"') return Some(out.append('\'').toString)
+      else { out.append(if (c == '\'') "\\'" else c.toString); i += 1 }
+    }
+    None
+  }
 
   /** `sql` with each span the function maps to Some(text) replaced. */
   private def replaceSpans(sql: String, spans: Spans)(f: Span => Option[String]): String = {
@@ -1072,8 +1110,12 @@ object Dialect {
   }
 
   /** Split `sql[from, to)` on top-level commas, skipping the lexer's spans. */
-  private def splitArgs(sql: String, spans: Spans, from: Int, to: Int): Seq[String] = {
-    val args = Seq.newBuilder[String]
+  private def splitArgs(sql: String, spans: Spans, from: Int, to: Int): Seq[String] =
+    argRanges(sql, spans, from, to).map { case (a, b) => sql.substring(a, b) }
+
+  /** The `[start, end)` ranges [[splitArgs]] cuts `sql[from, to)` into. */
+  private def argRanges(sql: String, spans: Spans, from: Int, to: Int): Seq[(Int, Int)] = {
+    val args = Seq.newBuilder[(Int, Int)]
     var depth = 0
     var last = from
     var i = from
@@ -1082,11 +1124,11 @@ object Dialect {
         val c = sql.charAt(i)
         if (c == '(' || c == '[') depth += 1
         else if (c == ')' || c == ']') depth -= 1
-        else if (c == ',' && depth == 0) { args += sql.substring(last, i); last = i + 1 }
+        else if (c == ',' && depth == 0) { args += ((last, i)); last = i + 1 }
       }
       i += 1
     }
-    args += sql.substring(last, to)
+    args += ((last, to))
     args.result()
   }
 
@@ -1096,68 +1138,38 @@ object Dialect {
     * must be a string literal (dynamic formats would need runtime
     * translation — unsupported, raises).
     */
-  private[graft] def rewriteStrftime(sql: String): String = {
-    val re = """(?i)\bstrftime\s*\(""".r
-    var cur = sql
-    var changed = true
-    while (changed) {
-      changed = false
-      val spans = lex(cur)
-      re.findAllMatchIn(cur).find(m => spans.outside(m.start)).foreach { m =>
-        val open = cur.indexOf('(', m.start)
-        val close = matchParen(cur, spans, open)
-        if (close < 0) throw new graft.UnsupportedError(s"unbalanced strftime( in: $cur")
-        val args = splitArgs(cur, spans, open + 1, close)
-        if (args.length != 2)
-          throw new graft.UnsupportedError("strftime expects (expr, 'format')")
-        val fmt = args(1) match {
-          case SingleLiteral(f) => translateStrftimeFormat(f)
-          case _ => throw new graft.UnsupportedError(
-            "strftime format must be a string literal")
-        }
-        // the Java pattern may itself contain quotes ('day 'dd) — double
-        // them so the embedded SQL literal stays balanced
-        cur = cur.substring(0, m.start) + "date_format(" + args(0).trim + ", '" +
-          fmt.replace("'", "''") + "')" + cur.substring(close + 1)
-        changed = true
+  private[graft] def rewriteStrftime(sql: String): String =
+    rewriteCalls(sql, "strftime") { (_, args) =>
+      if (args.length != 2)
+        throw new graft.UnsupportedError("strftime expects (expr, 'format')")
+      val fmt = args(1) match {
+        case SingleLiteral(f) => translateStrftimeFormat(f)
+        case _ => throw new graft.UnsupportedError(
+          "strftime format must be a string literal")
       }
+      // the Java pattern may itself contain quotes ('day 'dd) — double
+      // them so the embedded SQL literal stays balanced
+      Some("date_format(" + args(0) + ", '" + fmt.replace("'", "''") + "')")
     }
-    cur
-  }
 
   /** `string_split(s, sep)` → `split(s, <regex>)`. DuckDB's separator is a
     * literal; Spark's is a Java regex, so a literal separator is \Q-quoted
     * and a dynamic one is wrapped `concat('\\Q', sep, '\\E')`. A literal
     * containing `\E` cannot be \Q-quoted — raises.
     */
-  private[graft] def rewriteStringSplit(sql: String): String = {
-    val re = """(?i)\b(?:string_split|str_split|string_to_array)\s*\(""".r
-    var cur = sql
-    var changed = true
-    while (changed) {
-      changed = false
-      val spans = lex(cur)
-      re.findAllMatchIn(cur).find(m => spans.outside(m.start)).foreach { m =>
-        val open = cur.indexOf('(', m.start)
-        val close = matchParen(cur, spans, open)
-        if (close < 0) throw new graft.UnsupportedError(s"unbalanced string_split( in: $cur")
-        val args = splitArgs(cur, spans, open + 1, close)
-        if (args.length != 2)
-          throw new graft.UnsupportedError("string_split expects (expr, separator)")
-        val sep = args(1) match {
-          case SingleLiteral(lit) =>
-            if (lit.contains("\\E"))
-              throw new graft.UnsupportedError("string_split separator containing \\E is not supported")
-            "'\\\\Q" + lit + "\\\\E'"
-          case dyn => s"concat('\\\\Q', ${dyn.trim}, '\\\\E')"
-        }
-        cur = cur.substring(0, m.start) + "split(" + args(0).trim + ", " + sep + ")" +
-          cur.substring(close + 1)
-        changed = true
+  private[graft] def rewriteStringSplit(sql: String): String =
+    rewriteCalls(sql, "string_split|str_split|string_to_array") { (_, args) =>
+      if (args.length != 2)
+        throw new graft.UnsupportedError("string_split expects (expr, separator)")
+      val sep = args(1) match {
+        case SingleLiteral(lit) =>
+          if (lit.contains("\\E"))
+            throw new graft.UnsupportedError("string_split separator containing \\E is not supported")
+          "'\\\\Q" + lit + "\\\\E'"
+        case dyn => s"concat('\\\\Q', $dyn, '\\\\E')"
       }
+      Some("split(" + args(0) + ", " + sep + ")")
     }
-    cur
-  }
 
   /** `sql` with every match of `re` that starts outside the lexer's
     * spans replaced by `f(match)`.
@@ -1180,10 +1192,7 @@ object Dialect {
     * quoted identifiers and comments.
     */
   private[graft] def renameFunctions(sql: String, renames: Map[String, String]): String =
-    renames.foldLeft(sql) { case (cur, (from, to)) =>
-      replaceOutside(cur, ("(?i)\\b" + java.util.regex.Pattern.quote(from) + "\\s*\\(").r)(
-        _ => to + "(")
-    }
+    renameAll(sql, renames, "\\s*\\(", "(")
 
   /** Rename bare words (type names like INT64 → BIGINT, Teradata keyword
     * operators) at word boundaries, outside string literals, quoted
@@ -1191,9 +1200,19 @@ object Dialect {
     * and comments.
     */
   private[graft] def renameWords(sql: String, renames: Map[String, String]): String =
-    renames.foldLeft(sql) { case (cur, (from, to)) =>
-      replaceOutside(cur, ("(?i)\\b" + java.util.regex.Pattern.quote(from) + "\\b").r)(_ => to)
-    }
+    renameAll(sql, renames, "\\b", "")
+
+  /** Both renames: one case-insensitive alternation of the names, longest
+    * first, then `tail`, whose match is replaced by `keep`. All renames
+    * apply at once, so a name one rename emits is never renamed again.
+    */
+  private def renameAll(sql: String, renames: Map[String, String],
+      tail: String, keep: String): String = {
+    val to = renames.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
+    val names = renames.keys.toSeq.sortBy(-_.length).map(java.util.regex.Pattern.quote)
+    replaceOutside(sql, ("(?i)\\b(" + names.mkString("|") + ")" + tail).r)(
+      m => to(m.group(1).toLowerCase(java.util.Locale.ROOT)) + keep)
+  }
 
   // ---- Teradata -----------------------------------------------------------
 
@@ -1442,46 +1461,61 @@ object Dialect {
     * (argument-count checked — both are strictly unary in Teradata).
     */
   private[graft] def rewriteTeradataZeroNull(sql: String): String =
-    rewriteCall(sql, "zeroifnull|nullifzero") { (name, args) =>
+    rewriteCalls(sql, "zeroifnull|nullifzero") { (name, args) =>
       if (args.length != 1)
         throw new graft.UnsupportedError(s"$name expects a single argument")
-      if (name.equalsIgnoreCase("zeroifnull")) s"coalesce(${args(0)}, 0)"
-      else s"nullif(${args(0)}, 0)"
+      Some(if (name.equalsIgnoreCase("zeroifnull")) s"coalesce(${args(0)}, 0)"
+        else s"nullif(${args(0)}, 0)")
     }
 
-  // ---- generic call rewriter ----------------------------------------------
+  // ---- the call rewriter -------------------------------------------------
 
-  /** Replace every `name(args…)` call outside string literals with
-    * `transform(name, args)`, leftmost-first, re-scanning after each
-    * replacement (so calls nested inside a replacement's argument text are
-    * rewritten on a later pass). `names` is a regex alternation of function
-    * names. The transform must not emit a call that itself matches `names`
-    * (guarded at 256 passes).
+  /** Rewrite every `name(args…)` call outside the lexer's spans, `names`
+    * being a regex alternation of function names. Inside-out, in one pass
+    * over text lexed once: a call's arguments are rewritten first (by
+    * recursing over their ranges of the same text), then `transform(name,
+    * args)` gives the call's replacement, or None to keep the call with
+    * its rewritten arguments. Every call is rewritten exactly once and the
+    * output is never rescanned, so a transform may emit a call of a name
+    * it matches.
     */
-  private def rewriteCall(sql: String, names: String)(
-      transform: (String, Seq[String]) => String): String = {
-    val re = ("(?i)\\b(" + names + ")\\s*\\(").r
-    var cur = sql
-    var changed = true
-    var guard = 0
-    while (changed) {
-      changed = false
-      guard += 1
-      if (guard > 256)
-        throw new graft.UnsupportedError(s"rewrite of $names did not terminate")
-      val spans = lex(cur)
-      re.findAllMatchIn(cur).find(m => spans.outside(m.start)).foreach { m =>
+  private def rewriteCalls(sql: String, names: String)(
+      transform: (String, Seq[String]) => Option[String]): String = {
+    val spans = lex(sql)
+    val calls = ("(?i)\\b(" + names + ")\\s*\\(").r.findAllMatchIn(sql)
+      .filter(m => spans.outside(m.start)).toVector
+    val out = new java.lang.StringBuilder
+    var next = 0
+    // appends sql[from, to) to `out`, rewriting the calls that start in it
+    def emit(from: Int, to: Int): Unit = {
+      var last = from
+      while (next < calls.length && calls(next).start < to) {
+        val m = calls(next)
+        next += 1
         val open = m.end - 1 // the regex consumed through '('
-        val close = matchParen(cur, spans, open)
-        if (close < 0)
-          throw new graft.UnsupportedError(s"unbalanced ${m.group(1)}( in: $cur")
-        val args = splitArgs(cur, spans, open + 1, close).map(_.trim)
-        cur = cur.substring(0, m.start) + transform(m.group(1), args) +
-          cur.substring(close + 1)
-        changed = true
+        val close = matchParen(sql, spans, open)
+        if (close < 0 || close >= to)
+          throw new graft.UnsupportedError(s"unbalanced ${m.group(1)}( in: $sql")
+        out.append(sql, last, m.start)
+        val callStart = out.length
+        out.append(sql, m.start, open + 1)
+        val args = argRanges(sql, spans, open + 1, close).map { case (a, b) =>
+          if (a > open + 1) out.append(',')
+          val argStart = out.length
+          emit(a, b)
+          out.substring(argStart).trim
+        }
+        out.append(')')
+        transform(m.group(1), args).foreach { t =>
+          out.setLength(callStart)
+          out.append(t)
+        }
+        last = close + 1
       }
+      out.append(sql, last, to)
     }
-    cur
+    emit(0, sql.length)
+    out.toString
   }
 
   /** DuckDB `epoch(ts)` returns DOUBLE seconds including the fraction;
@@ -1490,10 +1524,10 @@ object Dialect {
     * time zone applies to DATE inputs on both engines).
     */
   private[graft] def rewriteEpoch(sql: String): String =
-    rewriteCall(sql, "epoch") { (_, args) =>
+    rewriteCalls(sql, "epoch") { (_, args) =>
       if (args.length != 1)
         throw new graft.UnsupportedError("epoch expects a single argument")
-      s"CAST(CAST(${args(0)} AS TIMESTAMP) AS DOUBLE)"
+      Some(s"CAST(CAST(${args(0)} AS TIMESTAMP) AS DOUBLE)")
     }
 
   // ---- QUALIFY ------------------------------------------------------------
@@ -2151,20 +2185,19 @@ object Dialect {
     }
 
   private[graft] def rewriteSnowDateAdd(sql: String): String =
-    rewriteCall(sql, "dateadd") { (fn, args) =>
+    rewriteCalls(sql, "dateadd") { (fn, args) =>
       if (args.length != 3)
         throw new graft.UnsupportedError(s"$fn expects (part, n, expr)")
-      dateAddExpr(snowPart(args(0), fn), args(1), args(2))
+      Some(dateAddExpr(snowPart(args(0), fn), args(1), args(2)))
     }
 
   /** Count of `part` boundaries crossed from `start` to `end` — Snowflake's
     * and BigQuery's DATEDIFF/DATE_DIFF semantics (2 months minus 1 day is
     * still 2 month boundaries), NOT Spark `timestampdiff`'s complete
     * intervals. Exact calendar arithmetic, no epoch math. `dayFn` picks
-    * which Spark spelling (`date_diff` vs `datediff`) to emit — the one the
-    * calling dialect's own pattern does NOT re-match. `weekAnchor` is a
-    * day-1-of-week date far in the past (proleptic 0001-01-01 is a Monday)
-    * so the DIV 7 never sees a negative dividend.
+    * which Spark spelling (`date_diff` vs `datediff`) to emit. `weekAnchor`
+    * is a day-1-of-week date far in the past (proleptic 0001-01-01 is a
+    * Monday) so the DIV 7 never sees a negative dividend.
     */
   private def boundaryDateDiff(part: String, start: String, end: String,
       weekAnchor: String, dayFn: String): String =
@@ -2185,10 +2218,10 @@ object Dialect {
     * Monday — Snowflake's WEEK_START=0 ISO-like default).
     */
   private[graft] def rewriteSnowDateDiff(sql: String): String =
-    rewriteCall(sql, "datediff") { (fn, args) =>
+    rewriteCalls(sql, "datediff") { (fn, args) =>
       if (args.length != 3)
         throw new graft.UnsupportedError(s"$fn expects (part, start, end)")
-      boundaryDateDiff(snowPart(args(0), fn), args(1), args(2), "0001-01-01", "date_diff")
+      Some(boundaryDateDiff(snowPart(args(0), fn), args(1), args(2), "0001-01-01", "date_diff"))
     }
 
   /** Snowflake date format elements → Java pattern, longest token first
@@ -2227,12 +2260,12 @@ object Dialect {
     * numeric picture formats raise).
     */
   private[graft] def rewriteToVarchar(sql: String): String =
-    rewriteCall(sql, "to_varchar") { (fn, args) =>
+    rewriteCalls(sql, "to_varchar") { (fn, args) =>
       args match {
-        case Seq(x) => s"CAST($x AS STRING)"
+        case Seq(x) => Some(s"CAST($x AS STRING)")
         case Seq(x, SingleLiteral(f)) =>
           val java = translateSnowflakeFormat(f)
-          s"date_format($x, '${java.replace("'", "''")}')"
+          Some(s"date_format($x, '${java.replace("'", "''")}')")
         case _ =>
           throw new graft.UnsupportedError(s"$fn expects (expr) or (expr, 'format')")
       }
@@ -2244,11 +2277,11 @@ object Dialect {
     * codes with the format FIRST → `date_format(d, javaPattern)`.
     */
   private[graft] def rewriteFormatDate(sql: String): String =
-    rewriteCall(sql, "format_date|format_timestamp") { (fn, args) =>
+    rewriteCalls(sql, "format_date|format_timestamp") { (fn, args) =>
       args match {
         case Seq(SingleLiteral(f), x) =>
           val java = translateStrftimeFormat(f)
-          s"date_format($x, '${java.replace("'", "''")}')"
+          Some(s"date_format($x, '${java.replace("'", "''")}')")
         case _ =>
           throw new graft.UnsupportedError(s"$fn expects ('format', expr)")
       }
@@ -2260,47 +2293,13 @@ object Dialect {
     * proleptic 0001-01-07 is a Sunday).
     */
   private[graft] def rewriteBqDateDiff(sql: String): String =
-    rewriteCall(sql, "date_diff|timestamp_diff") { (fn, args) =>
+    rewriteCalls(sql, "date_diff|timestamp_diff") { (fn, args) =>
       if (args.length != 3)
         throw new graft.UnsupportedError(s"$fn expects (end, start, part)")
-      boundaryDateDiff(snowPart(args(2), fn), args(1), args(0), "0001-01-07", "datediff")
+      Some(boundaryDateDiff(snowPart(args(2), fn), args(1), args(0), "0001-01-07", "datediff"))
     }
 
   // ---- MySQL constructs ---------------------------------------------------
-
-  /** Like [[rewriteCall]], but the transform may decline (`None`) and the
-    * scan then advances past that match instead of re-visiting it. Needed
-    * when the emitted call matches the searched name again (MySQL
-    * `DATE_FORMAT` is rewritten to Spark's function of the SAME name with a
-    * translated pattern — the second visit sees no `%` codes and declines).
-    */
-  private def rewriteCallOpt(sql: String, names: String)(
-      transform: (String, Seq[String]) => Option[String]): String = {
-    val re = ("(?i)\\b(" + names + ")\\s*\\(").r
-    var cur = sql
-    var from = 0
-    var guard = 0
-    while (guard < 256) {
-      guard += 1
-      val spans = lex(cur)
-      re.findAllMatchIn(cur).find(m => m.start >= from && spans.outside(m.start)) match {
-        case None => return cur
-        case Some(m) =>
-          val open = m.end - 1
-          val close = matchParen(cur, spans, open)
-          if (close < 0)
-            throw new graft.UnsupportedError(s"unbalanced ${m.group(1)}( in: $cur")
-          val args = splitArgs(cur, spans, open + 1, close).map(_.trim)
-          transform(m.group(1), args) match {
-            case Some(repl) =>
-              cur = cur.substring(0, m.start) + repl + cur.substring(close + 1)
-              from = m.start // nested calls inside repl still get visited
-            case None => from = m.start + 1
-          }
-      }
-    }
-    throw new graft.UnsupportedError(s"rewrite of $names did not terminate")
-  }
 
   /** MySQL date format codes → Java pattern. NOT the C strftime table:
     * `%i` is minutes (strftime `%M`), `%M` is the month NAME, `%s`/`%S` are
@@ -2341,32 +2340,6 @@ object Dialect {
 
   private val MysqlCodeRe = """%[A-Za-z]""".r
 
-  /** One left-to-right rewrite pass over `names(...)` call sites:
-    * arguments are recursively processed FIRST, each call is replaced
-    * exactly once, and replacements are never re-scanned — the
-    * machinery for rewrites whose OUTPUT could textually re-match their
-    * own trigger (date_format emitting date_format with a now-%-free
-    * translated pattern, which a rescanning rewriter would translate
-    * again and corrupt).
-    */
-  private def rewriteCallOnePass(sql: String, names: String)(
-      transform: (String, Seq[String]) => String): String = {
-    val re = ("(?i)\\b(" + names + ")\\s*\\(").r
-    val spans = lex(sql)
-    re.findAllMatchIn(sql).find(m => spans.outside(m.start)) match {
-      case None => sql
-      case Some(m) =>
-        val open = m.end - 1
-        val close = matchParen(sql, spans, open)
-        if (close < 0)
-          throw new graft.UnsupportedError(s"unbalanced ${m.group(1)}( in: $sql")
-        val args = splitArgs(sql, spans, open + 1, close)
-          .map(a => rewriteCallOnePass(a, names)(transform)).map(_.trim)
-        sql.substring(0, m.start) + transform(m.group(1), args) +
-          rewriteCallOnePass(sql.substring(close + 1), names)(transform)
-    }
-  }
-
   /** `DATE_FORMAT(x, 'fmt')` → `date_format` through the MySQL %-code
     * table — INCLUDING %-free literal formats, whose characters are
     * ALL literal in MySQL ("any other characters are copied without
@@ -2377,11 +2350,10 @@ object Dialect {
     * (MySQL's DATE-vs-DATETIME result typing); a %-free parse format
     * has no fields to extract and raises, as does any non-literal
     * format (untranslatable at rewrite time — silently wrong either
-    * way). One-pass scanning: the emitted date_format is never
-    * re-scanned, so the translated pattern cannot be re-translated.
+    * way).
     */
   private[graft] def rewriteMysqlDateFns(sql: String): String =
-    rewriteCallOnePass(sql, "date_format|str_to_date") { (fn, args) =>
+    rewriteCalls(sql, "date_format|str_to_date") { (fn, args) =>
       args match {
         case Seq(x, SingleLiteral(f)) =>
           val java = translateMysqlFormat(f).replace("'", "''")
@@ -2392,8 +2364,8 @@ object Dialect {
             val hasTime =
               MysqlCodeRe.findAllIn(f).exists(m => "HkhIisSTrf".contains(m.charAt(1)))
             val target = if (hasTime) "to_timestamp" else "to_date"
-            s"$target($x, '$java')"
-          } else s"date_format($x, '$java')"
+            Some(s"$target($x, '$java')")
+          } else Some(s"date_format($x, '$java')")
         case Seq(_, other) => throw new graft.UnsupportedError(
           s"$fn format must be a string literal, got: $other")
         case _ => throw new graft.UnsupportedError(s"$fn expects (expr, 'format')")
@@ -2406,7 +2378,7 @@ object Dialect {
     * (`GROUP_CONCAT(a, b)` concatenation form) are not shimmed — raise.
     */
   private[graft] def rewriteGroupConcat(sql: String): String =
-    rewriteCall(sql, "group_concat") { (fn, args) =>
+    rewriteCalls(sql, "group_concat") { (fn, args) =>
       if (args.length != 1)
         throw new graft.UnsupportedError(
           s"$fn with multiple expressions is not supported; use CONCAT_WS inside it")
@@ -2432,7 +2404,7 @@ object Dialect {
       val ord = ordM.map(m => arg.substring(m.end,
         sepM.map(_.start).filter(_ > m.end).getOrElse(arg.length)).trim)
       val sepLit = "'" + sep.replace("'", "''") + "'"
-      s"listagg($expr, $sepLit)" + ord.map(o => s" WITHIN GROUP (ORDER BY $o)").getOrElse("")
+      Some(s"listagg($expr, $sepLit)" + ord.map(o => s" WITHIN GROUP (ORDER BY $o)").getOrElse(""))
     }
 
   /** MySQL `LIMIT offset, count` → `LIMIT count OFFSET offset`. The
@@ -2448,9 +2420,9 @@ object Dialect {
     * start-position form has no Spark builtin — raise.
     */
   private[graft] def rewriteMysqlLocate(sql: String): String =
-    rewriteCall(sql, "locate") { (fn, args) =>
+    rewriteCalls(sql, "locate") { (fn, args) =>
       args match {
-        case Seq(sub, str) => s"instr($str, $sub)"
+        case Seq(sub, str) => Some(s"instr($str, $sub)")
         case _ => throw new graft.UnsupportedError(
           s"$fn expects (substr, str); the 3-argument form is not supported")
       }
@@ -2504,7 +2476,7 @@ object Dialect {
     * → `date_format(expr, 'java pattern')` via the shared strftime table.
     */
   private[graft] def rewriteSqliteStrftime(sql: String): String =
-    rewriteCallOpt(sql, "strftime") { (_, args) =>
+    rewriteCalls(sql, "strftime") { (_, args) =>
       args match {
         case Seq(SingleLiteral(f), x) =>
           Some(s"date_format(${x.trim}, " +
@@ -2595,7 +2567,7 @@ object Dialect {
     * non-literal format raises (translating it would need runtime info).
     */
   private[graft] def rewritePgToChar(sql: String): String =
-    rewriteCallOpt(sql, "to_char") { (_, args) =>
+    rewriteCalls(sql, "to_char") { (_, args) =>
       args match {
         case Seq(x, SingleLiteral(f)) =>
           Some(s"date_format($x, '${translatePgFormat(f).replace("'", "''")}')")
@@ -2612,7 +2584,7 @@ object Dialect {
     * plain CASE equality would silently drop those branches.
     */
   private[graft] def rewriteOracleDecode(sql: String): String =
-    rewriteCallOpt(sql, "decode") { (_, args) =>
+    rewriteCalls(sql, "decode") { (_, args) =>
       if (args.length < 3)
         throw new graft.UnsupportedError(
           "DECODE needs at least (expr, search, result)")
@@ -2630,11 +2602,10 @@ object Dialect {
   /** `TO_DATE(x, 'templates')` → `to_date(x, 'java pattern')` via the
     * shared Oracle/Postgres template table. The 1-argument form and
     * formats that are already Java patterns (translation is identity or
-    * fails on lowercase letters) pass through untouched — also what makes
-    * the rewrite idempotent, since the output spells `to_date` again.
+    * fails on lowercase letters) pass through untouched.
     */
   private[graft] def rewriteOracleToDate(sql: String): String =
-    rewriteCallOpt(sql, "to_date") { (_, args) =>
+    rewriteCalls(sql, "to_date") { (_, args) =>
       args match {
         case Seq(x, SingleLiteral(f)) =>
           val t = try translatePgFormat(f)
@@ -3048,11 +3019,11 @@ object Dialect {
     * FORMATTING — there is no Spark cast equivalent, so it raises.
     */
   private[graft] def rewriteTsqlConvert(sql: String): String =
-    rewriteCall(sql, "convert") { (fn, args) =>
+    rewriteCalls(sql, "convert") { (fn, args) =>
       if (args.length != 2)
         throw new graft.UnsupportedError(
           s"$fn expects (type, expr); style arguments are not supported")
-      s"CAST(${args(1)} AS ${tsqlType(args(0), fn)})"
+      Some(s"CAST(${args(1)} AS ${tsqlType(args(0), fn)})")
     }
 
   private def tsqlType(raw: String, fn: String): String = {
@@ -3079,10 +3050,10 @@ object Dialect {
     * behavior as Snowflake's, different part-abbreviation set.
     */
   private[graft] def rewriteTsqlDateAdd(sql: String): String =
-    rewriteCall(sql, "dateadd") { (fn, args) =>
+    rewriteCalls(sql, "dateadd") { (fn, args) =>
       if (args.length != 3)
         throw new graft.UnsupportedError(s"$fn expects (part, n, expr)")
-      dateAddExpr(tsqlPart(args(0), fn), args(1), args(2))
+      Some(dateAddExpr(tsqlPart(args(0), fn), args(1), args(2)))
     }
 
   /** T-SQL `DATEDIFF(part, start, end)` — boundary crossings like
@@ -3091,10 +3062,10 @@ object Dialect {
     * 0001-01-07) where Snowflake's is a Monday.
     */
   private[graft] def rewriteTsqlDateDiff(sql: String): String =
-    rewriteCall(sql, "datediff") { (fn, args) =>
+    rewriteCalls(sql, "datediff") { (fn, args) =>
       if (args.length != 3)
         throw new graft.UnsupportedError(s"$fn expects (part, start, end)")
-      boundaryDateDiff(tsqlPart(args(0), fn), args(1), args(2), "0001-01-07", "date_diff")
+      Some(boundaryDateDiff(tsqlPart(args(0), fn), args(1), args(2), "0001-01-07", "date_diff"))
     }
 
   /** T-SQL/ANSI paging: `OFFSET n ROWS [FETCH NEXT|FIRST m ROWS ONLY]` →
@@ -3130,13 +3101,13 @@ object Dialect {
     * one for half the year.
     */
   private[graft] def rewriteTsqlDatePart(sql: String): String =
-    rewriteCall(sql, "datepart") { (fn, args) =>
+    rewriteCalls(sql, "datepart") { (fn, args) =>
       if (args.length != 2)
         throw new graft.UnsupportedError(s"$fn expects (part, expr)")
       tsqlPart(args(0), fn) match {
         case "week" => throw new graft.UnsupportedError(
           "DATEPART(week, …) has DATEFIRST-dependent numbering with no Spark equivalent")
-        case p => s"$p(${args(1)})"
+        case p => Some(s"$p(${args(1)})")
       }
     }
 
@@ -3157,7 +3128,7 @@ object Dialect {
     * Spark-native and left alone.
     */
   private[graft] def rewritePgExtractEpoch(sql: String): String =
-    rewriteCallOpt(sql, "extract") { (_, args) =>
+    rewriteCalls(sql, "extract") { (_, args) =>
       args match {
         case Seq(one) =>
           val m = """(?is)^\s*(EPOCH|ISODOW|DOW)\s+FROM\s+(.+)$""".r.findFirstMatchIn(one)
@@ -3181,7 +3152,7 @@ object Dialect {
     * and passes through.
     */
   private[graft] def rewritePgStringAgg(sql: String): String =
-    rewriteCallOpt(sql, "string_agg") { (_, args) =>
+    rewriteCalls(sql, "string_agg") { (_, args) =>
       args match {
         // a multi-key ORDER BY splits at its top-level commas, so rejoin
         // everything after the expression before locating the clause
@@ -3234,7 +3205,7 @@ object Dialect {
     */
   private[graft] def rewritePgArrayAgg(sql: String,
       descNullsLast: Boolean, skipNullValues: Boolean = false): String =
-    rewriteCallOpt(sql, "array_agg") { (fn, args) =>
+    rewriteCalls(sql, "array_agg") { (fn, args) =>
       orderedCollectExpr(fn, args.mkString(", ").trim, descNullsLast,
         ascNullsFirst = false, skipNullValues = skipNullValues)
     }
@@ -3479,7 +3450,7 @@ object Dialect {
     * documented narrowing of an order-undefined contract.
     */
   private[graft] def rewriteBqArrayAgg(sql: String): String =
-    rewriteCallOpt(sql, "array_agg") { (fn, args) =>
+    rewriteCalls(sql, "array_agg") { (fn, args) =>
       val joined = args.mkString(", ").trim
       val spans = lex(joined)
       val depth = depthAt(joined, spans)
@@ -3501,50 +3472,45 @@ object Dialect {
           // collect_list would silently drop it) — a raise_error guard on
           // the VALUE reproduces the error contract exactly, in the plain
           // spelling AND inside the ordered struct collect (r15 — the
-          // ordered bare form was a fail-fast before). The rescan declines
-          // on the emitted forms (raise_error present / no array_agg name).
-          if ("(?i)\\braise_error\\s*\\(".r.findFirstIn(joined).isDefined) None
-          else {
-            val respect = inCore("(?i)\\bRESPECT\\s+NULLS\\b")
-            val core = respect.map(r => (core0.substring(0, r.start) + " " +
-              core0.substring(r.end)).trim).getOrElse(core0)
-            def guard(v: String): String =
-              s"CASE WHEN ($v) IS NULL THEN " +
-                "raise_error('ARRAY_AGG: array cannot have a NULL element " +
-                s"(BigQuery semantics); use $fn(x IGNORE NULLS)') ELSE $v END"
-            // ordered + LIMIT: BigQuery raises only when the FINAL
-            // (truncated) array contains a NULL element — a NULL sorting
-            // outside the LIMIT window succeeds — so the guard moves
-            // AFTER the slice instead of wrapping every collected value
-            // (r15 ADVICE: the per-value guard over-raised on exactly
-            // that case). The no-LIMIT ordered/plain forms keep the
-            // per-value guard: without truncation the two are equivalent
-            // and the per-value form fails earlier.
-            orderedCollectExpr(fn, core, descNullsLast = true,
-                ascNullsFirst = true, skipNullValues = false,
-                valueWrap = if (limitM.isDefined) identity else guard) match {
-              case Some(inner) =>
-                Some(limitM.map { m =>
-                  val arr = s"slice($inner, 1, ${m.group(1)})"
-                  s"CASE WHEN exists($arr, __e -> __e IS NULL) THEN " +
-                    "raise_error('ARRAY_AGG: array cannot have a NULL element " +
-                    s"(BigQuery semantics); use $fn(x IGNORE NULLS)') ELSE $arr END"
-                }.getOrElse(inner))
-              case None =>
-                val (prefix, v) = "(?is)^DISTINCT\\s+(.*)$".r.findFirstMatchIn(core)
-                  .map(mm => ("DISTINCT ", mm.group(1).trim)).getOrElse(("", core))
-                val base = s"$fn($prefix${guard(v)})"
-                // un-ordered LIMIT n truncates an arbitrary-order array —
-                // BigQuery's own contract without ORDER BY
-                Some(limitM.map(m => s"slice($base, 1, ${m.group(1)})")
-                  .getOrElse(base))
-            }
+          // ordered bare form was a fail-fast before).
+          val respect = inCore("(?i)\\bRESPECT\\s+NULLS\\b")
+          val core = respect.map(r => (core0.substring(0, r.start) + " " +
+            core0.substring(r.end)).trim).getOrElse(core0)
+          def guard(v: String): String =
+            s"CASE WHEN ($v) IS NULL THEN " +
+              "raise_error('ARRAY_AGG: array cannot have a NULL element " +
+              s"(BigQuery semantics); use $fn(x IGNORE NULLS)') ELSE $v END"
+          // ordered + LIMIT: BigQuery raises only when the FINAL
+          // (truncated) array contains a NULL element — a NULL sorting
+          // outside the LIMIT window succeeds — so the guard moves
+          // AFTER the slice instead of wrapping every collected value
+          // (r15 ADVICE: the per-value guard over-raised on exactly
+          // that case). The no-LIMIT ordered/plain forms keep the
+          // per-value guard: without truncation the two are equivalent
+          // and the per-value form fails earlier.
+          orderedCollectExpr(fn, core, descNullsLast = true,
+              ascNullsFirst = true, skipNullValues = false,
+              valueWrap = if (limitM.isDefined) identity else guard) match {
+            case Some(inner) =>
+              Some(limitM.map { m =>
+                val arr = s"slice($inner, 1, ${m.group(1)})"
+                s"CASE WHEN exists($arr, __e -> __e IS NULL) THEN " +
+                  "raise_error('ARRAY_AGG: array cannot have a NULL element " +
+                  s"(BigQuery semantics); use $fn(x IGNORE NULLS)') ELSE $arr END"
+              }.getOrElse(inner))
+            case None =>
+              val (prefix, v) = "(?is)^DISTINCT\\s+(.*)$".r.findFirstMatchIn(core)
+                .map(mm => ("DISTINCT ", mm.group(1).trim)).getOrElse(("", core))
+              val base = s"$fn($prefix${guard(v)})"
+              // un-ordered LIMIT n truncates an arbitrary-order array —
+              // BigQuery's own contract without ORDER BY
+              Some(limitM.map(m => s"slice($base, 1, ${m.group(1)})")
+                .getOrElse(base))
           }
         case Some(im) =>
           val core = (core0.substring(0, im.start) + " " + core0.substring(im.end)).trim
-          // the no-ORDER-BY fallback emits Spark's collect_list NAME (the
-          // same function array_agg aliases): the rescan must not re-visit
-          // an `array_agg(` spelling and wrap it with the bare-form guard
+          // the no-ORDER-BY fallback is Spark's collect_list, which
+          // array_agg aliases
           val inner = orderedCollectExpr(fn, core, descNullsLast = true,
             ascNullsFirst = true, skipNullValues = true)
             .getOrElse(s"collect_list($core)")
@@ -3812,10 +3778,10 @@ object Dialect {
     * Snowflake/T-SQL spelling, Redshift part vocabulary.
     */
   private[graft] def rewriteRsDateAdd(sql: String): String =
-    rewriteCall(sql, "dateadd") { (fn, args) =>
+    rewriteCalls(sql, "dateadd") { (fn, args) =>
       if (args.length != 3)
         throw new graft.UnsupportedError(s"$fn expects (part, n, expr)")
-      dateAddExpr(rsPart(args(0), fn), args(1), args(2))
+      Some(dateAddExpr(rsPart(args(0), fn), args(1), args(2)))
     }
 
   /** Redshift `DATEDIFF(part, start, end)` — boundary crossings with the
@@ -3823,10 +3789,10 @@ object Dialect {
     * DATEDIFF(week) boundary.
     */
   private[graft] def rewriteRsDateDiff(sql: String): String =
-    rewriteCall(sql, "datediff") { (fn, args) =>
+    rewriteCalls(sql, "datediff") { (fn, args) =>
       if (args.length != 3)
         throw new graft.UnsupportedError(s"$fn expects (part, start, end)")
-      boundaryDateDiff(rsPart(args(0), fn), args(1), args(2), "0001-01-07", "date_diff")
+      Some(boundaryDateDiff(rsPart(args(0), fn), args(1), args(2), "0001-01-07", "date_diff"))
     }
 
   /** Bare `VARCHAR`/`TEXT`/`BPCHAR` (no length) in a type position →
@@ -3839,7 +3805,7 @@ object Dialect {
     * that. Sized `VARCHAR(n)` passes through Spark-native.
     */
   private[graft] def rewriteRsBareTypes(sql: String): String = {
-    val casts = rewriteCallOpt(sql, "cast|try_cast") { (fn, args) =>
+    val casts = rewriteCalls(sql, "cast|try_cast") { (fn, args) =>
       args match {
         case Seq(one) =>
           """(?is)^(.*\sAS\s+)(VARCHAR|TEXT|BPCHAR)\s*$""".r.findFirstMatchIn(one)
@@ -3860,7 +3826,7 @@ object Dialect {
     * fail-soft choice and matches what SQL users expect of the CASE form).
     */
   private[graft] def rewriteChAggIf(sql: String): String =
-    rewriteCallOpt(sql, "countIf|sumIf|avgIf|minIf|maxIf") { (fn, args) =>
+    rewriteCalls(sql, "countIf|sumIf|avgIf|minIf|maxIf") { (fn, args) =>
       (fn.toLowerCase, args) match {
         case ("countif", Seq(c)) => Some(s"count_if($c)")
         case ("countif", Seq(x, c)) => Some(s"count(CASE WHEN $c THEN $x END)")
@@ -3876,7 +3842,7 @@ object Dialect {
 
   /** `multiIf(c1, v1, …, cN, vN, else)` → searched CASE. */
   private[graft] def rewriteChMultiIf(sql: String): String =
-    rewriteCallOpt(sql, "multiIf") { (_, args) =>
+    rewriteCalls(sql, "multiIf") { (_, args) =>
       if (args.length < 3 || args.length % 2 == 0)
         throw new graft.UnsupportedError(
           "multiIf expects cond,value pairs plus a final else")
@@ -3892,7 +3858,7 @@ object Dialect {
     * TIMESTAMP — all per ClickHouse result typing.
     */
   private[graft] def rewriteChTo(sql: String): String =
-    rewriteCallOpt(sql,
+    rewriteCalls(sql,
       "toYYYYMMDD|toYYYYMM|toYear|toMonth|toDayOfMonth|toDate|toString|" +
         "toInt32|toInt64|toFloat64|toStartOfYear|toStartOfMonth|" +
         "toStartOfDay|toUnixTimestamp") { (fn, args) =>
@@ -3929,7 +3895,7 @@ object Dialect {
     * silently change the result type).
     */
   private[graft] def rewriteChFormatDateTime(sql: String): String =
-    rewriteCallOpt(sql, "formatDateTime|fromUnixTimestamp") { (fn, args) =>
+    rewriteCalls(sql, "formatDateTime|fromUnixTimestamp") { (fn, args) =>
       if (fn.equalsIgnoreCase("formatdatetime")) args match {
         case Seq(x, SingleLiteral(f)) =>
           Some(s"date_format($x, '${translateMysqlFormat(f).replace("'", "''")}')")
@@ -3954,7 +3920,7 @@ object Dialect {
     * ('weekday N', 'unixepoch', fractional offsets) raise.
     */
   private[graft] def rewriteSqliteDateFn(sql: String): String =
-    rewriteCallOpt(sql, "date") { (_, args) =>
+    rewriteCalls(sql, "date") { (_, args) =>
       args match {
         case Seq(x) => Some(s"CAST($x AS DATE)")
         case base +: mods =>
@@ -3995,7 +3961,7 @@ object Dialect {
     * have no direct Spark spelling).
     */
   private[graft] def rewriteChArrayHof(sql: String): String =
-    rewriteCallOpt(sql, "arrayMap|arrayFilter|arrayExists|arrayAll|arrayCount") { (fn, args) =>
+    rewriteCalls(sql, "arrayMap|arrayFilter|arrayExists|arrayAll|arrayCount") { (fn, args) =>
       args match {
         case Seq(lam, arr) => Some(fn.toLowerCase match {
           case "arraymap" => s"transform($arr, $lam)"
@@ -4016,7 +3982,7 @@ object Dialect {
     * [[rewriteStringSplit]].
     */
   private[graft] def rewriteChSplit(sql: String): String =
-    rewriteCallOpt(sql, "splitByChar|splitByString") { (_, args) =>
+    rewriteCalls(sql, "splitByChar|splitByString") { (_, args) =>
       args match {
         case Seq(sepArg, s) =>
           val sep = sepArg match {
@@ -4036,7 +4002,7 @@ object Dialect {
     * approx_count_distinct (ClickHouse's uniq is itself approximate).
     */
   private[graft] def rewriteChUniq(sql: String): String =
-    rewriteCallOpt(sql, "uniqExact|uniq") { (fn, args) =>
+    rewriteCalls(sql, "uniqExact|uniq") { (fn, args) =>
       if (args.isEmpty)
         throw new graft.UnsupportedError(s"ClickHouse $fn expects arguments")
       Some(if (fn.equalsIgnoreCase("uniqexact"))
@@ -4046,7 +4012,7 @@ object Dialect {
 
   /** `empty(s)` / `notEmpty(s)` string emptiness tests. */
   private[graft] def rewriteChEmpty(sql: String): String =
-    rewriteCallOpt(sql, "notEmpty|empty") { (fn, args) =>
+    rewriteCalls(sql, "notEmpty|empty") { (fn, args) =>
       args match {
         case Seq(x) => Some(
           if (fn.equalsIgnoreCase("empty")) s"(length($x) = 0)"
@@ -4061,7 +4027,7 @@ object Dialect {
     * through untouched.
     */
   private[graft] def rewriteChPosition(sql: String): String =
-    rewriteCallOpt(sql, "position") { (_, args) =>
+    rewriteCalls(sql, "position") { (_, args) =>
       args match {
         case Seq(h, n) => Some(s"locate($n, $h)")
         case _ => None
@@ -4081,7 +4047,7 @@ object Dialect {
     * `year_of_week`/`yow` → EXTRACT(YEAROFWEEK) (the ISO week-year).
     */
   private[graft] def rewriteTrinoDateFns(sql: String): String = {
-    val formats = rewriteCallOnePass(sql, "date_format|date_parse") { (fn, args) =>
+    val formats = rewriteCalls(sql, "date_format|date_parse") { (fn, args) =>
       args match {
         case Seq(x, SingleLiteral(f)) =>
           // %-free formats included: every non-% character is LITERAL in
@@ -4092,24 +4058,24 @@ object Dialect {
             if (MysqlCodeRe.findFirstIn(f).isEmpty)
               throw new graft.UnsupportedError(
                 s"date_parse format '$f' has no %-codes — nothing to parse")
-            s"to_timestamp($x, '$java')"
-          } else s"date_format($x, '$java')"
+            Some(s"to_timestamp($x, '$java')")
+          } else Some(s"date_format($x, '$java')")
         case Seq(_, other) => throw new graft.UnsupportedError(
           s"$fn format must be a string literal, got: $other")
         case _ => throw new graft.UnsupportedError(s"$fn expects (expr, 'format')")
       }
     }
-    rewriteCall(formats,
+    rewriteCalls(formats,
         "day_of_week|dow|day_of_year|doy|week_of_year|week|year_of_week|yow") { (fn, args) =>
       if (args.length != 1)
         throw new graft.UnsupportedError(s"$fn expects one argument")
       val x = args(0)
-      fn.toLowerCase match {
+      Some(fn.toLowerCase match {
         case "day_of_week" | "dow" => s"(((dayofweek($x) + 5) % 7) + 1)"
         case "day_of_year" | "doy" => s"dayofyear($x)"
         case "week_of_year" | "week" => s"weekofyear($x)"
         case _ => s"EXTRACT(YEAROFWEEK FROM $x)"
-      }
+      })
     }
   }
 
@@ -4120,14 +4086,14 @@ object Dialect {
     * through).
     */
   private[graft] def rewriteMysqlDayNames(sql: String): String =
-    rewriteCall(sql, "dayname|monthname|weekday") { (fn, args) =>
+    rewriteCalls(sql, "dayname|monthname|weekday") { (fn, args) =>
       if (args.length != 1)
         throw new graft.UnsupportedError(s"$fn expects one argument")
-      fn.toLowerCase match {
+      Some(fn.toLowerCase match {
         case "dayname" => s"date_format(${args(0)}, 'EEEE')"
         case "monthname" => s"date_format(${args(0)}, 'MMMM')"
         case _ => s"((dayofweek(${args(0)}) + 5) % 7)"
-      }
+      })
     }
 
   /** Shared WITH TIES construction (r14): `SELECT items FROM body ORDER
@@ -5121,24 +5087,23 @@ object Dialect {
       }.mkString(", "))
     }
     def process(s: String, isWindowSpec: Boolean): String = {
-      var cur = s
-      // recurse into this scope's paren groups, back to front so the
-      // recorded indices stay valid through the splices
-      val spans0 = lex(cur)
-      val depth0 = depthAt(cur, spans0)
+      // recurse into this scope's paren groups, rebuilding the text in
+      // one pass
+      val spans0 = lex(s)
+      val depth0 = depthAt(s, spans0)
       val groups = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Boolean)]
       var i = 0
-      while (i < cur.length) {
-        if (cur.charAt(i) == '(' && spans0.outside(i) && depth0(i) == 0) {
-          val close = matchParen(cur, spans0, i)
+      while (i < s.length) {
+        if (s.charAt(i) == '(' && spans0.outside(i) && depth0(i) == 0) {
+          val close = matchParen(s, spans0, i)
           if (close > i) {
             var j = i - 1
-            while (j >= 0 && Character.isWhitespace(cur.charAt(j))) j -= 1
+            while (j >= 0 && Character.isWhitespace(s.charAt(j))) j -= 1
             var b = j + 1
-            while (b > 0 && (Character.isLetterOrDigit(cur.charAt(b - 1)) ||
-                cur.charAt(b - 1) == '_')) b -= 1
-            val tok = if (j < 0) "" else cur.substring(b, j + 1).toLowerCase
-            val content = cur.substring(i + 1, close)
+            while (b > 0 && (Character.isLetterOrDigit(s.charAt(b - 1)) ||
+                s.charAt(b - 1) == '_')) b -= 1
+            val tok = if (j < 0) "" else s.substring(b, j + 1).toLowerCase
+            val content = s.substring(i + 1, close)
             // `OVER (spec)`, `WINDOW w AS (spec)` (content opens with a
             // window keyword — a CTE/derived `AS (SELECT …)` recurses as
             // a statement), and `WITHIN GROUP (ORDER BY …)` (r16 second
@@ -5154,10 +5119,13 @@ object Dialect {
           } else i += 1
         } else i += 1
       }
-      groups.reverseIterator.foreach { case (o, c, w) =>
-        cur = cur.substring(0, o + 1) + process(cur.substring(o + 1, c), w) +
-          cur.substring(c)
+      val rebuilt = new java.lang.StringBuilder
+      var last = 0
+      groups.foreach { case (o, c, w) =>
+        rebuilt.append(s, last, o + 1).append(process(s.substring(o + 1, c), w))
+        last = c
       }
+      var cur = rebuilt.append(s, last, s.length).toString
       // this scope's own ORDER BY sites — found once, spliced back to
       // front (a site's start index stays valid because every earlier
       // splice happened at a later position); spans/depth are
@@ -5352,11 +5320,11 @@ object Dialect {
     * names some engines return for the same function names).
     */
   private[graft] def rewriteSnowDayMonthName(sql: String): String =
-    rewriteCall(sql, "dayname|monthname") { (fn, args) =>
+    rewriteCalls(sql, "dayname|monthname") { (fn, args) =>
       if (args.length != 1)
         throw new graft.UnsupportedError(s"$fn expects one argument")
       val pat = if (fn.equalsIgnoreCase("dayname")) "EEE" else "MMM"
-      s"date_format(${args(0)}, '$pat')"
+      Some(s"date_format(${args(0)}, '$pat')")
     }
 
   /** BigQuery `DATE_ADD/DATE_SUB/TIMESTAMP_ADD/TIMESTAMP_SUB(expr,
@@ -5365,7 +5333,7 @@ object Dialect {
     * INTERVAL is Spark's own signature and passes through untouched.
     */
   private[graft] def rewriteBqDateAddSub(sql: String): String =
-    rewriteCallOpt(sql, "date_add|date_sub|timestamp_add|timestamp_sub") { (fn, args) =>
+    rewriteCalls(sql, "date_add|date_sub|timestamp_add|timestamp_sub") { (fn, args) =>
       args match {
         case Seq(x, iv) =>
           """(?is)^INTERVAL\s+(.*\S)\s+([a-zA-Z]+)$""".r
@@ -5393,36 +5361,32 @@ object Dialect {
     * matches sequence's.
     */
   private[graft] def rewriteBqGenerateArray(sql: String): String =
-    rewriteCall(sql, "generate_array") { (fn, args) =>
+    rewriteCalls(sql, "generate_array") { (fn, args) =>
       args match {
         case Seq(a, b) =>
-          s"(CASE WHEN ($a) <= ($b) THEN sequence(($a), ($b)) " +
-            s"ELSE slice(sequence(($a), ($a)), 1, 0) END)"
+          Some(s"(CASE WHEN ($a) <= ($b) THEN sequence(($a), ($b)) " +
+            s"ELSE slice(sequence(($a), ($a)), 1, 0) END)")
         case Seq(a, b, st) =>
-          s"(CASE WHEN (($st) > 0 AND ($a) <= ($b)) OR (($st) < 0 AND ($a) >= ($b)) " +
-            s"THEN sequence(($a), ($b), ($st)) ELSE slice(sequence(($a), ($a)), 1, 0) END)"
+          Some(s"(CASE WHEN (($st) > 0 AND ($a) <= ($b)) OR (($st) < 0 AND ($a) >= ($b)) " +
+            s"THEN sequence(($a), ($b), ($st)) ELSE slice(sequence(($a), ($a)), 1, 0) END)")
         case _ => throw new graft.UnsupportedError(s"$fn expects (start, stop[, step])")
       }
     }
 
   /** BigQuery `SPLIT(value[, delimiter])` — LITERAL delimiter (comma
     * when omitted), where Spark's `split` is regex-based: the literal
-    * content is embedded in \Q…\E regex quoting. Idempotent on rescan
-    * (an already-\Q-quoted delimiter is left alone — rewriteCallOpt
-    * revisits its own replacement); a non-literal delimiter raises
-    * rather than silently regex-interpreting.
+    * content is embedded in \Q…\E regex quoting. A non-literal
+    * delimiter raises rather than silently regex-interpreting.
     */
   private[graft] def rewriteBqSplit(sql: String): String =
-    rewriteCallOpt(sql, "split") { (fn, args) =>
+    rewriteCalls(sql, "split") { (fn, args) =>
       args match {
-        case Seq(s) => Some(s"split($s, ',')")
+        case Seq(s) => Some(s"split($s, '\\\\Q,\\\\E')")
         case Seq(s, d) =>
           if (!d.matches("(?s)^'.*'$"))
             throw new graft.UnsupportedError(
               s"$fn expects a string-literal delimiter, got: $d")
-          val inner = d.substring(1, d.length - 1)
-          if (inner.startsWith("\\\\Q") && inner.endsWith("\\\\E")) None
-          else Some(s"split($s, '\\\\Q" + inner + "\\\\E')")
+          Some(s"split($s, '\\\\Q" + d.substring(1, d.length - 1) + "\\\\E')")
         case _ => None
       }
     }
@@ -6047,10 +6011,10 @@ object Dialect {
     * differently.
     */
   private[graft] def rewriteSnowTryTo(sql: String): String =
-    rewriteCall(sql,
+    rewriteCalls(sql,
       "try_to_number|try_to_decimal|try_to_numeric|try_to_double|try_to_date|try_to_boolean") { (fn, args) =>
       val f = fn.toLowerCase
-      (f, args) match {
+      Some((f, args) match {
         case ("try_to_number" | "try_to_decimal" | "try_to_numeric", Seq(x)) =>
           s"try_cast($x AS DECIMAL(38, 0))"
         case ("try_to_number" | "try_to_decimal" | "try_to_numeric", Seq(x, p, sc))
@@ -6061,7 +6025,7 @@ object Dialect {
         case ("try_to_boolean", Seq(x)) => s"try_cast($x AS BOOLEAN)"
         case _ => throw new graft.UnsupportedError(
           s"$fn with a format argument is not supported (default-format forms only)")
-      }
+      })
     }
 
   /** Postgres/DuckDB table-function `GENERATE_SERIES` in the FROM clause
@@ -6402,7 +6366,7 @@ object Dialect {
     * (documented scope, same as the bare operator).
     */
   private[graft] def rewriteTrinoTry(sql: String): String =
-    rewriteCall(sql, "try") { (_, args) =>
+    rewriteCalls(sql, "try") { (_, args) =>
       if (args.length != 1)
         throw new graft.UnsupportedError("TRY takes exactly one expression")
       val a = args.head
@@ -6433,12 +6397,12 @@ object Dialect {
         }
         if (at < 0) None else Some((a.substring(0, at).trim, a.substring(at + 1).trim))
       }
-      wholeCall("cast").map("try_cast" + _)
+      Some(wholeCall("cast").map("try_cast" + _)
         .orElse(wholeCall("element_at").map("try_element_at" + _))
         .orElse(topLevelBinary('/').map { case (l, r) => s"try_divide($l, $r)" })
         .orElse(topLevelBinary('%').map { case (l, r) => s"try_mod($l, $r)" })
         .getOrElse(throw new graft.UnsupportedError(
-          s"TRY is shimmed for CAST / element_at / single '/' or '%' only, got: TRY($a)"))
+          s"TRY is shimmed for CAST / element_at / single '/' or '%' only, got: TRY($a)")))
     }
 
   // ---- Tableau-ish helpers ------------------------------------------------
@@ -6462,12 +6426,12 @@ object Dialect {
     * CASE default exactly as Tableau specifies.
     */
   private[graft] def rewriteTableauIif(sql: String): String =
-    rewriteCall(sql, "iif") { (fn, args) =>
+    rewriteCalls(sql, "iif") { (fn, args) =>
       args match {
         case Seq(c, t, f) =>
-          s"(CASE ($c) WHEN TRUE THEN $t WHEN FALSE THEN $f END)"
+          Some(s"(CASE ($c) WHEN TRUE THEN $t WHEN FALSE THEN $f END)")
         case Seq(c, t, f, u) =>
-          s"(CASE ($c) WHEN TRUE THEN $t WHEN FALSE THEN $f ELSE $u END)"
+          Some(s"(CASE ($c) WHEN TRUE THEN $t WHEN FALSE THEN $f ELSE $u END)")
         case _ => throw new graft.UnsupportedError(
           s"$fn expects (test, then, else[, unknown])")
       }
@@ -6477,10 +6441,10 @@ object Dialect {
     * as the distinct count).
     */
   private[graft] def rewriteTableauCountd(sql: String): String =
-    rewriteCall(sql, "countd") { (fn, args) =>
+    rewriteCalls(sql, "countd") { (fn, args) =>
       if (args.length != 1)
         throw new graft.UnsupportedError(s"$fn expects a single argument")
-      s"count(DISTINCT ${args(0)})"
+      Some(s"count(DISTINCT ${args(0)})")
     }
 
   /** Tableau date-part argument — REQUIRED single-quoted literal (the
@@ -6504,13 +6468,13 @@ object Dialect {
     * `'weekday'`/`'dayofyear'` are extraction-only parts and raise.
     */
   private[graft] def rewriteTableauDateAdd(sql: String): String =
-    rewriteCall(sql, "dateadd") { (fn, args) =>
+    rewriteCalls(sql, "dateadd") { (fn, args) =>
       if (args.length != 3)
         throw new graft.UnsupportedError(s"$fn expects ('part', n, expr)")
       tableauPart(args(0), fn) match {
         case p @ ("weekday" | "dayofyear") => throw new graft.UnsupportedError(
           s"DATEADD date part '$p' is not supported")
-        case p => dateAddExpr(p, args(1), args(2))
+        case p => Some(dateAddExpr(p, args(1), args(2)))
       }
     }
 
@@ -6520,11 +6484,11 @@ object Dialect {
     * anchor the T-SQL/Redshift shims use).
     */
   private[graft] def rewriteTableauDateDiff(sql: String): String =
-    rewriteCall(sql, "datediff") { (fn, args) =>
+    rewriteCalls(sql, "datediff") { (fn, args) =>
       if (args.length != 3)
         throw new graft.UnsupportedError(s"$fn expects ('part', start, end)")
-      boundaryDateDiff(tableauPart(args(0), fn), args(1), args(2),
-        "0001-01-07", "date_diff")
+      Some(boundaryDateDiff(tableauPart(args(0), fn), args(1), args(2),
+        "0001-01-07", "date_diff"))
     }
 
   /** Tableau `DATEPART('part', expr)` → the matching Spark extraction.
@@ -6534,14 +6498,14 @@ object Dialect {
     * neither `weekofyear` (ISO) nor any other Spark builtin.
     */
   private[graft] def rewriteTableauDatePart(sql: String): String =
-    rewriteCall(sql, "datepart") { (fn, args) =>
+    rewriteCalls(sql, "datepart") { (fn, args) =>
       if (args.length != 2)
         throw new graft.UnsupportedError(s"$fn expects ('part', expr)")
       tableauPart(args(0), fn) match {
         case "week" => throw new graft.UnsupportedError(
           "DATEPART('week', …) numbering depends on the data source's week start — no Spark equivalent")
-        case "weekday" => s"dayofweek(${args(1)})"
-        case p => s"$p(${args(1)})"
+        case "weekday" => Some(s"dayofweek(${args(1)})")
+        case p => Some(s"$p(${args(1)})")
       }
     }
 
@@ -6551,7 +6515,7 @@ object Dialect {
     * `'weekday'`/`'dayofyear'` are not truncation units.
     */
   private[graft] def rewriteTableauDateTrunc(sql: String): String =
-    rewriteCall(sql, "datetrunc") { (fn, args) =>
+    rewriteCalls(sql, "datetrunc") { (fn, args) =>
       if (args.length != 2)
         throw new graft.UnsupportedError(s"$fn expects ('part', expr)")
       tableauPart(args(0), fn) match {
@@ -6559,7 +6523,7 @@ object Dialect {
           "DATETRUNC('week', …) depends on the data source's week start — no Spark equivalent")
         case p @ ("weekday" | "dayofyear") => throw new graft.UnsupportedError(
           s"DATETRUNC date part '$p' is not supported")
-        case p => s"date_trunc('${p.toUpperCase}', ${args(1)})"
+        case p => Some(s"date_trunc('${p.toUpperCase}', ${args(1)})")
       }
     }
 
@@ -6569,15 +6533,15 @@ object Dialect {
     * DATEPART value. `'week'` raises as in DATEPART.
     */
   private[graft] def rewriteTableauDateName(sql: String): String =
-    rewriteCall(sql, "datename") { (fn, args) =>
+    rewriteCalls(sql, "datename") { (fn, args) =>
       if (args.length != 2)
         throw new graft.UnsupportedError(s"$fn expects ('part', expr)")
       tableauPart(args(0), fn) match {
         case "week" => throw new graft.UnsupportedError(
           "DATENAME('week', …) numbering depends on the data source's week start — no Spark equivalent")
-        case "month" => s"date_format(${args(1)}, 'MMMM')"
-        case "weekday" => s"date_format(${args(1)}, 'EEEE')"
-        case p => s"CAST($p(${args(1)}) AS STRING)"
+        case "month" => Some(s"date_format(${args(1)}, 'MMMM')")
+        case "weekday" => Some(s"date_format(${args(1)}, 'EEEE')")
+        case p => Some(s"CAST($p(${args(1)}) AS STRING)")
       }
     }
 
@@ -6590,7 +6554,7 @@ object Dialect {
     * mode). Two-argument `split` is Spark-native and passes through.
     */
   private[graft] def rewriteTableauSplit(sql: String): String =
-    rewriteCallOpt(sql, "split") { (fn, args) =>
+    rewriteCalls(sql, "split") { (fn, args) =>
       args match {
         case Seq(s, d, n) =>
           if (!d.matches("(?s)^'.*'$"))
@@ -6619,11 +6583,9 @@ object Dialect {
     *    silently drifting.
     *  - Sub-day forms return TIMESTAMP via timestampadd (Exasol promotes
     *    a DATE input to TIMESTAMP for those too).
-    *
-    * One-pass rewrite so the emitted Spark functions are never re-scanned.
     */
   private[graft] def rewriteExasolAddUnits(sql: String): String =
-    rewriteCallOnePass(sql,
+    rewriteCalls(sql,
       "add_days|add_weeks|add_months|add_years|add_hours|add_minutes|add_seconds") { (fn, args) =>
       if (args.length != 2)
         throw new graft.UnsupportedError(s"$fn expects (datetime, count)")
@@ -6637,7 +6599,7 @@ object Dialect {
           s"THEN date_add(($x), $days) ELSE raise_error(" +
           s"'${fn.toUpperCase}: TIMESTAMP input with time-of-day is outside the " +
           "shimmed surface (Exasol preserves it; Spark date_add would truncate)') END)"
-      fn.toLowerCase match {
+      Some(fn.toLowerCase match {
         case "add_days"    => guardedDateAdd(s"CAST($n AS INT)")
         case "add_weeks"   => guardedDateAdd(s"(7 * CAST($n AS INT))")
         case "add_months"  => s"(($x) + INTERVAL '1' MONTH * CAST($n AS INT))"
@@ -6645,7 +6607,7 @@ object Dialect {
         case "add_hours"   => s"timestampadd(HOUR, CAST($n AS INT), CAST($x AS TIMESTAMP))"
         case "add_minutes" => s"timestampadd(MINUTE, CAST($n AS INT), CAST($x AS TIMESTAMP))"
         case _             => s"timestampadd(SECOND, CAST($n AS INT), CAST($x AS TIMESTAMP))"
-      }
+      })
     }
 
   /** Exasol `*_BETWEEN(a, b)` = a − b (first minus second). DAYS_BETWEEN
@@ -6655,17 +6617,17 @@ object Dialect {
     * month conventions differ — fail fast at Spark's resolver).
     */
   private[graft] def rewriteExasolBetweenUnits(sql: String): String =
-    rewriteCall(sql, "days_between|hours_between|minutes_between|seconds_between") { (fn, args) =>
+    rewriteCalls(sql, "days_between|hours_between|minutes_between|seconds_between") { (fn, args) =>
       if (args.length != 2)
         throw new graft.UnsupportedError(s"$fn expects (datetime, datetime)")
       val (a, b) = (args(0), args(1))
       val secs = s"(CAST(CAST($a AS TIMESTAMP) AS DOUBLE) - CAST(CAST($b AS TIMESTAMP) AS DOUBLE))"
-      fn.toLowerCase match {
+      Some(fn.toLowerCase match {
         case "days_between"    => s"datediff(CAST($a AS DATE), CAST($b AS DATE))"
         case "hours_between"   => s"($secs / CAST(3600 AS DOUBLE))"
         case "minutes_between" => s"($secs / CAST(60 AS DOUBLE))"
         case _                 => secs
-      }
+      })
     }
 
   /** Exasol 2-arg `TRUNC[ATE](date, 'fmt')` with Oracle format names.
@@ -6678,12 +6640,10 @@ object Dialect {
     * week start, so the safe move is to fail fast.
     */
   private[graft] def rewriteExasolTrunc(sql: String): String =
-    // one-pass: the output is itself a trunc(...) call for the
-    // DATE-grain formats — a re-scanning rewriter would loop on it
-    rewriteCallOnePass(sql, "trunc|truncate") { (fn, args) =>
+    rewriteCalls(sql, "trunc|truncate") { (fn, args) =>
       args match {
         case Seq(x, SingleLiteral(f)) =>
-          f.toUpperCase match {
+          Some(f.toUpperCase match {
             case "YYYY" | "YEAR" => s"trunc($x, 'YEAR')"
             case "Q"             => s"trunc($x, 'QUARTER')"
             case "MM" | "MONTH"  => s"trunc($x, 'MONTH')"
@@ -6692,9 +6652,9 @@ object Dialect {
             case "MI"            => s"date_trunc('MINUTE', CAST($x AS TIMESTAMP))"
             case other => throw new graft.UnsupportedError(
               s"$fn format '$other' is outside the shimmed surface")
-          }
+          })
         // 1-arg TRUNC is numeric truncation — Spark-native, pass through
-        case _ => s"$fn(${args.mkString(", ")})"
+        case _ => None
       }
     }
 
@@ -6718,11 +6678,11 @@ object Dialect {
 
   /** Druid SQL time-function family (see [[DruidIsh]] for semantics). */
   private[graft] def rewriteDruidTime(sql: String): String =
-    rewriteCallOnePass(sql,
+    rewriteCalls(sql,
       "time_floor|time_ceil|time_shift|time_extract|time_format|time_parse|" +
         "millis_to_timestamp|timestamp_to_millis") { (fn, args) =>
       def ts(x: String) = s"CAST($x AS TIMESTAMP)"
-      (fn.toLowerCase, args) match {
+      Some((fn.toLowerCase, args) match {
         case ("time_floor", Seq(x, SingleLiteral(p))) =>
           s"date_trunc('${druidUnit(p, fn)}', ${ts(x)})"
         case ("time_ceil", Seq(x, SingleLiteral(p))) =>
@@ -6761,7 +6721,7 @@ object Dialect {
         case ("timestamp_to_millis", Seq(x)) => s"unix_millis(${ts(x)})"
         case (_, got) => throw new graft.UnsupportedError(
           s"$fn: unsupported argument shape (${got.length} args)")
-      }
+      })
     }
 
   /** Druid integer `DIV(x, y)` → the DIV operator on BIGINT operands
@@ -6769,9 +6729,9 @@ object Dialect {
     * exactly Spark's `DIV`).
     */
   private[graft] def rewriteDruidDiv(sql: String): String =
-    rewriteCall(sql, "div") { (_, args) =>
+    rewriteCalls(sql, "div") { (_, args) =>
       if (args.length != 2)
         throw new graft.UnsupportedError("DIV expects (x, y)")
-      s"(CAST(${args(0)} AS BIGINT) DIV CAST(${args(1)} AS BIGINT))"
+      Some(s"(CAST(${args(0)} AS BIGINT) DIV CAST(${args(1)} AS BIGINT))")
     }
 }

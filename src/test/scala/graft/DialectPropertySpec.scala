@@ -123,15 +123,48 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // doubled backslash (valid under both ANSI and backslash-escape rules)
     val sql = (0 until 3200).map(i => s"'v$i it''s C:\\\\d'")
       .mkString("SELECT k FROM t WHERE s IN (", ", ", ") ORDER BY k")
-    for (d <- Seq(Dialect.DuckDbish, Dialect.Trinoish, Dialect.Snowflakeish,
-        Dialect.Postgresish)) {
+    def assertFast(d: Dialect, stmt: String): Unit = {
       val best = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
-        d.rewrite(null, sql)
+        d.rewrite(null, stmt)
         (System.nanoTime() - t0) / 1e6
       }.min
-      assert(best < 1000.0, s"$d took $best ms on ${sql.length} chars")
+      assert(best < 1000.0, s"$d took $best ms on ${stmt.length} chars")
     }
+    for (d <- Seq(Dialect.DuckDbish, Dialect.Trinoish, Dialect.Snowflakeish,
+        Dialect.Postgresish))
+      assertFast(d, sql)
+    // 3,200 calls of one function: a call pass lexes once, never rescans
+    // its output, and has no limit on the number of calls
+    for ((d, call) <- Seq[(Dialect, Int => String)](
+        Dialect.TsqlIsh -> (i => s"CONVERT(BIGINT, c + $i)"),
+        Dialect.Postgresish -> (_ => "TO_CHAR(d, 'YYYY-MM')"),
+        Dialect.MySqlish -> (_ => "DATE_FORMAT(d, '%Y-%m')"),
+        Dialect.DuckDbish -> (_ => "strftime(d, '%Y-%m')")))
+      assertFast(d, (0 until 3200).map(i => s"${call(i)} AS x$i")
+        .mkString("SELECT ", ", ", " FROM t"))
+  }
+
+  test("renameFunctions and renameWords apply every rename at once, longest name first") {
+    assert(Dialect.renameFunctions("a(x), b(y)", Map("a" -> "b", "b" -> "c")) ===
+      "b(x), c(y)")
+    assert(Dialect.renameWords("a x, b y", Map("A" -> "b", "b" -> "c")) === "b x, c y")
+    assert(Dialect.renameFunctions("list_value(1), LIST (x), 'list(y)'",
+      Map("list" -> "array_agg", "list_value" -> "array")) ===
+      "array(1), array_agg(x), 'list(y)'")
+  }
+
+  test("call passes rewrite nested calls of the same name inside-out") {
+    assert(Dialect.rewriteTsqlConvert("CONVERT(BIGINT, CONVERT(VARCHAR(10), x))") ===
+      "CAST(CAST(x AS STRING) AS BIGINT)")
+    assert(Dialect.rewriteOracleDecode("DECODE(DECODE(a, 1, 2), 2, 'y', 'n')") ===
+      "CASE WHEN (CASE WHEN (a) <=> (1) THEN (2) END) <=> (2) THEN ('y') ELSE ('n') END")
+    assert(Dialect.rewriteExasolTrunc("TRUNC(TRUNC(d, 'MM'), 'YYYY')") ===
+      "trunc(trunc(d, 'MONTH'), 'YEAR')")
+    assert(Dialect.rewriteMysqlDateFns("DATE_FORMAT(STR_TO_DATE(s, '%Y-%m-%d'), '%m')") ===
+      "date_format(to_date(s, 'yyyy-MM-dd'), 'MM')")
+    assert(Dialect.rewriteChArrayHof("arrayMap(x -> arrayMap(y -> y, x), a)") ===
+      "transform(a, x -> transform(x, y -> y))")
   }
 
   test("translatePgFormat: template table, literal infixes, unknown letters raise") {
@@ -598,8 +631,8 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(Dialect.rewriteBqDateAddSub("date_add(d, 5)") === "date_add(d, 5)")
     intercept[UnsupportedError](
       Dialect.rewriteBqDateAddSub("DATE_ADD(d, INTERVAL 1 FORTNIGHT)"))
-    // BigQuery SPLIT: literal delimiter \Q-embedded; idempotent on the
-    // rescan of its own replacement; default comma; non-literal raises
+    // BigQuery SPLIT: literal delimiter \Q-embedded; default comma;
+    // non-literal raises
     assert(Dialect.rewriteBqSplit("SPLIT(s, '-')") === "split(s, '\\\\Q-\\\\E')")
     assert(Dialect.rewriteBqSplit("SPLIT(s)") === "split(s, '\\\\Q,\\\\E')")
     intercept[UnsupportedError](Dialect.rewriteBqSplit("SPLIT(s, d)"))

@@ -972,4 +972,34 @@ class EngineSpec extends SparkSpec {
     assert(r.schema.map(_.dataType.simpleString) === Seq.fill(5)("string"))
     assert(r.collect().head.toSeq === Seq("6", "6", "6", "6", "t_13"))
   }
+
+  // ---- the call rewriter ----------------------------------------------
+
+  test("mysql and tableau: a double-quoted string with an escaped quote hides no call after it") {
+    import spark.implicits._
+    val orders = Seq((1L, java.sql.Date.valueOf("1996-01-02")),
+      (2L, java.sql.Date.valueOf("1997-11-30"))).toDF("o_orderkey", "o_orderdate")
+    def rows(sql: String, d: Dialect) =
+      Engine.execute(spark, sql, Map("orders" -> orders), d).collect().toSeq
+    val twin = rows("SELECT 'say \"hi\"' AS s, '\"' AS q, " +
+      "date_format(o_orderdate, 'yyyy-MM') AS ym FROM orders ORDER BY o_orderkey", Dialect.Spark)
+    assert(twin.map(_.getString(2)) === Seq("1996-01", "1997-11"))
+    assert(rows("""SELECT "say \"hi\"" AS s, "\"" AS q, """ +
+      "DATE_FORMAT(o_orderdate, '%Y-%m') AS ym FROM orders ORDER BY o_orderkey",
+      Dialect.MySqlish) === twin)
+    val tableau = rows("""SELECT "a\"b" AS s, MID('xyz', 2, 1) AS m FROM orders""",
+      Dialect.TableauIsh)
+    assert(tableau === rows("""SELECT 'a"b' AS s, substring('xyz', 2, 1) AS m FROM orders""",
+      Dialect.Spark))
+  }
+
+  test("tsql: 300 CONVERTs run and equal their CAST twin") {
+    def sql(f: Int => String) = (0 until 300).map(i => s"${f(i)} AS x$i")
+      .mkString("SELECT ", ", ", " FROM t1 ORDER BY a")
+    val got = Engine.execute(spark, sql(i => s"CONVERT(BIGINT, c + $i)"),
+      Map("t1" -> t1), Dialect.TsqlIsh)
+    val twin = Engine.execute(spark, sql(i => s"CAST(c + $i AS BIGINT)"), Map("t1" -> t1))
+    assert(got.schema === twin.schema)
+    assert(got.collect().toSeq === twin.collect().toSeq)
+  }
 }
