@@ -18,7 +18,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale note: nothing here materializes data on the driver. `execute`
   * returns a lazy DataFrame; the plan Catalyst builds is exactly the plan a
-  * 1000-executor cluster would run. Table registration is metadata-only.
+  * 1000-executor cluster would run. Table registration reads each table's
+  * parquet footer once, in one schema-inference job per table.
   */
 object Engine {
 

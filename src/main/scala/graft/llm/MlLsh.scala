@@ -87,8 +87,8 @@ object MlLsh {
     // r19 shape broadcast it unconditionally, which is fast while it
     // fits but hard-fails (8 GB broadcast cap / driver OOM) on corpora
     // past the bench scale. Size-gate it on the EXACT exploded row
-    // count (the caller counts its input once — a cheap metadata-level
-    // count next to the join itself):
+    // count (the caller counts its input once — one extra pass over the
+    // input, a full one when the input is computed):
     //  - under the cap: broadcast build + round-robin spread of the
     //    probe side, so few-and-giant LSH buckets (BRP over clustered
     //    embeddings collapses to a handful) still emit their share of
@@ -133,8 +133,8 @@ object MlLsh {
     */
   def minHashPairsMl(docs: DataFrame, maxJaccardDistance: Double = 0.3,
       numHashTables: Int = 4): DataFrame = {
-    // one cheap input count feeds the candidate-join size gate (metadata
-    // count on a parquet-backed frame; negligible next to the join)
+    // one input count feeds the candidate-join size gate (a full pass
+    // when `docs` is computed; small next to the join)
     val nDocs = docs.count()
     val vec = shingleVectors(docs)
     val model = new MinHashLSH()
@@ -178,7 +178,8 @@ object MlLsh {
     */
   def embeddingPairsMl(embeddings: DataFrame, maxL2: Double,
       bucketLength: Double = 0.5, numHashTables: Int = 4): DataFrame = {
-    // one cheap input count feeds the candidate-join size gate
+    // one input count feeds the candidate-join size gate (a full pass
+    // when `embeddings` is computed)
     val nVecs = embeddings.count()
     // spark.ml ships this conversion (array_to_vector) — null-safe, no
     // hand-rolled closure UDF that would NPE on a NULL embedding row

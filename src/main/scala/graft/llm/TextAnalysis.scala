@@ -770,9 +770,11 @@ object TextAnalysis {
     // aggregation, orders of magnitude under the corpus the session
     // conf is sized for (measured: the 8-round learn spent 49 jobs on
     // 56 tasks — pure scheduling). The corpus collapse above already
-    // ran at session width; only the rounds are scoped.
-    val vocabN = words.count() // materialized by mat(words); metadata-cheap
-    graft.ops.Tuning.withLoopParallelism(docs.sparkSession, vocabN) {
+    // ran at session width; only the rounds are scoped. The count is a
+    // pass over the materialized vocab, taken only when the session is
+    // wider than the loop floor.
+    graft.ops.Tuning.withLoopParallelism(docs.sparkSession,
+      graft.ops.Tuning.rowCount(words)) {
       for (r <- 1 to rounds) {
         // 1-row deterministic frame; materializing keeps round r+1's plan
         // from re-nesting every earlier round's aggregation

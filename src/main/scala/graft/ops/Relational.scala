@@ -579,12 +579,12 @@ object Relational {
       // materialize before the loop reuses it on several join sides; the
       // counts also size the loop's scoped shuffle width (r20, guide
       // §2.2: per-round shuffles must track the working set — label,
-      // edge and node-universe rows — not the session conf; see Tuning)
+      // edge and node-universe rows — not the session conf; see Tuning).
+      // The edge and node counts are taken only when the session is wider
+      // than the loop floor; `und` is materialized by this first count.
       val activeN = cached.count()
-      val edgeN = und.count() // persisted above; materialized by the line before
-      val nodeN = nodeIds.count() // the restore join below is sized by this
       Tuning.withLoopParallelism(edges.sparkSession,
-        math.max(math.max(activeN, edgeN), nodeN)) {
+        Seq(activeN, Tuning.rowCount(und), Tuning.rowCount(nodeIds)).max) {
       var labels = org.apache.spark.sql.GraftBridge.flattenPlan(cached)
       var round = 0
       var converged = false
@@ -687,16 +687,17 @@ object Relational {
         // One scalar action: the node count fixes the uniform start mass.
         val nodeN = nodes.count()
         val base = scale / nodeN
-        // edge count sizes the scoped per-round shuffle width (r20, guide
-        // §2.2 — see Tuning): each round is one edges⋈ranks shuffle plus
-        // one dst aggregation, so the width must track edges, not conf
-        val edgeN = e.count() // persisted; materialized by edeg/nodes above
         // `cached` is the persisted handle (the one that can unpersist);
         // `ranks` is its plan-flattened view — see GraftBridge.flattenPlan
         // on why both are needed.
         var cached = nodes.select(col("node"), lit(base).as("rank_ppb")).persist()
         try {
-          Tuning.withLoopParallelism(edges.sparkSession, math.max(nodeN, edgeN)) {
+          // the edge count sizes the scoped per-round shuffle width (r20,
+          // guide §2.2 — see Tuning): each round is one edges⋈ranks
+          // shuffle plus one dst aggregation, so the width must track
+          // edges, not conf. `e` is materialized by the node count above.
+          Tuning.withLoopParallelism(edges.sparkSession,
+            math.max(nodeN, Tuning.rowCount(e))) {
           cached.count()
           var ranks = org.apache.spark.sql.GraftBridge.flattenPlan(cached)
           for (_ <- 1 to iterations) {
@@ -1244,12 +1245,13 @@ object Relational {
     require(buckets > 0, "buckets must be positive")
     import org.apache.spark.sql.expressions.Window
     requireNoWorkingCols(df, "globalNtile", bucketCol, "__pid", "__rank", "__off", "__ntot")
-    // range width from a measured row count (metadata-cheap on
-    // scan-backed frames), not the session constant: a bench-scale input
-    // range-partitions into a handful of real partitions instead of a
-    // session-width wave of micro-partitions; corpus-scale inputs hit
-    // the session cap (see Tuning.loopPartitions).
-    val parts = Tuning.loopPartitions(df.count(),
+    // range width from a measured row count, not the session constant: a
+    // bench-scale input range-partitions into a handful of real
+    // partitions instead of a session-width wave of micro-partitions;
+    // corpus-scale inputs hit the session cap (see Tuning.loopPartitions).
+    // The count is a full pass over a computed input, taken only when the
+    // session is wider than the loop floor.
+    val parts = Tuning.loopPartitions(Tuning.rowCount(df),
       df.sparkSession.sessionState.conf.numShufflePartitions)
     val ranged = df.repartitionByRange(parts, order: _*)
       .withColumn("__pid", spark_partition_id())
@@ -1324,11 +1326,12 @@ object Relational {
     // INPUT bytes of the checkpointed set (a LogicalRDD with no stats),
     // so at bench scale the whole pair explosion ran in 1-2 tasks.
     // Repartition both sides by group at a width derived from the
-    // measured row count (the count is metadata-cheap on the checkpoint;
-    // an explicit width is exempt from AQE re-coalescing): the join
-    // reuses the single exchange on both sides and the explosion spreads
-    // across the derived width at any scale.
-    val parts = Tuning.loopPartitions(items.count(),
+    // measured row count (a pass over the checkpoint, taken only when the
+    // session is wider than the loop floor; an explicit width is exempt
+    // from AQE re-coalescing): the join reuses the single exchange on
+    // both sides and the explosion spreads across the derived width at
+    // any scale.
+    val parts = Tuning.loopPartitions(Tuning.rowCount(items),
       df.sparkSession.sessionState.conf.numShufflePartitions)
     val itemsByG = items.repartition(parts, col("__g"))
     itemsByG.as("a").join(itemsByG.as("b"),

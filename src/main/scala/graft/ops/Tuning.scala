@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Scoped parallelism tuning for the iterative operators (r20).
   *
@@ -61,14 +61,33 @@ object Tuning {
     withSqlConf(spark,
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")(body)
 
+  /** The narrowest loop width [[loopPartitions]] derives. */
+  private val MinLoopPartitions = 4
+
   /** Data-proportional shuffle width for loop-internal frames: one
-    * partition per ~100k rows, floored at 4 (tiny frames keep a little
-    * parallelism for compute-dense per-row work — measured: width 1
-    * costs the BPE pair aggregation 40%), capped at the session width
-    * so corpus-scale loops keep the configured parallelism.
+    * partition per ~100k rows, floored at [[MinLoopPartitions]] (tiny
+    * frames keep a little parallelism for compute-dense per-row work —
+    * measured: width 1 costs the BPE pair aggregation 40%), capped at the
+    * session width so corpus-scale loops keep the configured parallelism.
+    * `rows` is by name: a session at or under the floor gets the floor
+    * whatever the count, so the count is not taken.
     */
-  def loopPartitions(rows: Long, sessionParts: Int): Int =
-    math.max(4L, math.min(sessionParts.toLong, rows / 100000L + 1L)).toInt
+  def loopPartitions(rows: => Long, sessionParts: Int): Int =
+    if (sessionParts <= MinLoopPartitions) MinLoopPartitions
+    else math.max(MinLoopPartitions.toLong,
+      math.min(sessionParts.toLong, rows / 100000L + 1L)).toInt
+
+  /** Rows in `df`, for sizing a width: read from the statistics of its
+    * cache when `df` is persisted and that cache is fully materialized (no
+    * job), else a `count()` — a full pass over a computed input.
+    */
+  def rowCount(df: DataFrame): Long = {
+    val cdf = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    cdf.sparkSession.sharedState.cacheManager.lookupCachedData(cdf)
+      .map(_.cachedRepresentation.cacheBuilder)
+      .filter(_.isCachedColumnBuffersLoaded)
+      .fold(df.count())(_.rowCountStats.value.longValue)
+  }
 
   /** Run `body` with `spark.sql.shuffle.partitions` scoped to
     * [[loopPartitions]]`(rows)`, restoring the session value even on
@@ -76,9 +95,10 @@ object Tuning {
     * runs — including frames it materializes — plans its exchanges at
     * the scoped width; frames RETURNED lazily plan at the caller's
     * width as before. No-op when the derived width is not below the
-    * session conf (large inputs at scale).
+    * session conf (large inputs at scale, or a session at or under the
+    * floor, where `rows` is never evaluated).
     */
-  def withLoopParallelism[A](spark: SparkSession, rows: Long)(body: => A): A = {
+  def withLoopParallelism[A](spark: SparkSession, rows: => Long)(body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val sess = spark.sessionState.conf.numShufflePartitions
     val p = loopPartitions(rows, sess)

@@ -33,8 +33,8 @@ object Streams {
   /** Open an events directory as an unbounded stream (file source — each
     * parquet file dropped into `eventsDir` becomes micro-batch input; the
     * source requires a DIRECTORY, not a single file). A one-time batch
-    * footer probe (metadata-only) discovers the physical `ts` type; the
-    * stream then normalizes it exactly like the batch path
+    * footer probe (one schema-inference job) discovers the physical `ts`
+    * type; the stream then normalizes it exactly like the batch path
     * ([[graft.Tables.normalizeEventTs]]), so stream≡batch comparisons hold
     * across generator versions.
     */

@@ -54,6 +54,42 @@ class RegistrationSpec extends SparkSpec {
     assert(evQ.fn(spark, dir).count() > 0, s"stream ${evQ.name}")
   }
 
+  test("concurrent register gives the views loading each table alone gives") {
+    initLog()
+    val registered = spark.newSession()
+    Tables.register(registered, dir)
+    val alone = spark.newSession() // never registered: every load infers
+    Tables.all.foreach { n =>
+      val want = Tables.load(alone, dir, n)
+      assert(registered.table(n).schema == want.schema, s"view '$n' schema")
+      assert(Tables.load(registered, dir, n).schema == want.schema, s"load '$n' schema")
+      assert(registered.table(n).count() == want.count(), s"view '$n' rows")
+    }
+  }
+
+  test("every registration job runs under the caller's job group") {
+    initLog()
+    val (_, jobs) = jobsUnderGroup(Tables.register(spark.newSession(), dir))
+    // one schema-inference job per table, none of them lost to a pool
+    // thread without the caller's local properties
+    assert(jobs == Tables.all.size)
+  }
+
+  test("load after register runs no job for that directory, and reads any other") {
+    initLog()
+    val s = spark.newSession()
+    Tables.register(s, dir)
+    val (schemas, jobs) = jobsUnderGroup(Tables.all.map(n => Tables.load(s, dir, n).schema))
+    assert(jobs == 0, "loads of the registered directory must reuse its schemas")
+    assert(schemas.forall(_.nonEmpty))
+    val other = java.nio.file.Files.createTempDirectory("graft_load").toString
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/nation.parquet"),
+      java.nio.file.Paths.get(s"$other/nation.parquet"))
+    val (n, otherJobs) = jobsUnderGroup(Tables.load(s, other, "nation").schema)
+    assert(otherJobs > 0, "another directory must be read, not served from the cache")
+    assert(n == schemas(Tables.all.indexOf("nation")))
+  }
+
   test("register survives one broken table and still serves the other nine") {
     initLog()
     // stage a layout where exactly one table is unreadable garbage
