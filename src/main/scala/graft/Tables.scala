@@ -29,7 +29,10 @@ object Tables {
     * complete [[register]], the read reuses the schema registration
     * inferred (no Spark job); any other directory is read fresh. Each call
     * returns a new frame, so two loads of one table self-join like two
-    * reads.
+    * reads. A NANOS `events.ts` registered as long still scans after the
+    * session drops `nanosAsLong`: inference rejects that footer without
+    * the flag, a scan given the long schema does not (either Parquet
+    * reader), so the reuse path neither needs nor sets it.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val known = Option(registered.get(spark)).filter(_.dir == dir).flatMap(_.schemas.get(name))

@@ -773,8 +773,7 @@ object TextAnalysis {
     // ran at session width; only the rounds are scoped. The count is a
     // pass over the materialized vocab, taken only when the session is
     // wider than the loop floor.
-    graft.ops.Tuning.withLoopParallelism(docs.sparkSession,
-      graft.ops.Tuning.rowCount(words)) {
+    graft.ops.Tuning.withLoopParallelism(docs.sparkSession, words.count()) {
       for (r <- 1 to rounds) {
         // 1-row deterministic frame; materializing keeps round r+1's plan
         // from re-nesting every earlier round's aggregation

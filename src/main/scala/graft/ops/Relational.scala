@@ -584,7 +584,7 @@ object Relational {
       // than the loop floor; `und` is materialized by this first count.
       val activeN = cached.count()
       Tuning.withLoopParallelism(edges.sparkSession,
-        Seq(activeN, Tuning.rowCount(und), Tuning.rowCount(nodeIds)).max) {
+        Seq(activeN, und.count(), nodeIds.count()).max) {
       var labels = org.apache.spark.sql.GraftBridge.flattenPlan(cached)
       var round = 0
       var converged = false
@@ -697,7 +697,7 @@ object Relational {
           // shuffle plus one dst aggregation, so the width must track
           // edges, not conf. `e` is materialized by the node count above.
           Tuning.withLoopParallelism(edges.sparkSession,
-            math.max(nodeN, Tuning.rowCount(e))) {
+            math.max(nodeN, e.count())) {
           cached.count()
           var ranks = org.apache.spark.sql.GraftBridge.flattenPlan(cached)
           for (_ <- 1 to iterations) {
@@ -1251,7 +1251,7 @@ object Relational {
     // corpus-scale inputs hit the session cap (see Tuning.loopPartitions).
     // The count is a full pass over a computed input, taken only when the
     // session is wider than the loop floor.
-    val parts = Tuning.loopPartitions(Tuning.rowCount(df),
+    val parts = Tuning.loopPartitions(df.count(),
       df.sparkSession.sessionState.conf.numShufflePartitions)
     val ranged = df.repartitionByRange(parts, order: _*)
       .withColumn("__pid", spark_partition_id())
@@ -1331,7 +1331,7 @@ object Relational {
     // from AQE re-coalescing): the join reuses the single exchange on
     // both sides and the explosion spreads across the derived width at
     // any scale.
-    val parts = Tuning.loopPartitions(Tuning.rowCount(items),
+    val parts = Tuning.loopPartitions(items.count(),
       df.sparkSession.sessionState.conf.numShufflePartitions)
     val itemsByG = items.repartition(parts, col("__g"))
     itemsByG.as("a").join(itemsByG.as("b"),

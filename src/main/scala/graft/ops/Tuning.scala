@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Scoped parallelism tuning for the iterative operators (r20).
   *
@@ -76,18 +76,6 @@ object Tuning {
     if (sessionParts <= MinLoopPartitions) MinLoopPartitions
     else math.max(MinLoopPartitions.toLong,
       math.min(sessionParts.toLong, rows / 100000L + 1L)).toInt
-
-  /** Rows in `df`, for sizing a width: read from the statistics of its
-    * cache when `df` is persisted and that cache is fully materialized (no
-    * job), else a `count()` — a full pass over a computed input.
-    */
-  def rowCount(df: DataFrame): Long = {
-    val cdf = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-    cdf.sparkSession.sharedState.cacheManager.lookupCachedData(cdf)
-      .map(_.cachedRepresentation.cacheBuilder)
-      .filter(_.isCachedColumnBuffersLoaded)
-      .fold(df.count())(_.rowCountStats.value.longValue)
-  }
 
   /** Run `body` with `spark.sql.shuffle.partitions` scoped to
     * [[loopPartitions]]`(rows)`, restoring the session value even on

@@ -90,6 +90,41 @@ class RegistrationSpec extends SparkSpec {
     assert(n == schemas(Tables.all.indexOf("nation")))
   }
 
+  test("a NANOS events footer still loads after the session drops nanosAsLong") {
+    initLog()
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val d = java.nio.file.Files.createTempDirectory("graft_nanos").toString
+    Tables.all.filter(_ != "events").foreach { n =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/$n.parquet"),
+        java.nio.file.Paths.get(s"$d/$n.parquet"))
+    }
+    // Spark never writes TIMESTAMP(NANOS), so parquet-mr writes the footer
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter.builder(
+        new org.apache.hadoop.fs.Path(s"$d/events.parquet")).withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("ts", 2500L))
+    finally w.close()
+    val s = spark.newSession()
+    Tables.register(s, d)
+    // registration's probe set the flag; a session that later drops it
+    // still scans the long `ts` the registered schema declares, with
+    // either reader, and the load itself writes no conf
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    assert(s.conf.get(key) == "true", "the NANOS footer must take the flagged read")
+    s.conf.unset(key)
+    Seq("true", "false").foreach { vectorized =>
+      s.conf.set("spark.sql.parquet.enableVectorizedReader", vectorized)
+      val (ev, jobs) = jobsUnderGroup(Tables.load(s, d, "events"))
+      assert(jobs == 0, "the registered schema must be reused")
+      val got = ev.select(unix_micros(col("ts"))).collect().map(_.getLong(0))
+      assert(got.toSeq == Seq(2L), s"vectorized=$vectorized")
+      assert(s.conf.get(key) == "false")
+    }
+  }
+
   test("register survives one broken table and still serves the other nine") {
     initLog()
     // stage a layout where exactly one table is unreadable garbage

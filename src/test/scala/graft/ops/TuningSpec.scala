@@ -31,21 +31,9 @@ class TuningSpec extends SparkSpec {
     val df = s.range(10).toDF()
     var evaluated = false
     val width = Tuning.withLoopParallelism(s,
-      { evaluated = true; Tuning.rowCount(df) })(s.conf.get(key))
+      { evaluated = true; df.count() })(s.conf.get(key))
     assert(evaluated)
     assert(width == "4")
     assert(s.conf.get(key) == "16")
-  }
-
-  test("rowCount reads a materialized cache's statistics and counts anything else") {
-    initLog()
-    val df = spark.range(10).toDF().persist()
-    try {
-      assert(Tuning.rowCount(spark.range(7).toDF()) == 7L)
-      assert(Tuning.rowCount(df) == 10L) // not materialized yet: counts, which materializes it
-      val (n, jobs) = jobsUnderGroup(Tuning.rowCount(df))
-      assert(n == 10L)
-      assert(jobs == 0, "a materialized cache's count must come from its statistics")
-    } finally df.unpersist()
   }
 }
