@@ -70,9 +70,11 @@ import org.apache.spark.sql.types.StructType
   * Tableau turn `"…"` strings into `'…'` literals. The other dialects
   * already escape with backslashes as Spark does, so every later pass
   * lexes Spark's literal syntax and needs no per-dialect flag. The
-  * function-call passes share one rewriter ([[Dialect.rewriteCalls]]),
-  * which lexes once, rewrites a call's arguments before the call and
-  * never rescans its output, so each pass is linear in the SQL's length.
+  * function-call passes and the clause passes (FILTER, UNNEST, ARRAY
+  * JOIN, subscripts, `**`, …) share one site rewriter
+  * ([[Dialect.rewriteSites]]), which lexes once, rewrites a site's inner
+  * parts before the site and never rescans its output, so each of those
+  * passes is linear in the SQL's length.
   */
 sealed trait Dialect {
   def rewrite(spark: SparkSession, sql: String,
@@ -1094,15 +1096,18 @@ object Dialect {
     }
   }
 
-  /** Find the `)` matching the `(` at `open`, skipping the lexer's spans. */
+  /** Find the `)` matching the `(` at `open` (the `]` matching a `[`),
+    * skipping the lexer's spans; -1 when unbalanced.
+    */
   private def matchParen(sql: String, spans: Spans, open: Int): Int = {
+    val (openC, closeC) = if (sql.charAt(open) == '[') ('[', ']') else ('(', ')')
     var depth = 0
     var i = open
     while (i < sql.length) {
       if (spans.outside(i)) {
         val c = sql.charAt(i)
-        if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth == 0) return i }
+        if (c == openC) depth += 1
+        else if (c == closeC) { depth -= 1; if (depth == 0) return i }
       }
       i += 1
     }
@@ -1354,108 +1359,79 @@ object Dialect {
     * accepted), an identifier chain (`a.b.c`, possibly a call `f(…)`),
     * a quoted identifier, or a parenthesized group. Paren matching skips
     * string-literal spans, so a `'('` inside an argument never
-    * mis-groups; any whitespace (newline/tab) separates operands.
-    * Leftmost-first repetition makes `a ** b ** c` left-associative
+    * mis-groups; any whitespace (newline/tab) separates operands. A
+    * chain `a ** b ** c` is one site whose operands fold left
     * (`power(power(a, b), c)`), matching Teradata's left-to-right
     * evaluation. An operand this scanner cannot bound — including a
     * left operand that is the tail of a scientific-notation number —
     * raises rather than silently mis-grouping.
     */
-  private[graft] def rewriteTeradataPower(sql: String): String = {
-    var cur = sql
-    var changed = true
-    while (changed) {
-      changed = false
-      val spans = lex(cur)
-      val idx = "\\*\\*".r.findAllMatchIn(cur)
-        .find(m => spans.at(m.start).isEmpty).map(_.start)
-      idx.foreach { at =>
-        def isIdent(c: Char) = c.isLetterOrDigit || c == '_' || c == '.'
-        def raise(side: String): Nothing = throw new graft.UnsupportedError(
-          s"cannot bound the $side operand of ** in: $cur")
-        // index just after the ')' matching the '(' group ENDING at
-        // `close` (exclusive end given); literal spans skipped wholesale
-        def groupStart(closeExclusive: Int): Int = {
-          var i = closeExclusive - 1
-          var depth = 0
-          while (i >= 0) {
-            spans.at(i) match {
-              case Some(sp) => i = sp.start - 1
-              case None =>
-                val c = cur.charAt(i)
-                if (c == ')') depth += 1
-                else if (c == '(') { depth -= 1; if (depth == 0) return i }
-                i -= 1
-            }
-          }
-          raise("left")
-        }
-        // index just after the ')' matching the '(' AT `open`
-        def groupEnd(open: Int): Int = {
-          var i = open
-          var depth = 0
-          while (i < cur.length) {
-            spans.at(i) match {
-              case Some(sp) => i = sp.end
-              case None =>
-                val c = cur.charAt(i)
-                if (c == '(') depth += 1
-                else if (c == ')') { depth -= 1; if (depth == 0) return i + 1 }
-                i += 1
-            }
-          }
-          raise("right")
-        }
+  private[graft] def rewriteTeradataPower(sql: String): String =
+    rewriteSites(sql) { spans =>
+      def isIdent(c: Char) = c.isLetterOrDigit || c == '_' || c == '.'
+      def raise(side: String): Nothing = throw new graft.UnsupportedError(
+        s"cannot bound the $side operand of ** in: $sql")
+      val numRe = "^[-+]?\\s*\\d+(\\.\\d+)?([eE][-+]?\\d+)?".r
+      // one chain of operands per site: `a ** b ** c` folds left
+      val chains = scala.collection.mutable.ArrayBuffer.empty[Vector[(Int, Int)]]
+      "\\*\\*".r.findAllMatchIn(sql).filter(m => spans.outside(m.start)).foreach { m =>
+        val at = m.start
         // ---- left operand: [s, e) ----
         var e = at
-        while (e > 0 && cur.charAt(e - 1).isWhitespace) e -= 1
-        var s = e
-        if (s > 0 && spans.at(s - 1).isDefined) {
-          s = spans.at(s - 1).get.start // quoted identifier operand
-        } else if (s > 0 && cur.charAt(s - 1) == ')') {
-          s = groupStart(s)
-          while (s > 0 && isIdent(cur.charAt(s - 1))) s -= 1 // call name
-        } else {
-          while (s > 0 && isIdent(cur.charAt(s - 1))) s -= 1
-          // `1e-3 ** 2` would otherwise bound the left operand at `3`
-          if (s >= 3 && (cur.charAt(s - 1) == '-' || cur.charAt(s - 1) == '+') &&
-              (cur.charAt(s - 2) | 0x20) == 'e' && cur.charAt(s - 3).isDigit)
-            raise("left")
+        while (e > 0 && sql.charAt(e - 1).isWhitespace) e -= 1
+        val chained = chains.nonEmpty && chains.last.last._2 == e
+        if (!chained) {
+          var s = e
+          if (s > 0 && spans.at(s - 1).isDefined) {
+            s = spans.at(s - 1).get.start // quoted identifier operand
+          } else if (s > 0 && sql.charAt(s - 1) == ')') {
+            s = backwardMatch(sql, spans, s - 1)
+            if (s < 0) raise("left")
+            while (s > 0 && isIdent(sql.charAt(s - 1))) s -= 1 // call name
+          } else {
+            while (s > 0 && isIdent(sql.charAt(s - 1))) s -= 1
+            // `1e-3 ** 2` would otherwise bound the left operand at `3`
+            if (s >= 3 && (sql.charAt(s - 1) == '-' || sql.charAt(s - 1) == '+') &&
+                (sql.charAt(s - 2) | 0x20) == 'e' && sql.charAt(s - 3).isDigit)
+              raise("left")
+          }
+          if (s == e) raise("left")
+          chains += Vector((s, e))
         }
-        if (s == e) raise("left")
         // ---- right operand: [rs, re) ----
         var rs = at + 2
-        while (rs < cur.length && cur.charAt(rs).isWhitespace) rs += 1
-        val numM = "^[-+]?\\s*\\d+(\\.\\d+)?([eE][-+]?\\d+)?"
-          .r.findFirstMatchIn(cur.substring(rs)).filter(_.end > 0)
+        while (rs < sql.length && sql.charAt(rs).isWhitespace) rs += 1
         var re = rs
-        if (numM.isDefined) {
-          re = rs + numM.get.end
-        } else {
-          if (re < cur.length && (cur.charAt(re) == '-' || cur.charAt(re) == '+')) {
-            re += 1
-            while (re < cur.length && cur.charAt(re).isWhitespace) re += 1
-          }
-          if (re < cur.length && spans.at(re).isDefined) {
-            re = spans.at(re).get.end // quoted identifier operand
-          } else if (re < cur.length && cur.charAt(re) == '(') {
-            re = groupEnd(re)
-          } else {
-            val r0 = re
-            while (re < cur.length && isIdent(cur.charAt(re))) re += 1
-            if (re == r0) raise("right")
-            if (re < cur.length && cur.charAt(re) == '(') re = groupEnd(re)
-          }
+        prefixMatch(numRe, sql, rs) match {
+          case Some(nm) => re = rs + nm.end
+          case None =>
+            if (re < sql.length && (sql.charAt(re) == '-' || sql.charAt(re) == '+')) {
+              re += 1
+              while (re < sql.length && sql.charAt(re).isWhitespace) re += 1
+            }
+            def groupEnd(open: Int): Int = {
+              val close = matchParen(sql, spans, open)
+              if (close < 0) raise("right") else close + 1
+            }
+            if (re < sql.length && spans.at(re).isDefined) {
+              re = spans.at(re).get.end // quoted identifier operand
+            } else if (re < sql.length && sql.charAt(re) == '(') {
+              re = groupEnd(re)
+            } else {
+              val r0 = re
+              while (re < sql.length && isIdent(sql.charAt(re))) re += 1
+              if (re == r0) raise("right")
+              if (re < sql.length && sql.charAt(re) == '(') re = groupEnd(re)
+            }
         }
         if (re == rs) raise("right")
-        cur = cur.substring(0, s) +
-          s"power(${cur.substring(s, e)}, ${cur.substring(rs, re)})" +
-          cur.substring(re)
-        changed = true
+        chains(chains.length - 1) = chains.last :+ ((rs, re))
+      }
+      chains.iterator.map { ops =>
+        new Site(ops.head._1, ops.last._2, ops,
+          xs => Some(xs.tail.foldLeft(xs.head)((l, r) => s"power($l, $r)")))
       }
     }
-    cur
-  }
 
   /** `ZEROIFNULL(x)` → `coalesce(x, 0)`; `NULLIFZERO(x)` → `nullif(x, 0)`
     * (argument-count checked — both are strictly unary in Teradata).
@@ -1468,54 +1444,115 @@ object Dialect {
         else s"nullif(${args(0)}, 0)")
     }
 
-  // ---- the call rewriter -------------------------------------------------
+  // ---- the site rewriter -------------------------------------------------
 
-  /** Rewrite every `name(args…)` call outside the lexer's spans, `names`
-    * being a regex alternation of function names. Inside-out, in one pass
-    * over text lexed once: a call's arguments are rewritten first (by
-    * recursing over their ranges of the same text), then `transform(name,
-    * args)` gives the call's replacement, or None to keep the call with
-    * its rewritten arguments. Every call is rewritten exactly once and the
-    * output is never rescanned, so a transform may emit a call of a name
-    * it matches.
+  /** One place a pass rewrites: the source range `[start, end)` and its
+    * holes, the inner ranges (sorted, disjoint, inside the site) whose
+    * rewritten text `build` receives. `build` gives the site's
+    * replacement, or None to keep its text with the holes rewritten.
     */
-  private def rewriteCalls(sql: String, names: String)(
-      transform: (String, Seq[String]) => Option[String]): String = {
-    val spans = lex(sql)
-    val calls = ("(?i)\\b(" + names + ")\\s*\\(").r.findAllMatchIn(sql)
-      .filter(m => spans.outside(m.start)).toVector
+  private final class Site(val start: Int, val end: Int,
+      val holes: Seq[(Int, Int)], val build: Seq[String] => Option[String])
+
+  /** Rewrite the sites `sitesOf` finds in `sql`, lexed once. Inside-out,
+    * in one pass: a site's holes are rewritten first (by recursing over
+    * their ranges of the same text), then the site itself. Every site is
+    * rewritten exactly once and the output is never rescanned, so a
+    * `build` may emit text its pass would match. A site found inside
+    * another but in none of its holes is part of the text that site's
+    * `build` replaces; sites that cross raise.
+    */
+  private def rewriteSites(sql: String)(sitesOf: Spans => Iterator[Site]): String = {
+    val sites = sitesOf(lex(sql)).toVector.sortBy(st => (st.start, -st.end))
     val out = new java.lang.StringBuilder
     var next = 0
-    // appends sql[from, to) to `out`, rewriting the calls that start in it
+    // appends sql[from, to) to `out`, rewriting the sites that start in it
     def emit(from: Int, to: Int): Unit = {
       var last = from
-      while (next < calls.length && calls(next).start < to) {
-        val m = calls(next)
+      while (next < sites.length && sites(next).start < to) {
+        val st = sites(next)
         next += 1
-        val open = m.end - 1 // the regex consumed through '('
-        val close = matchParen(sql, spans, open)
-        if (close < 0 || close >= to)
-          throw new graft.UnsupportedError(s"unbalanced ${m.group(1)}( in: $sql")
-        out.append(sql, last, m.start)
-        val callStart = out.length
-        out.append(sql, m.start, open + 1)
-        val args = argRanges(sql, spans, open + 1, close).map { case (a, b) =>
-          if (a > open + 1) out.append(',')
-          val argStart = out.length
-          emit(a, b)
-          out.substring(argStart).trim
+        if (st.end > to || (st.start < last && st.end > last))
+          throw new graft.UnsupportedError(s"overlapping rewrite sites in: $sql")
+        if (st.start >= last) {
+          out.append(sql, last, st.start)
+          val siteStart = out.length
+          var pos = st.start
+          val holes = st.holes.map { case (a, b) =>
+            out.append(sql, pos, a)
+            val holeStart = out.length
+            emit(a, b)
+            pos = b
+            out.substring(holeStart)
+          }
+          out.append(sql, pos, st.end)
+          st.build(holes).foreach { t =>
+            out.setLength(siteStart)
+            out.append(t)
+          }
+          last = st.end
         }
-        out.append(')')
-        transform(m.group(1), args).foreach { t =>
-          out.setLength(callStart)
-          out.append(t)
-        }
-        last = close + 1
       }
       out.append(sql, last, to)
     }
     emit(0, sql.length)
     out.toString
+  }
+
+  /** One `name(…)` call: where its name starts, its opener and the
+    * matching closer.
+    */
+  private final case class Call(name: String, start: Int, open: Int, close: Int)
+
+  /** Every `name(…)` call outside the lexer's spans (`name[…]` with
+    * `opener` "["), `names` being a regex alternation of names.
+    */
+  private def calls(sql: String, spans: Spans, names: String,
+      opener: String = "("): Iterator[Call] =
+    ("(?i)\\b(" + names + ")\\s*" + java.util.regex.Pattern.quote(opener)).r
+      .findAllMatchIn(sql).filter(m => spans.outside(m.start)).map { m =>
+        val open = m.end - 1 // the regex consumed through the opener
+        val close = matchParen(sql, spans, open)
+        if (close < 0)
+          throw new graft.UnsupportedError(s"unbalanced ${m.group(1)}$opener in: $sql")
+        Call(m.group(1), m.start, open, close)
+      }
+
+  /** A site per call: the argument ranges are the holes,
+    * `build(name, args)` the replacement.
+    */
+  private def callSites(sql: String, spans: Spans, names: String, opener: String = "(")(
+      build: (String, Seq[String]) => Option[String]): Iterator[Site] =
+    calls(sql, spans, names, opener).map { c =>
+      new Site(c.start, c.close + 1, argRanges(sql, spans, c.open + 1, c.close),
+        args => build(c.name, args))
+    }
+
+  /** Rewrite every `name(args…)` call outside the lexer's spans: a call's
+    * arguments are rewritten first, then `transform(name, args)` (the
+    * arguments trimmed) gives its replacement, or None to keep the call
+    * with its rewritten arguments.
+    */
+  private def rewriteCalls(sql: String, names: String)(
+      transform: (String, Seq[String]) => Option[String]): String =
+    rewriteSites(sql)(spans => callSites(sql, spans, names) { (name, args) =>
+      transform(name, args.map(_.trim))
+    })
+
+  /** The match of `re` starting exactly at `from`; its positions count
+    * from `from`. Reads `sql` in place, without copying its tail.
+    */
+  private def prefixMatch(re: scala.util.matching.Regex, sql: String,
+      from: Int): Option[scala.util.matching.Regex.Match] =
+    re.findPrefixMatchOf(java.nio.CharBuffer.wrap(sql, from, sql.length))
+
+  /** Start of the whitespace that ends at `i`, outside the lexer's spans:
+    * where a clause rewritten to `" LATERAL VIEW …"` starts its site.
+    */
+  private def wsStart(sql: String, spans: Spans, i: Int): Int = {
+    var s = i
+    while (s > 0 && sql.charAt(s - 1).isWhitespace && spans.outside(s - 1)) s -= 1
+    s
   }
 
   /** DuckDB `epoch(ts)` returns DOUBLE seconds including the fraction;
@@ -1804,17 +1841,16 @@ object Dialect {
     * `* REPLACE`) is not recognized as star position and passes
     * through to Spark's parser.
     */
-  /** Parse a star-REPLACE list — the text between the `REPLACE (` at
-    * `open` and its matching `close` — into lowercase-target → expr,
+  /** Parse the items of a star-REPLACE list into lowercase-target → expr,
     * raising named errors for non-`expr AS col` items and for a
     * twice-replaced column (DuckDB/BigQuery reject those; a bare toMap
     * would silently keep the last entry). Shared by
     * [[rewriteStarReplace]] and [[expandStarItems]] (r17 review: the
     * two copies had already started to drift).
     */
-  private def parseReplaceItems(text: String, spans: Spans,
-      open: Int, close: Int, errPrefix: String): Map[String, String] = {
-    val pairs = splitArgs(text, spans, open + 1, close).map(_.trim).map { r =>
+  private def parseReplaceItems(items: Seq[String],
+      errPrefix: String): Map[String, String] = {
+    val pairs = items.map(_.trim).map { r =>
       "(?is)^(.*\\S)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*|`[^`]+`)$".r
         .findFirstMatchIn(r) match {
         case Some(mm) =>
@@ -1926,133 +1962,124 @@ object Dialect {
       } else if (isStarContext(s, i)) Some((at, None))
       else None
     }
-    var cur = sql
-    var guard = 0
-    while (guard < 16) {
-      guard += 1
+    rewriteSites(sql) { spans =>
       // OPAQUE spans (r19 review, generalizing the derived-FROM fix
       // below): a ')' in the REPLACE list, a FROM, or a star clause
       // inside a COMMENT must not terminate the paren match, hijack
       // the FROM-token scan, or trigger the rewrite
-      val spans = lex(cur)
-      re.findAllMatchIn(cur)
+      lazy val depth = depthAt(sql, spans)
+      re.findAllMatchIn(sql)
         .flatMap(m => if (spans.outside(m.start))
-          starAt(cur, m.start).map { case (s0, q) => (m, s0, q) } else None)
-        .nextOption() match {
-        case None => return cur
-        case Some((m, replStart, qualifier)) =>
+          starAt(sql, m.start).map { case (s0, q) => (m, s0, q) } else None)
+        .map { case (m, replStart, qualifier) =>
           val open = m.end - 1
-          val close = matchParen(cur, spans, open)
+          val close = matchParen(sql, spans, open)
           if (close < 0)
-            throw new graft.UnsupportedError(s"unbalanced * REPLACE( in: $cur")
-          val repls = parseReplaceItems(cur, spans, open, close, "* REPLACE")
-          // combined EXCLUDE clause (r19): names dropped BEFORE the
-          // REPLACE applies — DuckDB's own evaluation order
-          val excludes = parseStarExcludes(Option(m.group(1)), Option(m.group(2)))
-          val depth = depthAt(cur, spans)
-          val d0 = depth(m.start)
-          // anchor on the FROM TOKEN (not `FROM ident`) so a subquery FROM
-          // `FROM (…) t` is seen and rejected here instead of silently
-          // matching a LATER FROM in a union branch and expanding the star
-          // against the wrong table's schema
-          val fromTok = "(?i)\\bFROM\\b".r.findAllMatchIn(cur)
-            .find(mm => mm.start > close && depth(mm.start) == d0 &&
-              spans.outside(mm.start))
-            .getOrElse(throw new graft.UnsupportedError(
-              "* REPLACE requires a FROM <table> at the same query level"))
-          val afterFrom = cur.substring(fromTok.end)
-          // single-relation scope is load-bearing, not cosmetic: with a
-          // JOIN or comma-join the star covers BOTH relations in
-          // DuckDB/BigQuery, and expanding only the first would silently
-          // DROP the other side's columns — fail fast per the documented
-          // contract. Shared by the table and derived-table branches.
-          def aliasAndTail(rest0: String, what: String): Option[String] = {
-            var tail = rest0
-            val aliasM = "(?is)^\\s*(?:AS\\s+)?([A-Za-z_][A-Za-z0-9_]*)".r
-              .findFirstMatchIn(tail)
-              .filter(mm => !AliasStopWords.contains(mm.group(1).toLowerCase))
-            aliasM.foreach(mm => tail = tail.substring(mm.end))
-            val ok = "(?is)^\\s*((WHERE|GROUP|ORDER|LIMIT|HAVING|QUALIFY)\\b.*)?$".r
-            if (!ok.matches(tail))
-              throw new graft.UnsupportedError(
-                "* REPLACE is supported only over a single FROM relation " +
-                  s"(joins/multi-table FROM would drop the other side's columns): …FROM $what${tail.take(40)}")
-            aliasM.map(_.group(1))
-          }
-          val wsLen = afterFrom.takeWhile(_.isWhitespace).length
-          val schema: org.apache.spark.sql.types.StructType =
-            if (wsLen < afterFrom.length && afterFrom.charAt(wsLen) == '(') {
-              // derived-table FROM (r18 — "subquery FROM is not
-              // supported" before, asymmetric with the QUALIFY/TIES
-              // paths' expandStarItems): a parenthesized subquery is a
-              // single relation, so the star expands from its ANALYZED
-              // schema (schema-only — nothing executes). OPAQUE spans
-              // for the paren match (r19, from ADVICE): a `)` inside a
-              // comment within the derived text must not end the match
-              // early and truncate the subquery
-              val fSpans = lex(afterFrom)
-              val dClose = matchParen(afterFrom, fSpans, wsLen)
-              if (dClose < 0)
+            throw new graft.UnsupportedError(s"unbalanced * REPLACE( in: $sql")
+          def build(items: Seq[String]): Option[String] = {
+            val repls = parseReplaceItems(items, "* REPLACE")
+            // combined EXCLUDE clause (r19): names dropped BEFORE the
+            // REPLACE applies — DuckDB's own evaluation order
+            val excludes = parseStarExcludes(Option(m.group(1)), Option(m.group(2)))
+            val d0 = depth(m.start)
+            // anchor on the FROM TOKEN (not `FROM ident`) so a subquery FROM
+            // `FROM (…) t` is seen and rejected here instead of silently
+            // matching a LATER FROM in a union branch and expanding the star
+            // against the wrong table's schema
+            val fromEnd = "(?i)\\bFROM\\b".r
+              .findAllMatchIn(java.nio.CharBuffer.wrap(sql, close + 1, sql.length))
+              .map(close + 1 + _.start)
+              .find(st => depth(st) == d0 && spans.outside(st))
+              .map(_ + "FROM".length)
+              .getOrElse(throw new graft.UnsupportedError(
+                "* REPLACE requires a FROM <table> at the same query level"))
+            // single-relation scope is load-bearing, not cosmetic: with a
+            // JOIN or comma-join the star covers BOTH relations in
+            // DuckDB/BigQuery, and expanding only the first would silently
+            // DROP the other side's columns — fail fast per the documented
+            // contract. Shared by the table and derived-table branches.
+            def aliasAndTail(from: Int, what: String): Option[String] = {
+              val aliasM = aliasAt(sql, from)
+              val tail = sql.substring(from + aliasM.fold(0)(_.end))
+              val ok = "(?is)^\\s*((WHERE|GROUP|ORDER|LIMIT|HAVING|QUALIFY)\\b.*)?$".r
+              if (!ok.matches(tail))
                 throw new graft.UnsupportedError(
-                  s"unbalanced derived-table FROM after * REPLACE in: $cur")
-              val derived = afterFrom.substring(wsLen, dClose + 1)
-              val dAlias = aliasAndTail(afterFrom.substring(dClose + 1), "(…) ")
-              // a qualified star's alias must name the derived table's
-              // alias — an unaliased subquery has no addressable name
-              qualifier.foreach { qn =>
-                if (!dAlias.exists(qn.equalsIgnoreCase))
-                  throw new graft.UnsupportedError(
-                    s"qualified star $qn.* REPLACE: $qn does not resolve to the " +
-                      s"FROM subquery${dAlias.fold("")(a => s" ($a)")} — alias the " +
-                      s"derived table as $qn or use the bare * REPLACE form")
-              }
-              try spark.sql(s"SELECT * FROM $derived __sr").schema
-              catch {
-                case e: Exception => throw new graft.UnsupportedError(
-                  "* REPLACE: cannot analyze the derived FROM to expand the star " +
-                    s"(${e.getMessage.linesIterator.nextOption().getOrElse("").take(120)})")
-              }
-            } else {
-              val tblM = "(?s)^\\s*(`[^`]+`|[A-Za-z_][A-Za-z0-9_.]*)".r
-                .findFirstMatchIn(afterFrom)
-                .getOrElse(throw new graft.UnsupportedError(
-                  "* REPLACE requires FROM <single table or (subquery)>"))
-              val tbl = tblM.group(1)
-              val tableAlias = aliasAndTail(afterFrom.substring(tblM.end), tbl)
-              // a qualified star's alias must name the FROM table: its
-              // alias when one is declared (an aliased table's original
-              // name is NOT addressable in DuckDB/BigQuery), else the
-              // table's last dotted component
-              qualifier.foreach { qn =>
-                val target = tableAlias.getOrElse(
-                  tbl.stripPrefix("`").stripSuffix("`").split('.').last)
-                if (!qn.equalsIgnoreCase(target))
-                  throw new graft.UnsupportedError(
-                    s"qualified star $qn.* REPLACE: $qn does not resolve to the FROM table " +
-                      s"($target) — only the single FROM table's own star is supported")
-              }
-              try spark.table(tbl).schema
-              catch { case _: Exception => throw new graft.UnsupportedError(
-                s"* REPLACE: cannot resolve table $tbl to expand the star") }
+                  "* REPLACE is supported only over a single FROM relation " +
+                    s"(joins/multi-table FROM would drop the other side's columns): …FROM $what${tail.take(40)}")
+              aliasM.map(_.group(1))
             }
-          val known = schema.fieldNames.map(_.toLowerCase).toSet
-          repls.keys.find(!known.contains(_)).foreach { missing =>
-            throw new graft.UnsupportedError(
-              s"* REPLACE names column $missing which the FROM relation lacks")
-          }
-          val kept = starExcludeKept(excludes, schema.fieldNames.toSeq, repls,
-            "* EXCLUDE … REPLACE")
-          val items = kept.map { c =>
-            repls.get(c.toLowerCase) match {
-              case Some(e) => s"($e) AS `$c`"
-              case None    => s"`$c`"
+            var dOpen = fromEnd
+            while (dOpen < sql.length && sql.charAt(dOpen).isWhitespace) dOpen += 1
+            val schema: org.apache.spark.sql.types.StructType =
+              if (dOpen < sql.length && sql.charAt(dOpen) == '(') {
+                // derived-table FROM (r18 — "subquery FROM is not
+                // supported" before, asymmetric with the QUALIFY/TIES
+                // paths' expandStarItems): a parenthesized subquery is a
+                // single relation, so the star expands from its ANALYZED
+                // schema (schema-only — nothing executes). OPAQUE spans
+                // for the paren match (r19, from ADVICE): a `)` inside a
+                // comment within the derived text must not end the match
+                // early and truncate the subquery
+                val dClose = matchParen(sql, spans, dOpen)
+                if (dClose < 0)
+                  throw new graft.UnsupportedError(
+                    s"unbalanced derived-table FROM after * REPLACE in: $sql")
+                val derived = sql.substring(dOpen, dClose + 1)
+                val dAlias = aliasAndTail(dClose + 1, "(…) ")
+                // a qualified star's alias must name the derived table's
+                // alias — an unaliased subquery has no addressable name
+                qualifier.foreach { qn =>
+                  if (!dAlias.exists(qn.equalsIgnoreCase))
+                    throw new graft.UnsupportedError(
+                      s"qualified star $qn.* REPLACE: $qn does not resolve to the " +
+                        s"FROM subquery${dAlias.fold("")(a => s" ($a)")} — alias the " +
+                        s"derived table as $qn or use the bare * REPLACE form")
+                }
+                try spark.sql(s"SELECT * FROM $derived __sr").schema
+                catch {
+                  case e: Exception => throw new graft.UnsupportedError(
+                    "* REPLACE: cannot analyze the derived FROM to expand the star " +
+                      s"(${e.getMessage.linesIterator.nextOption().getOrElse("").take(120)})")
+                }
+              } else {
+                val tblM = prefixMatch("(?s)^\\s*(`[^`]+`|[A-Za-z_][A-Za-z0-9_.]*)".r, sql, fromEnd)
+                  .getOrElse(throw new graft.UnsupportedError(
+                    "* REPLACE requires FROM <single table or (subquery)>"))
+                val tbl = tblM.group(1)
+                val tableAlias = aliasAndTail(fromEnd + tblM.end, tbl)
+                // a qualified star's alias must name the FROM table: its
+                // alias when one is declared (an aliased table's original
+                // name is NOT addressable in DuckDB/BigQuery), else the
+                // table's last dotted component
+                qualifier.foreach { qn =>
+                  val target = tableAlias.getOrElse(
+                    tbl.stripPrefix("`").stripSuffix("`").split('.').last)
+                  if (!qn.equalsIgnoreCase(target))
+                    throw new graft.UnsupportedError(
+                      s"qualified star $qn.* REPLACE: $qn does not resolve to the FROM table " +
+                        s"($target) — only the single FROM table's own star is supported")
+                }
+                try spark.table(tbl).schema
+                catch { case _: Exception => throw new graft.UnsupportedError(
+                  s"* REPLACE: cannot resolve table $tbl to expand the star") }
+              }
+            val known = schema.fieldNames.map(_.toLowerCase).toSet
+            repls.keys.find(!known.contains(_)).foreach { missing =>
+              throw new graft.UnsupportedError(
+                s"* REPLACE names column $missing which the FROM relation lacks")
             }
+            val kept = starExcludeKept(excludes, schema.fieldNames.toSeq, repls,
+              "* EXCLUDE … REPLACE")
+            Some(kept.map { c =>
+              repls.get(c.toLowerCase) match {
+                case Some(e) => s"($e) AS `$c`"
+                case None    => s"`$c`"
+              }
+            }.mkString(", "))
           }
-          cur = cur.substring(0, replStart) + items.mkString(", ") +
-            cur.substring(close + 1)
-      }
+          new Site(replStart, close + 1, argRanges(sql, spans, open + 1, close), build)
+        }
     }
-    throw new graft.UnsupportedError("* REPLACE rewrite did not terminate")
   }
 
   /** DuckDB/Postgres `SELECT DISTINCT ON (keys) items … ORDER BY ord`:
@@ -2498,32 +2525,19 @@ object Dialect {
     * round-trip a generated `\.` would reach Spark's literal parser,
     * which drops unknown escapes, and the dot would match any character.
     */
-  private[graft] def rewriteSqliteGlob(sql: String): String = {
-    val re = """(?i)\bGLOB\s*'((?:[^'\\]|''|\\.)*)'""".r
-    var cur = sql
-    var changed = true
-    while (changed) {
-      changed = false
-      val spans = lex(cur)
-      re.findAllMatchIn(cur).find(m => spans.outside(m.start)).foreach { m =>
-        val pat = m.group(1).replace("\\\\", "\\").replace("''", "'")
-        val rx = new StringBuilder("^")
-        pat.foreach {
-          case '*' => rx.append(".*")
-          case '?' => rx.append('.')
-          case c if "\\.[]{}()<>+-=!$|^".contains(c) => rx.append('\\').append(c)
-          case c => rx.append(c)
-        }
-        rx.append('$')
-        val sparkLit = rx.toString.replace("\\", "\\\\").replace("'", "''")
-        cur = cur.substring(0, m.start) +
-          "RLIKE '" + sparkLit + "'" +
-          cur.substring(m.end)
-        changed = true
+  private[graft] def rewriteSqliteGlob(sql: String): String =
+    replaceOutside(sql, """(?i)\bGLOB\s*'((?:[^'\\]|''|\\.)*)'""".r) { m =>
+      val pat = m.group(1).replace("\\\\", "\\").replace("''", "'")
+      val rx = new StringBuilder("^")
+      pat.foreach {
+        case '*' => rx.append(".*")
+        case '?' => rx.append('.')
+        case c if "\\.[]{}()<>+-=!$|^".contains(c) => rx.append('\\').append(c)
+        case c => rx.append(c)
       }
+      rx.append('$')
+      "RLIKE '" + rx.toString.replace("\\", "\\\\").replace("'", "''") + "'"
     }
-    cur
-  }
 
   // ---- Postgres-ish helpers ----------------------------------------------
 
@@ -3210,30 +3224,29 @@ object Dialect {
         ascNullsFirst = false, skipNullValues = skipNullValues)
     }
 
-  /** Consume a trailing `OVER <(spec)|name>` span at the start of
-    * `after` (the text following a call's closing paren):
-    * Some((specText, endExclusive)) when present, None otherwise. A
-    * parenthesized spec is matched balance-aware; a named-window
-    * reference is a single identifier. The OVER keyword is
-    * word-bounded, so an implicit select-item alias merely STARTING
-    * with "over" (e.g. `… overall FROM`) is not consumed (r15 review
-    * fix — shared by the windowed-FILTER and keep-null collect
-    * rewrites so the two cannot drift).
+  /** The range `[start, end)` of the window spec of a trailing `OVER
+    * <(spec)|name>` starting at `from` (just after a call's closing
+    * paren), or None when no OVER follows. A parenthesized spec is
+    * matched balance-aware; a named-window reference is a single
+    * identifier. The OVER keyword is word-bounded, so an implicit
+    * select-item alias merely STARTING with "over" (e.g. `… overall
+    * FROM`) is not consumed (r15 review fix — shared by the
+    * windowed-FILTER and keep-null collect rewrites so the two cannot
+    * drift).
     */
-  private def consumeOverSpec(after: String,
-      context: => String): Option[(String, Int)] =
-    "(?is)^(\\s*OVER\\b\\s*)".r.findFirstMatchIn(after).map { om =>
-      val p = om.end
-      if (p < after.length && after.charAt(p) == '(') {
-        val oc = matchParen(after, lex(after), p)
+  private def overSpec(sql: String, spans: Spans, from: Int): Option[(Int, Int)] =
+    prefixMatch("(?is)^\\s*OVER\\b\\s*".r, sql, from).map { om =>
+      val p = from + om.end
+      if (p < sql.length && sql.charAt(p) == '(') {
+        val oc = matchParen(sql, spans, p)
         if (oc < 0)
-          throw new graft.UnsupportedError(s"unbalanced OVER ( in: $context")
-        (after.substring(p, oc + 1), oc + 1)
+          throw new graft.UnsupportedError(s"unbalanced OVER ( in: $sql")
+        (p, oc + 1)
       } else {
-        val id = "^[A-Za-z_][A-Za-z0-9_]*".r.findFirstIn(after.substring(p))
+        val id = prefixMatch("^[A-Za-z_][A-Za-z0-9_]*".r, sql, p)
           .getOrElse(throw new graft.UnsupportedError(
-            s"cannot parse the window after OVER in: $context"))
-        (id, p + id.length)
+            s"cannot parse the window after OVER in: $sql"))
+        (p, p + id.end)
       }
     }
 
@@ -3252,57 +3265,36 @@ object Dialect {
     * marker — the FILTER wrap's `'__f'` struct or a raise_error guard —
     * keep their exact null story and are left alone.
     */
-  private[graft] def rewriteKeepNullArrayAgg(sql: String): String = {
-    val re = "(?i)\\barray_agg\\s*\\(".r
-    var cur = sql
-    var from = 0
-    var guard = 0
-    while (guard < 256) {
-      guard += 1
-      val spans = lex(cur)
-      re.findAllMatchIn(cur)
-        .find(m => m.start >= from && spans.outside(m.start)) match {
-        case None => return cur
-        case Some(m) =>
-          val open = m.end - 1
-          val close = matchParen(cur, spans, open)
-          if (close < 0)
-            throw new graft.UnsupportedError(s"unbalanced array_agg( in: $cur")
-          val arg = cur.substring(open + 1, close).trim
-          val aSpans = lex(arg)
-          val aDepth = depthAt(arg, aSpans)
-          val hasOrder = "(?i)\\bORDER\\s+BY\\b".r.findAllMatchIn(arg)
-            .exists(mm => aDepth(mm.start) == 0 && aSpans.outside(mm.start))
-          val marked = arg.contains("'__f'") ||
-            "(?i)\\braise_error\\s*\\(".r.findFirstIn(arg).isDefined
-          if (hasOrder || marked || arg.isEmpty ||
-              splitArgs(arg, aSpans, 0, arg.length).length != 1) {
-            // advance past only the FUNCTION NAME, not the whole call: a
-            // bare array_agg nested inside a declined call's argument
-            // (e.g. in a scalar-subquery argument) must still be visited,
-            // or it would resolve as collect_list and silently drop NULL
-            // elements (r15 ADVICE)
-            from = m.end
-          } else {
-            val (collectFn, v) = "(?is)^DISTINCT\\s+(.*)$".r.findFirstMatchIn(arg)
-              .map(mm => ("collect_set", mm.group(1).trim))
-              .getOrElse(("collect_list", arg))
-            val base = s"$collectFn(named_struct('__v', $v))"
-            val after = cur.substring(close + 1)
-            val (replacement, consumed) =
-              consumeOverSpec(after, cur) match {
-                case Some((spec, specEnd)) =>
-                  (s"transform($base OVER $spec, s -> s.__v)", specEnd)
-                case None => (s"transform($base, s -> s.__v)", 0)
-              }
-            cur = cur.substring(0, m.start) + replacement +
-              cur.substring(close + 1 + consumed)
-            from = m.start // the replacement spells no array_agg
-          }
+  private[graft] def rewriteKeepNullArrayAgg(sql: String): String =
+    rewriteSites(sql) { spans =>
+      calls(sql, spans, "array_agg").map { c =>
+        val over = overSpec(sql, spans, c.close + 1)
+        new Site(c.start, over.fold(c.close + 1)(_._2),
+          (c.open + 1, c.close) +: over.toSeq, { case arg0 +: spec =>
+            val arg = arg0.trim
+            val aSpans = lex(arg)
+            val aDepth = depthAt(arg, aSpans)
+            val hasOrder = "(?i)\\bORDER\\s+BY\\b".r.findAllMatchIn(arg)
+              .exists(mm => aDepth(mm.start) == 0 && aSpans.outside(mm.start))
+            val marked = arg.contains("'__f'") ||
+              "(?i)\\braise_error\\s*\\(".r.findFirstIn(arg).isDefined
+            // a declined call keeps its text; a bare array_agg nested in
+            // its argument (e.g. in a scalar-subquery argument) is still
+            // rewritten, or it would resolve as collect_list and silently
+            // drop NULL elements (r15 ADVICE)
+            if (hasOrder || marked || arg.isEmpty ||
+                splitArgs(arg, aSpans, 0, arg.length).length != 1) None
+            else {
+              val (collectFn, v) = "(?is)^DISTINCT\\s+(.*)$".r.findFirstMatchIn(arg)
+                .map(mm => ("collect_set", mm.group(1).trim))
+                .getOrElse(("collect_list", arg))
+              val base = s"$collectFn(named_struct('__v', $v))"
+              Some(spec.headOption.fold(s"transform($base, s -> s.__v)")(
+                sp => s"transform($base OVER $sp, s -> s.__v)"))
+            }
+          })
       }
     }
-    throw new graft.UnsupportedError("array_agg null-keep rewrite did not terminate")
-  }
 
   /** Core of the inline-ordered array_agg rewrite: given the JOINED
     * argument text of ONE array_agg call (`expr ORDER BY k1 [, k2 …]`),
@@ -3526,43 +3518,24 @@ object Dialect {
     * array_agg ONLY — LISTAGG/percentile WITHIN GROUP are Spark-native
     * pass-throughs. A WITHIN GROUP body without ORDER BY fails fast.
     */
-  private[graft] def rewriteWithinGroupArrayAgg(sql: String): String = {
-    val re = "(?i)\\barray_agg\\s*\\(".r
-    var cur = sql
-    var from = 0
-    var guard = 0
-    while (guard < 256) {
-      guard += 1
-      val spans = lex(cur)
-      re.findAllMatchIn(cur)
-        .find(m => m.start >= from && spans.outside(m.start)) match {
-        case None => return cur
-        case Some(m) =>
-          val open = m.end - 1
-          val close = matchParen(cur, spans, open)
-          if (close < 0)
-            throw new graft.UnsupportedError(s"unbalanced array_agg( in: $cur")
-          val after = cur.substring(close + 1)
-          "(?is)^\\s*WITHIN\\s+GROUP\\s*\\(".r.findFirstMatchIn(after) match {
-            case None => from = close + 1
-            case Some(w) =>
-              val aSpans = lex(after)
-              val wOpen = w.end - 1
-              val wClose = matchParen(after, aSpans, wOpen)
-              if (wClose < 0)
-                throw new graft.UnsupportedError(s"unbalanced WITHIN GROUP ( in: $cur")
-              val body = after.substring(wOpen + 1, wClose).trim
-              val ob = "(?is)^ORDER\\s+BY\\b(.*)$".r.findFirstMatchIn(body)
-                .getOrElse(throw new graft.UnsupportedError(
-                  s"ARRAY_AGG WITHIN GROUP requires ORDER BY, got: $body"))
-              cur = cur.substring(0, close) + " ORDER BY " + ob.group(1).trim +
-                ")" + after.substring(wClose + 1)
-              from = 0 // re-scan: the rewritten call no longer matches WITHIN GROUP
-          }
+  private[graft] def rewriteWithinGroupArrayAgg(sql: String): String =
+    rewriteSites(sql) { spans =>
+      calls(sql, spans, "array_agg").flatMap { c =>
+        prefixMatch("(?is)^\\s*WITHIN\\s+GROUP\\s*\\(".r, sql, c.close + 1).map { w =>
+          val wOpen = c.close + w.end
+          val wClose = matchParen(sql, spans, wOpen)
+          if (wClose < 0)
+            throw new graft.UnsupportedError(s"unbalanced WITHIN GROUP ( in: $sql")
+          val ob = prefixMatch("(?is)^\\s*ORDER\\s+BY\\b".r, sql, wOpen + 1)
+            .getOrElse(throw new graft.UnsupportedError(
+              s"ARRAY_AGG WITHIN GROUP requires ORDER BY, got: ${sql.substring(wOpen + 1, wClose).trim}"))
+          new Site(c.start, wClose + 1, Seq((c.open + 1, c.close), (wOpen + 1 + ob.end, wClose)),
+            { case Seq(args, keys) =>
+              Some(sql.substring(c.start, c.open + 1) + args + " ORDER BY " + keys.trim + ")")
+            })
+        }
       }
     }
-    throw new graft.UnsupportedError("WITHIN GROUP rewrite did not terminate")
-  }
 
   /** ANSI aggregate `FILTER (WHERE cond)` clause (SQL:2003 feature T612 —
     * Postgres/DuckDB/SQLite/Trino all ship it). Spark 4 parses the plain
@@ -3634,123 +3607,104 @@ object Dialect {
   private[graft] def rewriteAggFilter(sql: String): String = {
     val re = "(?i)\\)\\s*FILTER\\s*\\(".r
     val distinctRe = "(?is)^DISTINCT\\s+(.*)$".r
-    val whereRe = "(?is)^WHERE\\b(.*)$".r
-    var cur = sql
-    var changed = true
-    var guard = 0
-    while (changed) {
-      changed = false
-      guard += 1
-      if (guard > 256)
-        throw new graft.UnsupportedError("FILTER rewrite did not terminate")
-      val spans = lex(cur)
-      re.findAllMatchIn(cur)
-        .find(m => spans.outside(m.start) && spans.outside(m.end - 1))
-        .foreach { m =>
+    val collectFns = Set("array_agg", "collect_list", "collect_set")
+    rewriteSites(sql) { spans =>
+      re.findAllMatchIn(sql)
+        .filter(m => spans.outside(m.start) && spans.outside(m.end - 1))
+        .map { m =>
           val aggClose = m.start // the aggregate call's ')'
           val filtOpen = m.end - 1 // the '(' after FILTER
-          val filtClose = matchParen(cur, spans, filtOpen)
+          val filtClose = matchParen(sql, spans, filtOpen)
           if (filtClose < 0)
-            throw new graft.UnsupportedError(s"unbalanced FILTER ( in: $cur")
-          val cond = cur.substring(filtOpen + 1, filtClose).trim match {
-            case whereRe(c) => c.trim
-            case other => throw new graft.UnsupportedError(
-              s"FILTER requires (WHERE <condition>), got: ($other)")
-          }
-          // locate the aggregate call's '(' by a depth-counting backward scan
-          var depth = 0
-          var i = aggClose
-          var aggOpen = -1
-          while (i >= 0 && aggOpen < 0) {
-            if (spans.outside(i)) {
-              val c = cur.charAt(i)
-              if (c == ')') depth += 1
-              else if (c == '(') { depth -= 1; if (depth == 0) aggOpen = i }
-            }
-            i -= 1
-          }
+            throw new graft.UnsupportedError(s"unbalanced FILTER ( in: $sql")
+          val where = prefixMatch("(?is)^\\s*WHERE\\b".r, sql, filtOpen + 1)
+            .getOrElse(throw new graft.UnsupportedError(
+              s"FILTER requires (WHERE <condition>), got: (${sql.substring(filtOpen + 1, filtClose).trim})"))
+          val aggOpen = backwardMatch(sql, spans, aggClose)
           if (aggOpen < 0)
-            throw new graft.UnsupportedError(s"unbalanced ) before FILTER in: $cur")
+            throw new graft.UnsupportedError(s"unbalanced ) before FILTER in: $sql")
           var e = aggOpen
-          while (e > 0 && Character.isWhitespace(cur.charAt(e - 1))) e -= 1
+          while (e > 0 && Character.isWhitespace(sql.charAt(e - 1))) e -= 1
           var b = e
-          while (b > 0 && (Character.isLetterOrDigit(cur.charAt(b - 1)) || cur.charAt(b - 1) == '_')) b -= 1
-          val fn = cur.substring(b, e)
+          while (b > 0 && (Character.isLetterOrDigit(sql.charAt(b - 1)) || sql.charAt(b - 1) == '_')) b -= 1
+          val fn = sql.substring(b, e)
           if (fn.isEmpty)
             throw new graft.UnsupportedError(
               "FILTER must follow an aggregate function call")
-          val args = splitArgs(cur, spans, aggOpen + 1, aggClose).map(_.trim)
-          // the replaced span normally ends at the FILTER clause's ')';
-          // the windowed-collect branch extends it over the OVER spec
-          var spanEnd = filtClose + 1
-          def wrap(a: String): String = a match {
-            case distinctRe(core) => s"DISTINCT CASE WHEN $cond THEN $core END"
-            case _ => s"CASE WHEN $cond THEN $a END"
+          val argHoles = argRanges(sql, spans, aggOpen + 1, aggClose)
+          // the site normally ends at the FILTER clause's ')'; a windowed
+          // collect extends it over the OVER spec
+          val over =
+            if (collectFns(fn.toLowerCase) && argHoles.length == 1)
+              overSpec(sql, spans, filtClose + 1)
+            else None
+          val holes = argHoles ++ Seq((filtOpen + 1 + where.end, filtClose)) ++ over
+          def build(texts: Seq[String]): String = {
+            val args = texts.take(argHoles.length).map(_.trim)
+            val cond = texts(argHoles.length).trim
+            def wrap(a: String): String = a match {
+              case distinctRe(core) => s"DISTINCT CASE WHEN $cond THEN $core END"
+              case _ => s"CASE WHEN $cond THEN $a END"
+            }
+            (fn.toLowerCase, args) match {
+              case ("count", Seq("*")) => s"count_if($cond)"
+              case ("corr" | "covar_pop" | "covar_samp" | "regr_slope" |
+                  "regr_intercept" | "regr_r2" | "regr_count", as) =>
+                fn + "(" + as.map(wrap).mkString(", ") + ")"
+              case ("string_agg" | "listagg" | "group_concat", v +: rest) =>
+                fn + "(" + (wrap(v) +: rest).mkString(", ") + ")"
+              case ("approx_count_distinct" | "approx_percentile" |
+                  "percentile_approx" | "percentile", v +: rest) if rest.nonEmpty =>
+                fn + "(" + (wrap(v) +: rest).mkString(", ") + ")"
+              case ("first" | "first_value" | "last" | "last_value" |
+                  "any_value", _) =>
+                throw new graft.UnsupportedError(
+                  s"FILTER on $fn is outside the shimmed surface: Spark's " +
+                    s"$fn defaults to ignoreNulls=false, so the CASE-wrap " +
+                    "rewrite would silently return a non-matching row's NULL")
+              case (f, Seq(a)) if NullSkippingAggs.contains(f) =>
+                // the collect family needs care: every FILTER dialect keeps
+                // NULL elements in array_agg, so the bare CASE wrap would
+                // conflate a genuine NULL element with a filtered-out row
+                if (collectFns(f)) {
+                  val aSpans = lex(a)
+                  val aDepth = depthAt(a, aSpans)
+                  // an ordered collect (`array_agg(x ORDER BY y)`, pre-rewrite)
+                  // has no correct wrap at all (the downstream struct collect
+                  // would surface filtered rows as NULLs) — named fail-fast
+                  if ("(?i)\\bORDER\\s+BY\\b".r.findAllMatchIn(a)
+                      .exists(mm => aDepth(mm.start) == 0 && aSpans.outside(mm.start)))
+                    throw new graft.UnsupportedError(
+                      s"FILTER on an inline-ORDER-BY $f is outside the shimmed " +
+                        "surface (the CASE wrap would inject the filtered rows " +
+                        "back as NULL array elements); filter in a subquery instead")
+                  // struct-wrap so a matching row's NULL value SURVIVES (the
+                  // null STRUCT of a filtered-out row is what collect_list
+                  // drops) — exact FILTER semantics. In the windowed position
+                  // (r15 — formerly a value-losing CASE wrap) transform
+                  // composes OVER the window expression, so the same struct
+                  // wrap applies with the OVER span taken into the site.
+                  val (prefix, v) = a match {
+                    case distinctRe(core) => ("DISTINCT ", core)
+                    case _ => ("", a)
+                  }
+                  val wrapped = s"$fn(${prefix}CASE WHEN $cond THEN " +
+                    s"named_struct('__f', $v) END)"
+                  texts.drop(argHoles.length + 1).headOption.fold(
+                    s"transform($wrapped, s -> s.__f)")(
+                    spec => s"transform($wrapped OVER $spec, s -> s.__f)")
+                } else s"$fn(${wrap(a)})"
+              case (f, Seq(_)) => throw new graft.UnsupportedError(
+                s"FILTER on $f is outside the shimmed surface: the CASE-wrap " +
+                  "rewrite is only correct for null-skipping aggregates " +
+                  "(count/sum/min/max/avg/stddev/collect_*/…)")
+              case _ => throw new graft.UnsupportedError(
+                s"FILTER on $fn with ${args.length} arguments is outside the shimmed surface")
+            }
           }
-          val replacement = (fn.toLowerCase, args) match {
-            case ("count", Seq("*")) => s"count_if($cond)"
-            case ("corr" | "covar_pop" | "covar_samp" | "regr_slope" |
-                "regr_intercept" | "regr_r2" | "regr_count", as) =>
-              fn + "(" + as.map(wrap).mkString(", ") + ")"
-            case ("string_agg" | "listagg" | "group_concat", v +: rest) =>
-              fn + "(" + (wrap(v) +: rest).mkString(", ") + ")"
-            case ("approx_count_distinct" | "approx_percentile" |
-                "percentile_approx" | "percentile", v +: rest) if rest.nonEmpty =>
-              fn + "(" + (wrap(v) +: rest).mkString(", ") + ")"
-            case ("first" | "first_value" | "last" | "last_value" |
-                "any_value", _) =>
-              throw new graft.UnsupportedError(
-                s"FILTER on $fn is outside the shimmed surface: Spark's " +
-                  s"$fn defaults to ignoreNulls=false, so the CASE-wrap " +
-                  "rewrite would silently return a non-matching row's NULL")
-            case (f, Seq(a)) if NullSkippingAggs.contains(f) =>
-              // the collect family needs care: every FILTER dialect keeps
-              // NULL elements in array_agg, so the bare CASE wrap would
-              // conflate a genuine NULL element with a filtered-out row
-              if (Set("array_agg", "collect_list", "collect_set").contains(f)) {
-                val aSpans = lex(a)
-                val aDepth = depthAt(a, aSpans)
-                // an ordered collect (`array_agg(x ORDER BY y)`, pre-rewrite)
-                // has no correct wrap at all (the downstream struct collect
-                // would surface filtered rows as NULLs) — named fail-fast
-                if ("(?i)\\bORDER\\s+BY\\b".r.findAllMatchIn(a)
-                    .exists(mm => aDepth(mm.start) == 0 && aSpans.outside(mm.start)))
-                  throw new graft.UnsupportedError(
-                    s"FILTER on an inline-ORDER-BY $f is outside the shimmed " +
-                      "surface (the CASE wrap would inject the filtered rows " +
-                      "back as NULL array elements); filter in a subquery instead")
-                // struct-wrap so a matching row's NULL value SURVIVES (the
-                // null STRUCT of a filtered-out row is what collect_list
-                // drops) — exact FILTER semantics. In the windowed position
-                // (r15 — formerly a value-losing CASE wrap) transform
-                // composes OVER the window expression, so the same struct
-                // wrap applies with the OVER span consumed into the rewrite.
-                val (prefix, v) = a match {
-                  case distinctRe(core) => ("DISTINCT ", core)
-                  case _ => ("", a)
-                }
-                val wrapped = s"$fn(${prefix}CASE WHEN $cond THEN " +
-                  s"named_struct('__f', $v) END)"
-                val after = cur.substring(filtClose + 1)
-                consumeOverSpec(after, cur) match {
-                  case Some((spec, specEnd)) =>
-                    spanEnd = filtClose + 1 + specEnd
-                    s"transform($wrapped OVER $spec, s -> s.__f)"
-                  case None => s"transform($wrapped, s -> s.__f)"
-                }
-              } else s"$fn(${wrap(a)})"
-            case (f, Seq(_)) => throw new graft.UnsupportedError(
-              s"FILTER on $f is outside the shimmed surface: the CASE-wrap " +
-                "rewrite is only correct for null-skipping aggregates " +
-                "(count/sum/min/max/avg/stddev/collect_*/…)")
-            case _ => throw new graft.UnsupportedError(
-              s"FILTER on $fn with ${args.length} arguments is outside the shimmed surface")
-          }
-          cur = cur.substring(0, b) + replacement + cur.substring(spanEnd)
-          changed = true
+          new Site(b, over.fold(filtClose + 1)(_._2), holes, texts => Some(build(texts)))
         }
     }
-    cur
   }
 
   // ---- Redshift-ish helpers ----------------------------------------------
@@ -4244,7 +4198,7 @@ object Dialect {
             throw new graft.UnsupportedError(
               s"$construct cannot expand this star REPLACE form: $it")
           val repls =
-            parseReplaceItems(it, itSpans, open, close, s"$construct star REPLACE")
+            parseReplaceItems(splitArgs(it, itSpans, open + 1, close), s"$construct star REPLACE")
           val excludes = parseStarExcludes(Option(rm.group(2)), Option(rm.group(3)))
           val fields = starFields(q.map(_ + ".*").getOrElse("*"))
           val known = fields.map(_.toLowerCase).toSet
@@ -5399,6 +5353,13 @@ object Dialect {
     "full", "union", "intersect", "except", "qualify", "window", "lateral",
     "as", "select")
 
+  /** The `[AS] alias` starting at `from`, unless the word is one of
+    * [[AliasStopWords]]; its group 1 is the alias.
+    */
+  private def aliasAt(sql: String, from: Int): Option[scala.util.matching.Regex.Match] =
+    prefixMatch("(?is)^\\s*(?:AS\\s+)?([A-Za-z_][A-Za-z0-9_]*)".r, sql, from)
+      .filter(mm => !AliasStopWords.contains(mm.group(1).toLowerCase))
+
   /** FROM-clause `UNNEST` → Spark `LATERAL VIEW`.
     *
     * BigQuery form (0-based `WITH OFFSET` = posexplode's pos exactly):
@@ -5456,72 +5417,58 @@ object Dialect {
     // `SELECT x FROM UNNEST(…) AS t(x)`, the most common standalone
     // Postgres/BigQuery spelling (r19 review: it fell through to a raw
     // Spark parse error). There is no relation to hang a LATERAL VIEW
-    // on, so this form emits a FROM-less generator SUBQUERY instead;
-    // a following `, UNNEST(…)` item is picked up by the comma
-    // alternative on the next loop pass.
+    // on, so this form emits a FROM-less generator SUBQUERY instead.
     val re = ("(?i)(,|\\bCROSS\\s+JOIN\\b|\\bLEFT\\s+JOIN\\b|\\bFROM\\b)\\s*" +
       "(?:LATERAL\\s+)?UNNEST\\s*\\(").r
-    var cur = sql
-    var guard = 0
-    while (guard < 64) {
-      guard += 1
-      // OPAQUE spans (r19 second review): comment text mentioning
-      // `FROM UNNEST(` — likelier now that `FROM` itself is a trigger
-      // alternative — must neither fire the rewrite nor skew the
-      // argument paren match (the sibling star rewrite got the same
-      // generalization this round)
-      val spans = lex(cur)
-      re.findAllMatchIn(cur).find(m => spans.outside(m.start)) match {
-        case None => return cur
-        case Some(m) =>
-          val joiner = m.group(1).trim.toUpperCase
-          val open = m.end - 1
-          val close = matchParen(cur, spans, open)
-          if (close < 0)
-            throw new graft.UnsupportedError(s"unbalanced UNNEST( in: $cur")
-          val arrArgs = splitArgs(cur, spans, open + 1, close).map(_.trim)
-          if (arrArgs.isEmpty)
-            throw new graft.UnsupportedError(
-              "UNNEST requires at least one array expression")
-          var rest = cur.substring(close + 1)
-          var ordinality = false
-          "(?is)^\\s*WITH\\s+ORDINALITY\\b".r.findFirstMatchIn(rest).foreach { om =>
-            ordinality = true
-            rest = rest.substring(om.end)
-          }
-          val aliasM = "(?is)^\\s*(?:AS\\s+)?([A-Za-z_][A-Za-z0-9_]*)".r
-            .findFirstMatchIn(rest)
-            .filter(mm => !AliasStopWords.contains(mm.group(1).toLowerCase))
+    // OPAQUE spans (r19 second review): comment text mentioning
+    // `FROM UNNEST(` — likelier now that `FROM` itself is a trigger
+    // alternative — must neither fire the rewrite nor skew the
+    // argument paren match (the sibling star rewrite got the same
+    // generalization this round)
+    rewriteSites(sql) { spans =>
+      re.findAllMatchIn(sql).filter(m => spans.outside(m.start)).map { m =>
+        val joiner = m.group(1).trim.toUpperCase
+        val open = m.end - 1
+        val close = matchParen(sql, spans, open)
+        if (close < 0)
+          throw new graft.UnsupportedError(s"unbalanced UNNEST( in: $sql")
+        val arrHoles = argRanges(sql, spans, open + 1, close)
+        var pos = close + 1 // the clause is read from here on
+        def take(re: String): Option[scala.util.matching.Regex.Match] =
+          prefixMatch(re.r, sql, pos).map { mm => pos += mm.end; mm }
+        def alias(): Option[scala.util.matching.Regex.Match] =
+          aliasAt(sql, pos).map { mm => pos += mm.end; mm }
+        val ordinality = take("(?is)^\\s*WITH\\s+ORDINALITY\\b").isDefined
+        val name = alias().getOrElse(throw new graft.UnsupportedError(
+          "FROM-clause UNNEST requires an [AS] alias")).group(1)
+        // LEFT JOIN … ON TRUE → OUTER (shared by the single- and
+        // multi-array branches; r18 review — the block had been
+        // copy-pasted)
+        def consumeOnTrue(): Boolean =
+          if (joiner.startsWith("LEFT")) {
+            take("(?is)^\\s*ON\\s+TRUE\\b").getOrElse(throw new graft.UnsupportedError(
+              "LEFT JOIN UNNEST is supported only with ON TRUE"))
+            true
+          } else false
+        // the site, given its replacement from the rewritten arrays
+        def site(build: Seq[String] => String): Site =
+          new Site(if (joiner == "FROM") m.start else wsStart(sql, spans, m.start),
+            pos, arrHoles, arrs => Some(build(arrs.map(_.trim))))
+        if (arrHoles.length > 1) {
+          // Trino multi-array zip (r18) — see the class doc
+          val cm = take("(?s)^\\s*\\(([^)]*)\\)")
             .getOrElse(throw new graft.UnsupportedError(
-              "FROM-clause UNNEST requires an [AS] alias"))
-          val name = aliasM.group(1)
-          rest = rest.substring(aliasM.end)
-          // LEFT JOIN … ON TRUE → OUTER (shared by the single- and
-          // multi-array branches; r18 review — the block had been
-          // copy-pasted)
-          def consumeOnTrue(): Boolean =
-            if (joiner.startsWith("LEFT")) {
-              val onM = "(?is)^\\s*ON\\s+TRUE\\b".r.findFirstMatchIn(rest)
-                .getOrElse(throw new graft.UnsupportedError(
-                  "LEFT JOIN UNNEST is supported only with ON TRUE"))
-              rest = rest.substring(onM.end)
-              true
-            } else false
-          if (arrArgs.length > 1) {
-            // Trino multi-array zip (r18) — see the class doc
-            val cm = "(?s)^\\s*\\(([^)]*)\\)".r.findFirstMatchIn(rest)
-              .getOrElse(throw new graft.UnsupportedError(
-                "multi-array UNNEST requires a table alias with one column " +
-                  "per array: t(x, y[, ord])"))
-            val cols = cm.group(1).split(',').map(_.trim).toSeq
-            val want = arrArgs.length + (if (ordinality) 1 else 0)
-            if (cols.length != want || !cols.forall(_.matches("[A-Za-z_][A-Za-z0-9_]*")))
-              throw new graft.UnsupportedError(
-                s"multi-array UNNEST table alias must carry exactly $want " +
-                  s"column name(s) (one per array${if (ordinality) " + the ordinal" else ""}), " +
-                  s"got: ${cm.group(0).trim}")
-            rest = rest.substring(cm.end)
-            val outer = consumeOnTrue()
+              "multi-array UNNEST requires a table alias with one column " +
+                "per array: t(x, y[, ord])"))
+          val cols = cm.group(1).split(',').map(_.trim).toSeq
+          val want = arrHoles.length + (if (ordinality) 1 else 0)
+          if (cols.length != want || !cols.forall(_.matches("[A-Za-z_][A-Za-z0-9_]*")))
+            throw new graft.UnsupportedError(
+              s"multi-array UNNEST table alias must carry exactly $want " +
+                s"column name(s) (one per array${if (ordinality) " + the ordinal" else ""}), " +
+                s"got: ${cm.group(0).trim}")
+          val outer = consumeOnTrue()
+          site { arrArgs =>
             val sizes = arrArgs.map(a => s"size($a)").mkString(", ")
             val valFields = arrArgs.zip(cols).map { case (a, c) =>
               s"try_element_at($a, __uni + 1) AS $c"
@@ -5531,22 +5478,19 @@ object Dialect {
               .mkString(", ")
             val genExpr = s"inline(transform(array_repeat(0, greatest($sizes)), " +
               s"(__unv, __uni) -> struct($fields)))"
-            cur =
-              if (joiner == "FROM")
-                // first FROM item: FROM-less generator subquery — the
-                // struct fields already carry the column names
-                cur.substring(0, m.start) +
-                  s"FROM (SELECT $genExpr) $name" + rest
-              else cur.substring(0, m.start).stripTrailing() +
-                s" LATERAL VIEW ${if (outer) "OUTER " else ""}$genExpr " +
-                s"$name AS ${cols.mkString(", ")}" + rest
-          } else {
-          val arr = arrArgs.head
+            if (joiner == "FROM")
+              // first FROM item: FROM-less generator subquery — the
+              // struct fields already carry the column names
+              s"FROM (SELECT $genExpr) $name"
+            else s" LATERAL VIEW ${if (outer) "OUTER " else ""}$genExpr " +
+              s"$name AS ${cols.mkString(", ")}"
+          }
+        } else {
           var tableAlias = "__unnest_" + name
           var colName = name
           var offName: Option[String] = None
           var ordName: Option[String] = None
-          "(?s)^\\s*\\(([^)]*)\\)".r.findFirstMatchIn(rest) match {
+          take("(?s)^\\s*\\(([^)]*)\\)") match {
             case Some(cm) => // Trino `t(cols)` table alias
               val cols = cm.group(1).split(',').map(_.trim)
               val want = if (ordinality) 2 else 1
@@ -5555,97 +5499,63 @@ object Dialect {
                   (if (ordinality)
                     "UNNEST WITH ORDINALITY table alias must carry exactly two columns (value, ordinal): "
                   else "UNNEST table alias must carry exactly one column: ") + cm.group(0))
-              tableAlias = name; colName = cols.head; rest = rest.substring(cm.end)
+              tableAlias = name; colName = cols.head
               if (ordinality) ordName = Some(cols(1))
             case None =>
               if (ordinality)
                 throw new graft.UnsupportedError(
                   "UNNEST WITH ORDINALITY requires a two-column table alias t(value, ordinal)")
-              val withOffM = "(?is)^\\s*WITH\\s+OFFSET\\b".r.findFirstMatchIn(rest)
-              withOffM.foreach { wm =>
-                rest = rest.substring(wm.end)
-                // the alias is optional in BigQuery — bare WITH OFFSET
-                // names the column `offset`; a following clause keyword is
-                // NOT an alias (stop-word filtered)
-                val offAliasM = "(?is)^\\s*(?:AS\\s+)?([A-Za-z_][A-Za-z0-9_]*)".r
-                  .findFirstMatchIn(rest)
-                  .filter(mm => !AliasStopWords.contains(mm.group(1).toLowerCase))
-                offName = Some(offAliasM.map(_.group(1)).getOrElse("offset"))
-                offAliasM.foreach(mm => rest = rest.substring(mm.end))
-              }
+              // the alias is optional in BigQuery — bare WITH OFFSET
+              // names the column `offset`; a following clause keyword is
+              // NOT an alias (stop-word filtered)
+              if (take("(?is)^\\s*WITH\\s+OFFSET\\b").isDefined)
+                offName = Some(alias().map(_.group(1)).getOrElse("offset"))
           }
           val outer = consumeOnTrue()
-          cur = if (joiner == "FROM") {
-            // first FROM item: FROM-less generator subquery (posexplode
-            // takes the multi-column generator alias `AS (off, col)`)
-            val sub = (offName, ordName) match {
-              case (Some(o), _) =>
-                s"(SELECT posexplode($arr) AS ($o, $colName)) $tableAlias"
-              case (None, Some(ord)) =>
-                s"(SELECT inline(transform($arr, (__unv, __uni) -> " +
-                  s"struct(__unv AS $colName, CAST(__uni + 1 AS BIGINT) AS $ord)))) " +
-                  tableAlias
-              case (None, None) =>
-                s"(SELECT explode($arr) AS $colName) $tableAlias"
+          site { arrs =>
+            val arr = arrs.head
+            if (joiner == "FROM") {
+              // first FROM item: FROM-less generator subquery (posexplode
+              // takes the multi-column generator alias `AS (off, col)`)
+              val sub = (offName, ordName) match {
+                case (Some(o), _) =>
+                  s"(SELECT posexplode($arr) AS ($o, $colName)) $tableAlias"
+                case (None, Some(ord)) =>
+                  s"(SELECT inline(transform($arr, (__unv, __uni) -> " +
+                    s"struct(__unv AS $colName, CAST(__uni + 1 AS BIGINT) AS $ord)))) " +
+                    tableAlias
+                case (None, None) =>
+                  s"(SELECT explode($arr) AS $colName) $tableAlias"
+              }
+              s"FROM $sub"
+            } else {
+              val gen = (offName, ordName) match {
+                case (Some(o), _) => s"posexplode($arr) $tableAlias AS $o, $colName"
+                case (None, Some(ord)) =>
+                  s"inline(transform($arr, (__unv, __uni) -> " +
+                    s"struct(__unv AS $colName, CAST(__uni + 1 AS BIGINT) AS $ord))) " +
+                    s"$tableAlias AS $colName, $ord"
+                case (None, None) => s"explode($arr) $tableAlias AS $colName"
+              }
+              s" LATERAL VIEW ${if (outer) "OUTER " else ""}$gen"
             }
-            cur.substring(0, m.start) + s"FROM $sub" + rest
-          } else {
-            val gen = (offName, ordName) match {
-              case (Some(o), _) => s"posexplode($arr) $tableAlias AS $o, $colName"
-              case (None, Some(ord)) =>
-                s"inline(transform($arr, (__unv, __uni) -> " +
-                  s"struct(__unv AS $colName, CAST(__uni + 1 AS BIGINT) AS $ord))) " +
-                  s"$tableAlias AS $colName, $ord"
-              case (None, None) => s"explode($arr) $tableAlias AS $colName"
-            }
-            cur.substring(0, m.start).stripTrailing() +
-              s" LATERAL VIEW ${if (outer) "OUTER " else ""}$gen" + rest
           }
-          }
+        }
       }
     }
-    throw new graft.UnsupportedError("UNNEST rewrite did not terminate")
   }
 
   /** ANSI/Trino/Postgres `ARRAY[e1, e2, …]` literal constructor → Spark
     * `array(e1, e2, …)`. Spark's parser has no bracket constructor (its
     * brackets are subscripts only), so the bracketed body is re-emitted
-    * in call form; nested `ARRAY[ARRAY[…]]` rewrites inside-out across
-    * loop passes, and an `ARRAY[]` empty literal (legal in Postgres only
+    * in call form; an `ARRAY[]` empty literal (legal in Postgres only
     * with a cast, in Trino bare) becomes `array()`. A bare subscript
     * (`arr[1]`) has no ARRAY keyword and is never touched.
     */
-  private[graft] def rewriteArrayLiteral(sql: String): String = {
-    val re = "(?i)\\bARRAY\\s*\\[".r
-    var cur = sql
-    var guard = 0
-    while (guard < 64) {
-      guard += 1
-      val spans = lex(cur)
-      re.findAllMatchIn(cur).find(m => spans.outside(m.start)) match {
-        case None => return cur
-        case Some(m) =>
-          val open = m.end - 1
-          // forward bracket match (literal-aware; parens inside don't count)
-          var depth = 0
-          var i = open
-          var close = -1
-          while (i < cur.length && close < 0) {
-            if (spans.outside(i)) {
-              val c = cur.charAt(i)
-              if (c == '[') depth += 1
-              else if (c == ']') { depth -= 1; if (depth == 0) close = i }
-            }
-            i += 1
-          }
-          if (close < 0)
-            throw new graft.UnsupportedError(s"unbalanced ARRAY[ in: $cur")
-          cur = cur.substring(0, m.start) + "array(" +
-            cur.substring(open + 1, close) + ")" + cur.substring(close + 1)
-      }
-    }
-    throw new graft.UnsupportedError("ARRAY literal rewrite did not terminate")
-  }
+  private[graft] def rewriteArrayLiteral(sql: String): String =
+    rewriteSites(sql)(spans => callSites(sql, spans, "ARRAY", "[") { (_, items) =>
+      Some("array(" + items.mkString(",") + ")")
+    })
 
   /** ClickHouse `[LEFT] ARRAY JOIN <expr> AS <alias>[, <expr> AS
     * <alias>…]` clause → Spark `LATERAL VIEW [OUTER] explode`
@@ -5677,59 +5587,71 @@ object Dialect {
     // `ARRAY JOIN arr AS x LEFT JOIN dim ON …` cuts before LEFT instead
     // of leaving it dangling inside the last item. LEFT/RIGHT alone are
     // never enders (they double as string functions — `LEFT(s, 2)`);
-    // a chained `[LEFT] ARRAY JOIN` cuts at its own phrase start and is
-    // rewritten by the next loop pass.
-    val joinCut = ("(?i)\\b(?:(?:LEFT|RIGHT|FULL)\\s+(?:OUTER\\s+|SEMI\\s+|ANTI\\s+)?JOIN" +
+    // a chained `[LEFT] ARRAY JOIN` cuts at its own phrase start.
+    val stopRe = ("(?i)\\b(?:" + clauseEnders.mkString("|") + ")\\b|" +
+      "\\b(?:(?:LEFT|RIGHT|FULL)\\s+(?:OUTER\\s+|SEMI\\s+|ANTI\\s+)?JOIN" +
       "|INNER\\s+JOIN|CROSS\\s+JOIN|(?:LEFT\\s+)?ARRAY\\s+JOIN|JOIN)\\b").r
-    var cur = sql
-    var guard = 0
-    while (guard < 32) {
-      guard += 1
-      val spans = lex(cur)
-      re.findAllMatchIn(cur).find(m => spans.outside(m.start)) match {
-        case None => return cur
-        case Some(m) =>
-          val outer = m.group(1) != null
-          val rest0 = cur.substring(m.end)
-          val rSpans = lex(rest0)
-          val rDepth = depthAt(rest0, rSpans)
-          val joinStop = joinCut.findAllMatchIn(rest0)
-            .find(jm => rDepth(jm.start) == 0 && rSpans.outside(jm.start))
-            .map(_.start)
-          val stop = (clauseEnders
-            .map(k => topLevelKeyword(rest0, rSpans, rDepth, k)) ++ joinStop.toSeq)
-            .filter(_ >= 0).sorted.headOption.getOrElse(rest0.length)
-          val items = splitArgs(rest0, rSpans, 0, stop).map(_.trim).filter(_.nonEmpty)
-          if (items.isEmpty)
-            throw new graft.UnsupportedError("ARRAY JOIN requires an array expression")
-          val itemRe = "(?is)^(.*\\S)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*)$".r
-          val pairs = items.map { item =>
-            itemRe.findFirstMatchIn(item) match {
-              case Some(im) => (im.group(1).trim, im.group(2))
-              case None => throw new graft.UnsupportedError(
-                s"ARRAY JOIN requires `expr AS alias` on every item " +
-                  s"(the bare in-place form is not supported), got: $item")
+    val itemRe = "(?is)^(.*\\S)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*)$".r
+    rewriteSites(sql) { spans =>
+      val ms = re.findAllMatchIn(sql).filter(m => spans.outside(m.start)).toVector
+      // the clause after `from` ends at the first stop word or join at
+      // its paren depth
+      def clauseEnd(from: Int): Int = {
+        var depth = 0
+        var i = from
+        stopRe.findAllMatchIn(java.nio.CharBuffer.wrap(sql, from, sql.length))
+          .map(from + _.start)
+          .find { p =>
+            while (i < p) {
+              if (spans.outside(i)) {
+                val c = sql.charAt(i)
+                if (c == '(') depth += 1 else if (c == ')') depth -= 1
+              }
+              i += 1
             }
-          }
-          val view = pairs match {
-            case Seq((arr, alias)) =>
-              s"explode($arr) __aj_$alias AS $alias"
-            case many =>
-              val sizes = many.map { case (a, _) => s"size($a)" }.mkString(", ")
-              val fields = many
-                .map { case (a, al) => s"try_element_at($a, __aji + 1) AS $al" }
-                .mkString(", ")
-              val aliases = many.map(_._2).mkString(", ")
-              s"inline(transform(array_repeat(0, greatest($sizes)), " +
-                s"(__ajx, __aji) -> struct($fields))) __aj_${many.head._2} AS $aliases"
-          }
-          val restOut = rest0.substring(stop)
-          cur = cur.substring(0, m.start).stripTrailing() +
-            s" LATERAL VIEW ${if (outer) "OUTER " else ""}$view" +
-            (if (restOut.isEmpty) "" else " " + restOut)
+            depth == 0 && spans.outside(p)
+          }.getOrElse(sql.length)
+      }
+      var prevEnd = 0
+      ms.indices.iterator.map { k =>
+        val m = ms(k)
+        val outer = m.group(1) != null
+        val stop = clauseEnd(m.end)
+        // a chained ARRAY JOIN's site starts where this one ends, and
+        // the space between the two comes from its own replacement
+        val sep = if (stop == sql.length || ms.lift(k + 1).exists(_.start == stop)) "" else " "
+        val floor = if (prevEnd <= m.start) prevEnd else 0
+        val site = new Site(math.max(wsStart(sql, spans, m.start), floor), stop,
+          argRanges(sql, spans, m.end, stop), { texts =>
+            val items = texts.map(_.trim).filter(_.nonEmpty)
+            if (items.isEmpty)
+              throw new graft.UnsupportedError("ARRAY JOIN requires an array expression")
+            val pairs = items.map { item =>
+              itemRe.findFirstMatchIn(item) match {
+                case Some(im) => (im.group(1).trim, im.group(2))
+                case None => throw new graft.UnsupportedError(
+                  s"ARRAY JOIN requires `expr AS alias` on every item " +
+                    s"(the bare in-place form is not supported), got: $item")
+              }
+            }
+            val view = pairs match {
+              case Seq((arr, alias)) =>
+                s"explode($arr) __aj_$alias AS $alias"
+              case many =>
+                val sizes = many.map { case (a, _) => s"size($a)" }.mkString(", ")
+                val fields = many
+                  .map { case (a, al) => s"try_element_at($a, __aji + 1) AS $al" }
+                  .mkString(", ")
+                val aliases = many.map(_._2).mkString(", ")
+                s"inline(transform(array_repeat(0, greatest($sizes)), " +
+                  s"(__ajx, __aji) -> struct($fields))) __aj_${many.head._2} AS $aliases"
+            }
+            Some(s" LATERAL VIEW ${if (outer) "OUTER " else ""}$view$sep")
+          })
+        prevEnd = stop
+        site
       }
     }
-    throw new graft.UnsupportedError("ARRAY JOIN rewrite did not terminate")
   }
 
   /** T-SQL `PIVOT (agg(col) FOR key IN ([v1], [v2]))` (r13) — T-SQL
@@ -5780,11 +5702,7 @@ object Dialect {
       // T-SQL REQUIRES a pivot-table alias after the clause; Spark's
       // native PIVOT REJECTS one — strip it (a query referencing the
       // alias elsewhere fails loudly in the analyzer, never silently)
-      val after = cur.substring(close + 1)
-      val aliasM = "(?is)^\\s*(?:AS\\s+)?([A-Za-z_][A-Za-z0-9_]*)".r
-        .findFirstMatchIn(after)
-        .filter(mm => !AliasStopWords.contains(mm.group(1).toLowerCase))
-      val tail = aliasM.map(mm => after.substring(mm.end)).getOrElse(after)
+      val tail = cur.substring(close + 1 + aliasAt(cur, close + 1).fold(0)(_.end))
       cur = cur.substring(0, open + 1) + bodyNew + ")" + tail
     }
     cur
@@ -5975,31 +5893,21 @@ object Dialect {
     */
   private[graft] def rewriteTsqlApply(sql: String): String = {
     val re = "(?i)\\b(CROSS|OUTER)\\s+APPLY\\s+STRING_SPLIT\\s*\\(".r
-    var cur = sql
-    var guard = 0
-    while (guard < 32) {
-      guard += 1
-      val spans = lex(cur)
-      re.findAllMatchIn(cur).find(m => spans.outside(m.start)) match {
-        case None => return cur
-        case Some(m) =>
-          val outer = m.group(1).equalsIgnoreCase("OUTER")
-          val open = m.end - 1
-          val close = matchParen(cur, spans, open)
-          if (close < 0)
-            throw new graft.UnsupportedError(s"unbalanced STRING_SPLIT( in: $cur")
-          val args = cur.substring(open + 1, close)
-          var rest = cur.substring(close + 1)
-          var alias = "__apply"
-          "(?is)^\\s*(?:AS\\s+)?([A-Za-z_][A-Za-z0-9_]*)".r.findFirstMatchIn(rest)
-            .filter(mm => !AliasStopWords.contains(mm.group(1).toLowerCase))
-            .foreach { mm => alias = mm.group(1); rest = rest.substring(mm.end) }
-          cur = cur.substring(0, m.start).stripTrailing() +
-            s" LATERAL VIEW ${if (outer) "OUTER " else ""}explode(string_split($args)) $alias AS value" +
-            rest
+    rewriteSites(sql) { spans =>
+      re.findAllMatchIn(sql).filter(m => spans.outside(m.start)).map { m =>
+        val outer = m.group(1).equalsIgnoreCase("OUTER")
+        val open = m.end - 1
+        val close = matchParen(sql, spans, open)
+        if (close < 0)
+          throw new graft.UnsupportedError(s"unbalanced STRING_SPLIT( in: $sql")
+        val aliasM = aliasAt(sql, close + 1)
+        val alias = aliasM.fold("__apply")(_.group(1))
+        new Site(wsStart(sql, spans, m.start), close + 1 + aliasM.fold(0)(_.end),
+          Seq((open + 1, close)), { case Seq(args) =>
+            Some(s" LATERAL VIEW ${if (outer) "OUTER " else ""}explode(string_split($args)) $alias AS value")
+          })
       }
     }
-    throw new graft.UnsupportedError("APPLY rewrite did not terminate")
   }
 
   /** Snowflake `TRY_TO_*` conversions → `try_cast` (NULL on failure,
@@ -6047,48 +5955,38 @@ object Dialect {
     */
   private[graft] def rewriteGenerateSeriesTable(sql: String): String = {
     val re = "(?i)(,|\\bCROSS\\s+JOIN\\b|\\bFROM\\b)\\s*GENERATE_SERIES\\s*\\(".r
-    var cur = sql
-    var guard = 0
-    while (guard < 32) {
-      guard += 1
-      val spans = lex(cur)
-      re.findAllMatchIn(cur).find(m => spans.outside(m.start)) match {
-        case None => return cur
-        case Some(m) =>
-          val joiner = m.group(1).trim.toUpperCase
-          val open = m.end - 1
-          val close = matchParen(cur, spans, open)
-          if (close < 0)
-            throw new graft.UnsupportedError(s"unbalanced GENERATE_SERIES( in: $cur")
-          val args = splitArgs(cur, spans, open + 1, close).map(_.trim)
-          if (args.length < 2 || args.length > 3)
-            throw new graft.UnsupportedError(
-              "GENERATE_SERIES table function expects (start, stop[, step])")
-          val seq = s"sequence(${args.mkString(", ")})"
-          var rest = cur.substring(close + 1)
-          val aliasM = "(?is)^\\s*(?:AS\\s+)?([A-Za-z_][A-Za-z0-9_]*)".r
-            .findFirstMatchIn(rest)
-            .filter(mm => !AliasStopWords.contains(mm.group(1).toLowerCase))
-            .getOrElse(throw new graft.UnsupportedError(
-              "GENERATE_SERIES in FROM requires an [AS] alias"))
-          val name = aliasM.group(1)
-          rest = rest.substring(aliasM.end)
-          var (tableAlias, colName) = (name, name)
-          "(?s)^\\s*\\(\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*\\)".r.findFirstMatchIn(rest)
-            .foreach { cm => colName = cm.group(1); rest = rest.substring(cm.end) }
-          val repl =
-            if (joiner == "FROM")
-              s" FROM (SELECT explode($seq) AS $colName) $tableAlias"
-            else {
-              // keep the table alias addressable (t.i) when the t(i) form
-              // named both; the bare form needs a distinct generator alias
-              val lv = if (colName == tableAlias) "__gs_" + tableAlias else tableAlias
-              s" LATERAL VIEW explode($seq) $lv AS $colName"
-            }
-          cur = cur.substring(0, m.start).stripTrailing() + repl + rest
+    rewriteSites(sql) { spans =>
+      re.findAllMatchIn(sql).filter(m => spans.outside(m.start)).map { m =>
+        val joiner = m.group(1).trim.toUpperCase
+        val open = m.end - 1
+        val close = matchParen(sql, spans, open)
+        if (close < 0)
+          throw new graft.UnsupportedError(s"unbalanced GENERATE_SERIES( in: $sql")
+        val argHoles = argRanges(sql, spans, open + 1, close)
+        if (argHoles.length < 2 || argHoles.length > 3)
+          throw new graft.UnsupportedError(
+            "GENERATE_SERIES table function expects (start, stop[, step])")
+        val aliasM = aliasAt(sql, close + 1)
+          .getOrElse(throw new graft.UnsupportedError(
+            "GENERATE_SERIES in FROM requires an [AS] alias"))
+        val name = aliasM.group(1)
+        var end = close + 1 + aliasM.end
+        var (tableAlias, colName) = (name, name)
+        prefixMatch("(?s)^\\s*\\(\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*\\)".r, sql, end)
+          .foreach { cm => colName = cm.group(1); end += cm.end }
+        new Site(wsStart(sql, spans, m.start), end, argHoles, { args =>
+          val seq = s"sequence(${args.map(_.trim).mkString(", ")})"
+          Some(if (joiner == "FROM")
+            s" FROM (SELECT explode($seq) AS $colName) $tableAlias"
+          else {
+            // keep the table alias addressable (t.i) when the t(i) form
+            // named both; the bare form needs a distinct generator alias
+            val lv = if (colName == tableAlias) "__gs_" + tableAlias else tableAlias
+            s" LATERAL VIEW explode($seq) $lv AS $colName"
+          })
+        })
       }
     }
-    throw new graft.UnsupportedError("GENERATE_SERIES rewrite did not terminate")
   }
 
   /** BigQuery array subscripts `base[OFFSET(i)]` (0-based, erroring on
@@ -6102,26 +6000,22 @@ object Dialect {
     */
   private[graft] def rewriteBqSubscript(sql: String): String = {
     val re = "(?i)\\[\\s*(SAFE_OFFSET|SAFE_ORDINAL|OFFSET|ORDINAL)\\s*\\(".r
-    var cur = sql
-    var guard = 0
-    while (guard < 256) {
-      guard += 1
-      val spans = lex(cur)
-      re.findAllMatchIn(cur).find(m => spans.outside(m.start)) match {
-        case None => return cur
-        case Some(m) =>
-          val open = m.end - 1
-          val close = matchParen(cur, spans, open)
-          if (close < 0)
-            throw new graft.UnsupportedError(s"unbalanced ${m.group(1)}( in: $cur")
-          val idx = cur.substring(open + 1, close).trim
-          var j = close + 1
-          while (j < cur.length && cur.charAt(j).isWhitespace) j += 1
-          if (j >= cur.length || cur.charAt(j) != ']')
-            throw new graft.UnsupportedError(
-              s"expected ] after ${m.group(1)}($idx)")
-          val baseStart = primaryStartBefore(cur, spans, m.start)
-          val base = cur.substring(baseStart, m.start).trim
+    rewriteSites(sql) { spans =>
+      re.findAllMatchIn(sql).filter(m => spans.outside(m.start)).map { m =>
+        val open = m.end - 1
+        val close = matchParen(sql, spans, open)
+        if (close < 0)
+          throw new graft.UnsupportedError(s"unbalanced ${m.group(1)}( in: $sql")
+        var j = close + 1
+        while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
+        if (j >= sql.length || sql.charAt(j) != ']')
+          throw new graft.UnsupportedError(
+            s"expected ] after ${m.group(1)}(${sql.substring(open + 1, close).trim})")
+        // the base is one postfix primary, so `a[OFFSET(0)][OFFSET(1)]`
+        // holds the first subscript's site in its base
+        val baseStart = primaryStartBefore(sql, spans, m.start)
+        new Site(baseStart, j + 1, Seq((baseStart, m.start), (open + 1, close)), { texts =>
+          val Seq(base, idx) = texts.map(_.trim)
           if (base.isEmpty)
             throw new graft.UnsupportedError(
               s"cannot locate the array expression before [${m.group(1)}(...)]")
@@ -6131,7 +6025,7 @@ object Dialect {
           // (silent wrong value) and throws on 0 even in the try_ form —
           // so non-positive indices are mapped to NULL (SAFE_) or to the
           // erroring 0 (plain forms, which BigQuery also errors on)
-          val repl = m.group(1).toLowerCase match {
+          Some(m.group(1).toLowerCase match {
             case "offset" =>
               s"element_at($base, (CASE WHEN ($idx) >= 0 THEN ($idx) + 1 ELSE 0 END))"
             case "safe_offset" =>
@@ -6140,11 +6034,10 @@ object Dialect {
               s"element_at($base, (CASE WHEN ($idx) >= 1 THEN ($idx) ELSE 0 END))"
             case _ =>
               s"try_element_at($base, (CASE WHEN ($idx) >= 1 THEN ($idx) END))"
-          }
-          cur = cur.substring(0, baseStart) + repl + cur.substring(j + 1)
+          })
+        })
       }
     }
-    throw new graft.UnsupportedError("array subscript rewrite did not terminate")
   }
 
   /** Start index of the postfix primary ending just before `posEx`:
@@ -6223,25 +6116,24 @@ object Dialect {
     */
   private[graft] def rewriteSnowFlatten(sql: String): String = {
     val re = "(?i)(,|\\bCROSS\\s+JOIN\\b)\\s*LATERAL\\s+FLATTEN\\s*\\(".r
-    var cur = sql
-    var guard = 0
-    while (guard < 64) {
-      guard += 1
-      val spans = lex(cur)
-      re.findAllMatchIn(cur).find(m => spans.outside(m.start)) match {
-        case None => return cur
-        case Some(m) =>
-          val open = m.end - 1
-          val close = matchParen(cur, spans, open)
-          if (close < 0)
-            throw new graft.UnsupportedError(s"unbalanced FLATTEN( in: $cur")
-          val args = splitArgs(cur, spans, open + 1, close).map(_.trim)
+    // each FLATTEN's alias, flattened input and path, in statement order
+    final case class Flat(alias: String, e: String, path: Option[String], objectMode: Boolean)
+    val flats = scala.collection.mutable.ArrayBuffer.empty[Flat]
+    val out = rewriteSites(sql) { spans =>
+      re.findAllMatchIn(sql).filter(m => spans.outside(m.start)).map { m =>
+        val open = m.end - 1
+        val close = matchParen(sql, spans, open)
+        if (close < 0)
+          throw new graft.UnsupportedError(s"unbalanced FLATTEN( in: $sql")
+        val aliasM = aliasAt(sql, close + 1)
+        new Site(wsStart(sql, spans, m.start), close + 1 + aliasM.fold(0)(_.end),
+            argRanges(sql, spans, open + 1, close), { texts =>
           var input: Option[String] = None
           var outer = false
           var path: Option[String] = None
           var objectMode = false
           val named = "(?is)^([A-Za-z_]+)\\s*=>\\s*(.*)$".r
-          args.foreach {
+          texts.map(_.trim).foreach {
             case named(k, v) => k.toLowerCase match {
               case "input" => input = Some(v.trim)
               case "outer" => outer = v.trim.equalsIgnoreCase("true")
@@ -6291,62 +6183,52 @@ object Dialect {
             }
             .getOrElse(throw new graft.UnsupportedError(
               "FLATTEN requires input => <array>"))
-          val rest0 = cur.substring(close + 1)
-          val aliasM = "(?is)^\\s*(?:AS\\s+)?([A-Za-z_][A-Za-z0-9_]*)".r
-            .findFirstMatchIn(rest0)
-            .filter(mm => !AliasStopWords.contains(mm.group(1).toLowerCase))
-            .getOrElse(throw new graft.UnsupportedError(
-              "LATERAL FLATTEN requires an [AS] alias (its value/index columns are referenced through it)"))
-          val alias = aliasM.group(1)
+          val alias = aliasM.getOrElse(throw new graft.UnsupportedError(
+            "LATERAL FLATTEN requires an [AS] alias (its value/index columns are referenced through it)"))
+            .group(1)
+          flats += Flat(alias, e, path, objectMode)
           val view =
             if (objectMode) s"explode($e) $alias AS key, value"
             else s"posexplode($e) $alias AS index, value"
-          var next = cur.substring(0, m.start).stripTrailing() +
-            s" LATERAL VIEW ${if (outer) "OUTER " else ""}$view" +
-            rest0.substring(aliasM.end)
-          // VARIANT-metadata output columns (r15; path-arg form r16): for
-          // the non-recursive ARRAY flatten, PATH is '[<index>]' — or
-          // '<path>[<index>]' with a path => argument — and THIS is the
-          // input being flattened — both derivable, substituted at every
-          // reference site. SEQ is an arbitrary per-input-row number even
-          // in Snowflake (no deterministic analogue) — named fail-fast.
-          val metaRe = ("(?i)\\b" + java.util.regex.Pattern.quote(alias) +
-            "\\s*\\.\\s*(seq|path|this)\\b").r
-          var metaGuard = 0
-          var metaFound = true
-          while (metaFound && metaGuard < 256) {
-            metaGuard += 1
-            val nSpans = lex(next)
-            metaRe.findAllMatchIn(next)
-              .find(mm => nSpans.outside(mm.start)) match {
-              case None => metaFound = false
-              case Some(mm) =>
-                val repl = mm.group(1).toLowerCase match {
-                  case "seq" => throw new graft.UnsupportedError(
-                    s"FLATTEN column $alias.seq has no deterministic Spark " +
-                      "analogue (Snowflake's SEQ is an arbitrary per-input-row " +
-                      s"number); use $alias.index or a row_number window")
-                  case "path" =>
-                    if (objectMode)
-                      throw new graft.UnsupportedError(
-                        s"FLATTEN column $alias.path is only supported for ARRAY mode")
-                    // ARRAY mode: Snowflake's PATH is '[i]' for a path-less
-                    // flatten and '<path>[i]' with a path => argument (r16 —
-                    // the path-arg combination was a named fail-fast before);
-                    // the path literal is pre-validated as a dotted/
-                    // subscripted field chain, so splicing it into the
-                    // string literal is quote-safe
-                    val prefix = path.getOrElse("")
-                    s"concat('$prefix[', CAST($alias.index AS STRING), ']')"
-                  case _ => s"($e)"
-                }
-                next = next.substring(0, mm.start) + repl + next.substring(mm.end)
-            }
-          }
-          cur = next
+          Some(s" LATERAL VIEW ${if (outer) "OUTER " else ""}$view")
+        })
       }
     }
-    throw new graft.UnsupportedError("FLATTEN rewrite did not terminate")
+    if (flats.isEmpty) return out
+    // VARIANT-metadata output columns (r15; path-arg form r16): for the
+    // non-recursive ARRAY flatten, PATH is '[<index>]' — or
+    // '<path>[<index>]' with a path => argument — and THIS is the input
+    // being flattened — both derivable, substituted at every reference
+    // site, in one pass over the statement. SEQ is an arbitrary
+    // per-input-row number even in Snowflake (no deterministic analogue)
+    // — named fail-fast.
+    val byAlias = flats.reverseIterator.map(f => f.alias.toLowerCase -> f).toMap
+    val metaRe = "(?i)\\b([A-Za-z_][A-Za-z0-9_]*)\\s*\\.\\s*(seq|path|this)\\b".r
+    // `open`: the aliases whose THIS is being expanded, so an input that
+    // names its own flatten's THIS stays as written instead of recursing
+    def meta(text: String, open: Set[String]): String = replaceOutside(text, metaRe) { mm =>
+      byAlias.get(mm.group(1).toLowerCase).fold(mm.matched) { f =>
+        mm.group(2).toLowerCase match {
+          case "seq" => throw new graft.UnsupportedError(
+            s"FLATTEN column ${f.alias}.seq has no deterministic Spark " +
+              "analogue (Snowflake's SEQ is an arbitrary per-input-row " +
+              s"number); use ${f.alias}.index or a row_number window")
+          case "path" =>
+            if (f.objectMode)
+              throw new graft.UnsupportedError(
+                s"FLATTEN column ${f.alias}.path is only supported for ARRAY mode")
+            // ARRAY mode: Snowflake's PATH is '[i]' for a path-less flatten
+            // and '<path>[i]' with a path => argument (r16 — the path-arg
+            // combination was a named fail-fast before); the path literal
+            // is pre-validated as a dotted/subscripted field chain, so
+            // splicing it into the string literal is quote-safe
+            s"concat('${f.path.getOrElse("")}[', CAST(${f.alias}.index AS STRING), ']')"
+          case _ if open(f.alias.toLowerCase) => mm.matched
+          case _ => "(" + meta(f.e, open + f.alias.toLowerCase) + ")"
+        }
+      }
+    }
+    meta(out, Set.empty)
   }
 
   /** Trino `TRY(expr)` — NULL instead of error. Spark has no generic TRY;

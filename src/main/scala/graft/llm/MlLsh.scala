@@ -54,8 +54,10 @@ object MlLsh {
     */
   /** Exploded hash-entry rows over which broadcasting the build side of
     * the candidate join stays safe: ~48 bytes per (id, entry, bucket)
-    * row ⇒ the default 4M rows ≈ 200 MB built relation — comfortably
-    * inside executor memory and far under Spark's hard 8 GB / 512M-row
+    * row ⇒ the default 4M rows ≈ 200 MB of raw rows. Spark's built hash
+    * relation costs 2–4× the raw bytes, so near the cap it is about
+    * 0.4–0.8 GB, held on the driver and on every executor — inside
+    * default executor memory and far under Spark's hard 8 GB / 512M-row
     * broadcast cap. Overridable via `spark.graft.lsh.broadcastRowCap`
     * (tests set 0 to force and pin the salted shuffle arm).
     */

@@ -731,6 +731,14 @@ object TextAnalysis {
     * a checkpoint dir is configured (cluster mode, where an 8-round
     * learn must survive executor loss) and localCheckpoint otherwise
     * (single-JVM local masters, the established behavior).
+    *
+    * Session conf: while the rounds run it narrows
+    * `spark.sql.shuffle.partitions` to the loop width (when that is
+    * below the session's) on the CALLER's session and restores it after,
+    * so queries running concurrently on that session see the narrowed
+    * width too. Unlike
+    * [[graft.ops.Relational.connectedComponents]] it leaves the
+    * cached-plan AQE flag alone.
     */
   def bpeLearnMerges(docs: DataFrame, rounds: Int = 8,
       textCol: String = "text",

@@ -540,6 +540,13 @@ object Relational {
     * exactly once after convergence (`coalesce(lbl, node)` labels the
     * untouched singletons). Every per-round shuffle is then sized by the
     * candidate-pair graph, not the corpus.
+    *
+    * Session conf: while it runs it sets
+    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` and
+    * narrows `spark.sql.shuffle.partitions` to the loop width (when that
+    * is below the session's) on the CALLER's session, restoring both
+    * after, so queries running concurrently on that session see them
+    * too.
     */
   def connectedComponents(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", nodes: Option[DataFrame] = None,
@@ -660,6 +667,13 @@ object Relational {
     * (nodes-sized, usually small) rank table. Iteration plans are
     * flattened per round so the lineage doesn't grow with iteration
     * count.
+    *
+    * Session conf: while it runs it sets
+    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` and
+    * narrows `spark.sql.shuffle.partitions` to the loop width (when that
+    * is below the session's) on the CALLER's session, restoring both
+    * after, so queries running concurrently on that session see them
+    * too.
     */
   def pageRank(edges: DataFrame, iterations: Int = 3,
       srcCol: String = "src", dstCol: String = "dst",

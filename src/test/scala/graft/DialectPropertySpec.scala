@@ -136,13 +136,72 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
       assertFast(d, sql)
     // 3,200 calls of one function: a call pass lexes once, never rescans
     // its output, and has no limit on the number of calls
+    def sel(item: Int => String) = (0 until 3200).map(i => s"${item(i)} AS x$i")
+      .mkString("SELECT ", ", ", " FROM t")
     for ((d, call) <- Seq[(Dialect, Int => String)](
         Dialect.TsqlIsh -> (i => s"CONVERT(BIGINT, c + $i)"),
         Dialect.Postgresish -> (_ => "TO_CHAR(d, 'YYYY-MM')"),
         Dialect.MySqlish -> (_ => "DATE_FORMAT(d, '%Y-%m')"),
         Dialect.DuckDbish -> (_ => "strftime(d, '%Y-%m')")))
-      assertFast(d, (0 until 3200).map(i => s"${call(i)} AS x$i")
-        .mkString("SELECT ", ", ", " FROM t"))
+      assertFast(d, sel(call))
+    // 3,200 sites of each construct the other site passes rewrite
+    def from(sep: String, item: Int => String) =
+      (0 until 3200).map(item).mkString(s"SELECT k FROM t$sep", sep, "")
+    for ((d, stmt) <- Seq[(Dialect, String)](
+        Dialect.Postgresish -> sel(i => s"sum(x) FILTER (WHERE c > $i)"),
+        Dialect.DuckDbish -> sel(i => s"array_agg(x + $i)"),
+        Dialect.Snowflakeish -> sel(_ => "ARRAY_AGG(x) WITHIN GROUP (ORDER BY y)"),
+        Dialect.Trinoish -> sel(i => s"ARRAY[$i]"),
+        Dialect.BigQueryish -> sel(i => s"a[OFFSET($i)]"),
+        Dialect.Postgresish -> from(", ", i => s"UNNEST(t.a) AS u$i(v$i)"),
+        Dialect.Postgresish -> from(", ", i => s"generate_series(1, $i) AS g$i"),
+        Dialect.TsqlIsh -> from(" ", i => s"CROSS APPLY STRING_SPLIT(s, ',') AS p$i"),
+        Dialect.ClickHouseIsh -> from(" ", i => s"ARRAY JOIN a AS e$i"),
+        Dialect.Snowflakeish -> from(", ", i => s"LATERAL FLATTEN(input => t.a) f$i"),
+        Dialect.SqliteIsh -> (0 until 3200).map(i => s"s GLOB 'a$i*'")
+          .mkString("SELECT k FROM t WHERE ", " OR ", ""),
+        Dialect.TeradataIsh -> sel(i => s"x ** $i")))
+      assertFast(d, stmt)
+  }
+
+  test("site passes rewrite nested and chained sites inside-out") {
+    // expected text is the output of the former rescanning passes
+    assert(Dialect.rewriteBqSubscript("SELECT a[OFFSET(0)][SAFE_OFFSET(1)] AS v FROM t") ===
+      "SELECT try_element_at(element_at(a, (CASE WHEN (0) >= 0 THEN (0) + 1 ELSE 0 END)), " +
+        "(CASE WHEN (1) >= 0 THEN (1) + 1 END)) AS v FROM t")
+    assert(Dialect.rewriteTeradataPower("SELECT a ** b ** c AS v FROM t") ===
+      "SELECT power(power(a, b), c) AS v FROM t")
+    assert(Dialect.rewriteTeradataPower("SELECT (x ** 2) ** f(y ** 3) AS v FROM t") ===
+      "SELECT power((power(x, 2)), f(power(y, 3))) AS v FROM t")
+    assert(Dialect.rewriteArrayLiteral("SELECT ARRAY[ARRAY[1, 2], ARRAY[3]] AS v") ===
+      "SELECT array(array(1, 2), array(3)) AS v")
+    assert(Dialect.rewriteAggFilter(
+      "SELECT sum(x) FILTER (WHERE x > (SELECT max(y) FILTER (WHERE y < 5) FROM u)) AS v FROM t") ===
+      "SELECT sum(CASE WHEN x > (SELECT max(CASE WHEN y < 5 THEN y END) FROM u) THEN x END) AS v FROM t")
+    assert(Dialect.rewriteAggFilter(
+      "SELECT sum(x) FILTER (WHERE c) OVER w AS v FROM t WINDOW w AS (PARTITION BY g)") ===
+      "SELECT sum(CASE WHEN c THEN x END) OVER w AS v FROM t WINDOW w AS (PARTITION BY g)")
+    // a bare array_agg inside a declined ordered call is still rewritten
+    assert(Dialect.rewriteKeepNullArrayAgg(
+      "SELECT array_agg(x ORDER BY (SELECT array_agg(y) FROM u)) AS v FROM t") ===
+      "SELECT array_agg(x ORDER BY (SELECT transform(collect_list(named_struct('__v', y)), " +
+        "s -> s.__v) FROM u)) AS v FROM t")
+    assert(Dialect.rewriteKeepNullArrayAgg(
+      "SELECT array_agg((SELECT array_agg(y) FROM u) ORDER BY k) AS v FROM t") ===
+      "SELECT array_agg((SELECT transform(collect_list(named_struct('__v', y)), " +
+        "s -> s.__v) FROM u) ORDER BY k) AS v FROM t")
+    // FLATTEN metadata referenced before FROM, one flatten over another
+    assert(Dialect.rewriteSnowFlatten("SELECT f.path AS p, g.this AS th, g.value AS v " +
+      "FROM t, LATERAL FLATTEN(input => t.a) f, LATERAL FLATTEN(input => f.value) g") ===
+      "SELECT concat('[', CAST(f.index AS STRING), ']') AS p, (f.value) AS th, g.value AS v " +
+        "FROM t LATERAL VIEW posexplode(t.a) f AS index, value " +
+        "LATERAL VIEW posexplode(f.value) g AS index, value")
+    assert(Dialect.rewriteSnowFlatten("SELECT f.path AS p, f.this AS th, g.path AS gp " +
+      "FROM t, LATERAL FLATTEN(input => t.a, path => 'b') f, LATERAL FLATTEN(input => t.c) g") ===
+      "SELECT concat('b[', CAST(f.index AS STRING), ']') AS p, ((t.a).b) AS th, " +
+        "concat('[', CAST(g.index AS STRING), ']') AS gp " +
+        "FROM t LATERAL VIEW posexplode((t.a).b) f AS index, value " +
+        "LATERAL VIEW posexplode(t.c) g AS index, value")
   }
 
   test("renameFunctions and renameWords apply every rename at once, longest name first") {

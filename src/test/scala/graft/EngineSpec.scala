@@ -1002,4 +1002,38 @@ class EngineSpec extends SparkSpec {
     assert(got.schema === twin.schema)
     assert(got.collect().toSeq === twin.collect().toSeq)
   }
+
+  // one past the counts at which the rescanning passes used to give up
+  private def sameRows(n: Int, dialect: Dialect, tail: String)(
+      item: Int => String, twinItem: Int => String): Unit = {
+    def sql(f: Int => String) = (0 until n).map(i => s"${f(i)} AS x$i")
+      .mkString("SELECT c, ", ", ", s" FROM t1 $tail")
+    val got = Engine.execute(spark, sql(item), Map("t1" -> t1), dialect)
+    val twin = Engine.execute(spark, sql(twinItem), Map("t1" -> t1))
+    assert(got.columns.toSeq === twin.columns.toSeq)
+    assert(got.collect().toSeq === twin.collect().toSeq)
+  }
+
+  test("snowflake: 22 ARRAY_AGG … WITHIN GROUP items run and equal their twin") {
+    sameRows(22, Dialect.Snowflakeish, "GROUP BY c ORDER BY c")(
+      i => s"ARRAY_AGG(b + $i) WITHIN GROUP (ORDER BY a)",
+      i => s"transform(sort_array(collect_list(named_struct('k', a, 'v', b + $i))), s -> s.v)")
+  }
+
+  test("trino: 64 ARRAY literals run and equal their array() twin") {
+    sameRows(64, Dialect.Trinoish, "ORDER BY a")(
+      i => s"ARRAY[c, $i]", i => s"array(c, $i)")
+  }
+
+  test("postgres: 256 FILTERed aggregates run and equal their twin") {
+    sameRows(256, Dialect.Postgresish, "GROUP BY c ORDER BY c")(
+      i => s"sum(b) FILTER (WHERE b > ${i % 25})",
+      i => s"sum(b) FILTER (WHERE b > ${i % 25})")
+  }
+
+  test("bigquery: 256 SAFE_OFFSET subscripts run and equal their twin") {
+    sameRows(256, Dialect.BigQueryish, "ORDER BY a")(
+      i => s"array(c, c + 1, c + 2)[SAFE_OFFSET(${i % 4})]",
+      i => s"try_element_at(array(c, c + 1, c + 2), ${i % 4 + 1})")
+  }
 }
