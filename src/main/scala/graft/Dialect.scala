@@ -69,12 +69,20 @@ import org.apache.spark.sql.types.StructType
   * doubling, backslash plain) double their backslashes, and MySQL and
   * Tableau turn `"…"` strings into `'…'` literals. The other dialects
   * already escape with backslashes as Spark does, so every later pass
-  * lexes Spark's literal syntax and needs no per-dialect flag. The
-  * function-call passes and the clause passes (FILTER, UNNEST, ARRAY
-  * JOIN, subscripts, `**`, …) share one site rewriter
+  * lexes Spark's literal syntax and needs no per-dialect flag. Every
+  * pass that restructures text rides one site rewriter
   * ([[Dialect.rewriteSites]]), which lexes once, rewrites a site's inner
-  * parts before the site and never rescans its output, so each of those
-  * passes is linear in the SQL's length.
+  * parts before the site and never rescans its output, so each pass is
+  * linear in the SQL's length: the function-call passes, the clause
+  * passes (FILTER, UNNEST, ARRAY JOIN, subscripts, `**`, …) and the
+  * statement-level passes (QUALIFY, DISTINCT ON, LIMIT BY, the FETCH
+  * FIRST family, TOP, `* REPLACE`). A statement-level site is one SELECT
+  * scope; its rewrite keeps the statement's own SELECT and appends Spark
+  * pipe operators (`|> WHERE`, `|> EXTEND`, `|> DROP`, `|> SET`, …), so
+  * nothing is analysed against the data and `*` is never expanded. The
+  * rewrite needs a session only for READ_CSV and for two PERCENT probes
+  * (the scale plan's leading-key type, and a percent set-op arm's
+  * output names).
   */
 sealed trait Dialect {
   def rewrite(spark: SparkSession, sql: String,
@@ -201,10 +209,10 @@ object Dialect {
       val steps: Seq[String => String] = Seq(
         escapeBackslashLiterals, // FIRST: later steps generate Spark-escaped literals
         rewriteDoubleQuotedIdents,
-        s => rewriteQualify(s, spark = Some(spark)),
-        s => rewriteDistinctOn(s, spark = Some(spark)),
+        rewriteQualify,
+        rewriteDistinctOn,
         rewriteExclude,
-        s => rewriteStarReplace(spark, s),
+        rewriteStarReplace,
         rewriteGenerateSeriesTable,
         rewriteArrayLiteral,
         rewriteIntDiv,
@@ -276,7 +284,7 @@ object Dialect {
         // rank builder in always-last mode (Trino's documented default:
         // NULLS LAST regardless of direction), OFFSET…FETCH and the
         // bare FETCH map to LIMIT/OFFSET
-        s => rewriteFetchFirstWithTies(s, Some(spark), nullsAlwaysLast = true),
+        s => rewriteFetchFirstWithTies(s, nullsAlwaysLast = true),
         rewriteTsqlOffsetFetch,
         rewriteFetchFirst,
         // LAST: membership null-placement pin — Trino's documented
@@ -322,9 +330,9 @@ object Dialect {
         // EXCEPT (unlike T-SQL's, where minus is only ever an
         // identifier — r19 review: gating it off here made a TOP
         // before MINUS silently limit the COMBINED result)
-        s => rewriteTsqlTop(s, Some(spark), allowPercentTies = false,
+        s => rewriteTsqlTop(s, allowPercentTies = false, qualifyClause = true,
           minusIsSetOp = true),
-        s => rewriteQualify(s, spark = Some(spark)),
+        rewriteQualify,
         // Snowflake spells ordered array_agg WITHIN GROUP; its nulls sort
         // highest (last-on-ASC/first-on-DESC, like Postgres) and — unlike
         // Postgres — NULL VALUES are silently dropped from the array
@@ -375,8 +383,8 @@ object Dialect {
     def rewrite(spark: SparkSession, sql: String,
         schemas: Map[String, StructType]): String = {
       val steps: Seq[String => String] = Seq(
-        s => rewriteQualify(s, spark = Some(spark)),
-        s => rewriteStarReplace(spark, s),
+        rewriteQualify,
+        rewriteStarReplace,
         rewriteUnnest,
         rewriteBqSubscript,
         rewriteFormatDate,
@@ -453,7 +461,10 @@ object Dialect {
         // DISTINCT ON is Postgres's OWN construct (DuckDB copied it) —
         // wired here since r16; runs before the FETCH/paging rewrites
         // like the DuckDB chain runs it before its LIMIT forms
-        s => rewriteDistinctOn(s, spark = Some(spark)),
+        rewriteDistinctOn,
+        // `* REPLACE` is no Postgres syntax, but a star REPLACE reaching
+        // the paging rewrites below becomes `|> SET` first
+        rewriteStarReplace,
         rewriteAggFilter,
         rewriteGenerateSeriesTable,
         rewriteArrayLiteral,
@@ -475,7 +486,7 @@ object Dialect {
         // bare array_agg keeps NULL elements (struct wrap, r15)
         s => rewritePgArrayAgg(s, descNullsLast = false),
         rewriteKeepNullArrayAgg,
-        s => rewriteFetchFirstWithTies(s, Some(spark)), // FETCH FIRST n ROWS WITH TIES (rank filter)
+        s => rewriteFetchFirstWithTies(s), // FETCH FIRST n ROWS WITH TIES (rank filter)
         rewriteTsqlOffsetFetch, // ANSI OFFSET…FETCH paging (Postgres-legal)
         rewriteFetchFirst,      // …and the standalone FETCH FIRST n
         s => renameFunctions(s, renames),
@@ -530,8 +541,10 @@ object Dialect {
         rewriteOracleToDate,
         rewritePgToChar,
         rewriteOracleRownum,
-        s => rewriteFetchFirstPercent(s, Some(spark)), // FETCH FIRST n PERCENT (r15, before the plain forms)
-        s => rewriteFetchFirstWithTies(s, Some(spark)), // FETCH FIRST n ROWS WITH TIES (rank filter)
+        // FETCH FIRST n PERCENT, before the plain forms; the session serves
+        // the percent scale plan's leading-key type probe only
+        s => rewriteFetchFirstPercent(s, Some(spark)),
+        s => rewriteFetchFirstWithTies(s), // FETCH FIRST n ROWS WITH TIES (rank filter)
         rewriteTsqlOffsetFetch, // Oracle 12c OFFSET…FETCH paging
         rewriteFetchFirst,      // …and the standalone FETCH FIRST n
         s => renameWords(s, Map("MINUS" -> "EXCEPT", "SYSDATE" -> "current_timestamp()")),
@@ -570,6 +583,8 @@ object Dialect {
         escapeBackslashLiterals,
         rewriteBracketIdents,
         rewriteTsqlPivot, // after brackets: the IN values arrive backticked
+        // the session serves the TOP PERCENT probes only (the scale plan's
+        // leading-key type, and the output names of a percent set-op arm)
         s => rewriteTsqlTop(s, Some(spark)),
         rewriteTsqlOffsetFetch,
         rewriteTsqlApply,  // before rewriteStringSplit maps the call itself
@@ -613,7 +628,7 @@ object Dialect {
         rewriteRsDateAdd,
         rewriteRsDateDiff,
         rewriteRsBareTypes,
-        s => rewriteQualify(s, spark = Some(spark)),
+        rewriteQualify,
         s => renameFunctions(s, renames),
         // LAST: membership null-placement pin (Redshift sorts nulls largest)
         s => pinSortNulls(s))
@@ -657,14 +672,15 @@ object Dialect {
         rewriteTeradataInfixMod,
         rewriteTeradataPower,
         rewriteTeradataZeroNull,
-        // Teradata QUALIFY runs BEFORE TOP: the plain-TOP path emits its
-        // LIMIT at scope end so the later QUALIFY step carries it as the
-        // tail, and the TIES/PERCENT path (r18) hands the qualify rewrite
-        // INTO the rank builder so the filtered rows are ranked
-        s => rewriteTsqlTop(s, Some(spark),
-          qualifyRewrite = Some(q => rewriteQualify(q, spark = Some(spark))),
+        // Teradata evaluates QUALIFY before TOP. The TOP rewrite runs
+        // first and leaves the QUALIFY clause in its SELECT: a plain TOP
+        // appends LIMIT, which the QUALIFY rewrite then turns into a pipe
+        // after its filter, and a TIES/PERCENT rank follows as
+        // `|> EXTEND`, which the QUALIFY rewrite keeps after its filter.
+        // The session serves the TOP PERCENT probes only.
+        s => rewriteTsqlTop(s, Some(spark), qualifyClause = true,
           minusIsSetOp = true), // MINUS is a Teradata set operator
-        s => rewriteQualify(s, spark = Some(spark)),
+        rewriteQualify,
         s => renameFunctions(s, renames))
       steps.foldLeft(sql)((s, f) => f(s))
     }
@@ -702,7 +718,7 @@ object Dialect {
         schemas: Map[String, StructType]): String = {
       val steps: Seq[String => String] = Seq(
         rewriteChArrayJoin, // FIRST: the clause wraps exprs later steps rewrite
-        s => rewriteChLimitBy(s, Some(spark)), // SECOND: restructures the statement around the body
+        rewriteChLimitBy,
         rewriteChAggIf,
         rewriteChMultiIf,
         rewriteChTo,
@@ -1070,11 +1086,7 @@ object Dialect {
 
   /** The innermost parenthesized span enclosing position `at`:
     * Some((open, close)) indices of the paren pair, None at depth 0 or
-    * on unbalanced text. Shared by the subquery-level WITH TIES /
-    * QUALIFY / DISTINCT ON recursions (r15 inline in WITH TIES;
-    * factored r16): the clause's enclosing statement — a subquery or a
-    * CTE body — is rewritten in place, then the caller rescans the
-    * splice.
+    * on unbalanced text.
     */
   private def enclosingParen(sql: String, spans: Spans,
       at: Int): Option[(Int, Int)] = {
@@ -1269,55 +1281,6 @@ object Dialect {
         Some(" " * (b - a))
       case _ => None
     }
-  }
-
-  /** The optimizer hint directly after the SELECT at `selIdx`, as
-    * `"/*+ … */ "` (trailing space) plus the index just past it — or
-    * `("", selIdx + 6)` when none. `spans` must be the opaque spans of
-    * `sql` so the hint's extent is the lexer's, not a regex guess.
-    * Shared by the QUALIFY and paging rewrites (r17 review: two copies
-    * had already appeared).
-    */
-  private def leadingHint(sql: String, selIdx: Int,
-      spans: Spans): (String, Int) = {
-    val out = new StringBuilder
-    var end = selIdx + "SELECT".length
-    var hs = end
-    var more = true
-    // Spark's grammar is `SELECT (hint)* …` — CONSECUTIVE hint blocks
-    // are all honored, so all are consumed (third r17 review pass: a
-    // single-block capture left the second hint inside the first
-    // select item)
-    while (more) {
-      more = false
-      while (hs < sql.length && sql.charAt(hs).isWhitespace) hs += 1
-      if (sql.startsWith("/*+", hs)) {
-        spans.at(hs).foreach { sp =>
-          out.append(sql.substring(sp.start, sp.end)).append(' ')
-          hs = sp.end
-          end = sp.end
-          more = true
-        }
-      }
-    }
-    (out.toString, end)
-  }
-
-  /** [[leadingHint]] plus DISTINCT detection for one select scope —
-    * `(hint, isDistinct, itemsStart)`, with DISTINCT matched AFTER the
-    * hint (the SELECT-anchored spelling misses `SELECT /*+ … */
-    * DISTINCT`) and a named error when DISTINCT ON follows instead.
-    * Shared by the QUALIFY and paging rewrites (third r17 review pass:
-    * the trio had been duplicated between them).
-    */
-  private def hintAndDistinct(sql: String, selIdx: Int,
-      spans: Spans, onDistinctOn: => String): (String, Boolean, Int) = {
-    val (hint, afterHint) = leadingHint(sql, selIdx, spans)
-    val rest = sql.substring(afterHint)
-    if ("(?is)^\\s*DISTINCT\\s+ON\\b".r.findFirstIn(rest).isDefined)
-      throw new graft.UnsupportedError(onDistinctOn)
-    val dm = "(?is)^\\s*DISTINCT\\b\\s*".r.findFirstMatchIn(rest)
-    (hint, dm.isDefined, afterHint + dm.map(_.end).getOrElse(0))
   }
 
   /** `SEL` → `SELECT` — Teradata's statement-keyword abbreviation. Word
@@ -1567,7 +1530,7 @@ object Dialect {
       Some(s"CAST(CAST(${args(0)} AS TIMESTAMP) AS DOUBLE)")
     }
 
-  // ---- QUALIFY ------------------------------------------------------------
+  // ---- select items and sort keys ----------------------------------------
 
   /** Paren depth before each character, skipping the lexer's spans. */
   private def depthAt(sql: String, spans: Spans): Array[Int] = {
@@ -1597,10 +1560,10 @@ object Dialect {
 
   /** Output-column name of a select-list item: the identifier after a
     * trailing AS, or the last segment of a bare column reference. Anything
-    * else (un-aliased expression, `*`) raises — QUALIFY rewriting needs a
-    * name to re-select by.
+    * else (un-aliased expression, `*`) raises — a sort key under SELECT
+    * DISTINCT must resolve to a name.
     */
-  private def itemName(item: String, construct: String = "QUALIFY"): String = {
+  private def itemName(item: String, construct: String): String = {
     val t = item.trim
     val asRe = "(?i)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*|`[^`]+`)\\s*$".r
     asRe.findFirstMatchIn(t) match {
@@ -1684,113 +1647,367 @@ object Dialect {
     }.mkString(", ")
   }
 
-  /** `QUALIFY <pred>` (Snowflake/DuckDB/BigQuery — filter on window results;
-    * Spark has no such clause) → subquery + WHERE:
-    *
-    *   - predicate over ALIASED window columns (`QUALIFY rn <= 3`): wrap the
-    *     select and filter — `SELECT * FROM (inner) WHERE pred`.
-    *   - predicate with an INLINE window (`QUALIFY row_number() OVER (…) = 1`,
-    *     the canonical idiom): the window cannot live in a WHERE clause, so
-    *     it is materialized as a boolean column inside the subquery and the
-    *     outer select re-projects the original output names —
-    *     `SELECT names FROM (SELECT items, (pred) AS __qual FROM …) WHERE __qual`.
-    *
-    * Both preserve QUALIFY semantics exactly because the inner query is
-    * unfiltered: windows see the same rows they would in the source engine.
-    * `SELECT DISTINCT` composes (r17): QUALIFY evaluates BEFORE DISTINCT
-    * in Snowflake/DuckDB, so the inner query drops the DISTINCT and the
-    * outer name re-projection re-applies it — the __qual column never
-    * reaches the distinct.
-    * The inline-window form's outer projection re-selects by NAME, so a
-    * star select list — `SELECT * FROM t QUALIFY row_number() OVER (…) =
-    * 1`, the single most common QUALIFY idiom — expands from the
-    * registered schemas via [[expandStarItems]] (r16; "cannot name: *"
-    * before). The inner query keeps the star text itself (`SELECT *,
-    * (pred) AS __qual` is valid Spark); only the names come from the
-    * expansion.
+  // ---- statement-level rewrites: SELECT scopes and pipe suffixes ---------
+
+  /** The regions of one SELECT scope a rewrite receives rewritten: each
+    * select item, the FROM body (FROM through HAVING/WINDOW), the QUALIFY
+    * predicate, the ORDER BY keys, the LIMIT/OFFSET/FETCH paging, a run
+    * of pipe operators and the DISTINCT ON keys. Texts are trimmed.
     */
-  private[graft] def rewriteQualify(sql0: String,
-      spark: Option[SparkSession] = None): String = {
-    // comments are normalized to whitespace up front (r17 review):
-    // [[blankComments]] is length-preserving, so no offset shifts; a
-    // QUALIFY keyword or a paren inside a comment can no longer trigger
-    // the rewrite or skew the depth map, and the single-line splices
-    // below (`) __qualify WHERE __qual`) cannot be swallowed by a
-    // trailing `--` comment at the end of the inner statement (a
-    // confirmed parse-error repro on legal Snowflake text). Statements
-    // the rewrite does not touch are returned byte-identical (sql0).
-    val sql = blankComments(sql0)
-    val spans = lex(sql)
-    val depth = depthAt(sql, spans)
-    val qIdx = topLevelKeyword(sql, spans, depth, "QUALIFY")
-    if (qIdx < 0) {
-      // SUBQUERY/CTE-level QUALIFY (r16 — a raw Spark parse error
-      // before; `WITH x AS (SELECT … QUALIFY …)` is the canonical
-      // Snowflake idiom): rewrite the innermost parenthesized statement
-      // containing the clause in place, then rescan the splice
-      val m = "(?i)\\bQUALIFY\\b".r.findAllMatchIn(sql)
-        .find(mm => spans.outside(mm.start) && depth(mm.start) > 0)
-        .getOrElse(return sql0)
-      val (open, close) = enclosingParen(sql, spans, m.start)
-        .getOrElse(return sql0)
-      val inner = sql.substring(open + 1, close)
-      val rebuilt = rewriteQualify(inner, spark)
-      if (rebuilt == inner) return sql0 // not a rewritable inner statement — stay loud
-      return rewriteQualify(
-        sql.substring(0, open + 1) + rebuilt + sql.substring(close), spark)
+  private final case class Parts(items: Seq[String], body: String,
+      pred: Option[String], keys: Option[String], page: Option[String],
+      pipes: Option[String], on: Option[String]) {
+    def itemList: String = items.mkString(", ")
+  }
+
+  private val SetOpArm = ("(?is)(UNION|INTERSECT|EXCEPT|MINUS)\\b\\s*" +
+    "(?:(?:ALL|DISTINCT)\\b\\s*)?(?:\\(|(?:SELECT|VALUES|TABLE|WITH)\\b)").r
+  private val ScopeClause =
+    "(?i)\\b(FROM|QUALIFY|ORDER\\s+BY|LIMIT|OFFSET(?!\\s*\\()|FETCH)\\b|\\|>".r
+  private val DistinctOnClause = "(?is)DISTINCT\\s+ON\\s*\\(".r
+  private val DistinctWord = "(?is)DISTINCT\\b".r
+  private val TopClause = ("(?is)TOP\\s+\\(?\\s*(\\d+(?:\\.\\d+)?)\\s*\\)?" +
+    "(\\s+PERCENT)?(\\s+WITH\\s+TIES)?(?=\\s)").r
+
+  private def isWordChar(c: Char): Boolean = c.isLetterOrDigit || c == '_'
+
+  /** Words after which the next token is an operand, never a clause. */
+  private val OperandContext = Set("from", "join", "as", "select", "where", "and",
+    "or", "on", "not", "by", "when", "then", "else", "distinct", "in", "like",
+    "between", "top", "ties", "having", "using")
+
+  /** The word that ends at `end` (exclusive), lowercased. */
+  private def wordBefore(sql: String, end: Int): String = {
+    var b = end
+    while (b > 0 && isWordChar(sql.charAt(b - 1))) b -= 1
+    sql.substring(b, end).toLowerCase
+  }
+
+  /** Index of the last character before `i` that is neither whitespace
+    * nor inside a comment; -1 when there is none.
+    */
+  private def prevToken(sql: String, spans: Spans, i: Int): Int = {
+    var j = i - 1
+    var moved = true
+    while (moved) {
+      moved = false
+      while (j >= 0 && sql.charAt(j).isWhitespace) { j -= 1; moved = true }
+      spans.at(j).filter(_.kind == SpanKind.Comment).foreach { sp => j = sp.start - 1; moved = true }
     }
-    val afterQ = qIdx + "QUALIFY".length
-    val boundary = Seq("ORDER", "LIMIT")
-      .map(kw => topLevelKeyword(sql, spans, depth, kw, afterQ))
-      .filter(_ >= 0)
-      .sorted.headOption.getOrElse(sql.length)
-    val inner = sql.substring(0, qIdx).trim
-    val pred = sql.substring(afterQ, boundary).trim
-    val tail = sql.substring(boundary)
-    if (pred.isEmpty) throw new graft.UnsupportedError("QUALIFY requires a predicate")
-    val predSpans = lex(pred)
-    val hasWindow = "(?i)\\bOVER\\s*\\(".r.findAllMatchIn(pred)
-      .exists(m => predSpans.outside(m.start))
-    if (!hasWindow) {
-      s"SELECT * FROM ( $inner ) __qualify WHERE $pred $tail"
-    } else {
-      val iSpans = lex(inner)
-      val iDepth = depthAt(inner, iSpans)
-      val selIdx = topLevelKeyword(inner, iSpans, iDepth, "SELECT")
-      val fromIdx = topLevelKeyword(inner, iSpans, iDepth, "FROM")
-      if (selIdx != 0 || fromIdx < 0)
-        throw new graft.UnsupportedError(s"cannot locate SELECT … FROM around QUALIFY in: $sql")
-      // a leading optimizer hint names no output column — item parsing
-      // starts after it; the emitted inner select keeps it (r17 review).
-      // SELECT DISTINCT composes since r17: QUALIFY evaluates BEFORE
-      // DISTINCT in Snowflake/DuckDB, so the inner query drops the
-      // DISTINCT (windows + __qual over the raw rows, filtered) and the
-      // OUTER projection re-applies it over the output names (__qual
-      // never leaks into the distinct). DISTINCT ON has its own earlier
-      // rewrite — named error if one reaches here.
-      val (hint, isDistinct, parseStart) = hintAndDistinct(inner, selIdx, iSpans,
-        "QUALIFY with an inline window is not supported under SELECT DISTINCT ON " +
-          "(rewrite DISTINCT ON first)")
-      val rawItems =
-        splitArgs(inner, iSpans, parseStart, fromIdx).map(_.trim).filter(_.nonEmpty)
-      val items = expandStarItems(spark, rawItems,
-        inner.substring(fromIdx), "QUALIFY")
-      val names = items.map(itemName(_)).mkString(", ")
-      // the inner query keeps the user's select-list text (a plain `*`
-      // is valid Spark, and a leading hint survives in place) — EXCEPT
-      // when an item is a REPLACE-star or qualified-EXCEPT star (Spark
-      // cannot parse those inline: the expansion is spliced instead) or
-      // under DISTINCT (dropped from the inner; hint kept)
-      val innerList =
-        if (rawItems.exists(starNeedsExpansion)) hint + items.mkString(", ")
-        else if (isDistinct) hint + inner.substring(parseStart, fromIdx).trim
-        else inner.substring(selIdx + "SELECT".length, fromIdx).trim
-      val augmented = "SELECT " + innerList +
-        s" , ($pred) AS __qual " + inner.substring(fromIdx)
-      val outerSel = if (isDistinct) "SELECT DISTINCT" else "SELECT"
-      s"$outerSel $names FROM ( $augmented ) __qualify WHERE __qual $tail"
+    j
+  }
+
+  /** One SELECT's scope, parsed at the SELECT's own paren depth over the
+    * pass's one lexing: no analysis, nothing executed. The scope runs
+    * from the SELECT keyword to the `)` that closes its enclosing paren,
+    * a set operation at its depth, or the end of the text. Its regions
+    * ([[Parts]]) are the holes of its [[Site]], so the scopes nested in
+    * them are rewritten before it and nothing is rescanned.
+    * `qualifyClause` says whether QUALIFY is a clause in the dialect;
+    * where it is not, a word `qualify` is an identifier.
+    */
+  private final class Sel(sql: String, spans: Spans, depth: Array[Int],
+      val start: Int, qualifyClause: Boolean) {
+    private val d = depth(start)
+    private val hintText = new StringBuilder
+    /** `i0` moved past whitespace and comments, keeping optimizer hints. */
+    private def skip(i0: Int): Int = {
+      var i = i0
+      var more = true
+      while (more) {
+        more = false
+        while (i < sql.length && sql.charAt(i).isWhitespace) i += 1
+        spans.at(i).filter(_.kind == SpanKind.Comment).foreach { sp =>
+          if (sql.startsWith("/*+", sp.start)) hintText.append(sql.substring(sp.start, sp.end)).append(' ')
+          i = sp.end
+          more = true
+        }
+      }
+      i
+    }
+    private var pos = skip(start + "SELECT".length)
+    /** `DISTINCT ON (…)`: its key list's parens. */
+    val distinctOn: Option[(Int, Int)] =
+      prefixMatch(DistinctOnClause, sql, pos).map { m =>
+        val open = pos + m.end - 1
+        val close = matchParen(sql, spans, open)
+        if (close < 0) throw new graft.UnsupportedError(s"unbalanced DISTINCT ON ( in: $sql")
+        pos = skip(close + 1)
+        (open, close)
+      }
+    val distinct: Boolean = distinctOn.isEmpty &&
+      prefixMatch(DistinctWord, sql, pos).map { m => pos = skip(pos + m.end) }.isDefined
+    /** T-SQL/Snowflake/Teradata `TOP n [PERCENT] [WITH TIES]`. */
+    val top: Option[(String, Boolean, Boolean)] = prefixMatch(TopClause, sql, pos).map { m =>
+      pos = skip(pos + m.end)
+      (m.group(1), m.group(2) != null, m.group(3) != null)
+    }
+    /** The SELECT-adjacent optimizer hints, each followed by a space. */
+    val hints: String = hintText.toString
+    private val itemsStart = pos
+    /** Where the scope ends, and the set operation that ends it. */
+    val (end: Int, setOpAfter: Option[String]) = {
+      var i = itemsStart
+      var found: (Int, Option[String]) = (sql.length, None)
+      while (i < found._1) {
+        if (depth(i) == d && spans.outside(i)) {
+          val c = sql.charAt(i)
+          if (c == ')') found = (i, None)
+          else if ("uUiIeEmM".indexOf(c) >= 0 && (i == 0 || !isWordChar(sql.charAt(i - 1))))
+            prefixMatch(SetOpArm, sql, i).foreach { m =>
+              val p = prevToken(sql, spans, i)
+              if (p < 0 || sql.charAt(p) != '*') found = (i, Some(m.group(1).toUpperCase))
+            }
+        }
+        i += 1
+      }
+      found
+    }
+    /** The scope is the operand of a set operation before or after it. */
+    val armAfter: Boolean = setOpAfter.isDefined
+    val armBefore: Boolean = {
+      val p = prevToken(sql, spans, start)
+      var w = if (p < 0) "" else wordBefore(sql, p + 1)
+      if (w == "all" || w == "distinct") {
+        val q = prevToken(sql, spans, p + 1 - w.length)
+        w = if (q < 0) "" else wordBefore(sql, q + 1)
+      }
+      Set("union", "intersect", "except", "minus").contains(w)
+    }
+    // clause keywords at the scope's depth: (start, end, kind)
+    private val marks: Vector[(Int, Int, String)] =
+      ScopeClause.findAllMatchIn(java.nio.CharBuffer.wrap(sql, itemsStart, end))
+        .map(m => (itemsStart + m.start, itemsStart + m.end,
+          Option(m.group(1)).fold("|>")(_.toUpperCase.replaceAll("\\s+", " "))))
+        .filter { case (a, _, _) => depth(a) == d && spans.outside(a) }.toVector
+    /** Index of the FROM keyword, -1 when the SELECT has none. */
+    val from: Int = marks.find { case (a, _, k) =>
+      k == "FROM" && { val p = prevToken(sql, spans, a); p < 0 || wordBefore(sql, p + 1) != "distinct" }
+    }.fold(-1)(_._1)
+    private val pipe = marks.find(m => m._1 > from && m._3 == "|>")
+    // the clause keywords between the FROM and the first pipe
+    private val tail = marks.filter(m => m._1 > from && pipe.forall(m._1 < _._1))
+    private def first(kinds: Set[String]) = tail.find(m => kinds(m._3))
+    // a `qualify` after a word or operator that expects an operand names
+    // a table, alias or column
+    private val qualify = tail.find { case (a, _, k) =>
+      k == "QUALIFY" && {
+        val p = prevToken(sql, spans, a)
+        p < 0 || (!",.=<>+-*/%(".contains(sql.charAt(p)) &&
+          !OperandContext.contains(wordBefore(sql, p + 1)))
+      }
+    }
+    /** A QUALIFY sits in clause position, whether or not the dialect has
+      * the clause.
+      */
+    val qualifyWord: Boolean = qualify.isDefined
+    // the QUALIFY / ORDER BY / paging clauses and the pipes: (keyword
+    // start, text start, kind)
+    private val clauses: Vector[(Int, Int, String)] =
+      Vector(qualify.filter(_ => qualifyClause).map(m => (m._1, m._2, "pred")),
+        first(Set("ORDER BY")).map(m => (m._1, m._2, "keys")),
+        first(Set("LIMIT", "OFFSET", "FETCH")).map(m => (m._1, m._1, "page")),
+        pipe.map(m => (m._1, m._1, "pipes"))).flatten.sortBy(_._1)
+    private def regionEnd(a: Int): Int = clauses.map(_._1).find(_ > a).getOrElse(end)
+    /** Start of the first clause after the FROM body, or the scope end. */
+    val bodyEnd: Int = clauses.headOption.fold(end)(_._1)
+    /** Tagged regions, in text order: (start, end, kind). */
+    private val regions: Vector[(Int, Int, String)] = {
+      val itemsEnd = if (from >= 0) from else bodyEnd
+      distinctOn.map { case (o, c) => (o + 1, c, "on") }.toVector ++
+        argRanges(sql, spans, itemsStart, itemsEnd).map { case (a, b) => (a, b, "item") } ++
+        (if (from >= 0) Vector((from, bodyEnd, "body")) else Vector.empty) ++
+        clauses.map { case (a, textStart, k) => (textStart, regionEnd(a), k) }
+    }
+    def region(kind: String): Option[(Int, Int)] =
+      regions.find(_._3 == kind).map(r => (r._1, r._2))
+    /** The select items as written. */
+    def itemTexts: Seq[String] = regions.collect { case (a, b, "item") => sql.substring(a, b) }
+
+    /** Whether sql[a, b) calls a window function. */
+    def hasWindow(a: Int, b: Int): Boolean =
+      "(?i)\\bOVER\\s*\\(".r.findAllMatchIn(java.nio.CharBuffer.wrap(sql, a, b))
+        .exists(m => spans.outside(a + m.start))
+
+    /** A site over `[from, to)` whose holes are this scope's regions
+      * inside it, except the kinds in `skip`.
+      */
+    def site(from: Int = start, to: Int = end, skip: Set[String] = Set.empty)(
+        build: Parts => String): Site = {
+      val holes = regions.filter { case (a, b, k) => a >= from && b <= to && !skip(k) }
+      new Site(from, to, holes.map(r => (r._1, r._2)), texts => {
+        val byKind = holes.map(_._3).zip(texts.map(t => lineSafe(t.trim)))
+        def one(k: String) = byKind.collectFirst { case (`k`, t) => t }
+        Some(build(Parts(byKind.collect { case ("item", t) => t }, one("body").getOrElse(""),
+          one("pred"), one("keys"), one("page"), one("pipes"), one("on"))))
+      })
+    }
+
+    /** The replacement text for this scope: `core` (its SELECT and pipe
+      * operators) followed by its ORDER BY and paging as pipe operators
+      * (a pipe cannot follow a statement-level ORDER BY or LIMIT) and by
+      * its existing pipes. A pipe binds to everything on its left, so a
+      * set-operation arm is parenthesized; in the last arm, the ORDER BY
+      * and paging belong to the combined result and stay after the arm.
+      */
+    def emit(p: Parts, core: String): String = {
+      val pipes = p.pipes.fold("")(" " + _)
+      if (armBefore && !armAfter)
+        s"($core$pipes)" + p.keys.fold("")(" ORDER BY " + _) + p.page.fold("")(" " + _)
+      else {
+        val out = core + p.keys.fold("")(" |> ORDER BY " + _) +
+          p.page.fold("")(" |> " + _) + pipes
+        if (armAfter) s"($out) " else out
+      }
     }
   }
+
+  /** `t` followed by a newline when it ends inside a `--` comment, so
+    * that nothing appended after it is swallowed by the comment.
+    */
+  private def lineSafe(t: String): String =
+    if (t.contains("--") && lex(t).all.lastOption.exists(sp =>
+        sp.kind == SpanKind.Comment && sp.end == t.length && t.startsWith("--", sp.start) &&
+          !t.endsWith("\n"))) t + "\n"
+    else t
+
+  /** Rewrite the SELECT scopes `siteOf` picks, over one lexing, when
+    * `trigger` occurs in `sql` at all.
+    */
+  private def rewriteScopes(sql: String, trigger: String, qualifyClause: Boolean = false)(
+      siteOf: Sel => Option[Site]): String =
+    if (("(?i)" + trigger).r.findFirstIn(sql).isEmpty) sql
+    else rewriteSites(sql) { spans =>
+      val depth = depthAt(sql, spans)
+      "(?i)\\bSELECT\\b".r.findAllMatchIn(sql).filter(m => spans.outside(m.start))
+        .flatMap(m => siteOf(new Sel(sql, spans, depth, m.start, qualifyClause)))
+    }
+
+  private val StarItem = "(?s)^\\s*(?:[A-Za-z_][A-Za-z0-9_]*\\s*\\.\\s*)?\\*".r
+  private def isStar(item: String): Boolean = StarItem.findFirstIn(item).isDefined
+  private val Ordinal = "\\d+".r
+
+  /** Sort keys `ord` for a window over the select `items`: each ordinal
+    * becomes its item's expression (an integer inside OVER is a constant)
+    * and, with `aliases`, a key naming a select alias its aliased
+    * expression. None when an ordinal lands on or after a star item,
+    * whose columns only the analyzer knows, or on an [[opaqueItem]].
+    */
+  private def windowKeys(ord: String, items: Seq[String], construct: String,
+      aliases: Boolean): Option[String] = {
+    val firstStar = items.indexWhere(isStar)
+    if (sortKeys(ord).exists { k =>
+        val e = splitSortSuffix(k)._1
+        Ordinal.matches(e) && ((firstStar >= 0 && e.toInt > firstStar) ||
+          items.lift(e.toInt - 1).exists(opaqueItem))
+      }) None
+    else {
+      val resolved = resolveOrdinalSortKeys(ord, items, construct)
+      Some(if (aliases) aliasKeys(resolved, items) else resolved)
+    }
+  }
+
+  /** An item whose expression the text cannot separate from an alias
+    * (`v + 1 d`): neither `AS`-aliased, nor a recognized implicit alias,
+    * yet ending in a bare word after whitespace.
+    */
+  private def opaqueItem(item: String): Boolean = {
+    val t = item.trim
+    itemExpr(t) == t && "(?s).*\\s([A-Za-z_][A-Za-z0-9_]*)$".r.findFirstMatchIn(t)
+      .exists(m => !ImplicitAliasStop.contains(m.group(1).toLowerCase))
+  }
+
+  /** The comma-separated keys of `ord`, trimmed. */
+  private def sortKeys(ord: String): Seq[String] =
+    splitArgs(ord, lex(ord), 0, ord.length).map(_.trim)
+
+  /** `ord` with each ordinal key naming the generated column `colN` that
+    * [[byPosition]] gives the (n+1)-th output column.
+    */
+  private def positionalKeys(ord: String): String = sortKeys(ord).map { k =>
+    val (e, sfx) = splitSortSuffix(k)
+    if (Ordinal.matches(e)) s"col${e.toInt - 1} $sfx".trim else k
+  }.mkString(", ")
+
+  /** Pipe operators that compute `cols` and apply `filter` over a query's
+    * output by POSITION: `stack(1, *)` copies the output columns as
+    * col0, col1, …, so an ordinal key resolves without knowing the names
+    * behind a star, and `struct(*)` restores the columns afterwards.
+    */
+  private def byPosition(cols: String, filter: String): String =
+    s" |> SELECT *, struct(*) AS __pos, stack(1, *) |> EXTEND $cols$filter |> SELECT __pos.*"
+
+  /** `part` with the dialect's default null placement pinned when it
+    * spells none: NULLS LAST both ways when `alwaysLast` (DuckDB,
+    * ClickHouse, Trino), else nulls largest (last on ASC, first on DESC).
+    */
+  private def pinNulls(part: String, alwaysLast: Boolean): String =
+    if ("(?is)\\bNULLS\\s+(FIRST|LAST)\\s*$".r.findFirstIn(part).isDefined) part
+    else if ("(?is)\\bDESC\\s*$".r.findFirstIn(part).isDefined)
+      part + (if (alwaysLast) " NULLS LAST" else " NULLS FIRST")
+    else part + " NULLS LAST"
+
+  /** `SELECT hints items body` with a row_number() per `part` ordered by
+    * `ord` in column `col`, keeping the rows where `keep` holds — computed
+    * in the SELECT itself, or over its output by position when an ordinal
+    * sort key lands on a star item.
+    */
+  private def numbered(hints: String, items: Seq[String], body: String,
+      part: String, ord: String, ordinals: Boolean, col: String, keep: String,
+      construct: String, aliases: Boolean): String = {
+    val select = s"SELECT $hints${items.mkString(", ")}"
+    val keys =
+      if (ordinals) windowKeys(ord, items, construct, aliases)
+      else Some(if (aliases) aliasKeys(ord, items) else ord)
+    keys match {
+      case Some(o) =>
+        s"$select, row_number() OVER (PARTITION BY $part ORDER BY $o) AS $col $body " +
+          s"|> WHERE $keep |> DROP $col"
+      case None =>
+        s"$select $body" + byPosition(
+          s"row_number() OVER (PARTITION BY $part ORDER BY ${positionalKeys(ord)}) AS $col",
+          s" |> WHERE $keep")
+    }
+  }
+
+  // ---- QUALIFY ------------------------------------------------------------
+
+  /** `QUALIFY <pred>` (Snowflake/DuckDB/BigQuery/Teradata/Redshift — a
+    * filter on window results; Spark has no such clause) → a pipe suffix
+    * on the scope's own SELECT, in any scope (CTE bodies and subqueries
+    * included):
+    *
+    *   - a predicate calling a window: `SELECT items, (pred) AS __qual
+    *     FROM … |> WHERE __qual |> DROP __qual`. The window sees the
+    *     unfiltered rows, exactly as QUALIFY's, and `pred` may name a
+    *     select alias (Spark resolves lateral aliases);
+    *   - a predicate over aliased window columns (`QUALIFY rn <= 3`):
+    *     `SELECT items FROM … |> WHERE pred`.
+    *
+    * The select list is kept as written, so `*` needs no expansion.
+    * QUALIFY evaluates before DISTINCT in Snowflake and DuckDB, so under
+    * DISTINCT the SELECT drops the keyword and `|> SELECT DISTINCT *`
+    * follows the filter. The scope's ORDER BY and paging become pipe
+    * operators after it ([[Sel.emit]]).
+    */
+  private[graft] def rewriteQualify(sql: String): String =
+    rewriteScopes(sql, "\\bQUALIFY\\b", qualifyClause = true) { sel =>
+      sel.region("pred").map { case (a, b) =>
+        if (sel.distinctOn.isDefined)
+          throw new graft.UnsupportedError(
+            "QUALIFY is not supported under SELECT DISTINCT ON (rewrite DISTINCT ON first)")
+        val window = sel.hasWindow(a, b)
+        sel.site() { p =>
+          val pred = p.pred.get
+          if (pred.isEmpty) throw new graft.UnsupportedError("QUALIFY requires a predicate")
+          val select = s"SELECT ${sel.hints}${p.itemList}"
+          val core =
+            if (window) s"$select, ($pred) AS __qual ${p.body} |> WHERE __qual |> DROP __qual"
+            else s"$select ${p.body} |> WHERE $pred"
+          sel.emit(p, core + (if (sel.distinct) " |> SELECT DISTINCT *" else ""))
+        }
+      }
+    }
 
   /** DuckDB `* EXCLUDE (cols)` / `* EXCLUDE col` → Spark `* EXCEPT (cols)`
     * (verified native in Spark 4). Only the star-adjacent keyword is
@@ -1803,375 +2020,642 @@ object Dialect {
       m => s"* EXCEPT (${m.group(1)})")
   }
 
-  /** DuckDB/BigQuery `SELECT * REPLACE (expr AS col[, …]) FROM <table>` —
-    * Spark has `* EXCEPT` natively but no REPLACE, and an EXCEPT+append
-    * emulation would move the replaced column to the END of the row
-    * (REPLACE keeps its position). The star is instead expanded to the
-    * FROM table's explicit column list — resolved from the registered
-    * view at rewrite time ([[Engine.execute]] registers tables before
-    * dialect rewriting) — with each replaced column's expression
-    * substituted IN POSITION under its original name. A combined
-    * `* EXCLUDE (…) REPLACE (…)` (r19 — a raw parse error before;
-    * DuckDB's grammar order, EXCLUDE first) drops the excluded columns
-    * BEFORE the replacements apply — replacing an excluded column or
-    * excluding an unknown one raises DuckDB's own binder errors. Scope
-    * (fail fast otherwise): the starred select must be the bare
-    * `* [EXCLUDE (…)] REPLACE` form and
-    * FROM must be a SINGLE relation — a registered table (alias allowed
-    * after it) or, since r18, a parenthesized derived table/subquery
-    * (expanded from its ANALYZED schema, the same contract
-    * [[expandStarItems]] uses — before r18 the same text was legal under
-    * QUALIFY/WITH TIES but a named error here); a replacement naming a
-    * column the relation lacks raises, matching DuckDB/BigQuery's own
-    * binder error.
-    *
-    * The trigger only fires when the `*` sits in SELECT-LIST STAR
-    * position — the previous non-whitespace character is `,` or `(`, or
-    * the previous token is SELECT/DISTINCT/ALL, or the star is a
-    * QUALIFIED star `alias.*` whose alias token itself sits in one of
-    * those positions (DuckDB/BigQuery allow `t.* REPLACE (…)`; the
-    * alias must resolve to the FROM table — vestigial under the
-    * single-table contract, but validated so a typo'd qualifier fails
-    * loudly). A `*` in any other position is the multiplication
-    * operator, so `price * replace(name, 'a', 'b')` passes through
-    * untouched as arithmetic over the `replace()` string function
-    * instead of being spuriously rejected as a malformed star clause.
-    * Out of scope (documented contract narrowing): a star directly
-    * preceded by a closed block comment (comment-close token then
-    * `* REPLACE`) is not recognized as star position and passes
-    * through to Spark's parser.
-    */
-  /** Parse the items of a star-REPLACE list into lowercase-target → expr,
+  /** Parse the items of a star-REPLACE list into (column, expr) pairs,
     * raising named errors for non-`expr AS col` items and for a
-    * twice-replaced column (DuckDB/BigQuery reject those; a bare toMap
-    * would silently keep the last entry). Shared by
-    * [[rewriteStarReplace]] and [[expandStarItems]] (r17 review: the
-    * two copies had already started to drift).
+    * twice-replaced column (DuckDB/BigQuery reject both).
     */
-  private def parseReplaceItems(items: Seq[String],
-      errPrefix: String): Map[String, String] = {
+  private def parseReplaceItems(items: Seq[String]): Seq[(String, String)] = {
     val pairs = items.map(_.trim).map { r =>
       "(?is)^(.*\\S)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*|`[^`]+`)$".r
         .findFirstMatchIn(r) match {
-        case Some(mm) =>
-          mm.group(2).stripPrefix("`").stripSuffix("`").toLowerCase -> mm.group(1)
+        case Some(mm) => mm.group(2) -> mm.group(1)
         case None => throw new graft.UnsupportedError(
-          s"$errPrefix items must be `expr AS col`, got: $r")
+          s"* REPLACE items must be `expr AS col`, got: $r")
       }
     }
-    pairs.map(_._1).groupBy(identity)
+    pairs.map(p => nameKey(p._1)).groupBy(identity)
       .collectFirst { case (nm, vs) if vs.size > 1 => nm }
       .foreach(nm => throw new graft.UnsupportedError(
-        s"$errPrefix names column $nm more than once"))
-    pairs.toMap
+        s"* REPLACE names column $nm more than once"))
+    pairs
   }
 
-  /** Parse the regex-captured EXCLUDE clause of a combined
-    * `* EXCLUDE (…) REPLACE (…)` — the paren list or the bare
-    * single-column spelling. Shared by [[rewriteStarReplace]] and
-    * [[expandStarItems]].
+  /** Parse and check the EXCLUDE list of a star item — the paren list or
+    * the bare single-column spelling — with DuckDB's checks that need no
+    * schema: an empty entry, a non-bare name, a twice-excluded column.
     */
   private def parseStarExcludes(parenList: Option[String],
       bare: Option[String]): Seq[String] = {
-    // an empty list `* EXCLUDE ()` or a blank entry `(a,)` is a DuckDB
-    // syntax error — raised here rather than silently degrading to a
-    // plain * REPLACE (r19 second review)
     parenList.foreach { pl =>
       if (pl.split(",", -1).map(_.trim).exists(_.isEmpty))
         throw new graft.UnsupportedError(
           s"star EXCLUDE list has an empty entry (DuckDB rejects it): ($pl)")
     }
-    parenList.map(_.split(",").map(_.trim).toSeq)
+    val excludes = parenList.map(_.split(",").map(_.trim).toSeq)
       .orElse(bare.map(Seq(_))).getOrElse(Seq.empty)
-  }
-
-  /** Validate a combined-star EXCLUDE list against the expanded fields
-    * and return the KEPT fields, mirroring DuckDB's binder errors:
-    * non-bare names, a twice-excluded column (r19 review — silently
-    * deduped before, where DuckDB raises its duplicate-entry error),
-    * an unknown column, a REPLACE of an excluded column, and dropping
-    * every column all raise. One copy shared by [[rewriteStarReplace]]
-    * and [[expandStarItems]] (r19 review: the block had been pasted
-    * into both).
-    */
-  private def starExcludeKept(excludes: Seq[String], fields: Seq[String],
-      repls: Map[String, String], errPrefix: String): Seq[String] = {
     excludes.foreach { e =>
-      if (!e.matches("[A-Za-z_][A-Za-z0-9_]*"))
+      if (!e.matches("[A-Za-z_][A-Za-z0-9_]*|`[^`]+`"))
         throw new graft.UnsupportedError(
-          s"$errPrefix expects bare column names in the EXCLUDE list, got: $e")
+          s"star EXCLUDE expects bare column names, got: $e")
     }
-    excludes.map(_.toLowerCase).groupBy(identity)
+    excludes.map(nameKey).groupBy(identity)
       .collectFirst { case (nm, vs) if vs.size > 1 => nm }
       .foreach(nm => throw new graft.UnsupportedError(
-        s"$errPrefix EXCLUDE list names column $nm more than once"))
-    val known = fields.map(_.toLowerCase).toSet
-    excludes.find(e => !known.contains(e.toLowerCase)).foreach { missing =>
-      throw new graft.UnsupportedError(
-        s"$errPrefix EXCLUDE names column $missing which the FROM relation lacks")
-    }
-    val exSet = excludes.map(_.toLowerCase).toSet
-    repls.keys.find(exSet.contains).foreach { gone =>
-      throw new graft.UnsupportedError(
-        s"$errPrefix replaces column $gone which the EXCLUDE list already drops")
-    }
-    val kept = fields.filterNot(f => exSet.contains(f.toLowerCase))
-    if (kept.isEmpty)
-      throw new graft.UnsupportedError(s"$errPrefix drops every column")
-    kept
+        s"star EXCLUDE list names column $nm more than once"))
+    excludes
   }
 
-  private[graft] def rewriteStarReplace(spark: SparkSession, sql: String): String = {
-    // an EXCLUDE/EXCEPT clause may sit BETWEEN the star and REPLACE —
-    // DuckDB's combined `* EXCLUDE (…) REPLACE (…)` (r19; its grammar
-    // puts EXCLUDE first — the reverse order is a DuckDB error too and
-    // stays out of star position here). Both the paren list and the
-    // bare single-column spellings compose; EXCEPT is matched as well
-    // because [[rewriteExclude]] may have normalized the keyword
-    // before this rewrite runs. group(1) = paren list, group(2) = bare
-    // column.
-    val re = ("(?i)\\*\\s*(?:(?:EXCEPT|EXCLUDE)\\s*(?:\\(([^()]*)\\)\\s*|" +
-      "([A-Za-z_][A-Za-z0-9_]*)\\s+))?REPLACE\\s*\\(").r
-    def isStarContext(s: String, i: Int): Boolean = {
-      // i = index of last non-whitespace char before the star/qualifier
-      if (i < 0) return true
-      val c = s.charAt(i)
-      if (c == ',' || c == '(') return true
-      var b = i + 1
-      while (b > 0 && (Character.isLetterOrDigit(s.charAt(b - 1)) || s.charAt(b - 1) == '_')) b -= 1
-      Set("select", "distinct", "all").contains(s.substring(b, i + 1).toLowerCase)
-    }
-    /** For a star at `at`: Some((spanStart, qualifier)) when it sits in
-      * select-list star position — spanStart is where the rewrite span
-      * begins (the qualifier's first char for `alias.*`, else the star)
-      * and qualifier is the alias token when present.
-      */
-    def starAt(s: String, at: Int): Option[(Int, Option[String])] = {
-      var i = at - 1
-      while (i >= 0 && Character.isWhitespace(s.charAt(i))) i -= 1
-      if (i >= 0 && s.charAt(i) == '.') {
-        var b = i
-        while (b > 0 && (Character.isLetterOrDigit(s.charAt(b - 1)) || s.charAt(b - 1) == '_')) b -= 1
-        val name = s.substring(b, i)
-        if (name.isEmpty || Character.isDigit(name.charAt(0))) None
-        else {
-          var j = b - 1
-          while (j >= 0 && Character.isWhitespace(s.charAt(j))) j -= 1
-          if (isStarContext(s, j)) Some((b, Some(name))) else None
-        }
-      } else if (isStarContext(s, i)) Some((at, None))
-      else None
-    }
-    rewriteSites(sql) { spans =>
-      // OPAQUE spans (r19 review, generalizing the derived-FROM fix
-      // below): a ')' in the REPLACE list, a FROM, or a star clause
-      // inside a COMMENT must not terminate the paren match, hijack
-      // the FROM-token scan, or trigger the rewrite
-      lazy val depth = depthAt(sql, spans)
-      re.findAllMatchIn(sql)
-        .flatMap(m => if (spans.outside(m.start))
-          starAt(sql, m.start).map { case (s0, q) => (m, s0, q) } else None)
-        .map { case (m, replStart, qualifier) =>
-          val open = m.end - 1
-          val close = matchParen(sql, spans, open)
-          if (close < 0)
-            throw new graft.UnsupportedError(s"unbalanced * REPLACE( in: $sql")
-          def build(items: Seq[String]): Option[String] = {
-            val repls = parseReplaceItems(items, "* REPLACE")
-            // combined EXCLUDE clause (r19): names dropped BEFORE the
-            // REPLACE applies — DuckDB's own evaluation order
-            val excludes = parseStarExcludes(Option(m.group(1)), Option(m.group(2)))
-            val d0 = depth(m.start)
-            // anchor on the FROM TOKEN (not `FROM ident`) so a subquery FROM
-            // `FROM (…) t` is seen and rejected here instead of silently
-            // matching a LATER FROM in a union branch and expanding the star
-            // against the wrong table's schema
-            val fromEnd = "(?i)\\bFROM\\b".r
-              .findAllMatchIn(java.nio.CharBuffer.wrap(sql, close + 1, sql.length))
-              .map(close + 1 + _.start)
-              .find(st => depth(st) == d0 && spans.outside(st))
-              .map(_ + "FROM".length)
-              .getOrElse(throw new graft.UnsupportedError(
-                "* REPLACE requires a FROM <table> at the same query level"))
-            // single-relation scope is load-bearing, not cosmetic: with a
-            // JOIN or comma-join the star covers BOTH relations in
-            // DuckDB/BigQuery, and expanding only the first would silently
-            // DROP the other side's columns — fail fast per the documented
-            // contract. Shared by the table and derived-table branches.
-            def aliasAndTail(from: Int, what: String): Option[String] = {
-              val aliasM = aliasAt(sql, from)
-              val tail = sql.substring(from + aliasM.fold(0)(_.end))
-              val ok = "(?is)^\\s*((WHERE|GROUP|ORDER|LIMIT|HAVING|QUALIFY)\\b.*)?$".r
-              if (!ok.matches(tail))
-                throw new graft.UnsupportedError(
-                  "* REPLACE is supported only over a single FROM relation " +
-                    s"(joins/multi-table FROM would drop the other side's columns): …FROM $what${tail.take(40)}")
-              aliasM.map(_.group(1))
-            }
-            var dOpen = fromEnd
-            while (dOpen < sql.length && sql.charAt(dOpen).isWhitespace) dOpen += 1
-            val schema: org.apache.spark.sql.types.StructType =
-              if (dOpen < sql.length && sql.charAt(dOpen) == '(') {
-                // derived-table FROM (r18 — "subquery FROM is not
-                // supported" before, asymmetric with the QUALIFY/TIES
-                // paths' expandStarItems): a parenthesized subquery is a
-                // single relation, so the star expands from its ANALYZED
-                // schema (schema-only — nothing executes). OPAQUE spans
-                // for the paren match (r19, from ADVICE): a `)` inside a
-                // comment within the derived text must not end the match
-                // early and truncate the subquery
-                val dClose = matchParen(sql, spans, dOpen)
-                if (dClose < 0)
-                  throw new graft.UnsupportedError(
-                    s"unbalanced derived-table FROM after * REPLACE in: $sql")
-                val derived = sql.substring(dOpen, dClose + 1)
-                val dAlias = aliasAndTail(dClose + 1, "(…) ")
-                // a qualified star's alias must name the derived table's
-                // alias — an unaliased subquery has no addressable name
-                qualifier.foreach { qn =>
-                  if (!dAlias.exists(qn.equalsIgnoreCase))
-                    throw new graft.UnsupportedError(
-                      s"qualified star $qn.* REPLACE: $qn does not resolve to the " +
-                        s"FROM subquery${dAlias.fold("")(a => s" ($a)")} — alias the " +
-                        s"derived table as $qn or use the bare * REPLACE form")
-                }
-                try spark.sql(s"SELECT * FROM $derived __sr").schema
-                catch {
-                  case e: Exception => throw new graft.UnsupportedError(
-                    "* REPLACE: cannot analyze the derived FROM to expand the star " +
-                      s"(${e.getMessage.linesIterator.nextOption().getOrElse("").take(120)})")
-                }
+  private val StarClause = ("(?is)^\\s*(?:([A-Za-z_][A-Za-z0-9_]*)\\s*\\.\\s*)?\\*\\s*" +
+    "(?:(?:EXCEPT|EXCLUDE)\\s*(?:\\(([^()]*)\\)|([A-Za-z_][A-Za-z0-9_]*)(?=\\s|$))\\s*)?" +
+    "(REPLACE\\s*\\()?").r
+
+  /** DuckDB/BigQuery `* REPLACE (expr AS col, …)` → `SELECT * … |> SET
+    * col = expr`, which keeps every column in position, over any FROM.
+    * A combined `* EXCLUDE (…) REPLACE (…)` (DuckDB's grammar order)
+    * drops first: the star keeps Spark's native `* EXCEPT (…)`. A
+    * qualified star with EXCLUDE, which Spark cannot parse, becomes
+    * `t.*` followed by `|> DROP cols`; `t.* REPLACE` keeps `t.*`.
+    *
+    * Only a star that starts a select item is a star clause, so
+    * `price * replace(name, 'a', 'b')` stays arithmetic over the
+    * replace() string function. The checks that need no schema raise
+    * named errors: a REPLACE item that is not `expr AS col`, a column
+    * replaced or excluded twice, a replaced column the EXCLUDE list
+    * drops, a `* REPLACE` over a join (the star covers both sides), and
+    * a qualifier that is not the FROM relation's name. An unknown
+    * replaced or excluded column is Spark's analyzer's error.
+    */
+  private[graft] def rewriteStarReplace(sql: String): String =
+    rewriteScopes(sql, "\\*\\s*(?:EXCEPT|EXCLUDE|REPLACE)\\b") { sel =>
+      def starOf(it: String) = StarClause.findFirstMatchIn(it).filter(m => m.group(4) != null ||
+        (m.group(1) != null && (m.group(2) != null || m.group(3) != null)))
+      if (!sel.itemTexts.exists(starOf(_).isDefined)) None
+      else Some(sel.site() { p =>
+        // each item with the pipe operators it needs
+        val (items, pipes) = p.items.map { it =>
+          starOf(it).fold((it, "")) { m =>
+            val q = Option(m.group(1))
+            val excludes = parseStarExcludes(Option(m.group(2)), Option(m.group(3)))
+            val repls =
+              if (m.group(4) == null) {
+                if (!blankOrComment(it.substring(m.end)))
+                  throw new graft.UnsupportedError(s"cannot rewrite this star clause: $it")
+                Nil
               } else {
-                val tblM = prefixMatch("(?s)^\\s*(`[^`]+`|[A-Za-z_][A-Za-z0-9_.]*)".r, sql, fromEnd)
-                  .getOrElse(throw new graft.UnsupportedError(
-                    "* REPLACE requires FROM <single table or (subquery)>"))
-                val tbl = tblM.group(1)
-                val tableAlias = aliasAndTail(fromEnd + tblM.end, tbl)
-                // a qualified star's alias must name the FROM table: its
-                // alias when one is declared (an aliased table's original
-                // name is NOT addressable in DuckDB/BigQuery), else the
-                // table's last dotted component
-                qualifier.foreach { qn =>
-                  val target = tableAlias.getOrElse(
-                    tbl.stripPrefix("`").stripSuffix("`").split('.').last)
-                  if (!qn.equalsIgnoreCase(target))
-                    throw new graft.UnsupportedError(
-                      s"qualified star $qn.* REPLACE: $qn does not resolve to the FROM table " +
-                        s"($target) — only the single FROM table's own star is supported")
+                val spans = lex(it)
+                val close = matchParen(it, spans, m.end - 1)
+                if (close < 0 || !blankOrComment(it.substring(close + 1)))
+                  throw new graft.UnsupportedError(s"cannot rewrite this star REPLACE form: $it")
+                val r = parseReplaceItems(splitArgs(it, spans, m.end, close))
+                val dropped = excludes.map(nameKey).toSet
+                r.find(x => dropped(nameKey(x._1))).foreach { x =>
+                  throw new graft.UnsupportedError(
+                    s"* EXCLUDE … REPLACE replaces column ${x._1} which the EXCLUDE list already drops")
                 }
-                try spark.table(tbl).schema
-                catch { case _: Exception => throw new graft.UnsupportedError(
-                  s"* REPLACE: cannot resolve table $tbl to expand the star") }
+                checkStarRelation(p.body, q)
+                r
               }
-            val known = schema.fieldNames.map(_.toLowerCase).toSet
-            repls.keys.find(!known.contains(_)).foreach { missing =>
-              throw new graft.UnsupportedError(
-                s"* REPLACE names column $missing which the FROM relation lacks")
-            }
-            val kept = starExcludeKept(excludes, schema.fieldNames.toSeq, repls,
-              "* EXCLUDE … REPLACE")
-            Some(kept.map { c =>
-              repls.get(c.toLowerCase) match {
-                case Some(e) => s"($e) AS `$c`"
-                case None    => s"`$c`"
-              }
-            }.mkString(", "))
+            val star = q.fold("*")(_ + ".*") +
+              (if (q.isEmpty && excludes.nonEmpty) s" EXCEPT (${excludes.mkString(", ")})" else "")
+            (star,
+              (if (q.isDefined && excludes.nonEmpty) s" |> DROP ${excludes.mkString(", ")}" else "") +
+                (if (repls.isEmpty) "" else
+                  " |> SET " + repls.map { case (c, e) => s"$c = $e" }.mkString(", ")))
           }
-          new Site(replStart, close + 1, argRanges(sql, spans, open + 1, close), build)
-        }
+        }.unzip
+        sel.emit(p, s"SELECT ${sel.hints}${items.mkString(", ")} ${p.body}" +
+          p.pred.fold("")(" QUALIFY " + _) + pipes.mkString +
+          (if (sel.distinct) " |> SELECT DISTINCT *" else ""))
+      })
+    }
+
+  /** Whether `t` holds nothing but whitespace and comments. */
+  private def blankOrComment(t: String): Boolean = {
+    val spans = lex(t)
+    t.indices.forall(i => t.charAt(i).isWhitespace || spans.at(i).exists(_.kind == SpanKind.Comment))
+  }
+
+  /** The checks a `* REPLACE` makes on its FROM body without a schema:
+    * a single relation, a table or a derived table (over a join the star
+    * covers both sides), and a star qualifier that names it.
+    */
+  private def checkStarRelation(body: String, qualifier: Option[String]): Unit = {
+    val at = prefixMatch("(?is)FROM\\s*".r, body, 0).fold(
+      throw new graft.UnsupportedError("* REPLACE requires a FROM <table> at the same query level"))(_.end)
+    val (table, after) =
+      if (body.startsWith("(", at)) {
+        val close = matchParen(body, lex(body), at)
+        if (close < 0)
+          throw new graft.UnsupportedError(s"unbalanced derived-table FROM after * REPLACE: $body")
+        (None, close + 1)
+      } else {
+        val t = prefixMatch("(?s)(`[^`]+`|[A-Za-z_][A-Za-z0-9_.]*)".r, body, at).getOrElse(
+          throw new graft.UnsupportedError("* REPLACE requires FROM <single table or (subquery)>"))
+        (Some(t.group(1)), at + t.end)
+      }
+    val alias = aliasAt(body, after)
+    val tail = body.substring(after + alias.fold(0)(_.end))
+    if (!"(?is)\\s*((WHERE|GROUP|HAVING|WINDOW)\\b.*)?".r.matches(tail))
+      throw new graft.UnsupportedError(
+        "* REPLACE is supported only over a single FROM relation " +
+          s"(over a join the star covers every side): $body")
+    qualifier.foreach { qn =>
+      val target = alias.map(_.group(1))
+        .orElse(table.map(t => stripBacktick(t).split('.').last))
+      if (!target.exists(qn.equalsIgnoreCase))
+        throw new graft.UnsupportedError(
+          s"qualified star $qn.* REPLACE: $qn does not resolve to the FROM relation" +
+            target.fold("")(t => s" ($t)"))
     }
   }
 
   /** DuckDB/Postgres `SELECT DISTINCT ON (keys) items … ORDER BY ord`:
-    * keep the first row per key set according to ORDER BY. Spark has no
-    * DISTINCT ON; rewritten as a row_number window — partition by the keys,
-    * order by the statement's ORDER BY (or the keys when absent, matching
-    * DuckDB's arbitrary pick), keep rank 1, preserve the outer ORDER BY /
-    * LIMIT. Like QUALIFY, select items must be nameable (alias or bare
-    * column) so the outer projection can re-select them.
+    * the first row per key set by ORDER BY, as a row_number per key set
+    * kept at 1 — `SELECT items, row_number() OVER (PARTITION BY keys
+    * ORDER BY ord) AS __rn FROM … |> WHERE __rn = 1 |> DROP __rn` — in
+    * any scope. Without an ORDER BY the window orders by the keys (the
+    * source engines pick an arbitrary row). The ORDER BY and paging
+    * follow as pipe operators.
     */
-  private[graft] def rewriteDistinctOn(sql0: String,
-      spark: Option[SparkSession] = None): String = {
-    // comments normalized to whitespace up front (r17, as in
-    // [[rewriteQualify]]): keyword/paren text inside a comment cannot
-    // trigger the rewrite or skew the depth map, and the emitted
-    // single-line window splice cannot be swallowed by a trailing `--`
-    // comment. Untouched statements return byte-identical (sql0).
-    val sql = blankComments(sql0)
-    val spans = lex(sql)
-    val depth = depthAt(sql, spans)
-    // SPAN-BASED detection (third r17 review pass: a regex hint-group
-    // `(/\*\+.*?\*/)?` could span LIVE SQL between two unrelated */
-    // sequences and match a false DISTINCT ON): each SELECT keyword's
-    // hint blocks are consumed by the span-aware [[leadingHint]], then
-    // DISTINCT ON is tested right after — also covering the no-space
-    // `SELECT/*+h*/DISTINCT ON` spelling the old `SELECT\s+` missed.
-    case class DonSite(selStart: Int, keysOpen: Int, hint: String)
-    def donAt(selStart: Int): Option[DonSite] = {
-      val (hint, afterHint) = leadingHint(sql, selStart, spans)
-      "(?is)^\\s*DISTINCT\\s+ON\\s*\\(".r.findFirstMatchIn(sql.substring(afterHint))
-        .map(m2 => DonSite(selStart, afterHint + m2.end - 1, hint))
-    }
-    val selStarts = "(?i)\\bSELECT\\b".r.findAllMatchIn(sql)
-      .filter(mm => spans.outside(mm.start)).map(_.start).toList
-    // lazy sweeps: donAt copies the statement tail, so stop at the
-    // first hit instead of probing every SELECT (r17 review)
-    val site = selStarts.iterator.filter(depth(_) == 0).map(donAt)
-      .collectFirst { case Some(d) => d }.getOrElse {
-        // SUBQUERY/CTE-level DISTINCT ON (r16 — a raw `Cannot resolve
-        // routine ON` before): rewrite the innermost parenthesized
-        // statement containing the clause in place, then rescan
-        val nested = selStarts.iterator.filter(depth(_) > 0).map(donAt)
-          .collectFirst { case Some(d) => d }.getOrElse(return sql0)
-        val (open, close) = enclosingParen(sql, spans, nested.selStart)
-          .getOrElse(return sql0)
-        val inner = sql.substring(open + 1, close)
-        val rebuilt = rewriteDistinctOn(inner, spark)
-        if (rebuilt == inner) return sql0 // not a rewritable inner statement — stay loud
-        return rewriteDistinctOn(
-          sql.substring(0, open + 1) + rebuilt + sql.substring(close), spark)
+  private[graft] def rewriteDistinctOn(sql: String): String =
+    rewriteScopes(sql, "\\bDISTINCT\\s+ON\\b") { sel =>
+      sel.distinctOn.map { _ =>
+        sel.site() { p =>
+          val keys = p.on.get
+          val ord = p.keys.getOrElse(keys)
+          sel.emit(p.copy(keys = Some(ord)), numbered(sel.hints, p.items, p.body, keys, ord,
+            ordinals = p.keys.isDefined, "__rn", "__rn = 1", "DISTINCT ON", aliases = false))
+        }
       }
-    val keysOpen = site.keysOpen
-    val keysClose = matchParen(sql, spans, keysOpen)
-    if (keysClose < 0)
-      throw new graft.UnsupportedError(s"unbalanced DISTINCT ON ( in: $sql")
-    val keys = sql.substring(keysOpen + 1, keysClose).trim
-    val fromIdx = topLevelKeyword(sql, spans, depth, "FROM", keysClose)
-    if (fromIdx < 0)
-      throw new graft.UnsupportedError(s"cannot locate FROM after DISTINCT ON in: $sql")
-    val orderIdx = topLevelKeyword(sql, spans, depth, "ORDER", fromIdx)
-    // the statement tail starts at the first top-level LIMIT, OFFSET, or
-    // FETCH after the keys (r16 — OFFSET/FETCH are Postgres-legal after
-    // DISTINCT ON; before, their text was swallowed into the ORDER BY
-    // key list and died as a spliced parse error). The tail is re-emitted
-    // after the rewrite, where the chain's later paging rewrites (FETCH
-    // → LIMIT / WITH TIES rank) pick it up.
-    val tailIdx = Seq("LIMIT", "OFFSET", "FETCH")
-      .map(kw => topLevelKeyword(sql, spans, depth, kw, fromIdx))
-      .filter(_ >= 0).sorted.headOption.getOrElse(-1)
-    val bodyEnd = Seq(orderIdx, tailIdx).filter(_ >= 0).sorted.headOption.getOrElse(sql.length)
-    val body = sql.substring(fromIdx, bodyEnd).trim // "FROM …"
-    val items = expandStarItems(spark,
-      splitArgs(sql, spans, keysClose + 1, fromIdx).map(_.trim).filter(_.nonEmpty),
-      body, "DISTINCT ON")
-    val names = items.map(itemName(_, "DISTINCT ON")).mkString(", ")
-    val ord =
-      if (orderIdx >= 0) {
-        val ordEnd = if (tailIdx > orderIdx) tailIdx else sql.length
-        sql.substring(orderIdx + "ORDER".length, ordEnd).trim.replaceAll("(?i)^BY\\s+", "")
-      } else keys
-    val tail = if (tailIdx >= 0) " " + sql.substring(tailIdx) else ""
-    val outerOrder = s" ORDER BY $ord"
-    // the window's sort keys must resolve ordinals to select items (an
-    // integer inside OVER is a constant — r14 judge finding); the keys
-    // fallback (no statement ORDER BY) is expression text, never positions
-    val windowOrd =
-      if (orderIdx >= 0) resolveOrdinalSortKeys(ord, items, "DISTINCT ON") else ord
-    val hint = site.hint
-    s"SELECT $names FROM ( SELECT $hint${items.mkString(", ")}, " +
-      s"row_number() OVER (PARTITION BY $keys ORDER BY $windowOrd) AS __rn $body ) __don " +
-      s"WHERE __rn = 1$outerOrder$tail"
+    }
+
+  /** `keys` with each key naming a select alias (`AS` or implicit)
+    * replaced by the aliased expression, for a window in the same SELECT.
+    */
+  private def aliasKeys(keys: String, items: Seq[String]): String = {
+    val aliasExpr = items.flatMap { it =>
+      "(?is)^(.*\\S)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*)$".r.findFirstMatchIn(it)
+        .map(mm => mm.group(2).toLowerCase -> mm.group(1).trim)
+        .orElse(implicitAlias(it).map { case (e, a) => a.toLowerCase -> e })
+    }.toMap
+    sortKeys(keys).map { part =>
+      "(?s)^([A-Za-z_][A-Za-z0-9_]*)(.*)$".r.findFirstMatchIn(part) match {
+        case Some(pm) if aliasExpr.contains(pm.group(1).toLowerCase) =>
+          s"(${aliasExpr(pm.group(1).toLowerCase)})${pm.group(2)}"
+        case _ => part
+      }
+    }.mkString(", ")
   }
+
+  /** Sort keys under SELECT DISTINCT, each resolved to an output name:
+    * an ordinal to its item's name, a name or alias to itself, a key
+    * matching an item's expression to that item's name. Anything else
+    * is unavailable after the distinct and raises, as in the source
+    * dialects.
+    */
+  private def distinctKeys(keys: Seq[String], items: Seq[String], construct: String,
+      ordinals: Boolean = true): Seq[String] = {
+    val itemNames = items.map(itemName(_, construct))
+    val resolveKey = distinctKeyResolver(items, itemNames, construct)
+    keys.map { part =>
+      val (e, sfx) = splitSortSuffix(part)
+      val resolved =
+        if (ordinals && Ordinal.matches(e)) {
+          val i = e.toInt
+          if (i < 1 || i > items.length)
+            throw new graft.UnsupportedError(
+              s"$construct ORDER BY position $i is not in the select list (1..${items.length})")
+          guardDupOutputName(itemNames, construct, itemNames(i - 1))
+        } else resolveKey(e).getOrElse(throw new graft.UnsupportedError(
+          s"$construct with SELECT DISTINCT requires its keys and ORDER BY expressions " +
+            s"to appear in the select list; cannot resolve: $e"))
+      (resolved + " " + sfx).trim
+    }
+  }
+
+  private val LimitByForms: Seq[(scala.util.matching.Regex, scala.util.matching.Regex.Match => (Long, Long))] =
+    Seq(
+      "(?is)LIMIT\\s+(\\d+)\\s*,\\s*(\\d+)\\s+BY\\b".r -> (m => (m.group(1).toLong, m.group(2).toLong)),
+      "(?is)LIMIT\\s+(\\d+)\\s+OFFSET\\s+(\\d+)\\s+BY\\b".r -> (m => (m.group(2).toLong, m.group(1).toLong)),
+      "(?is)LIMIT\\s+(\\d+)\\s+BY\\b".r -> (m => (0L, m.group(1).toLong)))
+
+  /** The `LIMIT [offset,] n BY` clause at `at`: (match end, offset, n). */
+  private def limitByAt(text: String, at: Int): Option[(Int, Long, Long)] =
+    LimitByForms.iterator.flatMap { case (re, f) =>
+      prefixMatch(re, text, at).map { m => val (o, n) = f(m); (at + m.end, o, n) }
+    }.nextOption()
+
+  /** ClickHouse `LIMIT [offset,] n BY keys` — the first `n` rows per key
+    * set (after skipping `offset`) of the ORDER-BY-sorted stream, before
+    * the trailing global LIMIT — as a row_number per key set in the
+    * scope's own SELECT, in any scope: `SELECT items, row_number() OVER
+    * (PARTITION BY keys ORDER BY ord) AS __lb FROM … |> WHERE __lb <= n
+    * |> DROP __lb |> ORDER BY ord |> LIMIT m`. Without an ORDER BY the
+    * window orders by the keys (a deterministic pick where ClickHouse's
+    * is arbitrary) and no sort is added. Keys and sort keys naming a
+    * select alias resolve to its expression inside the window.
+    * SELECT DISTINCT composes: ClickHouse applies DISTINCT before ORDER
+    * BY and LIMIT BY, so the window ranks the distinct output
+    * (`|> EXTEND`) and every key resolves to an output name.
+    */
+  private[graft] def rewriteChLimitBy(sql: String): String =
+    rewriteScopes(sql, "\\bLIMIT\\s+\\d+(?:\\s*,\\s*\\d+|\\s+OFFSET\\s+\\d+)?\\s+BY\\b") { sel =>
+      sel.region("page").filter(r => limitByAt(sql, r._1).isDefined).map { _ =>
+        sel.setOpAfter.foreach { op => throw new graft.UnsupportedError(
+          s"LIMIT BY followed by a top-level $op clause is not supported") }
+        if (sel.armBefore || sel.from < 0)
+          throw new graft.UnsupportedError(s"cannot locate SELECT … FROM around LIMIT BY in: $sql")
+        if (sel.distinctOn.isDefined)
+          throw new graft.UnsupportedError("LIMIT BY under SELECT DISTINCT ON is not supported")
+        sel.site() { p =>
+          val page = p.page.get
+          val (byEnd, off, n) = limitByAt(page, 0).get
+          val spans = lex(page)
+          val depth = depthAt(page, spans)
+          val next = topLevelKeyword(page, spans, depth, "LIMIT", byEnd)
+          val keysEnd = if (next >= 0) next else page.length
+          // a clause after the keys would be swallowed into PARTITION BY;
+          // each ender matches its clause shape, so a key named `format`
+          // stays a key
+          Seq("SETTINGS" -> "(?i)\\bSETTINGS\\s+[A-Za-z_][A-Za-z0-9_.]*\\s*=",
+            "FORMAT" -> "(?is)\\bFORMAT\\s+[A-Za-z_][A-Za-z0-9_]*\\s*;?\\s*$").foreach { case (kw, re) =>
+            if (re.r.findAllMatchIn(page).exists(mm => mm.start >= byEnd && mm.start < keysEnd &&
+                depth(mm.start) == 0 && spans.outside(mm.start)))
+              throw new graft.UnsupportedError(
+                s"LIMIT BY followed by a top-level $kw clause is not supported")
+          }
+          val keys = page.substring(byEnd, keysEnd).trim
+          if (keys.isEmpty)
+            throw new graft.UnsupportedError("LIMIT BY requires at least one key expression")
+          val tail = if (next >= 0) Some(page.substring(next).trim) else None
+          val keep = if (off == 0L) s"__lb <= $n" else s"__lb > $off AND __lb <= ${off + n}"
+          if (sel.distinct) {
+            val construct = "LIMIT BY under SELECT DISTINCT"
+            val dKeys = distinctKeys(sortKeys(keys), p.items, construct, ordinals = false).mkString(", ")
+            val dOrd = p.keys.map(o => distinctKeys(sortKeys(o), p.items, construct).mkString(", "))
+            sel.emit(p.copy(keys = dOrd, page = tail),
+              s"SELECT ${sel.hints}DISTINCT ${p.itemList} ${p.body} |> EXTEND row_number() " +
+                s"OVER (PARTITION BY $dKeys ORDER BY ${dOrd.getOrElse(dKeys)}) AS __lb " +
+                s"|> WHERE $keep |> DROP __lb")
+          } else
+            sel.emit(p.copy(page = tail), numbered(sel.hints, p.items, p.body,
+              aliasKeys(keys, p.items), p.keys.getOrElse(keys), ordinals = p.keys.isDefined,
+              "__lb", keep, "LIMIT BY", aliases = true))
+        }
+      }
+    }
+
+  /** What a paging construct keeps: `n` rows (n percent of the rows when
+    * `percent`, rounded up), with the rows tying the last one when
+    * `ties`, after skipping `offset` rows. `pin` pins the dialect's
+    * default null placement into a sort key.
+    */
+  private final case class Paging(n: String, percent: Boolean, ties: Boolean,
+      offset: Option[String], construct: String, pin: String => String)
+
+  /** The rows of `src`, a query without its ORDER BY, that `pg` keeps in
+    * the order of `ord`, as pipe operators on the query: a rank
+    * (row_number without ties) column, a filter, `|> DROP`, and
+    * `|> ORDER BY ord`. With `own` (the SELECT's hint, items and body,
+    * when the query is one plain SELECT) the window is computed in that
+    * SELECT, where its keys may name input columns, aggregates and
+    * select aliases; otherwise `|> EXTEND` ranks the output, and under
+    * DISTINCT (`distinct` with the select `items`) every key resolves to
+    * an output name. Ordinal keys resolve to their items; an ordinal the
+    * text cannot resolve (on a star, or over a set operation) ranks the
+    * output by position ([[byPosition]]).
+    *
+    * Spark's InferWindowGroupLimit turns the `__wt <= n` filter above the
+    * rank into a per-partition group limit, which keeps the plain forms
+    * scale-safe (PlanCheck pins the WindowGroupLimit node).
+    *
+    * `OFFSET m … WITH TIES` keeps rows m+1..m+n plus every row tying row
+    * m+n: `row_number > m AND rank <= (max rank among row_number <=
+    * m+n)`, over a frame pre-filtered to `rank <= m+n`. PERCENT counts
+    * the rows with `count(*) OVER ()` and keeps `CEILING(count * n /
+    * 100.0)` (+ m), the base being the rows before the offset. A literal
+    * zero count keeps no rows (`|> LIMIT 0`): there is no last row to tie
+    * with.
+    */
+  private def rankRows(src: String, own: Option[(String, Seq[String], String)],
+      items: Seq[String], distinct: Boolean, ord: String, pg: Paging,
+      spark: Option[SparkSession]): String = {
+    val n = pg.n
+    val outKeys =
+      if (distinct && !items.exists(isStar)) distinctKeys(sortKeys(ord), items, pg.construct)
+      else sortKeys(ord)
+    val outer = outKeys.map(pg.pin).mkString(", ")
+    val ownKeys = own.flatMap { case (_, its, _) => windowKeys(ord, its, pg.construct, aliases = true) }
+    if (n.matches("\\d+(?:\\.\\d+)?") && n.toDouble == 0.0) return s"$src |> LIMIT 0"
+    val rankFn = if (pg.ties) "rank()" else "row_number()"
+    // window columns, filter operators and dropped columns for keys `k`,
+    // `count` naming the column that holds the percent base
+    def member(k: String, count: String): (Seq[String], String, Seq[String]) = {
+      val base = if (pg.percent) s"CEILING($count * ($n) / 100.0)" else n
+      val lim = pg.offset.fold(base)(o => s"(($o) + $base)")
+      val tiesAfterOffset = pg.offset.isDefined && pg.ties
+      val cols = s"$rankFn OVER (ORDER BY $k) AS __wt" +:
+        (if (tiesAfterOffset) Seq(s"row_number() OVER (ORDER BY $k) AS __wtn") else Nil)
+      val filter = pg.offset match {
+        case None => s" |> WHERE __wt <= $lim"
+        case Some(o) if !pg.ties => s" |> WHERE __wt > ($o) AND __wt <= $lim"
+        case Some(o) =>
+          s" |> WHERE __wt <= $lim |> EXTEND max(CASE WHEN __wtn <= $lim THEN __wt END) " +
+            s"OVER () AS __wtcut |> WHERE __wtn > ($o) AND __wt <= __wtcut"
+      }
+      (cols, filter, "__wt" +: (if (tiesAfterOffset) Seq("__wtn", "__wtcut") else Nil))
+    }
+    def counted(k: String): (String, String, String) = {
+      val (cols, filter, drop) = member(k, "__wtc")
+      if (!pg.percent) (cols.mkString(", "), filter, drop.mkString(", "))
+      else ((cols :+ "count(*) OVER () AS __wtc").mkString(", "), filter, (drop :+ "__wtc").mkString(", "))
+    }
+    val sorted = s" |> ORDER BY $outer"
+    /* Scale-safe PERCENT plan. The plain percent plan ranks every row
+     * through one unpartitioned window, because the cutoff is not a
+     * literal. This plan first computes the exact row count plus an
+     * approx_percentile cutoff on the LEADING sort key at n% + 2% slack
+     * (one broadcast stats row), then pre-filters the relation to the
+     * cutoff's side below the exact rank window. It stays exact: the
+     * runtime guard `CEILING(cnt*n/100) <= FLOOR(nonnull*(n/100+0.02-
+     * 0.005))` enables pruning only when the slack (50x the sketch's
+     * rank error) covers the cut, NULL keys always survive, and rows
+     * tying the boundary share its leading key. A DISTINCT or set-op
+     * source is ranked as a derived table, whose two references AQE
+     * computes once (ReusedExchange, pinned in PlanGateSpec).
+     */
+    def scalePlan(s: SparkSession, srcItems: String, srcBody: String,
+        parsed: Seq[(String, String)]): Option[String] = {
+      val (k1, sfx1) = parsed.head
+      // the leading key's type decides whether the sketch applies: the one
+      // analysis this rewrite runs (gates: EngineSpec "percent forms run
+      // the pre-filtered scale plan and stay exact", PlanGateSpec's
+      // distinct-percent test)
+      val sketchable =
+        try {
+          import org.apache.spark.sql.types._
+          s.sql(s"SELECT ($k1) AS __psk $srcBody").schema.head.dataType match {
+            case _: NumericType | DateType | TimestampType | TimestampNTZType => true
+            case _ => false
+          }
+        } catch { case _: Exception => false }
+      if (!sketchable || !n.matches("\\d+(?:\\.\\d+)?")) return None
+      val asc = "(?i)\\bDESC\\b".r.findFirstIn(sfx1).isEmpty
+      val pEff = math.min(1.0, n.toDouble / 100.0 + 0.02)
+      def lit(d: Double): String =
+        java.lang.String.format(java.util.Locale.ROOT, "%.6f", Double.box(d))
+      val target = lit(if (asc) pEff else math.max(0.0, 1.0 - pEff))
+      val guar = lit(math.max(0.0, pEff - 0.005))
+      val keyCols = parsed.zipWithIndex.map { case ((e, _), i) => s"($e) AS __pk$i" }.mkString(", ")
+      val winOrd = parsed.zipWithIndex.map { case ((_, sfx), i) => s"__pk$i $sfx".trim }.mkString(", ")
+      val need = s"CEILING(__ws.__pn * ($n) / 100.0)"
+      val (cols, filter, drop) = member(winOrd, "__pn")
+      Some(s"SELECT /*+ BROADCAST(__ws) */ __wb.*, __ws.__pn " +
+        s"FROM ( SELECT $srcItems, $keyCols $srcBody ) __wb " +
+        s"CROSS JOIN ( SELECT count(*) AS __pn, count(__psk) AS __pn1, " +
+        s"approx_percentile(__psk, $target, 10000) AS __pcut " +
+        s"FROM ( SELECT ($k1) AS __psk $srcBody ) __wsrc ) __ws " +
+        s"WHERE ${pg.offset.fold(need)(o => s"(($o) + $need)")} > FLOOR(__ws.__pn1 * $guar) " +
+        s"OR __wb.__pk0 IS NULL OR __wb.__pk0 ${if (asc) "<=" else ">="} __ws.__pcut" +
+        s" |> EXTEND ${cols.mkString(", ")}$filter |> DROP " +
+        (drop ++ ("__pn" +: parsed.indices.map(i => s"__pk$i"))).mkString(", ") + sorted)
+    }
+    val scaled = if (!pg.percent) None else spark.flatMap { s =>
+      val (srcItems, srcBody, keys) = (own, ownKeys) match {
+        case (Some((hint, its, body)), Some(wk)) =>
+          (hint + its.mkString(", "), body, sortKeys(wk).map(pg.pin))
+        case _ => ("__wtq.*", s"FROM ( $src ) __wtq", outKeys.map(pg.pin))
+      }
+      if (keys.exists(k => Ordinal.matches(splitSortSuffix(k)._1))) None
+      else scalePlan(s, srcItems, srcBody, keys.map(splitSortSuffix))
+    }
+    scaled.getOrElse((own, ownKeys) match {
+      case (Some((hint, its, body)), Some(wk)) =>
+        val (cols, filter, drop) = counted(sortKeys(wk).map(pg.pin).mkString(", "))
+        s"SELECT $hint${its.mkString(", ")}, $cols $body$filter |> DROP $drop$sorted"
+      case _ if outKeys.exists(k => Ordinal.matches(splitSortSuffix(k)._1)) =>
+        val (cols, filter, _) = counted(positionalKeys(outer))
+        src + byPosition(cols, filter) + sorted
+      case _ =>
+        val (cols, filter, drop) = counted(outer)
+        s"$src |> EXTEND $cols$filter |> DROP $drop$sorted"
+    })
+  }
+
+  /** `SELECT TOP n …` / `SELECT TOP (n) …` (T-SQL, Snowflake, Teradata)
+    * → `… LIMIT n` at the end of that SELECT's scope, in any scope.
+    * T-SQL's clause order is SELECT [DISTINCT] TOP n, so DISTINCT applies
+    * first. `TOP n WITH TIES` and `TOP n PERCENT [WITH TIES]` keep the
+    * rows [[rankRows]] keeps over the statement's ORDER BY (required);
+    * PERCENT rounds the row count up, and n may be fractional only with
+    * PERCENT. A QUALIFY in the scope (Teradata, `qualifyClause`) filters
+    * before the rank, so the rank then follows as `|> EXTEND`, after
+    * the later QUALIFY rewrite's own pipes.
+    *
+    * SET-OPERATION ARMS: `SELECT TOP 10 … UNION ALL SELECT TOP 10 …`
+    * binds each TOP to its own arm in T-SQL/Teradata, so an arm-scoped
+    * TOP wraps its arm in parentheses. An ORDER BY before a set-op
+    * keyword is a T-SQL syntax error and raises; a trailing ORDER BY
+    * after the last arm sorts the combined result and stays outside the
+    * wrapped arm. TOP n PERCENT in an arm keeps `CEILING(count * n /
+    * 100)` of the arm's rows with no row choice specified (ORDER BY is
+    * illegal inside an arm): a row_number over the arm's own output
+    * columns makes the pick deterministic as a multiset, which the gate's
+    * oracle replays. Those columns come from a schema-only analysis of
+    * the arm — the one session use here (gate:
+    * op_dialect_tsql_setop_top_percent). `TOP … WITH TIES` in an arm
+    * raises: it needs an ORDER BY.
+    *
+    * `minusIsSetOp`: MINUS is a set operator in Teradata and Snowflake;
+    * in T-SQL it is an identifier, so a MINUS spelled as a set
+    * operation after a TOP raises there. `allowPercentTies = false`
+    * (Snowflake) rejects the T-SQL-only PERCENT and WITH TIES.
+    */
+  private[graft] def rewriteTsqlTop(sql: String,
+      spark: Option[SparkSession] = None,
+      allowPercentTies: Boolean = true,
+      qualifyClause: Boolean = false,
+      minusIsSetOp: Boolean = false): String =
+    rewriteScopes(sql, "\\bTOP\\b", qualifyClause) { sel =>
+      sel.top.map { case (n, isPercent, isTies) =>
+        if (!allowPercentTies && (isPercent || isTies))
+          throw new graft.UnsupportedError(
+            "TOP " + (if (isPercent) "PERCENT" else "WITH TIES") +
+              " is a T-SQL spelling this dialect's own parser rejects " +
+              "(Snowflake TOP takes a bare row count)")
+        if (!isPercent && n.contains('.'))
+          throw new graft.UnsupportedError("TOP with a fractional count requires PERCENT")
+        if (!minusIsSetOp && sel.setOpAfter.contains("MINUS"))
+          throw new graft.UnsupportedError(
+            "MINUS as a set operation is not supported on this dialect's chain " +
+              "(spell it EXCEPT) — a TOP cannot be scoped against it")
+        if (sel.armAfter && sel.region("keys").isDefined)
+          throw new graft.UnsupportedError(
+            "ORDER BY inside a set-operation arm is not supported " +
+              "(T-SQL/Teradata reject it too — use a derived table to order an arm's TOP)")
+        if (!qualifyClause && sel.qualifyWord && (isPercent || isTies))
+          throw new graft.UnsupportedError(
+            "TOP " + (if (isPercent) "PERCENT" else "WITH TIES") + " combined with QUALIFY " +
+              "is not supported on this dialect's chain (QUALIFY is not a clause here)")
+        val isArm = sel.armBefore || sel.armAfter
+        if (isArm && isTies)
+          throw new graft.UnsupportedError(
+            "TOP WITH TIES in a set-operation arm is not supported: WITH TIES " +
+              "requires an ORDER BY, which T-SQL rejects inside an arm — use a derived table")
+        sel.site() { p =>
+          val select = "SELECT " + sel.hints + (if (sel.distinct) "DISTINCT " else "") +
+            p.itemList + " " + p.body + p.pred.fold("")(" QUALIFY " + _)
+          // the last arm's ORDER BY sorts the combined result
+          val sortAll = p.keys.fold(if (sel.armAfter) " " else "")(" ORDER BY " + _)
+          if (isArm) {
+            if (!isPercent || n.toDouble == 0) s"($select LIMIT ${if (isPercent) 0 else n})$sortAll"
+            else s"(${armPercent(select, n, spark, qualifyClause)})$sortAll"
+          } else if (!isPercent && !isTies) {
+            if (p.page.isDefined)
+              throw new graft.UnsupportedError("TOP combined with LIMIT/OFFSET/FETCH is not supported")
+            s"$select$sortAll LIMIT $n" + p.pipes.fold("")(" " + _)
+          }
+          else {
+            val construct = if (isPercent) "TOP PERCENT" else "TOP WITH TIES"
+            val ord = p.keys.getOrElse(throw new graft.UnsupportedError(
+              s"$construct requires an ORDER BY"))
+            // T-SQL sorts nulls smallest, Spark's own default: no pin
+            rankRows(select,
+              if (sel.distinct || p.pred.isDefined) None else Some((sel.hints, p.items, p.body)),
+              p.items, sel.distinct, ord, Paging(n, isPercent, isTies, None, construct, identity),
+              spark)
+          }
+        }
+      }
+    }
+
+  /** A set-operation arm `select` keeping CEILING(count * n / 100) of its
+    * rows, ranked by all of its output columns.
+    */
+  private def armPercent(select: String, n: String, spark: Option[SparkSession],
+      qualifyClause: Boolean): String = {
+    // a QUALIFY in the arm collapses first: the analysis cannot parse it
+    val arm = if (qualifyClause) rewriteQualify(select) else select
+    val s = spark.getOrElse(throw new graft.UnsupportedError(
+      "TOP PERCENT in a set-operation arm needs registered tables to name the arm's output columns"))
+    val names =
+      try s.sql(s"SELECT * FROM ( $arm ) __tpa").schema.fieldNames.toSeq
+      catch {
+        case e: Exception => throw new graft.UnsupportedError(
+          "TOP PERCENT in a set-operation arm cannot analyze the arm " +
+            s"(${e.getMessage.linesIterator.nextOption().getOrElse("").take(120)})")
+      }
+    names.foreach { f =>
+      if (!f.matches("[A-Za-z_][A-Za-z0-9_]*") || f.equalsIgnoreCase("__tprn") ||
+          f.equalsIgnoreCase("__tpct"))
+        throw new graft.UnsupportedError(
+          s"TOP PERCENT in a set-operation arm met an output name the rank cannot carry: $f — alias the item")
+    }
+    names.map(_.toLowerCase).groupBy(identity)
+      .collectFirst { case (nm, vs) if vs.size > 1 => nm }
+      .foreach(nm => throw new graft.UnsupportedError(
+        s"TOP PERCENT in a set-operation arm met a duplicate output name: $nm"))
+    // backticked: an output name may be a Spark non-reserved keyword
+    val cols = names.map(nm => s"`$nm`").mkString(", ")
+    s"$arm |> EXTEND row_number() OVER (ORDER BY $cols) AS __tprn, count(*) OVER () AS __tpct " +
+      s"|> WHERE __tprn <= CEILING(__tpct * $n / 100.0) |> DROP __tprn, __tpct"
+  }
+
+  /** ANSI/Postgres `ORDER BY … [OFFSET m ROWS] FETCH FIRST n ROWS WITH
+    * TIES` (Postgres, Oracle, Trino) → [[rankRows]], with the dialect's
+    * null placement pinned (nulls largest, or NULLS LAST both ways with
+    * `nullsAlwaysLast` for Trino). The count is optional (`FETCH FIRST
+    * ROW` is 1). A literal OFFSET right before the FETCH becomes the
+    * rank's skip. At any level: over one SELECT the window lives in it;
+    * over a set operation, or a query already ending in pipe operators,
+    * the ORDER BY may name only output columns (Postgres's scope rule)
+    * and `|> EXTEND` ranks the combined result.
+    */
+  private[graft] def rewriteFetchFirstWithTies(sql: String,
+      nullsAlwaysLast: Boolean = false): String =
+    rewriteFetch(sql,
+      "(?i)\\bFETCH\\s+(?:FIRST|NEXT)\\s+(?:(\\d+)\\s+)?ROWS?\\s+WITH\\s+TIES\\b".r, None) { m =>
+      Paging(Option(m.group(1)).getOrElse("1"), percent = false, ties = true, None,
+        "WITH TIES", pinNulls(_, nullsAlwaysLast))
+    }
+
+  /** Oracle-12c/ANSI `[OFFSET m ROWS] FETCH FIRST n PERCENT ROWS
+    * ONLY|WITH TIES` → [[rankRows]]'s percent cutoff: `CEILING(count *
+    * n / 100.0)` rows (Oracle rounds up; the base is every selected row,
+    * before the offset), row_number for ONLY and rank for WITH TIES, with
+    * Oracle's nulls-largest placement pinned. n may be fractional.
+    * `spark` serves the scale plan's leading-key type probe only.
+    */
+  private[graft] def rewriteFetchFirstPercent(sql: String,
+      spark: Option[SparkSession] = None): String =
+    rewriteFetch(sql, ("(?i)\\bFETCH\\s+(?:FIRST|NEXT)\\s+(\\d+(?:\\.\\d+)?)\\s+PERCENT\\s+" +
+      "ROWS?\\s+(ONLY|WITH\\s+TIES)\\b").r, spark) { m =>
+      Paging(m.group(1), percent = true, ties = !m.group(2).equalsIgnoreCase("ONLY"), None,
+        "FETCH PERCENT", pinNulls(_, alwaysLast = false))
+    }
+
+  /** The FETCH clauses `re` matches, each rewritten with its query. */
+  private def rewriteFetch(sql: String, re: scala.util.matching.Regex,
+      spark: Option[SparkSession])(paging: scala.util.matching.Regex.Match => Paging): String =
+    if (re.findFirstIn(sql).isEmpty) sql
+    else rewriteSites(sql) { spans =>
+      val depth = depthAt(sql, spans)
+      re.findAllMatchIn(sql).filter(m => spans.outside(m.start)).map { m =>
+        val pg0 = paging(m)
+        val d = depth(m.start)
+        val (qs, qe) = enclosingParen(sql, spans, m.start).fold((0, sql.length)) {
+          case (o, c) => (o + 1, c) }
+        if ((m.end until qe).exists(i => spans.outside(i) && !sql.charAt(i).isWhitespace))
+          throw new graft.UnsupportedError(
+            s"${pg0.construct} must end the statement, got trailing: ${sql.substring(m.end, qe).trim}")
+        val marks = "(?i)\\b(SELECT|ORDER\\s+BY|OFFSET|UNION|INTERSECT|EXCEPT|MINUS)\\b|\\|>".r
+          .findAllMatchIn(java.nio.CharBuffer.wrap(sql, qs, m.start))
+          .map(x => (qs + x.start, qs + x.end,
+            Option(x.group(1)).fold("|>")(_.toUpperCase.split("\\s+").head)))
+          .filter { case (a, _, _) => depth(a) == d && spans.outside(a) }.toVector
+        val order = marks.lastIndexWhere(_._3 == "ORDER")
+        if (order < 0)
+          throw new graft.UnsupportedError(s"${pg0.construct} requires an ORDER BY")
+        val (orderStart, keysStart, _) = marks(order)
+        val offset = marks.drop(order + 1).find(_._3 == "OFFSET").map { case (a, _, _) =>
+          val om = prefixMatch("(?i)OFFSET\\s+(\\d+)(?:\\s+ROWS?)?".r, sql, a).getOrElse(
+            throw new graft.UnsupportedError(
+              s"OFFSET combined with ${pg0.construct} requires a literal row count"))
+          // the literal must be the whole clause: `OFFSET 1 + 4` would
+          // otherwise leave `+ 4` among the sort keys
+          if (sql.substring(a + om.end, m.start).trim.stripSuffix("|>").trim.nonEmpty)
+            throw new graft.UnsupportedError(
+              s"OFFSET combined with ${pg0.construct} requires a literal row count " +
+                s"immediately before the FETCH clause, got: ${sql.substring(a, m.start).trim}")
+          (a, om.group(1))
+        }
+        val pg = pg0.copy(offset = offset.map(_._2))
+        val keysEnd = offset.fold(m.start)(_._1)
+        // a pipe ORDER BY (`… |> ORDER BY k |> FETCH …`) ends the query at its pipe
+        val queryEnd = marks.lift(order - 1)
+          .filter(x => x._3 == "|>" && sql.substring(x._2, orderStart).trim.isEmpty)
+          .fold(orderStart)(_._1)
+        val before = marks.filter(_._1 < queryEnd)
+        val setOp = before.exists { case (a, _, k) =>
+          Set("UNION", "INTERSECT", "EXCEPT", "MINUS")(k) && prefixMatch(SetOpArm, sql, a).isDefined &&
+            { val p = prevToken(sql, spans, a); p < 0 || sql.charAt(p) != '*' }
+        }
+        val selects = before.filter(_._3 == "SELECT")
+        def keysOf(t: String) = t.trim.stripSuffix("|>").trim
+        if (!setOp && !before.exists(_._3 == "|>") && selects.size == 1) {
+          val sel = new Sel(sql, spans, depth, selects.head._1, qualifyClause = false)
+          sel.site(to = qe, skip = Set("page", "pipes", "pred")) { p =>
+            val select = "SELECT " + sel.hints + (if (sel.distinct) "DISTINCT " else "") +
+              p.itemList + " " + p.body
+            rankRows(select, if (sel.distinct) None else Some((sel.hints, p.items, p.body)),
+              p.items, sel.distinct, keysOf(p.keys.getOrElse("")), pg, spark)
+          }
+        } else
+          new Site(qs, qe, Seq((qs, queryEnd), (keysStart, keysEnd)),
+            t => Some(rankRows(lineSafe(t(0).trim), None, Nil, distinct = false,
+              keysOf(t(1)), pg, spark)))
+      }
+    }
 
   // ---- Snowflake constructs -----------------------------------------------
 
@@ -2680,351 +3164,6 @@ object Dialect {
     */
   private[graft] def rewriteBracketIdents(sql: String): String =
     replaceOutside(sql, """\[([^\[\]]+)\]""".r)(m => s"`${m.group(1)}`")
-
-  /** `SELECT TOP n …` / `SELECT TOP (n) …` → `SELECT … LIMIT n`, with the
-    * LIMIT inserted at the END of that SELECT's scope: the first `)` that
-    * closes an enclosing paren, a same-depth set-operation keyword, or
-    * end-of-string — so TOP works inside subqueries and on either side of
-    * a UNION. `TOP n WITH TIES` (r14) and `TOP n PERCENT [WITH TIES]`
-    * (r15) rewrite through [[buildWithTies]]'s rank filter / percent
-    * cutoff applied to that SELECT's own scope span — since r15 at ANY
-    * subquery level, not just the outermost statement (the span is
-    * rebuilt in place and the scan continues over the splice). The
-    * percent cutoff is `CEILING(count * n / 100.0)` per T-SQL's
-    * round-up over row_number (plain) or rank (WITH TIES); n may be
-    * fractional only with PERCENT, and PERCENT without ORDER BY fails
-    * fast (an arbitrary n% sample is not a deterministic rewrite).
-    *
-    * SET-OPERATION ARMS (r18): `SELECT TOP 10 … UNION ALL SELECT TOP
-    * 10 …` binds each TOP to its OWN arm in T-SQL/Teradata (TOP is part
-    * of the query specification, never of the combined result — the
-    * legacy-report union shape). A bare `… LIMIT n UNION …` splice is a
-    * Spark parse error, so an arm-scoped TOP is wrapped as a
-    * parenthesized arm instead: `(SELECT … LIMIT n) UNION ALL …`.
-    * ORDER BY placement follows T-SQL's own scope rules:
-    *   - an ORDER BY before a same-depth set-op keyword is a T-SQL
-    *     syntax error ("Incorrect syntax near UNION" — arms cannot be
-    *     ordered even with TOP present) → named error, never a silent
-    *     pick-the-top-n-by-that-order semantics T-SQL doesn't have;
-    *   - a trailing ORDER BY after the LAST arm belongs to the
-    *     STATEMENT (it sorts the COMBINED result — ORDER BY in a
-    *     set-op query is legal only at the end and applies to the
-    *     union, per the T-SQL ORDER BY scope rule), so it stays
-    *     OUTSIDE the wrapped arm: `… UNION ALL (SELECT … LIMIT n)
-    *     ORDER BY k`. The last arm's TOP therefore picks rows without
-    *     an ordering contract, exactly T-SQL's (nondeterministic)
-    *     semantics for TOP without ORDER BY.
-    * TOP n PERCENT inside an arm (r19 — a named error before) is
-    * legal T-SQL: the arm keeps `CEILING(count * n / 100)` of its own
-    * rows with NO row choice specified (ORDER BY inside an arm is a
-    * T-SQL syntax error, so an arm percent can never carry an
-    * ordering contract). [[buildWithTies]] cannot serve it — the
-    * builder requires the SELECT … ORDER BY shape — so the arm is
-    * wrapped directly: a row_number over the arm's OWN OUTPUT COLUMNS
-    * against a `count(*) OVER ()` percent base, spliced back as a
-    * parenthesized arm. Ranking by all output columns makes the pick
-    * DETERMINISTIC AS A MULTISET (rows tying on every output column
-    * are interchangeable) — a valid pick under T-SQL's any-rows
-    * contract that an oracle can replay; null keys sort smallest,
-    * which is both Spark's default and T-SQL's. The global
-    * count/rank windows are the construct's semantics (the percent
-    * base is the whole arm). A QUALIFY inside the arm collapses
-    * through the chain's `qualifyRewrite` before the rank. The arm's
-    * output names come from a schema-only analysis that runs
-    * MID-CHAIN — an arm leaning on rewrites that run later (function
-    * renames like GETDATE) surfaces the named cannot-analyze error,
-    * the same contract as [[expandStarItems]]'s star analysis.
-    * `TOP n [PERCENT] WITH TIES` in an arm
-    * keeps a named error: WITH TIES requires an ORDER BY, which
-    * T-SQL rejects inside an arm — spell it as a derived table.
-    */
-  private[graft] def rewriteTsqlTop(sql: String,
-      spark: Option[SparkSession] = None,
-      allowPercentTies: Boolean = true,
-      qualifyRewrite: Option[String => String] = None,
-      minusIsSetOp: Boolean = false): String = {
-    // T-SQL clause order is SELECT [DISTINCT] TOP n — DISTINCT applies
-    // FIRST, then TOP keeps n of the distinct rows (r16; the DISTINCT
-    // spelling didn't match before and died as a raw parse error)
-    val topTail =
-      """(?is)^\s*(DISTINCT\s+)?TOP\s+\(?\s*(\d+(?:\.\d+)?)\s*\)?(\s+PERCENT)?(\s+WITH\s+TIES)?\s+""".r
-    // MINUS is Teradata's AND Snowflake's EXCEPT synonym — without it
-    // an arm-scoped TOP before MINUS would splice into the set-op
-    // keyword (r18) or, worse, silently limit the combined result.
-    // Gated per chain (r19, from ADVICE + review): `minus` is a legal
-    // unquoted IDENTIFIER in T-SQL (which has no MINUS set op), so
-    // treating it as a scope terminator there would end a TOP's scope
-    // at a table/alias named minus and corrupt the splice; the
-    // Teradata and Snowflake chains pass minusIsSetOp = true.
-    val setOps = Seq("UNION", "INTERSECT", "EXCEPT") ++
-      (if (minusIsSetOp) Seq("MINUS") else Nil)
-    val selRe = "(?i)\\bSELECT\\b".r
-    case class TopSite(start: Int, end: Int, distinctKw: String,
-      n: String, isPercent: Boolean, isTies: Boolean)
-    var cur = sql
-    var changed = true
-    while (changed) {
-      changed = false
-      // SCANS run over the comment-blanked text (length-preserving, r18
-      // review): a `union` or `ORDER BY` inside a comment must not end a
-      // TOP's scope span or masquerade as the set-op context, and a
-      // commented-out `SELECT TOP` must not trigger at all. SPLICES
-      // assemble from the ORIGINAL text so comments inside the kept arm
-      // survive (the region between SELECT and TOP is consumed either
-      // way). SELECT-adjacent optimizer hints — which the blanking
-      // deliberately preserves — are consumed by the SPAN-based
-      // [[leadingHint]] before the TOP tail is tested (r18 third review:
-      // a lazy `/*+.*?*/` regex group could backtrack across live SQL
-      // into a literal's own */ and corrupt the statement — the same bug
-      // class the DISTINCT ON rewrite fixed span-based in r17); they are
-      // re-emitted by armHint below. Spans are OPAQUE (hints included) so
-      // a paren or keyword inside a preserved hint cannot skew the scope
-      // scan either.
-      val blanked = blankComments(cur)
-      val spans = lex(blanked)
-      val siteOpt = selRe.findAllMatchIn(blanked)
-        .filter(sm => spans.outside(sm.start))
-        .flatMap { sm =>
-          val (_, afterHint) = leadingHint(blanked, sm.start, spans)
-          topTail.findFirstMatchIn(blanked.substring(afterHint)).map { tm =>
-            TopSite(sm.start, afterHint + tm.end,
-              if (tm.group(1) != null) "DISTINCT " else "",
-              tm.group(2), tm.group(3) != null, tm.group(4) != null)
-          }
-        }.nextOption()
-      siteOpt.foreach { m =>
-        val distinctKw = m.distinctKw
-        val isPercent = m.isPercent
-        val isTies = m.isTies
-        // Snowflake's own TOP takes neither PERCENT nor WITH TIES —
-        // executing the T-SQL spellings there silently returned rows
-        // for statements the source engine rejects (r17, from ADVICE;
-        // the Snowflake wiring passes allowPercentTies = false)
-        if (!allowPercentTies && (isPercent || isTies))
-          throw new graft.UnsupportedError(
-            "TOP " + (if (isPercent) "PERCENT" else "WITH TIES") +
-              " is a T-SQL spelling this dialect's own parser rejects " +
-              "(Snowflake TOP takes a bare row count)")
-        val n = m.n
-        // T-SQL rejects a non-integer TOP count without PERCENT — checked
-        // before the WITH TIES branch so `TOP 2.5 WITH TIES` raises too
-        if (!isPercent && n.contains('.'))
-          throw new graft.UnsupportedError(
-            "TOP with a fractional count requires PERCENT")
-        // a top-level MINUS spelled AS A SET OP (followed by an arm) on
-        // a chain where minus is only an identifier: T-SQL rejects the
-        // statement outright, and scoping the TOP past it would
-        // silently LIMIT the combined result Spark's own MINUS synonym
-        // executes (r19 second review) — named error instead
-        if (!minusIsSetOp) {
-          val dmap = depthAt(blanked, spans)
-          "(?is)\\bMINUS\\s+(?:(?:ALL|DISTINCT)\\s+)?(?:SELECT\\b|\\()".r
-            .findAllMatchIn(blanked)
-            .find(mm => spans.outside(mm.start) && dmap(mm.start) == 0)
-            .foreach(_ => throw new graft.UnsupportedError(
-              "MINUS as a set operation is not supported on this " +
-                "dialect's chain (spell it EXCEPT) — a TOP cannot be " +
-                "scoped against it"))
-        }
-        // this SELECT's scope ends at the first enclosing-paren closer, a
-        // same-depth set-operation keyword, or end-of-string
-        var i = m.end
-        var depth = 0
-        var scopeEnd = blanked.length
-        var found = false
-        while (i < blanked.length && !found) {
-          if (!spans.outside(i)) i += 1
-          else {
-            val c = blanked.charAt(i)
-            if (c == '(') { depth += 1; i += 1 }
-            else if (c == ')') {
-              if (depth == 0) { scopeEnd = i; found = true }
-              else { depth -= 1; i += 1 }
-            } else if (depth == 0 && c.isLetter &&
-                (i == 0 || { val p = blanked.charAt(i - 1); !p.isLetterOrDigit && p != '_' }) &&
-                setOps.exists(k => blanked.regionMatches(true, i, k, 0, k.length) &&
-                  (i + k.length == blanked.length || {
-                    val q = blanked.charAt(i + k.length); !q.isLetterOrDigit && q != '_'
-                  }))) {
-              scopeEnd = i; found = true
-            } else i += 1
-          }
-        }
-        // set-operation-arm detection (r18): the scope scan ended on a
-        // same-depth set-op keyword (non-last arm), or the SELECT is
-        // directly preceded by one (last arm). A parenthesized arm —
-        // prefix ending with `(` — is NOT an arm here: its scope ends at
-        // the closing paren and the in-place LIMIT splice is already
-        // legal Spark.
-        val endsAtSetOp = found && scopeEnd < blanked.length &&
-          blanked.charAt(scopeEnd) != ')'
-        val prefixTrim = blanked.substring(0, m.start).trim
-        val precededBySetOp =
-          ("(?is)\\b(?:" + setOps.mkString("|") +
-            ")(?:\\s+(?:ALL|DISTINCT))?\\s*$").r
-            .findFirstIn(prefixTrim).isDefined
-        val isArm = endsAtSetOp || precededBySetOp
-        // top-level ORDER BY inside this TOP's scope span (arm handling
-        // needs its position). The plain-TOP splices below take their
-        // ARM TEXT from the blanked span: appending ` LIMIT n` after an
-        // arm whose body ends in a `--` comment would otherwise swallow
-        // the LIMIT into the comment — a silent no-limit answer (r18
-        // review; pre-existing in the non-arm path too). Comments in
-        // that region are display-only (inner SELECT-adjacent hints are
-        // hint-preserved by the blanking).
-        val armBlank = blanked.substring(m.end, scopeEnd)
-        lazy val armOrderIdx = {
-          val aSpans = lex(armBlank)
-          topLevelKeyword(armBlank, aSpans, depthAt(armBlank, aSpans), "ORDER")
-        }
-        // an optimizer hint directly after `TOP n` (`SELECT TOP 100 /*+
-        // BROADCAST(d) */ …`) is honored by the SOURCE engines and lands
-        // SELECT-adjacent in the rewritten statement — but blankComments
-        // blanks it (its scan-back sees the count, not SELECT), so it is
-        // re-read from the ORIGINAL arm text and re-emitted after the
-        // SELECT each plain splice builds (r18 review; plain comments in
-        // the same position stay dropped). Consecutive hint blocks and
-        // interleaved plain comments follow the lexer's spans.
-        // the hint sits INSIDE the consumed match region: the pattern's
-        // greedy whitespace runs straight through the blanked hint bytes,
-        // so m.end is already past it — collect the original hint spans
-        // lying within [m.start, m.end)
-        val armHint = lex(cur).all
-          .collect { case Span(a, b, SpanKind.Comment) if a >= m.start && b <= m.end &&
-              b - a >= 3 && cur.charAt(a + 1) == '*' && cur.charAt(a + 2) == '+' =>
-            cur.substring(a, b) + " "
-          }.mkString
-        val replacement =
-          if ((isPercent || isTies) && isArm) {
-            // arm-scoped TOP PERCENT (r19 — a named error before; legal
-            // T-SQL). See the class doc: the arm cannot legally carry an
-            // ORDER BY, so WITH TIES keeps a named error and PERCENT
-            // wraps the arm in a deterministic count-cutoff rank over
-            // the arm's own output columns, spliced back parenthesized.
-            if (endsAtSetOp && armOrderIdx >= 0)
-              throw new graft.UnsupportedError(
-                "ORDER BY inside a set-operation arm is not supported " +
-                  "(T-SQL/Teradata reject it too — use a derived table " +
-                  "to order an arm's TOP)")
-            if (isTies)
-              throw new graft.UnsupportedError(
-                "TOP WITH TIES in a set-operation arm is not supported: " +
-                  "WITH TIES requires an ORDER BY, and T-SQL rejects " +
-                  "ORDER BY inside an arm — use a derived table")
-            val hasTrailingOrder = !endsAtSetOp && armOrderIdx >= 0
-            // last arm with a trailing statement ORDER BY: the sort
-            // belongs to the COMBINED result and stays outside the arm,
-            // exactly like the plain-TOP last-arm splice below
-            val armBody = (if (hasTrailingOrder) armBlank.substring(0, armOrderIdx)
-              else armBlank).trim
-            val tail = if (hasTrailingOrder)
-              " " + cur.substring(m.end + armOrderIdx, scopeEnd) else " "
-            if (n.toDouble == 0)
-              // literal-zero percent short-circuits to LIMIT 0 (the r16
-              // zero-count rule, applied per arm)
-              "(SELECT " + armHint + distinctKw + armBody + " LIMIT 0)" + tail
-            else {
-              val armSel0 = "SELECT " + armHint + distinctKw + armBody
-              // a QUALIFY inside the arm (Teradata) collapses BEFORE
-              // the percent rank — and before the schema analysis,
-              // which cannot parse the raw clause (r19 review: the
-              // parameter was ignored here while the non-arm percent
-              // path hands it into buildWithTies)
-              val armSel = qualifyRewrite.map(f => f(armSel0)).getOrElse(armSel0)
-              val s = spark.getOrElse(throw new graft.UnsupportedError(
-                "TOP PERCENT in a set-operation arm needs registered " +
-                  "tables to name the arm's output columns"))
-              val names =
-                try s.sql(s"SELECT * FROM ( $armSel ) __tpa").schema.fieldNames.toSeq
-                catch {
-                  case e: Exception => throw new graft.UnsupportedError(
-                    "TOP PERCENT in a set-operation arm cannot analyze the arm " +
-                      s"(${e.getMessage.linesIterator.nextOption().getOrElse("").take(120)})")
-                }
-              names.foreach { f =>
-                if (!f.matches("[A-Za-z_][A-Za-z0-9_]*") ||
-                    f.equalsIgnoreCase("__tprn") || f.equalsIgnoreCase("__tpct"))
-                  throw new graft.UnsupportedError(
-                    "TOP PERCENT in a set-operation arm met an output name " +
-                      s"the outer rank cannot carry: $f — alias the item")
-              }
-              names.map(_.toLowerCase).groupBy(identity)
-                .collectFirst { case (nm, vs) if vs.size > 1 => nm }
-                .foreach(nm => throw new graft.UnsupportedError(
-                  "TOP PERCENT in a set-operation arm met a duplicate " +
-                    s"output name: $nm"))
-              // backticked (r19 second review, matching the star
-              // rewrite's emit): an output name that happens to be a
-              // Spark non-reserved keyword (left, union, …) must not
-              // re-parse as syntax
-              val cols = names.map(nm => s"`$nm`").mkString(", ")
-              "(SELECT " + cols + " FROM (SELECT __tpa.*, " +
-                s"row_number() OVER (ORDER BY $cols) AS __tprn, " +
-                "count(*) OVER () AS __tpct " +
-                s"FROM ( $armSel ) __tpa) __tpab " +
-                s"WHERE __tprn <= CEILING(__tpct * $n / 100.0))" + tail
-            }
-          } else if (isPercent || isTies) {
-            val construct = if (isPercent) "TOP PERCENT" else "TOP WITH TIES"
-            // the construct is only meaningful for a WHOLE select
-            // statement — the outermost one or a parenthesized
-            // subquery/CTE body (an unparenthesized set-operation ARM
-            // takes the r19 branch above; r15 review fix: the span
-            // splice must neither hijack the union's trailing ORDER BY
-            // as the arm's rank sort nor glue the rank filter onto the
-            // set-op keyword)
-            if (!(prefixTrim.isEmpty || prefixTrim.endsWith("(")))
-              throw new graft.UnsupportedError(
-                s"$construct is only supported on the outermost SELECT " +
-                  "or a parenthesized subquery")
-            if (scopeEnd < cur.length && cur.charAt(scopeEnd) != ')')
-              throw new graft.UnsupportedError(
-                s"$construct in a set-operation arm is not supported")
-            // the rank/percent rewrite applies to the span and splices
-            // back — the rescan continues over the rebuilt text (it
-            // spells no TOP), so nested plain TOPs still rewrite. A hint
-            // consumed with the TOP tokens is re-emitted SELECT-adjacent
-            // (before DISTINCT, Spark's grammar order), where
-            // buildWithTies' own blanking preserves it.
-            val stripped = "SELECT " + armHint + distinctKw +
-              cur.substring(m.end, scopeEnd)
-            if (isPercent)
-              buildWithTies(stripped, n, stripped.length, stripped.length,
-                nullsLargest = false, percent = true, ties = isTies,
-                construct = "TOP PERCENT", spark = spark,
-                qualifyRewrite = qualifyRewrite)
-            else
-              // T-SQL sorts nulls SMALLEST — Spark's own default — so the
-              // rank window needs no placement pin (nullsLargest = false)
-              buildWithTies(stripped, n, stripped.length, stripped.length,
-                nullsLargest = false, spark = spark,
-                qualifyRewrite = qualifyRewrite)
-          } else if (isArm) {
-            // arm-scoped plain TOP (r18): wrap as a parenthesized set-op
-            // arm. See the class doc for the ORDER BY scope rules.
-            if (endsAtSetOp && armOrderIdx >= 0)
-              throw new graft.UnsupportedError(
-                "ORDER BY inside a set-operation arm is not supported " +
-                  "(T-SQL/Teradata reject it too — use a derived table " +
-                  "to order an arm's TOP)")
-            if (!endsAtSetOp && armOrderIdx >= 0) {
-              // last arm with a trailing statement ORDER BY: the sort
-              // belongs to the COMBINED result and stays outside the arm
-              // (tail kept from the ORIGINAL — nothing is appended after
-              // it, so its comments are safe)
-              "(SELECT " + armHint + distinctKw +
-                armBlank.substring(0, armOrderIdx).trim +
-                s" LIMIT $n) " + cur.substring(m.end + armOrderIdx, scopeEnd)
-            } else
-              "(SELECT " + armHint + distinctKw + armBlank.trim + s" LIMIT $n) "
-          } else
-            "SELECT " + armHint + distinctKw + armBlank + s" LIMIT $n "
-        cur = cur.substring(0, m.start) + replacement + cur.substring(scopeEnd)
-        changed = true
-      }
-    }
-    cur
-  }
 
   /** `CONVERT(type, expr)` → `CAST(expr AS type)` with SQL Server type
     * names mapped to Spark's (`NVARCHAR`→STRING, `DATETIME`→TIMESTAMP,
@@ -4050,216 +4189,6 @@ object Dialect {
       })
     }
 
-  /** Shared WITH TIES construction (r14): `SELECT items FROM body ORDER
-    * BY ord <ties clause>` → a rank()-filtered subquery keeping every
-    * row that ties with the n-th on the ORDER BY keys:
-    * `SELECT names FROM ( SELECT items, rank() OVER (ORDER BY ord) AS
-    * __wt FROM body ) __wtq WHERE __wt <= n ORDER BY ord`. Spark's
-    * InferWindowGroupLimit turns the rank-filter into a per-partition
-    * group limit (each partition pre-prunes to ≤ n rows before the
-    * single-partition rank — the same residual shape as a global
-    * top-k), which is what makes the rewrite scale-safe; the PlanCheck
-    * gate pins the WindowGroupLimit node. Select items must be
-    * nameable (alias or bare column) like QUALIFY's, and window sort
-    * keys naming a select alias resolve back to the aliased expression
-    * (Spark cannot read a lateral alias inside a window). When
-    * `nullsLargest` (Postgres/Oracle — nulls sort last-on-ASC/
-    * first-on-DESC, the OPPOSITE of Spark's default), every sort key
-    * without an explicit placement gets the dialect default pinned in
-    * BOTH the rank window and the outer ORDER BY: the window decides
-    * row MEMBERSHIP, so an unpinned key would return a different row
-    * set whenever it holds NULLs. T-SQL sorts nulls smallest — Spark's
-    * own default — and passes `nullsLargest = false` (no pin needed).
-    * Top-level set operations fail fast (the rank would inject into
-    * one arm only).
-    *
-    * r15 generalization — T-SQL `TOP n PERCENT [WITH TIES]` rides the
-    * same builder: `percent = true` adds a `count(*) OVER () AS __wtc`
-    * column and the keep-filter becomes `__wt <= CEILING(__wtc * n /
-    * 100.0)` (T-SQL rounds the row count UP), and `ties = false`
-    * (plain PERCENT) ranks with `row_number()` instead of `rank()` so
-    * exactly the first n% of the sorted stream survives. The percent
-    * form's global count is inherent to the construct's semantics —
-    * its gate carries a windowLint allowlist entry.
-    *
-    * `offset = Some(m)` (r15 — ANSI `OFFSET m ROWS FETCH NEXT n ROWS
-    * WITH TIES`, a named fail-fast before): result = rows m+1..m+n of
-    * the sorted stream plus every row tying with row m+n. Membership
-    * is `row_number > m AND rank <= rank(row m+n)` — the cutoff rank
-    * is `max(CASE WHEN row_number <= m+n THEN rank END) OVER ()` over
-    * a frame PRE-FILTERED to `rank <= m+n` (safe: every kept row's
-    * rank is ≤ the cutoff ≤ m+n since rank ≤ row_number, and the
-    * static rank filter sits directly above the window so the frame
-    * is bounded before the global max runs). Fewer than m+n rows →
-    * the cutoff is the last row's rank and everything after the
-    * offset comes back, exactly Postgres. Offset composes only with
-    * the plain ties form (percent has no ANSI offset spelling).
-    *
-    * r16 additions: a LITERAL ZERO count short-circuits every form to
-    * LIMIT 0 (the offset membership was silently wrong at n = 0 — the
-    * r15 judge finding); STAR select items expand from the registered
-    * schemas via [[expandStarItems]]; AS-less implicit aliases resolve
-    * through [[implicitAlias]]; `SELECT DISTINCT` composes by ranking
-    * a `(SELECT DISTINCT …)` subquery with sort keys resolved to its
-    * OUTPUT names (DISTINCT applies first in every source dialect);
-    * percent paths — DISTINCT (r17) and plain alike — take the
-    * two-stage `percentScalePlan` when the leading key is
-    * percentile-sketchable (the DISTINCT variant ranks the
-    * `( SELECT DISTINCT … )` subquery: the stats/cutoff stage counts
-    * the distinct OUTPUT and keys materialize outside the distinct).
-    *
-    * r17: set operations compose for the ANSI FETCH family (see the
-    * set-op branch below) — the combined result is ranked and the sort
-    * vocabulary is the arms' output names, per Postgres's scope rule.
-    */
-  /** Expand `*` / `alias.*` select items against the statement's FROM
-    * body by ANALYZING `SELECT <star> <body>` on the registered views
-    * (schema-only — nothing executes; [[Engine.execute]] registers
-    * tables before dialect rewriting, the same contract
-    * [[rewriteStarReplace]] relies on). Used by the WITH TIES / TOP /
-    * PERCENT / DISTINCT ON rewrites, whose outer projection must
-    * re-select every output column BY NAME (r15 verdict item 4 —
-    * `SELECT * … FETCH FIRST 1 ROWS WITH TIES` is legal Postgres and
-    * used to die as "cannot name: *"). Items pass through unchanged
-    * when no star is present; with a star but no session (the
-    * pure-string spec path) or an unanalyzable/derived FROM, a NAMED
-    * error is raised; duplicate or non-identifier expanded names (a
-    * join star with colliding columns) also raise — the outer
-    * projection could not re-select them unambiguously.
-    */
-  /** A select item whose star form Spark cannot parse inline —
-    * `* REPLACE (…)` / `t.* REPLACE (…)` (any dialect's spelling) or a
-    * QUALIFIED star with EXCEPT/EXCLUDE. [[expandStarItems]] expands
-    * these into named items; callers that keep the ORIGINAL select-list
-    * text in their emitted subquery (rewriteQualify) must splice the
-    * expansion instead when one of these is present.
-    */
-  private def starNeedsExpansion(item: String): Boolean =
-    ("(?is)^\\s*(?:[A-Za-z_][A-Za-z0-9_]*\\s*\\.\\s*)?\\*\\s*" +
-      "(?:(?:EXCEPT|EXCLUDE)\\s*(?:\\([^()]*\\)\\s*|[A-Za-z_][A-Za-z0-9_]*\\s+))?" +
-      "REPLACE\\s*\\(").r
-      .findFirstMatchIn(item).isDefined ||
-      "(?is)^\\s*[A-Za-z_][A-Za-z0-9_]*\\s*\\.\\s*\\*\\s*(?:EXCEPT|EXCLUDE)\\b".r
-        .findFirstMatchIn(item).isDefined
-  private def expandStarItems(spark: Option[SparkSession], items: Seq[String],
-      body: String, construct: String): Seq[String] = {
-    // bare or qualified star, optionally with a trailing EXCEPT/EXCLUDE
-    // column list (DuckDB spells EXCLUDE; Spark's native spelling is
-    // EXCEPT — the probe normalizes so analysis expands both). The BARE
-    // star's EXCEPT rides Spark's native `* EXCEPT (…)` analysis; a
-    // QUALIFIED `t.* EXCEPT` (r17 — a named error before) expands `t.*`
-    // and subtracts the listed columns here.
-    val starRe = ("(?is)^\\s*(?:([A-Za-z_][A-Za-z0-9_]*)\\s*\\.\\s*)?\\*" +
-      "\\s*(?:(?:EXCEPT|EXCLUDE)\\s*\\(([^()]*)\\)" +
-      "|(?:EXCEPT|EXCLUDE)\\s+([A-Za-z_][A-Za-z0-9_]*))?\\s*$").r
-    // `* REPLACE (expr AS col, …)` / `t.* REPLACE (…)` (r17 — a named
-    // error before): the replace list may nest parens/commas, so it is
-    // paren-matched rather than regexed. An EXCLUDE/EXCEPT clause may
-    // sit between the star and REPLACE — DuckDB's combined
-    // `* EXCLUDE (…) REPLACE (…)` (r19): the exclusions drop BEFORE
-    // the REPLACE applies (DuckDB's own order). group(2) = paren
-    // exclude list, group(3) = bare exclude column.
-    val replaceRe =
-      ("(?is)^\\s*(?:([A-Za-z_][A-Za-z0-9_]*)\\s*\\.\\s*)?\\*\\s*" +
-        "(?:(?:EXCEPT|EXCLUDE)\\s*(?:\\(([^()]*)\\)\\s*|" +
-        "([A-Za-z_][A-Za-z0-9_]*)\\s+))?REPLACE\\s*\\(").r
-    if (!items.exists(it => starRe.findFirstMatchIn(it).isDefined ||
-        replaceRe.findFirstMatchIn(it).isDefined)) return items
-    val s = spark.getOrElse(throw new graft.UnsupportedError(
-      s"$construct over a star select list needs registered tables to expand *"))
-    def starFields(star: String): Seq[String] = {
-      val fields =
-        try s.sql(s"SELECT $star $body").schema.fieldNames.toSeq
-        catch {
-          case e: Exception => throw new graft.UnsupportedError(
-            s"$construct cannot expand $star from the FROM clause " +
-              s"(${e.getMessage.linesIterator.nextOption().getOrElse("").take(120)}); " +
-              "name the columns explicitly")
-        }
-      fields.foreach { f =>
-        if (!f.matches("[A-Za-z_][A-Za-z0-9_]*"))
-          throw new graft.UnsupportedError(
-            s"$construct star expansion met a non-identifier column name: $f")
-      }
-      fields
-    }
-    val expanded = items.flatMap { it =>
-      replaceRe.findFirstMatchIn(it) match {
-        case Some(rm) =>
-          val q = Option(rm.group(1))
-          val itSpans = lex(it)
-          val open = rm.end - 1
-          val close = matchParen(it, itSpans, open)
-          // trailing text AFTER the REPLACE list (a REPLACE-then-EXCLUDE
-          // combo — an order DuckDB's grammar rejects too — or a second
-          // clause) keeps a named error; the EXCLUDE-then-REPLACE combo
-          // is matched in front position by replaceRe (r19)
-          if (close < 0 || it.substring(close + 1).trim.nonEmpty)
-            throw new graft.UnsupportedError(
-              s"$construct cannot expand this star REPLACE form: $it")
-          val repls =
-            parseReplaceItems(splitArgs(it, itSpans, open + 1, close), s"$construct star REPLACE")
-          val excludes = parseStarExcludes(Option(rm.group(2)), Option(rm.group(3)))
-          val fields = starFields(q.map(_ + ".*").getOrElse("*"))
-          val known = fields.map(_.toLowerCase).toSet
-          repls.keys.find(!known.contains(_)).foreach { missing =>
-            throw new graft.UnsupportedError(
-              s"$construct star REPLACE names column $missing which the FROM clause lacks")
-          }
-          val kept = starExcludeKept(excludes, fields, repls,
-            s"$construct star EXCLUDE … REPLACE")
-          kept.map { f =>
-            repls.get(f.toLowerCase) match {
-              case Some(e) => s"($e) AS $f"
-              case None    => q.map(a => s"$a.$f").getOrElse(f)
-            }
-          }
-        case None => starRe.findFirstMatchIn(it) match {
-          case None => Seq(it)
-          case Some(sm) =>
-            val q = Option(sm.group(1))
-            val except = Option(sm.group(2)).orElse(Option(sm.group(3)))
-              .map(_.trim).filter(_.nonEmpty)
-            if (q.isDefined && except.isDefined) {
-              // qualified star + EXCEPT/EXCLUDE (r17): Spark cannot
-              // analyze `t.* EXCEPT (…)` directly — expand t.* and
-              // subtract the listed columns (each must exist, like
-              // DuckDB's own EXCLUDE contract; dropping every column
-              // would leave an empty select list)
-              val exNames = except.get.split(",").map(_.trim).filter(_.nonEmpty)
-              exNames.foreach { e =>
-                if (!e.matches("[A-Za-z_][A-Za-z0-9_]*"))
-                  throw new graft.UnsupportedError(
-                    s"$construct qualified-star EXCEPT expects bare column names, got: $e")
-              }
-              val fields = starFields(q.get + ".*")
-              val known = fields.map(_.toLowerCase).toSet
-              exNames.find(e => !known.contains(e.toLowerCase)).foreach { missing =>
-                throw new graft.UnsupportedError(
-                  s"$construct qualified-star EXCEPT names column $missing " +
-                    "which the FROM clause lacks")
-              }
-              val ex = exNames.map(_.toLowerCase).toSet
-              val kept = fields.filterNot(f => ex.contains(f.toLowerCase))
-              if (kept.isEmpty)
-                throw new graft.UnsupportedError(
-                  s"$construct qualified-star EXCEPT drops every column: $it")
-              kept.map(f => s"${q.get}.$f")
-            } else {
-              val star = q.map(_ + ".*").getOrElse("*") +
-                except.map(e => s" EXCEPT ($e)").getOrElse("")
-              starFields(star).map(f => q.map(a => s"$a.$f").getOrElse(f))
-            }
-        }
-      }
-    }
-    expanded.map(itemName(_, construct).toLowerCase).groupBy(identity)
-      .collectFirst { case (nm, vs) if vs.size > 1 => nm }
-      .foreach(nm => throw new graft.UnsupportedError(
-        s"$construct star expansion produced a duplicate output name: $nm"))
-    expanded
-  }
-
   /** Split one ORDER BY key into (expression, trimmed ASC/DESC +
     * NULLS FIRST/LAST suffix) — the shared parse for every sort-key
     * consumer in the paging builder (r17 review: the regex literal had
@@ -4437,543 +4366,6 @@ object Dialect {
     }
   }
 
-  private def buildWithTies(sql0: String, n: String,
-      ordEnd: Int, tiesEnd: Int, nullsLargest: Boolean,
-      percent: Boolean = false, ties: Boolean = true,
-      construct: String = "WITH TIES",
-      offset: Option[String] = None,
-      spark: Option[SparkSession] = None,
-      nullsAlwaysLast: Boolean = false,
-      setOpOk: Boolean = false,
-      qualifyIsClause: Boolean = true,
-      qualifyRewrite: Option[String => String] = None): String = {
-    // comments are normalized to whitespace UP FRONT (r17 review):
-    // [[blankComments]] is LENGTH-PRESERVING, so the caller's
-    // ordEnd/tiesEnd byte offsets stay valid, while (a) a paren or
-    // keyword inside a comment can no longer skew the depth map or the
-    // UNION/ORDER scans, and (b) every single-line splice this builder
-    // emits (`$body ) __wtq`, `items.mkString(", ")`) is safe from a
-    // trailing `--` comment swallowing the appended syntax. A trailing
-    // comment AFTER the ties clause is legal SQL and now passes the
-    // trailing-text check instead of raising.
-    val sql = blankComments(sql0)
-    // opaque (not literal-only) spans: optimizer hints survive the
-    // blanking, and a comma or paren inside `/*+ REPARTITION(3, c) */`
-    // must not split select items or skew the depth map
-    val spans = lex(sql)
-    val depth = depthAt(sql, spans)
-    // set-operation detection runs BEFORE the single-SELECT shape check:
-    // a parenthesized first arm — `(SELECT …) UNION (SELECT …) ORDER BY
-    // …` — has no top-level SELECT at position 0. The match requires the
-    // CLAUSE shape (keyword followed by an arm: [parenthesized]
-    // SELECT/VALUES/TABLE/WITH), not the bare word — `SELECT * EXCEPT
-    // (cols)` is a star clause, not a set operation (r16 probe).
-    // MINUS is Oracle's EXCEPT spelling and a Spark-native synonym —
-    // without it an OracleIsh FETCH over MINUS would rank the first arm
-    // only and die on a raw arity error (r17 review).
-    val setOpHit = Seq("UNION", "INTERSECT", "EXCEPT", "MINUS").exists { k =>
-      // `(?:\(\s*)+` — an arm may sit under ANY number of parens
-      // (`EXCEPT ((SELECT …))` is legal Postgres; a single-paren match
-      // missed it and fell through to a raw arity error, r17 review)
-      val armRe = ("(?is)\\b" + k +
-        "\\s+(?:(?:ALL|DISTINCT)\\s+)?" +
-        "(?:SELECT\\b|VALUES\\b|TABLE\\b|WITH\\b|(?:\\(\\s*)+(?:SELECT|VALUES|TABLE|WITH)\\b)").r
-      armRe.findAllMatchIn(sql).exists(mm =>
-        depth(mm.start) == 0 && spans.outside(mm.start))
-    }
-    if (setOpHit) {
-      /* WITH TIES / PERCENT over a set operation (r17 — a named
-       * fail-fast before; Postgres legally applies `(SELECT …) UNION
-       * (SELECT …) ORDER BY k FETCH FIRST n ROWS WITH TIES` to the
-       * COMBINED result). The whole set-op body becomes the rank
-       * subquery; per Postgres's own scope rule the ORDER BY over a
-       * set operation may name only OUTPUT COLUMNS (or ordinals) — the
-       * arms' output names are the only in-scope sort vocabulary — so
-       * keys resolve against the analyzed combined schema and anything
-       * else keeps a named error. The resolved statement re-enters this
-       * builder as a plain single-SELECT, so zero-count short-circuit,
-       * null-placement pins, OFFSET membership, and the two-stage
-       * percent scale plan all apply to set-op inputs unchanged.
-       * Gated only for the ANSI FETCH family (`setOpOk`): a T-SQL
-       * `SELECT TOP n … UNION …` binds TOP to the FIRST arm with no
-       * ordering contract — rewriting it over the combined result
-       * would be a silent semantics change, so it keeps the fail-fast.
-       */
-      if (!setOpOk)
-        throw new graft.UnsupportedError(
-          s"$construct over a top-level set operation is not supported " +
-            "(the rank filter would apply to one arm only)")
-      val s = spark.getOrElse(throw new graft.UnsupportedError(
-        s"$construct over a set operation needs registered tables to " +
-          "resolve the arms' output names"))
-      val orderIdx0 = topLevelKeyword(sql, spans, depth, "ORDER")
-      if (orderIdx0 < 0 || orderIdx0 > ordEnd)
-        throw new graft.UnsupportedError(
-          s"$construct over a set operation requires a trailing ORDER BY")
-      if (sql.substring(tiesEnd).trim.nonEmpty)
-        throw new graft.UnsupportedError(
-          s"$construct must end the statement, got trailing: ${sql.substring(tiesEnd).trim}")
-      val bodyText = sql.substring(0, orderIdx0).trim
-      val names =
-        try s.sql(s"SELECT * FROM ( $bodyText ) __wtarms").schema.fieldNames.toSeq
-        catch {
-          case e: Exception => throw new graft.UnsupportedError(
-            s"$construct cannot analyze the set-operation arms " +
-              s"(${e.getMessage.linesIterator.nextOption().getOrElse("").take(120)})")
-        }
-      names.foreach { f =>
-        if (!f.matches("[A-Za-z_][A-Za-z0-9_]*"))
-          throw new graft.UnsupportedError(
-            s"$construct over a set operation met a non-identifier output name: $f")
-      }
-      names.map(_.toLowerCase).groupBy(identity)
-        .collectFirst { case (nm, vs) if vs.size > 1 => nm }
-        .foreach(nm => throw new graft.UnsupportedError(
-          s"$construct over a set operation met a duplicate output name: $nm"))
-      val byName = names.map(nm => nm.toLowerCase -> nm).toMap
-      val ordText = sql.substring(orderIdx0 + "ORDER".length, ordEnd).trim
-        .replaceAll("(?i)^BY\\s+", "")
-      val oSpans = lex(ordText)
-      val resolved = splitArgs(ordText, oSpans, 0, ordText.length)
-        .map(_.trim).map { part =>
-          val (e, sfx) = splitSortSuffix(part)
-          // a QUOTED output name is legal Postgres over a set operation:
-          // `"p"` arrives backticked after the identifier rewrite, so the
-          // quoting is stripped before the name lookup (r18, from ADVICE)
-          val eBare = stripBacktick(e)
-          val nm =
-            if (eBare.matches("\\d+") && !e.startsWith("`")) {
-              val i = eBare.toInt
-              if (i < 1 || i > names.length)
-                throw new graft.UnsupportedError(
-                  s"$construct ORDER BY position $i is not in the select list (1..${names.length})")
-              names(i - 1)
-            } else byName.getOrElse(eBare.toLowerCase,
-              throw new graft.UnsupportedError(
-                s"$construct over a set operation can sort only by the arms' " +
-                  s"output column names or ordinals; cannot resolve: $e"))
-          (nm + " " + sfx).trim
-        }.mkString(", ")
-      val tiesText = sql.substring(ordEnd, tiesEnd)
-      val rebuilt = s"SELECT ${names.mkString(", ")} FROM ( $bodyText ) __wtarms " +
-        s"ORDER BY $resolved $tiesText"
-      return buildWithTies(rebuilt, n, rebuilt.length - tiesText.length,
-        rebuilt.length, nullsLargest, percent, ties, construct, offset, spark,
-        nullsAlwaysLast, qualifyIsClause = qualifyIsClause)
-    }
-    val selIdx = topLevelKeyword(sql, spans, depth, "SELECT")
-    val fromIdx = topLevelKeyword(sql, spans, depth, "FROM")
-    val orderIdx = topLevelKeyword(sql, spans, depth, "ORDER")
-    if (selIdx != 0 || fromIdx < 0 || orderIdx < 0 || orderIdx > ordEnd ||
-        fromIdx > orderIdx)
-      throw new graft.UnsupportedError(
-        s"$construct requires the top-level SELECT … FROM … ORDER BY … shape")
-    // a leading optimizer hint (`SELECT /*+ … */ …`) is held aside —
-    // it names no output column — and re-emitted on the INNER select of
-    // every rewrite below, where the scans/joins it directs live (r17
-    // review: blanking dropped it silently; leaving it in the first
-    // item raised a bogus cannot-name error). SELECT DISTINCT composes
-    // since r16: DISTINCT applies FIRST in every source dialect, then
-    // the rank/percent filter runs over the DISTINCT output — the emit
-    // ranks a `( SELECT DISTINCT … )` subquery whose window sort keys
-    // resolve to its OUTPUT NAMES. DISTINCT ON never reaches here (its
-    // rewrite runs earlier in every wired chain) — named error if it does.
-    val (hint, isDistinct, itemsStart) = hintAndDistinct(sql, selIdx, spans,
-      s"$construct under SELECT DISTINCT ON is not supported (rewrite DISTINCT ON first)")
-    if (sql.substring(tiesEnd).trim.nonEmpty)
-      throw new graft.UnsupportedError(
-        s"$construct must end the statement, got trailing: ${sql.substring(tiesEnd).trim}")
-    // a top-level QUALIFY still in the body would rank the PRE-QUALIFY
-    // rows (the qualify rewrite runs later and would materialize the
-    // rank alongside the filter — inverting the dialects'
-    // QUALIFY-before-TOP evaluation order, r16 review): fail fast. The
-    // guard classifies EVERY top-level occurrence of the word (r16
-    // third review: checking only the first let `FROM qualify QUALIFY
-    // rn = 1` slip past) and matches the CLAUSE position only: a word
-    // preceded by an identifier-context token — FROM/JOIN/AS/SELECT,
-    // boolean/comparison/arithmetic context, a comma, dot, or paren —
-    // is a table/column/alias named qualify, legal in the QUALIFY-less
-    // dialects this builder also serves. A clause sits where the FROM
-    // section just ENDED: after a bare identifier, a literal, or `)`.
-    // words after which a bare `qualify` can only be an identifier — a
-    // clause sits where the FROM section just ENDED (after an arbitrary
-    // identifier, a literal, or `)`). Words that can themselves END a
-    // predicate (NULL, END, ALL after GROUP BY ALL) are deliberately
-    // ABSENT: there the word is ambiguous and the loud named error
-    // beats a silent wrong-evaluation-order rewrite (r16 fourth
-    // review — "all" used to let `GROUP BY ALL QUALIFY …` slip past).
-    val identCtx = Set("from", "join", "as", "select", "where", "and",
-      "or", "on", "not", "by", "when", "then", "else", "distinct", "in",
-      "like", "between", "top", "ties", "having", "using")
-    // `qualifyIsClause = false` (r17 ADVICE): the ANSI FETCH family
-    // serves Postgres/Oracle/Trino, where QUALIFY is NOT a clause — a
-    // bare table alias or column named `qualify` is legal SQL there and
-    // the guard's ambiguous-position fail-fast was a false positive
-    // (a real QUALIFY clause in those dialects is invalid at the SOURCE
-    // and dies loudly in Spark's parser). T-SQL TOP keeps the guard:
-    // its chain classifies the word so a clause-position QUALIFY gets
-    // the named error rather than a raw parse error.
-    // `spans` is already the opaque-span vector of the blanked text —
-    // no second lex needed (r17 review)
-    val qSpans = spans
-    val clauseQualify = "(?i)\\bQUALIFY\\b".r.findAllMatchIn(sql)
-      .filter(_ => qualifyIsClause)
-      .filter(m => depth(m.start) == 0 && qSpans.outside(m.start))
-      .flatMap { m =>
-        // previous token, skipping whitespace AND opaque spans (a
-        // comment's own `*/` or `--` characters are not operators —
-        // r16 fourth review)
-        var j = m.start - 1
-        var moved = true
-        while (moved) {
-          moved = false
-          while (j >= 0 && Character.isWhitespace(sql.charAt(j))) { j -= 1; moved = true }
-          qSpans.at(j).foreach { sp => j = sp.start - 1; moved = true }
-        }
-        var b0 = j + 1
-        while (b0 > 0 && (Character.isLetterOrDigit(sql.charAt(b0 - 1)) ||
-            sql.charAt(b0 - 1) == '_')) b0 -= 1
-        val prev = if (j < 0) "" else sql.substring(b0, j + 1).toLowerCase
-        val prevCh = if (j < 0) ' ' else sql.charAt(j)
-        // a preceding `)` stays AMBIGUOUS (derived-table alias vs a
-        // clause after a call-ending predicate) — classified as a
-        // clause, i.e. the loud named error, never a silent
-        // wrong-evaluation-order rewrite
-        val isIdentifier = identCtx.contains(prev) ||
-          ",.=<>+-*/%".indexOf(prevCh) >= 0
-        if (isIdentifier) None else Some(prevCh)
-      }.toList
-    if (clauseQualify.nonEmpty) {
-      // QUALIFY composes for dialects where it IS a clause and the
-      // caller supplied its rewrite (r18 — Teradata `SEL TOP n WITH
-      // TIES/PERCENT … QUALIFY …`; a named fail-fast before): the
-      // dialects' evaluation order is QUALIFY FIRST, then ORDER BY +
-      // TOP, so the qualify rewrite runs on the construct-stripped
-      // statement and the rebuilt (filtered) statement re-enters this
-      // builder to be ranked. Only the UNAMBIGUOUS clause position
-      // restructures — a `)`-preceded QUALIFY may be a derived-table
-      // alias and keeps the loud named error (T-SQL, where QUALIFY is
-      // never a clause, passes no rewrite and keeps the error too).
-      qualifyRewrite match {
-        case Some(qr) if clauseQualify.size == 1 && clauseQualify.head != ')' =>
-          val q = qr(sql)
-          if (q != sql)
-            return buildWithTies(q, n, q.length, q.length, nullsLargest,
-              percent, ties, construct, offset, spark, nullsAlwaysLast,
-              setOpOk = setOpOk, qualifyIsClause = qualifyIsClause)
-        case _ => ()
-      }
-      throw new graft.UnsupportedError(
-        s"$construct combined with QUALIFY is not supported " +
-          "(the rank would run before the QUALIFY filter); " +
-          "apply QUALIFY in a subquery and the row limit outside")
-    }
-    val body = sql.substring(fromIdx, orderIdx).trim
-    val items = expandStarItems(spark,
-      splitArgs(sql, spans, itemsStart, fromIdx)
-        .map(_.trim).filter(_.nonEmpty),
-      body, construct)
-    val names = items.map(itemName(_, construct)).mkString(", ")
-    // the inner-select list: hint (if any) + parsed items
-    val itemsSql = hint + items.mkString(", ")
-    val ord = sql.substring(orderIdx + "ORDER".length, ordEnd).trim
-      .replaceAll("(?i)^BY\\s+", "")
-    val aliasExpr: Map[String, String] = items.flatMap { it =>
-      "(?is)^(.*\\S)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*)$".r.findFirstMatchIn(it)
-        .map(mm => mm.group(2).toLowerCase -> mm.group(1).trim)
-        .orElse(implicitAlias(it).map { case (e, a) => a.toLowerCase -> e })
-    }.toMap
-    // per sort key: [alias-resolve] then pin the dialect's default null
-    // placement when none is spelled (Spark would otherwise flip it)
-    def keyParts(o: String, resolveAliases: Boolean): Seq[String] = {
-      val oSpans = lex(o)
-      splitArgs(o, oSpans, 0, o.length).map(_.trim).map { part0 =>
-        val part =
-          if (!resolveAliases) part0
-          else "(?s)^([A-Za-z_][A-Za-z0-9_]*)(.*)$".r.findFirstMatchIn(part0) match {
-            case Some(pm) if aliasExpr.contains(pm.group(1).toLowerCase) =>
-              s"(${aliasExpr(pm.group(1).toLowerCase)})${pm.group(2)}"
-            case _ => part0
-          }
-        if ((!nullsLargest && !nullsAlwaysLast) ||
-            "(?is)\\bNULLS\\s+(FIRST|LAST)\\s*$".r.findFirstIn(part).isDefined) part
-        else if ("(?is)\\bDESC\\s*$".r.findFirstIn(part).isDefined)
-          // nulls-largest pins FIRST on DESC; Trino/DuckDB-style
-          // always-last pins LAST in both directions
-          part + (if (nullsAlwaysLast) " NULLS LAST" else " NULLS FIRST")
-        else part + " NULLS LAST"
-      }
-    }
-    def keyList(o: String, resolveAliases: Boolean): String =
-      keyParts(o, resolveAliases).mkString(", ")
-    /* Scale-safe PERCENT plan (r15 verdict item 3; generalized to the
-     * DISTINCT branch r17). The legacy percent plan ranks EVERY row
-     * through one unpartitioned window because the cutoff
-     * `CEILING(count * n / 100)` is not a literal — at 100× the whole
-     * relation funnels through a single partition before the filter.
-     * This plan splits the work: stage 1 computes the exact global row
-     * count (a map-side-combined scalar — one number, no data shuffle)
-     * plus an `approx_percentile` cutoff on the LEADING sort key at
-     * n% + 2% slack; stage 2 pre-filters the relation to the cutoff's
-     * side BELOW the exact rank window, so the single-partition stage
-     * sees ~n% of rows instead of all of them. The result stays EXACT
-     * in every case:
-     *   - the pre-filter keeps a provable SUPERSET of the answer: the
-     *     sketch's rank error is ≤ rows/10000 and the runtime guard
-     *     `CEILING(cnt*n/100) <= FLOOR(nonnull*(n/100+0.02-0.005))`
-     *     only enables pruning when the slack covers it (margin 50×
-     *     the sketch bound, absorbing the 6-dp literal rounding too) —
-     *     otherwise EVERY row passes and the plan degrades to the
-     *     legacy shape, never to a wrong answer (e.g. tiny or
-     *     NULL-dominated relations);
-     *   - NULL keys always survive the pre-filter, and the leading-key
-     *     prefix property makes surviving rows' ranks equal their
-     *     global ranks (any dropped row sorts strictly after every
-     *     surviving non-null row; null rows kept "too early" rank
-     *     past the guarded cutoff and are filtered exactly);
-     *   - WITH TIES rows share the boundary row's leading key, so the
-     *     value inequality keeps them.
-     * Applies only when the leading key analyzes to a percentile-
-     * sketchable type (numeric/date/timestamp) on the registered
-     * views; anything else returns None → legacy plan (correct, with
-     * the documented single-partition caveat). `srcItems`/`srcBody`
-     * parameterize the ranked relation: the plain path passes the
-     * statement's select list + FROM section; the DISTINCT path (r17)
-     * passes the distinct subquery's OUTPUT NAMES + a FROM over the
-     * `( SELECT DISTINCT … )` subquery, so the stats/cutoff stage runs
-     * over the distinct OUTPUT (its exact row count is the percent
-     * base) and the key materialization happens outside the distinct.
-     * The DISTINCT subquery is spelled twice in the emitted text
-     * (ranked side + stats side) but computed ONCE at runtime: both
-     * references canonicalize to the same hash-partitioned exchange and
-     * AQE stage reuse executes the scan + partial distinct + shuffle a
-     * single time (ReusedExchange on the stats side; pinned by the
-     * runtime test in PlanGateSpec, r18 — only the cheap per-consumer
-     * final aggregation above the reused stage runs per side).
-     */
-    def percentScalePlan(rankFn: String, srcItemsSql: String, srcBody: String,
-        parsed: Seq[(String, String)], outOrd: String): Option[String] = {
-      val s = spark.getOrElse(return None)
-      if (!n.matches("\\d+(?:\\.\\d+)?")) return None
-      val (k1, sfx1) = parsed.head
-      val asc = "(?i)\\bDESC\\b".r.findFirstIn(sfx1).isEmpty
-      val sketchable =
-        try {
-          import org.apache.spark.sql.types._
-          s.sql(s"SELECT ($k1) AS __psk $srcBody").schema.head.dataType match {
-            case _: NumericType | DateType | TimestampType | TimestampNTZType => true
-            case _ => false
-          }
-        } catch { case _: Exception => false }
-      if (!sketchable) return None
-      val nFrac = n.toDouble / 100.0
-      val pEff = math.min(1.0, nFrac + 0.02)
-      def lit(d: Double): String =
-        java.lang.String.format(java.util.Locale.ROOT, "%.6f", Double.box(d))
-      val target = lit(if (asc) pEff else math.max(0.0, 1.0 - pEff))
-      val guar = lit(math.max(0.0, pEff - 0.005))
-      val cmp = if (asc) "<=" else ">="
-      val keyCols = parsed.zipWithIndex
-        .map { case ((e, _), i) => s"($e) AS __pk$i" }.mkString(", ")
-      val winOrd = parsed.zipWithIndex
-        .map { case ((_, sfx), i) => s"__pk$i $sfx".trim }.mkString(", ")
-      // rows needed through the window: ceil(cnt*n%) plus, with OFFSET m
-      // (r18 — Oracle `OFFSET m ROWS FETCH FIRST n PERCENT`), the m
-      // skipped rows; the runtime guard compares THIS count against the
-      // sketch slack, so pruning only engages when the slack covers the
-      // offset too — exactness is preserved by the same superset argument
-      def need(pn: String): String = {
-        val base = s"CEILING($pn * ($n) / 100.0)"
-        offset.fold(base)(off => s"(($off) + $base)")
-      }
-      val prefiltered =
-        s"SELECT /*+ BROADCAST(__ws) */ __wb.*, __ws.__pn " +
-          s"FROM ( SELECT $srcItemsSql, $keyCols $srcBody ) __wb " +
-          s"CROSS JOIN ( SELECT count(*) AS __pn, count(__psk) AS __pn1, " +
-          s"approx_percentile(__psk, $target, 10000) AS __pcut " +
-          s"FROM ( SELECT ($k1) AS __psk $srcBody ) __wsrc ) __ws " +
-          s"WHERE ${need("__ws.__pn")} > FLOOR(__ws.__pn1 * $guar) " +
-          s"OR __wb.__pk0 IS NULL OR __wb.__pk0 $cmp __ws.__pcut"
-      Some(offset match {
-        case None =>
-          s"SELECT $names FROM ( SELECT *, " +
-            s"$rankFn OVER (ORDER BY $winOrd) AS __wt FROM ( " +
-            prefiltered + s" ) __wtp ) __wtq " +
-            s"WHERE __wt <= ${need("__pn")} ORDER BY $outOrd"
-        case Some(off) if !ties =>
-          // OFFSET + PERCENT ONLY: row_number membership m < rn <= m+k
-          s"SELECT $names FROM ( SELECT *, " +
-            s"row_number() OVER (ORDER BY $winOrd) AS __wt FROM ( " +
-            prefiltered + s" ) __wtp ) __wtq " +
-            s"WHERE __wt > ($off) AND __wt <= ${need("__pn")} ORDER BY $outOrd"
-        case Some(off) =>
-          // OFFSET + PERCENT WITH TIES: the shared cutoff-rank rule —
-          // keep rn > m and rank <= (max rank among rn <= m+k) — over
-          // the pre-filtered frame; the static rank bound sits below
-          // the cutoff-max window
-          s"SELECT $names FROM ( SELECT *, " +
-            s"max(CASE WHEN __wtn <= ${need("__pn")} THEN __wt END) OVER () AS __wtcut " +
-            s"FROM ( SELECT *, rank() OVER (ORDER BY $winOrd) AS __wt, " +
-            s"row_number() OVER (ORDER BY $winOrd) AS __wtn FROM ( " +
-            prefiltered + s" ) __wtp ) __wtq " +
-            s"WHERE __wt <= ${need("__pn")} ) __wtq2 " +
-            s"WHERE __wtn > ($off) AND __wt <= __wtcut ORDER BY $outOrd"
-      })
-    }
-    if (isDistinct) {
-      // Resolve every sort key to a DISTINCT-output NAME: an ordinal →
-      // the n-th item's name; an item name/alias → itself; a key whose
-      // text matches an item's expression → that item's name. Anything
-      // else mirrors Postgres's own error ("for SELECT DISTINCT, ORDER
-      // BY expressions must appear in the select list").
-      val itemNames = items.map(itemName(_, construct))
-      val resolveKey = distinctKeyResolver(items, itemNames, construct)
-      val oSpans = lex(ord)
-      val dKeyParts = splitArgs(ord, oSpans, 0, ord.length).map(_.trim).map { part =>
-        val (e, sfx) = splitSortSuffix(part)
-        val resolved =
-          if (e.matches("\\d+")) {
-            val i = e.toInt
-            if (i < 1 || i > items.length)
-              throw new graft.UnsupportedError(
-                s"$construct ORDER BY position $i is not in the select list (1..${items.length})")
-            guardDupOutputName(itemNames, construct, itemNames(i - 1))
-          } else resolveKey(e)
-            .getOrElse(throw new graft.UnsupportedError(
-              s"$construct with SELECT DISTINCT requires ORDER BY expressions " +
-                s"to appear in the select list; cannot resolve: $e"))
-        val pinned = (resolved + " " + sfx).trim
-        if ((!nullsLargest && !nullsAlwaysLast) ||
-            "(?is)\\bNULLS\\s+(FIRST|LAST)\\s*$".r.findFirstIn(pinned).isDefined) pinned
-        else if ("(?is)\\bDESC\\s*$".r.findFirstIn(pinned).isDefined)
-          pinned + (if (nullsAlwaysLast) " NULLS LAST" else " NULLS FIRST")
-        else pinned + " NULLS LAST"
-      }
-      val dKeys = dKeyParts.mkString(", ")
-      val inner = s"( SELECT ${hint}DISTINCT ${items.mkString(", ")} $body )"
-      if (n.matches("\\d+(?:\\.\\d+)?") && n.toDouble == 0.0)
-        return s"SELECT $names FROM $inner __wtq LIMIT 0"
-      // the resolved-name key list serves as the OUTER ORDER BY too: the
-      // outer projection exposes exactly the item names, and the original
-      // ORDER BY text may spell expressions that are out of scope there
-      return offset match {
-        case Some(off) =>
-          // percent-aware (r18 — Oracle DISTINCT + OFFSET + FETCH
-          // PERCENT): the cutoff count is ceil(|distinct| * n%) over a
-          // count(*) window on the distinct output, never the raw n
-          val extraCol = if (percent) ", count(*) OVER () AS __wtc" else ""
-          val lim =
-            if (percent) s"(($off) + CEILING(__wtc * ($n) / 100.0))"
-            else s"(($off) + ($n))"
-          if (!ties)
-            // ONLY membership: m < rn <= m+k, no tie cutoff
-            s"SELECT $names FROM ( SELECT *, " +
-              s"row_number() OVER (ORDER BY $dKeys) AS __wtn$extraCol " +
-              s"FROM $inner __wtd ) __wtq " +
-              s"WHERE __wtn > ($off) AND __wtn <= $lim ORDER BY $dKeys"
-          else
-            s"SELECT $names FROM ( SELECT *, " +
-              s"max(CASE WHEN __wtn <= $lim THEN __wt END) OVER () AS __wtcut " +
-              s"FROM ( SELECT *, rank() OVER (ORDER BY $dKeys) AS __wt, " +
-              s"row_number() OVER (ORDER BY $dKeys) AS __wtn$extraCol " +
-              s"FROM $inner __wtd ) __wtq " +
-              s"WHERE __wt <= $lim ) __wtq2 " +
-              s"WHERE __wtn > ($off) AND __wt <= __wtcut ORDER BY $dKeys"
-        case None =>
-          val rankFn = if (ties) "rank()" else "row_number()"
-          // DISTINCT + PERCENT takes the two-stage scale plan too (r17 —
-          // legacy global-count window over the distinct output before,
-          // unbounded for high-cardinality key sets): the stats/cutoff
-          // stage runs over the DISTINCT subquery (its exact row count
-          // is the percent base) and keys materialize OUTSIDE it
-          val scalePlan =
-            if (percent) {
-              percentScalePlan(rankFn, itemNames.mkString(", "),
-                s"FROM $inner __wtd", dKeyParts.map(splitSortSuffix), dKeys)
-            } else None
-          scalePlan.getOrElse {
-            val extraCol = if (percent) ", count(*) OVER () AS __wtc" else ""
-            val keep =
-              if (percent) s"__wt <= CEILING(__wtc * ($n) / 100.0)" else s"__wt <= $n"
-            s"SELECT $names FROM ( SELECT *, " +
-              s"$rankFn OVER (ORDER BY $dKeys) AS __wt$extraCol FROM $inner __wtd ) __wtq " +
-              s"WHERE $keep ORDER BY $dKeys"
-          }
-      }
-    }
-    // window keys: ordinals FIRST (an integer is a constant inside OVER),
-    // then aliases; the outer ORDER BY keeps both (correct at statement level)
-    val windowOrd = resolveOrdinalSortKeys(ord, items, construct)
-    val winKeys = keyList(windowOrd, resolveAliases = true)
-    val outerOrd = keyList(ord, resolveAliases = false)
-    // A LITERAL zero count returns the empty set in every source dialect
-    // (Postgres: a fetch count of 0 has no "last place" to tie with;
-    // T-SQL TOP 0 [PERCENT] likewise). The generic offset membership is
-    // WRONG at n = 0 — the cutoff becomes row m's own rank and every
-    // later row tied with row m leaks through (r15 judge live repro) —
-    // so every zero-count TIES/PERCENT form short-circuits to LIMIT 0
-    // with the same output names. Checked after the ordinal/shape
-    // validation so malformed statements still raise like the non-zero
-    // forms do.
-    if (n.matches("\\d+(?:\\.\\d+)?") && n.toDouble == 0.0)
-      return s"SELECT $names FROM ( SELECT $itemsSql $body ) __wtq LIMIT 0"
-    val rankFn = if (ties) "rank()" else "row_number()"
-    if (percent) {
-      // the scale plan handles every offset/ties combination (r18);
-      // the legacy fallback below mirrors its memberships with a
-      // count(*) OVER () percent base for non-sketchable leading keys
-      percentScalePlan(rankFn, itemsSql, body,
-        keyParts(windowOrd, resolveAliases = true).map(splitSortSuffix),
-        outerOrd) match {
-        case Some(plan) => return plan
-        case None =>
-          val lim = offset match {
-            case Some(off) => s"(($off) + CEILING(__wtc * ($n) / 100.0))"
-            case None => s"CEILING(__wtc * ($n) / 100.0)"
-          }
-          return (offset, ties) match {
-            case (None, _) =>
-              s"SELECT $names FROM ( SELECT $itemsSql, " +
-                s"$rankFn OVER (ORDER BY $winKeys) AS __wt, " +
-                s"count(*) OVER () AS __wtc $body ) __wtq " +
-                s"WHERE __wt <= $lim ORDER BY $outerOrd"
-            case (Some(off), false) =>
-              // OFFSET + PERCENT ONLY: row_number membership m < rn <= m+k
-              s"SELECT $names FROM ( SELECT $itemsSql, " +
-                s"row_number() OVER (ORDER BY $winKeys) AS __wt, " +
-                s"count(*) OVER () AS __wtc $body ) __wtq " +
-                s"WHERE __wt > ($off) AND __wt <= $lim ORDER BY $outerOrd"
-            case (Some(off), true) =>
-              // OFFSET + PERCENT WITH TIES: shared cutoff-rank rule
-              s"SELECT $names FROM ( SELECT *, " +
-                s"max(CASE WHEN __wtn <= $lim THEN __wt END) OVER () AS __wtcut " +
-                s"FROM ( SELECT $itemsSql, " +
-                s"rank() OVER (ORDER BY $winKeys) AS __wt, " +
-                s"row_number() OVER (ORDER BY $winKeys) AS __wtn, " +
-                s"count(*) OVER () AS __wtc $body ) __wtq " +
-                s"WHERE __wt <= $lim ) __wtq2 " +
-                s"WHERE __wtn > ($off) AND __wt <= __wtcut ORDER BY $outerOrd"
-          }
-      }
-    }
-    offset match {
-      case Some(off) =>
-        val lim = s"(($off) + ($n))"
-        s"SELECT $names FROM ( SELECT *, " +
-          s"max(CASE WHEN __wtn <= $lim THEN __wt END) OVER () AS __wtcut " +
-          s"FROM ( SELECT $itemsSql, " +
-          s"rank() OVER (ORDER BY $winKeys) AS __wt, " +
-          s"row_number() OVER (ORDER BY $winKeys) AS __wtn $body ) __wtq " +
-          s"WHERE __wt <= $lim ) __wtq2 " +
-          s"WHERE __wtn > ($off) AND __wt <= __wtcut ORDER BY $outerOrd"
-      case None =>
-        s"SELECT $names FROM ( SELECT $itemsSql, " +
-          s"$rankFn OVER (ORDER BY $winKeys) AS __wt $body ) __wtq " +
-          s"WHERE __wt <= $n ORDER BY $outerOrd"
-    }
-  }
-
-
   /** Pin the dialect's DEFAULT null placement into sort keys wherever
     * the placement decides row MEMBERSHIP, not just display order —
     * Spark's default (nulls smallest: first-on-ASC/last-on-DESC) is the
@@ -4997,6 +4389,9 @@ object Dialect {
     * same reason. `alwaysLast = false` → nulls-largest (Postgres /
     * Oracle / Trino / Snowflake / Redshift: LAST on ASC, FIRST on
     * DESC); `true` → DuckDB / ClickHouse's NULLS LAST both ways.
+    * A pipe operator ends a key list like a clause does, and a
+    * `|> ORDER BY` followed by `|> LIMIT` (the statement-level rewrites'
+    * paging) is pinned like `ORDER BY … LIMIT`.
     * Runs LAST in each wired chain so the windows other rewrites EMIT
     * (DISTINCT ON's row_number, LIMIT BY's, a materialized QUALIFY
     * predicate) are pinned too.
@@ -5102,7 +4497,16 @@ object Dialect {
           if (isWindowSpec) {
             val b = bound(Seq("ROWS", "RANGE", "GROUPS"))
             if (b >= 0) b else cur.length
-          } else bound(Seq("LIMIT", "FETCH", "OFFSET")) // -1 = no truncation → skip
+          } else {
+            // a pipe operator ends the keys too (`|> ORDER BY k |> LIMIT
+            // n`); the order decides membership only when a truncation
+            // follows (-1 = none → skip)
+            val trunc = bound(Seq("LIMIT", "FETCH", "OFFSET"))
+            val pipe = "\\|>".r.findAllMatchIn(cur)
+              .find(m => m.start >= keysStart && depth(m.start) == 0 && spans.outside(m.start))
+              .fold(-1)(_.start)
+            if (trunc >= 0 && pipe >= 0 && pipe < trunc) pipe else trunc
+          }
         if (keysEnd >= 0) {
           pinKeys(cur.substring(keysStart, keysEnd).trim).foreach { pinned =>
             cur = cur.substring(0, keysStart) + " " + pinned + " " +
@@ -5113,135 +4517,6 @@ object Dialect {
       cur
     }
     process(sql, isWindowSpec = false)
-  }
-
-  /** ANSI/Postgres-13 `ORDER BY … [OFFSET m ROWS] FETCH FIRST n ROWS
-    * WITH TIES` (r14; OFFSET combination r15) → [[buildWithTies]]'s
-    * rank filter with the nulls-largest default placement both wired
-    * dialects (Postgres, Oracle) share. A literal top-level OFFSET is
-    * stripped from the statement and becomes the builder's
-    * `row_number > m` skip with the cutoff-rank tie rule; a
-    * non-literal OFFSET count keeps a named error. Only the outermost
-    * single-SELECT statement shape is shimmed.
-    */
-  private[graft] def rewriteFetchFirstWithTies(sql: String,
-      spark: Option[SparkSession] = None,
-      nullsAlwaysLast: Boolean = false): String = {
-    // comments blanked up front (r17 review, length-preserving): a paren
-    // or keyword inside a -- or /* */ comment must not skew this
-    // function's own depth map (a commented '(' used to misroute a
-    // top-level FETCH into the subquery branch and die on "unbalanced
-    // subquery"); statements without a FETCH…TIES return byte-identical
-    val s0 = blankComments(sql).trim
-    // the count is optional in ANSI/Postgres — `FETCH FIRST ROW WITH
-    // TIES` defaults to 1 (r14 verdict item 4)
-    val re = """(?i)\bFETCH\s+(?:FIRST|NEXT)\s+(?:(\d+)\s+)?ROWS?\s+WITH\s+TIES\b""".r
-    val spans0 = lex(s0)
-    val depth0 = depthAt(s0, spans0)
-    val mAny = re.findAllMatchIn(s0)
-      .find(mm => spans0.outside(mm.start))
-      .getOrElse(return sql)
-    if (depth0(mAny.start) > 0) {
-      // SUBQUERY-level WITH TIES (r15 — a raw Spark parse error before):
-      // rewrite the innermost parenthesized statement containing the
-      // clause in place, then rescan (more subqueries may carry one)
-      val (open, close) = enclosingParen(s0, spans0, mAny.start)
-        .getOrElse(throw new graft.UnsupportedError(
-          s"unbalanced subquery around WITH TIES in: $s0"))
-      val inner = s0.substring(open + 1, close)
-      val rebuilt = rewriteFetchFirstWithTies(inner, spark, nullsAlwaysLast)
-      if (rebuilt == inner) return sql // not a rewritable inner statement — stay loud
-      return rewriteFetchFirstWithTies(
-        s0.substring(0, open + 1) + rebuilt + s0.substring(close), spark,
-        nullsAlwaysLast)
-    }
-    val m0 = mAny
-    val offIdx = topLevelKeyword(s0, spans0, depth0, "OFFSET")
-    if (offIdx < 0)
-      return buildWithTies(s0, Option(m0.group(1)).getOrElse("1"), m0.start, m0.end,
-        nullsLargest = true, spark = spark, nullsAlwaysLast = nullsAlwaysLast,
-        setOpOk = true, qualifyIsClause = false)
-    val om = """(?i)\bOFFSET\s+(\d+)(?:\s+ROWS?)?""".r.findAllMatchIn(s0)
-      .find(_.start == offIdx)
-      .getOrElse(throw new graft.UnsupportedError(
-        "OFFSET combined with FETCH … WITH TIES requires a literal row count"))
-    if (om.start > m0.start)
-      throw new graft.UnsupportedError(
-        "OFFSET after FETCH … WITH TIES is not supported (ANSI order is OFFSET then FETCH)")
-    // the literal match must be the WHOLE offset clause — `OFFSET 1 + 4`
-    // matches only its `1` prefix, and stripping that prefix would splice
-    // `+ 4` into the ORDER BY keys (a silent wrong answer)
-    if (s0.substring(om.end, m0.start).trim.nonEmpty)
-      throw new graft.UnsupportedError(
-        "OFFSET combined with FETCH … WITH TIES requires a literal row count " +
-          s"immediately before the FETCH clause, got: ${s0.substring(om.start, m0.start).trim}")
-    // strip the OFFSET clause, re-locate the FETCH clause, and hand the
-    // skip count to the builder's rank/row_number membership rule
-    val s = s0.substring(0, om.start) + s0.substring(om.end)
-    val spans = lex(s)
-    val depth = depthAt(s, spans)
-    val m = re.findAllMatchIn(s)
-      .find(mm => depth(mm.start) == 0 && spans.outside(mm.start))
-      .getOrElse(return sql)
-    buildWithTies(s, Option(m.group(1)).getOrElse("1"), m.start, m.end,
-      nullsLargest = true, offset = Some(om.group(1)), spark = spark,
-      nullsAlwaysLast = nullsAlwaysLast, setOpOk = true,
-      qualifyIsClause = false)
-  }
-
-  /** Oracle-12c/ANSI `[OFFSET m ROWS] FETCH FIRST n PERCENT ROWS
-    * ONLY|WITH TIES` (r15; OFFSET combination r18) →
-    * [[buildWithTies]]'s percent cutoff: row_number (ONLY) or rank
-    * (WITH TIES) over the statement's ORDER BY keeping
-    * `CEILING(count * n / 100.0)` rows — Oracle rounds the row count
-    * UP, and the percent base is the TOTAL selected row count, before
-    * the offset skips (Oracle's row_limiting_clause contract) — with
-    * the nulls-largest placement pinned like the plain FETCH forms.
-    * n may be fractional. A literal top-level OFFSET is stripped and
-    * becomes the builder's `row_number > m` skip (ONLY) or the
-    * cutoff-rank tie rule at m+k (WITH TIES); a non-literal OFFSET
-    * count keeps a named error, like the TIES form's.
-    */
-  private[graft] def rewriteFetchFirstPercent(sql: String,
-      spark: Option[SparkSession] = None): String = {
-    // comments blanked up front — same depth-map hazard as
-    // [[rewriteFetchFirstWithTies]] (r17 review)
-    val s0 = blankComments(sql).trim
-    val re =
-      """(?i)\bFETCH\s+(?:FIRST|NEXT)\s+(\d+(?:\.\d+)?)\s+PERCENT\s+ROWS?\s+(ONLY|WITH\s+TIES)\b""".r
-    val spans0 = lex(s0)
-    val depth0 = depthAt(s0, spans0)
-    val m0 = re.findAllMatchIn(s0)
-      .find(mm => depth0(mm.start) == 0 && spans0.outside(mm.start))
-      .getOrElse(return sql)
-    def build(s: String, m: scala.util.matching.Regex.Match,
-        off: Option[String]): String =
-      buildWithTies(s, m.group(1), m.start, m.end, nullsLargest = true,
-        percent = true, ties = !m.group(2).equalsIgnoreCase("ONLY"),
-        construct = "FETCH PERCENT", offset = off, spark = spark,
-        setOpOk = true, qualifyIsClause = false)
-    val offIdx = topLevelKeyword(s0, spans0, depth0, "OFFSET")
-    if (offIdx < 0) return build(s0, m0, None)
-    // literal-OFFSET handling mirrors [[rewriteFetchFirstWithTies]]:
-    // the whole clause must be a literal immediately before the FETCH
-    val om = """(?i)\bOFFSET\s+(\d+)(?:\s+ROWS?)?""".r.findAllMatchIn(s0)
-      .find(_.start == offIdx)
-      .getOrElse(throw new graft.UnsupportedError(
-        "OFFSET combined with FETCH … PERCENT requires a literal row count"))
-    if (om.start > m0.start)
-      throw new graft.UnsupportedError(
-        "OFFSET after FETCH … PERCENT is not supported (ANSI order is OFFSET then FETCH)")
-    if (s0.substring(om.end, m0.start).trim.nonEmpty)
-      throw new graft.UnsupportedError(
-        "OFFSET combined with FETCH … PERCENT requires a literal row count " +
-          s"immediately before the FETCH clause, got: ${s0.substring(om.start, m0.start).trim}")
-    val s = s0.substring(0, om.start) + s0.substring(om.end)
-    val spans = lex(s)
-    val depth = depthAt(s, spans)
-    val m = re.findAllMatchIn(s)
-      .find(mm => depth(mm.start) == 0 && spans.outside(mm.start))
-      .getOrElse(return sql)
-    build(s, m, Some(om.group(1)))
   }
 
   /** Standalone ANSI/Oracle-12c `FETCH FIRST|NEXT n ROWS ONLY` (no
@@ -5706,180 +4981,6 @@ object Dialect {
       cur = cur.substring(0, open + 1) + bodyNew + ")" + tail
     }
     cur
-  }
-
-  /** ClickHouse `LIMIT n BY exprs` (r13) — keep the first `n` rows per
-    * distinct key set, BEFORE the final global LIMIT: the canonical
-    * ClickHouse top-n-per-group idiom. Spark has no LIMIT BY; rewritten
-    * as a row_number window — partition by the BY keys, order by the
-    * statement's ORDER BY (ClickHouse applies LIMIT BY to the sorted
-    * stream), keep rank ≤ n, re-apply the outer ORDER BY / trailing
-    * LIMIT. Without an ORDER BY the kept rows are arbitrary in
-    * ClickHouse; the rewrite orders the window by the keys for a
-    * deterministic (and therefore allowed) pick, and adds no outer sort
-    * the statement didn't have. Like QUALIFY/DISTINCT ON, select items
-    * must be nameable (alias or bare column) so the outer projection
-    * can re-select them. The offset forms (r14) follow ClickHouse's
-    * `LIMIT [offset,] n BY` / `LIMIT n OFFSET offset BY` grammar and
-    * keep rows `offset < rank <= offset + n` per key.
-    * SELECT DISTINCT composes (r18): ClickHouse applies DISTINCT before
-    * ORDER BY / LIMIT BY (projection → Distinct → Sorting → LimitBy →
-    * Limit in its query pipeline), so the window ranks the DISTINCT
-    * subquery's output and all keys resolve to output names — the
-    * opposite evaluation order from Snowflake's QUALIFY∘DISTINCT.
-    */
-  private[graft] def rewriteChLimitBy(sql0: String,
-      spark: Option[SparkSession] = None): String = {
-    // comments normalized to whitespace up front (r18 review, as in the
-    // QUALIFY/DISTINCT ON/TOP rewrites): a `LIMIT n BY` inside a comment
-    // must not trigger the restructure, and the emitted single-line
-    // splices must not be swallowed by a trailing `--` comment.
-    // Statements the rewrite does not touch return byte-identical (sql0);
-    // SELECT-adjacent optimizer hints survive the blanking and are
-    // re-emitted on the inner select below.
-    val sql = blankComments(sql0)
-    val spans = lex(sql)
-    val depth = depthAt(sql, spans)
-    def topLevel(re: String): Option[scala.util.matching.Regex.Match] =
-      re.r.findAllMatchIn(sql)
-        .find(mm => depth(mm.start) == 0 && spans.outside(mm.start))
-    // offset spellings first — the bare pattern cannot match them (a `,`
-    // or OFFSET sits where it requires BY), so the match is unambiguous
-    val (m, off, n) =
-      topLevel("(?i)\\bLIMIT\\s+(\\d+)\\s*,\\s*(\\d+)\\s+BY\\b")
-        .map(mm => (mm, mm.group(1).toLong, mm.group(2).toLong))
-        .orElse(topLevel("(?i)\\bLIMIT\\s+(\\d+)\\s+OFFSET\\s+(\\d+)\\s+BY\\b")
-          .map(mm => (mm, mm.group(2).toLong, mm.group(1).toLong)))
-        .orElse(topLevel("(?i)\\bLIMIT\\s+(\\d+)\\s+BY\\b")
-          .map(mm => (mm, 0L, mm.group(1).toLong)))
-        .getOrElse(return sql0)
-    val selIdx = topLevelKeyword(sql, spans, depth, "SELECT")
-    val fromIdx = topLevelKeyword(sql, spans, depth, "FROM")
-    if (selIdx != 0 || fromIdx < 0 || fromIdx > m.start)
-      throw new graft.UnsupportedError(s"cannot locate SELECT … FROM around LIMIT BY in: $sql")
-    // SELECT DISTINCT composes since r18: ClickHouse's pipeline applies
-    // DISTINCT BEFORE ORDER BY and LIMIT BY (projection → Distinct →
-    // Sorting → LimitBy → Limit in InterpreterSelectQuery), so the
-    // row_number window ranks the DISTINCT OUTPUT and every key must
-    // resolve to an output name — the distinct stream has nothing else.
-    // ClickHouse's own DISTINCT ON is a different construct and stays a
-    // named error. DISTINCT detection rides the shared hint-aware helper
-    // (r18 review: the SELECT-anchored regex missed `SELECT /*+ … */
-    // DISTINCT` — the hint is re-emitted on the inner select).
-    val (lbHint, isDistinct, itemsStart) = hintAndDistinct(sql, selIdx, spans,
-      "LIMIT BY under SELECT DISTINCT ON is not supported")
-    val orderIdx0 = topLevelKeyword(sql, spans, depth, "ORDER", fromIdx)
-    val orderIdx = if (orderIdx0 >= 0 && orderIdx0 < m.start) orderIdx0 else -1
-    val body = sql.substring(fromIdx, if (orderIdx >= 0) orderIdx else m.start).trim
-    val items = expandStarItems(spark,
-      splitArgs(sql, spans, itemsStart, fromIdx)
-        .map(_.trim).filter(_.nonEmpty),
-      body, "LIMIT BY")
-    val names = items.map(itemName(_, "LIMIT BY")).mkString(", ")
-    val byStart = m.end
-    // the key list ends at the trailing LIMIT; any other top-level clause
-    // after the keys (SETTINGS/FORMAT/UNION arm) would be swallowed into
-    // PARTITION BY as malformed key text — fail fast naming it. Each
-    // ender matches its CLAUSE shape, not the bare word, so a key column
-    // that happens to be named `format` or `settings` stays a key.
-    val nextLimit = topLevelKeyword(sql, spans, depth, "LIMIT", byStart)
-    val enderShapes = Seq(
-      "SETTINGS" -> "(?i)\\bSETTINGS\\s+[A-Za-z_][A-Za-z0-9_.]*\\s*=",
-      "FORMAT" -> "(?is)\\bFORMAT\\s+[A-Za-z_][A-Za-z0-9_]*\\s*;?\\s*$",
-      "UNION" -> "(?i)\\bUNION\\s+(?:(?:ALL|DISTINCT)\\s+)?SELECT\\b",
-      "INTERSECT" -> "(?i)\\bINTERSECT\\s+(?:(?:ALL|DISTINCT)\\s+)?SELECT\\b",
-      "EXCEPT" -> "(?i)\\bEXCEPT\\s+(?:(?:ALL|DISTINCT)\\s+)?SELECT\\b")
-    val otherEnder = enderShapes.flatMap { case (kw, re) =>
-      re.r.findAllMatchIn(sql)
-        .filter(mm => mm.start >= byStart && depth(mm.start) == 0 &&
-          spans.outside(mm.start))
-        .map(kw -> _.start)
-    }.sortBy(_._2).headOption
-    otherEnder.foreach { case (kw, idx) =>
-      if (nextLimit < 0 || idx < nextLimit)
-        throw new graft.UnsupportedError(
-          s"LIMIT BY followed by a top-level $kw clause is not supported")
-    }
-    val keysEnd = if (nextLimit >= 0) nextLimit else sql.length
-    val keys = sql.substring(byStart, keysEnd).trim
-    if (keys.isEmpty)
-      throw new graft.UnsupportedError("LIMIT BY requires at least one key expression")
-    val stmtOrd =
-      if (orderIdx >= 0)
-        Some(sql.substring(orderIdx + "ORDER".length, m.start).trim
-          .replaceAll("(?i)^BY\\s+", ""))
-      else None
-    // The row_number window lives in the SAME projection that defines the
-    // select aliases, and Spark cannot resolve a lateral alias inside a
-    // window expression — but ORDER BY naming a select alias is canonical
-    // ClickHouse. Resolve each window sort key that starts with an item
-    // alias back to the aliased EXPRESSION (parenthesized); the OUTER
-    // ORDER BY keeps the alias, which the outer projection does expose.
-    val aliasExpr: Map[String, String] = items.flatMap { it =>
-      "(?is)^(.*\\S)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*)$".r.findFirstMatchIn(it)
-        .map(mm => mm.group(2).toLowerCase -> mm.group(1).trim)
-        .orElse(implicitAlias(it).map { case (e, a) => a.toLowerCase -> e })
-    }.toMap
-    def resolveAliases(ord: String): String = {
-      val oSpans = lex(ord)
-      splitArgs(ord, oSpans, 0, ord.length).map(_.trim).map { part =>
-        "(?s)^([A-Za-z_][A-Za-z0-9_]*)(.*)$".r.findFirstMatchIn(part) match {
-          case Some(pm) if aliasExpr.contains(pm.group(1).toLowerCase) =>
-            s"(${aliasExpr(pm.group(1).toLowerCase)})${pm.group(2)}"
-          case _ => part
-        }
-      }.mkString(", ")
-    }
-    // ordinal keys resolve to select items before entering the window
-    // (constants there — r14 judge finding); PARTITION BY keys are
-    // expressions in ClickHouse, never positions, so only the ORDER BY
-    // side is ordinal-resolved
-    val tail = if (nextLimit >= 0) " " + sql.substring(nextLimit) else ""
-    val keep =
-      if (off == 0L) s"__lb <= $n"
-      else s"__lb > $off AND __lb <= ${off + n}"
-    if (isDistinct) {
-      // rank the DISTINCT output (ClickHouse applies DISTINCT first):
-      // every PARTITION/ORDER key must resolve to a distinct-output
-      // NAME — an ordinal (ORDER BY side), an item name/alias, or a
-      // key whose text matches an item's expression. Anything else is
-      // unavailable after the distinct, in ClickHouse and here alike.
-      val itemNames = items.map(itemName(_, "LIMIT BY"))
-      val resolveKey =
-        distinctKeyResolver(items, itemNames, "LIMIT BY under SELECT DISTINCT")
-      def resolveOut(text: String, ordinals: Boolean): String = {
-        val tSpans = lex(text)
-        splitArgs(text, tSpans, 0, text.length).map(_.trim).map { part =>
-          val (e, sfx) = splitSortSuffix(part)
-          val resolved =
-            if (ordinals && e.matches("\\d+")) {
-              val i = e.toInt
-              if (i < 1 || i > items.length)
-                throw new graft.UnsupportedError(
-                  s"LIMIT BY ORDER BY position $i is not in the select list (1..${items.length})")
-              guardDupOutputName(itemNames, "LIMIT BY under SELECT DISTINCT",
-                itemNames(i - 1))
-            } else resolveKey(e)
-              .getOrElse(throw new graft.UnsupportedError(
-                "LIMIT BY under SELECT DISTINCT requires its keys and ORDER BY " +
-                  s"expressions to appear in the select list; cannot resolve: $e"))
-          (resolved + " " + sfx).trim
-        }.mkString(", ")
-      }
-      val dKeys = resolveOut(keys, ordinals = false)
-      val dOrd = stmtOrd.map(resolveOut(_, ordinals = true)).getOrElse(dKeys)
-      val dOuter = stmtOrd.map(o => s" ORDER BY ${resolveOut(o, ordinals = true)}").getOrElse("")
-      return s"SELECT $names FROM ( SELECT *, " +
-        s"row_number() OVER (PARTITION BY $dKeys ORDER BY $dOrd) AS __lb " +
-        s"FROM ( SELECT ${lbHint}DISTINCT ${items.mkString(", ")} $body ) __lbd ) __lby " +
-        s"WHERE $keep$dOuter$tail"
-    }
-    val windowOrd = resolveAliases(
-      stmtOrd.map(resolveOrdinalSortKeys(_, items, "LIMIT BY")).getOrElse(keys))
-    val outerOrder = stmtOrd.map(o => s" ORDER BY $o").getOrElse("")
-    s"SELECT $names FROM ( SELECT $lbHint${items.mkString(", ")}, " +
-      s"row_number() OVER (PARTITION BY ${resolveAliases(keys)} ORDER BY $windowOrd) " +
-      s"AS __lb $body ) __lby WHERE $keep$outerOrder$tail"
   }
 
   /** T-SQL `CROSS APPLY STRING_SPLIT(expr, 'sep') [AS] t` /

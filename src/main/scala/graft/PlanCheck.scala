@@ -127,7 +127,7 @@ object PlanCheck {
       ("TOP n PERCENT keeps one exact global rank window by DEFINITION, but " +
         "since r16 its input is PRE-FILTERED below the window to ~n% of rows " +
         "by the approx_percentile cutoff (broadcast one-row stats; exactness " +
-        "guard in buildWithTies.percentScalePlan, pcut filter pinned by rule) " +
+        "guard in Dialect.rankRows.scalePlan, pcut filter pinned by rule) " +
         "— the single-partition stage no longer sees the whole relation"),
     "op_dialect_pg_fetch_ties_offset" ->
       ("OFFSET+TIES paging is global top-(m+n) by definition; the static " +

@@ -295,8 +295,8 @@ object DialectQueries {
   /** QUALIFY over a STAR select list (r16 — `SELECT * FROM t QUALIFY
     * row_number() OVER (…) = 1` is the single most common QUALIFY
     * idiom and raised "cannot name: *" before): the inline-window
-    * rewrite's outer projection re-selects by name, so the star
-    * expands from the registered view's schema. Run through the
+    * rewrite keeps `SELECT *, (pred) AS __qual` and filters with pipes,
+    * so the star is never expanded. Run through the
     * SNOWFLAKE wiring (QUALIFY's home dialect); DuckDB runs the same
     * construct natively as the oracle.
     */
@@ -342,14 +342,13 @@ object DialectQueries {
            |                           ORDER BY o_orderkey) <= 6
            |ORDER BY p, b""".stripMargin))
 
-  /** Star `REPLACE` and QUALIFIED-star `EXCLUDE` through the naming
-    * rewrites (r17 — named errors before): leg 1 is `* REPLACE (expr AS
-    * col)` over a SUBQUERY FROM under QUALIFY — the case the plain
-    * single-table rewriteStarReplace cannot serve — expanded by
-    * schema-only analysis with the replacement substituted in position;
-    * leg 2 is `t.* EXCLUDE (cols)` (Spark cannot parse a qualified star
-    * with EXCEPT — the expansion subtracts the columns itself). DuckDB
-    * runs both texts natively as the oracle.
+  /** Star `REPLACE` and QUALIFIED-star `EXCLUDE` under QUALIFY: leg 1
+    * is `* REPLACE (expr AS col)` over a SUBQUERY FROM, which becomes
+    * `SELECT * … |> SET col = expr` (the column keeps its position); leg
+    * 2 is `t.* EXCLUDE (cols)`, which Spark cannot parse, rewritten to
+    * `t.*` plus `|> DROP cols`. The QUALIFY filter follows as pipes on the
+    * same SELECT; no star is expanded. DuckDB runs both texts natively as
+    * the oracle.
     */
   val qualifyStarReplace = OpQ("op_dialect_qualify_star_replace",
     (s, d) => {
@@ -448,8 +447,8 @@ object DialectQueries {
     * excluded column keeps a named error). Exercised through
     * [[Dialect.rewriteStarReplace]] after [[Dialect.rewriteExclude]]
     * normalizes the keyword to EXCEPT — the regression the gate pins
-    * is that normalized combined form expanding instead of dying at
-    * Spark's parser. Same text in DuckDB (native).
+    * is that normalized combined form becoming `* EXCEPT (…) |> SET …`
+    * instead of dying at Spark's parser. Same text in DuckDB (native).
     */
   val excludeReplace = OpQ("op_dialect_exclude_replace",
     (s, d) => duck(s, d,
@@ -1833,7 +1832,7 @@ object DialectQueries {
            |GROUP BY o_orderpriority ORDER BY prio""".stripMargin))
 
   /** ANSI/Postgres-13 `FETCH FIRST n ROWS WITH TIES` ([[Dialect]]
-    * rewriteFetchFirstWithTies → buildWithTies, r14): keeps every row
+    * rewriteFetchFirstWithTies → rankRows, r14): keeps every row
     * tying with the n-th on the ORDER BY keys via a rank() filter —
     * ordering by the 5-value o_orderpriority guarantees the tie path
     * actually fires (the whole first priority class comes back, not 10
@@ -2242,8 +2241,10 @@ object DialectQueries {
   /** Teradata `SEL TOP n WITH TIES / TOP n PERCENT` combined with a
     * QUALIFY clause in the same scope (r18 — a named fail-fast before):
     * Teradata's evaluation order is QUALIFY FIRST, then ORDER BY + TOP,
-    * so [[Dialect]] buildWithTies hands the statement to the qualify
-    * rewrite and re-ranks the FILTERED rows. Both legs QUALIFY down to
+    * so [[Dialect]] rewriteTsqlTop leaves the QUALIFY clause in its
+    * SELECT and ranks with `|> EXTEND`, which the QUALIFY rewrite then
+    * places after its filter: the FILTERED rows are ranked. Both legs
+    * QUALIFY down to
     * one row per (priority, bucket) group before ranking — a rank over
     * the raw rows would return a different multiset, so the gate
     * distinguishes the evaluation orders. Output is the sort key only
@@ -2364,10 +2365,11 @@ object DialectQueries {
     * construct is Postgres's own, but through r15 it was wired only
     * into DuckDBish and died as a raw `Cannot resolve routine ON`
     * under Postgresish; r15 judge probe). The select list is a bare
-    * `*` (expanded from the registered view's schema — r15 verdict
-    * item 4) and the tiebreak key is the ORDINAL 2, so the gate pins
-    * the Postgres wiring, star expansion, and ordinal resolution in
-    * one statement. The oracle is DuckDB's native DISTINCT ON over the
+    * `*` and the tiebreak keys are ORDINALS over it, which the rewrite
+    * resolves by output position (`stack(1, *)` copies the columns as
+    * col0, col1, …) without expanding the star, so the gate pins the
+    * Postgres wiring, star select lists and ordinal resolution in one
+    * statement. The oracle is DuckDB's native DISTINCT ON over the
     * same text shape.
     */
   val pgDistinctOn = OpQ("op_dialect_pg_distinct_on",
@@ -2388,7 +2390,7 @@ object DialectQueries {
   /** ZERO-count paging forms (r16 — the r15 judge's one silent wrong
     * answer: `OFFSET m … FETCH NEXT 0 ROWS WITH TIES` returned row m's
     * tie-tail instead of the empty set). Every TIES/PERCENT zero form
-    * short-circuits to LIMIT 0 in [[Dialect]] buildWithTies; the gate
+    * short-circuits to `|> LIMIT 0` in [[Dialect]] rankRows; the gate
     * counts each form's rows (all 0) as a distributed aggregate — the
     * oracle states the dialects' contract literally (a fetch count of
     * zero returns no rows; there is no last place to tie with).
@@ -2608,9 +2610,9 @@ object DialectQueries {
 
   /** WITH TIES over a QUALIFIED STAR select list + ordinal sort key
     * (r15 verdict item 4 — `SELECT * … FETCH FIRST n ROWS WITH TIES`
-    * is legal Postgres and used to die as "cannot name: *"): `t.*` is
-    * expanded from the subquery's analyzed schema before the rank
-    * rewrite names the outer projection. The oracle replays the rank
+    * is legal Postgres and used to die as "cannot name: *"): the ordinal
+    * lands on `t.*`, so the rank orders the output by position
+    * (`stack(1, *)`) instead of expanding the star. The oracle replays the rank
     * window in DuckDB with the named columns.
     */
   val pgFetchTiesStar = OpQ("op_dialect_pg_fetch_ties_star",
@@ -2630,10 +2632,9 @@ object DialectQueries {
            |ORDER BY o_orderpriority""".stripMargin))
 
   /** T-SQL `SELECT TOP n WITH TIES … ORDER BY …` ([[Dialect]]
-    * rewriteTsqlTop → buildWithTies, r14): the same rank-filter rewrite
-    * as [[pgFetchTies]] for the outermost statement (subquery-level
-    * WITH TIES stays fail-fast); same guaranteed-tie ordering and
-    * DuckDB rank replay.
+    * rewriteTsqlTop → rankRows, r14): the same rank-filter rewrite as
+    * [[pgFetchTies]], in the statement's own SELECT; same guaranteed-tie
+    * ordering and DuckDB rank replay.
     */
   val tsqlTopTies = OpQ("op_dialect_tsql_top_ties",
     (s, d) => {
@@ -2759,10 +2760,10 @@ object DialectQueries {
            |ORDER BY b DESC, ck LIMIT 40""".stripMargin))
 
   /** DuckDB/BigQuery `SELECT * REPLACE (expr AS col)` ([[Dialect]]
-    * rewriteStarReplace): the star expands to the registered table's
-    * column list with each replaced expression substituted IN POSITION
-    * under its original name (an EXCEPT+append emulation would move it
-    * to the end). DuckDB runs the identical text natively as the oracle.
+    * rewriteStarReplace): `SELECT * FROM … |> SET col = expr` replaces
+    * each column IN POSITION under its original name (an EXCEPT+append
+    * emulation would move it to the end), with no star expansion.
+    * DuckDB runs the identical text natively as the oracle.
     */
   val duckdbReplace = OpQ("op_dialect_duckdb_replace",
     (s, d) => {
@@ -2773,8 +2774,8 @@ object DialectQueries {
           |FROM orders WHERE o_orderkey <= 100 ORDER BY o_orderkey""".stripMargin,
         dialect = Dialect.DuckDbish)
         // derived-table FROM leg (r18 — a named error before; the same
-        // text was already legal under QUALIFY/WITH TIES): the star
-        // expands from the ANALYZED subquery schema
+        // text was already legal under QUALIFY/WITH TIES): `|> SET`
+        // needs no schema of the subquery
         .unionAll(Engine.execute(s,
           """SELECT * REPLACE (o_totalprice * 2 AS o_totalprice,
             |                  upper(o_orderstatus) AS o_orderstatus)

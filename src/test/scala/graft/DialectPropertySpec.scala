@@ -12,7 +12,7 @@ import org.scalacheck.rng.Seed
   * `len(`). Raw scalacheck generators with explicit seeds (offline — no
   * scalatestplus bridge).
   */
-class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
+class DialectPropertySpec extends SparkSpec {
 
   private val codeTokens = Gen.oneOf(
     "SELECT a", " WHERE x == 1", " ORDER BY b", "::INT", " // 7", " len(c)",
@@ -65,6 +65,39 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
   }
   private val ansiDialects = Seq(Dialect.DuckDbish, Dialect.Trinoish,
     Dialect.Postgresish, Dialect.SqliteIsh)
+
+  /** Views `t`, `u` (same rows) and `d` for the row checks: small, with
+    * ties and NULLs in the sort keys.
+    */
+  private lazy val fixtures: Unit = {
+    initLog()
+    val cols = Seq("a", "b", "c", "g", "k", "v", "s", "x", "y", "w", "m", "p", "n",
+      "col", "note", "format", "price", "qty", "name")
+    val rows = Seq(
+      Seq("1", "10", "2", "'x'", "1", "10", "'p'"), Seq("2", "20", "4", "'x'", "2", "30", "'q'"),
+      Seq("3", "20", "6", "'y'", "3", "30", "NULL"), Seq("NULL", "30", "8", "'y'", "4", "NULL", "'r'"),
+      Seq("5", "NULL", "10", "NULL", "5", "20", "'p'"), Seq("2", "10", "12", "'z'", "6", "20", "'q'"))
+    val values = rows.map { r =>
+      val k = r(4)
+      (r ++ Seq(s"$k + 1", s"$k % 3", s"$k * 3", s"$k % 2", s"'p$k'", s"$k", s"$k * 5", s"'n$k'", s"'f$k'",
+        s"$k * 7", s"$k % 4", s"'nm$k'")).mkString("(", ", ", ")")
+    }.mkString(", ")
+    spark.sql(s"CREATE OR REPLACE TEMP VIEW t AS SELECT * FROM VALUES $values AS t(${cols.mkString(", ")})")
+    spark.sql("CREATE OR REPLACE TEMP VIEW u AS SELECT * FROM t")
+    spark.sql("CREATE OR REPLACE TEMP VIEW d AS SELECT k, k * 100 AS dv FROM t WHERE k <= 4")
+  }
+
+  /** A rewrite's output returns the same rows, under the same column
+    * names, as its hand-written Spark twin over the fixture views.
+    */
+  private def sameRows(out: String, twin: String): Unit = {
+    fixtures
+    def run(q: String) = {
+      val df = spark.sql(q)
+      (df.columns.map(_.toLowerCase).toSeq, df.collect().map(_.toString).sorted.toSeq)
+    }
+    assert(run(out) === run(twin), s"\nrewrite: $out\ntwin:    $twin")
+  }
 
   test("lex recovers exactly the literals the text was built from") {
     (1L to 200L).foreach { seed =>
@@ -162,6 +195,29 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
           .mkString("SELECT k FROM t WHERE ", " OR ", ""),
         Dialect.TeradataIsh -> sel(i => s"x ** $i")))
       assertFast(d, stmt)
+    // 1,280 subqueries, each with its own statement-level construct: one
+    // site per SELECT scope, nothing rescanned, and no session (null)
+    def arms(inner: Int => String) =
+      (0 until 1280).map(i => s"SELECT * FROM (${inner(i)}) s$i").mkString(" UNION ALL ")
+    for ((d, stmt) <- Seq[(Dialect, String)](
+        Dialect.Snowflakeish -> arms(i =>
+          s"SELECT k, g FROM t QUALIFY row_number() OVER (PARTITION BY g ORDER BY k) = ${i % 3 + 1}"),
+        Dialect.TsqlIsh -> arms(i => s"SELECT TOP 2 WITH TIES k, v FROM t WHERE k > $i ORDER BY v"),
+        Dialect.Postgresish -> arms(i => s"SELECT DISTINCT ON (g) g, k FROM t WHERE k > $i ORDER BY g, k"),
+        Dialect.Postgresish -> arms(i =>
+          s"SELECT k, v FROM t WHERE k > $i ORDER BY v FETCH FIRST 2 ROWS WITH TIES")))
+      assertFast(d, stmt)
+  }
+
+  test("pinSortNulls treats a pipe operator as a clause boundary") {
+    // nulls largest pins FIRST on a DESC key, NULLS LAST both ways pins LAST
+    assert(Dialect.pinSortNulls("SELECT k, n FROM t |> ORDER BY n DESC |> LIMIT 2") ===
+      "SELECT k, n FROM t |> ORDER BY n DESC NULLS FIRST |> LIMIT 2")
+    assert(Dialect.pinSortNulls("SELECT k, n FROM t |> ORDER BY n DESC |> LIMIT 2",
+      alwaysLast = true) === "SELECT k, n FROM t |> ORDER BY n DESC NULLS LAST |> LIMIT 2")
+    // without a truncation after it the order decides no membership
+    val sorted = "SELECT k, n FROM t |> WHERE k > 0 |> ORDER BY n DESC"
+    assert(Dialect.pinSortNulls(sorted) === sorted)
   }
 
   test("site passes rewrite nested and chained sites inside-out") {
@@ -277,34 +333,28 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("rewriteTsqlTop: LIMIT lands at the SELECT's scope end") {
-    assert(Dialect.rewriteTsqlTop("SELECT TOP 5 a FROM t ORDER BY a") ===
-      "SELECT a FROM t ORDER BY a LIMIT 5 ")
-    assert(Dialect.rewriteTsqlTop("SELECT TOP (3) a FROM t") ===
-      "SELECT a FROM t LIMIT 3 ")
+    sameRows(Dialect.rewriteTsqlTop("SELECT TOP 5 a FROM t ORDER BY a"), "SELECT a FROM t ORDER BY a LIMIT 5 ")
+    sameRows(Dialect.rewriteTsqlTop("SELECT TOP (3) a FROM t"), "SELECT a FROM t LIMIT 3 ")
     // subquery: LIMIT stays inside the closing paren
-    assert(Dialect.rewriteTsqlTop("SELECT * FROM (SELECT TOP 2 a FROM t) s") ===
-      "SELECT * FROM (SELECT a FROM t LIMIT 2 ) s")
+    sameRows(Dialect.rewriteTsqlTop("SELECT * FROM (SELECT TOP 2 a FROM t) s"), "SELECT * FROM (SELECT a FROM t LIMIT 2 ) s")
     // set operation (r18): each arm's TOP binds to its OWN arm, emitted
     // as a parenthesized arm (a bare `LIMIT n UNION` splice is a Spark
     // parse error)
-    assert(Dialect.rewriteTsqlTop("SELECT TOP 1 a FROM t UNION SELECT b FROM u") ===
-      "(SELECT a FROM t LIMIT 1) UNION SELECT b FROM u")
-    assert(Dialect.rewriteTsqlTop(
-      "SELECT TOP 1 a FROM t UNION ALL SELECT TOP 2 a FROM u") ===
-      "(SELECT a FROM t LIMIT 1) UNION ALL (SELECT a FROM u LIMIT 2) ")
+    sameRows(Dialect.rewriteTsqlTop("SELECT TOP 1 a FROM t UNION SELECT b FROM u"), "(SELECT a FROM t LIMIT 1) UNION SELECT b FROM u")
+    sameRows(Dialect.rewriteTsqlTop(
+      "SELECT TOP 1 a FROM t UNION ALL SELECT TOP 2 a FROM u"), "(SELECT a FROM t LIMIT 1) UNION ALL (SELECT a FROM u LIMIT 2) ")
     // DISTINCT stays inside the wrapped arm; MINUS is a set-op keyword
     // on the Teradata and Snowflake chains (their EXCEPT synonym) but
     // NOT T-SQL's (r19, from ADVICE + review — `minus` is a legal
     // unquoted identifier in T-SQL, where the keyword would corrupt
     // the scope scan)
-    assert(Dialect.rewriteTsqlTop(
+    sameRows(Dialect.rewriteTsqlTop(
       "SELECT DISTINCT TOP 3 a FROM t MINUS SELECT a FROM u",
-      minusIsSetOp = true) ===
-      "(SELECT DISTINCT a FROM t LIMIT 3) MINUS SELECT a FROM u")
+      minusIsSetOp = true), "(SELECT DISTINCT a FROM t LIMIT 3) MINUS SELECT a FROM u")
     // …without the flag, a relation alias named minus does NOT end the
     // TOP scope (the LIMIT lands after it)…
-    assert(Dialect.rewriteTsqlTop("SELECT TOP 3 a FROM t minus") ===
-      "SELECT a FROM t minus LIMIT 3 ")
+    // (`minus` is no relation alias Spark parses: checked as text)
+    assert(Dialect.rewriteTsqlTop("SELECT TOP 3 a FROM t minus") === "SELECT a FROM t minus LIMIT 3")
     // …but MINUS spelled AS A SET OP (followed by an arm) raises the
     // named error there: T-SQL rejects the statement, and scoping past
     // it would silently LIMIT the combined result (r19 second review)
@@ -313,9 +363,8 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
       .getMessage.contains("MINUS as a set operation"))
     // last arm with a trailing statement ORDER BY: the sort belongs to
     // the COMBINED result (T-SQL scope rule) and stays outside the arm
-    assert(Dialect.rewriteTsqlTop(
-      "SELECT a FROM t UNION ALL SELECT TOP 2 a FROM u ORDER BY a") ===
-      "SELECT a FROM t UNION ALL (SELECT a FROM u LIMIT 2) ORDER BY a")
+    sameRows(Dialect.rewriteTsqlTop(
+      "SELECT a FROM t UNION ALL SELECT TOP 2 a FROM u ORDER BY a"), "SELECT a FROM t UNION ALL (SELECT a FROM u LIMIT 2) ORDER BY a")
     // ORDER BY inside a NON-last arm is a T-SQL syntax error → named
     intercept[UnsupportedError](Dialect.rewriteTsqlTop(
       "SELECT TOP 2 a FROM t ORDER BY a UNION ALL SELECT a FROM u"))
@@ -331,44 +380,35 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
       "SELECT a FROM t UNION ALL SELECT TOP 10 PERCENT WITH TIES a FROM u"))
     intercept[UnsupportedError](Dialect.rewriteTsqlTop(
       "SELECT TOP 10 PERCENT a FROM t ORDER BY a UNION ALL SELECT a FROM u"))
-    assert(Dialect.rewriteTsqlTop(
-      "SELECT TOP 0 PERCENT a FROM t UNION ALL SELECT a FROM u") ===
-      "(SELECT a FROM t LIMIT 0) UNION ALL SELECT a FROM u")
+    sameRows(Dialect.rewriteTsqlTop(
+      "SELECT TOP 0 PERCENT a FROM t UNION ALL SELECT a FROM u"), "(SELECT a FROM t LIMIT 0) UNION ALL SELECT a FROM u")
     // …and the zero-percent LAST arm keeps the trailing statement ORDER
     // BY outside the wrapped arm (it sorts the COMBINED result)
-    assert(Dialect.rewriteTsqlTop(
-      "SELECT a FROM t UNION ALL SELECT TOP 0 PERCENT a FROM u ORDER BY a") ===
-      "SELECT a FROM t UNION ALL (SELECT a FROM u LIMIT 0) ORDER BY a")
+    sameRows(Dialect.rewriteTsqlTop(
+      "SELECT a FROM t UNION ALL SELECT TOP 0 PERCENT a FROM u ORDER BY a"), "SELECT a FROM t UNION ALL (SELECT a FROM u LIMIT 0) ORDER BY a")
     assert(intercept[UnsupportedError](Dialect.rewriteTsqlTop(
       "SELECT TOP 10 PERCENT a FROM t UNION ALL SELECT a FROM u"))
       .getMessage.contains("registered tables"))
     // a PARENTHESIZED arm keeps the in-place splice (ORDER BY legal there)
-    assert(Dialect.rewriteTsqlTop(
-      "(SELECT TOP 2 a FROM t ORDER BY a) UNION ALL SELECT a FROM u") ===
-      "(SELECT a FROM t ORDER BY a LIMIT 2 ) UNION ALL SELECT a FROM u")
+    sameRows(Dialect.rewriteTsqlTop(
+      "(SELECT TOP 2 a FROM t ORDER BY a) UNION ALL SELECT a FROM u"), "(SELECT a FROM t ORDER BY a LIMIT 2 ) UNION ALL SELECT a FROM u")
     // comment safety (r18 review): a `union` inside a comment does not
     // end the scope, a commented-out SELECT TOP does not trigger, and a
     // trailing `--` comment cannot swallow the appended LIMIT (the arm
     // text is spliced from the comment-blanked span)
-    assert(Dialect.rewriteTsqlTop(
-      "SELECT TOP 3 a FROM t /* union */ WHERE a > 0") ===
-      "SELECT a FROM t             WHERE a > 0 LIMIT 3 ")
+    sameRows(Dialect.rewriteTsqlTop(
+      "SELECT TOP 3 a FROM t /* union */ WHERE a > 0"), "SELECT a FROM t             WHERE a > 0 LIMIT 3 ")
     assert(Dialect.rewriteTsqlTop("SELECT a FROM t -- SELECT TOP 3 b FROM u\n") ===
       "SELECT a FROM t -- SELECT TOP 3 b FROM u\n")
-    assert(Dialect.rewriteTsqlTop("SELECT TOP 3 a FROM t -- note").trim ===
-      "SELECT a FROM t         LIMIT 3")
+    sameRows(Dialect.rewriteTsqlTop("SELECT TOP 3 a FROM t -- note"), "SELECT a FROM t         LIMIT 3")
     // an optimizer hint directly after TOP n survives, re-emitted
     // SELECT-adjacent where Spark honors it (r18 review: the blanked
     // splice had started dropping it); with DISTINCT the hint lands
     // BEFORE the keyword, Spark's grammar order
-    assert(Dialect.rewriteTsqlTop(
-      "SELECT TOP 3 /*+ BROADCAST(d) */ a FROM t JOIN d ON t.k = d.k")
-      .replaceAll("\\s+", " ").trim ===
-      "SELECT /*+ BROADCAST(d) */ a FROM t JOIN d ON t.k = d.k LIMIT 3")
-    assert(Dialect.rewriteTsqlTop(
-      "SELECT DISTINCT TOP 2 /*+ REPARTITION(4) */ a FROM t UNION ALL SELECT a FROM u")
-      .replaceAll("\\s+", " ").trim ===
-      "(SELECT /*+ REPARTITION(4) */ DISTINCT a FROM t LIMIT 2) UNION ALL SELECT a FROM u")
+    sameRows(Dialect.rewriteTsqlTop(
+      "SELECT TOP 3 /*+ BROADCAST(d) */ a FROM t JOIN d ON t.k = d.k"), "SELECT /*+ BROADCAST(d) */ a FROM t JOIN d ON t.k = d.k LIMIT 3")
+    sameRows(Dialect.rewriteTsqlTop(
+      "SELECT DISTINCT TOP 2 /*+ REPARTITION(4) */ a FROM t UNION ALL SELECT a FROM u"), "(SELECT /*+ REPARTITION(4) */ DISTINCT a FROM t LIMIT 2) UNION ALL SELECT a FROM u")
     // …and through the WITH TIES path the hint lands SELECT-adjacent on
     // the rank subquery's inner select
     assert(Dialect.rewriteTsqlTop(
@@ -376,10 +416,8 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
       .contains("SELECT /*+ BROADCAST(d) */ g, rank()"))
     // the hint BEFORE TOP (r18 second review: the pattern missed it and
     // the raw TOP died as a parse error) matches and is re-emitted
-    assert(Dialect.rewriteTsqlTop(
-      "SELECT /*+ BROADCAST(d) */ TOP 3 a FROM t JOIN d ON t.k = d.k")
-      .replaceAll("\\s+", " ").trim ===
-      "SELECT /*+ BROADCAST(d) */ a FROM t JOIN d ON t.k = d.k LIMIT 3")
+    sameRows(Dialect.rewriteTsqlTop(
+      "SELECT /*+ BROADCAST(d) */ TOP 3 a FROM t JOIN d ON t.k = d.k"), "SELECT /*+ BROADCAST(d) */ a FROM t JOIN d ON t.k = d.k LIMIT 3")
     // a backtick-QUOTED select alias meets a quoted (or bare) sort key
     // in the DISTINCT resolvers (r18 second review: the stripped lookup
     // missed the unstripped map key)
@@ -392,9 +430,8 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // multi-line SELECT-adjacent hint, and the no-space `SELECT/*+h*/...`
     // spelling, both match (r18 third review: the regex hint group missed
     // them — and could backtrack across live SQL into a literal)
-    assert(Dialect.rewriteTsqlTop(
-      "SELECT /*+ BROADCAST(d)\n*/ TOP 3 a FROM t").replaceAll("\\s+", " ").trim ===
-      "SELECT /*+ BROADCAST(d) */ a FROM t LIMIT 3")
+    sameRows(Dialect.rewriteTsqlTop(
+      "SELECT /*+ BROADCAST(d)\n*/ TOP 3 a FROM t"), "SELECT /*+ BROADCAST(d) */ a FROM t LIMIT 3")
     // the backtracking corruption case: a literal containing `*/ TOP 3`
     // after a real hint must pass through untouched
     assert(Dialect.rewriteTsqlTop("SELECT /*+ h */ a, '*/ TOP 3 x' AS s FROM t") ===
@@ -491,8 +528,7 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     }
     // the literal no-space hint spelling (r18 fourth review: the comment
     // claimed coverage the test didn't have)
-    assert(Dialect.rewriteTsqlTop("SELECT/*+ h */TOP 3 a FROM t")
-      .replaceAll("\\s+", " ").trim === "SELECT /*+ h */ a FROM t LIMIT 3")
+    sameRows(Dialect.rewriteTsqlTop("SELECT/*+ h */TOP 3 a FROM t"), "SELECT /*+ h */ a FROM t LIMIT 3")
     // inside a string literal → untouched
     assert(Dialect.rewriteTsqlTop("SELECT 'SELECT TOP 5 x' AS s FROM t") ===
       "SELECT 'SELECT TOP 5 x' AS s FROM t")
@@ -500,8 +536,7 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
       Dialect.rewriteTsqlTop("SELECT TOP 10 PERCENT a FROM t"))
     // TOP n WITH TIES is supported since r14 (rank-filter rewrite, gated
     // in its own test below); only the subquery-level form still raises
-    assert(Dialect.rewriteTsqlTop("SELECT TOP 10 WITH TIES a FROM t ORDER BY a") ===
-      "SELECT a FROM ( SELECT a, rank() OVER (ORDER BY a) AS __wt " +
+    sameRows(Dialect.rewriteTsqlTop("SELECT TOP 10 WITH TIES a FROM t ORDER BY a"), "SELECT a FROM ( SELECT a, rank() OVER (ORDER BY a) AS __wt " +
         "FROM t ) __wtq WHERE __wt <= 10 ORDER BY a")
   }
 
@@ -1174,34 +1209,29 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
 
     // ClickHouse LIMIT n BY (r13): top-n per key as a row_number window —
     // the statement's ORDER BY drives the window AND survives outside
-    assert(Dialect.rewriteChLimitBy(
-      "SELECT g, v FROM t ORDER BY v DESC LIMIT 2 BY g LIMIT 10") ===
-      "SELECT g, v FROM ( SELECT g, v, row_number() OVER (PARTITION BY g " +
+    sameRows(Dialect.rewriteChLimitBy(
+      "SELECT g, v FROM t ORDER BY v DESC LIMIT 2 BY g LIMIT 10"), "SELECT g, v FROM ( SELECT g, v, row_number() OVER (PARTITION BY g " +
         "ORDER BY v DESC) AS __lb FROM t ) __lby WHERE __lb <= 2 ORDER BY v DESC LIMIT 10")
     // no ORDER BY: window ordered by the keys (deterministic pick where
     // ClickHouse is arbitrary), NO outer sort the statement didn't have
-    assert(Dialect.rewriteChLimitBy("SELECT g, v FROM t LIMIT 1 BY g") ===
-      "SELECT g, v FROM ( SELECT g, v, row_number() OVER (PARTITION BY g " +
+    sameRows(Dialect.rewriteChLimitBy("SELECT g, v FROM t LIMIT 1 BY g"), "SELECT g, v FROM ( SELECT g, v, row_number() OVER (PARTITION BY g " +
         "ORDER BY g) AS __lb FROM t ) __lby WHERE __lb <= 1")
     // ORDER BY naming a SELECT ALIAS (canonical ClickHouse): the window
     // sort key resolves back to the aliased EXPRESSION — Spark cannot
     // read a lateral alias inside a window — while the outer ORDER BY
     // keeps the alias the outer projection exposes
-    assert(Dialect.rewriteChLimitBy(
-      "SELECT g, v * 2 AS d FROM t ORDER BY d DESC LIMIT 1 BY g") ===
-      "SELECT g, d FROM ( SELECT g, v * 2 AS d, row_number() OVER (PARTITION BY g " +
+    sameRows(Dialect.rewriteChLimitBy(
+      "SELECT g, v * 2 AS d FROM t ORDER BY d DESC LIMIT 1 BY g"), "SELECT g, d FROM ( SELECT g, v * 2 AS d, row_number() OVER (PARTITION BY g " +
         "ORDER BY (v * 2) DESC) AS __lb FROM t ) __lby WHERE __lb <= 1 ORDER BY d DESC")
     // offset forms (r14): ClickHouse's `LIMIT offset, n BY` (MySQL
     // convention — FIRST number is the skip) and `LIMIT n OFFSET m BY`
     // keep offset < rank <= offset + n
-    assert(Dialect.rewriteChLimitBy(
-      "SELECT g, v FROM t ORDER BY v DESC LIMIT 2, 3 BY g LIMIT 10") ===
-      "SELECT g, v FROM ( SELECT g, v, row_number() OVER (PARTITION BY g " +
+    sameRows(Dialect.rewriteChLimitBy(
+      "SELECT g, v FROM t ORDER BY v DESC LIMIT 2, 3 BY g LIMIT 10"), "SELECT g, v FROM ( SELECT g, v, row_number() OVER (PARTITION BY g " +
         "ORDER BY v DESC) AS __lb FROM t ) __lby WHERE __lb > 2 AND __lb <= 5 " +
         "ORDER BY v DESC LIMIT 10")
-    assert(Dialect.rewriteChLimitBy(
-      "SELECT g, v FROM t LIMIT 3 OFFSET 2 BY g") ===
-      "SELECT g, v FROM ( SELECT g, v, row_number() OVER (PARTITION BY g " +
+    sameRows(Dialect.rewriteChLimitBy(
+      "SELECT g, v FROM t LIMIT 3 OFFSET 2 BY g"), "SELECT g, v FROM ( SELECT g, v, row_number() OVER (PARTITION BY g " +
         "ORDER BY g) AS __lb FROM t ) __lby WHERE __lb > 2 AND __lb <= 5")
     // a non-LIMIT clause after the keys would be swallowed into
     // PARTITION BY — fail fast naming it (r14, advice item)
@@ -1213,23 +1243,20 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
       "SELECT g FROM t LIMIT 2 BY g FORMAT JSONEachRow"))
     // …but the ender detection matches CLAUSE shapes, not bare words: a
     // key column literally named `format` stays a key
-    assert(Dialect.rewriteChLimitBy("SELECT format, v FROM t LIMIT 2 BY format") ===
-      "SELECT format, v FROM ( SELECT format, v, row_number() OVER (PARTITION BY format " +
+    sameRows(Dialect.rewriteChLimitBy("SELECT format, v FROM t LIMIT 2 BY format"), "SELECT format, v FROM ( SELECT format, v, row_number() OVER (PARTITION BY format " +
         "ORDER BY format) AS __lb FROM t ) __lby WHERE __lb <= 2")
     // SELECT DISTINCT composes (r18 — a named fail-fast before):
     // ClickHouse applies DISTINCT before ORDER BY/LIMIT BY, so the
     // window ranks the DISTINCT subquery and keys resolve to OUTPUT
     // names (alias, name, or matching expression text)
-    assert(Dialect.rewriteChLimitBy(
-      "SELECT DISTINCT g, v * 2 AS d FROM t ORDER BY d DESC LIMIT 1 BY g LIMIT 5") ===
-      "SELECT g, d FROM ( SELECT *, row_number() OVER (PARTITION BY g " +
+    sameRows(Dialect.rewriteChLimitBy(
+      "SELECT DISTINCT g, v * 2 AS d FROM t ORDER BY d DESC LIMIT 1 BY g LIMIT 5"), "SELECT g, d FROM ( SELECT *, row_number() OVER (PARTITION BY g " +
         "ORDER BY d DESC) AS __lb FROM ( SELECT DISTINCT g, v * 2 AS d FROM t ) __lbd ) " +
         "__lby WHERE __lb <= 1 ORDER BY d DESC LIMIT 5")
     // a key matching an item's EXPRESSION resolves to that item's name;
     // ordinals resolve on the ORDER BY side
-    assert(Dialect.rewriteChLimitBy(
-      "SELECT DISTINCT g, v * 2 AS d FROM t ORDER BY 2 DESC LIMIT 1 BY v * 2") ===
-      "SELECT g, d FROM ( SELECT *, row_number() OVER (PARTITION BY d " +
+    sameRows(Dialect.rewriteChLimitBy(
+      "SELECT DISTINCT g, v * 2 AS d FROM t ORDER BY 2 DESC LIMIT 1 BY v * 2"), "SELECT g, d FROM ( SELECT *, row_number() OVER (PARTITION BY d " +
         "ORDER BY d DESC) AS __lb FROM ( SELECT DISTINCT g, v * 2 AS d FROM t ) __lbd ) " +
         "__lby WHERE __lb <= 1 ORDER BY d DESC")
     // a key unavailable after the distinct stays a loud named error
@@ -1241,9 +1268,8 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // missed it) — the hint re-emitted on the inner select, before the
     // DISTINCT keyword (Spark's grammar order); a backtick-QUOTED key
     // resolves to the output name
-    assert(Dialect.rewriteChLimitBy(
-      "SELECT /*+ REPARTITION(4) */ DISTINCT g, v * 2 AS d FROM t ORDER BY `d` LIMIT 1 BY g") ===
-      "SELECT g, d FROM ( SELECT *, row_number() OVER (PARTITION BY g " +
+    sameRows(Dialect.rewriteChLimitBy(
+      "SELECT /*+ REPARTITION(4) */ DISTINCT g, v * 2 AS d FROM t ORDER BY `d` LIMIT 1 BY g"), "SELECT g, d FROM ( SELECT *, row_number() OVER (PARTITION BY g " +
         "ORDER BY d) AS __lb FROM ( SELECT /*+ REPARTITION(4) */ DISTINCT g, v * 2 AS d " +
         "FROM t ) __lbd ) __lby WHERE __lb <= 1 ORDER BY d")
     // a LIMIT BY inside a comment is text, not a clause (r18 review)
@@ -1262,13 +1288,11 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // OVER clause) while the outer ORDER BY keeps the ordinal; a key
     // that merely starts with a digit (`2 + v`) is an expression and
     // passes through; out-of-range positions raise
-    assert(Dialect.rewriteChLimitBy(
-      "SELECT g, v FROM t ORDER BY 2 DESC LIMIT 1 BY g") ===
-      "SELECT g, v FROM ( SELECT g, v, row_number() OVER (PARTITION BY g " +
+    sameRows(Dialect.rewriteChLimitBy(
+      "SELECT g, v FROM t ORDER BY 2 DESC LIMIT 1 BY g"), "SELECT g, v FROM ( SELECT g, v, row_number() OVER (PARTITION BY g " +
         "ORDER BY (v) DESC) AS __lb FROM t ) __lby WHERE __lb <= 1 ORDER BY 2 DESC")
-    assert(Dialect.rewriteChLimitBy(
-      "SELECT g, v * 2 AS d FROM t ORDER BY 2 LIMIT 1 BY g") ===
-      "SELECT g, d FROM ( SELECT g, v * 2 AS d, row_number() OVER (PARTITION BY g " +
+    sameRows(Dialect.rewriteChLimitBy(
+      "SELECT g, v * 2 AS d FROM t ORDER BY 2 LIMIT 1 BY g"), "SELECT g, d FROM ( SELECT g, v * 2 AS d, row_number() OVER (PARTITION BY g " +
         "ORDER BY (v * 2)) AS __lb FROM t ) __lby WHERE __lb <= 1 ORDER BY 2")
     assert(Dialect.rewriteChLimitBy(
       "SELECT g, v FROM t ORDER BY 2 + v LIMIT 1 BY g").contains("ORDER BY 2 + v) AS __lb"))
@@ -1354,9 +1378,8 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // WITH TIES (r14): rank-filtered subquery; the outer ORDER BY keeps
     // the statement's keys, the window resolves select aliases, and the
     // Postgres/Oracle wiring pins the nulls-largest default placement
-    assert(Dialect.rewriteFetchFirstWithTies(
-      "SELECT g, v * 2 AS d FROM t ORDER BY d FETCH NEXT 1 ROW WITH TIES") ===
-      "SELECT g, d FROM ( SELECT g, v * 2 AS d, " +
+    sameRows(Dialect.rewriteFetchFirstWithTies(
+      "SELECT g, v * 2 AS d FROM t ORDER BY d FETCH NEXT 1 ROW WITH TIES"), "SELECT g, d FROM ( SELECT g, v * 2 AS d, " +
         "rank() OVER (ORDER BY (v * 2) NULLS LAST) AS __wt " +
         "FROM t ) __wtq WHERE __wt <= 1 ORDER BY d NULLS LAST")
     // plain FETCH … ONLY is untouched here (the LIMIT rewrite's job)
@@ -1364,26 +1387,22 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
       "SELECT g FROM t ORDER BY g FETCH FIRST 3 ROWS ONLY") ===
       "SELECT g FROM t ORDER BY g FETCH FIRST 3 ROWS ONLY")
     // T-SQL TOP n WITH TIES rides the same builder from rewriteTsqlTop
-    assert(Dialect.rewriteTsqlTop(
-      "SELECT TOP 3 WITH TIES g, v FROM t ORDER BY v DESC") ===
-      "SELECT g, v FROM ( SELECT g, v, rank() OVER (ORDER BY v DESC) AS __wt " +
+    sameRows(Dialect.rewriteTsqlTop(
+      "SELECT TOP 3 WITH TIES g, v FROM t ORDER BY v DESC"), "SELECT g, v FROM ( SELECT g, v, rank() OVER (ORDER BY v DESC) AS __wt " +
         "FROM t ) __wtq WHERE __wt <= 3 ORDER BY v DESC")
     // r14 review fixes: the wired dialects (Postgres/Oracle) sort nulls
     // LARGEST — the rank window (which decides row MEMBERSHIP) and the
     // outer ORDER BY both pin the placement Spark would otherwise flip
-    assert(Dialect.rewriteFetchFirstWithTies(
-      "SELECT g, v FROM t ORDER BY v DESC FETCH FIRST 3 ROWS WITH TIES") ===
-      "SELECT g, v FROM ( SELECT g, v, rank() OVER (ORDER BY v DESC NULLS FIRST) AS __wt " +
+    sameRows(Dialect.rewriteFetchFirstWithTies(
+      "SELECT g, v FROM t ORDER BY v DESC FETCH FIRST 3 ROWS WITH TIES"), "SELECT g, v FROM ( SELECT g, v, rank() OVER (ORDER BY v DESC NULLS FIRST) AS __wt " +
         "FROM t ) __wtq WHERE __wt <= 3 ORDER BY v DESC NULLS FIRST")
     // an explicit placement is the user's and stays untouched
-    assert(Dialect.rewriteFetchFirstWithTies(
-      "SELECT g FROM t ORDER BY g NULLS FIRST FETCH FIRST 2 ROWS WITH TIES") ===
-      "SELECT g FROM ( SELECT g, rank() OVER (ORDER BY g NULLS FIRST) AS __wt " +
+    sameRows(Dialect.rewriteFetchFirstWithTies(
+      "SELECT g FROM t ORDER BY g NULLS FIRST FETCH FIRST 2 ROWS WITH TIES"), "SELECT g FROM ( SELECT g, rank() OVER (ORDER BY g NULLS FIRST) AS __wt " +
         "FROM t ) __wtq WHERE __wt <= 2 ORDER BY g NULLS FIRST")
     // T-SQL sorts nulls smallest (Spark's default): no pin emitted
-    assert(Dialect.rewriteTsqlTop(
-      "SELECT TOP 2 WITH TIES g FROM t ORDER BY g") ===
-      "SELECT g FROM ( SELECT g, rank() OVER (ORDER BY g) AS __wt " +
+    sameRows(Dialect.rewriteTsqlTop(
+      "SELECT TOP 2 WITH TIES g FROM t ORDER BY g"), "SELECT g FROM ( SELECT g, rank() OVER (ORDER BY g) AS __wt " +
         "FROM t ) __wtq WHERE __wt <= 2 ORDER BY g")
     // leading whitespace is not a shape violation
     assert(Dialect.rewriteFetchFirstWithTies(
@@ -1393,47 +1412,43 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // missing ORDER BY fails fast with a named error
     intercept[UnsupportedError](Dialect.rewriteFetchFirstWithTies(
       "SELECT g FROM t FETCH FIRST 3 ROWS WITH TIES"))
-    // set-op WITH TIES applies to the COMBINED result since r17 (legal
-    // Postgres) — but resolving the arms' output names needs a session,
-    // so the pure-string path keeps a NAMED error…
-    val setOpErr = intercept[UnsupportedError](Dialect.rewriteFetchFirstWithTies(
-      "SELECT g FROM t UNION ALL SELECT g FROM u ORDER BY g FETCH FIRST 1 ROWS WITH TIES"))
-    assert(setOpErr.getMessage.contains("registered tables"))
-    // a paren inside a comment must not skew the depth map and hide the
-    // set-op from the detection (r17 review — the named error, not the
-    // single-SELECT shape error); MINUS is Oracle's EXCEPT spelling
-    assert(intercept[UnsupportedError](Dialect.rewriteFetchFirstWithTies(
+    // set-op WITH TIES applies to the COMBINED result (legal Postgres):
+    // `|> EXTEND` ranks the set operation's output, with no session
+    sameRows(Dialect.rewriteFetchFirstWithTies(
+      "SELECT g FROM t UNION ALL SELECT g FROM u ORDER BY g FETCH FIRST 1 ROWS WITH TIES"),
+      "SELECT g FROM (SELECT g, rank() OVER (ORDER BY g NULLS LAST) AS r FROM " +
+        "(SELECT g FROM t UNION ALL SELECT g FROM u)) WHERE r <= 1")
+    // a paren inside a comment does not skew the depth map and hide the
+    // set operation; MINUS is Oracle's EXCEPT spelling
+    sameRows(Dialect.rewriteFetchFirstWithTies(
       "SELECT a FROM t -- note (important\nUNION SELECT a FROM u " +
-        "ORDER BY a FETCH FIRST 1 ROWS WITH TIES"))
-      .getMessage.contains("registered tables"))
-    assert(intercept[UnsupportedError](Dialect.rewriteFetchFirstWithTies(
-      "SELECT a FROM t MINUS SELECT a FROM u ORDER BY a FETCH FIRST 1 ROWS WITH TIES"))
-      .getMessage.contains("registered tables"))
+        "ORDER BY a FETCH FIRST 1 ROWS WITH TIES"),
+      "SELECT a FROM (SELECT a, rank() OVER (ORDER BY a NULLS LAST) AS r FROM " +
+        "(SELECT a FROM t UNION SELECT a FROM u)) WHERE r <= 1")
+    sameRows(Dialect.rewriteFetchFirstWithTies(
+      "SELECT a FROM t MINUS SELECT a FROM u WHERE a > 2 ORDER BY a FETCH FIRST 1 ROWS WITH TIES"),
+      "SELECT a FROM (SELECT a, rank() OVER (ORDER BY a NULLS LAST) AS r FROM " +
+        "(SELECT a FROM t EXCEPT SELECT a FROM u WHERE a > 2)) WHERE r <= 1")
     // a trailing comment AFTER the ties clause is legal SQL — blanked,
     // not raised as trailing text (r17)
     assert(Dialect.rewriteFetchFirstWithTies(
       "SELECT g FROM t ORDER BY g FETCH FIRST 2 ROWS WITH TIES -- done")
       .contains("__wt"))
-    // a trailing -- comment at the end of the QUALIFY inner statement
-    // must not swallow the spliced `) __qualify …` syntax (r17 review —
-    // a parse error on legal Snowflake text before)
-    assert(Dialect.rewriteQualify(
-      "SELECT a FROM t -- dedup\nQUALIFY row_number() OVER (ORDER BY a) = 1") ===
-      "SELECT a FROM ( SELECT a , (row_number() OVER (ORDER BY a) = 1) " +
+    // a trailing -- comment at the end of the FROM body must not swallow
+    // the appended pipe operators
+    sameRows(Dialect.rewriteQualify(
+      "SELECT a FROM t -- dedup\nQUALIFY row_number() OVER (ORDER BY a) = 1"), "SELECT a FROM ( SELECT a , (row_number() OVER (ORDER BY a) = 1) " +
         "AS __qual FROM t ) __qualify WHERE __qual ")
     // …and T-SQL TOP over a set op stays loud EVEN WITH a session: TOP
     // binds to the first arm in T-SQL, so a combined-result rewrite
     // would be a silent semantics change (setOpOk is FETCH-family only)
-    // SUBQUERY-level WITH TIES (r15 — fail-fast/raw-parse-error before):
-    // the rank rewrite applies to the inner SELECT's own scope and
-    // splices back, for T-SQL TOP and the ANSI FETCH spelling alike
-    assert(Dialect.rewriteTsqlTop(
-      "SELECT a FROM (SELECT TOP 3 WITH TIES b FROM t ORDER BY b) s") ===
-      "SELECT a FROM (SELECT b FROM ( SELECT b, rank() OVER (ORDER BY b) AS __wt " +
+    // SUBQUERY-level WITH TIES: the rank rewrite applies to the inner
+    // SELECT's own scope, for T-SQL TOP and the ANSI FETCH spelling alike
+    sameRows(Dialect.rewriteTsqlTop(
+      "SELECT b FROM (SELECT TOP 3 WITH TIES b FROM t ORDER BY b) s"), "SELECT b FROM (SELECT b FROM ( SELECT b, rank() OVER (ORDER BY b) AS __wt " +
         "FROM t ) __wtq WHERE __wt <= 3 ORDER BY b) s")
-    assert(Dialect.rewriteFetchFirstWithTies(
-      "SELECT s.b FROM (SELECT b FROM t ORDER BY b FETCH FIRST 2 ROWS WITH TIES) s") ===
-      "SELECT s.b FROM (SELECT b FROM ( SELECT b, " +
+    sameRows(Dialect.rewriteFetchFirstWithTies(
+      "SELECT s.b FROM (SELECT b FROM t ORDER BY b FETCH FIRST 2 ROWS WITH TIES) s"), "SELECT s.b FROM (SELECT b FROM ( SELECT b, " +
         "rank() OVER (ORDER BY b NULLS LAST) AS __wt FROM t ) __wtq " +
         "WHERE __wt <= 2 ORDER BY b NULLS LAST) s")
     // …but a set-operation ARM stays a named fail-fast on both sides
@@ -1449,9 +1464,8 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // rows, keep n, plus ties of row m+n — row_number > m AND rank <=
     // the cutoff rank at row m+n, over a frame pre-filtered to the
     // static rank <= m+n bound; a non-literal offset keeps a named error
-    assert(Dialect.rewriteFetchFirstWithTies(
-      "SELECT g FROM t ORDER BY g OFFSET 5 ROWS FETCH FIRST 3 ROWS WITH TIES") ===
-      "SELECT g FROM ( SELECT *, " +
+    sameRows(Dialect.rewriteFetchFirstWithTies(
+      "SELECT g FROM t ORDER BY g OFFSET 5 ROWS FETCH FIRST 3 ROWS WITH TIES"), "SELECT g FROM ( SELECT *, " +
         "max(CASE WHEN __wtn <= ((5) + (3)) THEN __wt END) OVER () AS __wtcut " +
         "FROM ( SELECT g, rank() OVER (ORDER BY g NULLS LAST) AS __wt, " +
         "row_number() OVER (ORDER BY g NULLS LAST) AS __wtn FROM t ) __wtq " +
@@ -1462,14 +1476,12 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // Oracle FETCH FIRST n PERCENT (r15): percent cutoff over row_number
     // (ONLY) or rank (WITH TIES) with the nulls-largest placement pinned;
     // OFFSET+PERCENT stays a named fail-fast
-    assert(Dialect.rewriteFetchFirstPercent(
-      "SELECT g FROM t ORDER BY g FETCH FIRST 5 PERCENT ROWS ONLY") ===
-      "SELECT g FROM ( SELECT g, row_number() OVER (ORDER BY g NULLS LAST) AS __wt, " +
+    sameRows(Dialect.rewriteFetchFirstPercent(
+      "SELECT g FROM t ORDER BY g FETCH FIRST 5 PERCENT ROWS ONLY"), "SELECT g FROM ( SELECT g, row_number() OVER (ORDER BY g NULLS LAST) AS __wt, " +
         "count(*) OVER () AS __wtc FROM t ) __wtq " +
         "WHERE __wt <= CEILING(__wtc * (5) / 100.0) ORDER BY g NULLS LAST")
-    assert(Dialect.rewriteFetchFirstPercent(
-      "SELECT g FROM t ORDER BY g FETCH NEXT 2.5 PERCENT ROWS WITH TIES") ===
-      "SELECT g FROM ( SELECT g, rank() OVER (ORDER BY g NULLS LAST) AS __wt, " +
+    sameRows(Dialect.rewriteFetchFirstPercent(
+      "SELECT g FROM t ORDER BY g FETCH NEXT 2.5 PERCENT ROWS WITH TIES"), "SELECT g FROM ( SELECT g, rank() OVER (ORDER BY g NULLS LAST) AS __wt, " +
         "count(*) OVER () AS __wtc FROM t ) __wtq " +
         "WHERE __wt <= CEILING(__wtc * (2.5) / 100.0) ORDER BY g NULLS LAST")
     assert(Dialect.rewriteFetchFirstPercent(
@@ -1480,15 +1492,13 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // row count, the offset becomes the row_number skip (ONLY) or the
     // cutoff-rank rule at m+k (WITH TIES). No session here → the legacy
     // count(*) OVER () shape.
-    assert(Dialect.rewriteFetchFirstPercent(
-      "SELECT g FROM t ORDER BY g OFFSET 2 ROWS FETCH FIRST 5 PERCENT ROWS ONLY") ===
-      "SELECT g FROM ( SELECT g, row_number() OVER (ORDER BY g NULLS LAST) AS __wt, " +
+    sameRows(Dialect.rewriteFetchFirstPercent(
+      "SELECT g FROM t ORDER BY g OFFSET 2 ROWS FETCH FIRST 5 PERCENT ROWS ONLY"), "SELECT g FROM ( SELECT g, row_number() OVER (ORDER BY g NULLS LAST) AS __wt, " +
         "count(*) OVER () AS __wtc FROM t ) __wtq " +
         "WHERE __wt > (2) AND __wt <= ((2) + CEILING(__wtc * (5) / 100.0)) " +
         "ORDER BY g NULLS LAST")
-    assert(Dialect.rewriteFetchFirstPercent(
-      "SELECT g FROM t ORDER BY g OFFSET 1 ROWS FETCH NEXT 10 PERCENT ROWS WITH TIES") ===
-      "SELECT g FROM ( SELECT *, " +
+    sameRows(Dialect.rewriteFetchFirstPercent(
+      "SELECT g FROM t ORDER BY g OFFSET 1 ROWS FETCH NEXT 10 PERCENT ROWS WITH TIES"), "SELECT g FROM ( SELECT *, " +
         "max(CASE WHEN __wtn <= ((1) + CEILING(__wtc * (10) / 100.0)) THEN __wt END) " +
         "OVER () AS __wtcut " +
         "FROM ( SELECT g, rank() OVER (ORDER BY g NULLS LAST) AS __wt, " +
@@ -1497,9 +1507,8 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
         "WHERE __wt <= ((1) + CEILING(__wtc * (10) / 100.0)) ) __wtq2 " +
         "WHERE __wtn > (1) AND __wt <= __wtcut ORDER BY g NULLS LAST")
     // zero-percent with an offset still short-circuits to LIMIT 0
-    assert(Dialect.rewriteFetchFirstPercent(
-      "SELECT g FROM t ORDER BY g OFFSET 1 ROWS FETCH NEXT 0 PERCENT ROWS ONLY") ===
-      "SELECT g FROM ( SELECT g FROM t ) __wtq LIMIT 0")
+    sameRows(Dialect.rewriteFetchFirstPercent(
+      "SELECT g FROM t ORDER BY g OFFSET 1 ROWS FETCH NEXT 0 PERCENT ROWS ONLY"), "SELECT g FROM ( SELECT g FROM t ) __wtq LIMIT 0")
     // non-literal offset keeps the named error
     intercept[UnsupportedError](Dialect.rewriteFetchFirstPercent(
       "SELECT g FROM t ORDER BY g OFFSET 1 + 1 FETCH FIRST 5 PERCENT ROWS ONLY"))
@@ -1508,42 +1517,36 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // the rank window (alias stripped — Spark can't read a lateral
     // alias there either), while the outer ORDER BY keeps the ordinal,
     // which stays correct at statement level; out-of-range raises
-    assert(Dialect.rewriteFetchFirstWithTies(
-      "SELECT k, v FROM t ORDER BY 2 FETCH FIRST 1 ROWS WITH TIES") ===
-      "SELECT k, v FROM ( SELECT k, v, rank() OVER (ORDER BY (v) NULLS LAST) " +
+    sameRows(Dialect.rewriteFetchFirstWithTies(
+      "SELECT k, v FROM t ORDER BY 2 FETCH FIRST 1 ROWS WITH TIES"), "SELECT k, v FROM ( SELECT k, v, rank() OVER (ORDER BY (v) NULLS LAST) " +
         "AS __wt FROM t ) __wtq WHERE __wt <= 1 ORDER BY 2 NULLS LAST")
-    assert(Dialect.rewriteFetchFirstWithTies(
-      "SELECT g, v * 2 AS d FROM t ORDER BY 2 DESC FETCH NEXT 1 ROW WITH TIES") ===
-      "SELECT g, d FROM ( SELECT g, v * 2 AS d, " +
+    sameRows(Dialect.rewriteFetchFirstWithTies(
+      "SELECT g, v * 2 AS d FROM t ORDER BY 2 DESC FETCH NEXT 1 ROW WITH TIES"), "SELECT g, d FROM ( SELECT g, v * 2 AS d, " +
         "rank() OVER (ORDER BY (v * 2) DESC NULLS FIRST) AS __wt " +
         "FROM t ) __wtq WHERE __wt <= 1 ORDER BY 2 DESC NULLS FIRST")
     intercept[UnsupportedError](Dialect.rewriteFetchFirstWithTies(
       "SELECT g FROM t ORDER BY 4 FETCH FIRST 1 ROWS WITH TIES"))
     // T-SQL TOP WITH TIES rides the same ordinal resolution
-    assert(Dialect.rewriteTsqlTop(
-      "SELECT TOP 3 WITH TIES g, v FROM t ORDER BY 2 DESC") ===
-      "SELECT g, v FROM ( SELECT g, v, rank() OVER (ORDER BY (v) DESC) AS __wt " +
+    sameRows(Dialect.rewriteTsqlTop(
+      "SELECT TOP 3 WITH TIES g, v FROM t ORDER BY 2 DESC"), "SELECT g, v FROM ( SELECT g, v, rank() OVER (ORDER BY (v) DESC) AS __wt " +
         "FROM t ) __wtq WHERE __wt <= 3 ORDER BY 2 DESC")
     // TOP n PERCENT (r15): row_number over the statement's sort with a
     // global-count cutoff, CEILING per T-SQL's round-up; WITH TIES keeps
     // rank; fractional n needs PERCENT; no-ORDER-BY and subquery
     // placements fail fast
-    assert(Dialect.rewriteTsqlTop(
-      "SELECT TOP 10 PERCENT g, v FROM t ORDER BY v DESC") ===
-      "SELECT g, v FROM ( SELECT g, v, row_number() OVER (ORDER BY v DESC) AS __wt, " +
+    sameRows(Dialect.rewriteTsqlTop(
+      "SELECT TOP 10 PERCENT g, v FROM t ORDER BY v DESC"), "SELECT g, v FROM ( SELECT g, v, row_number() OVER (ORDER BY v DESC) AS __wt, " +
         "count(*) OVER () AS __wtc FROM t ) __wtq " +
         "WHERE __wt <= CEILING(__wtc * (10) / 100.0) ORDER BY v DESC")
-    assert(Dialect.rewriteTsqlTop(
-      "SELECT TOP 2.5 PERCENT WITH TIES g FROM t ORDER BY g") ===
-      "SELECT g FROM ( SELECT g, rank() OVER (ORDER BY g) AS __wt, " +
+    sameRows(Dialect.rewriteTsqlTop(
+      "SELECT TOP 2.5 PERCENT WITH TIES g FROM t ORDER BY g"), "SELECT g FROM ( SELECT g, rank() OVER (ORDER BY g) AS __wt, " +
         "count(*) OVER () AS __wtc FROM t ) __wtq " +
         "WHERE __wt <= CEILING(__wtc * (2.5) / 100.0) ORDER BY g")
     intercept[UnsupportedError](Dialect.rewriteTsqlTop(
       "SELECT TOP 10 PERCENT g FROM t"))
     // subquery-level PERCENT rides the same scope-span splice (r15)
-    assert(Dialect.rewriteTsqlTop(
-      "SELECT a FROM (SELECT TOP 10 PERCENT b FROM t ORDER BY b) s") ===
-      "SELECT a FROM (SELECT b FROM ( SELECT b, row_number() OVER (ORDER BY b) AS __wt, " +
+    sameRows(Dialect.rewriteTsqlTop(
+      "SELECT b FROM (SELECT TOP 10 PERCENT b FROM t ORDER BY b) s"), "SELECT b FROM (SELECT b FROM ( SELECT b, row_number() OVER (ORDER BY b) AS __wt, " +
         "count(*) OVER () AS __wtc FROM t ) __wtq " +
         "WHERE __wt <= CEILING(__wtc * (10) / 100.0) ORDER BY b) s")
     intercept[UnsupportedError](Dialect.rewriteTsqlTop(
@@ -1552,32 +1555,29 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // review fix: the guard ran after the ties branch and was unreachable)
     intercept[UnsupportedError](Dialect.rewriteTsqlTop(
       "SELECT TOP 2.5 WITH TIES g FROM t ORDER BY g"))
-    // TOP WITH TIES / PERCENT compose with QUALIFY when the dialect
-    // supplies its rewrite (r18 — Teradata; a named fail-fast before):
-    // QUALIFY filters FIRST, then the rank runs over the filtered rows
+    // TOP WITH TIES / PERCENT compose with QUALIFY where QUALIFY is a
+    // clause (Teradata): the TOP rewrite leaves the clause in its SELECT
+    // and ranks with `|> EXTEND`, and the later QUALIFY rewrite filters
+    // FIRST, so the rank runs over the filtered rows
     locally {
-      val qr = Some((q: String) => Dialect.rewriteQualify(q))
-      assert(Dialect.rewriteTsqlTop(
-        "SELECT TOP 2 WITH TIES g FROM t QUALIFY row_number() OVER (ORDER BY v) = 1 ORDER BY g",
-        qualifyRewrite = qr) ===
+      def teradataTop(q: String) =
+        Dialect.rewriteQualify(Dialect.rewriteTsqlTop(q, qualifyClause = true))
+      sameRows(teradataTop(
+        "SELECT TOP 2 WITH TIES g FROM t QUALIFY row_number() OVER (ORDER BY v) = 1 ORDER BY g"),
         "SELECT g FROM ( SELECT g, rank() OVER (ORDER BY g) AS __wt FROM " +
           "( SELECT g , (row_number() OVER (ORDER BY v) = 1) AS __qual FROM t ) __qualify " +
           "WHERE __qual ) __wtq WHERE __wt <= 2 ORDER BY g")
-      // without the rewrite (T-SQL — QUALIFY is not a clause there) the
-      // named error is unchanged
+      // without the clause (T-SQL) the named error is unchanged
       intercept[UnsupportedError](Dialect.rewriteTsqlTop(
         "SELECT TOP 2 WITH TIES g FROM t QUALIFY row_number() OVER (ORDER BY v) = 1 ORDER BY g"))
-      // the ambiguous `)`-preceded position keeps the named error even
-      // with a rewrite supplied (could be a derived-table alias)
-      intercept[UnsupportedError](Dialect.rewriteTsqlTop(
-        "SELECT TOP 2 WITH TIES g FROM (SELECT g FROM u) QUALIFY ORDER BY g",
-        qualifyRewrite = qr))
+      // the `)`-preceded position with no predicate stays a named error
+      intercept[UnsupportedError](teradataTop(
+        "SELECT TOP 2 WITH TIES g FROM (SELECT g FROM u) QUALIFY ORDER BY g"))
     }
     // count-omitted ANSI forms (r15): FETCH FIRST ROW WITH TIES / ONLY
     // default the count to 1 instead of dying as raw parse errors
-    assert(Dialect.rewriteFetchFirstWithTies(
-      "SELECT g FROM t ORDER BY g FETCH FIRST ROW WITH TIES") ===
-      "SELECT g FROM ( SELECT g, rank() OVER (ORDER BY g NULLS LAST) AS __wt " +
+    sameRows(Dialect.rewriteFetchFirstWithTies(
+      "SELECT g FROM t ORDER BY g FETCH FIRST ROW WITH TIES"), "SELECT g FROM ( SELECT g, rank() OVER (ORDER BY g NULLS LAST) AS __wt " +
         "FROM t ) __wtq WHERE __wt <= 1 ORDER BY g NULLS LAST")
     assert(Dialect.rewriteFetchFirst("SELECT a FROM t ORDER BY a FETCH FIRST ROW ONLY") ===
       "SELECT a FROM t ORDER BY a LIMIT 1")
@@ -1588,21 +1588,16 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // form. The offset combination was the broken one — its generic
     // membership used row m's own rank as the cutoff, leaking row m's
     // tie-tail where Postgres returns the empty set.
-    assert(Dialect.rewriteFetchFirstWithTies(
-      "SELECT g FROM t ORDER BY g OFFSET 1 ROWS FETCH NEXT 0 ROWS WITH TIES") ===
-      "SELECT g FROM ( SELECT g FROM t ) __wtq LIMIT 0")
-    assert(Dialect.rewriteFetchFirstWithTies(
-      "SELECT g FROM t ORDER BY g FETCH FIRST 0 ROWS WITH TIES") ===
-      "SELECT g FROM ( SELECT g FROM t ) __wtq LIMIT 0")
-    assert(Dialect.rewriteTsqlTop(
-      "SELECT TOP 0 WITH TIES g FROM t ORDER BY g") ===
-      "SELECT g FROM ( SELECT g FROM t ) __wtq LIMIT 0")
-    assert(Dialect.rewriteTsqlTop(
-      "SELECT TOP 0 PERCENT WITH TIES g FROM t ORDER BY g") ===
-      "SELECT g FROM ( SELECT g FROM t ) __wtq LIMIT 0")
-    assert(Dialect.rewriteFetchFirstPercent(
-      "SELECT g FROM t ORDER BY g FETCH FIRST 0 PERCENT ROWS ONLY") ===
-      "SELECT g FROM ( SELECT g FROM t ) __wtq LIMIT 0")
+    sameRows(Dialect.rewriteFetchFirstWithTies(
+      "SELECT g FROM t ORDER BY g OFFSET 1 ROWS FETCH NEXT 0 ROWS WITH TIES"), "SELECT g FROM ( SELECT g FROM t ) __wtq LIMIT 0")
+    sameRows(Dialect.rewriteFetchFirstWithTies(
+      "SELECT g FROM t ORDER BY g FETCH FIRST 0 ROWS WITH TIES"), "SELECT g FROM ( SELECT g FROM t ) __wtq LIMIT 0")
+    sameRows(Dialect.rewriteTsqlTop(
+      "SELECT TOP 0 WITH TIES g FROM t ORDER BY g"), "SELECT g FROM ( SELECT g FROM t ) __wtq LIMIT 0")
+    sameRows(Dialect.rewriteTsqlTop(
+      "SELECT TOP 0 PERCENT WITH TIES g FROM t ORDER BY g"), "SELECT g FROM ( SELECT g FROM t ) __wtq LIMIT 0")
+    sameRows(Dialect.rewriteFetchFirstPercent(
+      "SELECT g FROM t ORDER BY g FETCH FIRST 0 PERCENT ROWS ONLY"), "SELECT g FROM ( SELECT g FROM t ) __wtq LIMIT 0")
     // …but the zero short-circuit still validates the statement shape:
     // an out-of-range ordinal raises exactly like the non-zero forms
     intercept[UnsupportedError](Dialect.rewriteFetchFirstWithTies(
@@ -1610,52 +1605,46 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // AS-less implicit aliases (r16, r15 ADVICE): `v d` names output d,
     // the window ordinal resolves to the EXPRESSION v, and an alias sort
     // key resolves back through the implicit form too
-    assert(Dialect.rewriteFetchFirstWithTies(
-      "SELECT g, v d FROM t ORDER BY 2 FETCH FIRST 1 ROWS WITH TIES") ===
-      "SELECT g, d FROM ( SELECT g, v d, rank() OVER (ORDER BY (v) NULLS LAST) " +
+    sameRows(Dialect.rewriteFetchFirstWithTies(
+      "SELECT g, v d FROM t ORDER BY 2 FETCH FIRST 1 ROWS WITH TIES"), "SELECT g, d FROM ( SELECT g, v d, rank() OVER (ORDER BY (v) NULLS LAST) " +
         "AS __wt FROM t ) __wtq WHERE __wt <= 1 ORDER BY 2 NULLS LAST")
-    assert(Dialect.rewriteFetchFirstWithTies(
-      "SELECT g, count(v) c FROM t GROUP BY g ORDER BY c FETCH FIRST 1 ROWS WITH TIES") ===
-      "SELECT g, c FROM ( SELECT g, count(v) c, " +
+    sameRows(Dialect.rewriteFetchFirstWithTies(
+      "SELECT g, count(v) c FROM t GROUP BY g ORDER BY c FETCH FIRST 1 ROWS WITH TIES"), "SELECT g, c FROM ( SELECT g, count(v) c, " +
         "rank() OVER (ORDER BY (count(v)) NULLS LAST) AS __wt " +
         "FROM t GROUP BY g ) __wtq WHERE __wt <= 1 ORDER BY c NULLS LAST")
-    // non-self-contained shapes are still never guessed as aliases
-    intercept[UnsupportedError](Dialect.rewriteFetchFirstWithTies(
-      "SELECT v + 1 d FROM t ORDER BY 1 FETCH FIRST 1 ROWS WITH TIES"))
-    // a star select list without a live session raises a NAMED error
-    // (with one, it expands from the registered views — gate-covered)
-    intercept[UnsupportedError](Dialect.rewriteFetchFirstWithTies(
-      "SELECT * FROM t ORDER BY 2 FETCH FIRST 1 ROWS WITH TIES"))
+    // non-self-contained shapes are still never guessed as aliases: an
+    // ordinal on one, or on a star, ranks the output by position
+    sameRows(Dialect.rewriteFetchFirstWithTies(
+      "SELECT v + 1 d FROM t ORDER BY 1 FETCH FIRST 1 ROWS WITH TIES"),
+      "SELECT d FROM (SELECT v + 1 d, rank() OVER (ORDER BY v + 1 NULLS LAST) AS r FROM t) WHERE r <= 1")
+    sameRows(Dialect.rewriteFetchFirstWithTies(
+      "SELECT * FROM t ORDER BY 2 FETCH FIRST 1 ROWS WITH TIES"),
+      "SELECT * EXCEPT (r) FROM (SELECT *, rank() OVER (ORDER BY b NULLS LAST) AS r FROM t) WHERE r <= 1")
     // SELECT DISTINCT composes (r16 — a named fail-fast before):
     // DISTINCT applies FIRST, the rank runs over the DISTINCT output,
     // and the window keys resolve to OUTPUT NAMES (ordinals, aliases,
     // and item-expression text all map to the name; an expression not
     // in the select list raises like Postgres's own binder)
-    assert(Dialect.rewriteFetchFirstWithTies(
-      "SELECT DISTINCT g, v * 2 AS d FROM t ORDER BY 2 FETCH FIRST 1 ROWS WITH TIES") ===
-      "SELECT g, d FROM ( SELECT *, rank() OVER (ORDER BY d NULLS LAST) AS __wt " +
+    sameRows(Dialect.rewriteFetchFirstWithTies(
+      "SELECT DISTINCT g, v * 2 AS d FROM t ORDER BY 2 FETCH FIRST 1 ROWS WITH TIES"), "SELECT g, d FROM ( SELECT *, rank() OVER (ORDER BY d NULLS LAST) AS __wt " +
         "FROM ( SELECT DISTINCT g, v * 2 AS d FROM t ) __wtd ) __wtq " +
         "WHERE __wt <= 1 ORDER BY d NULLS LAST")
-    assert(Dialect.rewriteFetchFirstWithTies(
-      "SELECT DISTINCT g, v * 2 AS d FROM t ORDER BY v * 2 DESC FETCH FIRST 1 ROWS WITH TIES") ===
-      "SELECT g, d FROM ( SELECT *, rank() OVER (ORDER BY d DESC NULLS FIRST) AS __wt " +
+    sameRows(Dialect.rewriteFetchFirstWithTies(
+      "SELECT DISTINCT g, v * 2 AS d FROM t ORDER BY v * 2 DESC FETCH FIRST 1 ROWS WITH TIES"), "SELECT g, d FROM ( SELECT *, rank() OVER (ORDER BY d DESC NULLS FIRST) AS __wt " +
         "FROM ( SELECT DISTINCT g, v * 2 AS d FROM t ) __wtd ) __wtq " +
         "WHERE __wt <= 1 ORDER BY d DESC NULLS FIRST")
     intercept[UnsupportedError](Dialect.rewriteFetchFirstWithTies(
       "SELECT DISTINCT g FROM t ORDER BY v + 1 FETCH FIRST 1 ROWS WITH TIES"))
     // T-SQL SELECT DISTINCT TOP n rides the same path; plain TOP keeps
     // the DISTINCT keyword ahead of the LIMIT placement
-    assert(Dialect.rewriteTsqlTop(
-      "SELECT DISTINCT TOP 3 WITH TIES g FROM t ORDER BY g") ===
-      "SELECT g FROM ( SELECT *, rank() OVER (ORDER BY g) AS __wt " +
+    sameRows(Dialect.rewriteTsqlTop(
+      "SELECT DISTINCT TOP 3 WITH TIES g FROM t ORDER BY g"), "SELECT g FROM ( SELECT *, rank() OVER (ORDER BY g) AS __wt " +
         "FROM ( SELECT DISTINCT g FROM t ) __wtd ) __wtq " +
         "WHERE __wt <= 3 ORDER BY g")
-    assert(Dialect.rewriteTsqlTop("SELECT DISTINCT TOP 3 g FROM t ORDER BY g") ===
-      "SELECT DISTINCT g FROM t ORDER BY g LIMIT 3 ")
+    sameRows(Dialect.rewriteTsqlTop("SELECT DISTINCT TOP 3 g FROM t ORDER BY g"), "SELECT DISTINCT g FROM t ORDER BY g LIMIT 3 ")
     // DISTINCT + zero count short-circuits over the DISTINCT subquery
-    assert(Dialect.rewriteFetchFirstWithTies(
-      "SELECT DISTINCT g FROM t ORDER BY g FETCH FIRST 0 ROWS WITH TIES") ===
-      "SELECT g FROM ( SELECT DISTINCT g FROM t ) __wtq LIMIT 0")
+    sameRows(Dialect.rewriteFetchFirstWithTies(
+      "SELECT DISTINCT g FROM t ORDER BY g FETCH FIRST 0 ROWS WITH TIES"), "SELECT g FROM ( SELECT DISTINCT g FROM t ) __wtq LIMIT 0")
     // a QUALIFY or DISTINCT ON keyword inside a comment does not
     // trigger those rewrites (r17 ADVICE — comment-unaware spans let
     // the nested path splice against comment text)
@@ -1668,20 +1657,16 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // DISTINCT ON followed by a FETCH/OFFSET tail (r16): the tail is
     // re-emitted after the rewrite for the chain's paging steps, instead
     // of being swallowed into the ORDER BY key list
-    assert(Dialect.rewriteDistinctOn(
-      "SELECT DISTINCT ON (g) g, v FROM t ORDER BY g, v FETCH FIRST 2 ROWS ONLY") ===
-      "SELECT g, v FROM ( SELECT g, v, " +
+    sameRows(Dialect.rewriteFetchFirst(Dialect.rewriteDistinctOn(
+      "SELECT DISTINCT ON (g) g, v FROM t ORDER BY g, v FETCH FIRST 2 ROWS ONLY")), "SELECT g, v FROM ( SELECT g, v, " +
         "row_number() OVER (PARTITION BY g ORDER BY g, v) AS __rn FROM t ) __don " +
-        "WHERE __rn = 1 ORDER BY g, v FETCH FIRST 2 ROWS ONLY")
-    // SUBQUERY/CTE-level QUALIFY and DISTINCT ON (r16 — raw Spark
-    // errors before): the innermost enclosing parenthesized statement
-    // is rewritten in place and the splice rescanned
-    assert(Dialect.rewriteQualify(
-      "WITH x AS (SELECT s, k FROM t QUALIFY rn = 1) SELECT s FROM x") ===
-      "WITH x AS (SELECT * FROM ( SELECT s, k FROM t ) __qualify WHERE rn = 1 ) SELECT s FROM x")
-    assert(Dialect.rewriteDistinctOn(
-      "WITH x AS (SELECT DISTINCT ON (g) g, v FROM t ORDER BY g, v) SELECT g FROM x") ===
-      "WITH x AS (SELECT g, v FROM ( SELECT g, v, " +
+        "WHERE __rn = 1 ORDER BY g, v LIMIT 2")
+    // SUBQUERY/CTE-level QUALIFY and DISTINCT ON: every SELECT scope is a
+    // site, at any depth
+    sameRows(Dialect.rewriteQualify(
+      "WITH x AS (SELECT s, k FROM t QUALIFY k = 1) SELECT s FROM x"), "WITH x AS (SELECT * FROM ( SELECT s, k FROM t ) __qualify WHERE k = 1 ) SELECT s FROM x")
+    sameRows(Dialect.rewriteDistinctOn(
+      "WITH x AS (SELECT DISTINCT ON (g) g, v FROM t ORDER BY g, v) SELECT g FROM x"), "WITH x AS (SELECT g, v FROM ( SELECT g, v, " +
         "row_number() OVER (PARTITION BY g ORDER BY g, v) AS __rn FROM t ) __don " +
         "WHERE __rn = 1 ORDER BY g, v) SELECT g FROM x")
     // membership null-placement pin (r16 review): a TRUNCATED statement
@@ -1765,9 +1750,9 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
       .contains("/*+ REPARTITION(3) */"))
     // …the hint rides the INNER select (where the scans/joins live) and
     // never leaks into the outer name projection
-    val hq = Dialect.rewriteQualify(
+    assert(Dialect.rewriteQualify(
       "SELECT /*+ BROADCAST(t) */ a, b FROM t QUALIFY row_number() OVER (ORDER BY a) = 1")
-    assert(hq.startsWith("SELECT a, b FROM ( SELECT /*+ BROADCAST(t) */ a, b , "))
+      .startsWith("SELECT /*+ BROADCAST(t) */ a, b, "))
     // only the SELECT-adjacent position is a live hint — elsewhere the
     // /*+ text is inert to Spark and blanked like any comment, so item
     // naming and key splitting stay clean (second r17 review pass)
@@ -1782,14 +1767,13 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // through to a raw parse error)
     assert(Dialect.rewriteFetchFirstWithTies(
       "SELECT /*+ REPARTITION(3) */ DISTINCT g FROM t ORDER BY g FETCH FIRST 1 ROWS WITH TIES")
-      .contains("( SELECT /*+ REPARTITION(3) */ DISTINCT g FROM t )"))
-    assert(Dialect.rewriteQualify(
-      "SELECT /*+ B(t) */ DISTINCT a FROM t QUALIFY row_number() OVER (ORDER BY c) = 1") ===
-      "SELECT DISTINCT a FROM ( SELECT /*+ B(t) */ a , " +
+      .startsWith("SELECT /*+ REPARTITION(3) */ DISTINCT g FROM t |> EXTEND"))
+    sameRows(Dialect.rewriteQualify(
+      "SELECT /*+ B(t) */ DISTINCT a FROM t QUALIFY row_number() OVER (ORDER BY c) = 1"), "SELECT DISTINCT a FROM ( SELECT /*+ B(t) */ a , " +
         "(row_number() OVER (ORDER BY c) = 1) AS __qual FROM t ) __qualify WHERE __qual ")
     assert(Dialect.rewriteDistinctOn(
       "SELECT /*+ B(t) */ DISTINCT ON (k) k, v FROM t ORDER BY k, v DESC")
-      .contains("( SELECT /*+ B(t) */ k, v, row_number()"))
+      .startsWith("SELECT /*+ B(t) */ k, v, row_number()"))
     // CONSECUTIVE hint blocks are all Spark-honored — all preserved and
     // carried (third r17 review pass: a single-block capture left the
     // second hint inside the first item)
@@ -1817,10 +1801,11 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
       "SELECT /*+ B(t) */ col FROM t WHERE note = 'x */ DISTINCT ON (y'") ===
       "SELECT /*+ B(t) */ col FROM t WHERE note = 'x */ DISTINCT ON (y'")
     // …and a doubly-parenthesized set-op arm is still detected as a set
-    // operation (named error without a session), not a raw arity error
-    assert(intercept[UnsupportedError](Dialect.rewriteFetchFirstWithTies(
-      "SELECT a FROM t EXCEPT ((SELECT a FROM u)) ORDER BY a FETCH FIRST 2 ROWS WITH TIES"))
-      .getMessage.contains("registered tables"))
+    // operation, ranked over the combined output
+    sameRows(Dialect.rewriteFetchFirstWithTies(
+      "SELECT a FROM t EXCEPT ((SELECT a FROM u WHERE a > 2)) ORDER BY a FETCH FIRST 2 ROWS WITH TIES"),
+      "SELECT a FROM (SELECT a, rank() OVER (ORDER BY a NULLS LAST) AS r FROM " +
+        "(SELECT a FROM t EXCEPT SELECT a FROM u WHERE a > 2)) WHERE r <= 2")
     // backticked identifiers named like clause keywords neither end the
     // key region nor start one (r16 second review)
     assert(Dialect.pinSortNulls(
@@ -2139,17 +2124,46 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(Dialect.forName("memsql") === Dialect.MySqlish)
   }
 
+  test("star forms rewrite without a session and return their twins' rows") {
+    initLog()
+    import spark.implicits._
+    val t = Seq((1L, "x", Some(10L)), (2L, "x", Some(30L)), (3L, "y", Some(30L)),
+      (4L, "y", None), (5L, "z", Some(20L))).toDF("k", "g", "v")
+    for ((d, sql, twin) <- Seq(
+        (Dialect.Snowflakeish,
+          "SELECT * FROM t QUALIFY row_number() OVER (PARTITION BY g ORDER BY k DESC) = 1",
+          "SELECT * EXCEPT (rn) FROM (SELECT *, row_number() OVER (PARTITION BY g ORDER BY k DESC) AS rn " +
+            "FROM t) WHERE rn = 1"),
+        (Dialect.Postgresish, "SELECT * FROM t ORDER BY v DESC FETCH FIRST 2 ROWS WITH TIES",
+          "SELECT * EXCEPT (r) FROM (SELECT *, rank() OVER (ORDER BY v DESC NULLS FIRST) AS r " +
+            "FROM t) WHERE r <= 2"),
+        (Dialect.DuckDbish, "SELECT DISTINCT ON (g) * FROM t ORDER BY g, v DESC",
+          "SELECT * EXCEPT (rn) FROM (SELECT *, row_number() OVER (PARTITION BY g " +
+            "ORDER BY v DESC NULLS LAST) AS rn FROM t) WHERE rn = 1"),
+        (Dialect.ClickHouseIsh, "SELECT * FROM t ORDER BY v LIMIT 1 BY g",
+          "SELECT * EXCEPT (rn) FROM (SELECT *, row_number() OVER (PARTITION BY g " +
+            "ORDER BY v NULLS LAST) AS rn FROM t) WHERE rn = 1"),
+        (Dialect.DuckDbish, "SELECT * REPLACE (v * 2 AS v) FROM (SELECT k, g, v FROM t WHERE k > 1) s",
+          "SELECT k, g, v * 2 AS v FROM t WHERE k > 1"))) {
+      assert(d.rewrite(null, sql).nonEmpty, s"$d: $sql")
+      val out = Engine.execute(spark, sql, Map("t" -> t), d)
+      assert(out.columns.toSeq === spark.sql(twin).columns.toSeq, s"$d: $sql")
+      assert(out.collect().map(_.toString).sorted.toSeq ===
+        spark.sql(twin).collect().map(_.toString).sorted.toSeq, s"$d: $sql")
+    }
+  }
+
   test("* REPLACE trigger requires select-list star position") {
     // multiplication by the replace() STRING FUNCTION must pass through
     // untouched — the rewriter never needs the session when it does not
     // fire, so null proves the no-op
     val mul = "SELECT price * replace(name, 'a', 'b') AS x FROM t"
-    assert(Dialect.rewriteStarReplace(null, mul) === mul)
+    assert(Dialect.rewriteStarReplace(mul) === mul)
     val mulParen = "SELECT (qty * REPLACE(s, 'x', 'y')) AS x FROM t"
-    assert(Dialect.rewriteStarReplace(null, mulParen) === mulParen)
+    assert(Dialect.rewriteStarReplace(mulParen) === mulParen)
     // literal trigger text stays untouched too
     val lit = "SELECT '* REPLACE (v AS v)' AS s FROM t"
-    assert(Dialect.rewriteStarReplace(null, lit) === lit)
+    assert(Dialect.rewriteStarReplace(lit) === lit)
     // a qualified star whose QUALIFIER is not in select-list position is
     // still multiplication: `price * q.* REPLACE…` cannot arise, but
     // `x.y * REPLACE(s, 'a', 'b')` (qualified COLUMN times the string
@@ -2157,7 +2171,7 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // is the qualifier `x`, whose own context (`SELECT a,`? no — after
     // `=`) is not star position
     val qualMul = "SELECT k FROM t WHERE v = x.y * REPLACE(s, 'a', 'b')"
-    assert(Dialect.rewriteStarReplace(null, qualMul) === qualMul)
+    assert(Dialect.rewriteStarReplace(qualMul) === qualMul)
   }
 
   test("aggregate FILTER (WHERE …) clause rewrite") {
@@ -2235,11 +2249,22 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 }
 
-/** Live-session cases for the qualified-star `alias.* REPLACE` form —
-  * separate from [[DialectPropertySpec]] because star expansion resolves
-  * the FROM table's schema from the session catalog.
+/** Row checks for the star REPLACE rewrite (`* REPLACE` → `|> SET`):
+  * each rewrite returns the rows and column names of a hand-written
+  * twin. The checks that need a schema (an unknown replaced or excluded
+  * column) are Spark's analyzer's, so they surface from
+  * [[Engine.execute]] as [[ExecuteError]]s.
   */
 class QualifiedStarReplaceSpec extends SparkSpec {
+
+  private def same(rewritten: String, twin: String): Unit = {
+    def run(q: String) = {
+      val df = spark.sql(q)
+      (df.columns.toSeq, df.collect().map(_.toString).sorted.toSeq)
+    }
+    assert(run(rewritten) === run(twin), s"\nrewrite: $rewritten\ntwin:    $twin")
+  }
+  private def duck(sql: String) = Engine.execute(spark, sql, dialect = Dialect.DuckDbish)
 
   test("qualified star alias.* REPLACE resolves or fails loudly") {
     initLog()
@@ -2247,53 +2272,51 @@ class QualifiedStarReplaceSpec extends SparkSpec {
     Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("k", "v", "s")
       .createOrReplaceTempView("star_repl_t")
     // alias form
-    val out1 = Dialect.rewriteStarReplace(spark,
-      "SELECT t.* REPLACE (v * 2 AS v) FROM star_repl_t t ORDER BY k")
-    assert(out1 === "SELECT `k`, (v * 2) AS `v`, `s` FROM star_repl_t t ORDER BY k")
+    same(Dialect.rewriteStarReplace(
+      "SELECT t.* REPLACE (v * 2 AS v) FROM star_repl_t t ORDER BY k"),
+      "SELECT `k`, (v * 2) AS `v`, `s` FROM star_repl_t t ORDER BY k")
     // bare table name as the qualifier (no alias declared)
-    val out2 = Dialect.rewriteStarReplace(spark,
-      "SELECT star_repl_t.* REPLACE (upper(s) AS s) FROM star_repl_t")
-    assert(out2 === "SELECT `k`, `v`, (upper(s)) AS `s` FROM star_repl_t")
+    same(Dialect.rewriteStarReplace(
+      "SELECT star_repl_t.* REPLACE (upper(s) AS s) FROM star_repl_t"),
+      "SELECT `k`, `v`, (upper(s)) AS `s` FROM star_repl_t")
     // unresolvable qualifier names the construct in the error
-    val err = intercept[UnsupportedError](Dialect.rewriteStarReplace(spark,
+    val err = intercept[UnsupportedError](Dialect.rewriteStarReplace(
       "SELECT zz.* REPLACE (v * 2 AS v) FROM star_repl_t t"))
     assert(err.getMessage.contains("qualified star zz.*"))
     // an ALIASED table's original name is not addressable (DuckDB binder
     // semantics) — fails loudly too
-    val err2 = intercept[UnsupportedError](Dialect.rewriteStarReplace(spark,
+    val err2 = intercept[UnsupportedError](Dialect.rewriteStarReplace(
       "SELECT star_repl_t.* REPLACE (v * 2 AS v) FROM star_repl_t t"))
     assert(err2.getMessage.contains("does not resolve"))
-    // unqualified star in the same session still expands (span math
-    // unchanged when no qualifier precedes)
-    val out3 = Dialect.rewriteStarReplace(spark,
-      "SELECT * REPLACE (v + 1 AS v) FROM star_repl_t")
-    assert(out3 === "SELECT `k`, (v + 1) AS `v`, `s` FROM star_repl_t")
-    // derived-table FROM (r18 — a named error before): the star expands
-    // from the ANALYZED subquery schema, replacement in position
-    val out4 = Dialect.rewriteStarReplace(spark,
-      "SELECT * REPLACE (v * 10 AS v) FROM (SELECT k, v FROM star_repl_t WHERE k = 1) d ORDER BY k")
-    assert(out4 === "SELECT `k`, (v * 10) AS `v` " +
-      "FROM (SELECT k, v FROM star_repl_t WHERE k = 1) d ORDER BY k")
+    // unqualified star
+    same(Dialect.rewriteStarReplace(
+      "SELECT * REPLACE (v + 1 AS v) FROM star_repl_t"),
+      "SELECT `k`, (v + 1) AS `v`, `s` FROM star_repl_t")
+    // derived-table FROM: the replacement stays in position
+    same(Dialect.rewriteStarReplace(
+      "SELECT * REPLACE (v * 10 AS v) FROM (SELECT k, v FROM star_repl_t WHERE k = 1) d ORDER BY k"),
+      "SELECT `k`, (v * 10) AS `v` " +
+        "FROM (SELECT k, v FROM star_repl_t WHERE k = 1) d ORDER BY k")
     // qualified star over the derived table's alias
-    val out5 = Dialect.rewriteStarReplace(spark,
-      "SELECT d.* REPLACE (k + 1 AS k) FROM (SELECT k, s FROM star_repl_t) d")
-    assert(out5 === "SELECT (k + 1) AS `k`, `s` FROM (SELECT k, s FROM star_repl_t) d")
+    same(Dialect.rewriteStarReplace(
+      "SELECT d.* REPLACE (k + 1 AS k) FROM (SELECT k, s FROM star_repl_t) d"),
+      "SELECT (k + 1) AS `k`, `s` FROM (SELECT k, s FROM star_repl_t) d")
     // qualifier that is not the derived alias fails loudly
-    val err3 = intercept[UnsupportedError](Dialect.rewriteStarReplace(spark,
+    val err3 = intercept[UnsupportedError](Dialect.rewriteStarReplace(
       "SELECT zz.* REPLACE (k + 1 AS k) FROM (SELECT k FROM star_repl_t) d"))
     assert(err3.getMessage.contains("does not resolve"))
     // a JOIN after the derived table still fails loudly (the star would
     // cover both sides in DuckDB)
-    intercept[UnsupportedError](Dialect.rewriteStarReplace(spark,
+    intercept[UnsupportedError](Dialect.rewriteStarReplace(
       "SELECT * REPLACE (k + 1 AS k) FROM (SELECT k FROM star_repl_t) d " +
         "JOIN star_repl_t u ON d.k = u.k"))
-    // a replacement naming a column the subquery lacks fails loudly
-    intercept[UnsupportedError](Dialect.rewriteStarReplace(spark,
+    // a replacement naming a column the subquery lacks: Spark's analyzer
+    intercept[ExecuteError](duck(
       "SELECT * REPLACE (v + 1 AS v) FROM (SELECT k FROM star_repl_t) d"))
-    // a ')' inside a comment within the derived subquery no longer ends
-    // the paren match early (r19, from ADVICE: opaque spans)
-    assert(Dialect.rewriteStarReplace(spark,
-      "SELECT * REPLACE (v + 1 AS v) FROM (SELECT k, v /* ) */ FROM star_repl_t) d") ===
+    // a ')' inside a comment within the derived subquery does not end
+    // the paren match early
+    same(Dialect.rewriteStarReplace(
+      "SELECT * REPLACE (v + 1 AS v) FROM (SELECT k, v /* ) */ FROM star_repl_t) d"),
       "SELECT `k`, (v + 1) AS `v` FROM (SELECT k, v /* ) */ FROM star_repl_t) d")
   }
 
@@ -2303,62 +2326,59 @@ class QualifiedStarReplaceSpec extends SparkSpec {
     Seq((1L, 10L, "a", 5L), (2L, 20L, "b", 6L)).toDF("k", "v", "s", "w")
       .createOrReplaceTempView("star_exrep_t")
     // paren EXCLUDE list, then REPLACE over the KEPT columns
-    assert(Dialect.rewriteStarReplace(spark,
-      "SELECT * EXCLUDE (s, w) REPLACE (v * 2 AS v) FROM star_exrep_t") ===
+    same(Dialect.rewriteStarReplace(
+      "SELECT * EXCLUDE (s, w) REPLACE (v * 2 AS v) FROM star_exrep_t"),
       "SELECT `k`, (v * 2) AS `v` FROM star_exrep_t")
     // bare single-column EXCLUDE spelling
-    assert(Dialect.rewriteStarReplace(spark,
-      "SELECT * EXCLUDE w REPLACE (upper(s) AS s) FROM star_exrep_t") ===
+    same(Dialect.rewriteStarReplace(
+      "SELECT * EXCLUDE w REPLACE (upper(s) AS s) FROM star_exrep_t"),
       "SELECT `k`, `v`, (upper(s)) AS `s` FROM star_exrep_t")
     // the EXCEPT keyword spelling ([[rewriteExclude]]-normalized or
     // BigQuery-native) composes the same way
-    assert(Dialect.rewriteStarReplace(spark,
-      "SELECT * EXCEPT (s) REPLACE (v + 1 AS v) FROM star_exrep_t") ===
+    same(Dialect.rewriteStarReplace(
+      "SELECT * EXCEPT (s) REPLACE (v + 1 AS v) FROM star_exrep_t"),
       "SELECT `k`, (v + 1) AS `v`, `w` FROM star_exrep_t")
     // …and through the DuckDB chain end-to-end (rewriteExclude first)
-    assert(Dialect.DuckDbish.rewrite(spark,
-      "SELECT * EXCLUDE (s, w) REPLACE (v * 2 AS v) FROM star_exrep_t", Map.empty)
-      .startsWith("SELECT `k`, (v * 2) AS `v` FROM star_exrep_t"))
+    same(Dialect.DuckDbish.rewrite(spark,
+      "SELECT * EXCLUDE (s, w) REPLACE (v * 2 AS v) FROM star_exrep_t", Map.empty),
+      "SELECT `k`, (v * 2) AS `v` FROM star_exrep_t")
     // replacing an EXCLUDED column is a named error (DuckDB's own order:
     // the column is gone before REPLACE runs)
-    assert(intercept[UnsupportedError](Dialect.rewriteStarReplace(spark,
+    assert(intercept[UnsupportedError](Dialect.rewriteStarReplace(
       "SELECT * EXCLUDE (v) REPLACE (v * 2 AS v) FROM star_exrep_t"))
       .getMessage.contains("EXCLUDE list already drops"))
-    // excluding a column the relation lacks is a named error
-    assert(intercept[UnsupportedError](Dialect.rewriteStarReplace(spark,
+    // excluding a column the relation lacks: Spark's analyzer
+    intercept[ExecuteError](duck(
       "SELECT * EXCLUDE (zz) REPLACE (v * 2 AS v) FROM star_exrep_t"))
-      .getMessage.contains("EXCLUDE names column zz"))
-    // excluding EVERY column leaves the REPLACE target nowhere to bind —
-    // a named error either way (missing target or already-dropped target)
-    intercept[UnsupportedError](Dialect.rewriteStarReplace(spark,
+    // excluding EVERY column leaves the REPLACE target nowhere to bind
+    intercept[ExecuteError](duck(
       "SELECT * EXCLUDE (k, v, s) REPLACE (w + 1 AS w) FROM " +
         "(SELECT k, v, s FROM star_exrep_t) d"))
     // the combined clause composes with a derived FROM
-    assert(Dialect.rewriteStarReplace(spark,
+    same(Dialect.rewriteStarReplace(
       "SELECT * EXCLUDE (s) REPLACE (k + 1 AS k) FROM " +
-        "(SELECT k, s, w FROM star_exrep_t) d") ===
+        "(SELECT k, s, w FROM star_exrep_t) d"),
       "SELECT (k + 1) AS `k`, `w` FROM (SELECT k, s, w FROM star_exrep_t) d")
     // a twice-excluded column raises DuckDB's duplicate-entry binder
-    // error instead of silently deduping (r19 review)
-    assert(intercept[UnsupportedError](Dialect.rewriteStarReplace(spark,
+    // error instead of silently deduping
+    assert(intercept[UnsupportedError](Dialect.rewriteStarReplace(
       "SELECT * EXCLUDE (s, s) REPLACE (v * 2 AS v) FROM star_exrep_t"))
       .getMessage.contains("more than once"))
     // an empty EXCLUDE list / blank entry raises (DuckDB syntax error)
     // instead of silently degrading to a plain * REPLACE
-    assert(intercept[UnsupportedError](Dialect.rewriteStarReplace(spark,
+    assert(intercept[UnsupportedError](Dialect.rewriteStarReplace(
       "SELECT * EXCLUDE () REPLACE (v * 2 AS v) FROM star_exrep_t"))
       .getMessage.contains("empty entry"))
-    intercept[UnsupportedError](Dialect.rewriteStarReplace(spark,
+    intercept[UnsupportedError](Dialect.rewriteStarReplace(
       "SELECT * EXCLUDE (s,) REPLACE (v * 2 AS v) FROM star_exrep_t"))
-    // comment opacity across the whole rewrite (r19 review — the fix
-    // had landed on the derived-FROM paren only): a ')' inside a
-    // comment in the REPLACE list, and a FROM inside a comment before
-    // the real FROM, neither corrupts the rewrite
-    assert(Dialect.rewriteStarReplace(spark,
-      "SELECT * REPLACE (v + 1 /* ) */ AS v) FROM star_exrep_t") ===
+    // comment opacity across the whole rewrite: a ')' inside a comment
+    // in the REPLACE list, and a FROM inside a comment before the real
+    // FROM, neither corrupts the rewrite
+    same(Dialect.rewriteStarReplace(
+      "SELECT * REPLACE (v + 1 /* ) */ AS v) FROM star_exrep_t"),
       "SELECT `k`, (v + 1 /* ) */) AS `v`, `s`, `w` FROM star_exrep_t")
-    assert(Dialect.rewriteStarReplace(spark,
-      "SELECT * REPLACE (v + 1 AS v) /* FROM zz */ FROM star_exrep_t") ===
+    same(Dialect.rewriteStarReplace(
+      "SELECT * REPLACE (v + 1 AS v) /* FROM zz */ FROM star_exrep_t"),
       "SELECT `k`, (v + 1) AS `v`, `s`, `w` /* FROM zz */ FROM star_exrep_t")
   }
 }
