@@ -11,6 +11,16 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
+  /** The directory, one per process, under which queries stage the inputs
+    * they rewrite with `mode("overwrite")` each time they are built (and
+    * their oracles read back), so two processes building the queries at
+    * once never overwrite each other's files. It outlives the process: an
+    * oracle may read the staged files after the process that wrote them
+    * has exited.
+    */
+  lazy val stageRoot: String =
+    java.nio.file.Files.createTempDirectory("graft_stage_").toString
+
   /** CSV reader matching the reference's READ_CSV semantics: header row,
     * optional delimiter, dtypes from an optional schema (schema wins over
     * inference — the reference pulls dtypes from its schema mapping).

@@ -203,8 +203,6 @@ object DialectQueries {
            |  epoch(o_orderdate)::BIGINT AS epoch_s
            |FROM orders ORDER BY okey LIMIT 150""".stripMargin))
 
-  private val stageDir = "/tmp/graft_stage"
-
   /** READ_CSV with a *declared schema* for its alias (reference
     * executor.py:303-305): the schema reaches the reader via
     * `Engine.execute(schemas = ...)` — typed read, no inference scan. The
@@ -216,7 +214,7 @@ object DialectQueries {
     */
   val readCsvTyped = OpQ("op_dialect_read_csv_typed",
     (s, d) => {
-      val path = s"$stageDir/customer_typed_csv_${new java.io.File(d).getName}"
+      val path = s"${Sources.stageRoot}/customer_typed_csv_${new java.io.File(d).getName}"
       Sources.writeCsv(
         Tables.load(s, d, "customer")
           .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
@@ -1688,7 +1686,7 @@ object DialectQueries {
            |ORDER BY o_orderkey, k""".stripMargin))
 
   /** Snowflake `ARRAY_AGG(x) WITHIN GROUP (ORDER BY …)` ([[Dialect]]
-    * rewriteWithinGroupArrayAgg → rewritePgArrayAgg, r14): the
+    * the WITHIN GROUP spelling of the ArrayAgg entry, r14): the
     * ordered-set spelling converts to the inline form and then the
     * struct collect with SNOWFLAKE semantics — nulls sort highest
     * (first under DESC) and NULL VALUES are silently dropped from the
@@ -1726,7 +1724,7 @@ object DialectQueries {
            |GROUP BY o_orderpriority ORDER BY prio""".stripMargin))
 
   /** Trino inline-ordered `array_agg(x ORDER BY k)` ([[Dialect]]
-    * rewritePgArrayAgg wired into the Trino pipeline, r14): Trino
+    * the ArrayAgg entry in the Trino table, r14): Trino
     * keeps NULL values (its documented array_agg quirk) and sorts null
     * keys NULLS LAST regardless of direction — Trino's documented
     * default (r16 second review: previously mis-pinned to the Postgres
@@ -2866,7 +2864,7 @@ object DialectQueries {
            |FROM orders WHERE o_orderkey <= 200
            |ORDER BY o_orderkey, x""".stripMargin))
 
-  /** T-SQL `CROSS APPLY STRING_SPLIT` ([[Dialect]] rewriteTsqlApply):
+  /** T-SQL `CROSS APPLY STRING_SPLIT` ([[Dialect]] tsqlApply):
     * the table-valued split idiom → LATERAL VIEW explode with the
     * T-SQL-fixed `value` column name; the separator is literal (regex
     * metachars \Q-quoted by the shared string_split rewrite).
@@ -3210,7 +3208,7 @@ object DialectQueries {
            |ORDER BY o.o_orderkey""".stripMargin))
 
   /** Postgres `ARRAY_AGG(x ORDER BY k1 [, k2] [DESC])` ([[Dialect]]
-    * rewritePgArrayAgg, r13/r14): inline-ordered array aggregation via
+    * the ArrayAgg entry, r13/r14): inline-ordered array aggregation via
     * the sort-key struct collect (each key's leading is-null bool
     * reproduces POSTGRES's default NULL placement — last on ASC, FIRST
     * on DESC; NULL VALUES survive inside the struct where bare

@@ -918,8 +918,6 @@ object ExtraQueries {
            |  median(FLOOR(l_quantity)) AS med
            |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin))
 
-  private val stageDir = "/tmp/graft_stage"
-
   /** CSV sink → CSV source round-trip. The query stages the region table
     * as pipe-delimited CSV, reads it back with an explicit schema (the
     * reference's READ_CSV dtype path), and the oracle reads the very same
@@ -928,15 +926,15 @@ object ExtraQueries {
     */
   val sourceCsvRoundtrip = OpQ("op_source_csv_roundtrip",
     (s, d) => {
-      val path = s"$stageDir/region_csv"
+      val path = s"${Sources.stageRoot}/region_csv"
       Sources.writeCsv(Tables.load(s, d, "region").coalesce(1), path, delimiter = "|")
       val schema = StructType(Seq(
         StructField("r_regionkey", LongType), StructField("r_name", StringType)))
       Sources.csv(s, path, delimiter = "|", schema = Some(schema))
         .orderBy(col("r_regionkey"))
     },
-    Some("""SELECT CAST(r_regionkey AS BIGINT) AS r_regionkey, r_name
-           |FROM read_csv_auto('/tmp/graft_stage/region_csv/*.csv', header=true, delim='|')
+    Some(s"""SELECT CAST(r_regionkey AS BIGINT) AS r_regionkey, r_name
+           |FROM read_csv_auto('${Sources.stageRoot}/region_csv/*.csv', header=true, delim='|')
            |ORDER BY r_regionkey""".stripMargin))
 
   /** JSON-lines sink → source round-trip (growth beyond the reference's
@@ -944,16 +942,16 @@ object ExtraQueries {
     */
   val sourceJsonRoundtrip = OpQ("op_source_json_roundtrip",
     (s, d) => {
-      val path = s"$stageDir/nation_json"
+      val path = s"${Sources.stageRoot}/nation_json"
       Sources.writeJson(Tables.load(s, d, "nation").coalesce(1), path)
       Sources.json(s, path)
         .select(col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
           col("n_regionkey").cast("long").as("n_regionkey"))
         .orderBy(col("n_nationkey"))
     },
-    Some("""SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
+    Some(s"""SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
            |  CAST(n_regionkey AS BIGINT) AS n_regionkey
-           |FROM read_json_auto('/tmp/graft_stage/nation_json/*.json')
+           |FROM read_json_auto('${Sources.stageRoot}/nation_json/*.json')
            |ORDER BY n_nationkey""".stripMargin))
 
   /** Partitioned parquet sink → source with partition pruning: write
@@ -968,7 +966,7 @@ object ExtraQueries {
     */
   val sourcePartitionedParquet = OpQ("op_source_partitioned_parquet",
     (s, d) => {
-      val path = s"$stageDir/orders_part_${new java.io.File(d).getName}"
+      val path = s"${Sources.stageRoot}/orders_part_${new java.io.File(d).getName}"
       Sources.writeParquet(
         Tables.load(s, d, "orders").select(col("o_orderkey"), col("o_custkey"),
           col("o_orderpriority")),
@@ -998,7 +996,7 @@ object ExtraQueries {
       // keyed by SF: documents is SF-dependent, and an interleaved run at
       // another SF overwriting the stage between this run's write and read
       // would flake the gate (same contract as orders_part above)
-      val path = s"$stageDir/documents_txt_${new java.io.File(d).getName}"
+      val path = s"${Sources.stageRoot}/documents_txt_${new java.io.File(d).getName}"
       Sources.writeText(
         Tables.load(s, d, "documents").select(col("text")), path)
       Sources.text(s, path).orderBy(col("value"))
@@ -1008,7 +1006,7 @@ object ExtraQueries {
   val sourceOrcRoundtrip = OpQ("op_source_orc_roundtrip",
     (s, d) => {
       // keyed by SF — supplier row count varies with scale factor
-      val path = s"$stageDir/supplier_orc_${new java.io.File(d).getName}"
+      val path = s"${Sources.stageRoot}/supplier_orc_${new java.io.File(d).getName}"
       Sources.writeOrc(
         Tables.load(s, d, "supplier")
           .select(col("s_suppkey"), col("s_name"), col("s_nationkey"), col("s_acctbal")),
@@ -1503,7 +1501,7 @@ object ExtraQueries {
   val sourceXmlRoundtrip = OpQ("op_source_xml_roundtrip",
     (s, d) => {
       // keyed by SF — supplier row count varies with scale factor
-      val path = s"$stageDir/supplier_xml_${new java.io.File(d).getName}"
+      val path = s"${Sources.stageRoot}/supplier_xml_${new java.io.File(d).getName}"
       val src = Tables.load(s, d, "supplier")
         .select(col("s_suppkey"), col("s_name"), col("s_nationkey"), col("s_acctbal"))
       Sources.writeXml(src, path, rowTag = "supplier")
@@ -1726,7 +1724,7 @@ object ExtraQueries {
         if (!s.catalog.tableExists(tbl)) {
           df.repartition(8, col(key))
             .write.mode("overwrite").format("parquet")
-            .option("path", s"$stageDir/bucketed_${name}_$tag")
+            .option("path", s"${Sources.stageRoot}/bucketed_${name}_$tag")
             .bucketBy(8, key).sortBy(key)
             .saveAsTable(tbl)
         }
@@ -1769,13 +1767,13 @@ object ExtraQueries {
   val joinDpp = OpQ("op_join_dpp",
     (s, d) => {
       val tag = new java.io.File(d).getName.replace('.', '_')
-      val factPath = s"$stageDir/dpp_orders_$tag"
+      val factPath = s"${Sources.stageRoot}/dpp_orders_$tag"
       if (!new java.io.File(factPath).exists())
         Sources.writeParquet(
           Tables.load(s, d, "orders").select(col("o_orderkey"),
             col("o_totalprice"), col("o_orderpriority")),
           factPath, partitionBy = Seq("o_orderpriority"))
-      val dimPath = s"$stageDir/dpp_pri_$tag"
+      val dimPath = s"${Sources.stageRoot}/dpp_pri_$tag"
       if (!new java.io.File(dimPath).exists())
         Sources.writeParquet(
           Tables.load(s, d, "orders").select(col("o_orderpriority")).distinct()

@@ -63,6 +63,11 @@ class DialectPropertySpec extends SparkSpec {
     val l = Gen.listOfN(2, litContent).apply(Gen.Parameters.default, Seed(seed)).get
     (l(0), l(1))
   }
+  /** The array_agg entry's parts alone, as the dialect tables combine them. */
+  private def pgArrayAgg(s: String, descNullsLast: Boolean, skipNullValues: Boolean = false) =
+    new Dialect.ArrayAgg(Some(Dialect.Order(descNullsLast, skipNullValues)))(s)
+  private val keepNullArrayAgg = new Dialect.ArrayAgg(None, keepNulls = true)
+  private val withinGroupArrayAgg = new Dialect.ArrayAgg(None, withinGroup = true)
   private val ansiDialects = Seq(Dialect.DuckDbish, Dialect.Trinoish,
     Dialect.Postgresish, Dialect.SqliteIsh)
 
@@ -130,11 +135,11 @@ class DialectPropertySpec extends SparkSpec {
     }
   }
 
-  test("renameFunctions preserves every literal byte-for-byte") {
+  test("call-table renames preserve every literal byte-for-byte") {
     (1L to 200L).foreach { seed =>
       val (sql, _, lits) = sample(seed)
-      val out = Dialect.renameFunctions(Dialect.escapeBackslashLiterals(sql),
-        Map("len" -> "length", "epoch" -> "ep"))
+      val out = Dialect.Table(Nil, renames = Map("len" -> "length", "epoch" -> "ep"))(
+        Dialect.escapeBackslashLiterals(sql))
       assert(sparkLiteralContents(out) === lits, s"seed=$seed sql=<$sql> out=<$out>")
     }
   }
@@ -238,11 +243,11 @@ class DialectPropertySpec extends SparkSpec {
       "SELECT sum(x) FILTER (WHERE c) OVER w AS v FROM t WINDOW w AS (PARTITION BY g)") ===
       "SELECT sum(CASE WHEN c THEN x END) OVER w AS v FROM t WINDOW w AS (PARTITION BY g)")
     // a bare array_agg inside a declined ordered call is still rewritten
-    assert(Dialect.rewriteKeepNullArrayAgg(
+    assert(keepNullArrayAgg(
       "SELECT array_agg(x ORDER BY (SELECT array_agg(y) FROM u)) AS v FROM t") ===
       "SELECT array_agg(x ORDER BY (SELECT transform(collect_list(named_struct('__v', y)), " +
         "s -> s.__v) FROM u)) AS v FROM t")
-    assert(Dialect.rewriteKeepNullArrayAgg(
+    assert(keepNullArrayAgg(
       "SELECT array_agg((SELECT array_agg(y) FROM u) ORDER BY k) AS v FROM t") ===
       "SELECT array_agg((SELECT transform(collect_list(named_struct('__v', y)), " +
         "s -> s.__v) FROM u) ORDER BY k) AS v FROM t")
@@ -260,25 +265,25 @@ class DialectPropertySpec extends SparkSpec {
         "LATERAL VIEW posexplode(t.c) g AS index, value")
   }
 
-  test("renameFunctions and renameWords apply every rename at once, longest name first") {
-    assert(Dialect.renameFunctions("a(x), b(y)", Map("a" -> "b", "b" -> "c")) ===
+  test("call-table and word renames apply at once, longest first") {
+    assert(Dialect.Table(Nil, renames = Map("a" -> "b", "b" -> "c"))("a(x), b(y)") ===
       "b(x), c(y)")
-    assert(Dialect.renameWords("a x, b y", Map("A" -> "b", "b" -> "c")) === "b x, c y")
-    assert(Dialect.renameFunctions("list_value(1), LIST (x), 'list(y)'",
-      Map("list" -> "array_agg", "list_value" -> "array")) ===
+    assert(Dialect.Table(Nil, words = Map("A" -> "b", "b" -> "c"))("a x, b y") === "b x, c y")
+    assert(Dialect.Table(Nil, renames = Map("list" -> "array_agg", "list_value" -> "array"))(
+      "list_value(1), LIST (x), 'list(y)'") ===
       "array(1), array_agg(x), 'list(y)'")
   }
 
   test("call passes rewrite nested calls of the same name inside-out") {
-    assert(Dialect.rewriteTsqlConvert("CONVERT(BIGINT, CONVERT(VARCHAR(10), x))") ===
+    assert(Dialect.tsqlConvert("CONVERT(BIGINT, CONVERT(VARCHAR(10), x))") ===
       "CAST(CAST(x AS STRING) AS BIGINT)")
-    assert(Dialect.rewriteOracleDecode("DECODE(DECODE(a, 1, 2), 2, 'y', 'n')") ===
+    assert(Dialect.oracleDecode("DECODE(DECODE(a, 1, 2), 2, 'y', 'n')") ===
       "CASE WHEN (CASE WHEN (a) <=> (1) THEN (2) END) <=> (2) THEN ('y') ELSE ('n') END")
-    assert(Dialect.rewriteExasolTrunc("TRUNC(TRUNC(d, 'MM'), 'YYYY')") ===
+    assert(Dialect.exasolTrunc("TRUNC(TRUNC(d, 'MM'), 'YYYY')") ===
       "trunc(trunc(d, 'MONTH'), 'YEAR')")
-    assert(Dialect.rewriteMysqlDateFns("DATE_FORMAT(STR_TO_DATE(s, '%Y-%m-%d'), '%m')") ===
+    assert(Dialect.mysqlDateFns("DATE_FORMAT(STR_TO_DATE(s, '%Y-%m-%d'), '%m')") ===
       "date_format(to_date(s, 'yyyy-MM-dd'), 'MM')")
-    assert(Dialect.rewriteChArrayHof("arrayMap(x -> arrayMap(y -> y, x), a)") ===
+    assert(Dialect.chArrayHof("arrayMap(x -> arrayMap(y -> y, x), a)") ===
       "transform(a, x -> transform(x, y -> y))")
   }
 
@@ -299,18 +304,18 @@ class DialectPropertySpec extends SparkSpec {
   }
 
   test("rewritePgExtractEpoch rewrites only the EPOCH field") {
-    assert(Dialect.rewritePgExtractEpoch("EXTRACT(EPOCH FROM ts)") ===
+    assert(Dialect.pgExtractEpoch("EXTRACT(EPOCH FROM ts)") ===
       "unix_timestamp(ts)")
-    assert(Dialect.rewritePgExtractEpoch("extract(year FROM ts)") ===
+    assert(Dialect.pgExtractEpoch("extract(year FROM ts)") ===
       "extract(year FROM ts)")
-    assert(Dialect.rewritePgExtractEpoch("EXTRACT(epoch from f(a, b))") ===
+    assert(Dialect.pgExtractEpoch("EXTRACT(epoch from f(a, b))") ===
       "unix_timestamp(f(a, b))")
   }
 
   test("rewriteSqliteStrftime: format-first arg order, non-literal raises") {
-    assert(Dialect.rewriteSqliteStrftime("strftime('%Y-%m', d)") ===
+    assert(Dialect.sqliteStrftime("strftime('%Y-%m', d)") ===
       "date_format(d, 'yyyy-MM')")
-    intercept[UnsupportedError](Dialect.rewriteSqliteStrftime("strftime(d, fmt)"))
+    intercept[UnsupportedError](Dialect.sqliteStrftime("strftime(d, fmt)"))
   }
 
   test("rewriteSqliteGlob: wildcards anchored, regex metas quoted, literals safe") {
@@ -327,9 +332,9 @@ class DialectPropertySpec extends SparkSpec {
   }
 
   test("rewritePgToChar: literal format translated, non-literal raises") {
-    assert(Dialect.rewritePgToChar("TO_CHAR(d, 'YYYY-MM')") ===
+    assert(Dialect.pgToChar("TO_CHAR(d, 'YYYY-MM')") ===
       "date_format(d, 'yyyy-MM')")
-    intercept[UnsupportedError](Dialect.rewritePgToChar("TO_CHAR(d, fmtcol)"))
+    intercept[UnsupportedError](Dialect.pgToChar("TO_CHAR(d, fmtcol)"))
   }
 
   test("rewriteTsqlTop: LIMIT lands at the SELECT's scope end") {
@@ -541,21 +546,21 @@ class DialectPropertySpec extends SparkSpec {
   }
 
   test("rewriteBracketIdents: brackets to backticks, literals safe") {
-    assert(Dialect.rewriteBracketIdents("SELECT [a b], [c] FROM [t 1]") ===
+    assert(Dialect.prelude("SELECT [a b], [c] FROM [t 1]", true, false, '[') ===
       "SELECT `a b`, `c` FROM `t 1`")
-    assert(Dialect.rewriteBracketIdents("SELECT '[not ident]' FROM t") ===
+    assert(Dialect.prelude("SELECT '[not ident]' FROM t", true, false, '[') ===
       "SELECT '[not ident]' FROM t")
   }
 
   test("rewriteTsqlConvert: type mapped, style argument raises") {
-    assert(Dialect.rewriteTsqlConvert("CONVERT(VARCHAR(10), d)") ===
+    assert(Dialect.tsqlConvert("CONVERT(VARCHAR(10), d)") ===
       "CAST(d AS STRING)")
-    assert(Dialect.rewriteTsqlConvert("CONVERT(DATETIME, d)") ===
+    assert(Dialect.tsqlConvert("CONVERT(DATETIME, d)") ===
       "CAST(d AS TIMESTAMP)")
-    assert(Dialect.rewriteTsqlConvert("CONVERT(NUMERIC(12,2), x)") ===
+    assert(Dialect.tsqlConvert("CONVERT(NUMERIC(12,2), x)") ===
       "CAST(x AS DECIMAL(12,2))")
-    intercept[UnsupportedError](Dialect.rewriteTsqlConvert("CONVERT(VARCHAR, d, 112)"))
-    intercept[UnsupportedError](Dialect.rewriteTsqlConvert("CONVERT(XML, d)"))
+    intercept[UnsupportedError](Dialect.tsqlConvert("CONVERT(VARCHAR, d, 112)"))
+    intercept[UnsupportedError](Dialect.tsqlConvert("CONVERT(XML, d)"))
   }
 
   test("rewriteTsqlOffsetFetch: FETCH form to LIMIT/OFFSET, bare OFFSET kept, literals safe") {
@@ -572,87 +577,87 @@ class DialectPropertySpec extends SparkSpec {
   }
 
   test("tsql date functions: T-SQL abbreviations, Sunday week anchor, week DATEPART raises") {
-    assert(Dialect.rewriteTsqlDateAdd("DATEADD(mm, 2, d)") === "add_months(d, (2))")
-    assert(Dialect.rewriteTsqlDateAdd("DATEADD(dd, -1, d)") === "date_add(d, (-1))")
+    assert(Dialect.tsqlDateAdd("DATEADD(mm, 2, d)") === "add_months(d, (2))")
+    assert(Dialect.tsqlDateAdd("DATEADD(dd, -1, d)") === "date_add(d, (-1))")
     // weeks anchor on a SUNDAY (0001-01-07), not Snowflake's Monday
-    assert(Dialect.rewriteTsqlDateDiff("DATEDIFF(wk, a, b)").contains("0001-01-07"))
-    assert(Dialect.rewriteTsqlDateDiff("DATEDIFF(yy, a, b)") ===
+    assert(Dialect.tsqlDateDiff("DATEDIFF(wk, a, b)").contains("0001-01-07"))
+    assert(Dialect.tsqlDateDiff("DATEDIFF(yy, a, b)") ===
       "(year(b) - year(a))")
-    assert(Dialect.rewriteTsqlDatePart("DATEPART(yyyy, d)") === "year(d)")
-    intercept[UnsupportedError](Dialect.rewriteTsqlDatePart("DATEPART(week, d)"))
-    intercept[UnsupportedError](Dialect.rewriteTsqlDateAdd("DATEADD(ns, 1, d)"))
+    assert(Dialect.tsqlDatePart("DATEPART(yyyy, d)") === "year(d)")
+    intercept[UnsupportedError](Dialect.tsqlDatePart("DATEPART(week, d)"))
+    intercept[UnsupportedError](Dialect.tsqlDateAdd("DATEADD(ns, 1, d)"))
   }
 
   test("redshift: part abbreviations, Sunday week anchor, bare-type casts") {
-    assert(Dialect.rewriteRsDateAdd("DATEADD(mons, 2, d)") === "add_months(d, (2))")
-    assert(Dialect.rewriteRsDateAdd("DATEADD('yrs', 1, d)") === "add_months(d, 12 * (1))")
+    assert(Dialect.rsDateAdd("DATEADD(mons, 2, d)") === "add_months(d, (2))")
+    assert(Dialect.rsDateAdd("DATEADD('yrs', 1, d)") === "add_months(d, 12 * (1))")
     // 'm' is MINUTE in Redshift's part table, not month
-    assert(Dialect.rewriteRsDateAdd("DATEADD(m, 5, t)") === "timestampadd(MINUTE, (5), t)")
-    assert(Dialect.rewriteRsDateDiff("DATEDIFF(w, a, b)").contains("0001-01-07"))
-    assert(Dialect.rewriteRsDateDiff("DATEDIFF(yrs, a, b)") === "(year(b) - year(a))")
-    intercept[UnsupportedError](Dialect.rewriteRsDateAdd("DATEADD(ns, 1, d)"))
-    assert(Dialect.rewriteRsBareTypes("CAST(x AS VARCHAR), CAST(y AS VARCHAR(10))") ===
+    assert(Dialect.rsDateAdd("DATEADD(m, 5, t)") === "timestampadd(MINUTE, (5), t)")
+    assert(Dialect.rsDateDiff("DATEDIFF(w, a, b)").contains("0001-01-07"))
+    assert(Dialect.rsDateDiff("DATEDIFF(yrs, a, b)") === "(year(b) - year(a))")
+    intercept[UnsupportedError](Dialect.rsDateAdd("DATEADD(ns, 1, d)"))
+    assert(Dialect.rsBareTypes("CAST(x AS VARCHAR), CAST(y AS VARCHAR(10))") ===
       "CAST(x AS STRING), CAST(y AS VARCHAR(10))")
-    assert(Dialect.rewriteRsBareTypes("SELECT 'a TEXT literal', CAST(z AS TEXT)") ===
+    assert(Dialect.rsBareTypes("SELECT 'a TEXT literal', CAST(z AS TEXT)") ===
       "SELECT 'a TEXT literal', CAST(z AS STRING)")
     // ONLY the cast-type position is a type: a column or alias NAMED
     // text/varchar is code and must survive untouched
-    assert(Dialect.rewriteRsBareTypes("SELECT body AS text FROM msgs ORDER BY text") ===
+    assert(Dialect.rsBareTypes("SELECT body AS text FROM msgs ORDER BY text") ===
       "SELECT body AS text FROM msgs ORDER BY text")
-    assert(Dialect.rewriteRsBareTypes("SELECT CAST(CAST(y AS TEXT) AS VARCHAR)") ===
+    assert(Dialect.rsBareTypes("SELECT CAST(CAST(y AS TEXT) AS VARCHAR)") ===
       "SELECT CAST(CAST(y AS STRING) AS STRING)")
   }
 
   test("clickhouse: -If combinators, multiIf, to* family, uniq") {
-    assert(Dialect.rewriteChAggIf("countIf(x > 0)") === "count_if(x > 0)")
-    assert(Dialect.rewriteChAggIf("sumIf(v, v > 2)") ===
+    assert(Dialect.chAggIf("countIf(x > 0)") === "count_if(x > 0)")
+    assert(Dialect.chAggIf("sumIf(v, v > 2)") ===
       "coalesce(sum(CASE WHEN v > 2 THEN v END), 0)")
-    assert(Dialect.rewriteChAggIf("maxIf(v, f(a, b) = 1)") ===
+    assert(Dialect.chAggIf("maxIf(v, f(a, b) = 1)") ===
       "max(CASE WHEN f(a, b) = 1 THEN v END)")
-    intercept[UnsupportedError](Dialect.rewriteChAggIf("sumIf(v)"))
-    assert(Dialect.rewriteChMultiIf("multiIf(a = 1, 'x', b = 2, 'y', 'z')") ===
+    intercept[UnsupportedError](Dialect.chAggIf("sumIf(v)"))
+    assert(Dialect.chMultiIf("multiIf(a = 1, 'x', b = 2, 'y', 'z')") ===
       "(CASE WHEN a = 1 THEN 'x' WHEN b = 2 THEN 'y' ELSE 'z' END)")
-    intercept[UnsupportedError](Dialect.rewriteChMultiIf("multiIf(a, b)"))
-    assert(Dialect.rewriteChTo("toYYYYMM(d)") ===
+    intercept[UnsupportedError](Dialect.chMultiIf("multiIf(a, b)"))
+    assert(Dialect.chTo("toYYYYMM(d)") ===
       "CAST(date_format(d, 'yyyyMM') AS BIGINT)")
     // longest-match: toYYYYMMDD is not half-eaten by toYYYYMM
-    assert(Dialect.rewriteChTo("toYYYYMMDD(d)") ===
+    assert(Dialect.chTo("toYYYYMMDD(d)") ===
       "CAST(date_format(d, 'yyyyMMdd') AS BIGINT)")
-    assert(Dialect.rewriteChTo("toStartOfMonth(d)") ===
+    assert(Dialect.chTo("toStartOfMonth(d)") ===
       "CAST(date_trunc('MONTH', d) AS DATE)")
-    assert(Dialect.rewriteChUniq("uniqExact(a, b)") === "count(DISTINCT a, b)")
-    assert(Dialect.rewriteChUniq("uniq(a)") === "approx_count_distinct(a)")
+    assert(Dialect.chUniq("uniqExact(a, b)") === "count(DISTINCT a, b)")
+    assert(Dialect.chUniq("uniq(a)") === "approx_count_distinct(a)")
   }
 
   test("clickhouse: lambda-first HOFs, splitByChar quoting, position swap, literals safe") {
-    assert(Dialect.rewriteChArrayHof("arrayMap(x -> x + 1, arr)") ===
+    assert(Dialect.chArrayHof("arrayMap(x -> x + 1, arr)") ===
       "transform(arr, x -> x + 1)")
-    assert(Dialect.rewriteChArrayHof("arrayCount(x -> x > 0, arr)") ===
+    assert(Dialect.chArrayHof("arrayCount(x -> x > 0, arr)") ===
       "size(filter(arr, x -> x > 0))")
     // nested: inner call rewritten on the rescan pass
-    assert(Dialect.rewriteChArrayHof("arrayFilter(x -> x, arrayMap(y -> y, a))") ===
+    assert(Dialect.chArrayHof("arrayFilter(x -> x, arrayMap(y -> y, a))") ===
       "filter(transform(a, y -> y), x -> x)")
-    assert(Dialect.rewriteChSplit("splitByChar('-', s)") ===
+    assert(Dialect.chSplit("splitByChar('-', s)") ===
       "split(s, '\\\\Q-\\\\E')")
-    assert(Dialect.rewriteChPosition("position(hay, 'ndl')") ===
+    assert(Dialect.chPosition("position(hay, 'ndl')") ===
       "locate('ndl', hay)")
     // ANSI position(x IN y) single-arg form passes through
-    assert(Dialect.rewriteChPosition("position('a' IN s)") ===
+    assert(Dialect.chPosition("position('a' IN s)") ===
       "position('a' IN s)")
-    assert(Dialect.rewriteChEmpty("notEmpty(s)") === "(length(s) > 0)")
+    assert(Dialect.chEmpty("notEmpty(s)") === "(length(s) > 0)")
     // trigger tokens inside literals are never rewritten
     val lit = "SELECT 'countIf(x), arrayMap(, position(' AS c, countIf(b) AS n"
-    assert(Dialect.rewriteChAggIf(lit) ===
+    assert(Dialect.chAggIf(lit) ===
       "SELECT 'countIf(x), arrayMap(, position(' AS c, count_if(b) AS n")
   }
 
   test("teradata: SEL, keyword comparators, infix MOD, zeroifnull family") {
-    assert(Dialect.rewriteTeradataSel("SEL x FROM t") === "SELECT x FROM t")
+    assert(Dialect.teradataSel("SEL x FROM t") === "SELECT x FROM t")
     // no boundary inside SELECT; literals untouched
-    assert(Dialect.rewriteTeradataSel("SELECT 'SEL y' AS s") === "SELECT 'SEL y' AS s")
-    assert(Dialect.rewriteTeradataComparators("WHERE a LT 5 AND b GE 2 AND c NE 'x'") ===
+    assert(Dialect.teradataSel("SELECT 'SEL y' AS s") === "SELECT 'SEL y' AS s")
+    assert(Dialect.teradataComparators("WHERE a LT 5 AND b GE 2 AND c NE 'x'") ===
       "WHERE a < 5 AND b >= 2 AND c <> 'x'")
-    assert(Dialect.rewriteTeradataComparators("SELECT 'a LT b' AS s") ===
+    assert(Dialect.teradataComparators("SELECT 'a LT b' AS s") ===
       "SELECT 'a LT b' AS s")
     assert(Dialect.rewriteTeradataInfixMod("a MOD 7 = b mod 2") === "a % 7 = b % 2")
     // function-call MOD(a, b) is Spark-native — decided by what PRECEDES
@@ -663,9 +668,9 @@ class DialectPropertySpec extends SparkSpec {
     assert(Dialect.rewriteTeradataInfixMod("f() MOD (g())") === "f() % (g())")
     assert(Dialect.rewriteTeradataInfixMod("SELECT 'x MOD y' AS s") ===
       "SELECT 'x MOD y' AS s")
-    assert(Dialect.rewriteTeradataZeroNull("ZEROIFNULL(NULLIFZERO(a + b))") ===
+    assert(Dialect.teradataZeroNull("ZEROIFNULL(NULLIFZERO(a + b))") ===
       "coalesce(nullif(a + b, 0), 0)")
-    intercept[UnsupportedError](Dialect.rewriteTeradataZeroNull("zeroifnull(a, b)"))
+    intercept[UnsupportedError](Dialect.teradataZeroNull("zeroifnull(a, b)"))
     // ** exponent: simple operands, parenthesized groups, calls, left assoc
     assert(Dialect.rewriteTeradataPower("a ** 2") === "power(a, 2)")
     assert(Dialect.rewriteTeradataPower("(a + b) ** -2") === "power((a + b), -2)")
@@ -705,38 +710,38 @@ class DialectPropertySpec extends SparkSpec {
     // the lexer: quote-doubling escapes in all three styles,
     // and code between spans stays rewritable
     val mixed = """SELECT "a""lt" FROM t WHERE x LT 'it''s ''lt''' AND y lt 2"""
-    assert(Dialect.rewriteTeradataComparators(mixed) ===
+    assert(Dialect.teradataComparators(mixed) ===
       """SELECT "a""lt" FROM t WHERE x < 'it''s ''lt''' AND y < 2""")
   }
 
   test("snowflake/bigquery extensions: names, SAFE_ family, INTERVAL add, literal split") {
     // Snowflake DAYNAME/MONTHNAME are 3-letter abbreviations
-    assert(Dialect.rewriteSnowDayMonthName("DAYNAME(d)") === "date_format(d, 'EEE')")
-    assert(Dialect.rewriteSnowDayMonthName("MONTHNAME(d)") === "date_format(d, 'MMM')")
-    intercept[UnsupportedError](Dialect.rewriteSnowDayMonthName("DAYNAME(a, b)"))
+    assert(Dialect.snowDayMonthName("DAYNAME(d)") === "date_format(d, 'EEE')")
+    assert(Dialect.snowDayMonthName("MONTHNAME(d)") === "date_format(d, 'MMM')")
+    intercept[UnsupportedError](Dialect.snowDayMonthName("DAYNAME(a, b)"))
     // BigQuery DATE_ADD/DATE_SUB with INTERVAL — single-digit quantities
     // and expressions both bind; Spark's own 2-arg date_add passes through
-    assert(Dialect.rewriteBqDateAddSub("DATE_ADD(d, INTERVAL 2 MONTH)") ===
+    assert(Dialect.bqDateAddSub("DATE_ADD(d, INTERVAL 2 MONTH)") ===
       "add_months(d, (2))")
-    assert(Dialect.rewriteBqDateAddSub("DATE_SUB(d, INTERVAL 1 WEEK)") ===
+    assert(Dialect.bqDateAddSub("DATE_SUB(d, INTERVAL 1 WEEK)") ===
       "date_add(d, 7 * (-(1)))")
-    assert(Dialect.rewriteBqDateAddSub("TIMESTAMP_ADD(t, INTERVAL n + 1 HOUR)") ===
+    assert(Dialect.bqDateAddSub("TIMESTAMP_ADD(t, INTERVAL n + 1 HOUR)") ===
       "timestampadd(HOUR, (n + 1), t)")
-    assert(Dialect.rewriteBqDateAddSub("date_add(d, 5)") === "date_add(d, 5)")
+    assert(Dialect.bqDateAddSub("date_add(d, 5)") === "date_add(d, 5)")
     intercept[UnsupportedError](
-      Dialect.rewriteBqDateAddSub("DATE_ADD(d, INTERVAL 1 FORTNIGHT)"))
+      Dialect.bqDateAddSub("DATE_ADD(d, INTERVAL 1 FORTNIGHT)"))
     // BigQuery SPLIT: literal delimiter \Q-embedded; default comma;
     // non-literal raises
-    assert(Dialect.rewriteBqSplit("SPLIT(s, '-')") === "split(s, '\\\\Q-\\\\E')")
-    assert(Dialect.rewriteBqSplit("SPLIT(s)") === "split(s, '\\\\Q,\\\\E')")
-    intercept[UnsupportedError](Dialect.rewriteBqSplit("SPLIT(s, d)"))
+    assert(Dialect.bqSplit("SPLIT(s, '-')") === "split(s, '\\\\Q-\\\\E')")
+    assert(Dialect.bqSplit("SPLIT(s)") === "split(s, '\\\\Q,\\\\E')")
+    intercept[UnsupportedError](Dialect.bqSplit("SPLIT(s, d)"))
     val spark: org.apache.spark.sql.SparkSession = null
     // GENERATE_ARRAY guards the empty case: sequence(1, 0) in Spark is
     // the DESCENDING [1, 0], BigQuery's contract is []
-    assert(Dialect.rewriteBqGenerateArray("GENERATE_ARRAY(1, n)") ===
+    assert(Dialect.bqGenerateArray("GENERATE_ARRAY(1, n)") ===
       "(CASE WHEN (1) <= (n) THEN sequence((1), (n)) " +
         "ELSE slice(sequence((1), (1)), 1, 0) END)")
-    assert(Dialect.rewriteBqGenerateArray("GENERATE_ARRAY(a, b, -2)")
+    assert(Dialect.bqGenerateArray("GENERATE_ARRAY(a, b, -2)")
       .contains("(-2) < 0 AND (a) >= (b)"))
     // full pipeline: SAFE_ renames + guarded GENERATE_ARRAY + printf FORMAT
     assert(Dialect.BigQueryish.rewrite(spark,
@@ -758,44 +763,44 @@ class DialectPropertySpec extends SparkSpec {
     // rewrite; rewriters that legitimately reject malformed code raise
     // UnsupportedError and are skipped for that sample
     val rewriters: Seq[(String, String => String)] = Seq(
-      "tableauIfBlock" -> Dialect.rewriteTableauIfBlock,
-      "tableauIif" -> Dialect.rewriteTableauIif,
-      "tableauCountd" -> Dialect.rewriteTableauCountd,
-      "tableauSplit" -> Dialect.rewriteTableauSplit,
-      "snowDayMonthName" -> Dialect.rewriteSnowDayMonthName,
-      "bqDateAddSub" -> Dialect.rewriteBqDateAddSub,
-      "bqSplit" -> Dialect.rewriteBqSplit,
-      "trinoDateFns" -> Dialect.rewriteTrinoDateFns,
-      "pgStringAgg" -> Dialect.rewritePgStringAgg,
-      "mysqlDayNames" -> Dialect.rewriteMysqlDayNames,
+      "tableauIfBlock" -> Dialect.tableauIfBlock,
+      "tableauIif" -> Dialect.tableauIif,
+      "tableauCountd" -> Dialect.tableauCountd,
+      "tableauSplit" -> Dialect.tableauSplit,
+      "snowDayMonthName" -> Dialect.snowDayMonthName,
+      "bqDateAddSub" -> Dialect.bqDateAddSub,
+      "bqSplit" -> Dialect.bqSplit,
+      "trinoDateFns" -> Dialect.trinoDateFns,
+      "pgStringAgg" -> Dialect.pgStringAgg,
+      "mysqlDayNames" -> Dialect.mysqlDayNames,
       "fetchFirst" -> Dialect.rewriteFetchFirst,
-      "chFormatDateTime" -> Dialect.rewriteChFormatDateTime,
-      "sqliteDateFn" -> Dialect.rewriteSqliteDateFn,
+      "chFormatDateTime" -> Dialect.chFormatDateTime,
+      "sqliteDateFn" -> Dialect.sqliteDateFn,
       // round-11 rewriters (star REPLACE needs a live session — covered
       // by its SemanticsSpec/gate instead)
       "unnest" -> ((s: String) => Dialect.rewriteUnnest(s)),
       "snowFlatten" -> Dialect.rewriteSnowFlatten,
       "bqSubscript" -> Dialect.rewriteBqSubscript,
-      "trinoTry" -> Dialect.rewriteTrinoTry,
+      "trinoTry" -> Dialect.trinoTry,
       "generateSeriesTable" ->
         ((s: String) => Dialect.rewriteGenerateSeriesTable(s)),
-      "exasolAddUnits" -> Dialect.rewriteExasolAddUnits,
+      "exasolAddUnits" -> Dialect.exasolAddUnits,
       "chArrayJoin" -> Dialect.rewriteChArrayJoin,
-      "tsqlApply" -> Dialect.rewriteTsqlApply,
-      "snowTryTo" -> Dialect.rewriteSnowTryTo,
+      "tsqlApply" -> Dialect.tsqlApply(identity),
+      "snowTryTo" -> Dialect.snowTryTo,
       "arrayLiteral" -> ((s: String) => Dialect.rewriteArrayLiteral(s)),
       "aggFilter" -> ((s: String) => Dialect.rewriteAggFilter(s)),
       // round-13 rewriters
       "chLimitBy" -> ((s: String) => Dialect.rewriteChLimitBy(s)),
       "tsqlPivot" -> Dialect.rewriteTsqlPivot,
-      "pgArrayAgg" -> ((s: String) => Dialect.rewritePgArrayAgg(s, descNullsLast = false)),
-      "pgArrayAggDuck" -> ((s: String) => Dialect.rewritePgArrayAgg(s, descNullsLast = true)),
+      "pgArrayAgg" -> ((s: String) => pgArrayAgg(s, descNullsLast = false)),
+      "pgArrayAggDuck" -> ((s: String) => pgArrayAgg(s, descNullsLast = true)),
       // round-14 rewriters
-      "withinGroupArrayAgg" -> Dialect.rewriteWithinGroupArrayAgg,
+      "withinGroupArrayAgg" -> withinGroupArrayAgg,
       "snowArrayAgg" -> ((s: String) =>
-        Dialect.rewritePgArrayAgg(s, descNullsLast = false, skipNullValues = true)),
+        pgArrayAgg(s, descNullsLast = false, skipNullValues = true)),
       "fetchFirstWithTies" -> ((s: String) => Dialect.rewriteFetchFirstWithTies(s)),
-      "bqArrayAgg" -> Dialect.rewriteBqArrayAgg)
+      "bqArrayAgg" -> Dialect.bqArrayAgg)
     (1L to 100L).foreach { seed =>
       val (sql, _, lits) = sample(seed)
       rewriters.foreach { case (name, f) =>
@@ -809,36 +814,36 @@ class DialectPropertySpec extends SparkSpec {
   test("clickhouse formatDateTime, sqlite date modifiers (normalizing months)") {
     // MODERN ClickHouse (>= 23.4 default) follows MySQL's table: %M is
     // the month NAME, %i is minutes
-    assert(Dialect.rewriteChFormatDateTime("formatDateTime(d, '%Y/%m %H:%i')") ===
+    assert(Dialect.chFormatDateTime("formatDateTime(d, '%Y/%m %H:%i')") ===
       "date_format(d, 'yyyy/MM HH:mm')")
-    assert(Dialect.rewriteChFormatDateTime("formatDateTime(d, '%M')") ===
+    assert(Dialect.chFormatDateTime("formatDateTime(d, '%M')") ===
       "date_format(d, 'MMMM')")
-    assert(Dialect.rewriteChFormatDateTime("fromUnixTimestamp(x)") ===
+    assert(Dialect.chFormatDateTime("fromUnixTimestamp(x)") ===
       "timestamp_seconds(x)")
-    intercept[UnsupportedError](Dialect.rewriteChFormatDateTime("formatDateTime(d, f)"))
+    intercept[UnsupportedError](Dialect.chFormatDateTime("formatDateTime(d, f)"))
     // bare date() = ISO conversion; day modifiers are plain adds
-    assert(Dialect.rewriteSqliteDateFn("date(d)") === "CAST(d AS DATE)")
-    assert(Dialect.rewriteSqliteDateFn("date(d, '-7 days')") ===
+    assert(Dialect.sqliteDateFn("date(d)") === "CAST(d AS DATE)")
+    assert(Dialect.sqliteDateFn("date(d, '-7 days')") ===
       "date_add(CAST(d AS DATE), (-7))")
     // month arithmetic NORMALIZES like SQLite (Jan 31 +1 month = Mar 2),
     // spelled month-start + add_months + day-roll — never bare add_months
-    assert(Dialect.rewriteSqliteDateFn("date(d, '+2 months')") ===
+    assert(Dialect.sqliteDateFn("date(d, '+2 months')") ===
       "date_add(add_months(trunc(CAST(d AS DATE), 'MM'), (+2)), day(CAST(d AS DATE)) - 1)")
-    assert(Dialect.rewriteSqliteDateFn("date(d, '+1 years')").contains("12 * (+1)"))
+    assert(Dialect.sqliteDateFn("date(d, '+1 years')").contains("12 * (+1)"))
     // modifiers fold left in order
-    assert(Dialect.rewriteSqliteDateFn("date(d, '-7 days', 'start of month')") ===
+    assert(Dialect.sqliteDateFn("date(d, '-7 days', 'start of month')") ===
       "trunc(date_add(CAST(d AS DATE), (-7)), 'MM')")
-    intercept[UnsupportedError](Dialect.rewriteSqliteDateFn("date(d, 'weekday 0')"))
-    intercept[UnsupportedError](Dialect.rewriteSqliteDateFn("date(d, x)"))
+    intercept[UnsupportedError](Dialect.sqliteDateFn("date(d, 'weekday 0')"))
+    intercept[UnsupportedError](Dialect.sqliteDateFn("date(d, x)"))
   }
 
   test("mysql day names, oracle/postgres FETCH FIRST paging") {
     // MySQL full names (Snowflake's same-named functions abbreviate)
-    assert(Dialect.rewriteMysqlDayNames("DAYNAME(d)") === "date_format(d, 'EEEE')")
-    assert(Dialect.rewriteMysqlDayNames("MONTHNAME(d)") === "date_format(d, 'MMMM')")
+    assert(Dialect.mysqlDayNames("DAYNAME(d)") === "date_format(d, 'EEEE')")
+    assert(Dialect.mysqlDayNames("MONTHNAME(d)") === "date_format(d, 'MMMM')")
     // WEEKDAY is 0=Monday (DAYOFWEEK 1=Sunday passes through untouched)
-    assert(Dialect.rewriteMysqlDayNames("WEEKDAY(d)") === "((dayofweek(d) + 5) % 7)")
-    assert(Dialect.rewriteMysqlDayNames("DAYOFWEEK(d)") === "DAYOFWEEK(d)")
+    assert(Dialect.mysqlDayNames("WEEKDAY(d)") === "((dayofweek(d) + 5) % 7)")
+    assert(Dialect.mysqlDayNames("DAYOFWEEK(d)") === "DAYOFWEEK(d)")
     // standalone FETCH FIRST/NEXT → LIMIT; literals safe
     assert(Dialect.rewriteFetchFirst("SELECT a FROM t ORDER BY a FETCH FIRST 10 ROWS ONLY") ===
       "SELECT a FROM t ORDER BY a LIMIT 10")
@@ -855,87 +860,87 @@ class DialectPropertySpec extends SparkSpec {
 
   test("trino datetime + postgres extract/string_agg quirks") {
     // Trino date_format is MySQL-%-coded — translated, not passed through
-    assert(Dialect.rewriteTrinoDateFns("date_format(d, '%Y-%m')") ===
+    assert(Dialect.trinoDateFns("date_format(d, '%Y-%m')") ===
       "date_format(d, 'yyyy-MM')")
-    assert(Dialect.rewriteTrinoDateFns("date_parse(s, '%Y-%m-%d %H:%i:%s')") ===
+    assert(Dialect.trinoDateFns("date_parse(s, '%Y-%m-%d %H:%i:%s')") ===
       "to_timestamp(s, 'yyyy-MM-dd HH:mm:ss')")
-    intercept[UnsupportedError](Dialect.rewriteTrinoDateFns("date_parse(s, f)"))
+    intercept[UnsupportedError](Dialect.trinoDateFns("date_parse(s, f)"))
     // %-free formats are LITERAL TEXT in Trino — quoted for Spark's
     // pattern language ('yyyy' must print yyyy, not the year)
-    assert(Dialect.rewriteTrinoDateFns("date_format(d, 'yyyy')") ===
+    assert(Dialect.trinoDateFns("date_format(d, 'yyyy')") ===
       "date_format(d, '''yyyy''')")
-    intercept[UnsupportedError](Dialect.rewriteTrinoDateFns("date_format(d, f)"))
+    intercept[UnsupportedError](Dialect.trinoDateFns("date_format(d, f)"))
     // ISO day_of_week re-based from Spark's Sunday=1
-    assert(Dialect.rewriteTrinoDateFns("day_of_week(d)") ===
+    assert(Dialect.trinoDateFns("day_of_week(d)") ===
       "(((dayofweek(d) + 5) % 7) + 1)")
-    assert(Dialect.rewriteTrinoDateFns("dow(d)") === "(((dayofweek(d) + 5) % 7) + 1)")
-    assert(Dialect.rewriteTrinoDateFns("week(d)") === "weekofyear(d)")
-    assert(Dialect.rewriteTrinoDateFns("year_of_week(d)") ===
+    assert(Dialect.trinoDateFns("dow(d)") === "(((dayofweek(d) + 5) % 7) + 1)")
+    assert(Dialect.trinoDateFns("week(d)") === "weekofyear(d)")
+    assert(Dialect.trinoDateFns("year_of_week(d)") ===
       "EXTRACT(YEAROFWEEK FROM d)")
     // Postgres EXTRACT: DOW is Sunday=0 (one less than Spark), ISODOW Monday=1
-    assert(Dialect.rewritePgExtractEpoch("EXTRACT(DOW FROM d)") ===
+    assert(Dialect.pgExtractEpoch("EXTRACT(DOW FROM d)") ===
       "(dayofweek(d) - 1)")
-    assert(Dialect.rewritePgExtractEpoch("EXTRACT(ISODOW FROM d)") ===
+    assert(Dialect.pgExtractEpoch("EXTRACT(ISODOW FROM d)") ===
       "extract(DAYOFWEEK_ISO FROM d)")
-    assert(Dialect.rewritePgExtractEpoch("EXTRACT(YEAR FROM d)") ===
+    assert(Dialect.pgExtractEpoch("EXTRACT(YEAR FROM d)") ===
       "EXTRACT(YEAR FROM d)")
     // string_agg with inline ORDER BY → listagg WITHIN GROUP; the plain
     // 2-arg form is Spark-native and untouched; a separator literal
     // containing the words is not a clause
-    assert(Dialect.rewritePgStringAgg("string_agg(x, ',' ORDER BY y DESC)") ===
+    assert(Dialect.pgStringAgg("string_agg(x, ',' ORDER BY y DESC)") ===
       "listagg(x, ',') WITHIN GROUP (ORDER BY y DESC)")
     // multi-key ORDER BY splits at top-level commas and is rejoined
-    assert(Dialect.rewritePgStringAgg("string_agg(x, ',' ORDER BY last, first DESC)") ===
+    assert(Dialect.pgStringAgg("string_agg(x, ',' ORDER BY last, first DESC)") ===
       "listagg(x, ',') WITHIN GROUP (ORDER BY last, first DESC)")
-    assert(Dialect.rewritePgStringAgg("string_agg(x, ',')") === "string_agg(x, ',')")
-    assert(Dialect.rewritePgStringAgg("string_agg(x, ' ORDER BY ')") ===
+    assert(Dialect.pgStringAgg("string_agg(x, ',')") === "string_agg(x, ',')")
+    assert(Dialect.pgStringAgg("string_agg(x, ' ORDER BY ')") ===
       "string_agg(x, ' ORDER BY ')")
   }
 
   test("tableau: IF block, null-aware IIF, COUNTD, quoted date parts, SPLIT") {
-    assert(Dialect.rewriteTableauIfBlock(
+    assert(Dialect.tableauIfBlock(
       "SELECT IF a = 1 THEN 'x' ELSEIF a = 2 THEN 'y' ELSE 'z' END") ===
       "SELECT CASE WHEN a = 1 THEN 'x' WHEN a = 2 THEN 'y' ELSE 'z' END")
     // backtick-quoted identifier named `if` stays a column; literal safe
-    assert(Dialect.rewriteTableauIfBlock("SELECT `if`, 'if then' FROM t") ===
+    assert(Dialect.tableauIfBlock("SELECT `if`, 'if then' FROM t") ===
       "SELECT `if`, 'if then' FROM t")
     // 3-arg IIF: NULL test matches neither TRUE nor FALSE and falls to
     // the CASE default (NULL), never the else branch — unlike Spark's
     // if(); the simple-CASE form evaluates the test exactly ONCE
-    assert(Dialect.rewriteTableauIif("IIF(c > 0, 'p', 'n')") ===
+    assert(Dialect.tableauIif("IIF(c > 0, 'p', 'n')") ===
       "(CASE (c > 0) WHEN TRUE THEN 'p' WHEN FALSE THEN 'n' END)")
-    assert(Dialect.rewriteTableauIif("IIF(c > 0, 'p', 'n', 'u')") ===
+    assert(Dialect.tableauIif("IIF(c > 0, 'p', 'n', 'u')") ===
       "(CASE (c > 0) WHEN TRUE THEN 'p' WHEN FALSE THEN 'n' ELSE 'u' END)")
-    intercept[UnsupportedError](Dialect.rewriteTableauIif("IIF(c, t)"))
-    assert(Dialect.rewriteTableauCountd("COUNTD(x)") === "count(DISTINCT x)")
-    assert(Dialect.rewriteTableauDateAdd("DATEADD('month', 2, d)") ===
+    intercept[UnsupportedError](Dialect.tableauIif("IIF(c, t)"))
+    assert(Dialect.tableauCountd("COUNTD(x)") === "count(DISTINCT x)")
+    assert(Dialect.tableauDateAdd("DATEADD('month', 2, d)") ===
       "add_months(d, (2))")
     // weeks anchor on a SUNDAY (Tableau's default week start)
-    assert(Dialect.rewriteTableauDateDiff("DATEDIFF('week', a, b)")
+    assert(Dialect.tableauDateDiff("DATEDIFF('week', a, b)")
       .contains("0001-01-07"))
-    assert(Dialect.rewriteTableauDateDiff("DATEDIFF('month', a, b)") ===
+    assert(Dialect.tableauDateDiff("DATEDIFF('month', a, b)") ===
       "((year(b) * 12 + month(b)) - (year(a) * 12 + month(a)))")
-    assert(Dialect.rewriteTableauDatePart("DATEPART('weekday', d)") ===
+    assert(Dialect.tableauDatePart("DATEPART('weekday', d)") ===
       "dayofweek(d)")
-    assert(Dialect.rewriteTableauDatePart("DATEPART('dayofyear', d)") ===
+    assert(Dialect.tableauDatePart("DATEPART('dayofyear', d)") ===
       "dayofyear(d)")
-    assert(Dialect.rewriteTableauDateTrunc("DATETRUNC('quarter', d)") ===
+    assert(Dialect.tableauDateTrunc("DATETRUNC('quarter', d)") ===
       "date_trunc('QUARTER', d)")
-    assert(Dialect.rewriteTableauDateName("DATENAME('month', d)") ===
+    assert(Dialect.tableauDateName("DATENAME('month', d)") ===
       "date_format(d, 'MMMM')")
-    assert(Dialect.rewriteTableauDateName("DATENAME('year', d)") ===
+    assert(Dialect.tableauDateName("DATENAME('year', d)") ===
       "CAST(year(d) AS STRING)")
     // week numbering is week-start-configurable in Tableau — fail fast
-    intercept[UnsupportedError](Dialect.rewriteTableauDatePart("DATEPART('week', d)"))
-    intercept[UnsupportedError](Dialect.rewriteTableauDateTrunc("DATETRUNC('week', d)"))
+    intercept[UnsupportedError](Dialect.tableauDatePart("DATEPART('week', d)"))
+    intercept[UnsupportedError](Dialect.tableauDateTrunc("DATETRUNC('week', d)"))
     // the part must be a QUOTED literal (Tableau's own syntax)
-    intercept[UnsupportedError](Dialect.rewriteTableauDateAdd("DATEADD(month, 2, d)"))
+    intercept[UnsupportedError](Dialect.tableauDateAdd("DATEADD(month, 2, d)"))
     // 3-arg SPLIT: \Q-quoted literal delimiter, NULL-safe token pick
-    assert(Dialect.rewriteTableauSplit("SPLIT(s, '-', 2)") ===
+    assert(Dialect.tableauSplit("SPLIT(s, '-', 2)") ===
       "try_element_at(split(s, concat('\\\\Q', '-', '\\\\E')), 2)")
     // 2-arg split is Spark-native and passes through
-    assert(Dialect.rewriteTableauSplit("split(s, ',')") === "split(s, ',')")
-    intercept[UnsupportedError](Dialect.rewriteTableauSplit("SPLIT(s, d, 2)"))
+    assert(Dialect.tableauSplit("split(s, ',')") === "split(s, ',')")
+    intercept[UnsupportedError](Dialect.tableauSplit("SPLIT(s, d, 2)"))
     val spark: org.apache.spark.sql.SparkSession = null
     // full pipeline: bracket field refs, IF block, IIF, COUNTD together
     assert(Dialect.TableauIsh.rewrite(spark,
@@ -948,41 +953,41 @@ class DialectPropertySpec extends SparkSpec {
     // ADD_MONTHS/ADD_YEARS: typed year-month interval — type-preserving
     // (date+YM → DATE, timestamp+YM → TIMESTAMP; a bare add_months would
     // silently truncate a timestamp input to DATE)
-    assert(Dialect.rewriteExasolAddUnits("ADD_MONTHS(d, 2)") ===
+    assert(Dialect.exasolAddUnits("ADD_MONTHS(d, 2)") ===
       "((d) + INTERVAL '1' MONTH * CAST(2 AS INT))")
-    assert(Dialect.rewriteExasolAddUnits("ADD_YEARS(d, 1)") ===
+    assert(Dialect.exasolAddUnits("ADD_YEARS(d, 1)") ===
       "((d) + INTERVAL '1' YEAR * CAST(1 AS INT))")
     // ADD_DAYS/ADD_WEEKS: date_add guarded by a midnight assertion — a
     // timestamp WITH time-of-day raises instead of silently truncating
-    val days = Dialect.rewriteExasolAddUnits("ADD_DAYS(d, 30)")
+    val days = Dialect.exasolAddUnits("ADD_DAYS(d, 30)")
     assert(days.contains("date_add((d), CAST(30 AS INT))"))
     assert(days.contains("raise_error") && days.startsWith("(CASE WHEN"))
-    assert(Dialect.rewriteExasolAddUnits("ADD_WEEKS(d, n)")
+    assert(Dialect.exasolAddUnits("ADD_WEEKS(d, n)")
       .contains("date_add((d), (7 * CAST(n AS INT)))"))
-    assert(Dialect.rewriteExasolAddUnits("ADD_HOURS(t, 6)") ===
+    assert(Dialect.exasolAddUnits("ADD_HOURS(t, 6)") ===
       "timestampadd(HOUR, CAST(6 AS INT), CAST(t AS TIMESTAMP))")
     // nested calls rewrite inside-out in one pass
-    assert(Dialect.rewriteExasolAddUnits("ADD_DAYS(ADD_MONTHS(d, 1), 2)")
+    assert(Dialect.exasolAddUnits("ADD_DAYS(ADD_MONTHS(d, 1), 2)")
       .contains("date_add((((d) + INTERVAL '1' MONTH * CAST(1 AS INT))), CAST(2 AS INT))"))
-    intercept[UnsupportedError](Dialect.rewriteExasolAddUnits("ADD_DAYS(d)"))
-    assert(Dialect.rewriteExasolBetweenUnits("DAYS_BETWEEN(a, b)") ===
+    intercept[UnsupportedError](Dialect.exasolAddUnits("ADD_DAYS(d)"))
+    assert(Dialect.exasolBetweenUnits("DAYS_BETWEEN(a, b)") ===
       "datediff(CAST(a AS DATE), CAST(b AS DATE))")
-    assert(Dialect.rewriteExasolBetweenUnits("SECONDS_BETWEEN(a, b)") ===
+    assert(Dialect.exasolBetweenUnits("SECONDS_BETWEEN(a, b)") ===
       "(CAST(CAST(a AS TIMESTAMP) AS DOUBLE) - CAST(CAST(b AS TIMESTAMP) AS DOUBLE))")
-    assert(Dialect.rewriteExasolBetweenUnits("HOURS_BETWEEN(a, b)").endsWith(
+    assert(Dialect.exasolBetweenUnits("HOURS_BETWEEN(a, b)").endsWith(
       " / CAST(3600 AS DOUBLE))"))
     // YEARS/MONTHS_BETWEEN deliberately NOT shimmed (fractional-month drift)
-    assert(Dialect.rewriteExasolBetweenUnits("MONTHS_BETWEEN(a, b)") ===
+    assert(Dialect.exasolBetweenUnits("MONTHS_BETWEEN(a, b)") ===
       "MONTHS_BETWEEN(a, b)")
-    assert(Dialect.rewriteExasolTrunc("TRUNC(d, 'MM')") === "trunc(d, 'MONTH')")
-    assert(Dialect.rewriteExasolTrunc("TRUNC(d, 'Q')") === "trunc(d, 'QUARTER')")
-    assert(Dialect.rewriteExasolTrunc("TRUNC(d, 'DD')") === "CAST(d AS DATE)")
-    assert(Dialect.rewriteExasolTrunc("TRUNC(t, 'HH')") ===
+    assert(Dialect.exasolTrunc("TRUNC(d, 'MM')") === "trunc(d, 'MONTH')")
+    assert(Dialect.exasolTrunc("TRUNC(d, 'Q')") === "trunc(d, 'QUARTER')")
+    assert(Dialect.exasolTrunc("TRUNC(d, 'DD')") === "CAST(d AS DATE)")
+    assert(Dialect.exasolTrunc("TRUNC(t, 'HH')") ===
       "date_trunc('HOUR', CAST(t AS TIMESTAMP))")
     // 1-arg TRUNC is numeric truncation — Spark-native pass-through
-    assert(Dialect.rewriteExasolTrunc("TRUNC(x)") === "TRUNC(x)")
+    assert(Dialect.exasolTrunc("TRUNC(x)") === "TRUNC(x)")
     // 'DAY' would be an Oracle-family week start — fail fast
-    intercept[UnsupportedError](Dialect.rewriteExasolTrunc("TRUNC(d, 'DAY')"))
+    intercept[UnsupportedError](Dialect.exasolTrunc("TRUNC(d, 'DAY')"))
     val spark: org.apache.spark.sql.SparkSession = null
     // full pipeline: quoted idents, ZEROIFNULL, DECODE together
     val full = Dialect.ExasolIsh.rewrite(spark,
@@ -1321,8 +1326,8 @@ class DialectPropertySpec extends SparkSpec {
     // each key's leading is-null bool pinning the DIALECT's default null
     // placement (Postgres flips to nulls-first on DESC; DuckDB keeps
     // nulls-last in both directions)
-    def pgAgg(s: String) = Dialect.rewritePgArrayAgg(s, descNullsLast = false)
-    def duckAgg(s: String) = Dialect.rewritePgArrayAgg(s, descNullsLast = true)
+    def pgAgg(s: String) = pgArrayAgg(s, descNullsLast = false)
+    def duckAgg(s: String) = pgArrayAgg(s, descNullsLast = true)
     assert(pgAgg("SELECT ARRAY_AGG(x ORDER BY k) FROM t") ===
       "SELECT transform(sort_array(collect_list(named_struct(" +
         "'__n0', (k) IS NULL, '__o0', k, '__v', x)), true), s -> s.__v) FROM t")
@@ -1882,17 +1887,17 @@ class DialectPropertySpec extends SparkSpec {
 
     // WITHIN GROUP spelling (r14, Snowflake) converts to the inline form
     // and composes with the null-VALUE-skipping variant
-    assert(Dialect.rewriteWithinGroupArrayAgg(
+    assert(withinGroupArrayAgg(
       "SELECT ARRAY_AGG(x) WITHIN GROUP (ORDER BY k DESC) FROM t") ===
       "SELECT ARRAY_AGG(x ORDER BY k DESC) FROM t")
-    assert(Dialect.rewriteWithinGroupArrayAgg(
+    assert(withinGroupArrayAgg(
       "SELECT array_agg(x) FROM t") === "SELECT array_agg(x) FROM t")
-    assert(Dialect.rewriteWithinGroupArrayAgg(
+    assert(withinGroupArrayAgg(
       "SELECT listagg(x, ',') WITHIN GROUP (ORDER BY k) FROM t") ===
       "SELECT listagg(x, ',') WITHIN GROUP (ORDER BY k) FROM t")
-    intercept[UnsupportedError](Dialect.rewriteWithinGroupArrayAgg(
+    intercept[UnsupportedError](withinGroupArrayAgg(
       "SELECT array_agg(x) WITHIN GROUP (k) FROM t"))
-    assert(Dialect.rewritePgArrayAgg(
+    assert(pgArrayAgg(
       "SELECT array_agg(x ORDER BY k) FROM t",
       descNullsLast = false, skipNullValues = true) ===
       "SELECT transform(sort_array(collect_list(" +
@@ -1901,26 +1906,26 @@ class DialectPropertySpec extends SparkSpec {
     // BigQuery IGNORE NULLS form (r14): nulls sort SMALLEST (ASC probe is
     // IS NOT NULL → null keys first) and null VALUES are dropped; LIMIT
     // truncates the sorted result via slice
-    assert(Dialect.rewriteBqArrayAgg(
+    assert(Dialect.bqArrayAgg(
       "SELECT array_agg(x IGNORE NULLS ORDER BY k) FROM t") ===
       "SELECT transform(sort_array(collect_list(" +
         "CASE WHEN (x) IS NULL THEN NULL ELSE named_struct(" +
         "'__n0', (k) IS NOT NULL, '__o0', k, '__v', x) END), true), s -> s.__v) FROM t")
     // DESC under BigQuery: nulls (smallest) land LAST — probe stays
     // IS NOT NULL so the null group carries the smaller bool both ways
-    assert(Dialect.rewriteBqArrayAgg(
+    assert(Dialect.bqArrayAgg(
       "SELECT array_agg(x IGNORE NULLS ORDER BY k DESC LIMIT 5) FROM t") ===
       "SELECT slice(transform(sort_array(collect_list(" +
         "CASE WHEN (x) IS NULL THEN NULL ELSE named_struct(" +
         "'__n0', (k) IS NOT NULL, '__o0', k, '__v', x) END), false), s -> s.__v), 1, 5) FROM t")
     // IGNORE NULLS without ORDER BY: collect_list drops nulls natively
     // (spelled as collect_list so the rescan can't re-guard it)
-    assert(Dialect.rewriteBqArrayAgg("SELECT array_agg(x IGNORE NULLS) FROM t") ===
+    assert(Dialect.bqArrayAgg("SELECT array_agg(x IGNORE NULLS) FROM t") ===
       "SELECT collect_list(x) FROM t")
     // bare array_agg gets the raise-on-NULL-element runtime guard
     // (BigQuery RAISES where collect_list would silently drop); ordered/
     // LIMIT forms WITHOUT IGNORE NULLS fail fast at rewrite time
-    assert(Dialect.rewriteBqArrayAgg("SELECT array_agg(x) FROM t") ===
+    assert(Dialect.bqArrayAgg("SELECT array_agg(x) FROM t") ===
       "SELECT array_agg(CASE WHEN (x) IS NULL THEN raise_error(" +
         "'ARRAY_AGG: array cannot have a NULL element (BigQuery semantics); " +
         "use array_agg(x IGNORE NULLS)') ELSE x END) FROM t")
@@ -1929,19 +1934,19 @@ class DialectPropertySpec extends SparkSpec {
     val bqGuard = "CASE WHEN (x) IS NULL THEN raise_error(" +
       "'ARRAY_AGG: array cannot have a NULL element (BigQuery semantics); " +
       "use array_agg(x IGNORE NULLS)') ELSE x END"
-    assert(Dialect.rewriteBqArrayAgg(
+    assert(Dialect.bqArrayAgg(
       "SELECT array_agg(x ORDER BY k) FROM t") ===
       "SELECT transform(sort_array(collect_list(named_struct(" +
         s"'__n0', (k) IS NOT NULL, '__o0', k, '__v', $bqGuard)), true), s -> s.__v) FROM t")
-    assert(Dialect.rewriteBqArrayAgg(
+    assert(Dialect.bqArrayAgg(
       "SELECT array_agg(x RESPECT NULLS ORDER BY k) FROM t") ===
       "SELECT transform(sort_array(collect_list(named_struct(" +
         s"'__n0', (k) IS NOT NULL, '__o0', k, '__v', $bqGuard)), true), s -> s.__v) FROM t")
     // RESPECT NULLS without ORDER BY keeps the plain-form guard; a bare
     // LIMIT slices the (arbitrary-order) guarded collect
-    assert(Dialect.rewriteBqArrayAgg("SELECT array_agg(x RESPECT NULLS) FROM t") ===
+    assert(Dialect.bqArrayAgg("SELECT array_agg(x RESPECT NULLS) FROM t") ===
       s"SELECT array_agg($bqGuard) FROM t")
-    assert(Dialect.rewriteBqArrayAgg("SELECT array_agg(x LIMIT 4) FROM t") ===
+    assert(Dialect.bqArrayAgg("SELECT array_agg(x LIMIT 4) FROM t") ===
       s"SELECT slice(array_agg($bqGuard), 1, 4) FROM t")
     // DISTINCT x ORDER BY x (r15): collect_set of the sort struct — one
     // NULL element survives (struct equality is null-safe), sorted by
@@ -1977,45 +1982,45 @@ class DialectPropertySpec extends SparkSpec {
 
     // bare keep-null wrap (r15 ADVICE): Postgres/Trino/DuckDB keep NULL
     // elements in array_agg where collect_list drops them
-    assert(Dialect.rewriteKeepNullArrayAgg("SELECT array_agg(x) FROM t") ===
+    assert(keepNullArrayAgg("SELECT array_agg(x) FROM t") ===
       "SELECT transform(collect_list(named_struct('__v', x)), s -> s.__v) FROM t")
-    assert(Dialect.rewriteKeepNullArrayAgg("SELECT array_agg(DISTINCT x) FROM t") ===
+    assert(keepNullArrayAgg("SELECT array_agg(DISTINCT x) FROM t") ===
       "SELECT transform(collect_set(named_struct('__v', x)), s -> s.__v) FROM t")
     // a trailing OVER composes by wrapping transform AROUND the window
-    assert(Dialect.rewriteKeepNullArrayAgg(
+    assert(keepNullArrayAgg(
       "SELECT array_agg(x) OVER (PARTITION BY g) FROM t") ===
       "SELECT transform(collect_list(named_struct('__v', x)) " +
         "OVER (PARTITION BY g), s -> s.__v) FROM t")
     // an implicit alias starting with "over" stays an alias (r15 review
     // fix: word-bounded OVER detection, shared with the FILTER rewrite)
-    assert(Dialect.rewriteKeepNullArrayAgg(
+    assert(keepNullArrayAgg(
       "SELECT array_agg(x) overall FROM t GROUP BY g") ===
       "SELECT transform(collect_list(named_struct('__v', x)), s -> s.__v) " +
         "overall FROM t GROUP BY g")
     // already-exact forms are left alone: the FILTER wrap's '__f' marker,
     // a raise_error guard, and ordered text (the ordered rewrite's job)
-    assert(Dialect.rewriteKeepNullArrayAgg(
+    assert(keepNullArrayAgg(
       "transform(array_agg(CASE WHEN b THEN named_struct('__f', s) END), s -> s.__f)") ===
       "transform(array_agg(CASE WHEN b THEN named_struct('__f', s) END), s -> s.__f)")
-    assert(Dialect.rewriteKeepNullArrayAgg("SELECT array_agg(x ORDER BY k) FROM t") ===
+    assert(keepNullArrayAgg("SELECT array_agg(x ORDER BY k) FROM t") ===
       "SELECT array_agg(x ORDER BY k) FROM t")
-    assert(Dialect.rewriteKeepNullArrayAgg("SELECT 'array_agg(x)' AS s FROM t") ===
+    assert(keepNullArrayAgg("SELECT 'array_agg(x)' AS s FROM t") ===
       "SELECT 'array_agg(x)' AS s FROM t")
 
     // Trino TRY → the try_ family; unshimmed shapes fail fast
-    assert(Dialect.rewriteTrinoTry("TRY(CAST(x AS INTEGER))") ===
+    assert(Dialect.trinoTry("TRY(CAST(x AS INTEGER))") ===
       "try_cast(x AS INTEGER)")
-    assert(Dialect.rewriteTrinoTry("TRY(element_at(a, 5))") ===
+    assert(Dialect.trinoTry("TRY(element_at(a, 5))") ===
       "try_element_at(a, 5)")
-    assert(Dialect.rewriteTrinoTry("TRY(a / b)") === "try_divide(a, b)")
-    assert(Dialect.rewriteTrinoTry("TRY(x % (y % 3))") === "try_mod(x, (y % 3))")
+    assert(Dialect.trinoTry("TRY(a / b)") === "try_divide(a, b)")
+    assert(Dialect.trinoTry("TRY(x % (y % 3))") === "try_mod(x, (y % 3))")
     // nested parens shield inner operators from the top-level split
-    assert(Dialect.rewriteTrinoTry("TRY((a + b) / f(c, d))") ===
+    assert(Dialect.trinoTry("TRY((a + b) / f(c, d))") ===
       "try_divide((a + b), f(c, d))")
-    intercept[UnsupportedError](Dialect.rewriteTrinoTry("TRY(a + b)"))
-    intercept[UnsupportedError](Dialect.rewriteTrinoTry("TRY(a / b / c)"))
+    intercept[UnsupportedError](Dialect.trinoTry("TRY(a + b)"))
+    intercept[UnsupportedError](Dialect.trinoTry("TRY(a / b / c)"))
     // try_cast output is not re-matched (no infinite loop, no double rewrite)
-    assert(Dialect.rewriteTrinoTry("try_cast(x AS INT)") === "try_cast(x AS INT)")
+    assert(Dialect.trinoTry("try_cast(x AS INT)") === "try_cast(x AS INT)")
 
     // generate_series table function: uncorrelated FROM → explode subquery,
     // correlated comma form → LATERAL VIEW (implicit-lateral semantics)
@@ -2053,22 +2058,22 @@ class DialectPropertySpec extends SparkSpec {
       "SELECT arr FROM t ARRAY JOIN arr WHERE k = 1")) // bare in-place form
 
     // T-SQL CROSS/OUTER APPLY STRING_SPLIT → LATERAL VIEW … AS value
-    assert(Dialect.rewriteTsqlApply(
+    assert(Dialect.tsqlApply(identity)(
       "SELECT t.value FROM o CROSS APPLY STRING_SPLIT(p, '-') AS t WHERE k = 1") ===
       "SELECT t.value FROM o LATERAL VIEW explode(string_split(p, '-')) t AS value WHERE k = 1")
-    assert(Dialect.rewriteTsqlApply(
+    assert(Dialect.tsqlApply(identity)(
       "SELECT value FROM o OUTER APPLY STRING_SPLIT(p, ',')") ===
       "SELECT value FROM o LATERAL VIEW OUTER explode(string_split(p, ',')) __apply AS value")
 
     // Snowflake TRY_TO_* → try_cast; format args fail fast
-    assert(Dialect.rewriteSnowTryTo("TRY_TO_NUMBER(x)") ===
+    assert(Dialect.snowTryTo("TRY_TO_NUMBER(x)") ===
       "try_cast(x AS DECIMAL(38, 0))")
-    assert(Dialect.rewriteSnowTryTo("TRY_TO_NUMBER(x, 8, 2)") ===
+    assert(Dialect.snowTryTo("TRY_TO_NUMBER(x, 8, 2)") ===
       "try_cast(x AS DECIMAL(8, 2))")
-    assert(Dialect.rewriteSnowTryTo("TRY_TO_DOUBLE(x)") === "try_cast(x AS DOUBLE)")
-    assert(Dialect.rewriteSnowTryTo("TRY_TO_DATE(x)") === "try_cast(x AS DATE)")
-    assert(Dialect.rewriteSnowTryTo("TRY_TO_BOOLEAN(x)") === "try_cast(x AS BOOLEAN)")
-    intercept[UnsupportedError](Dialect.rewriteSnowTryTo("TRY_TO_DATE(x, 'YYYY')"))
+    assert(Dialect.snowTryTo("TRY_TO_DOUBLE(x)") === "try_cast(x AS DOUBLE)")
+    assert(Dialect.snowTryTo("TRY_TO_DATE(x)") === "try_cast(x AS DATE)")
+    assert(Dialect.snowTryTo("TRY_TO_BOOLEAN(x)") === "try_cast(x AS BOOLEAN)")
+    intercept[UnsupportedError](Dialect.snowTryTo("TRY_TO_DATE(x, 'YYYY')"))
 
     // ARRAY[…] literal → array(…); nests inside-out; subscripts untouched
     assert(Dialect.rewriteArrayLiteral("SELECT ARRAY[1, 2, 3]") ===
@@ -2085,34 +2090,34 @@ class DialectPropertySpec extends SparkSpec {
   }
 
   test("druid: TIME_ function family, DIV, aliases") {
-    assert(Dialect.rewriteDruidTime("TIME_FLOOR(ts, 'PT1H')") ===
+    assert(Dialect.druidTime("TIME_FLOOR(ts, 'PT1H')") ===
       "date_trunc('HOUR', CAST(ts AS TIMESTAMP))")
-    assert(Dialect.rewriteDruidTime("TIME_FLOOR(ts, 'P3M')") ===
+    assert(Dialect.druidTime("TIME_FLOOR(ts, 'P3M')") ===
       "date_trunc('QUARTER', CAST(ts AS TIMESTAMP))")
-    intercept[UnsupportedError](Dialect.rewriteDruidTime("TIME_FLOOR(ts, 'PT15M')"))
-    assert(Dialect.rewriteDruidTime("TIME_CEIL(ts, 'P1D')").contains(
+    intercept[UnsupportedError](Dialect.druidTime("TIME_FLOOR(ts, 'PT15M')"))
+    assert(Dialect.druidTime("TIME_CEIL(ts, 'P1D')").contains(
       "timestampadd(DAY, 1, date_trunc('DAY', CAST(ts AS TIMESTAMP)))"))
-    assert(Dialect.rewriteDruidTime("TIME_SHIFT(ts, 'P2D', 3)") ===
+    assert(Dialect.druidTime("TIME_SHIFT(ts, 'P2D', 3)") ===
       "timestampadd(DAY, (2 * CAST(3 AS INT)), CAST(ts AS TIMESTAMP))")
-    assert(Dialect.rewriteDruidTime("TIME_SHIFT(ts, 'PT1H', -3)") ===
+    assert(Dialect.druidTime("TIME_SHIFT(ts, 'PT1H', -3)") ===
       "timestampadd(HOUR, (1 * CAST(-3 AS INT)), CAST(ts AS TIMESTAMP))")
-    assert(Dialect.rewriteDruidTime("TIME_EXTRACT(ts, 'HOUR')") ===
+    assert(Dialect.druidTime("TIME_EXTRACT(ts, 'HOUR')") ===
       "extract(HOUR FROM CAST(ts AS TIMESTAMP))")
     // ISO DOW re-base: Spark dayofweek is Sunday=1, Druid is Monday=1
-    assert(Dialect.rewriteDruidTime("TIME_EXTRACT(ts, 'DOW')") ===
+    assert(Dialect.druidTime("TIME_EXTRACT(ts, 'DOW')") ===
       "(((dayofweek(CAST(ts AS TIMESTAMP)) + 5) % 7) + 1)")
-    assert(Dialect.rewriteDruidTime("TIME_EXTRACT(ts, 'EPOCH')") ===
+    assert(Dialect.druidTime("TIME_EXTRACT(ts, 'EPOCH')") ===
       "CAST(CAST(ts AS TIMESTAMP) AS BIGINT)")
-    assert(Dialect.rewriteDruidTime("MILLIS_TO_TIMESTAMP(x)") ===
+    assert(Dialect.druidTime("MILLIS_TO_TIMESTAMP(x)") ===
       "timestamp_millis(CAST(x AS BIGINT))")
-    assert(Dialect.rewriteDruidTime("TIMESTAMP_TO_MILLIS(ts)") ===
+    assert(Dialect.druidTime("TIMESTAMP_TO_MILLIS(ts)") ===
       "unix_millis(CAST(ts AS TIMESTAMP))")
     // nested round-trip rewrites inside-out in one pass
-    assert(Dialect.rewriteDruidTime("MILLIS_TO_TIMESTAMP(TIMESTAMP_TO_MILLIS(ts))") ===
+    assert(Dialect.druidTime("MILLIS_TO_TIMESTAMP(TIMESTAMP_TO_MILLIS(ts))") ===
       "timestamp_millis(CAST(unix_millis(CAST(ts AS TIMESTAMP)) AS BIGINT))")
-    assert(Dialect.rewriteDruidDiv("DIV(a, 7)") ===
+    assert(Dialect.druidDiv("DIV(a, 7)") ===
       "(CAST(a AS BIGINT) DIV CAST(7 AS BIGINT))")
-    intercept[UnsupportedError](Dialect.rewriteDruidDiv("DIV(a)"))
+    intercept[UnsupportedError](Dialect.druidDiv("DIV(a)"))
     val spark: org.apache.spark.sql.SparkSession = null
     // trigger tokens inside literals are never rewritten
     assert(Dialect.DruidIsh.rewrite(spark,
@@ -2246,6 +2251,162 @@ class DialectPropertySpec extends SparkSpec {
     // allowlist never get a silent bet on their NULL behavior
     intercept[UnsupportedError](
       Dialect.rewriteAggFilter("some_udaf(v) FILTER (WHERE b)"))
+  }
+
+  /** (lex calls, characters lexed) on this thread while `f` runs. */
+  private def lexed[A](f: => A): (A, Long, Long) = {
+    val (c0, n0) = Dialect.lexCount
+    val a = f
+    val (c1, n1) = Dialect.lexCount
+    (a, c1 - c0, n1 - n0)
+  }
+
+  test("one rewrite lexes at most 8 times its text in every dialect") {
+    // each statement touches its dialect's call entries, its renames, a
+    // clause construct and, where the dialect has one, a statement-level
+    // construct
+    val stmts = Seq(
+      Dialect.DuckDbish -> ("SELECT strftime(d, '%Y'), string_split(s, ','), epoch(ts), len(s), " +
+        "list_value(1, 2), array_agg(x ORDER BY k), list(x) FILTER (WHERE x > 1), a // b, " +
+        "CAST(s AS VARCHAR) FROM t, generate_series(1, 3) AS g " +
+        "QUALIFY row_number() OVER (ORDER BY k) = 1"),
+      Dialect.Trinoish -> ("SELECT date_format(ts, '%Y'), day_of_week(d), TRY(a / b), " +
+        "approx_distinct(x), array_agg(x ORDER BY k), ARRAY[1, 2], sum(x) FILTER (WHERE c) " +
+        "FROM t CROSS JOIN UNNEST(arr) AS u(v) ORDER BY k FETCH FIRST 2 ROWS WITH TIES"),
+      Dialect.Snowflakeish -> ("SELECT TOP 5 IFF(a, 1, 2), TO_CHAR(d, 'YYYY'), TRY_TO_NUMBER(s), " +
+        "DATEADD(day, 1, d), DATEDIFF(month, a, b), DAYNAME(d), ZEROIFNULL(x), TO_VARCHAR(x), " +
+        "LEN(s), ARRAY_AGG(x) WITHIN GROUP (ORDER BY k) FROM t, LATERAL FLATTEN(input => t.a) f " +
+        "QUALIFY row_number() OVER (ORDER BY k) = 1"),
+      Dialect.BigQueryish -> ("SELECT SAFE_CAST(x AS INT64), FORMAT_DATE('%Y', d), " +
+        "DATE_DIFF(a, b, DAY), DATE_ADD(d, INTERVAL 1 DAY), SPLIT(s, ','), GENERATE_ARRAY(1, 3), " +
+        "ARRAY_AGG(x IGNORE NULLS ORDER BY k), a[OFFSET(0)] FROM t, UNNEST(arr) AS v " +
+        "QUALIFY row_number() OVER (ORDER BY k) = 1"),
+      Dialect.MySqlish -> ("SELECT GROUP_CONCAT(x SEPARATOR ';'), DATE_FORMAT(d, '%Y'), " +
+        "DAYNAME(d), LOCATE('a', s), UCASE(s), \"str\" FROM t LIMIT 2, 3"),
+      Dialect.Postgresish -> ("SELECT DISTINCT ON (g) g, TO_CHAR(d, 'YYYY'), EXTRACT(EPOCH FROM ts), " +
+        "string_agg(s, ',' ORDER BY k), array_agg(x ORDER BY k), string_to_array(s, ','), " +
+        "x::TEXT, s ~ 'a', ARRAY[1], sum(x) FILTER (WHERE c) FROM t, UNNEST(t.a) AS u(v) " +
+        "ORDER BY g, k"),
+      Dialect.SqliteIsh -> ("SELECT strftime('%Y', d), date(d, '+1 days'), sum(x) FILTER (WHERE c), " +
+        "\"c\" FROM t WHERE s GLOB 'a*'"),
+      Dialect.OracleIsh -> ("SELECT * FROM (SELECT DECODE(a, 1, 'x', 'y') AS v, " +
+        "TO_DATE(s, 'YYYY-MM-DD') AS e, TO_CHAR(d, 'YYYY') AS f, SYSDATE AS n FROM t " +
+        "ORDER BY a FETCH FIRST 2 ROWS WITH TIES) WHERE ROWNUM <= 3"),
+      Dialect.TsqlIsh -> ("SELECT TOP 3 [a], CONVERT(INT, x), DATEADD(day, 1, d), " +
+        "DATEDIFF(day, a, b), DATEPART(year, d), ISNULL(a, 0), LEN(s) FROM t " +
+        "CROSS APPLY STRING_SPLIT(s, ',') AS p ORDER BY a"),
+      Dialect.RedshiftIsh -> ("SELECT DECODE(a, 1, 'x'), TO_DATE(s, 'YYYY'), TO_CHAR(d, 'YYYY'), " +
+        "s ~ 'a', DATEADD(day, 1, d), DATEDIFF(day, a, b), CAST(s AS VARCHAR), GETDATE(), " +
+        "\"c\" FROM t QUALIFY row_number() OVER (ORDER BY k) = 1"),
+      Dialect.TeradataIsh -> ("SEL TOP 3 a MOD 2 AS m, b ** 2 AS p, ZEROIFNULL(x) AS z, " +
+        "INDEX(s, 'a') AS i FROM t WHERE a GT 1 QUALIFY row_number() OVER (ORDER BY k) = 1 " +
+        "ORDER BY a"),
+      Dialect.ClickHouseIsh -> ("SELECT countIf(x > 1), multiIf(a, 1, b, 2, 3), toYear(d), " +
+        "formatDateTime(d, '%Y'), arrayMap(x -> x, arr), splitByChar(',', s), uniq(x), " +
+        "empty(s), position(s, 'a'), has(arr, 1), g FROM t ARRAY JOIN arr AS e " +
+        "ORDER BY k LIMIT 2 BY g"),
+      Dialect.TableauIsh -> ("SELECT IF a THEN 1 ELSEIF b THEN 2 END, IIF(a, 1, 2), COUNTD(x), " +
+        "DATEADD('day', 1, d), DATEDIFF('day', a, b), DATEPART('year', d), " +
+        "DATETRUNC('month', d), DATENAME('month', d), SPLIT(s, ',', 1), MID(s, 1, 2), [f] FROM t"),
+      Dialect.ExasolIsh -> ("SELECT ADD_DAYS(d, 1), DAYS_BETWEEN(a, b), TRUNC(d, 'MM'), " +
+        "DECODE(a, 1, 2), TO_DATE(s, 'YYYY'), TO_CHAR(d, 'YYYY'), ZEROIFNULL(x), \"c\" FROM t"),
+      Dialect.DruidIsh -> ("SELECT TIME_FLOOR(ts, 'PT1H'), TIME_EXTRACT(ts, 'DOW'), DIV(a, b), " +
+        "APPROX_COUNT_DISTINCT_DS_HLL(x), \"c\" FROM t"))
+    assert(stmts.map(_._1).toSet.size === 15)
+    stmts.foreach { case (d, sql) =>
+      val (out, calls, chars) = lexed(d.rewrite(null, sql))
+      assert(out !== sql, s"$d rewrote nothing")
+      val bound = 8L * math.max(sql.length, out.length)
+      assert(chars <= bound, s"$d lexed $chars characters in $calls calls; bound $bound\n$sql\n$out")
+    }
+  }
+
+  test("pinSortNulls lexes the 3,200-item WITHIN GROUP statement once") {
+    val sql = (0 until 3200).map(i => s"ARRAY_AGG(x) WITHIN GROUP (ORDER BY y) AS x$i")
+      .mkString("SELECT ", ", ", " FROM t")
+    val out = Dialect.Snowflakeish.rewrite(null, sql)
+    val (pinned, calls, chars) = lexed(Dialect.pinSortNulls(out))
+    assert(pinned === out)
+    assert((calls, chars) === ((1L, out.length.toLong)))
+  }
+
+  test("order: DuckDB list() reaches FILTER and keep-null as array_agg") {
+    // a FILTER site covers its aggregate's call: the list → array_agg
+    // rename has to reach the FILTER clause, or the collect-family wrap
+    // is lost (a plain CASE wrap keeps the filtered-out rows as NULLs)
+    val out = Dialect.DuckDbish.rewrite(null,
+      "SELECT list(x) FILTER (WHERE k > 2) AS l, list(y) AS m FROM t")
+    assert(out === "SELECT transform(array_agg(CASE WHEN k > 2 THEN named_struct('__f', x) END), " +
+      "s -> s.__f) AS l, transform(collect_list(named_struct('__v', y)), s -> s.__v) AS m FROM t")
+  }
+
+  test("order: Postgres FILTER applies the string_agg entry to its call") {
+    assert(Dialect.Postgresish.rewrite(null,
+      "SELECT string_agg(s, ',' ORDER BY k) FILTER (WHERE k > 1) AS l FROM t") ===
+      "SELECT listagg(CASE WHEN k > 1 THEN s END, ',') WITHIN GROUP (ORDER BY k NULLS LAST ) AS l FROM t")
+  }
+
+  test("order: Snowflake to_char renames into the to_varchar entry") {
+    assert(Dialect.Snowflakeish.rewrite(null, "SELECT TO_CHAR(d, 'YYYY-MM'), TO_CHAR(k) FROM t") ===
+      "SELECT date_format(d, 'yyyy-MM'), CAST(k AS STRING) FROM t")
+  }
+
+  test("order: T-SQL APPLY applies the STRING_SPLIT entry to its call") {
+    assert(Dialect.TsqlIsh.rewrite(null,
+      "SELECT p.value FROM t CROSS APPLY STRING_SPLIT(s, ',') AS p") ===
+      "SELECT p.value FROM t LATERAL VIEW explode(split(s, '\\\\Q,\\\\E')) p AS value")
+  }
+
+  test("order: Postgres ARRAY[…] inside UNNEST is rewritten before the UNNEST") {
+    assert(Dialect.Postgresish.rewrite(null,
+      "SELECT x, y FROM t, UNNEST(ARRAY[1, 2], ARRAY[k]) AS u(x, y)") ===
+      "SELECT x, y FROM t LATERAL VIEW inline(transform(array_repeat(0, " +
+        "greatest(size(array(1, 2)), size(array(k)))), (__unv, __uni) -> " +
+        "struct(try_element_at(array(1, 2), __uni + 1) AS x, " +
+        "try_element_at(array(k), __uni + 1) AS y))) u AS x, y")
+  }
+
+  test("order: Snowflake FLATTEN sees the table's renames in its input") {
+    // OBJECT_CONSTRUCT is renamed named_struct first, which OBJECT mode
+    // swaps for map(); the metadata column THIS substitutes the
+    // rewritten input
+    assert(Dialect.Snowflakeish.rewrite(null,
+      "SELECT f.key, f.this FROM t, LATERAL FLATTEN(input => OBJECT_CONSTRUCT('a', k), " +
+        "mode => 'OBJECT') f") ===
+      "SELECT f.key, (map('a', k)) FROM t LATERAL VIEW explode(map('a', k)) f AS key, value")
+  }
+
+  test("order: Teradata's table runs before TOP and QUALIFY") {
+    // SEL must be SELECT before the TOP and QUALIFY scopes are parsed
+    val out = Dialect.TeradataIsh.rewrite(null,
+      "SEL TOP 2 k, v FROM t WHERE k GT 1 QUALIFY row_number() OVER (PARTITION BY g ORDER BY k) = 1 " +
+        "ORDER BY k")
+    sameRows(out, "SELECT k, v FROM (SELECT k, v, g, row_number() OVER (PARTITION BY g ORDER BY k) AS r " +
+      "FROM t WHERE k > 1) WHERE r = 1 ORDER BY k LIMIT 2")
+  }
+
+  test("order: ClickHouse's table runs before LIMIT BY") {
+    // the FROM body LIMIT BY keeps must not end in an ARRAY JOIN clause
+    val out = Dialect.ClickHouseIsh.rewrite(null,
+      "SELECT g, e FROM (SELECT g, array(k, v) AS arr FROM t) ARRAY JOIN arr AS e " +
+        "ORDER BY e LIMIT 1 BY g")
+    sameRows(out, "SELECT g, e FROM (SELECT g, e, row_number() OVER (PARTITION BY g " +
+      "ORDER BY e NULLS LAST) AS r FROM (SELECT g, array(k, v) AS arr FROM t) " +
+      "LATERAL VIEW explode(arr) x AS e) WHERE r <= 1")
+  }
+
+  test("order: T-SQL and Oracle tables run before the percent probes") {
+    // the scale plan's leading-key type probe analyzes the key as the
+    // table rewrote it: Spark has no CONVERT function and no SYSDATE
+    fixtures
+    val tsql = Dialect.TsqlIsh.rewrite(spark,
+      "SELECT TOP 50 PERCENT k FROM t ORDER BY CONVERT(BIGINT, k)")
+    assert(tsql.contains("approx_percentile"), tsql)
+    sameRows(tsql, "SELECT k FROM t ORDER BY k LIMIT 3")
+    val oracle = Dialect.OracleIsh.rewrite(spark, "SELECT k FROM t " +
+      "ORDER BY CASE WHEN SYSDATE IS NULL THEN 0 ELSE k END FETCH FIRST 50 PERCENT ROWS ONLY")
+    assert(oracle.contains("approx_percentile"), oracle)
+    sameRows(oracle, "SELECT k FROM t ORDER BY k LIMIT 3")
   }
 }
 

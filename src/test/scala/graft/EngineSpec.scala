@@ -559,19 +559,19 @@ class EngineSpec extends SparkSpec {
   }
 
   test("dialect: OracleIsh constructs — textual rewrites") {
-    assert(Dialect.rewriteOracleDecode("DECODE(x, 1, 'a', 2, 'b', 'z')") ===
+    assert(Dialect.oracleDecode("DECODE(x, 1, 'a', 2, 'b', 'z')") ===
       "CASE WHEN (x) <=> (1) THEN ('a') WHEN (x) <=> (2) THEN ('b') ELSE ('z') END")
-    assert(Dialect.rewriteOracleDecode("DECODE(x, NULL, 'n', 'y')") ===
+    assert(Dialect.oracleDecode("DECODE(x, NULL, 'n', 'y')") ===
       "CASE WHEN (x) <=> (NULL) THEN ('n') ELSE ('y') END") // null-safe match
-    assert(Dialect.rewriteOracleDecode("DECODE(x, 1, 'a')") ===
+    assert(Dialect.oracleDecode("DECODE(x, 1, 'a')") ===
       "CASE WHEN (x) <=> (1) THEN ('a') END") // no default → NULL
-    intercept[UnsupportedError](Dialect.rewriteOracleDecode("DECODE(x, 1)"))
-    assert(Dialect.rewriteOracleToDate("TO_DATE(s, 'YYYY-MM-DD')") ===
+    intercept[UnsupportedError](Dialect.oracleDecode("DECODE(x, 1)"))
+    assert(Dialect.oracleToDate("TO_DATE(s, 'YYYY-MM-DD')") ===
       "to_date(s, 'yyyy-MM-dd')")
     // idempotent: translated output (lowercase Java pattern) passes through
-    assert(Dialect.rewriteOracleToDate("to_date(s, 'yyyy-MM-dd')") ===
+    assert(Dialect.oracleToDate("to_date(s, 'yyyy-MM-dd')") ===
       "to_date(s, 'yyyy-MM-dd')")
-    assert(Dialect.rewriteOracleToDate("TO_DATE(s)") === "TO_DATE(s)")
+    assert(Dialect.oracleToDate("TO_DATE(s)") === "TO_DATE(s)")
     assert(Dialect.rewriteOracleRownum("SELECT * FROM (SELECT a FROM t ORDER BY a) WHERE ROWNUM <= 10") ===
       "SELECT * FROM (SELECT a FROM t ORDER BY a) LIMIT 10")
     assert(Dialect.rewriteOracleRownum("SELECT a FROM t WHERE ROWNUM < 10") ===
@@ -580,30 +580,30 @@ class EngineSpec extends SparkSpec {
       Dialect.rewriteOracleRownum("SELECT ROWNUM, a FROM t"))
     assert(Dialect.rewriteOracleRownum("SELECT 'ROWNUM <= 3' AS s FROM t") ===
       "SELECT 'ROWNUM <= 3' AS s FROM t") // literal untouched
-    assert(Dialect.renameWords("SELECT a FROM t MINUS SELECT a FROM u", Map("MINUS" -> "EXCEPT")) ===
+    assert(Dialect.Table(Nil, words = Map("MINUS" -> "EXCEPT"))("SELECT a FROM t MINUS SELECT a FROM u") ===
       "SELECT a FROM t EXCEPT SELECT a FROM u")
-    assert(Dialect.renameWords("SELECT 'minus here' || SYSDATE FROM t",
-      Map("SYSDATE" -> "current_timestamp()")) === "SELECT 'minus here' || current_timestamp() FROM t")
+    assert(Dialect.Table(Nil, words = Map("SYSDATE" -> "current_timestamp()"))(
+      "SELECT 'minus here' || SYSDATE FROM t") === "SELECT 'minus here' || current_timestamp() FROM t")
   }
 
   test("dialect: Snowflakeish constructs — textual rewrites") {
-    assert(Dialect.rewriteSnowDateAdd("SELECT DATEADD(day, 5, d)") ===
+    assert(Dialect.snowDateAdd("SELECT DATEADD(day, 5, d)") ===
       "SELECT date_add(d, (5))")
-    assert(Dialect.rewriteSnowDateAdd("SELECT DATEADD('month', n, d)") ===
+    assert(Dialect.snowDateAdd("SELECT DATEADD('month', n, d)") ===
       "SELECT add_months(d, (n))")
-    assert(Dialect.rewriteSnowDateAdd("SELECT DATEADD(yyyy, 1, d)") ===
+    assert(Dialect.snowDateAdd("SELECT DATEADD(yyyy, 1, d)") ===
       "SELECT add_months(d, 12 * (1))")
-    assert(Dialect.rewriteSnowDateDiff("SELECT DATEDIFF(year, a, b)") ===
+    assert(Dialect.snowDateDiff("SELECT DATEDIFF(year, a, b)") ===
       "SELECT (year(b) - year(a))")
-    assert(Dialect.rewriteSnowDateDiff("SELECT DATEDIFF(day, a, b)") ===
+    assert(Dialect.snowDateDiff("SELECT DATEDIFF(day, a, b)") ===
       "SELECT date_diff((b), (a))")
     assert(Dialect.translateSnowflakeFormat("YYYY-MM-DD HH24:MI:SS") ===
       "yyyy-MM-dd HH:mm:ss")
-    assert(Dialect.rewriteToVarchar("SELECT TO_VARCHAR(x)") ===
+    assert(Dialect.toVarchar("SELECT TO_VARCHAR(x)") ===
       "SELECT CAST(x AS STRING)")
-    assert(Dialect.rewriteToVarchar("SELECT TO_VARCHAR(d, 'YYYY-MM')") ===
+    assert(Dialect.toVarchar("SELECT TO_VARCHAR(d, 'YYYY-MM')") ===
       "SELECT date_format(d, 'yyyy-MM')")
-    intercept[UnsupportedError](Dialect.rewriteSnowDateDiff("SELECT DATEDIFF(fortnight, a, b)"))
+    intercept[UnsupportedError](Dialect.snowDateDiff("SELECT DATEDIFF(fortnight, a, b)"))
   }
 
   test("dialect: Snowflakeish end-to-end — IFF + NVL2 + quoted idents") {
@@ -635,32 +635,32 @@ class EngineSpec extends SparkSpec {
     assert(Dialect.translateMysqlFormat("%d/%m/%Y %H:%i:%s") === "dd/MM/yyyy HH:mm:ss")
     assert(Dialect.translateMysqlFormat("%W, %M %e") === "EEEE, MMMM d")
     intercept[UnsupportedError](Dialect.translateMysqlFormat("%Q"))
-    assert(Dialect.rewriteMysqlDateFns("SELECT DATE_FORMAT(d, '%Y-%m') AS ym") ===
+    assert(Dialect.mysqlDateFns("SELECT DATE_FORMAT(d, '%Y-%m') AS ym") ===
       "SELECT date_format(d, 'yyyy-MM') AS ym")
     // %-free literals are LITERAL TEXT in MySQL ("characters are copied
     // without interpretation") — quoted for Spark's pattern language,
     // never passed through as pattern letters; one-pass scanning keeps
     // the translated emission from being re-translated
-    assert(Dialect.rewriteMysqlDateFns("SELECT date_format(d, 'ym') AS ym") ===
+    assert(Dialect.mysqlDateFns("SELECT date_format(d, 'ym') AS ym") ===
       "SELECT date_format(d, '''ym''') AS ym")
-    intercept[UnsupportedError](Dialect.rewriteMysqlDateFns("SELECT DATE_FORMAT(d, f)"))
-    assert(Dialect.rewriteMysqlDateFns("SELECT STR_TO_DATE(s, '%d/%m/%Y')") ===
+    intercept[UnsupportedError](Dialect.mysqlDateFns("SELECT DATE_FORMAT(d, f)"))
+    assert(Dialect.mysqlDateFns("SELECT STR_TO_DATE(s, '%d/%m/%Y')") ===
       "SELECT to_date(s, 'dd/MM/yyyy')")
-    assert(Dialect.rewriteMysqlDateFns("SELECT STR_TO_DATE(s, '%Y-%m-%d %H:%i')") ===
+    assert(Dialect.mysqlDateFns("SELECT STR_TO_DATE(s, '%Y-%m-%d %H:%i')") ===
       "SELECT to_timestamp(s, 'yyyy-MM-dd HH:mm')")
     assert(Dialect.rewriteMysqlLimit("SELECT * FROM t LIMIT 10, 5") ===
       "SELECT * FROM t LIMIT 5 OFFSET 10")
     assert(Dialect.rewriteMysqlLimit("SELECT 'LIMIT 1, 2' AS s FROM t LIMIT 3") ===
       "SELECT 'LIMIT 1, 2' AS s FROM t LIMIT 3")
-    assert(Dialect.rewriteMysqlLocate("SELECT LOCATE('-', s) AS p") ===
+    assert(Dialect.mysqlLocate("SELECT LOCATE('-', s) AS p") ===
       "SELECT instr(s, '-') AS p")
-    intercept[UnsupportedError](Dialect.rewriteMysqlLocate("SELECT LOCATE('-', s, 3)"))
-    assert(Dialect.rewriteGroupConcat("SELECT GROUP_CONCAT(x) FROM t") ===
+    intercept[UnsupportedError](Dialect.mysqlLocate("SELECT LOCATE('-', s, 3)"))
+    assert(Dialect.groupConcat("SELECT GROUP_CONCAT(x) FROM t") ===
       "SELECT listagg(x, ',') FROM t")
-    assert(Dialect.rewriteGroupConcat(
+    assert(Dialect.groupConcat(
       "SELECT GROUP_CONCAT(DISTINCT x ORDER BY x SEPARATOR '|') FROM t") ===
       "SELECT listagg(DISTINCT x, '|') WITHIN GROUP (ORDER BY x) FROM t")
-    intercept[UnsupportedError](Dialect.rewriteGroupConcat("SELECT GROUP_CONCAT(a, b)"))
+    intercept[UnsupportedError](Dialect.groupConcat("SELECT GROUP_CONCAT(a, b)"))
   }
 
   test("dialect: MySqlish end-to-end — GROUP_CONCAT + LIMIT offset + renames") {
@@ -701,7 +701,7 @@ class EngineSpec extends SparkSpec {
   }
 
   test("dialect: double-quoted identifiers and // int division") {
-    assert(Dialect.rewriteDoubleQuotedIdents("""SELECT "a b" FROM t WHERE '"' = x""") ===
+    assert(Dialect.prelude("""SELECT "a b" FROM t WHERE '"' = x""", true, false, '"') ===
       "SELECT `a b` FROM t WHERE '\"' = x")
     assert(Dialect.rewriteIntDiv("SELECT a // b, '//' AS lit") ===
       "SELECT a  DIV  b, '//' AS lit")
@@ -712,20 +712,20 @@ class EngineSpec extends SparkSpec {
     assert(Dialect.translateStrftimeFormat("day %d of %B") === "'day 'dd' of 'MMMM")
     assert(Dialect.translateStrftimeFormat("%H:%M:%S%%") === "HH:mm:ss%")
     intercept[UnsupportedError](Dialect.translateStrftimeFormat("%Q"))
-    assert(Dialect.rewriteStrftime("SELECT strftime(d, '%Y-%m') FROM t") ===
+    assert(Dialect.strftime("SELECT strftime(d, '%Y-%m') FROM t") ===
       "SELECT date_format(d, 'yyyy-MM') FROM t")
     // nested call in the first argument survives the arg split
-    assert(Dialect.rewriteStrftime("SELECT strftime(coalesce(a, b), '%j')") ===
+    assert(Dialect.strftime("SELECT strftime(coalesce(a, b), '%j')") ===
       "SELECT date_format(coalesce(a, b), 'DDD')")
   }
 
   test("dialect: string_split quotes literal separators; renames are boundary-aware") {
-    assert(Dialect.rewriteStringSplit("SELECT string_split(s, '.')") ===
+    assert(Dialect.stringSplit("SELECT string_split(s, '.')") ===
       "SELECT split(s, '\\\\Q.\\\\E')")
-    assert(Dialect.rewriteStringSplit("SELECT string_split(s, sep)") ===
+    assert(Dialect.stringSplit("SELECT string_split(s, sep)") ===
       "SELECT split(s, concat('\\\\Q', sep, '\\\\E'))")
-    val ren = Dialect.renameFunctions("SELECT len(a), array_length(b), 'len(x)'",
-      Map("len" -> "length", "array_length" -> "size"))
+    val ren = Dialect.Table(Nil, renames = Map("len" -> "length", "array_length" -> "size"))(
+      "SELECT len(a), array_length(b), 'len(x)'")
     // 'len' inside array_length and inside the string literal stays put
     assert(ren === "SELECT length(a), size(b), 'len(x)'")
   }
