@@ -203,24 +203,24 @@ object Dialect {
     // rewrite one call (a plain CASE wrap under `list(x) FILTER …` would
     // keep the filtered-out rows as null elements). The list_* renames
     // are distinct names.
+    private val renames = Map(
+      "list" -> "array_agg",
+      "len" -> "length",
+      "list_contains" -> "array_contains",
+      "list_has" -> "array_contains",
+      "list_value" -> "array",
+      "list_sort" -> "sort_array",
+      "list_distinct" -> "array_distinct",
+      "array_length" -> "size",
+      "regexp_matches" -> "regexp_like")
     private val table = Table(Seq(rewriteGenerateSeriesTable, rewriteArrayLiteral,
       rewriteIntDiv, rsBareTypes, // DuckDB's unsized VARCHAR/TEXT
-      aggFilter(Map("list" -> "array_agg")),
+      aggFilter(renames),
       // DuckDB shares the inline-ORDER-BY array_agg but defaults to NULLS
       // LAST in BOTH sort directions (Postgres flips on DESC); bare
       // array_agg keeps NULL elements (struct wrap, r15)
       new ArrayAgg(Some(Order(descNullsLast = true)), keepNulls = true),
-      strftime, stringSplit, epoch),
-      renames = Map(
-        "list" -> "array_agg",
-        "len" -> "length",
-        "list_contains" -> "array_contains",
-        "list_has" -> "array_contains",
-        "list_value" -> "array",
-        "list_sort" -> "sort_array",
-        "list_distinct" -> "array_distinct",
-        "array_length" -> "size",
-        "regexp_matches" -> "regexp_like"))
+      strftime, stringSplit, epoch), renames)
 
     def rewrite(spark: SparkSession, sql: String,
         schemas: Map[String, StructType]): String = {
@@ -243,21 +243,23 @@ object Dialect {
     */
   case object Trinoish extends Dialect {
     override val literalBackslashEscapes: Boolean = false
-    private val table = Table(Seq(trinoDateFns, trinoTry, rewriteAggFilter,
+    // a FILTER site covers its aggregate's call, so the FILTER rewrite
+    // reads the aggregate under its renamed, Spark spelling
+    private val renames = Map(
+      "approx_distinct" -> "approx_count_distinct",
+      "strpos" -> "instr",
+      "arbitrary" -> "any_value",
+      "json_extract_scalar" -> "get_json_object",
+      "to_unixtime" -> "unix_timestamp",
+      "codepoint" -> "ascii")
+    private val table = Table(Seq(trinoDateFns, trinoTry, aggFilter(renames),
       // Trino's array_agg takes the inline ORDER BY too; its default
       // null ordering is NULLS LAST regardless of direction (r16
       // second review — previously mis-pinned to the Postgres
       // nulls-largest polarity, wrong on DESC keys) and null VALUES
       // are kept — in the bare form too (struct wrap, r15)
       new ArrayAgg(Some(Order(descNullsLast = true)), keepNulls = true),
-      rewriteArrayLiteral, rewriteUnnest),
-      renames = Map(
-        "approx_distinct" -> "approx_count_distinct",
-        "strpos" -> "instr",
-        "arbitrary" -> "any_value",
-        "json_extract_scalar" -> "get_json_object",
-        "to_unixtime" -> "unix_timestamp",
-        "codepoint" -> "ascii"))
+      rewriteArrayLiteral, rewriteUnnest), renames)
     def rewrite(spark: SparkSession, sql: String,
         schemas: Map[String, StructType]): String = {
       // Trino is ANSI like DuckDB: "ident" is an identifier (Spark's default
@@ -3732,9 +3734,10 @@ object Dialect {
     * `sum(CASE WHEN c THEN x END) OVER w`), which is Postgres's window
     * FILTER semantics. Aggregates taking 2+ non-value arguments (e.g.
     * approx forms with accuracy knobs) are outside the shimmed surface
-    * and raise rather than silently mis-wrap. `canon` names the
-    * aggregates a dialect spells differently (DuckDB's `list` is
-    * array_agg), and `emitted` the passes the aggregate call a site
+    * and raise rather than silently mis-wrap. `canon` is the
+    * dialect's rename map, so an aggregate it spells differently
+    * (DuckDB's `list`, Trino's `approx_distinct`) is rewritten under its
+    * Spark name, and `emitted` the passes the aggregate call a site
     * emits still needs (a FILTER site covers its aggregate's call, so the
     * table's entry for it never sees the call).
     */

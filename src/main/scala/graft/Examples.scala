@@ -12,12 +12,19 @@ object Examples {
   def main(args: Array[String]): Unit = {
     // withExtensions exercises the builder-time registration path of the
     // optimizer extension (the spec covers the live-session install path)
+    val existing = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
+    // getOrCreate hands back a session built earlier in this JVM without
+    // the builder's extensions: attach them live (both are idempotent)
+    if (existing.isDefined) {
+      graft.plans.GraftExtensions.install(spark)
+      graft.plans.AsOfJoin.install(spark)
+    }
     spark.sparkContext.setLogLevel("ERROR")
 
     val t = Engine.tableFromRows(spark, Seq(
@@ -135,10 +142,10 @@ object Examples {
       exactPlan.contains("approx_count_distinct") + " flagged_plan_hll=" +
       approxPlan.contains("approx_count_distinct") + s" approx_n=$approxN")
 
-    // example11: the builder-registered PLANNER STRATEGY — the native
-    // as-of join node plans through this session's withExtensions
-    // registration alone (no live-session install call), proving the
-    // spark.sql.extensions deployment path end-to-end
+    // example11: the builder-registered PLANNER STRATEGY — in a fresh
+    // JVM the native as-of join node plans through this session's
+    // withExtensions registration alone (no live-session install call),
+    // proving the spark.sql.extensions deployment path end-to-end
     locally {
       import spark.implicits._
       val trades = Seq((1L, 10L), (1L, 30L)).toDF("k", "t")
@@ -549,6 +556,7 @@ object Examples {
         s"exclude_replace_v=$exclRepl")
     }
 
-    spark.stop()
+    // a session this JVM had before belongs to its caller
+    if (existing.isEmpty) spark.stop()
   }
 }

@@ -906,7 +906,7 @@ object PlanCheck {
 
   /** Build every driver query's executed-plan string ONCE. Planning is
     * cheap for most queries, but the gate queries that eagerly
-    * localCheckpoint (MLlib fits, N² pair joins) or stage files run real
+    * materialize (MLlib fits, N² pair joins) or stage files run real
     * work just to construct their DataFrame — so the report, the rule
     * audit, and the window lint must all share one planning pass instead
     * of each re-invoking the query builders.

@@ -423,7 +423,7 @@ object StressCheck {
         f"exact_shuffle_mb=${exactB / 1e6}%.1f bloom_shuffle_mb=${bloomB / 1e6}%.1f " +
         f"shuffle_saving_pct=$saving%.0f exact=${exactS}%.2fs bloom=${bloomS}%.2fs")
     }
-    // BPE learn corpus-scan probe (r13): bpeLearnMerges localCheckpoints
+    // BPE learn corpus-scan probe (r13): bpeLearnMerges materializes
     // the word-frequency collapse ONCE, so its 8 sequential argmax
     // actions re-read the vocab-sized checkpoint, not the corpus. The
     // uncheckpointed shape replayed the corpus explode + collapse

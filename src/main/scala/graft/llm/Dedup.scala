@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.ops.Tuning.materialize
 
 /** Deduplication operators for large-scale training-data pipelines — the
   * north-star extensions beyond the reference's surface (BASELINE.json;
@@ -316,13 +317,13 @@ object Dedup {
     * themselves; always one row per document.
     *
     * Cache contract (delegated to connectedComponents): every loop cache
-    * is released before return; the result is a projection over an eager
-    * `localCheckpoint`, so downstream actions never replay the LSH
-    * pipeline. The checkpoint storage is the only retained state and is
-    * released by dropping the result reference (the ContextCleaner frees
-    * the checkpoint RDD on GC) — `unpersist()` on the returned projection
-    * is a no-op, since the storage belongs to the internal checkpoint,
-    * not a CacheManager entry.
+    * is released before return; the result is a projection over a frame
+    * [[graft.ops.Tuning.materialize]] computed eagerly, so downstream
+    * actions never replay the LSH pipeline. The checkpoint storage is the
+    * only retained state and is released by dropping the result reference
+    * (the ContextCleaner frees the checkpoint RDD on GC) — `unpersist()`
+    * on the returned projection is a no-op, since the storage belongs to
+    * the internal checkpoint, not a CacheManager entry.
     */
   def minHashDedup(docs: DataFrame, numHashes: Int = 32, bands: Int = 8,
       threshold: Double = 0.7, maxClosureRounds: Int = 10): DataFrame = {
@@ -648,7 +649,7 @@ object Dedup {
     require(thresholdPpm > 0 && thresholdPpm <= 1000000L,
       "thresholdPpm must be in (0, 1e6]")
     // the shingle-set table feeds THREE consumers (prefix tokens + both
-    // verify sides); an eager localCheckpoint computes the O(len)-per-row
+    // verify sides); materializing it computes the O(len)-per-row
     // shingling once instead of three times, and shingles carry as 8-byte
     // xxhash64 keys everywhere (df count, prefix join, verify intersect) —
     // the same key compression as [[ngramJaccardPairs]], same negligible
@@ -659,12 +660,11 @@ object Dedup {
     // (r20 note: a cores-wide spread of this checkpoint was tried and
     // REVERTED — the expensive pair verify is reduce-side and already
     // parallel; spreading only added a shuffle and task count.)
-    val sets = withShingles(
+    val sets = materialize(withShingles(
         docs.filter(size(split(col(textCol), " ")) >= 3), textCol)
       .select(col("doc_id"),
         expr("transform(shingles, x -> xxhash64(x))").as("hs"))
-      .select(col("doc_id"), size(col("hs")).cast("long").as("n"), col("hs"))
-      .localCheckpoint(true)
+      .select(col("doc_id"), size(col("hs")).cast("long").as("n"), col("hs")))
     val tok = sets.select(col("doc_id"), col("n"), explode(col("hs")).as("s"))
     val dfreq = tok.groupBy(col("s")).agg(count(lit(1)).as("df"))
     val prefix = tok.join(dfreq, "s")
@@ -710,12 +710,11 @@ object Dedup {
       thresholdPpm: Long = 500000L): DataFrame = {
     val pairs = prefixFilteredJaccardPairs(docs, thresholdPpm)
     // The components loop materializes its edge input several times
-    // (undirected closure, node universe, then per-round joins); an eager
-    // checkpoint of the TINY pair list computes the expensive similarity
+    // (undirected closure, node universe, then per-round joins);
+    // materializing the TINY pair list computes the expensive similarity
     // join exactly once and feeds the iteration a flat scan.
-    val edges = org.apache.spark.sql.GraftBridge.flattenPlan(
-      pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-        .localCheckpoint())
+    val edges = org.apache.spark.sql.GraftBridge.flattenPlan(materialize(
+      pairs.select(col("a_id").as("src"), col("b_id").as("dst"))))
     val comp = graft.ops.Relational.connectedComponents(edges)
     comp.groupBy(col("component")).agg(count(lit(1)).as("cluster_size"))
       .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
@@ -849,13 +848,12 @@ object Dedup {
     // threshold — so the sweep is defined over the DISTINCT thresholds
     val thresholds = thresholdsPpm.distinct.sorted
     // the pair list feeds THREE consumers (pairAgg + both union legs of
-    // docAgg); an eager localCheckpoint prices the prefix-filtered join
+    // docAgg); materializing it prices the prefix-filtered join
     // pipeline ONCE — without it each consumer replays the Σdf² join and
     // the 'computed once' contract in the scaladoc is a lie (same rule as
     // dedupClusterStats' checkpointed pair list)
-    val base = prefixFilteredJaccardPairs(docs, thresholds.min, textCol)
-      .select(col("a_id"), col("b_id"), col("common"), col("na"), col("nb"))
-      .localCheckpoint(true)
+    val base = materialize(prefixFilteredJaccardPairs(docs, thresholds.min, textCol)
+      .select(col("a_id"), col("b_id"), col("common"), col("na"), col("nb")))
     val ts = explode(array(thresholds.map(lit): _*)).as("threshold_ppm")
     val q = base.select(ts, col("a_id"), col("b_id"), col("common"),
         col("na"), col("nb"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.OpQueries.OpQ
+import graft.ops.Tuning.materialize
 
 /** Driver queries for the LLM-pipeline operators (dedup, similarity,
   * text analysis, multimodal) over the `documents` / `embeddings` tables.
@@ -79,8 +80,8 @@ object LlmQueries {
   val dedupMinHash = OpQ("llm_dedup_minhash",
     (s, d) => {
       // the shingled frame feeds the dedup (signatures + both verify
-      // sides) AND the independent dual-path recheck below — an eager
-      // localCheckpoint computes the O(tokens)-per-row shingling ONCE
+      // sides) AND the independent dual-path recheck below — materializing
+      // it computes the O(tokens)-per-row shingling ONCE
       // for all five consumers (persist+unpersist can't span the lazy
       // result this gate returns). Gate-scale choice: at corpus scale
       // the library entry point [[Dedup.minHashDedup]] keeps the
@@ -96,8 +97,8 @@ object LlmQueries {
       val dp = s.sparkContext.defaultParallelism
       val base = Dedup.withShingles(docs(s, d))
         .select(col("doc_id"), col("shingles"))
-      val shingled = (if (docs(s, d).rdd.getNumPartitions < dp)
-        base.repartition(dp) else base).localCheckpoint(true)
+      val shingled = materialize(if (docs(s, d).rdd.getNumPartitions < dp)
+        base.repartition(dp) else base)
       val res = Dedup.minHashDedupFromShingles(shingled,
         docs(s, d).select(col("doc_id")))
       val roots = res.select(col("doc_id").as("keep_id"),
@@ -1976,12 +1977,12 @@ object LlmQueries {
   val dedupMinHashMl = OpQ("llm_dedup_minhash_ml",
     (s, d) => {
       val corpus = docs(s, d).filter(col("doc_id") < 1000)
-      // both pair frames feed multiple gate branches — eager checkpoint
+      // both pair frames feed multiple gate branches — materializing them
       // computes the MLlib join and the prefix-filtered verify once
-      val found = MlLsh.minHashPairsMl(corpus, maxJaccardDistance = 0.3)
-        .select(col("a_id"), col("b_id")).localCheckpoint(true)
-      val truePairs = Dedup.prefixFilteredJaccardPairs(corpus, thresholdPpm = 700000L)
-        .localCheckpoint(true)
+      val found = materialize(MlLsh.minHashPairsMl(corpus, maxJaccardDistance = 0.3)
+        .select(col("a_id"), col("b_id")))
+      val truePairs = materialize(
+        Dedup.prefixFilteredJaccardPairs(corpus, thresholdPpm = 700000L))
       val nTrue = truePairs.agg(count(lit(1)).as("n_true"))
       val nHit = truePairs.join(found, Seq("a_id", "b_id"), "left_semi")
         .agg(count(lit(1)).as("n_hit"))
@@ -2041,12 +2042,12 @@ object LlmQueries {
   val embeddingPairsMl = OpQ("llm_embedding_pairs_ml",
     (s, d) => {
       val thrM = 1322500L // floor(1.15^2 * 1e6)
-      // both small frames feed three gate branches each — an eager
-      // localCheckpoint computes the MLlib LSH join and the N²/2 exact
+      // both small frames feed three gate branches each — materializing
+      // them computes the MLlib LSH join and the N²/2 exact
       // join ONCE instead of per-branch (the same contract as
       // minHashDedup's shingle persist)
-      val found = MlLsh.embeddingPairsMl(emb(s, d), maxL2 = 1.15)
-        .select(col("a_id"), col("b_id")).localCheckpoint(true)
+      val found = materialize(MlLsh.embeddingPairsMl(emb(s, d), maxL2 = 1.15)
+        .select(col("a_id"), col("b_id")))
       // norms once per VECTOR (N scaled dots), only the cross-dot per PAIR
       // (N²/2) — same integer tree either way, 3× fewer hot-loop dots
       val e = emb(s, d).select(col("vec_id"),
@@ -2062,10 +2063,10 @@ object LlmQueries {
           col("a_norm") + col("b_norm") -
             lit(2L) * graft.functions.ScaledDotMicros.scaled_dot_micros(col("a_vd"), col("b_vd")))
         .select(pairs.columns.toIndexedSeq.map(col) :+ col("sq_m"): _*)
-      val truePairs = sqJoin(
+      val truePairs = materialize(sqJoin(
           e.select(col("vec_id").as("a_id"))
             .join(e.select(col("vec_id").as("b_id")), col("a_id") < col("b_id")))
-        .filter(col("sq_m") <= thrM).localCheckpoint(true)
+        .filter(col("sq_m") <= thrM))
       val nTrue = truePairs.agg(count(lit(1)).as("n_true"))
       val nHit = truePairs.join(found, Seq("a_id", "b_id"), "left_semi")
         .agg(count(lit(1)).as("n_hit"))

@@ -12,74 +12,6 @@ import graft.functions.RollingHash64.rolling_hash64
   */
 object TextAnalysis {
 
-  /** How the BPE learn loop materializes its loop-carried frames (the
-    * word-frequency collapse and each round's 1-row winning pair). The
-    * loop runs one ACTION per round, so without materialization every
-    * round replays the corpus collapse — but the three ways to pin the
-    * frame trade fault tolerance against speed at cluster scale:
-    *
-    *  - [[Materializer.Local]] (`localCheckpoint`): stores blocks on the
-    *    executors that computed them and TRUNCATES lineage — fastest, but
-    *    an executor loss (preemption, dynamic deallocation) mid-loop
-    *    kills the whole multi-round learn with no recompute path. The
-    *    right default on a single-JVM `local[n]` master, where executor
-    *    loss means the app is dead anyway.
-    *  - [[Materializer.Persisted]] (`persist(MEMORY_AND_DISK)` + an eager
-    *    `count()`): blocks live on executors too, but lineage SURVIVES —
-    *    a lost block recomputes from upstream (cascading to the corpus
-    *    scan in the worst case: slower, never wrong). No cluster
-    *    prerequisites.
-    *  - [[Materializer.Reliable]] (`checkpoint`): writes the frame to the
-    *    configured checkpoint directory (HDFS/object store) — survives
-    *    any executor loss at the cost of a distributed write per
-    *    materialization. Requires `SparkContext.setCheckpointDir`.
-    *
-    * [[Materializer.auto]] picks Reliable when a checkpoint dir is set
-    * and Local otherwise, so local runs keep the established behavior
-    * and a cluster job opts into fault tolerance by configuring the
-    * directory it already has.
-    *
-    * Retention: the materialized frames BACK the returned DataFrame
-    * (the learn loop's 1-row round winners union into the result), so
-    * nothing is unpersisted inside the operator — blocks are reclaimed
-    * by Spark's ContextCleaner once the caller drops the frame.
-    * Reliable's checkpoint files additionally outlive the app unless
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` is set —
-    * a repeated-learn cluster job should either set it or point the
-    * checkpoint dir at a per-run path it deletes afterwards.
-    */
-  sealed trait Materializer {
-    def apply(df: DataFrame): DataFrame
-  }
-  object Materializer {
-    /** Executor-block localCheckpoint: fast, lineage-truncating, NOT
-      * fault-tolerant under executor loss.
-      */
-    case object Local extends Materializer {
-      def apply(df: DataFrame): DataFrame = df.localCheckpoint()
-    }
-    /** persist(MEMORY_AND_DISK) + eager count: keeps lineage, so lost
-      * blocks recompute instead of failing the job.
-      */
-    case object Persisted extends Materializer {
-      def apply(df: DataFrame): DataFrame = {
-        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        p
-      }
-    }
-    /** Reliable checkpoint to the configured checkpoint directory —
-      * survives executor loss; requires `setCheckpointDir`.
-      */
-    case object Reliable extends Materializer {
-      def apply(df: DataFrame): DataFrame = df.checkpoint()
-    }
-    /** Reliable when a checkpoint dir is configured, else Local. */
-    def auto(df: DataFrame): Materializer =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) Reliable
-      else Local
-  }
-
   /** Token/character statistics: token count, distinct-token count, char
     * count, exact average word length.
     */
@@ -709,28 +641,28 @@ object TextAnalysis {
     * come back if the corpus runs out of pairs.
     *
     * Fully declarative — no `collect()`, no driver loop over data: each
-    * round's winning pair is a 1-row argmax frame, `localCheckpoint`ed
-    * (the established loop-flattening discipline — a 1-row deterministic
-    * frame, so partition invariance is unaffected) and broadcast-joined
-    * back so the NEXT round's `replace` takes the pair as COLUMNS. The
+    * round's winning pair is a 1-row argmax frame, materialized by
+    * [[graft.ops.Tuning.materialize]] (the loop-flattening discipline —
+    * a 1-row deterministic frame, so partition invariance is unaffected)
+    * and broadcast-joined back so the NEXT round's `replace` takes the
+    * pair as COLUMNS. The
     * symbol stream is [[bpeEncode]]'s boundary-wrapped form, so each
     * merge is the same greedy whole-symbol replace the encoder applies.
     *
     * Scale: the corpus collapses to its word-frequency table first (one
     * map-side-combined shuffle — |vocab| rows, not corpus rows), and
-    * that table is `localCheckpoint`ed ONCE so the collapse runs ONE
+    * that table is materialized ONCE so the collapse runs ONE
     * time: each round's argmax is a separate action, and without the
     * checkpoint every round would replay the corpus explode + collapse
     * shuffle (8 rounds = 8 corpus scans — an 8× waste at 100 TB). Every
     * round then costs one vocab-sized pair aggregation + a 1-row
     * broadcast. Rounds are sequential by nature (BPE is an inherently
     * iterative algorithm); the per-round cost is corpus-independent
-    * after the materialized collapse. Fault tolerance of the
-    * materialized frames is pluggable via `materializer` (r14 — see
-    * [[Materializer]]): the default picks the reliable checkpoint when
-    * a checkpoint dir is configured (cluster mode, where an 8-round
-    * learn must survive executor loss) and localCheckpoint otherwise
-    * (single-JVM local masters, the established behavior).
+    * after the materialized collapse. Both materializations follow the
+    * library's one rule: a reliable checkpoint when the context has a
+    * checkpoint dir (a cluster learn then survives executor loss), a
+    * local one otherwise. The round winners back the returned frame, so
+    * nothing is unpersisted inside the operator.
     *
     * Session conf: while the rounds run it narrows
     * `spark.sql.shuffle.partitions` to the loop width (when that is
@@ -741,10 +673,8 @@ object TextAnalysis {
     * cached-plan AQE flag alone.
     */
   def bpeLearnMerges(docs: DataFrame, rounds: Int = 8,
-      textCol: String = "text",
-      materializer: Option[Materializer] = None): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     require(rounds > 0 && rounds <= 64, "rounds must be in 1..64")
-    val mat = materializer.getOrElse(Materializer.auto(docs))
     val sep = "\u001F"
     val sep2 = sep + sep
     // materialize the vocab-sized collapse ONCE: each round's argmax
@@ -754,7 +684,7 @@ object TextAnalysis {
     // measured loop cost is per-job scheduling, ~49 jobs on 56 tasks,
     // not map-side compute, so the spread only added a shuffle and
     // 6× the task count for flat-to-worse time.)
-    val words = mat(docs
+    val words = graft.ops.Tuning.materialize(docs
       .select(explode(split(lower(coalesce(col(textCol), lit(""))), WsSplitRegex)).as("word"))
       .filter(length(col("word")) >= 2)
       .groupBy(col("word")).agg(count(lit(1)).as("wc"))
@@ -785,7 +715,7 @@ object TextAnalysis {
       for (r <- 1 to rounds) {
         // 1-row deterministic frame; materializing keeps round r+1's plan
         // from re-nesting every earlier round's aggregation
-        val top = mat(topPair(cur))
+        val top = graft.ops.Tuning.materialize(topPair(cur))
         out += top.select(lit(r.toLong).as("round"), col("x"), col("y"),
           concat(col("x"), col("y")).as("merged"), col("n"))
         cur = cur.crossJoin(broadcast(top.select(col("x"), col("y"))))
@@ -820,11 +750,10 @@ object TextAnalysis {
     * broadcast — no shuffle on the encode side at any corpus size.
     */
   def bpeEncodeLearned(docs: DataFrame, rounds: Int = 8,
-      textCol: String = "text",
-      materializer: Option[Materializer] = None): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     val sep = "\u001F"
     val sep2 = sep + sep
-    val ms = bpeLearnMerges(docs, rounds, textCol, materializer)
+    val ms = bpeLearnMerges(docs, rounds, textCol)
       .groupBy()
       .agg(sort_array(collect_list(struct(col("round"), col("x"), col("y"))))
         .as("ms"))

@@ -524,10 +524,12 @@ object Relational {
     * `LogicalRDD` over the cache ([[org.apache.spark.sql.GraftBridge.flattenPlan]]):
     * the round's self-joins reference the previous table several times, so
     * without flattening the plan tree grows ~4× per round and Spark OOMs
-    * formatting it long before any data pressure. The result is an eager
-    * `localCheckpoint` and every working cache is dropped before returning —
-    * the caller holds the only retained storage and releases it by dropping
-    * the result.
+    * formatting it long before any data pressure. The result is computed
+    * by [[Tuning.materialize]] (a reliable checkpoint when the context has
+    * a checkpoint dir, a local one otherwise), and every working cache is
+    * dropped before returning, normally or by exception — the caller
+    * holds the only retained storage and releases it by dropping the
+    * result.
     *
     * At 100 TB: every step is a key shuffle or a self-join on the label
     * table — no per-component state ever lands on one executor, and round
@@ -553,12 +555,11 @@ object Relational {
       maxRounds: Int = 30): DataFrame =
     // every working cache below (und, nodeIds, labels, per-round frames)
     // is re-read by later rounds — let AQE size them by bytes (r20)
-    Tuning.withAqeSizedCaches(edges.sparkSession) {
+    Tuning.withAqeSizedCaches(edges.sparkSession) { Tuning.withCaches { caches =>
     val e = edges.select(col(srcCol).as("__a"), col(dstCol).as("__b"))
-    val und = e.union(e.select(col("__b").as("__a"), col("__a").as("__b")))
+    val und = caches.persist(e.union(e.select(col("__b").as("__a"), col("__a").as("__b")))
       .filter(col("__a") =!= col("__b"))
-      .distinct()
-      .persist()
+      .distinct())
     // Node universe comes from the RAW endpoints, before the self-loop
     // filter above — a node whose only edge is a self-loop is a singleton
     // component, not absent.
@@ -568,81 +569,62 @@ object Relational {
     // and the restore join after convergence re-reads it — before the
     // subgraph iteration it seeded the (persisted) label table, so the
     // input plan evaluated once; the persist keeps that property.
-    val nodeIds = nodes
+    val nodeIds = caches.persist(nodes
       .map(n => n.select(col(n.columns.head).as("node")).union(endpoints))
       .getOrElse(endpoints)
-      .distinct()
-      .persist()
+      .distinct())
     // Only nodes on a real (non-self-loop) edge can ever change label —
     // the loop iterates over THEM alone; everyone else (incl. self-loop-
     // only nodes) is a singleton restored by the final left join.
     val active = und.select(col("__a").as("node")).distinct()
-    var cached = active.select(col("node"), col("node").as("lbl")).persist()
-    // In-flight per-round caches, tracked so an exception anywhere in the
-    // loop (including the non-convergence require below) releases them.
-    var relaxedLive: DataFrame = null
-    var jumpedLive: DataFrame = null
-    try {
-      // materialize before the loop reuses it on several join sides; the
-      // counts also size the loop's scoped shuffle width (r20, guide
-      // §2.2: per-round shuffles must track the working set — label,
-      // edge and node-universe rows — not the session conf; see Tuning).
-      // The edge and node counts are taken only when the session is wider
-      // than the loop floor; `und` is materialized by this first count.
-      val activeN = cached.count()
-      Tuning.withLoopParallelism(edges.sparkSession,
-        Seq(activeN, und.count(), nodeIds.count()).max) {
-      var labels = org.apache.spark.sql.GraftBridge.flattenPlan(cached)
-      var round = 0
-      var converged = false
-      while (round < maxRounds && !converged) {
-        // r19 (guide §2.4): the start-of-round label rides along as
-        // `__old` so the convergence check is a FILTER on the jumped
-        // frame instead of a third per-round join back onto `labels`
-        // (one fewer shuffle+build per round; the comparison is the same
-        // jumped-vs-start-of-round one).
-        val relaxed = {
-          val nmin = und.join(labels, col("__b") === col("node"))
-            .groupBy(col("__a")).agg(min(col("lbl")).as("__nmin"))
-          labels.join(nmin, col("node") === col("__a"), "left")
-            .select(col("node"), col("lbl").as("__old"),
-              least(col("lbl"), coalesce(col("__nmin"), col("lbl"))).as("lbl"))
-            .persist()
-        }
-        relaxedLive = relaxed
-        val parents = relaxed.select(col("node").as("__p"), col("lbl").as("__plbl"))
-        val jumped = relaxed.join(parents, col("lbl") === col("__p"))
-          .select(col("node"), col("__old"), least(col("lbl"), col("__plbl")).as("lbl"))
-          .persist()
-        jumpedLive = jumped
-        val changed = jumped.filter(col("lbl") =!= col("__old")).count() // materializes jumped
-        converged = changed == 0
-        relaxed.unpersist()
-        relaxedLive = null
-        cached.unpersist() // jumped is in its own cache now; safe to drop
-        cached = jumped
-        jumpedLive = null
-        labels = org.apache.spark.sql.GraftBridge.flattenPlan(cached)
-        round += 1
+    var cached = caches.persist(active.select(col("node"), col("node").as("lbl")))
+    // materialize before the loop reuses it on several join sides; the
+    // counts also size the loop's scoped shuffle width (r20: per-round
+    // shuffles must track the working set — label, edge and
+    // node-universe rows — not the session conf; see Tuning).
+    // The edge and node counts are taken only when the session is wider
+    // than the loop floor; `und` is materialized by this first count.
+    val activeN = cached.count()
+    Tuning.withLoopParallelism(edges.sparkSession,
+      Seq(activeN, und.count(), nodeIds.count()).max) {
+    var labels = org.apache.spark.sql.GraftBridge.flattenPlan(cached)
+    var round = 0
+    var converged = false
+    while (round < maxRounds && !converged) {
+      // r19: the start-of-round label rides along as
+      // `__old` so the convergence check is a FILTER on the jumped
+      // frame instead of a third per-round join back onto `labels`
+      // (one fewer shuffle+build per round; the comparison is the same
+      // jumped-vs-start-of-round one).
+      val relaxed = {
+        val nmin = und.join(labels, col("__b") === col("node"))
+          .groupBy(col("__a")).agg(min(col("lbl")).as("__nmin"))
+        caches.persist(labels.join(nmin, col("node") === col("__a"), "left")
+          .select(col("node"), col("lbl").as("__old"),
+            least(col("lbl"), coalesce(col("__nmin"), col("lbl"))).as("lbl")))
       }
-      // Relaxation + pointer jumping converge in O(log longestChain) rounds:
-      // the default 30 covers chains ~2^30 deep, far past any real corpus.
-      // Non-convergence therefore means maxRounds was lowered deliberately —
-      // fail hard rather than return a partially-merged labeling.
-      require(converged, s"connectedComponents did not converge in $maxRounds rounds")
-      // restore the full universe: nodes the loop never saw keep themselves
+      val parents = relaxed.select(col("node").as("__p"), col("lbl").as("__plbl"))
+      val jumped = caches.persist(relaxed.join(parents, col("lbl") === col("__p"))
+        .select(col("node"), col("__old"), least(col("lbl"), col("__plbl")).as("lbl")))
+      val changed = jumped.filter(col("lbl") =!= col("__old")).count() // materializes jumped
+      converged = changed == 0
+      caches.release(relaxed)
+      caches.release(cached) // jumped is in its own cache now; safe to drop
+      cached = jumped
+      labels = org.apache.spark.sql.GraftBridge.flattenPlan(cached)
+      round += 1
+    }
+    // Relaxation + pointer jumping converge in O(log longestChain) rounds:
+    // the default 30 covers chains ~2^30 deep, far past any real corpus.
+    // Non-convergence therefore means maxRounds was lowered deliberately —
+    // fail hard rather than return a partially-merged labeling.
+    require(converged, s"connectedComponents did not converge in $maxRounds rounds")
+    // restore the full universe: nodes the loop never saw keep themselves
+    Tuning.materialize(
       nodeIds.join(labels.select(col("node"), col("lbl")), Seq("node"), "left")
-        .select(col("node"), coalesce(col("lbl"), col("node")).as("component"))
-        .localCheckpoint(true)
-      }
-    } finally {
-      if (relaxedLive != null) relaxedLive.unpersist()
-      if (jumpedLive != null) jumpedLive.unpersist()
-      cached.unpersist()
-      nodeIds.unpersist()
-      und.unpersist()
+        .select(col("node"), coalesce(col("lbl"), col("node")).as("component")))
     }
-    }
+    } }
 
   /** Fixed-iteration PageRank over a directed edge list, in EXACT
     * integer arithmetic: ranks live on a `scale`-denominator grid
@@ -682,62 +664,52 @@ object Relational {
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct in [0,100]")
     // e, nodes, edeg and every per-round rank cache are re-read each
     // iteration — let AQE size them by bytes (r20)
-    Tuning.withAqeSizedCaches(edges.sparkSession) {
-    val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-      .distinct().persist()
-    try {
-      val nodes = e.select(col("__src").as("node"))
-        .union(e.select(col("__dst").as("node"))).distinct().persist()
-      try {
-        // r19 (guide §2.4): e ⋈ deg is loop-INVARIANT — computing it
-        // inside the iteration re-ran the degree aggregate and its join
-        // every round (two extra exchanges per iteration). Hoisted and
-        // persisted, each round is exactly the two fundamental shuffles:
-        // contribution join on src, aggregation on dst.
-        val edeg = e.join(
-            e.groupBy(col("__src")).agg(count(lit(1)).as("__deg")), "__src")
-          .persist()
-        try {
-        // One scalar action: the node count fixes the uniform start mass.
-        val nodeN = nodes.count()
-        val base = scale / nodeN
-        // `cached` is the persisted handle (the one that can unpersist);
-        // `ranks` is its plan-flattened view — see GraftBridge.flattenPlan
-        // on why both are needed.
-        var cached = nodes.select(col("node"), lit(base).as("rank_ppb")).persist()
-        try {
-          // the edge count sizes the scoped per-round shuffle width (r20,
-          // guide §2.2 — see Tuning): each round is one edges⋈ranks
-          // shuffle plus one dst aggregation, so the width must track
-          // edges, not conf. `e` is materialized by the node count above.
-          Tuning.withLoopParallelism(edges.sparkSession,
-            math.max(nodeN, e.count())) {
-          cached.count()
-          var ranks = org.apache.spark.sql.GraftBridge.flattenPlan(cached)
-          for (_ <- 1 to iterations) {
-            val contrib = edeg
-              .join(ranks, col("__src") === col("node"))
-              .groupBy(col("__dst"))
-              .agg(sum(expr("rank_ppb div __deg")).as("__s"))
-            val next = nodes
-              .join(contrib, col("node") === col("__dst"), "left")
-              .select(col("node"),
-                expr(s"((${100L - dampingPct}L * ${base}L) + " +
-                  s"(${dampingPct}L * coalesce(__s, 0L))) div 100L")
-                  .as("rank_ppb"))
-              .persist()
-            next.count() // materialize before dropping the previous round
-            cached.unpersist()
-            cached = next
-            ranks = org.apache.spark.sql.GraftBridge.flattenPlan(next)
-          }
-          ranks.localCheckpoint(true)
-          }
-        } finally cached.unpersist()
-        } finally edeg.unpersist()
-      } finally nodes.unpersist()
-    } finally e.unpersist()
+    Tuning.withAqeSizedCaches(edges.sparkSession) { Tuning.withCaches { caches =>
+    val e = caches.persist(edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
+      .distinct())
+    val nodes = caches.persist(e.select(col("__src").as("node"))
+      .union(e.select(col("__dst").as("node"))).distinct())
+    // r19: e ⋈ deg is loop-INVARIANT — computing it
+    // inside the iteration re-ran the degree aggregate and its join
+    // every round (two extra exchanges per iteration). Hoisted and
+    // persisted, each round is exactly the two fundamental shuffles:
+    // contribution join on src, aggregation on dst.
+    val edeg = caches.persist(e.join(
+      e.groupBy(col("__src")).agg(count(lit(1)).as("__deg")), "__src"))
+    // One scalar action: the node count fixes the uniform start mass.
+    val nodeN = nodes.count()
+    val base = scale / nodeN
+    // `cached` is the persisted handle (the one that can unpersist);
+    // `ranks` is its plan-flattened view — see GraftBridge.flattenPlan
+    // on why both are needed.
+    var cached = caches.persist(nodes.select(col("node"), lit(base).as("rank_ppb")))
+    // the edge count sizes the scoped per-round shuffle width (r20,
+    // see Tuning): each round is one edges⋈ranks
+    // shuffle plus one dst aggregation, so the width must track
+    // edges, not conf. `e` is materialized by the node count above.
+    Tuning.withLoopParallelism(edges.sparkSession,
+      math.max(nodeN, e.count())) {
+    cached.count()
+    var ranks = org.apache.spark.sql.GraftBridge.flattenPlan(cached)
+    for (_ <- 1 to iterations) {
+      val contrib = edeg
+        .join(ranks, col("__src") === col("node"))
+        .groupBy(col("__dst"))
+        .agg(sum(expr("rank_ppb div __deg")).as("__s"))
+      val next = caches.persist(nodes
+        .join(contrib, col("node") === col("__dst"), "left")
+        .select(col("node"),
+          expr(s"((${100L - dampingPct}L * ${base}L) + " +
+            s"(${dampingPct}L * coalesce(__s, 0L))) div 100L")
+            .as("rank_ppb")))
+      next.count() // materialize before dropping the previous round
+      caches.release(cached)
+      cached = next
+      ranks = org.apache.spark.sql.GraftBridge.flattenPlan(next)
     }
+    Tuning.materialize(ranks)
+    }
+    } }
   }
 
   /** Exact bivariate statistics (covariance, Pearson correlation) from six
@@ -1267,9 +1239,8 @@ object Relational {
     // session is wider than the loop floor.
     val parts = Tuning.loopPartitions(df.count(),
       df.sparkSession.sessionState.conf.numShufflePartitions)
-    val ranged = df.repartitionByRange(parts, order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
+    val ranged = Tuning.materialize(df.repartitionByRange(parts, order: _*)
+      .withColumn("__pid", spark_partition_id()))
     // ONE broadcast-sized frame carries both the per-partition rank
     // offset and the grand total (two frames over the window over the
     // same ≤`parts` count rows — same pass, one fewer broadcast job and
@@ -1316,8 +1287,8 @@ object Relational {
     * (m² blowup) should be capped upstream — flag with [[skewDiagnose]].
     *
     * NOTE (r19 advice): constructing this frame EAGERLY materializes the
-    * distinct (group, item) set (an executor-memory `localCheckpoint`,
-    * reclaimed by GC when the result is dropped) — explain-only callers
+    * distinct (group, item) set ([[Tuning.materialize]], reclaimed when
+    * the result is dropped) — explain-only callers
     * pay that one job too. Intentional: the set feeds five consumers
     * whose per-consumer pruning would otherwise defeat every reuse.
     */
@@ -1331,8 +1302,8 @@ object Relational {
     // frame (smaller than the input by construction) replaces five full
     // scans + five distinct shuffles with one of each; same pattern as
     // connectedComponents'/pageRank's working caches.
-    val items = df.select(col(groupCol).as("__g"), col(itemCol).as("__item"))
-      .distinct().localCheckpoint(true)
+    val items = Tuning.materialize(
+      df.select(col(groupCol).as("__g"), col(itemCol).as("__item")).distinct())
     val itemCnt = items.groupBy(col("__item")).agg(count(lit(1)).as("__n"))
     val total = items.select(countDistinct(col("__g")).as("__ntotal"))
     // r20 (guide §2.5): the self-join's OUTPUT is Σ m_g² — much bigger

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Scoped parallelism tuning for the iterative operators (r20).
+/** Scoped parallelism tuning, materialization and working caches for the
+  * iterative operators.
   *
   * The iterative loops (connected components, PageRank, BPE induction)
   * run many small actions over working frames that are orders of
@@ -25,6 +26,44 @@ import org.apache.spark.sql.SparkSession
   * nothing here is a local-mode-only constant.
   */
 object Tuning {
+
+  /** Compute `df` now and cut its lineage: the one materialization rule
+    * of the operator library. With a checkpoint dir set on the
+    * SparkContext (`setCheckpointDir`, the deployment path a cluster job
+    * already has) it writes a reliable `checkpoint()` there, which
+    * survives executor loss; without one it keeps the blocks on the
+    * executors that computed them (`localCheckpoint()`), the fast path
+    * on a single-JVM master, where losing an executor loses the app
+    * anyway. Both are eager: the frame is computed before this returns.
+    *
+    * Retention: the returned frame scans the checkpoint, so nothing is
+    * released here. Local checkpoint blocks are freed by Spark's
+    * ContextCleaner once the caller drops the frame. Reliable checkpoint
+    * files outlive the app unless
+    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` is set; a
+    * job that materializes repeatedly should set it, or point the
+    * checkpoint dir at a per-run path it deletes afterwards.
+    */
+  def materialize(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint()
+
+  /** The working caches of one operator call; see [[withCaches]]. */
+  final class Caches private[Tuning] {
+    private[Tuning] val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    /** `df.persist()`, held until [[release]] or the scope's exit. */
+    def persist(df: DataFrame): DataFrame = { held += df; df.persist() }
+    /** Unpersist `df` before the scope exits. */
+    def release(df: DataFrame): Unit = { held -= df; df.unpersist() }
+  }
+
+  /** Run `body` with a scope of working caches, unpersisting every frame
+    * it still holds when `body` exits, normally or by exception.
+    */
+  def withCaches[A](body: Caches => A): A = {
+    val caches = new Caches
+    try body(caches) finally caches.held.foreach(_.unpersist())
+  }
 
   /** Run `body` with SQL confs temporarily overridden, restoring the
     * previous values (or unsetting ones that were unset) even on

@@ -19,6 +19,11 @@ package graft
   * query surfaces a raw sketch/binary column. Queries are CONSTRUCTED
   * after each conf change (the fn builds a fresh plan, so the setting
   * is honored at planning time).
+  *
+  * The same holds across the two materialization modes of
+  * [[graft.ops.Tuning.materialize]]: every query that materializes
+  * returns the same rows with a checkpoint dir set (reliable
+  * checkpoints, which its plan must then scan) as without one.
   */
 class DeterminismSpec extends SparkSpec {
 
@@ -67,5 +72,37 @@ class DeterminismSpec extends SparkSpec {
       spark.conf.set("spark.sql.shuffle.partitions", prevPartitions)
     }
     assert(failures.isEmpty, s"\n${failures.mkString("\n")}")
+  }
+
+  /** One `SparkEntry.queries` entry per [[graft.ops.Tuning.materialize]] caller. */
+  private val materializing = Seq(
+    "op_graph_components", "op_graph_pagerank", "op_histogram_equifreq",
+    "op_cooccurrence", "llm_dedup_jaccard_prefix", "llm_dedup_cluster_stats",
+    "llm_dedup_threshold_sweep", "llm_dedup_minhash", "llm_dedup_minhash_ml",
+    "llm_embedding_pairs_ml", "llm_bpe_learn")
+
+  /** Whether `df`'s plan scans an RDD written to a reliable checkpoint. */
+  private def scansReliableCheckpoint(df: org.apache.spark.sql.DataFrame): Boolean = {
+    def reliable(rdd: org.apache.spark.rdd.RDD[_]): Boolean =
+      rdd.getCheckpointFile.isDefined || rdd.dependencies.exists(d => reliable(d.rdd))
+    df.queryExecution.analyzed
+      .collectWithSubqueries { case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd }
+      .exists(reliable)
+  }
+
+  test("with a checkpoint dir every materialize caller scans a reliable checkpoint, same rows") {
+    initLog()
+    def run(q: String) = {
+      val df = SparkEntry.queries(q)(spark, sfDir)
+      (canon(df.collect()), scansReliableCheckpoint(df))
+    }
+    val local = materializing.map(run)
+    val reliable = withCheckpointDir(materializing.map(run))
+    materializing.zip(local.zip(reliable)).foreach {
+      case (q, ((localRows, localScan), (reliableRows, reliableScan))) =>
+        assert(reliableRows === localRows, q)
+        assert(!localScan, s"$q scans a reliable checkpoint without a checkpoint dir")
+        assert(reliableScan, s"$q scans no reliable checkpoint under a checkpoint dir")
+    }
   }
 }

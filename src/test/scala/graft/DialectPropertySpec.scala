@@ -2179,6 +2179,17 @@ class DialectPropertySpec extends SparkSpec {
     assert(Dialect.rewriteStarReplace(qualMul) === qualMul)
   }
 
+  test("Trino FILTER reads a renamed aggregate under its Spark name") {
+    // approx_distinct is Trino's approx_count_distinct
+    sameRows(Dialect.Trinoish.rewrite(spark,
+        "SELECT g, approx_distinct(v) FILTER (WHERE k > 1) AS n FROM t GROUP BY g"),
+      "SELECT g, approx_count_distinct(v) FILTER (WHERE k > 1) AS n FROM t GROUP BY g")
+    // arbitrary is any_value, which has no null-exact FILTER rewrite
+    val e = intercept[graft.UnsupportedError](Dialect.Trinoish.rewrite(spark,
+      "SELECT arbitrary(v) FILTER (WHERE k > 1) AS a FROM t"))
+    assert(e.getMessage.contains("FILTER on any_value is outside the shimmed surface"))
+  }
+
   test("aggregate FILTER (WHERE …) clause rewrite") {
     assert(Dialect.rewriteAggFilter("SELECT COUNT(*) FILTER (WHERE x > 1) FROM t") ===
       "SELECT count_if(x > 1) FROM t")

@@ -16,6 +16,26 @@ trait SparkSpec extends AnyFunSuite {
 
   def initLog(): Unit = spark.sparkContext.setLogLevel("ERROR")
 
+  /** Run `body` with a fresh temporary checkpoint dir set on the shared
+    * SparkContext (so [[graft.ops.Tuning.materialize]] writes reliable
+    * checkpoints), then restore the previous setting and delete the dir.
+    * Suites share one SparkContext, and a leaked dir would switch every
+    * later suite to reliable checkpoints. SparkContext has no public
+    * unset, so the previous value goes back reflectively.
+    */
+  def withCheckpointDir[A](body: => A): A = {
+    val sc = spark.sparkContext
+    val prev = sc.getCheckpointDir
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toFile
+    sc.setCheckpointDir(dir.getPath)
+    try body finally {
+      sc.getClass.getDeclaredFields.filter(_.getName.endsWith("checkpointDir"))
+        .foreach { f => f.setAccessible(true); f.set(sc, prev) }
+      assert(sc.getCheckpointDir == prev, "failed to restore the checkpoint dir")
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
+  }
+
   /** Run `body` under a fresh job group and return its result with the
     * number of Spark jobs that started under that group.
     */

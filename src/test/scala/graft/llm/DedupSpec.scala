@@ -239,7 +239,7 @@ class DedupSpec extends SparkSpec {
     val out = Dedup.minHashDedup(docs)
     assert(out.count() === 4)
     val retained = spark.sparkContext.getPersistentRDDs.keySet -- before
-    // the eager localCheckpoint of the result is the single retained entry
+    // the materialized result (its local checkpoint) is the single retained entry
     assert(retained.size <= 1, s"leaked caches: $retained")
   }
 

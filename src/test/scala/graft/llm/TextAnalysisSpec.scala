@@ -122,55 +122,28 @@ class TextAnalysisSpec extends SparkSpec {
         .getAs[Long]("n_tokens_bpe"))
   }
 
-  test("bpeLearnMerges is materializer-invariant (local / persisted / reliable)") {
+  test("bpeLearnMerges is checkpoint-invariant (local / reliable)") {
     initLog()
-    // The materializer trades fault tolerance for speed (localCheckpoint
-    // truncates lineage and dies with an executor; persist keeps lineage;
-    // checkpoint writes to reliable storage) — it must NEVER change the
-    // learned merges. Same corpus, all three paths, identical rows.
+    // Tuning.materialize trades fault tolerance for speed (localCheckpoint
+    // truncates lineage and dies with an executor; checkpoint writes to
+    // reliable storage) — it must NEVER change the learned merges. Same
+    // corpus, both paths, identical rows.
     val docs = Seq((0L, "aa ab ba"), (1L, "ab x aab"), (2L, "the the ab"))
       .toDF("doc_id", "text")
-    def learn(m: TextAnalysis.Materializer): Seq[(Long, String, String, String, Long)] =
-      TextAnalysis.bpeLearnMerges(docs, rounds = 4, materializer = Some(m))
+    def learn(): Seq[(Long, String, String, String, Long)] =
+      TextAnalysis.bpeLearnMerges(docs, rounds = 4)
         .collect()
         .map(r => (r.getAs[Long]("round"), r.getAs[String]("x"),
           r.getAs[String]("y"), r.getAs[String]("merged"), r.getAs[Long]("n")))
         .toSeq
-    val local = learn(TextAnalysis.Materializer.Local)
-    val persisted = learn(TextAnalysis.Materializer.Persisted)
-    assert(persisted === local)
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val hadCkpt = spark.sparkContext.getCheckpointDir
-    try {
-      spark.sparkContext.setCheckpointDir(ckptDir)
-      // with a checkpoint dir configured, auto selects Reliable
-      assert(TextAnalysis.Materializer.auto(docs) ===
-        TextAnalysis.Materializer.Reliable)
-      val reliable = learn(TextAnalysis.Materializer.Reliable)
-      assert(reliable === local)
-      // and the learned-encode pipeline agrees under the reliable path too
-      val encLocal = TextAnalysis.bpeEncodeLearned(docs, rounds = 4,
-          materializer = Some(TextAnalysis.Materializer.Local))
+    def encode(): Seq[Seq[Any]] =
+      TextAnalysis.bpeEncodeLearned(docs, rounds = 4)
         .orderBy("doc_id").collect().map(_.toSeq).toSeq
-      val encReliable = TextAnalysis.bpeEncodeLearned(docs, rounds = 4,
-          materializer = Some(TextAnalysis.Materializer.Reliable))
-        .orderBy("doc_id").collect().map(_.toSeq).toSeq
-      assert(encReliable === encLocal)
-    } finally {
-      // restore the shared context: suites share one JVM/SparkContext,
-      // and a leaked checkpoint dir would silently flip Materializer.auto
-      // to Reliable for every later suite. SparkContext has no public
-      // unset, so clear the private var reflectively when none was set.
-      hadCkpt match {
-        case Some(d) => spark.sparkContext.setCheckpointDir(d)
-        case None =>
-          spark.sparkContext.getClass.getDeclaredFields
-            .filter(_.getName.endsWith("checkpointDir"))
-            .foreach { f => f.setAccessible(true); f.set(spark.sparkContext, None) }
-          assert(spark.sparkContext.getCheckpointDir.isEmpty,
-            "failed to restore the shared SparkContext's unset checkpoint dir")
-      }
-    }
+    val (local, encLocal) = (learn(), encode())
+    val (reliable, encReliable) = withCheckpointDir((learn(), encode()))
+    assert(reliable === local)
+    // and the learned-encode pipeline agrees under the reliable path too
+    assert(encReliable === encLocal)
   }
 
   test("bm25Rank scores and ranks a known corpus exactly") {

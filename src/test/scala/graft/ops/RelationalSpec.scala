@@ -433,6 +433,29 @@ class RelationalSpec extends SparkSpec {
     assert(a === b)
   }
 
+  test("pageRank releases every working cache") {
+    import spark.implicits._
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = Relational.pageRank(
+      (1L to 64L).sliding(2).map(p => (p(0), p(1))).toSeq.toDF("src", "dst"))
+    assert(out.count() === 64)
+    val retained = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(retained.size <= 1, s"leaked caches: $retained") // the result checkpoint
+  }
+
+  test("pageRank releases caches even when a round fails") {
+    import spark.implicits._
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // two nodes put the start mass at Long.MaxValue / 2, so the first
+    // round's damping fold overflows (ANSI arithmetic) with every working
+    // cache and both rank caches held
+    val e = intercept[Exception](Relational.pageRank(
+      Seq((1L, 2L), (2L, 1L)).toDF("src", "dst"), scale = Long.MaxValue))
+    assert(e.getMessage.contains("ARITHMETIC_OVERFLOW"), e.getMessage)
+    val retained = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(retained.isEmpty, s"leaked caches: $retained")
+  }
+
   test("sketchIntersectionEstimate tracks the exact period overlap") {
     val orders = graft.Tables.load(spark, "/root/testdata/sf0.01", "orders")
       .select(col("o_orderpriority"), col("o_custkey"), col("o_orderdate"))
