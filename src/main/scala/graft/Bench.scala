@@ -4,26 +4,17 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main — driver contract: one JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
   *
-  * Config notes (the knobs that matter at scale, exercised here at
-  * local[32]): shuffle partitions sized to cores not the 200 default, AQE
-  * on for runtime coalescing/skew handling, default broadcast threshold so
-  * dim tables (region/nation/supplier/part at these SFs) broadcast instead
-  * of shuffling lineitem. A warmup query is run first so JVM/codegen
+  * Runs on a [[Session]] session (`local[cores]`, one shuffle partition
+  * per core, AQE on by Spark's default for runtime coalescing/skew
+  * handling, default broadcast threshold so dim tables
+  * (region/nation/supplier/part at these SFs) broadcast instead of
+  * shuffling lineitem). A warmup query is run first so JVM/codegen
   * startup isn't attributed to the first timed query.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.getOrCreate()
 
     // warmup: exercise scan + shuffle + broadcast + codegen once, untimed,
     // so JIT/codegen startup isn't attributed to the first timed queries and
@@ -131,7 +122,6 @@ object Bench {
         java.nio.file.Paths.get(p), (full + "\n").getBytes("UTF-8"))
       catch { case e: Throwable => System.err.println(s"[bench] write $p: ${e.getMessage}") }
     }
-    spark.stop()
     // The driver parses only a bounded (~2 KB) tail of stdout, so the LAST
     // line must be short: totals + the TPC-H headline queries only. The full
     // per-query map lives in bench.json and $SPARK_GRAFT_BENCH_OUT (above).

@@ -88,9 +88,8 @@ import org.apache.spark.sql.types.StructType
   *     site per ORDER BY key list over one lexing.
   * Every part after the prelude lexes Spark's literal syntax. Parts 2 and
   * 3 run in the order each dialect states next to its table. The rewrite
-  * needs a session only for READ_CSV and for two PERCENT probes (the
-  * scale plan's leading-key type, and a percent set-op arm's output
-  * names).
+  * needs a session only for READ_CSV and for the PERCENT scale plan's
+  * leading-key type probe.
   */
 sealed trait Dialect {
   def rewrite(spark: SparkSession, sql: String,
@@ -524,9 +523,9 @@ object Dialect {
         "sysdatetime" -> "current_timestamp", "replicate" -> "repeat"))
     def rewrite(spark: SparkSession, sql: String,
         schemas: Map[String, StructType]): String = {
-      // the table runs before TOP: the TOP PERCENT probes (the scale
-      // plan's leading-key type, and the output names of a percent
-      // set-op arm), which the session serves, analyze rewritten text
+      // the table runs before TOP: the TOP PERCENT scale plan's
+      // leading-key type probe, which the session serves, analyzes
+      // rewritten text
       val s = table(prelude(sql, literalBackslashEscapes, doubleQuotedIsString, '['))
       rewriteTsqlOffsetFetch(rewriteTsqlTop(s, Some(spark)))
     }
@@ -598,7 +597,7 @@ object Dialect {
       // appends LIMIT, which the QUALIFY rewrite then turns into a pipe
       // after its filter, and a TIES/PERCENT rank follows as
       // `|> EXTEND`, which the QUALIFY rewrite keeps after its filter.
-      // The session serves the TOP PERCENT probes only.
+      // The session serves the TOP PERCENT type probe only.
       rewriteQualify(rewriteTsqlTop(s, Some(spark), qualifyClause = true,
         minusIsSetOp = true)) // MINUS is a Teradata set operator
     }
@@ -2456,9 +2455,8 @@ object Dialect {
     * wrapped arm. TOP n PERCENT in an arm keeps `CEILING(count * n /
     * 100)` of the arm's rows with no row choice specified (ORDER BY is
     * illegal inside an arm): a row_number over the arm's own output
-    * columns makes the pick deterministic as a multiset, which the gate's
-    * oracle replays. Those columns come from a schema-only analysis of
-    * the arm — the one session use here (gate:
+    * columns, taken together as `struct(*)`, makes the pick
+    * deterministic as a multiset, which the gate's oracle replays (gate:
     * op_dialect_tsql_setop_top_percent). `TOP … WITH TIES` in an arm
     * raises: it needs an ORDER BY.
     *
@@ -2505,7 +2503,7 @@ object Dialect {
           val sortAll = p.keys.fold(if (sel.armAfter) " " else "")(" ORDER BY " + _)
           if (isArm) {
             if (!isPercent || n.toDouble == 0) s"($select LIMIT ${if (isPercent) 0 else n})$sortAll"
-            else s"(${armPercent(select, n, spark, qualifyClause)})$sortAll"
+            else s"(${armPercent(select, n, qualifyClause)})$sortAll"
           } else if (!isPercent && !isTies) {
             if (p.page.isDefined)
               throw new graft.UnsupportedError("TOP combined with LIMIT/OFFSET/FETCH is not supported")
@@ -2526,36 +2524,15 @@ object Dialect {
     }
 
   /** A set-operation arm `select` keeping CEILING(count * n / 100) of its
-    * rows, ranked by all of its output columns.
+    * rows, ranked by all of its output columns: a struct of them sorts
+    * field by field, nulls first, like `ORDER BY c1, c2, …`, and needs
+    * none of their names. A QUALIFY in the arm filters before the rank.
     */
-  private def armPercent(select: String, n: String, spark: Option[SparkSession],
-      qualifyClause: Boolean): String = {
-    // a QUALIFY in the arm collapses first: the analysis cannot parse it
-    val arm = if (qualifyClause) rewriteQualify(select) else select
-    val s = spark.getOrElse(throw new graft.UnsupportedError(
-      "TOP PERCENT in a set-operation arm needs registered tables to name the arm's output columns"))
-    val names =
-      try s.sql(s"SELECT * FROM ( $arm ) __tpa").schema.fieldNames.toSeq
-      catch {
-        case e: Exception => throw new graft.UnsupportedError(
-          "TOP PERCENT in a set-operation arm cannot analyze the arm " +
-            s"(${e.getMessage.linesIterator.nextOption().getOrElse("").take(120)})")
-      }
-    names.foreach { f =>
-      if (!f.matches("[A-Za-z_][A-Za-z0-9_]*") || f.equalsIgnoreCase("__tprn") ||
-          f.equalsIgnoreCase("__tpct"))
-        throw new graft.UnsupportedError(
-          s"TOP PERCENT in a set-operation arm met an output name the rank cannot carry: $f — alias the item")
-    }
-    names.map(_.toLowerCase).groupBy(identity)
-      .collectFirst { case (nm, vs) if vs.size > 1 => nm }
-      .foreach(nm => throw new graft.UnsupportedError(
-        s"TOP PERCENT in a set-operation arm met a duplicate output name: $nm"))
-    // backticked: an output name may be a Spark non-reserved keyword
-    val cols = names.map(nm => s"`$nm`").mkString(", ")
-    s"$arm |> EXTEND row_number() OVER (ORDER BY $cols) AS __tprn, count(*) OVER () AS __tpct " +
-      s"|> WHERE __tprn <= CEILING(__tpct * $n / 100.0) |> DROP __tprn, __tpct"
-  }
+  private def armPercent(select: String, n: String, qualifyClause: Boolean): String =
+    (if (qualifyClause) rewriteQualify(select) else select) +
+      " |> EXTEND struct(*) AS __tpk" +
+      " |> EXTEND row_number() OVER (ORDER BY __tpk) AS __tprn, count(*) OVER () AS __tpct" +
+      s" |> WHERE __tprn <= CEILING(__tpct * $n / 100.0) |> DROP __tpk, __tprn, __tpct"
 
   /** ANSI/Postgres `ORDER BY … [OFFSET m ROWS] FETCH FIRST n ROWS WITH
     * TIES` (Postgres, Oracle, Trino) → [[rankRows]], with the dialect's

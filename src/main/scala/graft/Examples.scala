@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable API examples — the library's public surface end-to-end:
   * list-of-rows tables (reference: xorbits_sql/table.py:92-103), nested
   * table names (core.py:60-67), DuckDB-ish dialect shim (`==`, READ_CSV).
@@ -10,22 +8,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Examples {
   def main(args: Array[String]): Unit = {
-    // withExtensions exercises the builder-time registration path of the
-    // optimizer extension (the spec covers the live-session install path)
-    val existing = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    // getOrCreate hands back a session built earlier in this JVM without
-    // the builder's extensions: attach them live (both are idempotent)
-    if (existing.isDefined) {
-      graft.plans.GraftExtensions.install(spark)
-      graft.plans.AsOfJoin.install(spark)
-    }
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.getOrCreate()
 
     val t = Engine.tableFromRows(spark, Seq(
       Map("a" -> 1, "b" -> "x"),
@@ -143,9 +126,9 @@ object Examples {
       approxPlan.contains("approx_count_distinct") + s" approx_n=$approxN")
 
     // example11: the builder-registered PLANNER STRATEGY — in a fresh
-    // JVM the native as-of join node plans through this session's
-    // withExtensions registration alone (no live-session install call),
-    // proving the spark.sql.extensions deployment path end-to-end
+    // JVM the native as-of join node plans through the extensions
+    // graft.Session registers at build alone (no live-session install
+    // call), proving the spark.sql.extensions deployment path end-to-end
     locally {
       import spark.implicits._
       val trades = Seq((1L, 10L), (1L, 30L)).toDF("k", "t")
@@ -555,8 +538,5 @@ object Examples {
         s"pg_unnest_zip=$pgZip setop_arm_percent_g=$armPct " +
         s"exclude_replace_v=$exclRepl")
     }
-
-    // a session this JVM had before belongs to its caller
-    if (existing.isEmpty) spark.stop()
   }
 }

@@ -943,16 +943,7 @@ object PlanCheck {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val plans = planStrings(spark, sfDir)
+    val plans = planStrings(Session.getOrCreate(), sfDir)
     plans.foreach {
       case (name, Left(err)) => println(s"PLAN $name :: ERROR ${err.take(80)}")
       case (name, Right(plan)) =>
@@ -964,7 +955,6 @@ object PlanCheck {
     val violations = audit(plans) ++ windowLint(plans)
     violations.foreach(v => println(s"PLANGATE $v"))
     println(s"PLANGATE ${if (violations.isEmpty) "OK" else s"${violations.size} violation(s)"}")
-    spark.stop()
     if (violations.nonEmpty) sys.exit(1)
   }
 }

@@ -14,12 +14,21 @@ object Sources {
   /** The directory, one per process, under which queries stage the inputs
     * they rewrite with `mode("overwrite")` each time they are built (and
     * their oracles read back), so two processes building the queries at
-    * once never overwrite each other's files. It outlives the process: an
-    * oracle may read the staged files after the process that wrote them
-    * has exited.
+    * once never overwrite each other's files. It is deleted when the
+    * process exits, unless [[keepStageRoot]] was called.
     */
-  lazy val stageRoot: String =
-    java.nio.file.Files.createTempDirectory("graft_stage_").toString
+  lazy val stageRoot: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_stage_").toFile
+    sys.addShutdownHook(if (!keepRoot) org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    dir.getPath
+  }
+
+  @volatile private var keepRoot = false
+
+  /** Keep [[stageRoot]] after the process exits: `Verify` calls this,
+    * because the oracles it writes read the staged files afterwards.
+    */
+  private[graft] def keepStageRoot(): Unit = keepRoot = true
 
   /** CSV reader matching the reference's READ_CSV semantics: header row,
     * optional delimiter, dtypes from an optional schema (schema wins over

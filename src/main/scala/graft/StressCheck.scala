@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-stress probe — `sbt "runMain graft.StressCheck [factor]"`.
@@ -16,14 +16,7 @@ object StressCheck {
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
     val dir = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.getOrCreate()
 
     def amplify(df: DataFrame): DataFrame =
       (1 until factor).foldLeft(df)((acc, _) => acc.union(df))
@@ -506,6 +499,5 @@ object StressCheck {
       .filter(col("l_quantity") > 45).queryExecution.executedPlan.toString
     println("STRESS plan_broadcast=" + plan.contains("BroadcastHashJoin") +
       " plan_pushdown=" + plan.contains("GreaterThan(l_quantity,45.0)"))
-    spark.stop()
   }
 }

@@ -87,7 +87,7 @@ object Tables {
 
   /** Normalize the `ts` column to session-zoned TimestampType regardless of
     * how the parquet file declared it. With the session timezone pinned to
-    * UTC (every entrypoint does), NTZ→LTZ is value-preserving, and the
+    * UTC (`graft.Session` pins it), NTZ→LTZ is value-preserving, and the
     * nanos path truncates to micros exactly like DuckDB's
     * CAST(ts_ns AS TIMESTAMP).
     */

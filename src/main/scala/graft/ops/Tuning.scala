@@ -72,7 +72,11 @@ object Tuning {
     * override for its duration.
     */
   def withSqlConf[A](spark: SparkSession, kvs: (String, String)*)(body: => A): A = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    // `contains`, not `getOption`: the latter reports a registered
+    // conf's default for an unset key, which would then be set on exit
+    val prev = kvs.map { case (k, _) =>
+      k -> (if (spark.sessionState.conf.contains(k)) Some(spark.conf.get(k)) else None)
+    }
     kvs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
@@ -117,22 +121,18 @@ object Tuning {
       math.min(sessionParts.toLong, rows / 100000L + 1L)).toInt
 
   /** Run `body` with `spark.sql.shuffle.partitions` scoped to
-    * [[loopPartitions]]`(rows)`, restoring the session value even on
-    * failure. The conf is read at action time, so every action `body`
-    * runs — including frames it materializes — plans its exchanges at
-    * the scoped width; frames RETURNED lazily plan at the caller's
-    * width as before. No-op when the derived width is not below the
-    * session conf (large inputs at scale, or a session at or under the
-    * floor, where `rows` is never evaluated).
+    * [[loopPartitions]]`(rows)` through [[withSqlConf]]. The conf is read
+    * at action time, so every action `body` runs — including frames it
+    * materializes — plans its exchanges at the scoped width; frames
+    * RETURNED lazily plan at the caller's width as before. No-op when
+    * the derived width is not below the session conf (large inputs at
+    * scale, or a session at or under the floor, where `rows` is never
+    * evaluated).
     */
   def withLoopParallelism[A](spark: SparkSession, rows: => Long)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
     val sess = spark.sessionState.conf.numShufflePartitions
     val p = loopPartitions(rows, sess)
     if (p >= sess) body
-    else {
-      spark.conf.set(key, p.toString)
-      try body finally spark.conf.set(key, sess.toString)
-    }
+    else withSqlConf(spark, "spark.sql.shuffle.partitions" -> p.toString)(body)
   }
 }

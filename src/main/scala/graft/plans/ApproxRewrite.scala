@@ -50,9 +50,10 @@ object ApproxCountDistinctRule extends Rule[LogicalPlan] {
 }
 
 /** `spark.sql.extensions=graft.plans.GraftExtensions` — registers the
-  * approx rewrite at session build time. For an already-running session
-  * use [[GraftExtensions.install]] (the `experimental.extraOptimizations`
-  * hook), which the specs exercise.
+  * approx rewrite and the as-of join strategy at session build time
+  * (`graft.Session` builds every session this way). For an
+  * already-running session use [[GraftExtensions.install]], which
+  * attaches the same two through the `experimental` hooks.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -62,14 +63,21 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** Attach the rule to a live session (idempotent). */
+  /** Attach the optimizer rule and the planner strategy to a live
+    * session (idempotent).
+    */
   def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(ApproxCountDistinctRule))
-      spark.experimental.extraOptimizations = cur :+ ApproxCountDistinctRule
+    val x = spark.experimental
+    if (!x.extraOptimizations.contains(ApproxCountDistinctRule))
+      x.extraOptimizations = x.extraOptimizations :+ ApproxCountDistinctRule
+    if (!x.extraStrategies.contains(AsOfJoinStrategy))
+      x.extraStrategies = x.extraStrategies :+ AsOfJoinStrategy
   }
 
-  def uninstall(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == ApproxCountDistinctRule)
+  /** Detach what [[install]] attached. */
+  def uninstall(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val x = spark.experimental
+    x.extraOptimizations = x.extraOptimizations.filterNot(_ == ApproxCountDistinctRule)
+    x.extraStrategies = x.extraStrategies.filterNot(_ == AsOfJoinStrategy)
+  }
 }

@@ -40,8 +40,8 @@ final case class AsOfJoinNode(
 }
 
 /** Plans [[AsOfJoinNode]] into [[AsOfJoinExec]]; register via
-  * [[GraftExtensions]] (builder path) or [[AsOfJoin.install]] (live
-  * session, `experimental.extraStrategies`).
+  * [[GraftExtensions]] (builder path) or [[GraftExtensions.install]]
+  * (live session, `experimental.extraStrategies`).
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -129,13 +129,6 @@ final case class AsOfJoinExec(
 /** DataFrame-level entry point for the native AS-OF join. */
 object AsOfJoin {
 
-  /** Attach the planner strategy to a live session (idempotent). */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = cur :+ AsOfJoinStrategy
-  }
-
   /** Backward as-of join `left` with `right` on `key`, matching the
     * latest `right.rightTs <= left.leftTs` (ties match). Right-side key
     * and time columns are dropped from the result (they duplicate the
@@ -144,7 +137,7 @@ object AsOfJoin {
   def asOfJoin(left: DataFrame, right: DataFrame,
       key: String, leftTs: String, rightTs: String): DataFrame = {
     val spark = left.sparkSession
-    install(spark)
+    GraftExtensions.install(spark)
     // rename the right side's join columns first so every output name is
     // unique, then drop them — they duplicate the left's values
     val r2 = right.withColumnRenamed(key, "__asof_k")

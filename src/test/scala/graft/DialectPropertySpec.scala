@@ -376,9 +376,8 @@ class DialectPropertySpec extends SparkSpec {
     // arm-scoped TOP PERCENT (r19): WITH TIES in an arm keeps a named
     // error (TIES requires an ORDER BY, which T-SQL rejects inside an
     // arm), as does PERCENT with an in-arm ORDER BY; a literal-zero
-    // percent short-circuits to a per-arm LIMIT 0 (no analysis needed);
-    // a nonzero percent arm without a session raises the
-    // needs-registered-tables error rather than a raw parse error
+    // percent short-circuits to a per-arm LIMIT 0; a nonzero percent arm
+    // ranks by its whole row and needs no session
     intercept[UnsupportedError](Dialect.rewriteTsqlTop(
       "SELECT TOP 2 WITH TIES a FROM t UNION ALL SELECT a FROM u"))
     intercept[UnsupportedError](Dialect.rewriteTsqlTop(
@@ -391,9 +390,17 @@ class DialectPropertySpec extends SparkSpec {
     // BY outside the wrapped arm (it sorts the COMBINED result)
     sameRows(Dialect.rewriteTsqlTop(
       "SELECT a FROM t UNION ALL SELECT TOP 0 PERCENT a FROM u ORDER BY a"), "SELECT a FROM t UNION ALL (SELECT a FROM u LIMIT 0) ORDER BY a")
-    assert(intercept[UnsupportedError](Dialect.rewriteTsqlTop(
-      "SELECT TOP 10 PERCENT a FROM t UNION ALL SELECT a FROM u"))
-      .getMessage.contains("registered tables"))
+    sameRows(Dialect.rewriteTsqlTop(
+      "SELECT TOP 40 PERCENT a FROM t UNION ALL SELECT a FROM u"),
+      "SELECT a FROM (SELECT a, row_number() OVER (ORDER BY a) AS rn, " +
+        "count(*) OVER () AS ct FROM t) WHERE rn <= CEILING(ct * 40 / 100.0) " +
+        "UNION ALL SELECT a FROM u")
+    // …over several columns, nulls first key by key, a name repeated
+    sameRows(Dialect.rewriteTsqlTop(
+      "SELECT TOP 50 PERCENT g, a, g FROM t UNION ALL SELECT g, a, g FROM u"),
+      "SELECT g, a, g FROM (SELECT g, a, row_number() OVER (ORDER BY g, a) AS rn, " +
+        "count(*) OVER () AS ct FROM t) WHERE rn <= CEILING(ct * 50 / 100.0) " +
+        "UNION ALL SELECT g, a, g FROM u")
     // a PARENTHESIZED arm keeps the in-place splice (ORDER BY legal there)
     sameRows(Dialect.rewriteTsqlTop(
       "(SELECT TOP 2 a FROM t ORDER BY a) UNION ALL SELECT a FROM u"), "(SELECT a FROM t ORDER BY a LIMIT 2 ) UNION ALL SELECT a FROM u")
@@ -1456,15 +1463,20 @@ class DialectPropertySpec extends SparkSpec {
       "SELECT s.b FROM (SELECT b FROM t ORDER BY b FETCH FIRST 2 ROWS WITH TIES) s"), "SELECT s.b FROM (SELECT b FROM ( SELECT b, " +
         "rank() OVER (ORDER BY b NULLS LAST) AS __wt FROM t ) __wtq " +
         "WHERE __wt <= 2 ORDER BY b NULLS LAST) s")
-    // …but a set-operation ARM stays a named fail-fast on both sides
-    // (r15 review fix — the splice must not hijack the union's trailing
-    // ORDER BY or glue the rank filter onto the set-op keyword)
+    // …but WITH TIES in a set-operation ARM stays a named fail-fast on
+    // both sides (r15 review fix — the splice must not hijack the union's
+    // trailing ORDER BY or glue the rank filter onto the set-op keyword);
+    // a last-arm PERCENT ranks its own rows and leaves that ORDER BY to
+    // the combined result
     intercept[UnsupportedError](Dialect.rewriteTsqlTop(
       "SELECT g FROM t UNION ALL SELECT TOP 3 WITH TIES g FROM u ORDER BY g"))
     intercept[UnsupportedError](Dialect.rewriteTsqlTop(
       "SELECT TOP 3 WITH TIES g FROM t ORDER BY g UNION ALL SELECT g FROM u"))
-    intercept[UnsupportedError](Dialect.rewriteTsqlTop(
-      "SELECT g FROM t UNION ALL SELECT TOP 10 PERCENT g FROM u ORDER BY g"))
+    sameRows(Dialect.rewriteTsqlTop(
+      "SELECT g FROM t UNION ALL SELECT TOP 10 PERCENT g FROM u ORDER BY g"),
+      "SELECT g FROM t UNION ALL (SELECT g FROM (SELECT g, row_number() OVER " +
+        "(ORDER BY g) AS rn, count(*) OVER () AS ct FROM u) " +
+        "WHERE rn <= CEILING(ct * 10 / 100.0)) ORDER BY g")
     // OFFSET m ROWS + WITH TIES (r15 — a named fail-fast before): skip m
     // rows, keep n, plus ties of row m+n — row_number > m AND rank <=
     // the cutoff rank at row m+n, over a frame pre-filtered to the

@@ -1,10 +1,10 @@
 package graft
 
-/** [[Examples]] run in a JVM that already built a SparkSession: the
-  * builder's `getOrCreate` then returns that session without the
-  * builder's extensions, and the examples must still print the exact
-  * lines a fresh JVM prints (`examples.out`, captured from
-  * `sbt "runMain graft.Examples"`), leaving the caller's session running.
+/** [[Examples]] run in a JVM that already built a SparkSession:
+  * [[Session]] adopts that session and attaches the extensions live, and
+  * the examples must still print the exact lines a fresh JVM prints
+  * (`examples.out`, captured from `sbt "runMain graft.Examples"`),
+  * leaving the caller's session running.
   */
 class ExamplesSpec extends SparkSpec {
 

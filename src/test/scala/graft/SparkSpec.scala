@@ -3,16 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one per suite via lazy val,
-  * per the project testing conventions).
+/** Shared local SparkSession for all suites: the first suite's
+  * [[Session]] builds it at 4 cores, and every later suite adopts it.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.getOrCreate(cores = 4)
 
   def initLog(): Unit = spark.sparkContext.setLogLevel("ERROR")
 

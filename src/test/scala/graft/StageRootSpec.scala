@@ -9,7 +9,7 @@ object StageRootProbe {
 
 /** Staged query inputs live under a root of their own in every process, so
   * two processes that build the driver queries at once cannot destroy each
-  * other's files.
+  * other's files, and the root goes when its process exits.
   */
 class StageRootSpec extends AnyFunSuite {
   test("the staging root differs between processes and is stable within one") {
@@ -18,7 +18,8 @@ class StageRootSpec extends AnyFunSuite {
       "graft.StageRootProbe").redirectErrorStream(true).start()
     val other = scala.io.Source.fromInputStream(proc.getInputStream).mkString.trim
     assert(proc.waitFor() === 0, other)
-    assert(new java.io.File(other).isDirectory, other)
+    assert(other.contains("graft_stage_"), other)
+    assert(!new java.io.File(other).exists, other)
     assert(Sources.stageRoot === Sources.stageRoot)
     assert(new java.io.File(Sources.stageRoot).isDirectory)
     assert(other !== Sources.stageRoot)

@@ -36,4 +36,13 @@ class TuningSpec extends SparkSpec {
     assert(width == "4")
     assert(s.conf.get(key) == "16")
   }
+
+  test("withLoopParallelism leaves a width that was unset unset") {
+    initLog()
+    val s = spark.newSession()
+    s.conf.unset(key)
+    val width = Tuning.withLoopParallelism(s, 10L)(s.conf.get(key))
+    assert(width == "4")
+    assert(!s.sessionState.conf.contains(key))
+  }
 }
