@@ -314,7 +314,10 @@ object Dedup {
     * whose sole partner has a larger id — e.g. pairs (a,z),(m,z) with z
     * largest left m unclustered. Edge relaxation closes that hole;
     * DedupSpec gates the exact scenario.) Docs with no duplicate keep
-    * themselves; always one row per document.
+    * themselves; always one row per document. A pair graph under
+    * `spark.sql.autoBroadcastJoinThreshold` is closed by union-find on the
+    * driver instead, with the same result; `maxClosureRounds` bounds the
+    * distributed loop only, which larger pair graphs take.
     *
     * Cache contract (delegated to connectedComponents): every loop cache
     * is released before return; the result is a projection over a frame
@@ -347,7 +350,8 @@ object Dedup {
     * once per consumer. `nodes` is the full document-id universe (every
     * id gets a row, duplicate or not). Result is a projection over
     * connectedComponents' eager checkpoint — safe to consume after the
-    * caller unpersists `shingled`.
+    * caller unpersists `shingled`. `maxClosureRounds` bounds the closure's
+    * distributed loop only, as in [[minHashDedup]].
     */
   def minHashDedupFromShingles(shingled: DataFrame, nodes: DataFrame,
       numHashes: Int = 32, bands: Int = 8, threshold: Double = 0.7,
@@ -702,17 +706,19 @@ object Dedup {
     * construction.
     *
     * Scale: pair volume is the prefix-filtered join's (Σdf² over rare
-    * prefix tokens only); components run pointer-jumping O(log chain)
-    * rounds on the PAIR graph — corpus-sized input never enters the
+    * prefix tokens only); components label the PAIR graph (union-find on
+    * the driver under the broadcast threshold, pointer-jumping O(log
+    * chain) rounds over it) — corpus-sized input never enters the
     * iteration. The histogram is |clusters| rows aggregated twice.
     */
   def dedupClusterStats(docs: DataFrame,
       thresholdPpm: Long = 500000L): DataFrame = {
     val pairs = prefixFilteredJaccardPairs(docs, thresholdPpm)
-    // The components loop materializes its edge input several times
-    // (undirected closure, node universe, then per-round joins);
-    // materializing the TINY pair list computes the expensive similarity
-    // join exactly once and feeds the iteration a flat scan.
+    // Components reads its edge input once for the bounded collect that
+    // picks its path, and the loop reads it again (undirected closure,
+    // node universe, then per-round joins); materializing the TINY pair
+    // list computes the expensive similarity join exactly once and feeds
+    // both a flat scan.
     val edges = org.apache.spark.sql.GraftBridge.flattenPlan(materialize(
       pairs.select(col("a_id").as("src"), col("b_id").as("dst"))))
     val comp = graft.ops.Relational.connectedComponents(edges)

@@ -1,8 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructField, StructType}
 
 /** Relational operator library — the Spark-first re-expression of the
   * reference's dataflow operators (SURVEY.md §2.1) and expression surface
@@ -500,10 +501,28 @@ object Relational {
         col(s"__bsj_b.`$bigKey`") === col(s"__bsj_s.`$smallKey`"), "left_semi")
   }
 
-  /** Distributed connected components over an edge list: `(node, component)`
-    * with `component` = the smallest node id reachable from `node`.
+  /** Connected components over an edge list: `(node, component)` with
+    * `component` = the smallest node id reachable from `node`. Every node
+    * of `nodes` (its first column) and every edge endpoint gets a row;
+    * a node with no edge to another node is its own component.
     *
-    * Min-label propagation with two alternating moves per round:
+    * Two paths, chosen the way Spark chooses between a broadcast and a
+    * shuffle join. One bounded collect reads the distinct undirected edge
+    * set (both directions of every edge, self-loops included):
+    *   - Driver path: when its row count times Catalyst's estimated row
+    *     size is at or below `spark.sql.autoBroadcastJoinThreshold` (the
+    *     test Spark applies before it ships a relation to every executor),
+    *     union-find labels it on the driver (`driverLabels`) and the
+    *     labels become a local relation. No loop, working cache or sizing
+    *     count runs.
+    *   - Loop path: over the threshold, or with the threshold at `-1`, the
+    *     distributed min-label loop below runs.
+    * Both paths return the same rows, and both end in the same restore
+    * join from the node universe to the labels (on the driver path
+    * without `nodes`, the labels are the universe and need no join).
+    *
+    * The loop is min-label propagation with two alternating moves per
+    * round:
     *   1. edge relaxation — `lbl(n) := min(lbl(n), min over neighbors m of
     *      lbl(m))`: one shuffle on the edge endpoint, correct at fixpoint
     *      (labels equal across every edge ⇒ constant per component, and the
@@ -524,55 +543,131 @@ object Relational {
     * `LogicalRDD` over the cache ([[org.apache.spark.sql.GraftBridge.flattenPlan]]):
     * the round's self-joins reference the previous table several times, so
     * without flattening the plan tree grows ~4× per round and Spark OOMs
-    * formatting it long before any data pressure. The result is computed
-    * by [[Tuning.materialize]] (a reliable checkpoint when the context has
-    * a checkpoint dir, a local one otherwise), and every working cache is
-    * dropped before returning, normally or by exception — the caller
-    * holds the only retained storage and releases it by dropping the
-    * result.
+    * formatting it long before any data pressure. `maxRounds` bounds the
+    * loop path only; the driver path always converges.
     *
-    * At 100 TB: every step is a key shuffle or a self-join on the label
-    * table — no per-component state ever lands on one executor, and round
-    * count is logarithmic in the longest chain, not the corpus size.
+    * On both paths the result is computed by [[Tuning.materialize]] (a
+    * reliable checkpoint when the context has a checkpoint dir, a local one
+    * otherwise), and every working cache is dropped before returning,
+    * normally or by exception — the caller holds the only retained storage
+    * and releases it by dropping the result.
     *
-    * The iteration runs over the EDGE-INDUCED subgraph only: a node with
-    * no (non-self-loop) edge can never change its label, so the full node
+    * At 100 TB: an edge set over the threshold takes the loop, where every
+    * step is a key shuffle or a self-join on the label table — no
+    * per-component state ever lands on one executor, and round count is
+    * logarithmic in the longest chain, not the corpus size. The path
+    * choice costs that loop one more evaluation of the edge input up to
+    * the distinct's shuffle (the bounded collect), and the driver path
+    * never holds more than the threshold's worth of edges, as a broadcast
+    * would.
+    *
+    * The loop runs over the EDGE-INDUCED subgraph only: a node with no
+    * (non-self-loop) edge can never change its label, so the full node
     * universe — corpus-sized when `nodes` is the document table, vs a
     * pair-graph of surviving duplicate candidates — is left-joined back
     * exactly once after convergence (`coalesce(lbl, node)` labels the
     * untouched singletons). Every per-round shuffle is then sized by the
     * candidate-pair graph, not the corpus.
     *
-    * Session conf: while it runs it sets
-    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` and
+    * Session conf: only the loop path writes it. While the loop runs it
+    * sets `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` and
     * narrows `spark.sql.shuffle.partitions` to the loop width (when that
     * is below the session's) on the CALLER's session, restoring both
     * after, so queries running concurrently on that session see them
-    * too.
+    * too. The driver path reads the session conf and writes none.
     */
   def connectedComponents(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", nodes: Option[DataFrame] = None,
-      maxRounds: Int = 30): DataFrame =
+      maxRounds: Int = 30): DataFrame = {
+    val e = edges.select(col(srcCol).as("__a"), col(dstCol).as("__b"))
+    // both directions of every raw edge: its `__a` column holds every
+    // endpoint, including self-loop-only and null ones, which are nodes
+    // of the universe even though the loop filters them out
+    val sym = e.union(e.select(col("__b").as("__a"), col("__a").as("__b")))
+    // the node universe: the first column of `nodes` and the endpoints
+    def universe(ends: DataFrame): DataFrame =
+      nodes.fold(ends)(n => n.select(col(n.columns.head).as("node")).union(ends)).distinct()
+    driverLabels(sym.distinct()) match {
+      // the labels name every endpoint once: without `nodes` they are the
+      // universe already
+      case Some(labels) =>
+        restoreUniverse(nodes.map(_ => universe(labels.select(col("node")))), labels)
+      case None => labelLoop(sym, universe(sym.select(col("__a").as("node"))), maxRounds)
+    }
+  }
+
+  /** `(node, component)` for every node of `nodeIds` (of `labels` when
+    * None): its label, or the node itself when `labels` has none. Computed
+    * now by [[Tuning.materialize]], so the result never replays the
+    * labeling.
+    */
+  private def restoreUniverse(nodeIds: Option[DataFrame], labels: DataFrame): DataFrame =
+    Tuning.materialize(
+      nodeIds.fold(labels)(_.join(labels.select(col("node"), col("lbl")), Seq("node"), "left"))
+        .select(col("node"), coalesce(col("lbl"), col("node")).as("component")))
+
+  /** `(node, lbl)` for every endpoint of the symmetric edge set `sym`
+    * (columns `__a`, `__b`), labeled with the smallest id of its component
+    * by union-find on the driver; None, after collecting at most one row
+    * more than fits, when `sym` is over `spark.sql.autoBroadcastJoinThreshold`
+    * (rows × Catalyst's estimated row size) or the threshold is negative.
+    *
+    * Ids stay Catalyst values of the column's type, compared with
+    * Catalyst's interpreted ordering, so every type the loop accepts
+    * labels the same way: the sorted distinct ids are the union-find
+    * elements, and linking the larger root under the smaller keeps each
+    * component's root at its minimum. Self-loops link nothing. A null
+    * endpoint links nothing either and comes back as a `(null, null)`
+    * row, so the universe keeps it, as the loop's does.
+    */
+  private def driverLabels(sym: DataFrame): Option[DataFrame] = {
+    import org.apache.spark.sql.GraftBridge
+    val threshold = sym.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold < 0) None else {
+      val cap = math.min(threshold / GraftBridge.estimatedRowBytes(sym), Int.MaxValue - 1L).toInt
+      val rows = GraftBridge.collectInternal(sym.limit(cap + 1))
+      if (rows.length > cap) None else {
+        val t = sym.schema.head.dataType
+        val ord = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(t)
+        // `sym` is symmetric, so its `__a` column holds every endpoint
+        val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
+        rows.filterNot(_.isNullAt(0)).map(_.get(0, t)).sorted(ord).foreach { v =>
+          if (ids.isEmpty || ord.compare(ids.last, v) != 0) ids += v
+        }
+        def at(v: Any): Int = ids.search(v)(ord).insertionPoint
+        val parent = Array.range(0, ids.length)
+        def find(i: Int): Int = {
+          var x = i
+          while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+          x
+        }
+        rows.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1)) {
+            val (ra, rb) = (find(at(r.get(0, t))), find(at(r.get(1, t))))
+            if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+          }
+        }
+        val labeled = ids.indices.map(i => InternalRow(ids(i), ids(find(i))))
+        val nullEnd = if (rows.exists(_.isNullAt(0))) Seq(InternalRow(null, null)) else Nil
+        Some(GraftBridge.localFrame(sym.sparkSession,
+          StructType(Seq(StructField("node", t), StructField("lbl", t))), labeled ++ nullEnd))
+      }
+    }
+  }
+
+  /** The distributed loop of [[connectedComponents]] over the symmetric
+    * edge set `sym`, restored to the universe `universe`.
+    */
+  private def labelLoop(sym: DataFrame, universe: DataFrame, maxRounds: Int): DataFrame =
     // every working cache below (und, nodeIds, labels, per-round frames)
     // is re-read by later rounds — let AQE size them by bytes (r20)
-    Tuning.withAqeSizedCaches(edges.sparkSession) { Tuning.withCaches { caches =>
-    val e = edges.select(col(srcCol).as("__a"), col(dstCol).as("__b"))
-    val und = caches.persist(e.union(e.select(col("__b").as("__a"), col("__a").as("__b")))
-      .filter(col("__a") =!= col("__b"))
-      .distinct())
-    // Node universe comes from the RAW endpoints, before the self-loop
-    // filter above — a node whose only edge is a self-loop is a singleton
-    // component, not absent.
-    val endpoints = e.select(col("__a").as("node"))
-      .union(e.select(col("__b").as("node")))
+    Tuning.withAqeSizedCaches(sym.sparkSession) { Tuning.withCaches { caches =>
+    val und = caches.persist(sym.filter(col("__a") =!= col("__b")).distinct())
     // Persisted: the universe's lineage may be an expensive generator,
     // and the restore join after convergence re-reads it — before the
     // subgraph iteration it seeded the (persisted) label table, so the
     // input plan evaluated once; the persist keeps that property.
-    val nodeIds = caches.persist(nodes
-      .map(n => n.select(col(n.columns.head).as("node")).union(endpoints))
-      .getOrElse(endpoints)
-      .distinct())
+    val nodeIds = caches.persist(universe)
     // Only nodes on a real (non-self-loop) edge can ever change label —
     // the loop iterates over THEM alone; everyone else (incl. self-loop-
     // only nodes) is a singleton restored by the final left join.
@@ -585,7 +680,7 @@ object Relational {
     // The edge and node counts are taken only when the session is wider
     // than the loop floor; `und` is materialized by this first count.
     val activeN = cached.count()
-    Tuning.withLoopParallelism(edges.sparkSession,
+    Tuning.withLoopParallelism(sym.sparkSession,
       Seq(activeN, und.count(), nodeIds.count()).max) {
     var labels = org.apache.spark.sql.GraftBridge.flattenPlan(cached)
     var round = 0
@@ -619,10 +714,7 @@ object Relational {
     // Non-convergence therefore means maxRounds was lowered deliberately —
     // fail hard rather than return a partially-merged labeling.
     require(converged, s"connectedComponents did not converge in $maxRounds rounds")
-    // restore the full universe: nodes the loop never saw keep themselves
-    Tuning.materialize(
-      nodeIds.join(labels.select(col("node"), col("lbl")), Seq("node"), "left")
-        .select(col("node"), coalesce(col("lbl"), col("node")).as("component")))
+    restoreUniverse(Some(nodeIds), labels)
     }
     } }
 

@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * `Expression`s — the standard pattern used by Spark extension libraries
   * (frameless, deequ, spark-nlp all ship an `org.apache.spark.sql`-package
   * accessor) because the converters are `private[sql]` in Spark 4.
-  * Only used by graft's custom expressions ([[graft.functions]]).
+  * Used by graft's custom expressions ([[graft.functions]]) and by the
+  * operator library's loops and driver-side paths ([[graft.ops]]).
   */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -35,6 +36,36 @@ object GraftBridge {
     val cdf = df.asInstanceOf[classic.Dataset[Row]]
     cdf.sparkSession.internalCreateDataFrame(cdf.queryExecution.toRdd, cdf.schema)
   }
+
+  /** Run `df` as one collect and return its rows as Catalyst values, the
+    * `InternalRow`s `Dataset.collect` decodes before converting them to
+    * external `Row`s. A driver-side algorithm reads, compares and
+    * hashes these values with Catalyst's own orderings, whatever the
+    * column types, with no per-type conversion.
+    */
+  def collectInternal(df: Dataset[Row]): Array[catalyst.InternalRow] = {
+    val qe = df.asInstanceOf[classic.Dataset[Row]].queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+  }
+
+  /** A DataFrame over driver-held Catalyst rows: a `LocalRelation`, whose
+    * exact size Catalyst knows, so a join against it broadcasts without a
+    * job.
+    */
+  def localFrame(spark: SparkSession, schema: types.StructType,
+      rows: Seq[catalyst.InternalRow]): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      catalyst.plans.logical.LocalRelation(catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
+  /** Catalyst's size estimate for one row of `df`, in bytes
+    * (`EstimationUtils.getSizePerRow`: 8 bytes of row overhead plus each
+    * column type's default size): the per-row figure Spark multiplies by
+    * a row count when it sizes a relation against
+    * `spark.sql.autoBroadcastJoinThreshold`.
+    */
+  def estimatedRowBytes(df: Dataset[Row]): Long =
+    catalyst.plans.logical.statsEstimation.EstimationUtils.getSizePerRow(
+      df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed.output).toLong
 
   /** Wrap a one-row/one-column DataFrame as an uncorrelated scalar
     * subquery expression — the vehicle Spark's own runtime row-level

@@ -266,7 +266,8 @@ class DedupSpec extends SparkSpec {
     // (order: A, C, B → ids 0, 1, 2 with 2 the bridge). Min-partner
     // pointer jumping alone strands doc 1 (its only partner, 2, is larger,
     // so the 1–2 edge collapses into "1 keeps itself"); the edge-relaxation
-    // step of connectedComponents is what closes this.
+    // step of connectedComponents' loop closes this, and union-find on its
+    // driver path, which this small pair graph takes, links both edges.
     val words = (1 to 40).map(i => s"w$i")
     val a = words.mkString(" ")
     val b = (words.dropRight(2) ++ Seq("X1", "X2")).mkString(" ")

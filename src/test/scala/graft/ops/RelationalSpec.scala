@@ -255,21 +255,34 @@ class RelationalSpec extends SparkSpec {
     assert(got === brute)
   }
 
-  test("connectedComponents: path graph collapses to the min node") {
+  /** Run `body` with `spark.sql.autoBroadcastJoinThreshold` set to `t`. */
+  private def withBroadcastThreshold[A](t: Long)(body: => A): A =
+    Tuning.withSqlConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> t.toString)(body)
+
+  /** Register `name` twice: at the session's threshold, where these small
+    * graphs take connectedComponents' driver path, and as "`name` (loop
+    * path)" under threshold -1, where they take the distributed loop.
+    */
+  private def componentsTest(name: String)(body: => Unit): Unit = {
+    test(name)(body)
+    test(s"$name (loop path)")(withBroadcastThreshold(-1)(body))
+  }
+
+  componentsTest("connectedComponents: path graph collapses to the min node") {
     // reversed path 5-4-3-2-1: relaxation alone needs diameter rounds;
     // jumping gets there in O(log)
     val m = ccMap(Seq((5L, 4L), (4L, 3L), (3L, 2L), (2L, 1L)))
     assert(m === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L))
   }
 
-  test("connectedComponents: bridge node with the largest id (pointer-jump-only counterexample)") {
+  componentsTest("connectedComponents: bridge node with the largest id (pointer-jump-only counterexample)") {
     // 1–9, 2–9: node 2's only neighbor is larger, so a min-partner pointer
     // forest loses the 2–9 edge; edge relaxation must carry 1 across
     val m = ccMap(Seq((1L, 9L), (2L, 9L)))
     assert(m === Map(1L -> 1L, 2L -> 1L, 9L -> 1L))
   }
 
-  test("connectedComponents: multiple components, isolated nodes, self-loops") {
+  componentsTest("connectedComponents: multiple components, isolated nodes, self-loops") {
     val m = ccMap(
       Seq((10L, 11L), (11L, 12L), (20L, 21L), (30L, 30L)),
       nodes = Seq(10L, 11L, 12L, 20L, 21L, 30L, 40L))
@@ -277,7 +290,7 @@ class RelationalSpec extends SparkSpec {
       20L -> 20L, 21L -> 20L, 30L -> 30L, 40L -> 40L))
   }
 
-  test("connectedComponents matches union-find on random graphs (universe ⊃ endpoints)") {
+  componentsTest("connectedComponents matches union-find on random graphs (universe ⊃ endpoints)") {
     // Randomized equivalence vs a local union-find, exercising the
     // edge-induced-subgraph iteration: most of the node universe never
     // touches an edge and must come back as singletons from the restore
@@ -301,23 +314,52 @@ class RelationalSpec extends SparkSpec {
     }
   }
 
-  test("connectedComponents: self-loop-only node survives without an explicit node list") {
+  componentsTest("connectedComponents: self-loop-only node survives without an explicit node list") {
     // 30's only edge is the self-loop — it must appear as its own singleton
     // component even when the universe is derived from the edges alone
     val m = ccMap(Seq((1L, 2L), (30L, 30L)))
     assert(m === Map(1L -> 1L, 2L -> 1L, 30L -> 30L))
   }
 
-  test("connectedComponents releases caches even when it fails to converge") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val chain = (1L to 64L).sliding(2).map(p => (p(0), p(1))).toSeq.toDF("src", "dst")
-    intercept[IllegalArgumentException](
-      Relational.connectedComponents(chain, maxRounds = 1))
-    val retained = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(retained.isEmpty, s"leaked caches: $retained")
+  componentsTest("connectedComponents labels string, int, decimal, binary and null ids alike") {
+    // every id type the loop accepts, compared by Catalyst's ordering:
+    // "b" < "bb" < "c", and the null endpoint is a (null, null) row
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (0 until r.length).map(r.get(_) match {
+        case b: Array[Byte] => b.toSeq
+        case v => v
+      })).toSet
+    val strs = Seq(("c", "bb"), ("bb", "b"), ("x", "x"), ("y", null))
+      .toDF("src", "dst")
+    assert(rows(Relational.connectedComponents(strs)) === Set(
+      Seq("b", "b"), Seq("bb", "b"), Seq("c", "b"), Seq("x", "x"),
+      Seq("y", "y"), Seq(null, null)))
+    val ints = Seq((3, 2), (2, 7), (9, 8)).toDF("src", "dst")
+    assert(rows(Relational.connectedComponents(ints, nodes = Some(Seq(1L).toDF("n")))) ===
+      Set(Seq(1L, 1L), Seq(2L, 2L), Seq(3L, 2L), Seq(7L, 2L), Seq(8L, 8L), Seq(9L, 8L)))
+    val decs = Seq(("10.50", "2.25"), ("2.25", "3.00")).toDF("src", "dst")
+      .select(col("src").cast("decimal(6,2)"), col("dst").cast("decimal(6,2)"))
+    assert(rows(Relational.connectedComponents(decs)).map(_.map(_.toString)) === Set(
+      Seq("2.25", "2.25"), Seq("3.00", "2.25"), Seq("10.50", "2.25")))
+    val bins = Seq(("b", "a"), ("c", "d")).toDF("src", "dst")
+      .select(col("src").cast("binary"), col("dst").cast("binary"))
+    assert(rows(Relational.connectedComponents(bins)) === Set("a" -> "a", "b" -> "a",
+      "c" -> "c", "d" -> "c").map { case (n, c) => Seq(n.getBytes.toSeq, c.getBytes.toSeq) })
   }
 
-  test("connectedComponents releases every working cache") {
+  test("connectedComponents releases caches even when it fails to converge") {
+    // only the loop has rounds to run out of: union-find always converges
+    withBroadcastThreshold(-1) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val chain = (1L to 64L).sliding(2).map(p => (p(0), p(1))).toSeq.toDF("src", "dst")
+      intercept[IllegalArgumentException](
+        Relational.connectedComponents(chain, maxRounds = 1))
+      val retained = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(retained.isEmpty, s"leaked caches: $retained")
+    }
+  }
+
+  componentsTest("connectedComponents releases every working cache") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val out = Relational.connectedComponents(
       (1L to 64L).sliding(2).map(p => (p(0), p(1))).toSeq.toDF("src", "dst"))
@@ -325,6 +367,35 @@ class RelationalSpec extends SparkSpec {
     assert(out.collect().forall(_.getLong(1) == 1L))
     val retained = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(retained.size <= 1, s"leaked caches: $retained") // the result checkpoint
+  }
+
+  test("connectedComponents takes the driver path exactly up to the broadcast threshold") {
+    // 4 edges both ways + one self-loop: 9 distinct bigint rows of
+    // 8 + 8 + 8 estimated bytes each, so 216 bytes fit and 215 do not
+    val edges = Seq((5L, 4L), (4L, 3L), (3L, 2L), (2L, 1L), (30L, 30L)).toDF("src", "dst")
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L, 30L -> 30L)
+    def run(t: Long) = withBroadcastThreshold(t)(jobsUnderGroup(
+      Relational.connectedComponents(edges).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap))
+    val (atCap, driverJobs) = run(216)
+    val (overCap, loopJobs) = run(215)
+    assert(atCap === want && overCap === want)
+    // driver path: the bounded collect (its shuffle map stage and two
+    // partition scans), the restore checkpoint and the caller's collect;
+    // the loop adds its sizing counts and two rounds of joins on top
+    assert(driverJobs <= 5, s"driver path ran $driverJobs jobs")
+    assert(loopJobs >= 20, s"loop path ran $loopJobs jobs")
+  }
+
+  test("op_graph_components builds and collects in the same 9 jobs every time") {
+    // its 2,700-row undirected edge set at sf0.001 takes the driver path;
+    // the loop ran 67 to 70 jobs here at the default threshold. Registered
+    // tables hand `Tables.load` its schema, so no footer-inference job
+    // counts, whatever ran earlier in this JVM.
+    val (s, dir) = (spark.newSession(), "/root/testdata/sf0.001")
+    graft.Tables.register(s, dir)
+    val counts = (1 to 3).map(_ => jobsUnderGroup(
+      graft.SparkEntry.queries("op_graph_components")(s, dir).collect())._2)
+    assert(counts === Seq(9, 9, 9))
   }
 
   test("snapshotDiff classifies added/removed/changed and hides unchanged") {
