@@ -713,15 +713,12 @@ object Dedup {
     */
   def dedupClusterStats(docs: DataFrame,
       thresholdPpm: Long = 500000L): DataFrame = {
-    val pairs = prefixFilteredJaccardPairs(docs, thresholdPpm)
-    // Components reads its edge input once for the bounded collect that
-    // picks its path, and the loop reads it again (undirected closure,
-    // node universe, then per-round joins); materializing the TINY pair
-    // list computes the expensive similarity join exactly once and feeds
-    // both a flat scan.
-    val edges = org.apache.spark.sql.GraftBridge.flattenPlan(materialize(
-      pairs.select(col("a_id").as("src"), col("b_id").as("dst"))))
-    val comp = graft.ops.Relational.connectedComponents(edges)
+    // the pair list is components' edge input: its bounded collect reads
+    // it once, and only a pair graph over the broadcast threshold reads it
+    // again, into the loop's own edge cache
+    val comp = graft.ops.Relational.connectedComponents(
+      prefixFilteredJaccardPairs(docs, thresholdPpm)
+        .select(col("a_id").as("src"), col("b_id").as("dst")))
     comp.groupBy(col("component")).agg(count(lit(1)).as("cluster_size"))
       .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
       .select(col("cluster_size"), col("n_clusters"),

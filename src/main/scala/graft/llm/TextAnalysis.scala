@@ -637,59 +637,126 @@ object TextAnalysis {
     * most frequent pair, ties by pair lexicographically → merge it
     * everywhere), exactly Sennrich et al.'s algorithm. Returns one row
     * per learned merge: `(round, x, y, merged, n)` with `n` the exact
-    * weighted pair count that won the round; fewer than `rounds` rows
-    * come back if the corpus runs out of pairs.
+    * weighted pair count that won the round, ordered by `round`; fewer
+    * than `rounds` rows come back if the corpus runs out of pairs.
     *
-    * Fully declarative — no `collect()`, no driver loop over data: each
-    * round's winning pair is a 1-row argmax frame, materialized by
-    * [[graft.ops.Tuning.materialize]] (the loop-flattening discipline —
-    * a 1-row deterministic frame, so partition invariance is unaffected)
-    * and broadcast-joined back so the NEXT round's `replace` takes the
-    * pair as COLUMNS. The
-    * symbol stream is [[bpeEncode]]'s boundary-wrapped form, so each
-    * merge is the same greedy whole-symbol replace the encoder applies.
-    *
-    * Scale: the corpus collapses to its word-frequency table first (one
+    * The corpus collapses to its word-frequency table first (one
     * map-side-combined shuffle — |vocab| rows, not corpus rows), and
-    * that table is materialized ONCE so the collapse runs ONE
-    * time: each round's argmax is a separate action, and without the
-    * checkpoint every round would replay the corpus explode + collapse
-    * shuffle (8 rounds = 8 corpus scans — an 8× waste at 100 TB). Every
-    * round then costs one vocab-sized pair aggregation + a 1-row
-    * broadcast. Rounds are sequential by nature (BPE is an inherently
-    * iterative algorithm); the per-round cost is corpus-independent
-    * after the materialized collapse. Both materializations follow the
-    * library's one rule: a reliable checkpoint when the context has a
-    * checkpoint dir (a cluster learn then survives executor loss), a
-    * local one otherwise. The round winners back the returned frame, so
+    * that `(wc, s)` table is materialized ONCE, so the collapse runs one
+    * time whichever path the rounds take. The symbol stream `s` is
+    * [[bpeEncode]]'s boundary-wrapped form, so each merge is the same
+    * greedy whole-symbol replace the encoder applies. Then one bounded
+    * collect of the table ([[graft.ops.Tuning.broadcastRows]]) picks the
+    * path:
+    *   - Driver path: a table at or under
+    *     `spark.sql.autoBroadcastJoinThreshold` is learned on the driver
+    *     (`driverMerges`), evaluating Spark's own `StringTrim`,
+    *     `StringSplit` and `StringReplace` over its rows, with exact pair
+    *     sums and the same argmax order (`n` descending, then `x`, then
+    *     `y` in `UTF8String` binary order). The merges become a local
+    *     relation. No job runs per round.
+    *   - Loop path: over the threshold, or with the threshold at `-1`,
+    *     each round's winning pair is a 1-row argmax frame, materialized
+    *     by [[graft.ops.Tuning.materialize]] (the loop-flattening
+    *     discipline — a 1-row deterministic frame, so partition
+    *     invariance is unaffected) and broadcast-joined back so the NEXT
+    *     round's `replace` takes the pair as COLUMNS. Every round costs
+    *     one vocab-sized pair aggregation + a 1-row broadcast, whatever
+    *     the corpus size.
+    * Both return the same rows. Rounds are sequential by nature (BPE is
+    * an inherently iterative algorithm). Every materialization follows
+    * the library's one rule: a reliable checkpoint when the context has
+    * a checkpoint dir (a cluster learn then survives executor loss), a
+    * local one otherwise. The checkpoints back the returned frame, so
     * nothing is unpersisted inside the operator.
     *
-    * Session conf: while the rounds run it narrows
-    * `spark.sql.shuffle.partitions` to the loop width (when that is
-    * below the session's) on the CALLER's session and restores it after,
-    * so queries running concurrently on that session see the narrowed
-    * width too. Unlike
+    * Session conf: only the loop path writes it. While the rounds run it
+    * narrows `spark.sql.shuffle.partitions` to the loop width (when that
+    * is below the session's) on the CALLER's session and restores it
+    * after, so queries running concurrently on that session see the
+    * narrowed width too. Unlike
     * [[graft.ops.Relational.connectedComponents]] it leaves the
-    * cached-plan AQE flag alone.
+    * cached-plan AQE flag alone. The driver path writes no conf.
     */
   def bpeLearnMerges(docs: DataFrame, rounds: Int = 8,
       textCol: String = "text"): DataFrame = {
     require(rounds > 0 && rounds <= 64, "rounds must be in 1..64")
-    val sep = "\u001F"
-    val sep2 = sep + sep
-    // materialize the vocab-sized collapse ONCE: each round's argmax
-    // is its own action, and an unmaterialized `words` would replay
-    // the corpus scan + collapse shuffle every round. (r20 note: a
-    // cores-wide spread of the collapse was tried and REVERTED — the
-    // measured loop cost is per-job scheduling, ~49 jobs on 56 tasks,
-    // not map-side compute, so the spread only added a shuffle and
-    // 6× the task count for flat-to-worse time.)
+    // materialize the vocab-sized collapse ONCE: the path's bounded
+    // collect and each loop round's argmax are actions of their own, and
+    // an unmaterialized `words` would replay the corpus scan + collapse
+    // shuffle for each. (r20 note: a cores-wide spread of the collapse
+    // was tried and REVERTED — the measured loop cost is per-job
+    // scheduling, ~49 jobs on 56 tasks, not map-side compute, so the
+    // spread only added a shuffle and 6× the task count for
+    // flat-to-worse time.)
     val words = graft.ops.Tuning.materialize(docs
       .select(explode(split(lower(coalesce(col(textCol), lit(""))), WsSplitRegex)).as("word"))
       .filter(length(col("word")) >= 2)
       .groupBy(col("word")).agg(count(lit(1)).as("wc"))
       .select(col("wc"),
-        regexp_replace(col("word"), AnyCharCapture, sep + "$1" + sep).as("s")))
+        regexp_replace(col("word"), AnyCharCapture, BpeSep + "$1" + BpeSep).as("s")))
+    val merges = graft.ops.Tuning.broadcastRows(words) match {
+      case Some(vocab) => graft.ops.Tuning.materialize(driverMerges(docs.sparkSession, vocab, rounds))
+      case None => mergeLoop(words, rounds)
+    }
+    merges.orderBy(col("round"))
+  }
+
+  /** The separator that boundary-wraps every BPE symbol (U+001F). */
+  private val BpeSep = "\u001F"
+
+  /** [[bpeLearnMerges]]' rounds on the driver over the `(wc, s)` vocab
+    * rows: the loop's pair aggregation, argmax and replace, with Spark's
+    * own string expressions.
+    */
+  private def driverMerges(spark: org.apache.spark.sql.SparkSession,
+      vocab: Array[org.apache.spark.sql.catalyst.InternalRow], rounds: Int): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    val sep = UTF8String.fromString(BpeSep)
+    val sep2 = UTF8String.concat(sep, sep)
+    val s = BoundReference(0, StringType, nullable = false)
+    val symbols = StringSplit(StringTrim(s, Some(Literal(sep, StringType))),
+      Literal(sep2, StringType), Literal(-1))
+    val wc = vocab.map(_.getLong(0))
+    var words = vocab.map(_.getUTF8String(1))
+    val out = Seq.newBuilder[InternalRow]
+    var r = 1
+    var exhausted = false
+    while (r <= rounds && !exhausted) {
+      val n = scala.collection.mutable.HashMap.empty[(UTF8String, UTF8String), Long]
+      words.indices.foreach { i =>
+        val syms = symbols.eval(InternalRow(words(i))).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+        for (k <- 0 until syms.numElements() - 1) {
+          val p = (syms.getUTF8String(k), syms.getUTF8String(k + 1))
+          n(p) = n.getOrElse(p, 0L) + wc(i)
+        }
+      }
+      exhausted = n.isEmpty
+      if (!exhausted) {
+        // `UTF8String.compareTo` is Spark's binary string order
+        val ((x, y), c) = n.minBy { case ((x, y), c) => (-c, x, y) }
+        val xy = UTF8String.concat(x, y)
+        out += InternalRow(r.toLong, x, y, xy, c)
+        val merge = StringReplace(s, Literal(UTF8String.concat(sep, x, sep2, y, sep), StringType),
+          Literal(UTF8String.concat(sep, xy, sep), StringType))
+        words = words.map(w => merge.eval(InternalRow(w)).asInstanceOf[UTF8String])
+      }
+      r += 1
+    }
+    org.apache.spark.sql.GraftBridge.localFrame(spark, StructType(Seq(
+      StructField("round", LongType), StructField("x", StringType), StructField("y", StringType),
+      StructField("merged", StringType), StructField("n", LongType))), out.result())
+  }
+
+  /** The distributed rounds of [[bpeLearnMerges]] over the materialized
+    * `(wc, s)` vocab `words`.
+    */
+  private def mergeLoop(words: DataFrame, rounds: Int): DataFrame = {
+    val sep = BpeSep
+    val sep2 = sep + sep
     def topPair(cur: DataFrame): DataFrame = {
       val syms = split(trim(col("s"), sep), sep2)
       cur
@@ -707,11 +774,11 @@ object TextAnalysis {
     // guide §2.2 — see Tuning): every round is a vocab-sized pair
     // aggregation, orders of magnitude under the corpus the session
     // conf is sized for (measured: the 8-round learn spent 49 jobs on
-    // 56 tasks — pure scheduling). The corpus collapse above already
+    // 56 tasks — pure scheduling). The corpus collapse already
     // ran at session width; only the rounds are scoped. The count is a
     // pass over the materialized vocab, taken only when the session is
     // wider than the loop floor.
-    graft.ops.Tuning.withLoopParallelism(docs.sparkSession, words.count()) {
+    graft.ops.Tuning.withLoopParallelism(words.sparkSession, words.count()) {
       for (r <- 1 to rounds) {
         // 1-row deterministic frame; materializing keeps round r+1's plan
         // from re-nesting every earlier round's aggregation
@@ -724,7 +791,7 @@ object TextAnalysis {
             concat(lit(sep), col("x"), col("y"), lit(sep))).as("s"))
       }
     }
-    out.result().reduce(_ unionByName _).orderBy(col("round"))
+    out.result().reduce(_ unionByName _)
   }
 
   /** BPE LEARN-THEN-ENCODE — the closed loop: induce `rounds` merges
@@ -734,10 +801,12 @@ object TextAnalysis {
     * data it will budget — unlike [[bpeEncode]]'s fixed
     * [[DefaultBpeMerges]], the merge table here is DATA.
     *
-    * Still zero `collect()`: the learned merges collapse to a 1-row
-    * frame holding the round-ordered `(round, x, y)` array
-    * (`sort_array(collect_list(struct(…)))` under a global agg — ≤
-    * `rounds` elements, driver-free), broadcast-cross-joined onto the
+    * The merge list is never collected: the learned merges (a local
+    * relation on [[bpeLearnMerges]]' driver path, checkpointed argmax
+    * rows on its loop path; the only collect is the learn's bounded one
+    * of its vocab) collapse to a 1-row frame holding the round-ordered
+    * `(round, x, y)` array (`sort_array(collect_list(struct(…)))` under a
+    * global agg — ≤ `rounds` elements), broadcast-cross-joined onto the
     * corpus, and applied per word with `aggregate(ms, wrapped, replace)`
     * — the SAME boundary-wrapped whole-symbol replace as the fixed-list
     * encoder, just folding over an array column instead of a compiled-in
@@ -745,7 +814,8 @@ object TextAnalysis {
     * a shorter array; `aggregate` applies what exists.
     *
     * Scale: learning = one materialized corpus collapse + `rounds`
-    * vocab-sized aggregations (see [[bpeLearnMerges]]); encoding = ONE
+    * vocab-sized rounds, on the driver for a broadcast-sized vocab (see
+    * [[bpeLearnMerges]]); encoding = ONE
     * corpus scan with per-row codegen'd expressions and a 1-row
     * broadcast — no shuffle on the encode side at any corpus size.
     */

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DecimalType, LongType, StructField, StructType}
 
 /** Relational operator library — the Spark-first re-expression of the
   * reference's dataflow operators (SURVEY.md §2.1) and expression surface
@@ -507,8 +507,9 @@ object Relational {
     * a node with no edge to another node is its own component.
     *
     * Two paths, chosen the way Spark chooses between a broadcast and a
-    * shuffle join. One bounded collect reads the distinct undirected edge
-    * set (both directions of every edge, self-loops included):
+    * shuffle join. One bounded collect ([[Tuning.broadcastRows]]) reads
+    * the distinct undirected edge set (both directions of every edge,
+    * self-loops included):
     *   - Driver path: when its row count times Catalyst's estimated row
     *     size is at or below `spark.sql.autoBroadcastJoinThreshold` (the
     *     test Spark applies before it ships a relation to every executor),
@@ -557,9 +558,10 @@ object Relational {
     * per-component state ever lands on one executor, and round count is
     * logarithmic in the longest chain, not the corpus size. The path
     * choice costs that loop one more evaluation of the edge input up to
-    * the distinct's shuffle (the bounded collect), and the driver path
-    * never holds more than the threshold's worth of edges, as a broadcast
-    * would.
+    * the distinct's shuffle (the bounded collect); the loop itself
+    * persists the edge input, so its closure and node universe share one
+    * evaluation. The driver path never holds more than the threshold's
+    * worth of edges, as a broadcast would.
     *
     * The loop runs over the EDGE-INDUCED subgraph only: a node with no
     * (non-self-loop) edge can never change its label, so the full node
@@ -580,20 +582,42 @@ object Relational {
       dstCol: String = "dst", nodes: Option[DataFrame] = None,
       maxRounds: Int = 30): DataFrame = {
     val e = edges.select(col(srcCol).as("__a"), col(dstCol).as("__b"))
-    // both directions of every raw edge: its `__a` column holds every
-    // endpoint, including self-loop-only and null ones, which are nodes
-    // of the universe even though the loop filters them out
-    val sym = e.union(e.select(col("__b").as("__a"), col("__a").as("__b")))
     // the node universe: the first column of `nodes` and the endpoints
     def universe(ends: DataFrame): DataFrame =
       nodes.fold(ends)(n => n.select(col(n.columns.head).as("node")).union(ends)).distinct()
-    driverLabels(sym.distinct()) match {
+    driverLabels(symmetric(e).distinct()) match {
       // the labels name every endpoint once: without `nodes` they are the
       // universe already
       case Some(labels) =>
         restoreUniverse(nodes.map(_ => universe(labels.select(col("node")))), labels)
-      case None => labelLoop(sym, universe(sym.select(col("__a").as("node"))), maxRounds)
+      case None => labelLoop(e, universe, maxRounds)
     }
+  }
+
+  /** Both directions of every edge of `e` (columns `__a`, `__b`): the
+    * `__a` column holds every endpoint, including self-loop-only and null
+    * ones, which are nodes of the universe even though the loop filters
+    * them out.
+    */
+  private def symmetric(e: DataFrame): DataFrame =
+    e.union(e.select(col("__b").as("__a"), col("__a").as("__b")))
+
+  /** The sorted distinct non-null node ids among `values` (Catalyst values
+    * of type `t`), compared with Catalyst's interpreted ordering, so every
+    * id type the loops join on indexes the same way; `apply` is an id's
+    * position. The driver paths of [[connectedComponents]] and
+    * [[pageRank]] key their per-node arrays by it.
+    */
+  private final class IdIndex(values: Iterator[Any], t: DataType) {
+    private val ord = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(t)
+    val ids: scala.collection.IndexedSeq[Any] = {
+      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+      values.filter(_ != null).toArray.sorted(ord).foreach { v =>
+        if (out.isEmpty || ord.compare(out.last, v) != 0) out += v
+      }
+      out
+    }
+    def apply(v: Any): Int = ids.search(v)(ord).insertionPoint
   }
 
   /** `(node, component)` for every node of `nodeIds` (of `labels` when
@@ -608,66 +632,56 @@ object Relational {
 
   /** `(node, lbl)` for every endpoint of the symmetric edge set `sym`
     * (columns `__a`, `__b`), labeled with the smallest id of its component
-    * by union-find on the driver; None, after collecting at most one row
-    * more than fits, when `sym` is over `spark.sql.autoBroadcastJoinThreshold`
-    * (rows × Catalyst's estimated row size) or the threshold is negative.
+    * by union-find on the driver; None when `sym` is not broadcast-sized
+    * ([[Tuning.broadcastRows]]).
     *
-    * Ids stay Catalyst values of the column's type, compared with
-    * Catalyst's interpreted ordering, so every type the loop accepts
-    * labels the same way: the sorted distinct ids are the union-find
-    * elements, and linking the larger root under the smaller keeps each
-    * component's root at its minimum. Self-loops link nothing. A null
-    * endpoint links nothing either and comes back as a `(null, null)`
-    * row, so the universe keeps it, as the loop's does.
+    * The union-find elements are the [[IdIndex]] positions of the ids, and
+    * linking the larger root under the smaller keeps each component's root
+    * at its minimum. Self-loops link nothing. A null endpoint links nothing
+    * either and comes back as a `(null, null)` row, so the universe keeps
+    * it, as the loop's does.
     */
-  private def driverLabels(sym: DataFrame): Option[DataFrame] = {
-    import org.apache.spark.sql.GraftBridge
-    val threshold = sym.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    if (threshold < 0) None else {
-      val cap = math.min(threshold / GraftBridge.estimatedRowBytes(sym), Int.MaxValue - 1L).toInt
-      val rows = GraftBridge.collectInternal(sym.limit(cap + 1))
-      if (rows.length > cap) None else {
-        val t = sym.schema.head.dataType
-        val ord = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(t)
-        // `sym` is symmetric, so its `__a` column holds every endpoint
-        val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
-        rows.filterNot(_.isNullAt(0)).map(_.get(0, t)).sorted(ord).foreach { v =>
-          if (ids.isEmpty || ord.compare(ids.last, v) != 0) ids += v
-        }
-        def at(v: Any): Int = ids.search(v)(ord).insertionPoint
-        val parent = Array.range(0, ids.length)
-        def find(i: Int): Int = {
-          var x = i
-          while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-          x
-        }
-        rows.foreach { r =>
-          if (!r.isNullAt(0) && !r.isNullAt(1)) {
-            val (ra, rb) = (find(at(r.get(0, t))), find(at(r.get(1, t))))
-            if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-          }
-        }
-        val labeled = ids.indices.map(i => InternalRow(ids(i), ids(find(i))))
-        val nullEnd = if (rows.exists(_.isNullAt(0))) Seq(InternalRow(null, null)) else Nil
-        Some(GraftBridge.localFrame(sym.sparkSession,
-          StructType(Seq(StructField("node", t), StructField("lbl", t))), labeled ++ nullEnd))
+  private def driverLabels(sym: DataFrame): Option[DataFrame] =
+    Tuning.broadcastRows(sym).map { rows =>
+      val t = sym.schema.head.dataType
+      // `sym` is symmetric, so its `__a` column holds every endpoint
+      val index = new IdIndex(rows.iterator.map(_.get(0, t)), t)
+      val ids = index.ids
+      val parent = Array.range(0, ids.length)
+      def find(i: Int): Int = {
+        var x = i
+        while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+        x
       }
+      rows.foreach { r =>
+        if (!r.isNullAt(0) && !r.isNullAt(1)) {
+          val (ra, rb) = (find(index(r.get(0, t))), find(index(r.get(1, t))))
+          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+        }
+      }
+      val labeled = ids.indices.map(i => InternalRow(ids(i), ids(find(i))))
+      val nullEnd = if (rows.exists(_.isNullAt(0))) Seq(InternalRow(null, null)) else Nil
+      org.apache.spark.sql.GraftBridge.localFrame(sym.sparkSession,
+        StructType(Seq(StructField("node", t), StructField("lbl", t))), labeled ++ nullEnd)
     }
-  }
 
-  /** The distributed loop of [[connectedComponents]] over the symmetric
-    * edge set `sym`, restored to the universe `universe`.
+  /** The distributed loop of [[connectedComponents]] over the edges `e`
+    * (columns `__a`, `__b`), restored to `universe` of their endpoints.
     */
-  private def labelLoop(sym: DataFrame, universe: DataFrame, maxRounds: Int): DataFrame =
-    // every working cache below (und, nodeIds, labels, per-round frames)
-    // is re-read by later rounds — let AQE size them by bytes (r20)
-    Tuning.withAqeSizedCaches(sym.sparkSession) { Tuning.withCaches { caches =>
+  private def labelLoop(e: DataFrame, universe: DataFrame => DataFrame,
+      maxRounds: Int): DataFrame =
+    // every working cache below (edges, und, nodeIds, labels, per-round
+    // frames) is re-read by later rounds — let AQE size them by bytes (r20)
+    Tuning.withAqeSizedCaches(e.sparkSession) { Tuning.withCaches { caches =>
+    // the closure and the universe both read the edges: persisted, their
+    // input (a similarity join, say) evaluates once for both
+    val sym = symmetric(caches.persist(e))
     val und = caches.persist(sym.filter(col("__a") =!= col("__b")).distinct())
     // Persisted: the universe's lineage may be an expensive generator,
     // and the restore join after convergence re-reads it — before the
     // subgraph iteration it seeded the (persisted) label table, so the
     // input plan evaluated once; the persist keeps that property.
-    val nodeIds = caches.persist(universe)
+    val nodeIds = caches.persist(universe(sym.select(col("__a").as("node"))))
     // Only nodes on a real (non-self-loop) edge can ever change label —
     // the loop iterates over THEM alone; everyone else (incl. self-loop-
     // only nodes) is a singleton restored by the final left join.
@@ -733,34 +747,125 @@ object Relational {
     * than redistributed — the common sparse-web simplification; ranks
     * then sum to < `scale` but the ORDERING, the gate, and the
     * fixed-point shape are unaffected, and both engines drop it
-    * identically.
+    * identically. An empty edge list has no node and gives an empty
+    * `(node, rank_ppb)` frame.
     *
-    * At 100 TB: each iteration is one edges⋈ranks shuffle on `src` plus
-    * one `dst` aggregation — the same two-shuffle round GraphX's
-    * Pregel-style PageRank pays, with Catalyst free to broadcast the
-    * (nodes-sized, usually small) rank table. Iteration plans are
-    * flattened per round so the lineage doesn't grow with iteration
-    * count.
+    * Two paths, chosen as [[connectedComponents]] chooses, by one bounded
+    * collect of the distinct edges ([[Tuning.broadcastRows]]):
+    *   - Driver path: at or under `spark.sql.autoBroadcastJoinThreshold`
+    *     the rounds run on the driver over those edges (`driverRanks`)
+    *     and the ranks become a local relation. Its arithmetic is
+    *     Catalyst's own `IntegralDivide`, `Multiply`, `Add` and `Sum`,
+    *     evaluated under the session's eval mode, so an ANSI session gets
+    *     the loop's `ARITHMETIC_OVERFLOW` from this call and a non-ANSI
+    *     one the loop's wrapped values. No job runs per round.
+    *   - Loop path: over the threshold, or with the threshold at `-1`,
+    *     each iteration is one edges⋈ranks shuffle on `src` plus one
+    *     `dst` aggregation — the same two-shuffle round GraphX's
+    *     Pregel-style PageRank pays, with Catalyst free to broadcast the
+    *     (nodes-sized, usually small) rank table. Iteration plans are
+    *     flattened per round so the lineage doesn't grow with iteration
+    *     count.
+    * Both return the same rows, computed by [[Tuning.materialize]]. Ids
+    * of any type the joins accept rank alike: a null endpoint is a node
+    * that counts in the node total and gets a rank, but neither sends
+    * nor receives mass, since the joins match no null key.
     *
-    * Session conf: while it runs it sets
-    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` and
+    * Session conf: only the loop path writes it. While the loop runs it
+    * sets `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` and
     * narrows `spark.sql.shuffle.partitions` to the loop width (when that
     * is below the session's) on the CALLER's session, restoring both
     * after, so queries running concurrently on that session see them
-    * too.
+    * too. The driver path reads the session conf and writes none.
     */
   def pageRank(edges: DataFrame, iterations: Int = 3,
       srcCol: String = "src", dstCol: String = "dst",
       dampingPct: Long = 85L, scale: Long = 1000000000L): DataFrame = {
     require(iterations >= 0, "iterations must be non-negative")
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct in [0,100]")
+    val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst")).distinct()
+    // the node type: the union's wider endpoint type, which the loop's
+    // joins coerce both endpoints to
+    val t = rankNodes(e).schema.head.dataType
+    Tuning.broadcastRows(e.select(col("__src").cast(t), col("__dst").cast(t))) match {
+      case Some(rows) => Tuning.materialize(
+        driverRanks(e.sparkSession, rows, t, iterations, dampingPct, scale))
+      case None => rankLoop(e, iterations, dampingPct, scale)
+    }
+  }
+
+  /** Every endpoint of the distinct edges `e` once, as `node`. */
+  private def rankNodes(e: DataFrame): DataFrame =
+    e.select(col("__src").as("node")).union(e.select(col("__dst").as("node"))).distinct()
+
+  /** The uniform start mass of [[pageRank]]: `scale` split over `nodeN`
+    * nodes, 0 when there is none to split it over.
+    */
+  private def startMass(scale: Long, nodeN: Long): Long =
+    if (nodeN == 0) 0L else scale / nodeN
+
+  /** [[pageRank]]'s rounds on the driver over `rows`, the distinct
+    * `(src, dst)` edges as Catalyst values of the node type `t`: the
+    * loop's joins, aggregation and fold, one array slot per
+    * [[IdIndex]] position and Catalyst's expressions for every step of
+    * arithmetic.
+    */
+  private def driverRanks(spark: org.apache.spark.sql.SparkSession, rows: Array[InternalRow],
+      t: DataType, iterations: Int, dampingPct: Long, scale: Long): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+    val conf = spark.sessionState.conf
+    val mode = EvalMode.fromSQLConf(conf)
+    val index = new IdIndex(rows.iterator.flatMap(r => Seq(r.get(0, t), r.get(1, t))), t)
+    val nullNode = rows.exists(r => r.isNullAt(0) || r.isNullAt(1))
+    val base = startMass(scale, index.ids.length + (if (nullNode) 1L else 0L))
+    // the edges whose contribution reaches a rank: a null src has no rank
+    // to send and a null dst no row to receive it
+    val (src, dst) = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .map(r => (index(r.get(0, t)), index(r.get(1, t)))).unzip
+    // out-degrees count every distinct edge of a src, a null dst included
+    val deg = new Array[Long](index.ids.length)
+    rows.foreach(r => if (!r.isNullAt(0)) deg(index(r.get(0, t))) += 1)
+    val contribution = IntegralDivide(BoundReference(0, LongType, nullable = false),
+      BoundReference(1, LongType, nullable = false), mode)
+    val fold = IntegralDivide(Add(Multiply(Literal(100L - dampingPct), Literal(base), mode),
+      Multiply(Literal(dampingPct), Coalesce(Seq(BoundReference(0, LongType, nullable = true),
+        Literal(0L))), mode), mode), Literal(100L), mode)
+    // Catalyst's Sum, stepped through its own update and result expressions
+    val in = AttributeReference("c", LongType, nullable = false)()
+    val sumAgg = Sum(in, NumericEvalContext.fromSQLConf(conf))
+    val update = sumAgg.updateExpressions
+      .map(BindReferences.bindReference(_, sumAgg.aggBufferAttributes :+ in))
+    val total = BindReferences.bindReference(sumAgg.evaluateExpression, sumAgg.aggBufferAttributes)
+    val empty = InternalRow.fromSeq(sumAgg.initialValues.map(_.eval()))
+    var rank = Array.fill[Any](index.ids.length)(base)
+    var nullRank: Any = base
+    for (_ <- 1 to iterations) {
+      val sums = Array.fill(index.ids.length)(empty)
+      src.indices.foreach { k =>
+        val c = contribution.eval(InternalRow(rank(src(k)), deg(src(k))))
+        val acc = new JoinedRow(sums(dst(k)), InternalRow(c))
+        sums(dst(k)) = InternalRow.fromSeq(update.map(_.eval(acc)))
+      }
+      rank = sums.map(s => fold.eval(InternalRow(total.eval(s))))
+      nullRank = fold.eval(InternalRow(null))
+    }
+    val ranked = index.ids.indices.map(i => InternalRow(index.ids(i), rank(i)))
+    org.apache.spark.sql.GraftBridge.localFrame(spark,
+      StructType(Seq(StructField("node", t), StructField("rank_ppb", LongType))),
+      if (nullNode) ranked :+ InternalRow(null, nullRank) else ranked)
+  }
+
+  /** The distributed rounds of [[pageRank]] over its distinct edges `edges`
+    * (columns `__src`, `__dst`).
+    */
+  private def rankLoop(edges: DataFrame, iterations: Int, dampingPct: Long,
+      scale: Long): DataFrame =
     // e, nodes, edeg and every per-round rank cache are re-read each
     // iteration — let AQE size them by bytes (r20)
     Tuning.withAqeSizedCaches(edges.sparkSession) { Tuning.withCaches { caches =>
-    val e = caches.persist(edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-      .distinct())
-    val nodes = caches.persist(e.select(col("__src").as("node"))
-      .union(e.select(col("__dst").as("node"))).distinct())
+    val e = caches.persist(edges)
+    val nodes = caches.persist(rankNodes(e))
     // r19: e ⋈ deg is loop-INVARIANT — computing it
     // inside the iteration re-ran the degree aggregate and its join
     // every round (two extra exchanges per iteration). Hoisted and
@@ -770,7 +875,7 @@ object Relational {
       e.groupBy(col("__src")).agg(count(lit(1)).as("__deg")), "__src"))
     // One scalar action: the node count fixes the uniform start mass.
     val nodeN = nodes.count()
-    val base = scale / nodeN
+    val base = startMass(scale, nodeN)
     // `cached` is the persisted handle (the one that can unpersist);
     // `ranks` is its plan-flattened view — see GraftBridge.flattenPlan
     // on why both are needed.
@@ -802,7 +907,6 @@ object Relational {
     Tuning.materialize(ranks)
     }
     } }
-  }
 
   /** Exact bivariate statistics (covariance, Pearson correlation) from six
     * integer sums — the same cross-engine bit-exactness recipe as

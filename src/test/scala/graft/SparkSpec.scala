@@ -31,6 +31,20 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** Run `body` with `spark.sql.autoBroadcastJoinThreshold` set to `t`. */
+  def withBroadcastThreshold[A](t: Long)(body: => A): A =
+    graft.ops.Tuning.withSqlConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> t.toString)(body)
+
+  /** Register `name` twice: at the session's threshold, where the small
+    * inputs of these tests take an iterative operator's driver path
+    * ([[graft.ops.Tuning.broadcastRows]]), and as "`name` (loop path)"
+    * under threshold -1, where they take its distributed loop.
+    */
+  def bothPathsTest(name: String)(body: => Unit): Unit = {
+    test(name)(body)
+    test(s"$name (loop path)")(withBroadcastThreshold(-1)(body))
+  }
+
   /** Run `body` under a fresh job group and return its result with the
     * number of Spark jobs that started under that group.
     */

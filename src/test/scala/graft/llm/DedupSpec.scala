@@ -500,7 +500,7 @@ class DedupSpec extends SparkSpec {
     assert(a === b)
   }
 
-  test("dedupClusterStats: transitive clusters, singletons excluded, drop accounting") {
+  bothPathsTest("dedupClusterStats: transitive clusters, singletons excluded, drop accounting") {
     import spark.implicits._
     val shared = (1 to 20).map(i => s"w$i").mkString(" ")
     val docs = Seq(

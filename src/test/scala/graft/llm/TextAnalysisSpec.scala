@@ -58,7 +58,7 @@ class TextAnalysisSpec extends SparkSpec {
       TextAnalysis.bpeEncode(Seq((0L, "x")).toDF("doc_id", "text"), Seq("" -> "a")))
   }
 
-  test("bpeLearnMerges learns the hand-computed merge sequence and feeds bpeEncode") {
+  bothPathsTest("bpeLearnMerges learns the hand-computed merge sequence and feeds bpeEncode") {
     initLog()
     // words: aa×1, ab×2. Round 1: pairs (a,a)×1, (a,b)×2 → (a,b).
     // Round 2: ab is fused, only (a,a)×1 remains → (a,a).
@@ -96,11 +96,12 @@ class TextAnalysisSpec extends SparkSpec {
       ("und", 1L, 2L, 5L, 2500000L)))
   }
 
-  test("bpeEncodeLearned equals learn-then-encode with the collected merges") {
+  bothPathsTest("bpeEncodeLearned equals learn-then-encode with the collected merges") {
     initLog()
     val docs = Seq((0L, "aa ab"), (1L, "ab x"), (2L, "aab aba")).toDF("doc_id", "text")
-    // reference composition: collect the learned list (TEST-ONLY — the
-    // operator itself never collects) and feed the fixed-list encoder
+    // reference composition: collect the learned list and feed the
+    // fixed-list encoder (the operator collects only its bounded vocab,
+    // never the merge list: the merges reach the encode side as a frame)
     val merges = TextAnalysis.bpeLearnMerges(docs, rounds = 4).collect()
       .map(r => r.getAs[String]("x") -> r.getAs[String]("y")).toSeq
     val want = TextAnalysis.bpeEncode(docs, merges).collect()
@@ -122,7 +123,7 @@ class TextAnalysisSpec extends SparkSpec {
         .getAs[Long]("n_tokens_bpe"))
   }
 
-  test("bpeLearnMerges is checkpoint-invariant (local / reliable)") {
+  bothPathsTest("bpeLearnMerges is checkpoint-invariant (local / reliable)") {
     initLog()
     // Tuning.materialize trades fault tolerance for speed (localCheckpoint
     // truncates lineage and dies with an executor; checkpoint writes to
@@ -144,6 +145,26 @@ class TextAnalysisSpec extends SparkSpec {
     assert(reliable === local)
     // and the learned-encode pipeline agrees under the reliable path too
     assert(encReliable === encLocal)
+  }
+
+  test("bpeLearnMerges takes the driver path exactly up to the broadcast threshold") {
+    // words of two or more letters: aa, ab, ba, aab, the — 5 vocab rows
+    // of 8 + 8 (wc) + 20 (s) estimated bytes each, so 180 bytes fit and
+    // 179 do not
+    val docs = Seq((0L, "aa ab ba"), (1L, "ab x aab"), (2L, "the the ab"))
+      .toDF("doc_id", "text")
+    def run(t: Long) = withBroadcastThreshold(t) {
+      val (df, build) = jobsUnderGroup(TextAnalysis.bpeLearnMerges(docs, rounds = 4))
+      (df.collect().map(_.toSeq).toSeq, build)
+    }
+    val (atCap, driverJobs) = run(180)
+    val (overCap, loopJobs) = run(179)
+    assert(atCap === overCap && atCap.length == 4)
+    // driver path: the vocab checkpoint (its shuffle map stage and the
+    // checkpoint itself), the bounded collect and the merges' checkpoint;
+    // the loop adds its vocab count and a checkpointed argmax per round
+    assert(driverJobs <= 5, s"driver path built in $driverJobs jobs")
+    assert(loopJobs >= 10, s"loop path built in $loopJobs jobs")
   }
 
   test("bm25Rank scores and ranks a known corpus exactly") {

@@ -255,34 +255,21 @@ class RelationalSpec extends SparkSpec {
     assert(got === brute)
   }
 
-  /** Run `body` with `spark.sql.autoBroadcastJoinThreshold` set to `t`. */
-  private def withBroadcastThreshold[A](t: Long)(body: => A): A =
-    Tuning.withSqlConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> t.toString)(body)
-
-  /** Register `name` twice: at the session's threshold, where these small
-    * graphs take connectedComponents' driver path, and as "`name` (loop
-    * path)" under threshold -1, where they take the distributed loop.
-    */
-  private def componentsTest(name: String)(body: => Unit): Unit = {
-    test(name)(body)
-    test(s"$name (loop path)")(withBroadcastThreshold(-1)(body))
-  }
-
-  componentsTest("connectedComponents: path graph collapses to the min node") {
+  bothPathsTest("connectedComponents: path graph collapses to the min node") {
     // reversed path 5-4-3-2-1: relaxation alone needs diameter rounds;
     // jumping gets there in O(log)
     val m = ccMap(Seq((5L, 4L), (4L, 3L), (3L, 2L), (2L, 1L)))
     assert(m === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L))
   }
 
-  componentsTest("connectedComponents: bridge node with the largest id (pointer-jump-only counterexample)") {
+  bothPathsTest("connectedComponents: bridge node with the largest id (pointer-jump-only counterexample)") {
     // 1–9, 2–9: node 2's only neighbor is larger, so a min-partner pointer
     // forest loses the 2–9 edge; edge relaxation must carry 1 across
     val m = ccMap(Seq((1L, 9L), (2L, 9L)))
     assert(m === Map(1L -> 1L, 2L -> 1L, 9L -> 1L))
   }
 
-  componentsTest("connectedComponents: multiple components, isolated nodes, self-loops") {
+  bothPathsTest("connectedComponents: multiple components, isolated nodes, self-loops") {
     val m = ccMap(
       Seq((10L, 11L), (11L, 12L), (20L, 21L), (30L, 30L)),
       nodes = Seq(10L, 11L, 12L, 20L, 21L, 30L, 40L))
@@ -290,7 +277,7 @@ class RelationalSpec extends SparkSpec {
       20L -> 20L, 21L -> 20L, 30L -> 30L, 40L -> 40L))
   }
 
-  componentsTest("connectedComponents matches union-find on random graphs (universe ⊃ endpoints)") {
+  bothPathsTest("connectedComponents matches union-find on random graphs (universe ⊃ endpoints)") {
     // Randomized equivalence vs a local union-find, exercising the
     // edge-induced-subgraph iteration: most of the node universe never
     // touches an edge and must come back as singletons from the restore
@@ -314,14 +301,14 @@ class RelationalSpec extends SparkSpec {
     }
   }
 
-  componentsTest("connectedComponents: self-loop-only node survives without an explicit node list") {
+  bothPathsTest("connectedComponents: self-loop-only node survives without an explicit node list") {
     // 30's only edge is the self-loop — it must appear as its own singleton
     // component even when the universe is derived from the edges alone
     val m = ccMap(Seq((1L, 2L), (30L, 30L)))
     assert(m === Map(1L -> 1L, 2L -> 1L, 30L -> 30L))
   }
 
-  componentsTest("connectedComponents labels string, int, decimal, binary and null ids alike") {
+  bothPathsTest("connectedComponents labels string, int, decimal, binary and null ids alike") {
     // every id type the loop accepts, compared by Catalyst's ordering:
     // "b" < "bb" < "c", and the null endpoint is a (null, null) row
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -359,7 +346,7 @@ class RelationalSpec extends SparkSpec {
     }
   }
 
-  componentsTest("connectedComponents releases every working cache") {
+  bothPathsTest("connectedComponents releases every working cache") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val out = Relational.connectedComponents(
       (1L to 64L).sliding(2).map(p => (p(0), p(1))).toSeq.toDF("src", "dst"))
@@ -386,16 +373,32 @@ class RelationalSpec extends SparkSpec {
     assert(loopJobs >= 20, s"loop path ran $loopJobs jobs")
   }
 
-  test("op_graph_components builds and collects in the same 9 jobs every time") {
-    // its 2,700-row undirected edge set at sf0.001 takes the driver path;
-    // the loop ran 67 to 70 jobs here at the default threshold. Registered
-    // tables hand `Tables.load` its schema, so no footer-inference job
-    // counts, whatever ran earlier in this JVM.
+  test("iterative queries build and collect in pinned job counts every time") {
+    // (build jobs, collect jobs) over registered sf0.001 tables, where
+    // every one of these queries takes its operator's driver path; the
+    // loop built op_graph_pagerank in 30 jobs and each BPE query in 46.
+    // Registered tables hand `Tables.load` its schema, so no
+    // footer-inference job counts, whatever ran earlier in this JVM.
+    val pins = Seq(
+      "op_graph_components" -> (6, 3),
+      "op_graph_pagerank" -> (3, 3),
+      "llm_bpe_learn" -> (4, 3),
+      "llm_bpe_pipeline" -> (4, 7),
+      "llm_dedup_cluster_stats" -> (9, 5))
+    // the ceiling a driver path must keep its build under
+    val buildCeiling = Set("op_graph_pagerank", "llm_bpe_learn", "llm_bpe_pipeline")
     val (s, dir) = (spark.newSession(), "/root/testdata/sf0.001")
     graft.Tables.register(s, dir)
-    val counts = (1 to 3).map(_ => jobsUnderGroup(
-      graft.SparkEntry.queries("op_graph_components")(s, dir).collect())._2)
-    assert(counts === Seq(9, 9, 9))
+    val got = pins.map { case (q, _) =>
+      q -> (1 to 3).map { _ =>
+        val (df, build) = jobsUnderGroup(graft.SparkEntry.queries(q)(s, dir))
+        (build, jobsUnderGroup(df.collect())._2)
+      }
+    }
+    assert(got === pins.map { case (q, want) => q -> Seq.fill(3)(want) })
+    pins.filter(p => buildCeiling(p._1)).foreach { case (q, (build, _)) =>
+      assert(build <= 5, s"$q builds in $build jobs")
+    }
   }
 
   test("snapshotDiff classifies added/removed/changed and hides unchanged") {
@@ -471,7 +474,7 @@ class RelationalSpec extends SparkSpec {
     }
   }
 
-  test("pageRank matches a single-machine integer reference on a known graph") {
+  bothPathsTest("pageRank matches a single-machine integer reference on a known graph") {
     import spark.implicits._
     // star-ish graph with a cycle and a dangling node (4 has no out-edges)
     val edges = Seq((1L, 2L), (2L, 1L), (1L, 3L), (3L, 1L), (2L, 3L), (3L, 4L))
@@ -494,7 +497,7 @@ class RelationalSpec extends SparkSpec {
     assert(got.values.sum <= 1000000000L && got.values.sum > 0L)
   }
 
-  test("pageRank is deterministic under repartitioning") {
+  bothPathsTest("pageRank is deterministic under repartitioning") {
     import spark.implicits._
     val e = (1 to 400).map(i => ((i * 7 % 53).toLong, (i * 11 % 53).toLong))
     val a = Relational.pageRank(e.toDF("src", "dst"), iterations = 3)
@@ -504,7 +507,7 @@ class RelationalSpec extends SparkSpec {
     assert(a === b)
   }
 
-  test("pageRank releases every working cache") {
+  bothPathsTest("pageRank releases every working cache") {
     import spark.implicits._
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val out = Relational.pageRank(
@@ -514,7 +517,7 @@ class RelationalSpec extends SparkSpec {
     assert(retained.size <= 1, s"leaked caches: $retained") // the result checkpoint
   }
 
-  test("pageRank releases caches even when a round fails") {
+  bothPathsTest("pageRank releases caches even when a round fails") {
     import spark.implicits._
     val before = spark.sparkContext.getPersistentRDDs.keySet
     // two nodes put the start mass at Long.MaxValue / 2, so the first
@@ -525,6 +528,70 @@ class RelationalSpec extends SparkSpec {
     assert(e.getMessage.contains("ARITHMETIC_OVERFLOW"), e.getMessage)
     val retained = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(retained.isEmpty, s"leaked caches: $retained")
+  }
+
+  bothPathsTest("pageRank ranks string, int, decimal, binary and null ids alike") {
+    // a->b, b->a, a->c, null->a, c->null over four nodes (null counts):
+    // the null src sends nothing and the null dst keeps nothing, so two
+    // rounds of the fold give a, b, c and null these ranks
+    val letters = Seq(("a", "b"), ("b", "a"), ("a", "c"), (null, "a"), ("c", null))
+    val want = Map("a" -> 159687500L, "b" -> 143750000L, "c" -> 143750000L)
+    def ranks(ids: Map[String, String], t: String) = {
+      val e = letters.map { case (a, b) => (ids.getOrElse(a, null), ids.getOrElse(b, null)) }
+        .toDF("src", "dst").select(col("src").cast(t), col("dst").cast(t))
+      Relational.pageRank(e, iterations = 2).collect().map(r => (r.get(0) match {
+        case b: Array[Byte] => new String(b)
+        case v => if (v == null) null else v.toString
+      }) -> r.getLong(1)).toMap
+    }
+    def expect(ids: Map[String, String]) =
+      want.map { case (k, v) => ids(k) -> v } + ((null: String) -> 37500000L)
+    val types = Seq(
+      "string" -> Map("a" -> "a", "b" -> "b", "c" -> "c"),
+      "int" -> Map("a" -> "3", "b" -> "1", "c" -> "2"),
+      "decimal(6,2)" -> Map("a" -> "10.50", "b" -> "2.25", "c" -> "3.00"),
+      "binary" -> Map("a" -> "x", "b" -> "y", "c" -> "z"))
+    types.foreach { case (t, ids) => assert(ranks(ids, t) === expect(ids), t) }
+  }
+
+  bothPathsTest("pageRank on an empty edge list returns an empty rank frame") {
+    val out = Relational.pageRank(Seq.empty[(Long, Long)].toDF("src", "dst"))
+    assert(out.columns.toSeq === Seq("node", "rank_ppb"))
+    assert(out.collect().isEmpty)
+  }
+
+  test("pageRank takes the driver path exactly up to the broadcast threshold") {
+    // 6 distinct bigint edges of 8 + 8 + 8 estimated bytes each, so 144
+    // bytes fit and 143 do not
+    val edges = Seq((1L, 2L), (2L, 1L), (1L, 3L), (3L, 1L), (2L, 3L), (3L, 4L), (3L, 4L))
+      .toDF("src", "dst")
+    def run(t: Long) = withBroadcastThreshold(t)(jobsUnderGroup(
+      Relational.pageRank(edges).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap))
+    val (atCap, driverJobs) = run(144)
+    val (overCap, loopJobs) = run(143)
+    assert(atCap === overCap)
+    // driver path: the bounded collect (its shuffle map stage and a
+    // partition scan), the ranks' checkpoint and the caller's collect; the
+    // loop adds its sizing counts and three rounds of joins on top
+    assert(driverJobs <= 5, s"driver path ran $driverJobs jobs")
+    assert(loopJobs >= 15, s"loop path ran $loopJobs jobs")
+  }
+
+  test("pageRank wraps alike on both paths in a non-ANSI session") {
+    // the start mass of two nodes at scale Long.MaxValue overflows the
+    // fold, which an ANSI session raises; without ANSI both paths wrap
+    // as Scala's Long arithmetic does
+    val edges = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
+    Tuning.withSqlConf(spark, "spark.sql.ansi.enabled" -> "false") {
+      def ranks() = Relational.pageRank(edges, scale = Long.MaxValue)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val base = Long.MaxValue / 2
+      var r = base
+      for (_ <- 1 to 3) r = (15L * base + 85L * r) / 100L
+      val driver = ranks()
+      assert(driver === Map(1L -> r, 2L -> r))
+      assert(withBroadcastThreshold(-1)(ranks()) === driver)
+    }
   }
 
   test("sketchIntersectionEstimate tracks the exact period overlap") {
