@@ -653,8 +653,8 @@ object TextAnalysis {
     *     (`driverMerges`), evaluating Spark's own `StringTrim`,
     *     `StringSplit` and `StringReplace` over its rows, with exact pair
     *     sums and the same argmax order (`n` descending, then `x`, then
-    *     `y` in `UTF8String` binary order). The merges become a local
-    *     relation. No job runs per round.
+    *     `y` in `UTF8String` binary order). The merges are returned as a
+    *     local relation. No job runs per round.
     *   - Loop path: over the threshold, or with the threshold at `-1`,
     *     each round's winning pair is a 1-row argmax frame, materialized
     *     by [[graft.ops.Tuning.materialize]] (the loop-flattening
@@ -667,16 +667,11 @@ object TextAnalysis {
     * an inherently iterative algorithm). Every materialization follows
     * the library's one rule: a reliable checkpoint when the context has
     * a checkpoint dir (a cluster learn then survives executor loss), a
-    * local one otherwise. The checkpoints back the returned frame, so
-    * nothing is unpersisted inside the operator.
+    * local one otherwise. On the loop path the argmax checkpoints back
+    * the returned frame, so nothing is unpersisted inside the operator.
     *
-    * Session conf: only the loop path writes it. While the rounds run it
-    * narrows `spark.sql.shuffle.partitions` to the loop width (when that
-    * is below the session's) on the CALLER's session and restores it
-    * after, so queries running concurrently on that session see the
-    * narrowed width too. Unlike
-    * [[graft.ops.Relational.connectedComponents]] it leaves the
-    * cached-plan AQE flag alone. The driver path writes no conf.
+    * Session conf: neither path writes any; the loop path's rounds run at
+    * the session's shuffle width.
     */
   def bpeLearnMerges(docs: DataFrame, rounds: Int = 8,
       textCol: String = "text"): DataFrame = {
@@ -696,7 +691,7 @@ object TextAnalysis {
       .select(col("wc"),
         regexp_replace(col("word"), AnyCharCapture, BpeSep + "$1" + BpeSep).as("s")))
     val merges = graft.ops.Tuning.broadcastRows(words) match {
-      case Some(vocab) => graft.ops.Tuning.materialize(driverMerges(docs.sparkSession, vocab, rounds))
+      case Some(vocab) => driverMerges(docs.sparkSession, vocab, rounds)
       case None => mergeLoop(words, rounds)
     }
     merges.orderBy(col("round"))
@@ -770,26 +765,16 @@ object TextAnalysis {
     }
     val out = Seq.newBuilder[DataFrame]
     var cur = words
-    // vocab row count sizes the scoped per-round shuffle width (r20,
-    // guide §2.2 — see Tuning): every round is a vocab-sized pair
-    // aggregation, orders of magnitude under the corpus the session
-    // conf is sized for (measured: the 8-round learn spent 49 jobs on
-    // 56 tasks — pure scheduling). The corpus collapse already
-    // ran at session width; only the rounds are scoped. The count is a
-    // pass over the materialized vocab, taken only when the session is
-    // wider than the loop floor.
-    graft.ops.Tuning.withLoopParallelism(words.sparkSession, words.count()) {
-      for (r <- 1 to rounds) {
-        // 1-row deterministic frame; materializing keeps round r+1's plan
-        // from re-nesting every earlier round's aggregation
-        val top = graft.ops.Tuning.materialize(topPair(cur))
-        out += top.select(lit(r.toLong).as("round"), col("x"), col("y"),
-          concat(col("x"), col("y")).as("merged"), col("n"))
-        cur = cur.crossJoin(broadcast(top.select(col("x"), col("y"))))
-          .select(col("wc"), replace(col("s"),
-            concat(lit(sep), col("x"), lit(sep2), col("y"), lit(sep)),
-            concat(lit(sep), col("x"), col("y"), lit(sep))).as("s"))
-      }
+    for (r <- 1 to rounds) {
+      // 1-row deterministic frame; materializing keeps round r+1's plan
+      // from re-nesting every earlier round's aggregation
+      val top = graft.ops.Tuning.materialize(topPair(cur))
+      out += top.select(lit(r.toLong).as("round"), col("x"), col("y"),
+        concat(col("x"), col("y")).as("merged"), col("n"))
+      cur = cur.crossJoin(broadcast(top.select(col("x"), col("y"))))
+        .select(col("wc"), replace(col("s"),
+          concat(lit(sep), col("x"), lit(sep2), col("y"), lit(sep)),
+          concat(lit(sep), col("x"), col("y"), lit(sep))).as("s"))
     }
     out.result().reduce(_ unionByName _)
   }

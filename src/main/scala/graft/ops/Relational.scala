@@ -514,8 +514,7 @@ object Relational {
     *     size is at or below `spark.sql.autoBroadcastJoinThreshold` (the
     *     test Spark applies before it ships a relation to every executor),
     *     union-find labels it on the driver (`driverLabels`) and the
-    *     labels become a local relation. No loop, working cache or sizing
-    *     count runs.
+    *     labels become a local relation. No loop or working cache runs.
     *   - Loop path: over the threshold, or with the threshold at `-1`, the
     *     distributed min-label loop below runs.
     * Both paths return the same rows, and both end in the same restore
@@ -544,12 +543,16 @@ object Relational {
     * `LogicalRDD` over the cache ([[org.apache.spark.sql.GraftBridge.flattenPlan]]):
     * the round's self-joins reference the previous table several times, so
     * without flattening the plan tree grows ~4× per round and Spark OOMs
-    * formatting it long before any data pressure. `maxRounds` bounds the
-    * loop path only; the driver path always converges.
+    * formatting it long before any data pressure. The rounds run in
+    * [[Tuning.loop]], whose jobs carry "connectedComponents round k".
+    * `maxRounds` bounds the loop path only; the driver path always
+    * converges.
     *
-    * On both paths the result is computed by [[Tuning.materialize]] (a
-    * reliable checkpoint when the context has a checkpoint dir, a local one
-    * otherwise), and every working cache is dropped before returning,
+    * The restore join to the node universe (the loop path, or `nodes` on
+    * the driver path) is computed by [[Tuning.materialize]] (a reliable
+    * checkpoint when the context has a checkpoint dir, a local one
+    * otherwise); without `nodes` the driver path returns its local
+    * relation as it is. Every working cache is dropped before returning,
     * normally or by exception — the caller holds the only retained storage
     * and releases it by dropping the result.
     *
@@ -571,12 +574,12 @@ object Relational {
     * untouched singletons). Every per-round shuffle is then sized by the
     * candidate-pair graph, not the corpus.
     *
-    * Session conf: only the loop path writes it. While the loop runs it
-    * sets `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` and
-    * narrows `spark.sql.shuffle.partitions` to the loop width (when that
-    * is below the session's) on the CALLER's session, restoring both
-    * after, so queries running concurrently on that session see them
-    * too. The driver path reads the session conf and writes none.
+    * Session conf: only the loop path writes it. While the loop runs
+    * [[Tuning.loop]] sets
+    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` on the
+    * CALLER's session and restores it after, so queries running
+    * concurrently on that session see it too. The driver path reads the
+    * session conf and writes none.
     */
   def connectedComponents(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", nodes: Option[DataFrame] = None,
@@ -621,14 +624,16 @@ object Relational {
   }
 
   /** `(node, component)` for every node of `nodeIds` (of `labels` when
-    * None): its label, or the node itself when `labels` has none. Computed
-    * now by [[Tuning.materialize]], so the result never replays the
-    * labeling.
+    * None): its label, or the node itself when `labels` has none. The
+    * join to `nodeIds` is computed now by [[Tuning.materialize]], so the
+    * result never replays the labeling; without `nodeIds` the labels are
+    * the driver path's local relation, which has no labeling to replay.
     */
-  private def restoreUniverse(nodeIds: Option[DataFrame], labels: DataFrame): DataFrame =
-    Tuning.materialize(
-      nodeIds.fold(labels)(_.join(labels.select(col("node"), col("lbl")), Seq("node"), "left"))
-        .select(col("node"), coalesce(col("lbl"), col("node")).as("component")))
+  private def restoreUniverse(nodeIds: Option[DataFrame], labels: DataFrame): DataFrame = {
+    def component(df: DataFrame) = df.select(col("node"), coalesce(col("lbl"), col("node")).as("component"))
+    nodeIds.fold(component(labels))(n =>
+      Tuning.materialize(component(n.join(labels.select(col("node"), col("lbl")), Seq("node"), "left"))))
+  }
 
   /** `(node, lbl)` for every endpoint of the symmetric edge set `sym`
     * (columns `__a`, `__b`), labeled with the smallest id of its component
@@ -670,67 +675,43 @@ object Relational {
     */
   private def labelLoop(e: DataFrame, universe: DataFrame => DataFrame,
       maxRounds: Int): DataFrame =
-    // every working cache below (edges, und, nodeIds, labels, per-round
-    // frames) is re-read by later rounds — let AQE size them by bytes (r20)
-    Tuning.withAqeSizedCaches(e.sparkSession) { Tuning.withCaches { caches =>
-    // the closure and the universe both read the edges: persisted, their
-    // input (a similarity join, say) evaluates once for both
-    val sym = symmetric(caches.persist(e))
-    val und = caches.persist(sym.filter(col("__a") =!= col("__b")).distinct())
-    // Persisted: the universe's lineage may be an expensive generator,
-    // and the restore join after convergence re-reads it — before the
-    // subgraph iteration it seeded the (persisted) label table, so the
-    // input plan evaluated once; the persist keeps that property.
-    val nodeIds = caches.persist(universe(sym.select(col("__a").as("node"))))
-    // Only nodes on a real (non-self-loop) edge can ever change label —
-    // the loop iterates over THEM alone; everyone else (incl. self-loop-
-    // only nodes) is a singleton restored by the final left join.
-    val active = und.select(col("__a").as("node")).distinct()
-    var cached = caches.persist(active.select(col("node"), col("node").as("lbl")))
-    // materialize before the loop reuses it on several join sides; the
-    // counts also size the loop's scoped shuffle width (r20: per-round
-    // shuffles must track the working set — label, edge and
-    // node-universe rows — not the session conf; see Tuning).
-    // The edge and node counts are taken only when the session is wider
-    // than the loop floor; `und` is materialized by this first count.
-    val activeN = cached.count()
-    Tuning.withLoopParallelism(sym.sparkSession,
-      Seq(activeN, und.count(), nodeIds.count()).max) {
-    var labels = org.apache.spark.sql.GraftBridge.flattenPlan(cached)
-    var round = 0
-    var converged = false
-    while (round < maxRounds && !converged) {
-      // r19: the start-of-round label rides along as
-      // `__old` so the convergence check is a FILTER on the jumped
-      // frame instead of a third per-round join back onto `labels`
-      // (one fewer shuffle+build per round; the comparison is the same
-      // jumped-vs-start-of-round one).
-      val relaxed = {
+    Tuning.loop(e.sparkSession, "connectedComponents") { loop =>
+      // the closure and the universe both read the edges: persisted, their
+      // input (a similarity join, say) evaluates once for both
+      val sym = symmetric(loop.persist(e))
+      val und = loop.persist(sym.filter(col("__a") =!= col("__b")).distinct())
+      // Persisted: the universe's lineage may be an expensive generator,
+      // and the restore join after convergence re-reads it — before the
+      // subgraph iteration it seeded the (persisted) label table, so the
+      // input plan evaluated once; the persist keeps that property.
+      val nodeIds = loop.persist(universe(sym.select(col("__a").as("node"))))
+      // Only nodes on a real (non-self-loop) edge can ever change label —
+      // the loop iterates over THEM alone; everyone else (incl. self-loop-
+      // only nodes) is a singleton restored by the final left join. The
+      // start labels' count materializes `und` too.
+      val active = und.select(col("__a").as("node")).distinct()
+      // r19: the start-of-round label rides along as `__old` so the
+      // convergence check is a FILTER on the jumped frame instead of a
+      // third per-round join back onto `labels` (one fewer shuffle+build
+      // per round; the comparison is the same jumped-vs-start-of-round one).
+      val (labels, converged) = loop.rounds(active.select(col("node"), col("node").as("lbl")),
+          maxRounds, Some(col("lbl") =!= col("__old"))) { labels =>
         val nmin = und.join(labels, col("__b") === col("node"))
           .groupBy(col("__a")).agg(min(col("lbl")).as("__nmin"))
-        caches.persist(labels.join(nmin, col("node") === col("__a"), "left")
+        val relaxed = loop.persist(labels.join(nmin, col("node") === col("__a"), "left")
           .select(col("node"), col("lbl").as("__old"),
             least(col("lbl"), coalesce(col("__nmin"), col("lbl"))).as("lbl")))
+        val parents = relaxed.select(col("node").as("__p"), col("lbl").as("__plbl"))
+        relaxed.join(parents, col("lbl") === col("__p"))
+          .select(col("node"), col("__old"), least(col("lbl"), col("__plbl")).as("lbl"))
       }
-      val parents = relaxed.select(col("node").as("__p"), col("lbl").as("__plbl"))
-      val jumped = caches.persist(relaxed.join(parents, col("lbl") === col("__p"))
-        .select(col("node"), col("__old"), least(col("lbl"), col("__plbl")).as("lbl")))
-      val changed = jumped.filter(col("lbl") =!= col("__old")).count() // materializes jumped
-      converged = changed == 0
-      caches.release(relaxed)
-      caches.release(cached) // jumped is in its own cache now; safe to drop
-      cached = jumped
-      labels = org.apache.spark.sql.GraftBridge.flattenPlan(cached)
-      round += 1
+      // Relaxation + pointer jumping converge in O(log longestChain) rounds:
+      // the default 30 covers chains ~2^30 deep, far past any real corpus.
+      // Non-convergence therefore means maxRounds was lowered deliberately —
+      // fail hard rather than return a partially-merged labeling.
+      require(converged, s"connectedComponents did not converge in $maxRounds rounds")
+      restoreUniverse(Some(nodeIds), labels)
     }
-    // Relaxation + pointer jumping converge in O(log longestChain) rounds:
-    // the default 30 covers chains ~2^30 deep, far past any real corpus.
-    // Non-convergence therefore means maxRounds was lowered deliberately —
-    // fail hard rather than return a partially-merged labeling.
-    require(converged, s"connectedComponents did not converge in $maxRounds rounds")
-    restoreUniverse(Some(nodeIds), labels)
-    }
-    } }
 
   /** Fixed-iteration PageRank over a directed edge list, in EXACT
     * integer arithmetic: ranks live on a `scale`-denominator grid
@@ -765,18 +746,20 @@ object Relational {
     *     Pregel-style PageRank pays, with Catalyst free to broadcast the
     *     (nodes-sized, usually small) rank table. Iteration plans are
     *     flattened per round so the lineage doesn't grow with iteration
-    *     count.
-    * Both return the same rows, computed by [[Tuning.materialize]]. Ids
+    *     count. The rounds run in [[Tuning.loop]], whose jobs carry
+    *     "pageRank round k", and the ranks are computed by
+    *     [[Tuning.materialize]].
+    * Both return the same rows. Ids
     * of any type the joins accept rank alike: a null endpoint is a node
     * that counts in the node total and gets a rank, but neither sends
     * nor receives mass, since the joins match no null key.
     *
-    * Session conf: only the loop path writes it. While the loop runs it
-    * sets `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` and
-    * narrows `spark.sql.shuffle.partitions` to the loop width (when that
-    * is below the session's) on the CALLER's session, restoring both
-    * after, so queries running concurrently on that session see them
-    * too. The driver path reads the session conf and writes none.
+    * Session conf: only the loop path writes it. While the loop runs
+    * [[Tuning.loop]] sets
+    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` on the
+    * CALLER's session and restores it after, so queries running
+    * concurrently on that session see it too. The driver path reads the
+    * session conf and writes none.
     */
   def pageRank(edges: DataFrame, iterations: Int = 3,
       srcCol: String = "src", dstCol: String = "dst",
@@ -788,8 +771,7 @@ object Relational {
     // joins coerce both endpoints to
     val t = rankNodes(e).schema.head.dataType
     Tuning.broadcastRows(e.select(col("__src").cast(t), col("__dst").cast(t))) match {
-      case Some(rows) => Tuning.materialize(
-        driverRanks(e.sparkSession, rows, t, iterations, dampingPct, scale))
+      case Some(rows) => driverRanks(e.sparkSession, rows, t, iterations, dampingPct, scale)
       case None => rankLoop(e, iterations, dampingPct, scale)
     }
   }
@@ -861,52 +843,33 @@ object Relational {
     */
   private def rankLoop(edges: DataFrame, iterations: Int, dampingPct: Long,
       scale: Long): DataFrame =
-    // e, nodes, edeg and every per-round rank cache are re-read each
-    // iteration — let AQE size them by bytes (r20)
-    Tuning.withAqeSizedCaches(edges.sparkSession) { Tuning.withCaches { caches =>
-    val e = caches.persist(edges)
-    val nodes = caches.persist(rankNodes(e))
-    // r19: e ⋈ deg is loop-INVARIANT — computing it
-    // inside the iteration re-ran the degree aggregate and its join
-    // every round (two extra exchanges per iteration). Hoisted and
-    // persisted, each round is exactly the two fundamental shuffles:
-    // contribution join on src, aggregation on dst.
-    val edeg = caches.persist(e.join(
-      e.groupBy(col("__src")).agg(count(lit(1)).as("__deg")), "__src"))
-    // One scalar action: the node count fixes the uniform start mass.
-    val nodeN = nodes.count()
-    val base = startMass(scale, nodeN)
-    // `cached` is the persisted handle (the one that can unpersist);
-    // `ranks` is its plan-flattened view — see GraftBridge.flattenPlan
-    // on why both are needed.
-    var cached = caches.persist(nodes.select(col("node"), lit(base).as("rank_ppb")))
-    // the edge count sizes the scoped per-round shuffle width (r20,
-    // see Tuning): each round is one edges⋈ranks
-    // shuffle plus one dst aggregation, so the width must track
-    // edges, not conf. `e` is materialized by the node count above.
-    Tuning.withLoopParallelism(edges.sparkSession,
-      math.max(nodeN, e.count())) {
-    cached.count()
-    var ranks = org.apache.spark.sql.GraftBridge.flattenPlan(cached)
-    for (_ <- 1 to iterations) {
-      val contrib = edeg
-        .join(ranks, col("__src") === col("node"))
-        .groupBy(col("__dst"))
-        .agg(sum(expr("rank_ppb div __deg")).as("__s"))
-      val next = caches.persist(nodes
-        .join(contrib, col("node") === col("__dst"), "left")
-        .select(col("node"),
-          expr(s"((${100L - dampingPct}L * ${base}L) + " +
-            s"(${dampingPct}L * coalesce(__s, 0L))) div 100L")
-            .as("rank_ppb")))
-      next.count() // materialize before dropping the previous round
-      caches.release(cached)
-      cached = next
-      ranks = org.apache.spark.sql.GraftBridge.flattenPlan(next)
+    Tuning.loop(edges.sparkSession, "pageRank") { loop =>
+      val e = loop.persist(edges)
+      val nodes = loop.persist(rankNodes(e))
+      // r19: e ⋈ deg is loop-INVARIANT — computing it
+      // inside the iteration re-ran the degree aggregate and its join
+      // every round (two extra exchanges per iteration). Hoisted and
+      // persisted, each round is exactly the two fundamental shuffles:
+      // contribution join on src, aggregation on dst.
+      val edeg = loop.persist(e.join(
+        e.groupBy(col("__src")).agg(count(lit(1)).as("__deg")), "__src"))
+      // One scalar action: the node count fixes the uniform start mass.
+      val base = startMass(scale, nodes.count())
+      val (ranks, _) = loop.rounds(nodes.select(col("node"), lit(base).as("rank_ppb")),
+          iterations) { ranks =>
+        val contrib = edeg
+          .join(ranks, col("__src") === col("node"))
+          .groupBy(col("__dst"))
+          .agg(sum(expr("rank_ppb div __deg")).as("__s"))
+        nodes
+          .join(contrib, col("node") === col("__dst"), "left")
+          .select(col("node"),
+            expr(s"((${100L - dampingPct}L * ${base}L) + " +
+              s"(${dampingPct}L * coalesce(__s, 0L))) div 100L")
+              .as("rank_ppb"))
+      }
+      Tuning.materialize(ranks)
     }
-    Tuning.materialize(ranks)
-    }
-    } }
 
   /** Exact bivariate statistics (covariance, Pearson correlation) from six
     * integer sums — the same cross-engine bit-exactness recipe as

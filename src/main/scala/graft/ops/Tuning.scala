@@ -1,10 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 
-/** Path choice, materialization, working caches and scoped conf for the
-  * iterative operators (connected components, PageRank, BPE induction).
+/** Path choice, materialization and the loop scaffold of the iterative
+  * operators (connected components, PageRank, BPE induction).
   *
   * Path choice: each of them reads its working set once through
   * [[broadcastRows]]. A working set Spark would broadcast (rows times
@@ -12,29 +12,23 @@ import org.apache.spark.sql.catalyst.InternalRow
   * `spark.sql.autoBroadcastJoinThreshold`) comes back as driver rows,
   * and the operator runs its rounds on the driver over Catalyst values:
   * no per-round job, working cache or conf write. Measured (sf0.001,
-  * `local[4]`, registered tables): `op_graph_pagerank` builds in 3 jobs
+  * `local[4]`, registered tables): `op_graph_pagerank` builds in 2 jobs
   * on the driver path against 30 on the loop path, `llm_bpe_learn` and
-  * `llm_bpe_pipeline` in 4 against 46 each. Anything larger, or any
+  * `llm_bpe_pipeline` in 3 against 46 each. Anything larger, or any
   * session with the threshold at `-1`, takes the distributed loop.
   *
   * The loops run many small actions over working frames that are orders
-  * of magnitude smaller than the input the session conf was sized for:
-  * at bench scale a few thousand label/vocab rows under a 32-partition
-  * session conf, so every per-round shuffle schedules a wave of
-  * micro-tasks and the loop is pure scheduling overhead. Measured (r20,
-  * sf0.1/local[32]): `op_graph_components` ran 47 jobs / 1042 tasks for
-  * ~1 s of real work — and the r19 driver found it 1.8× FASTER on 8
-  * cores than 32. Guide §2.2/§2.5: partition count must track data, not
-  * a constant.
-  *
-  * The loop-side fix: derive the loop's shuffle-partition count from a
-  * measured row count of its working set and scope
-  * `spark.sql.shuffle.partitions` over the loop body only, restoring
-  * the session value after. AQE stays ON — measured, disabling it buys
-  * nothing once the partition width is right, and it keeps runtime
-  * coalescing/skew handling for the edge-heavy rounds. At corpus scale
-  * the derived width hits the session cap and the scope is a no-op, so
-  * nothing here is a local-mode-only constant.
+  * of magnitude smaller than the input the session conf was sized for,
+  * so every per-round shuffle at the session width schedules a wave of
+  * micro-tasks. [[loop]] lets AQE size the loops' caches by their bytes,
+  * which removes that overhead. The loops run at the session's shuffle
+  * width: a width narrowed to a counted row total on top of the AQE
+  * sizing took 1–2 more tasks per loop query and its sizing counts as
+  * extra jobs, and gave no steady gain in wall time (sf0.01, broadcasts
+  * off, `local[16]` and `local[32]` on a 4-core machine: per-query best
+  * times moved between −23% and +19% without it; only components was
+  * slower in every pair, by 1–19%). At 4 shuffle partitions or fewer it
+  * never narrowed.
   */
 object Tuning {
 
@@ -49,7 +43,6 @@ object Tuning {
     * broadcast would.
     */
   def broadcastRows(df: DataFrame): Option[Array[InternalRow]] = {
-    import org.apache.spark.sql.GraftBridge
     val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     if (threshold < 0) None else {
       val cap = math.min(threshold / GraftBridge.estimatedRowBytes(df), Int.MaxValue - 1L).toInt
@@ -79,23 +72,6 @@ object Tuning {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint()
 
-  /** The working caches of one operator call; see [[withCaches]]. */
-  final class Caches private[Tuning] {
-    private[Tuning] val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    /** `df.persist()`, held until [[release]] or the scope's exit. */
-    def persist(df: DataFrame): DataFrame = { held += df; df.persist() }
-    /** Unpersist `df` before the scope exits. */
-    def release(df: DataFrame): Unit = { held -= df; df.unpersist() }
-  }
-
-  /** Run `body` with a scope of working caches, unpersisting every frame
-    * it still holds when `body` exits, normally or by exception.
-    */
-  def withCaches[A](body: Caches => A): A = {
-    val caches = new Caches
-    try body(caches) finally caches.held.foreach(_.unpersist())
-  }
-
   /** Run `body` with SQL confs temporarily overridden, restoring the
     * previous values (or unsetting ones that were unset) even on
     * failure. Session-scoped: safe for the sequential bench/verify
@@ -115,55 +91,96 @@ object Tuning {
     }
   }
 
-  /** Let AQE re-size the output partitioning of plans materialized into
-    * the block's `persist()` caches
+  /** Run the distributed loop of the iterative operator `name` (e.g.
+    * "connectedComponents"): `body` persists the loop's inputs through
+    * [[Loop.persist]] and runs its [[Loop.rounds]]. When `body` exits,
+    * normally or by exception, every working cache it still holds is
+    * unpersisted.
+    *
+    * While `body` runs, AQE may re-size the output partitioning of plans
+    * materialized into the loop's caches
     * (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`,
-    * default false). Spark's default pins every cached plan at the full
-    * session shuffle width so downstream consumers can reuse its
-    * partitioning; for the iterative loops that pin is exactly wrong —
-    * each round re-reads label/edge caches orders of magnitude smaller
-    * than the session width, so every per-round map stage schedules a
-    * full wave of micro-tasks. Measured (r20, sf0.1/local[32], A/B in
-    * one session): with AQE allowed to size the caches,
-    * op_graph_components 548→52 tasks and 2.50→1.72 s,
-    * op_graph_pagerank 844→35 tasks and 2.54→1.37 s,
-    * llm_dedup_cluster_stats 491→47 tasks and 3.19→2.33 s. Scale-safe
-    * by construction: AQE sizes by measured bytes, so corpus-scale
-    * caches keep their width.
+    * default false), set on the caller's session and restored (or unset)
+    * on exit by [[withSqlConf]]. Spark's default pins every cached plan
+    * at the full session shuffle width so downstream consumers can reuse
+    * its partitioning; for the loops that pin is exactly wrong — each
+    * round re-reads label/edge caches orders of magnitude smaller than
+    * the session width, so every per-round map stage schedules a full
+    * wave of micro-tasks. Measured (r20, sf0.1/local[32], A/B in one
+    * session): with AQE allowed to size the caches, op_graph_components
+    * 548→52 tasks and 2.50→1.72 s, op_graph_pagerank 844→35 tasks and
+    * 2.54→1.37 s, llm_dedup_cluster_stats 491→47 tasks and 3.19→2.33 s.
+    * Scale-safe by construction: AQE sizes by measured bytes, so
+    * corpus-scale caches keep their width.
     */
-  def withAqeSizedCaches[A](spark: SparkSession)(body: => A): A =
-    withSqlConf(spark,
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")(body)
+  private[ops] def loop[A](spark: SparkSession, name: String)(body: Loop => A): A =
+    withSqlConf(spark, "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true") {
+      val loop = new Loop(spark, name)
+      try body(loop) finally loop.held.foreach(_.unpersist())
+    }
 
-  /** The narrowest loop width [[loopPartitions]] derives. */
+  /** The working caches and rounds of one [[loop]]. */
+  private[ops] final class Loop private[Tuning] (spark: SparkSession, name: String) {
+    private[Tuning] val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+
+    /** `df.persist()`, held until the loop exits; persisted by a round's
+      * step, until the end of that round.
+      */
+    def persist(df: DataFrame): DataFrame = { held += df; df.persist() }
+
+    /** Run up to `maxRounds` rounds over a state frame and return the last
+      * state with whether it converged: whether the last round's state has
+      * no row that `changed` holds for (always false without `changed`,
+      * which runs exactly `maxRounds` rounds).
+      *
+      * `start` and each round's `step(state)` are persisted and computed
+      * into their cache by one count (of the rows `changed` holds for,
+      * when given); then the round's other caches and the previous state
+      * are released. `step` gets the state flattened to an O(1) plan over
+      * its cache ([[org.apache.spark.sql.GraftBridge.flattenPlan]]), so a
+      * round's plan never re-nests earlier rounds, and the returned state
+      * is flattened too. Every job of round k (the start's count is round
+      * 0) carries the description "`name` round k"; the caller's
+      * description comes back on return, normally or by exception.
+      */
+    def rounds(start: DataFrame, maxRounds: Int, changed: Option[Column] = None)(
+        step: DataFrame => DataFrame): (DataFrame, Boolean) = {
+      val sc = spark.sparkContext
+      val caller = sc.getLocalProperty("spark.job.description")
+      try {
+        sc.setJobDescription(s"$name round 0")
+        var cached = persist(start)
+        cached.count()
+        var state = GraftBridge.flattenPlan(cached)
+        var round = 0
+        var converged = false
+        while (round < maxRounds && !converged) {
+          round += 1
+          sc.setJobDescription(s"$name round $round")
+          val mark = held.length
+          val next = persist(step(state))
+          converged = changed.fold { next.count(); false }(c => next.filter(c).count() == 0)
+          (held.slice(mark, held.length - 1) :+ cached).foreach { df => held -= df; df.unpersist() }
+          cached = next
+          state = GraftBridge.flattenPlan(cached)
+        }
+        (state, converged)
+      } finally sc.setJobDescription(caller)
+    }
+  }
+
+  /** The narrowest width [[loopPartitions]] derives. */
   private val MinLoopPartitions = 4
 
-  /** Data-proportional shuffle width for loop-internal frames: one
-    * partition per ~100k rows, floored at [[MinLoopPartitions]] (tiny
-    * frames keep a little parallelism for compute-dense per-row work —
-    * measured: width 1 costs the BPE pair aggregation 40%), capped at the
-    * session width so corpus-scale loops keep the configured parallelism.
-    * `rows` is by name: a session at or under the floor gets the floor
-    * whatever the count, so the count is not taken.
+  /** Data-proportional width for an explicit repartition of a working set:
+    * one partition per ~100k rows, floored at [[MinLoopPartitions]] (tiny
+    * frames keep a little parallelism for compute-dense per-row work),
+    * capped at the session width so corpus-scale inputs keep the
+    * configured parallelism. `rows` is by name: a session at or under the
+    * floor gets the floor whatever the count, so the count is not taken.
     */
   def loopPartitions(rows: => Long, sessionParts: Int): Int =
     if (sessionParts <= MinLoopPartitions) MinLoopPartitions
     else math.max(MinLoopPartitions.toLong,
       math.min(sessionParts.toLong, rows / 100000L + 1L)).toInt
-
-  /** Run `body` with `spark.sql.shuffle.partitions` scoped to
-    * [[loopPartitions]]`(rows)` through [[withSqlConf]]. The conf is read
-    * at action time, so every action `body` runs — including frames it
-    * materializes — plans its exchanges at the scoped width; frames
-    * RETURNED lazily plan at the caller's width as before. No-op when
-    * the derived width is not below the session conf (large inputs at
-    * scale, or a session at or under the floor, where `rows` is never
-    * evaluated).
-    */
-  def withLoopParallelism[A](spark: SparkSession, rows: => Long)(body: => A): A = {
-    val sess = spark.sessionState.conf.numShufflePartitions
-    val p = loopPartitions(rows, sess)
-    if (p >= sess) body
-    else withSqlConf(spark, "spark.sql.shuffle.partitions" -> p.toString)(body)
-  }
 }

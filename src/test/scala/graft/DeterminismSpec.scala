@@ -22,8 +22,10 @@ package graft
   *
   * The same holds across the two materialization modes of
   * [[graft.ops.Tuning.materialize]]: every query that materializes
-  * returns the same rows with a checkpoint dir set (reliable
-  * checkpoints, which its plan must then scan) as without one.
+  * returns the same rows with a checkpoint dir set as without one, on the
+  * iterative operators' driver and loop paths alike. Under a checkpoint
+  * dir no plan scans a local checkpoint, and on the loop path, where
+  * every caller materializes, each plan scans a reliable one.
   */
 class DeterminismSpec extends SparkSpec {
 
@@ -81,28 +83,39 @@ class DeterminismSpec extends SparkSpec {
     "llm_dedup_threshold_sweep", "llm_dedup_minhash", "llm_dedup_minhash_ml",
     "llm_embedding_pairs_ml", "llm_bpe_learn")
 
-  /** Whether `df`'s plan scans an RDD written to a reliable checkpoint. */
-  private def scansReliableCheckpoint(df: org.apache.spark.sql.DataFrame): Boolean = {
-    def reliable(rdd: org.apache.spark.rdd.RDD[_]): Boolean =
-      rdd.getCheckpointFile.isDefined || rdd.dependencies.exists(d => reliable(d.rdd))
+  /** Whether `df`'s plan scans an RDD checkpointed reliably (`reliable`)
+    * or locally (not `reliable`).
+    */
+  private def scansCheckpoint(df: org.apache.spark.sql.DataFrame, reliable: Boolean): Boolean = {
+    def hit(rdd: org.apache.spark.rdd.RDD[_]): Boolean =
+      (rdd.isCheckpointed && rdd.getCheckpointFile.isDefined == reliable) ||
+        rdd.dependencies.exists(d => hit(d.rdd))
     df.queryExecution.analyzed
       .collectWithSubqueries { case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd }
-      .exists(reliable)
+      .exists(hit)
   }
 
-  test("with a checkpoint dir every materialize caller scans a reliable checkpoint, same rows") {
+  test("under a checkpoint dir no materialize caller scans a local checkpoint") {
     initLog()
     def run(q: String) = {
       val df = SparkEntry.queries(q)(spark, sfDir)
-      (canon(df.collect()), scansReliableCheckpoint(df))
+      (canon(df.collect()), scansCheckpoint(df, reliable = true),
+        scansCheckpoint(df, reliable = false))
     }
-    val local = materializing.map(run)
-    val reliable = withCheckpointDir(materializing.map(run))
-    materializing.zip(local.zip(reliable)).foreach {
-      case (q, ((localRows, localScan), (reliableRows, reliableScan))) =>
-        assert(reliableRows === localRows, q)
-        assert(!localScan, s"$q scans a reliable checkpoint without a checkpoint dir")
-        assert(reliableScan, s"$q scans no reliable checkpoint under a checkpoint dir")
+    // the session threshold, where the iterative operators take their
+    // driver paths on these inputs, and -1, where every loop runs
+    Seq("driver" -> None, "loop" -> Some(-1L)).foreach { case (path, threshold) =>
+      def onPath[A](body: => A): A = threshold.fold(body)(withBroadcastThreshold(_)(body))
+      val local = onPath(materializing.map(run))
+      val reliable = withCheckpointDir(onPath(materializing.map(run)))
+      materializing.zip(local.zip(reliable)).foreach {
+        case (q, ((localRows, localReliable, _), (reliableRows, reliableReliable, reliableLocal))) =>
+          assert(reliableRows === localRows, s"$q, $path path")
+          assert(!localReliable, s"$q scans a reliable checkpoint without a checkpoint dir")
+          assert(!reliableLocal, s"$q scans a local checkpoint under a checkpoint dir, $path path")
+          if (path == "loop")
+            assert(reliableReliable, s"$q scans no reliable checkpoint under a checkpoint dir")
+      }
     }
   }
 }

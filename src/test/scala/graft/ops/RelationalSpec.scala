@@ -367,9 +367,9 @@ class RelationalSpec extends SparkSpec {
     val (overCap, loopJobs) = run(215)
     assert(atCap === want && overCap === want)
     // driver path: the bounded collect (its shuffle map stage and two
-    // partition scans), the restore checkpoint and the caller's collect;
-    // the loop adds its sizing counts and two rounds of joins on top
-    assert(driverJobs <= 5, s"driver path ran $driverJobs jobs")
+    // partition scans) and the caller's collect; the loop adds its start
+    // count, two rounds of joins and the restore checkpoint on top
+    assert(driverJobs <= 4, s"driver path ran $driverJobs jobs")
     assert(loopJobs >= 20, s"loop path ran $loopJobs jobs")
   }
 
@@ -377,14 +377,16 @@ class RelationalSpec extends SparkSpec {
     // (build jobs, collect jobs) over registered sf0.001 tables, where
     // every one of these queries takes its operator's driver path; the
     // loop built op_graph_pagerank in 30 jobs and each BPE query in 46.
+    // The driver paths return their local relations uncheckpointed
+    // (op_graph_components keeps its checkpoint of the join to `nodes`).
     // Registered tables hand `Tables.load` its schema, so no
     // footer-inference job counts, whatever ran earlier in this JVM.
     val pins = Seq(
       "op_graph_components" -> (6, 3),
-      "op_graph_pagerank" -> (3, 3),
-      "llm_bpe_learn" -> (4, 3),
-      "llm_bpe_pipeline" -> (4, 7),
-      "llm_dedup_cluster_stats" -> (9, 5))
+      "op_graph_pagerank" -> (2, 3),
+      "llm_bpe_learn" -> (3, 3),
+      "llm_bpe_pipeline" -> (3, 7),
+      "llm_dedup_cluster_stats" -> (8, 5))
     // the ceiling a driver path must keep its build under
     val buildCeiling = Set("op_graph_pagerank", "llm_bpe_learn", "llm_bpe_pipeline")
     val (s, dir) = (spark.newSession(), "/root/testdata/sf0.001")
@@ -399,6 +401,38 @@ class RelationalSpec extends SparkSpec {
     pins.filter(p => buildCeiling(p._1)).foreach { case (q, (build, _)) =>
       assert(build <= 5, s"$q builds in $build jobs")
     }
+  }
+
+  test("on a 16-partition session the loops build and collect in pinned job counts at full width") {
+    // (build jobs, collect jobs) over registered sf0.001 tables with the
+    // threshold at -1, so every query below runs its operator's loop. A
+    // shuffle width scoped to counted rows built them in 65, 31 and 48
+    // jobs: its sizing counts, at a width of 4.
+    val pins = Seq(
+      "op_graph_components" -> (63, 3),
+      "op_graph_pagerank" -> (30, 3),
+      "llm_bpe_learn" -> (46, 3))
+    val (s, dir) = (spark.newSession(), "/root/testdata/sf0.001")
+    s.conf.set("spark.sql.shuffle.partitions", "16")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    graft.Tables.register(s, dir)
+    val widths = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.shuffle.partitions")))
+          .foreach(widths.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val got = try pins.map { case (q, _) =>
+      q -> (1 to 2).map { _ =>
+        val (df, build) = jobsUnderGroup(graft.SparkEntry.queries(q)(s, dir))
+        (build, jobsUnderGroup(df.collect())._2)
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    // every job that reports a width runs at the session's 16
+    assert(widths.asScala.toSet === Set("16"))
+    assert(got === pins.map { case (q, want) => q -> Seq.fill(2)(want) })
   }
 
   test("snapshotDiff classifies added/removed/changed and hides unchanged") {
@@ -571,9 +605,9 @@ class RelationalSpec extends SparkSpec {
     val (overCap, loopJobs) = run(143)
     assert(atCap === overCap)
     // driver path: the bounded collect (its shuffle map stage and a
-    // partition scan), the ranks' checkpoint and the caller's collect; the
-    // loop adds its sizing counts and three rounds of joins on top
-    assert(driverJobs <= 5, s"driver path ran $driverJobs jobs")
+    // partition scan) and the caller's collect; the loop adds its node
+    // and start counts, three rounds of joins and the ranks' checkpoint
+    assert(driverJobs <= 4, s"driver path ran $driverJobs jobs")
     assert(loopJobs >= 15, s"loop path ran $loopJobs jobs")
   }
 
