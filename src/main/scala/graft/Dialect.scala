@@ -11,8 +11,14 @@ import org.apache.spark.sql.types.StructType
   * construct-level rewriter: Spark SQL already accepts most of the shared
   * ANSI surface natively (TRY_CAST, ILIKE, IS NOT DISTINCT FROM, `x DIV y`,
   * `||` concat, EXISTS higher-order functions, `==` equality, `expr::TYPE`
-  * casts, `LIMIT ALL` — verified by probing), and the rewriter translates
-  * the constructs it does not:
+  * casts, `LIMIT ALL` — verified by probing), and so does Spark 4.1.2's
+  * function registry for many dialect names with the dialect's rows
+  * (null-matching DECODE, ZEROIFNULL/NULLIFZERO, abbreviated
+  * DAYNAME/MONTHNAME, WEEKDAY, LEN, UCASE/LCASE, CURDATE, MINUS), which
+  * pass through untouched. The rewriter translates the constructs Spark
+  * does not run as the dialect does; `DialectNativeSpec` lists, per
+  * dialect, each table name Spark also knows with the difference that
+  * keeps its entry:
   *
   * [[Dialect.DuckDbish]]:
   *   - `"ident"` double-quoted identifiers → backtick-quoted
@@ -23,9 +29,10 @@ import org.apache.spark.sql.types.StructType
   *     codes translated to Java patterns; unknown codes raise)
   *   - `string_split(s, sep)` → `split(s, <regex-quoted sep>)` (DuckDB's
   *     separator is literal, Spark's is a regex — the shim \Q-quotes it)
-  *   - function renames: len→length, list_contains→array_contains,
+  *   - function renames: list_contains→array_contains,
   *     list_value→array, list_sort→sort_array, list_distinct→array_distinct,
   *     array_length→size, regexp_matches→regexp_like, epoch→unix_timestamp
+  *     (`len` is Spark's own and passes through)
   *   - `READ_CSV('path' [, 'delimiter', 'd']) AS alias` table function
   *     (reference tests/test_tpc_h.py:47-52, executor.py:290-308); a
   *     declared schema for the alias wins over inference (executor.py:303-305)
@@ -40,7 +47,8 @@ import org.apache.spark.sql.types.StructType
   *   identifiers and backslash-literal escaping (Trino is ANSI).
   *
   * [[Dialect.Snowflakeish]]: IFF, DATEADD/DATEDIFF date parts,
-  * TO_VARCHAR/TO_CHAR formats, `"ident"` identifiers.
+  * TO_VARCHAR/TO_CHAR formats, `"ident"` identifiers; LEN, DAYNAME,
+  * MONTHNAME, ZEROIFNULL and NULLIFZERO are Spark's own.
   *
   * [[Dialect.BigQueryish]]: SAFE_CAST + INT64/FLOAT64/BOOL/BYTES type
   * names, FORMAT_DATE/FORMAT_TIMESTAMP, DATE_DIFF/TIMESTAMP_DIFF,
@@ -49,17 +57,18 @@ import org.apache.spark.sql.types.StructType
   * [[Dialect.MySqlish]] (reference core.py:66 names "mysql" as an input
   * dialect): `LIMIT offset, count`, DATE_FORMAT/STR_TO_DATE with MySQL
   * `%` codes (note `%i` = minutes, `%M` = month NAME — not strftime),
-  * GROUP_CONCAT → listagg, LOCATE(sub, str) argument swap, UCASE/LCASE/MID
-  * renames. Backtick identifiers, `REGEXP`, IFNULL, IF, SUBSTRING_INDEX,
-  * DATEDIFF(d1, d2) are already Spark-native and pass through.
+  * GROUP_CONCAT → listagg, full-name DAYNAME/MONTHNAME, MID rename.
+  * Backtick identifiers, `REGEXP`, IFNULL, IF, SUBSTRING_INDEX,
+  * DATEDIFF(d1, d2), 2-argument LOCATE, WEEKDAY, UCASE/LCASE and CURDATE
+  * are already Spark-native and pass through.
   *
   * [[Dialect.ClickHouseIsh]]: `-If` aggregate combinators, uniqExact,
   * multiIf, the camel-case `to*` conversion family, lambda-first array
   * HOFs, arrayJoin, splitByChar, position argument order, empty/notEmpty.
   *
-  * [[Dialect.RedshiftIsh]]: the Postgres rewrites plus null-matching
-  * DECODE, DATEADD/DATEDIFF with Redshift part abbreviations, bare
-  * VARCHAR/TEXT casts, GETDATE/LEN renames, LISTAGG pass-through.
+  * [[Dialect.RedshiftIsh]]: the Postgres rewrites plus DATEADD/DATEDIFF
+  * with Redshift part abbreviations, bare VARCHAR/TEXT casts, GETDATE
+  * rename; DECODE, LEN and LISTAGG pass through.
   *
   * Everything the rewriter does is textual, over the spans of one lexer
   * ([[Dialect.lex]]): string literals, quoted identifiers and comments are
@@ -124,6 +133,9 @@ sealed trait Dialect {
     * and corrupt everything after it.
     */
   def literalBackslashEscapes: Boolean = true
+
+  /** The dialect's call table ([[Dialect.Table]]); Spark's is empty. */
+  private[graft] def table: Dialect.Table = Dialect.Table(Nil)
 }
 
 object Dialect {
@@ -204,7 +216,6 @@ object Dialect {
     // are distinct names.
     private val renames = Map(
       "list" -> "array_agg",
-      "len" -> "length",
       "list_contains" -> "array_contains",
       "list_has" -> "array_contains",
       "list_value" -> "array",
@@ -212,7 +223,7 @@ object Dialect {
       "list_distinct" -> "array_distinct",
       "array_length" -> "size",
       "regexp_matches" -> "regexp_like")
-    private val table = Table(Seq(rewriteGenerateSeriesTable, rewriteArrayLiteral,
+    override private[graft] val table = Table(Seq(rewriteGenerateSeriesTable, rewriteArrayLiteral,
       rewriteIntDiv, rsBareTypes, // DuckDB's unsized VARCHAR/TEXT
       aggFilter(renames),
       // DuckDB shares the inline-ORDER-BY array_agg but defaults to NULLS
@@ -251,7 +262,7 @@ object Dialect {
       "json_extract_scalar" -> "get_json_object",
       "to_unixtime" -> "unix_timestamp",
       "codepoint" -> "ascii")
-    private val table = Table(Seq(trinoDateFns, trinoTry, aggFilter(renames),
+    override private[graft] val table = Table(Seq(trinoDateFns, trinoTry, aggFilter(renames),
       // Trino's array_agg takes the inline ORDER BY too; its default
       // null ordering is NULLS LAST regardless of direction (r16
       // second review — previously mis-pinned to the Postgres
@@ -281,28 +292,27 @@ object Dialect {
     * with a date-part argument (boundary-crossing semantics, translated to
     * exact year/quarter/month arithmetic — NOT Spark's complete-interval
     * `timestampdiff`), `TO_VARCHAR` with Snowflake date format elements.
-    * `NVL`/`NVL2`/`TRY_CAST`/`ILIKE` are already Spark-native. Snowflake
-    * string literals use backslash escapes (matching Spark's default parser),
-    * so they are NOT doubled.
+    * `NVL`/`NVL2`/`TRY_CAST`/`ILIKE`, `LEN`, the abbreviating
+    * `DAYNAME`/`MONTHNAME` and `ZEROIFNULL`/`NULLIFZERO` are already
+    * Spark-native. Snowflake string literals use backslash escapes
+    * (matching Spark's default parser), so they are NOT doubled.
     */
   case object Snowflakeish extends Dialect {
     override val nameFold: NameFold = NameFold.Upper
     // `to_char` renames to to_varchar and reaches the to_varchar entry
     // as to_varchar (Snowflake's TO_CHAR is the same function)
-    private val table = Table(Seq(
+    override private[graft] val table = Table(Seq(
       // Snowflake spells ordered array_agg WITHIN GROUP; its nulls sort
       // highest (last-on-ASC/first-on-DESC, like Postgres) and — unlike
       // Postgres — NULL VALUES are silently dropped from the array
       new ArrayAgg(Some(Order(descNullsLast = false, skipNullValues = true)), withinGroup = true),
-      snowTryTo, snowDateAdd, snowDateDiff, snowDayMonthName,
-      teradataZeroNull, // ZEROIFNULL/NULLIFZERO are Snowflake builtins too
-      toVarchar),
+      snowTryTo, snowDateAdd, snowDateDiff, toVarchar),
       renames = Map("iff" -> "if", "to_char" -> "to_varchar",
-        // LEN is Snowflake's LENGTH alias; CHARINDEX(substr, str) shares
-        // locate's argument order; OBJECT_CONSTRUCT/ARRAY_CONSTRUCT are
-        // name-for-name Spark named_struct/array (VARIANT-free subset —
-        // the constructed value feeds TO_JSON or typed access)
-        "len" -> "length", "charindex" -> "locate",
+        // CHARINDEX(substr, str) shares locate's argument order;
+        // OBJECT_CONSTRUCT/ARRAY_CONSTRUCT are name-for-name Spark
+        // named_struct/array (VARIANT-free subset — the constructed value
+        // feeds TO_JSON or typed access)
+        "charindex" -> "locate",
         "object_construct" -> "named_struct", "array_construct" -> "array"))
     def rewrite(spark: SparkSession, sql: String,
         schemas: Map[String, StructType]): String = {
@@ -339,7 +349,7 @@ object Dialect {
     * backslash escapes (matching Spark), so literals are not doubled.
     */
   case object BigQueryish extends Dialect {
-    private val table = Table(Seq(rewriteUnnest, rewriteBqSubscript, formatDate,
+    override private[graft] val table = Table(Seq(rewriteUnnest, rewriteBqSubscript, formatDate,
       bqDateDiff, bqDateAddSub, bqSplit, bqGenerateArray,
       // IGNORE-NULLS ordered aggregation; BigQuery sorts nulls SMALLEST
       bqArrayAgg),
@@ -379,19 +389,19 @@ object Dialect {
     *     otherwise (MySQL's DATE-vs-DATETIME result typing)
     *   - `GROUP_CONCAT([DISTINCT] x [ORDER BY …] [SEPARATOR 's'])` →
     *     `listagg([DISTINCT] x, 's') [WITHIN GROUP (ORDER BY …)]`
-    *   - `LOCATE(sub, str)` → `instr(str, sub)` (argument order swap)
-    *   - renames: UCASE→upper, LCASE→lower, MID→substring,
-    *     CURDATE→current_date
+    *   - `DAYNAME`/`MONTHNAME` → full-name `date_format` patterns
+    *   - the 3-argument `LOCATE` raises (NULL start position)
+    *   - rename: MID→substring
     * `REGEXP`, `IFNULL`, `IF`, `SUBSTRING_INDEX`, `DATEDIFF(d1, d2)` (same
-    * d1−d2 day count), `CONCAT_WS`, `NOW()` are Spark-native pass-throughs.
+    * d1−d2 day count), `CONCAT_WS`, `NOW()`, 2-argument `LOCATE`,
+    * `WEEKDAY`, `UCASE`, `LCASE` and `CURDATE` are Spark-native
+    * pass-throughs.
     */
   case object MySqlish extends Dialect {
     override val doubleQuotedIsString: Boolean = true // MySQL "…" is a string
-    private val table = Table(Seq(rewriteMysqlLimit, groupConcat, mysqlDateFns,
+    override private[graft] val table = Table(Seq(rewriteMysqlLimit, groupConcat, mysqlDateFns,
       mysqlDayNames, mysqlLocate),
-      renames = Map(
-        "ucase" -> "upper", "lcase" -> "lower", "mid" -> "substring",
-        "curdate" -> "current_date"))
+      renames = Map("mid" -> "substring"))
     def rewrite(spark: SparkSession, sql: String,
         schemas: Map[String, StructType]): String =
       table(prelude(sql, literalBackslashEscapes, doubleQuotedIsString, ' '))
@@ -414,7 +424,7 @@ object Dialect {
     override val literalBackslashEscapes: Boolean = false
     // a FILTER site covers its aggregate's call: the string_agg entry
     // reaches a filtered string_agg through the FILTER site
-    private val table = Table(Seq(aggFilter(emitted = Map("string_agg" -> pgStringAgg)),
+    override private[graft] val table = Table(Seq(aggFilter(emitted = Map("string_agg" -> pgStringAgg)),
       rewriteGenerateSeriesTable,
       // ARRAY[…] and UNNEST are separate sites: an ARRAY[…] argument is
       // an UNNEST hole, rewritten to call form first
@@ -455,28 +465,27 @@ object Dialect {
     */
   case object SqliteIsh extends Dialect {
     override val literalBackslashEscapes: Boolean = false
-    private val table = Table(Seq(sqliteStrftime, sqliteDateFn, rewriteAggFilter, rewriteSqliteGlob))
+    override private[graft] val table = Table(Seq(sqliteStrftime, sqliteDateFn, rewriteAggFilter, rewriteSqliteGlob))
     def rewrite(spark: SparkSession, sql: String,
         schemas: Map[String, StructType]): String =
       table(prelude(sql, literalBackslashEscapes, doubleQuotedIsString, '"'))
   }
 
-  /** Oracle-ish surface: `DECODE` (null-safe CASE — Oracle DECODE matches
-    * NULL search values, so the rewrite uses `<=>`), `TO_DATE`/`TO_CHAR`
-    * with Oracle format templates (same table as Postgres), `MINUS` →
-    * EXCEPT, `SYSDATE` → current_timestamp, and trailing
-    * `WHERE ROWNUM <= n` → LIMIT n (any other ROWNUM use raises — its
-    * assigned-before-ORDER-BY semantics have no declarative equivalent).
-    * `NVL`/`NVL2`/`GREATEST`/`LEAST`/`INSTR`/`SUBSTR`/`TRUNC(date,'MM')`
-    * and `||` are already Spark-native and pass through. Oracle literals
-    * are ANSI ('' doubling, backslash plain), escaped for Spark like
-    * DuckDB's.
+  /** Oracle-ish surface: `TO_DATE`/`TO_CHAR` with Oracle format templates
+    * (same table as Postgres), `SYSDATE` → current_timestamp, and
+    * trailing `WHERE ROWNUM <= n` → LIMIT n (any other ROWNUM use raises —
+    * its assigned-before-ORDER-BY semantics have no declarative
+    * equivalent). `DECODE` (Spark's matches NULL to NULL, as Oracle's
+    * does), `MINUS`, `NVL`/`NVL2`/`GREATEST`/`LEAST`/`INSTR`/`SUBSTR`/
+    * `TRUNC(date,'MM')` and `||` are already Spark-native and pass
+    * through. Oracle literals are ANSI ('' doubling, backslash plain),
+    * escaped for Spark like DuckDB's.
     */
   case object OracleIsh extends Dialect {
     override val literalBackslashEscapes: Boolean = false
     override val nameFold: NameFold = NameFold.Upper
-    private val table = Table(Seq(oracleDecode, oracleToDate, pgToChar, rewriteOracleRownum),
-      words = Map("MINUS" -> "EXCEPT", "SYSDATE" -> "current_timestamp()"))
+    override private[graft] val table = Table(Seq(oracleToDate, pgToChar, rewriteOracleRownum),
+      words = Map("SYSDATE" -> "current_timestamp()"))
     def rewrite(spark: SparkSession, sql: String,
         schemas: Map[String, StructType]): String = {
       // the table runs before the paging rewrites: the percent scale
@@ -499,8 +508,9 @@ object Dialect {
     * `DATEADD`/`DATEDIFF`/`DATEPART` with T-SQL part abbreviations
     * (DATEDIFF counts boundary crossings; weeks roll at Sunday per
     * `@@DATEFIRST = 7`), `OFFSET n ROWS FETCH NEXT m ROWS ONLY` →
-    * LIMIT/OFFSET, and renames `ISNULL`→coalesce, `IIF`→if,
-    * `CHARINDEX`→locate (same argument order), `LEN`→length,
+    * LIMIT/OFFSET, `LEN(x)` → `length(rtrim(x))` (T-SQL's LEN ignores
+    * trailing spaces), and renames `ISNULL`→coalesce, `IIF`→if,
+    * `CHARINDEX`→locate (same argument order),
     * `GETDATE`/`SYSDATETIME`→current_timestamp, `REPLICATE`→repeat.
     * `SUBSTRING`, `UPPER`/`LOWER`, `COALESCE`, `NULLIF`, CASE, and
     * `STRING_AGG(x, sep) WITHIN GROUP (ORDER BY …)` (Spark 4 ships
@@ -515,11 +525,11 @@ object Dialect {
     // PIVOT's IN values arrive backticked from the prelude. APPLY's
     // STRING_SPLIT call lies inside the APPLY site, so that site applies
     // the string_split entry to the call it emits.
-    private val table = Table(Seq(rewriteTsqlPivot, tsqlApply(stringSplit(_)), stringSplit,
-      tsqlConvert, tsqlDateAdd, tsqlDateDiff, tsqlDatePart),
+    override private[graft] val table = Table(Seq(rewriteTsqlPivot, tsqlApply(stringSplit(_)), stringSplit,
+      tsqlConvert, tsqlDateAdd, tsqlDateDiff, tsqlDatePart, tsqlLen),
       renames = Map(
         "isnull" -> "coalesce", "iif" -> "if", "charindex" -> "locate",
-        "len" -> "length", "getdate" -> "current_timestamp",
+        "getdate" -> "current_timestamp",
         "sysdatetime" -> "current_timestamp", "replicate" -> "repeat"))
     def rewrite(spark: SparkSession, sql: String,
         schemas: Map[String, StructType]): String = {
@@ -534,12 +544,12 @@ object Dialect {
   /** Redshift-ish surface — Postgres 8 ancestry plus warehouse extras, so
     * it composes the existing rewrites: `"ident"` quoting, `::` casts,
     * `~`/`!~` regex matches, TO_CHAR/TO_DATE templates (the shared
-    * Postgres/Oracle table), Oracle-style null-matching DECODE,
-    * `DATEADD`/`DATEDIFF` with Redshift part names and abbreviations
-    * (boundary-crossing counts; weeks roll at SUNDAY per Redshift's
-    * DATEDIFF(week) boundary), GETDATE/SYSDATE → current_timestamp, and
-    * LEN → length. `LISTAGG(x, sep) WITHIN GROUP (ORDER BY …)`, NVL,
-    * NVL2, POSITION, SPLIT_PART are Spark-4-native pass-throughs.
+    * Postgres/Oracle table), `DATEADD`/`DATEDIFF` with Redshift part
+    * names and abbreviations (boundary-crossing counts; weeks roll at
+    * SUNDAY per Redshift's DATEDIFF(week) boundary), and GETDATE/SYSDATE
+    * → current_timestamp. Null-matching `DECODE`, `LEN`,
+    * `LISTAGG(x, sep) WITHIN GROUP (ORDER BY …)`, NVL, NVL2, POSITION,
+    * SPLIT_PART are Spark-4-native pass-throughs.
     * Redshift string literals process backslash escapes (Postgres
     * `standard_conforming_strings = off` ancestry) exactly as Spark's
     * parser does, so literals are not doubled.
@@ -547,11 +557,11 @@ object Dialect {
   case object RedshiftIsh extends Dialect {
     // inherits literalBackslashEscapes = true: Redshift literals process
     // backslash escapes (see the class doc above), as Spark's do
-    private val table = Table(Seq(oracleDecode, oracleToDate, pgToChar, rewritePgRegexMatch,
+    override private[graft] val table = Table(Seq(oracleToDate, pgToChar, rewritePgRegexMatch,
       rsDateAdd, rsDateDiff, rsBareTypes),
       renames = Map(
         "getdate" -> "current_timestamp", "sysdate" -> "current_timestamp",
-        "len" -> "length", "strpos" -> "instr", "charindex" -> "locate"))
+        "strpos" -> "instr", "charindex" -> "locate"))
     def rewrite(spark: SparkSession, sql: String,
         schemas: Map[String, StructType]): String = {
       val s = prelude(sql, literalBackslashEscapes, doubleQuotedIsString, '"')
@@ -562,8 +572,8 @@ object Dialect {
 
   /** Teradata-ish surface: the `SEL` statement abbreviation, keyword
     * comparison operators (`EQ NE LT LE GT GE`), infix `MOD`,
-    * `ZEROIFNULL`/`NULLIFZERO`, `OREPLACE`/`OTRANSLATE` (Teradata's
-    * replace/translate — the empty-vs-NULL replacement-string quirk is
+    * `OREPLACE`/`OTRANSLATE` (Teradata's replace/translate — the
+    * empty-vs-NULL replacement-string quirk is
     * outside the shimmed scope), `INDEX(string, substring)` → instr,
     * `TOP n` (reusing the T-SQL scope-end LIMIT placement — `SEL` must
     * expand first so the TOP pattern sees `SELECT TOP`), `**` exponent
@@ -573,16 +583,16 @@ object Dialect {
     * keyword rewriters skip quoted identifiers (a column named `"lt"`
     * stays a column). `CAST(x AS t FORMAT '…')` is outside the shimmed
     * surface and fails fast at Spark's parser. `ADD_MONTHS`, `NVL`,
-    * `POSITION`, `TRIM(BOTH …)`, `SUBSTR`, and `||` concat are
-    * Spark-native pass-throughs. Unquoted identifiers resolve
+    * `ZEROIFNULL`/`NULLIFZERO`, `POSITION`, `TRIM(BOTH …)`, `SUBSTR`, and
+    * `||` concat are Spark-native pass-throughs. Unquoted identifiers resolve
     * case-insensitively (sqlglot's default CASE_INSENSITIVE strategy
     * for Teradata) → default Lower fold. Standard ''-doubled literals;
     * a literal backslash is escaped first, as in the T-SQL shim.
     */
   case object TeradataIsh extends Dialect {
     override val literalBackslashEscapes: Boolean = false
-    private val table = Table(Seq(teradataSel, teradataComparators,
-      rewriteTeradataInfixMod, rewriteTeradataPower, teradataZeroNull),
+    override private[graft] val table = Table(Seq(teradataSel, teradataComparators,
+      rewriteTeradataInfixMod, rewriteTeradataPower),
       renames = Map("index" -> "instr", "oreplace" -> "replace",
         "otranslate" -> "translate"))
     def rewrite(spark: SparkSession, sql: String,
@@ -626,7 +636,7 @@ object Dialect {
     */
   case object ClickHouseIsh extends Dialect {
     override val nameFold: NameFold = NameFold.Sensitive
-    private val table = Table(Seq(rewriteChArrayJoin, chAggIf, chMultiIf, chTo,
+    override private[graft] val table = Table(Seq(rewriteChArrayJoin, chAggIf, chMultiIf, chTo,
       chFormatDateTime, chArrayHof, chSplit, chUniq, chEmpty, chPosition),
       renames = Map(
         "arrayjoin" -> "explode",
@@ -679,7 +689,7 @@ object Dialect {
     // alias is `string`); Tableau FLOAT is double-precision, so it maps
     // to `double`, not Spark's 32-bit `float` (which would silently
     // lose precision); INT is Spark-native truncation
-    private val table = Table(Seq(tableauIfBlock, tableauIif, tableauCountd,
+    override private[graft] val table = Table(Seq(tableauIfBlock, tableauIif, tableauCountd,
       tableauDateAdd, tableauDateDiff, tableauDatePart, tableauDateTrunc,
       tableauDateName, tableauSplit),
       renames = Map("mid" -> "substring", "str" -> "string", "float" -> "double"))
@@ -694,13 +704,12 @@ object Dialect {
     * the day-granular forms, timestamp for the sub-day ones),
     * `DAYS_BETWEEN`/`HOURS_BETWEEN`/`MINUTES_BETWEEN`/`SECONDS_BETWEEN`
     * (first-minus-second ordering; the sub-day forms return fractional
-    * values like Exasol's DECIMAL results), `ZEROIFNULL`/`NULLIFZERO`
-    * (shared with the Teradata shim), Oracle-style null-matching `DECODE`,
-    * `TO_CHAR`/`TO_DATE` templates (the shared Postgres/Oracle table), and
-    * `TRUNC[ATE](date, 'fmt')` → date_trunc. `INSTR`, `LOCATE`, `NVL`,
-    * `NULLIF`, `SUBSTR`, `LPAD`/`RPAD`, `||` concat, and `MOD(a, b)` are
-    * Spark-native pass-throughs. `YEARS_BETWEEN`/`MONTHS_BETWEEN` are NOT
-    * shimmed (Exasol's fractional-month convention differs from Spark's
+    * values like Exasol's DECIMAL results), `TO_CHAR`/`TO_DATE` templates
+    * (the shared Postgres/Oracle table), and `TRUNC[ATE](date, 'fmt')` →
+    * date_trunc. `ZEROIFNULL`/`NULLIFZERO`, null-matching `DECODE`,
+    * `INSTR`, `LOCATE`, `NVL`, `NULLIF`, `SUBSTR`, `LPAD`/`RPAD`, `||`
+    * concat, and `MOD(a, b)` are Spark-native pass-throughs.
+    * `YEARS_BETWEEN`/`MONTHS_BETWEEN` are NOT shimmed (Exasol's fractional-month convention differs from Spark's
     * `months_between` in end-of-month handling — fail fast rather than
     * silently drift). Exasol string literals escape by quote doubling only
     * (backslash is a plain character) and unquoted identifiers fold to
@@ -709,8 +718,8 @@ object Dialect {
   case object ExasolIsh extends Dialect {
     override val literalBackslashEscapes: Boolean = false
     override val nameFold: NameFold = NameFold.Upper
-    private val table = Table(Seq(exasolAddUnits, exasolBetweenUnits, exasolTrunc,
-      oracleDecode, oracleToDate, pgToChar, teradataZeroNull))
+    override private[graft] val table = Table(Seq(exasolAddUnits, exasolBetweenUnits, exasolTrunc,
+      oracleToDate, pgToChar))
     def rewrite(spark: SparkSession, sql: String,
         schemas: Map[String, StructType]): String =
       table(prelude(sql, literalBackslashEscapes, doubleQuotedIsString, '"'))
@@ -739,7 +748,7 @@ object Dialect {
   case object DruidIsh extends Dialect {
     override val literalBackslashEscapes: Boolean = false
     override val nameFold: NameFold = NameFold.Sensitive
-    private val table = Table(Seq(druidTime, druidDiv),
+    override private[graft] val table = Table(Seq(druidTime, druidDiv),
       renames = Map(
         "approx_count_distinct_ds_hll" -> "approx_count_distinct",
         "approx_count_distinct_builtin" -> "approx_count_distinct"))
@@ -1290,16 +1299,6 @@ object Dialect {
     }
   }
 
-  /** `ZEROIFNULL(x)` → `coalesce(x, 0)`; `NULLIFZERO(x)` → `nullif(x, 0)`
-    * (argument-count checked — both are strictly unary in Teradata).
-    */
-  private[graft] val teradataZeroNull: Calls = Calls("zeroifnull|nullifzero") { (name, args) =>
-    if (args.length != 1)
-      throw new graft.UnsupportedError(s"$name expects a single argument")
-    Some(if (name.equalsIgnoreCase("zeroifnull")) s"coalesce(${args(0)}, 0)"
-      else s"nullif(${args(0)}, 0)")
-  }
-
   // ---- the site rewriter -------------------------------------------------
 
   /** One place a pass rewrites: the source range `[start, end)` and its
@@ -1468,6 +1467,11 @@ object Dialect {
       else Some(names.toSeq.sortBy(-_.length).map(java.util.regex.Pattern.quote).mkString("|"))
     private val callRe = alternation(entries.keys ++ toName.keys).map(a => s"(?i)\\b($a)\\s*\\(".r)
     private val wordRe = alternation(toWord.keys).map(a => s"(?i)\\b($a)\\b".r)
+
+    /** Every name the table transforms or renames, lowercase: its call
+      * entries, function renames and word renames.
+      */
+    private[graft] def names: Set[String] = entries.keySet ++ toName.keySet ++ toWord.keySet
 
     def sites(sql: String, spans: Spans): Iterator[Site] = {
       def outside(re: Option[scala.util.matching.Regex]) =
@@ -2892,15 +2896,18 @@ object Dialect {
     tokens("""(?i)\bLIMIT\s+(\d+)\s*,\s*(\d+)""".r)(
       m => s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}")
 
-  /** MySQL `LOCATE(substr, str)` → Spark `instr(str, substr)` (swapped
-    * argument order, same 1-based / 0-when-absent contract). The 3-argument
-    * start-position form has no Spark builtin — raise.
+  /** MySQL `LOCATE(substr, str)` is Spark's `locate` (same argument
+    * order, 1-based, 0 when absent, NULL on a NULL argument) and passes
+    * through. The 3-argument `LOCATE(substr, str, pos)` raises: Spark's
+    * `locate(substr, str, pos)` returns 0 for a NULL `pos`, where MySQL
+    * returns NULL when any argument is NULL.
     */
   private[graft] val mysqlLocate: Calls = Calls("locate") { (fn, args) =>
     args match {
-      case Seq(sub, str) => Some(s"instr($str, $sub)")
+      case Seq(_, _) => None
       case _ => throw new graft.UnsupportedError(
-        s"$fn expects (substr, str); the 3-argument form is not supported")
+        s"$fn expects (substr, str); the 3-argument form is not supported: " +
+          "Spark's locate returns 0 for a NULL start position, MySQL returns NULL")
     }
   }
 
@@ -3038,26 +3045,6 @@ object Dialect {
   }
 
   // ---- Oracle-ish helpers --------------------------------------------------
-
-  /** `DECODE(expr, search1, result1[, search2, result2]…[, default])` →
-    * `CASE WHEN (expr) <=> (search1) THEN (result1) … ELSE (default) END`.
-    * Null-safe `<=>` because Oracle DECODE treats two NULLs as a match —
-    * plain CASE equality would silently drop those branches.
-    */
-  private[graft] val oracleDecode: Calls = Calls("decode") { (_, args) =>
-    if (args.length < 3)
-      throw new graft.UnsupportedError(
-        "DECODE needs at least (expr, search, result)")
-    val x = args.head
-    val rest = args.tail
-    val groups = rest.grouped(2).toSeq
-    val (pairs, default) =
-      if (rest.length % 2 == 0) (groups, None)
-      else (groups.init, Some(groups.last.head))
-    val whens = pairs.map(p => s"WHEN ($x) <=> (${p(0)}) THEN (${p(1)})")
-      .mkString(" ")
-    Some(s"CASE $whens${default.map(d => s" ELSE ($d)").getOrElse("")} END")
-  }
 
   /** `TO_DATE(x, 'templates')` → `to_date(x, 'java pattern')` via the
     * shared Oracle/Postgres template table. The 1-argument form and
@@ -3213,6 +3200,15 @@ object Dialect {
         "DATEPART(week, …) has DATEFIRST-dependent numbering with no Spark equivalent")
       case p => Some(s"$p(${args(1)})")
     }
+  }
+
+  /** T-SQL `LEN(x)` counts characters without trailing spaces, where
+    * Spark's `len`/`length` counts them: `LEN('ab  ')` is 2.
+    */
+  private[graft] val tsqlLen: Calls = Calls("len") { (fn, args) =>
+    if (args.length != 1)
+      throw new graft.UnsupportedError(s"$fn expects one argument")
+    Some(s"length(rtrim(${args(0)}))")
   }
 
   /** Postgres regex-match operators: ` ~ ` → ` RLIKE `, ` !~ ` →
@@ -3999,12 +3995,12 @@ object Dialect {
     * month-start + add_months + day-offset so the overflow rolls
     * forward exactly as SQLite does (Spark's bare `add_months` clamps
     * and would silently differ for day-29+ dates). Bare `date(x)` is
-    * the ISO-date conversion → CAST AS DATE. Unsupported modifiers
+    * Spark's own DATE cast and passes through. Unsupported modifiers
     * ('weekday N', 'unixepoch', fractional offsets) raise.
     */
   private[graft] val sqliteDateFn: Calls = Calls("date") { (_, args) =>
     args match {
-      case Seq(x) => Some(s"CAST($x AS DATE)")
+      case Seq(_) => None
       case base +: mods =>
         val NumMod = """^([+-]?\d+)\s+(day|days|month|months|year|years)$""".r
         val folded = mods.foldLeft(s"CAST($base AS DATE)") { (acc, m) =>
@@ -4156,20 +4152,17 @@ object Dialect {
     }
   }
 
-  /** MySQL `DAYNAME`/`MONTHNAME` — FULL English names ('Monday',
-    * 'January'; Snowflake's same-named functions abbreviate — the two
-    * dialects get distinct rewrites), and `WEEKDAY` (0 = Monday;
-    * MySQL's `DAYOFWEEK` is 1 = Sunday which matches Spark's and passes
-    * through).
+  /** MySQL `DAYNAME`/`MONTHNAME` return FULL English names ('Monday',
+    * 'January'); Spark's same-named builtins abbreviate ('Mon', 'Jan'),
+    * as Snowflake's do. `WEEKDAY` (0 = Monday) and `DAYOFWEEK`
+    * (1 = Sunday) are Spark builtins with MySQL's numbering and pass
+    * through.
     */
-  private[graft] val mysqlDayNames: Calls = Calls("dayname|monthname|weekday") { (fn, args) =>
+  private[graft] val mysqlDayNames: Calls = Calls("dayname|monthname") { (fn, args) =>
     if (args.length != 1)
       throw new graft.UnsupportedError(s"$fn expects one argument")
-    Some(fn.toLowerCase match {
-      case "dayname" => s"date_format(${args(0)}, 'EEEE')"
-      case "monthname" => s"date_format(${args(0)}, 'MMMM')"
-      case _ => s"((dayofweek(${args(0)}) + 5) % 7)"
-    })
+    val pat = if (fn.equalsIgnoreCase("dayname")) "EEEE" else "MMMM"
+    Some(s"date_format(${args(0)}, '$pat')")
   }
 
   /** Split one ORDER BY key into (expression, trimmed ASC/DESC +
@@ -4506,17 +4499,6 @@ object Dialect {
     }
     out.append(sql.substring(last))
     out.toString
-  }
-
-  /** Snowflake `DAYNAME`/`MONTHNAME` — 3-letter English abbreviations
-    * ('Mon', 'Jan'), i.e. Spark `date_format` EEE/MMM (NOT the full
-    * names some engines return for the same function names).
-    */
-  private[graft] val snowDayMonthName: Calls = Calls("dayname|monthname") { (fn, args) =>
-    if (args.length != 1)
-      throw new graft.UnsupportedError(s"$fn expects one argument")
-    val pat = if (fn.equalsIgnoreCase("dayname")) "EEE" else "MMM"
-    Some(s"date_format(${args(0)}, '$pat')")
   }
 
   /** BigQuery `DATE_ADD/DATE_SUB/TIMESTAMP_ADD/TIMESTAMP_SUB(expr,

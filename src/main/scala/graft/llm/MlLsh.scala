@@ -52,18 +52,6 @@ object MlLsh {
     * (id, entry, bucket) ever enters the exchange, and the pair dedup
     * shuffles 16-byte rows instead of full payload structs.
     */
-  /** Exploded hash-entry rows over which broadcasting the build side of
-    * the candidate join stays safe: ~48 bytes per (id, entry, bucket)
-    * row ⇒ the default 4M rows ≈ 200 MB of raw rows. Spark's built hash
-    * relation costs 2–4× the raw bytes, so near the cap it is about
-    * 0.4–0.8 GB, held on the driver and on every executor — inside
-    * default executor memory and far under Spark's hard 8 GB / 512M-row
-    * broadcast cap. Overridable via `spark.graft.lsh.broadcastRowCap`
-    * (tests set 0 to force and pin the salted shuffle arm).
-    */
-  private val BroadcastRowCapConf = "spark.graft.lsh.broadcastRowCap"
-  private val BroadcastRowCapDefault = 4000000L
-
   private def leanCandidates(hashed: DataFrame, idCol: String,
       inputRows: Long, numHashTables: Int): DataFrame = {
     val expl = hashed.select(col(idCol),
@@ -90,7 +78,10 @@ object MlLsh {
     // fits but hard-fails (8 GB broadcast cap / driver OOM) on corpora
     // past the bench scale. Size-gate it on the EXACT exploded row
     // count (the caller counts its input once — one extra pass over the
-    // input, a full one when the input is computed):
+    // input, a full one when the input is computed) by the session's
+    // one broadcast rule (Tuning.broadcastRowCap): the exploded rows
+    // times their estimated size at or under
+    // spark.sql.autoBroadcastJoinThreshold, never when it is -1:
     //  - under the cap: broadcast build + round-robin spread of the
     //    probe side, so few-and-giant LSH buckets (BRP over clustered
     //    embeddings collapses to a handful) still emit their share of
@@ -104,9 +95,7 @@ object MlLsh {
     // Same pair multiset either way (each colliding (a,b,entry) meets on
     // exactly one salt); MlLshSpec pins both arms bit-exact against
     // model.approxSimilarityJoin.
-    val cap = hashed.sparkSession.conf
-      .get(BroadcastRowCapConf, BroadcastRowCapDefault.toString).toLong
-    if (inputRows * numHashTables <= cap) {
+    if (graft.ops.Tuning.broadcastRowCap(expl).exists(inputRows * numHashTables <= _)) {
       a.repartition(parts).join(broadcast(b), Seq("entry", "bucket"))
         .filter(col("a_id") < col("b_id"))
         .select(col("a_id"), col("b_id"))

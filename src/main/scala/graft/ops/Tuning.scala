@@ -42,13 +42,22 @@ object Tuning {
     * never holds more than the threshold's worth of rows, as a
     * broadcast would.
     */
-  def broadcastRows(df: DataFrame): Option[Array[InternalRow]] = {
-    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    if (threshold < 0) None else {
-      val cap = math.min(threshold / GraftBridge.estimatedRowBytes(df), Int.MaxValue - 1L).toInt
+  def broadcastRows(df: DataFrame): Option[Array[InternalRow]] =
+    broadcastRowCap(df).flatMap { c =>
+      val cap = math.min(c, Int.MaxValue - 1L).toInt
       val rows = GraftBridge.collectInternal(df.limit(cap + 1))
       if (rows.length > cap) None else Some(rows)
     }
+
+  /** How many rows of `df` Spark would broadcast: the largest count whose
+    * product with Catalyst's estimated row size
+    * (`GraftBridge.estimatedRowBytes`) is at or below
+    * `spark.sql.autoBroadcastJoinThreshold`. None when the threshold is
+    * negative. Runs no job.
+    */
+  def broadcastRowCap(df: DataFrame): Option[Long] = {
+    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold < 0) None else Some(threshold / GraftBridge.estimatedRowBytes(df))
   }
 
   /** Compute `df` now and cut its lineage: the one materialization rule

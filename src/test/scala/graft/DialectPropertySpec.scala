@@ -277,8 +277,6 @@ class DialectPropertySpec extends SparkSpec {
   test("call passes rewrite nested calls of the same name inside-out") {
     assert(Dialect.tsqlConvert("CONVERT(BIGINT, CONVERT(VARCHAR(10), x))") ===
       "CAST(CAST(x AS STRING) AS BIGINT)")
-    assert(Dialect.oracleDecode("DECODE(DECODE(a, 1, 2), 2, 'y', 'n')") ===
-      "CASE WHEN (CASE WHEN (a) <=> (1) THEN (2) END) <=> (2) THEN ('y') ELSE ('n') END")
     assert(Dialect.exasolTrunc("TRUNC(TRUNC(d, 'MM'), 'YYYY')") ===
       "trunc(trunc(d, 'MONTH'), 'YEAR')")
     assert(Dialect.mysqlDateFns("DATE_FORMAT(STR_TO_DATE(s, '%Y-%m-%d'), '%m')") ===
@@ -675,9 +673,6 @@ class DialectPropertySpec extends SparkSpec {
     assert(Dialect.rewriteTeradataInfixMod("f() MOD (g())") === "f() % (g())")
     assert(Dialect.rewriteTeradataInfixMod("SELECT 'x MOD y' AS s") ===
       "SELECT 'x MOD y' AS s")
-    assert(Dialect.teradataZeroNull("ZEROIFNULL(NULLIFZERO(a + b))") ===
-      "coalesce(nullif(a + b, 0), 0)")
-    intercept[UnsupportedError](Dialect.teradataZeroNull("zeroifnull(a, b)"))
     // ** exponent: simple operands, parenthesized groups, calls, left assoc
     assert(Dialect.rewriteTeradataPower("a ** 2") === "power(a, 2)")
     assert(Dialect.rewriteTeradataPower("(a + b) ** -2") === "power((a + b), -2)")
@@ -707,6 +702,9 @@ class DialectPropertySpec extends SparkSpec {
     // column (maps to backticks), never becomes an operator
     assert(Dialect.TeradataIsh.rewrite(spark, "SEL \"lt\" FROM t WHERE a GT 1") ===
       "SELECT `lt` FROM t WHERE a > 1")
+    // ZEROIFNULL/NULLIFZERO are Spark's own and pass through
+    assert(Dialect.TeradataIsh.rewrite(spark, "SEL ZEROIFNULL(NULLIFZERO(a + b))") ===
+      "SELECT ZEROIFNULL(NULLIFZERO(a + b))")
     // full pipeline through the dialect object: TOP after SEL expansion
     assert(Dialect.TeradataIsh.rewrite(spark,
       "SEL TOP 3 x FROM t WHERE x GT 1 ORDER BY x").trim ===
@@ -722,10 +720,6 @@ class DialectPropertySpec extends SparkSpec {
   }
 
   test("snowflake/bigquery extensions: names, SAFE_ family, INTERVAL add, literal split") {
-    // Snowflake DAYNAME/MONTHNAME are 3-letter abbreviations
-    assert(Dialect.snowDayMonthName("DAYNAME(d)") === "date_format(d, 'EEE')")
-    assert(Dialect.snowDayMonthName("MONTHNAME(d)") === "date_format(d, 'MMM')")
-    intercept[UnsupportedError](Dialect.snowDayMonthName("DAYNAME(a, b)"))
     // BigQuery DATE_ADD/DATE_SUB with INTERVAL — single-digit quantities
     // and expressions both bind; Spark's own 2-arg date_add passes through
     assert(Dialect.bqDateAddSub("DATE_ADD(d, INTERVAL 2 MONTH)") ===
@@ -761,7 +755,7 @@ class DialectPropertySpec extends SparkSpec {
       "SELECT date_format(d, 'yyyy')")
     assert(Dialect.Snowflakeish.rewrite(spark,
       "SELECT TO_JSON(OBJECT_CONSTRUCT('k', a)), ZEROIFNULL(NULLIFZERO(b)), LEN(s), CHARINDEX('x', s)") ===
-      "SELECT TO_JSON(named_struct('k', a)), coalesce(nullif(b, 0), 0), length(s), locate('x', s)")
+      "SELECT TO_JSON(named_struct('k', a)), ZEROIFNULL(NULLIFZERO(b)), LEN(s), locate('x', s)")
   }
 
   test("round-10 rewriters never touch literal content (generated spans)") {
@@ -774,7 +768,6 @@ class DialectPropertySpec extends SparkSpec {
       "tableauIif" -> Dialect.tableauIif,
       "tableauCountd" -> Dialect.tableauCountd,
       "tableauSplit" -> Dialect.tableauSplit,
-      "snowDayMonthName" -> Dialect.snowDayMonthName,
       "bqDateAddSub" -> Dialect.bqDateAddSub,
       "bqSplit" -> Dialect.bqSplit,
       "trinoDateFns" -> Dialect.trinoDateFns,
@@ -828,8 +821,9 @@ class DialectPropertySpec extends SparkSpec {
     assert(Dialect.chFormatDateTime("fromUnixTimestamp(x)") ===
       "timestamp_seconds(x)")
     intercept[UnsupportedError](Dialect.chFormatDateTime("formatDateTime(d, f)"))
-    // bare date() = ISO conversion; day modifiers are plain adds
-    assert(Dialect.sqliteDateFn("date(d)") === "CAST(d AS DATE)")
+    // bare date() is Spark's DATE cast and passes through; day
+    // modifiers are plain adds
+    assert(Dialect.sqliteDateFn("date(d)") === "date(d)")
     assert(Dialect.sqliteDateFn("date(d, '-7 days')") ===
       "date_add(CAST(d AS DATE), (-7))")
     // month arithmetic NORMALIZES like SQLite (Jan 31 +1 month = Mar 2),
@@ -848,8 +842,8 @@ class DialectPropertySpec extends SparkSpec {
     // MySQL full names (Snowflake's same-named functions abbreviate)
     assert(Dialect.mysqlDayNames("DAYNAME(d)") === "date_format(d, 'EEEE')")
     assert(Dialect.mysqlDayNames("MONTHNAME(d)") === "date_format(d, 'MMMM')")
-    // WEEKDAY is 0=Monday (DAYOFWEEK 1=Sunday passes through untouched)
-    assert(Dialect.mysqlDayNames("WEEKDAY(d)") === "((dayofweek(d) + 5) % 7)")
+    // WEEKDAY (0=Monday) and DAYOFWEEK (1=Sunday) are Spark's own
+    assert(Dialect.mysqlDayNames("WEEKDAY(d)") === "WEEKDAY(d)")
     assert(Dialect.mysqlDayNames("DAYOFWEEK(d)") === "DAYOFWEEK(d)")
     // standalone FETCH FIRST/NEXT → LIMIT; literals safe
     assert(Dialect.rewriteFetchFirst("SELECT a FROM t ORDER BY a FETCH FIRST 10 ROWS ONLY") ===
@@ -996,10 +990,10 @@ class DialectPropertySpec extends SparkSpec {
     // 'DAY' would be an Oracle-family week start — fail fast
     intercept[UnsupportedError](Dialect.exasolTrunc("TRUNC(d, 'DAY')"))
     val spark: org.apache.spark.sql.SparkSession = null
-    // full pipeline: quoted idents, ZEROIFNULL, DECODE together
+    // full pipeline: quoted idents, Spark's own ZEROIFNULL, ADD_DAYS
     val full = Dialect.ExasolIsh.rewrite(spark,
       "SELECT ZEROIFNULL(\"v\") AS z, ADD_DAYS(d, 1) AS d1 FROM t")
-    assert(full.startsWith("SELECT coalesce(`v`, 0) AS z, (CASE WHEN"))
+    assert(full.startsWith("SELECT ZEROIFNULL(`v`) AS z, (CASE WHEN"))
     assert(full.contains("date_add((d), CAST(1 AS INT))"))
     assert(Dialect.forName("exasol") === Dialect.ExasolIsh)
     assert(Dialect.ExasolIsh.nameFold === Dialect.NameFold.Upper)

@@ -559,13 +559,6 @@ class EngineSpec extends SparkSpec {
   }
 
   test("dialect: OracleIsh constructs — textual rewrites") {
-    assert(Dialect.oracleDecode("DECODE(x, 1, 'a', 2, 'b', 'z')") ===
-      "CASE WHEN (x) <=> (1) THEN ('a') WHEN (x) <=> (2) THEN ('b') ELSE ('z') END")
-    assert(Dialect.oracleDecode("DECODE(x, NULL, 'n', 'y')") ===
-      "CASE WHEN (x) <=> (NULL) THEN ('n') ELSE ('y') END") // null-safe match
-    assert(Dialect.oracleDecode("DECODE(x, 1, 'a')") ===
-      "CASE WHEN (x) <=> (1) THEN ('a') END") // no default → NULL
-    intercept[UnsupportedError](Dialect.oracleDecode("DECODE(x, 1)"))
     assert(Dialect.oracleToDate("TO_DATE(s, 'YYYY-MM-DD')") ===
       "to_date(s, 'yyyy-MM-dd')")
     // idempotent: translated output (lowercase Java pattern) passes through
@@ -653,7 +646,7 @@ class EngineSpec extends SparkSpec {
     assert(Dialect.rewriteMysqlLimit("SELECT 'LIMIT 1, 2' AS s FROM t LIMIT 3") ===
       "SELECT 'LIMIT 1, 2' AS s FROM t LIMIT 3")
     assert(Dialect.mysqlLocate("SELECT LOCATE('-', s) AS p") ===
-      "SELECT instr(s, '-') AS p")
+      "SELECT LOCATE('-', s) AS p") // Spark's locate
     intercept[UnsupportedError](Dialect.mysqlLocate("SELECT LOCATE('-', s, 3)"))
     assert(Dialect.groupConcat("SELECT GROUP_CONCAT(x) FROM t") ===
       "SELECT listagg(x, ',') FROM t")

@@ -94,9 +94,9 @@ class MlLshSpec extends SparkSpec {
   }
 
   test("salted shuffle candidate arm (over-cap) ≡ broadcast arm, both LSH legs") {
-    // r20: the candidate join's build-side broadcast is size-gated
-    // (spark.graft.lsh.broadcastRowCap); past the cap the join runs as a
-    // salt-and-replicate shuffle join. Forcing the cap to 0 exercises the
+    // r20: the candidate join's build-side broadcast is size-gated by
+    // the broadcast threshold; past it the join runs as a
+    // salt-and-replicate shuffle join. A threshold of -1 exercises the
     // salted arm on the same corpus and pins its output bit-exact against
     // the broadcast arm (which MlLshSpec already pins against
     // model.approxSimilarityJoin).
@@ -107,8 +107,7 @@ class MlLshSpec extends SparkSpec {
     def mh() = MlLsh.minHashPairsMl(docs, maxJaccardDistance = 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val (brpB, mhB) = (brp(), mh())
-    spark.conf.set("spark.graft.lsh.broadcastRowCap", "0")
-    try {
+    withBroadcastThreshold(-1) {
       val (brpS, mhS) = (brp(), mh())
       assert(brpS == brpB, s"BRP salted arm drifted: " +
         s"salted-only=${(brpS.keySet -- brpB.keySet).take(5)} " +
@@ -117,7 +116,7 @@ class MlLshSpec extends SparkSpec {
         s"salted-only=${(mhS.keySet -- mhB.keySet).take(5)} " +
         s"broadcast-only=${(mhB.keySet -- mhS.keySet).take(5)}")
       assert(brpB.nonEmpty && mhB.nonEmpty)
-    } finally spark.conf.unset("spark.graft.lsh.broadcastRowCap")
+    }
   }
 
   test("BucketedRandomProjectionLSH returns verified close pairs only") {
