@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Plan auditor and GATE — `sbt "runMain graft.PlanCheck [sfDir]"`.
   *
@@ -10,12 +10,14 @@ import org.apache.spark.sql.SparkSession
   * ".explain and iterate" loop from the build brief turned into a
   * repeatable report.
   *
-  * Since round 4 it is also a FAILING gate: [[rules]] pins 191 invariants
-  * across 173 audited queries (a pushed filter that stops pushing, a dim
-  * join degrading to sort-merge, a top-k degrading to a global sort, a
+  * It is also a FAILING gate: [[rules]] pins 220 invariants across 201
+  * audited queries (a pushed filter that stops pushing, a dim join
+  * degrading to sort-merge, a top-k degrading to a global sort, a
   * map-only operator growing a join or extra exchange); the main exits
   * non-zero on any violation, and `PlanGateSpec` runs the same audit at
-  * sf0.001 under `sbt test`.
+  * sf0.001 under `sbt test`. A rule marked `sparkPath` reads the plan
+  * built at broadcast threshold `-1`, for an operator whose
+  * broadcast-sized input runs on the driver at the session threshold.
   */
 object PlanCheck {
 
@@ -219,8 +221,16 @@ object PlanCheck {
   def windowLint(spark: SparkSession, sfDir: String): Seq[String] =
     windowLint(planStrings(spark, sfDir))
 
-  /** One pinned invariant on one audited query's physical plan. */
-  final case class Rule(query: String, desc: String, check: Map[String, Int] => Boolean)
+  /** One pinned invariant on one audited query's physical plan: the plan
+    * built at the session's broadcast threshold, or, with `sparkPath`, at
+    * `-1` ([[SparkPathSuffix]]), where an operator that runs broadcast-sized
+    * input on the driver builds its Spark plan instead.
+    */
+  final case class Rule(query: String, desc: String, check: Map[String, Int] => Boolean,
+      sparkPath: Boolean = false)
+
+  /** The name suffix of a query's plan built at broadcast threshold `-1`. */
+  val SparkPathSuffix = " @threshold -1"
 
   /** Conservative floors recorded from the sf0.001 plans — AQE may improve
     * on them at runtime, but the static plan must already satisfy them.
@@ -594,8 +604,15 @@ object PlanCheck {
     Rule("llm_tokenizer_fertility", "per-row langid+encode fused: NO join, map-side-combined per-lang aggregate",
       f => f("bhj") + f("smj") + f("shj") + f("bnlj") + f("cartesian") == 0 &&
         f("partial_agg") >= 2 && f("exchange") <= 2 && f("global_window") == 0),
-    Rule("llm_dedup_jaccard_prefix", "prefix-token self-join equi-keyed, verify joins broadcast, never cartesian",
-      f => f("cartesian") + f("bnlj") == 0 && f("bhj") >= 1),
+    Rule("llm_dedup_jaccard_prefix", "broadcast-sized token rows: the pairs are a local " +
+      "relation, no join",
+      f => f("cartesian") + f("bnlj") + f("bhj") + f("smj") + f("shj") == 0),
+    // the Spark path at -1, where no join can broadcast: the two df
+    // joins (one per prefix side), the prefix-token self-join and both
+    // verify joins stay equi-keyed
+    Rule("llm_dedup_jaccard_prefix", "prefix-token self-join and verify joins equi-keyed, never cartesian",
+      f => f("cartesian") + f("bnlj") == 0 && f("bhj") + f("smj") + f("shj") >= 5,
+      sparkPath = true),
     Rule("op_cooccurrence", "pair top-k via TakeOrderedAndProject; only the 1-row total is nested-loop-broadcast",
       f => f("topk") >= 1 && f("cartesian") == 0 && f("bnlj") <= 1),
     Rule("op_drift_check", "both snapshot aggregations map-side combined; ts filters pushed to the scan",
@@ -909,21 +926,33 @@ object PlanCheck {
     * materialize (MLlib fits, N² pair joins) or stage files run real
     * work just to construct their DataFrame — so the report, the rule
     * audit, and the window lint must all share one planning pass instead
-    * of each re-invoking the query builders.
+    * of each re-invoking the query builders. Each query's DataFrame is
+    * built through `build(name, builder)` (a caller may wrap it, say to
+    * count its jobs), then a query with a `sparkPath` rule is built once
+    * more, and planned, at threshold `-1`, under its name plus
+    * [[SparkPathSuffix]].
     */
-  private[graft] def planStrings(spark: SparkSession,
-      sfDir: String): Seq[(String, Either[String, String])] =
-    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> (try Right(fn(spark, sfDir).queryExecution.executedPlan.toString)
-        catch { case e: Throwable => Left(e.getMessage.take(120)) })
+  private[graft] def planStrings(spark: SparkSession, sfDir: String,
+      build: (String, () => DataFrame) => DataFrame = (_, b) => b())
+      : Seq[(String, Either[String, String])] = {
+    def plan(df: => DataFrame): Either[String, String] =
+      try Right(df.queryExecution.executedPlan.toString)
+      catch { case e: Throwable => Left(e.getMessage.take(120)) }
+    val sparkPaths = rules.filter(_.sparkPath).map(_.query).toSet
+    SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      (name -> plan(build(name, () => fn(spark, sfDir)))) +:
+        Option.when(sparkPaths(name))(name + SparkPathSuffix -> ops.Tuning.withSqlConf(
+          spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")(plan(fn(spark, sfDir)))).toSeq
     }
+  }
 
   /** Run every rule against its query's pre-built physical plan; returns
     * the violations (empty = gate passes).
     */
   def audit(plans: Seq[(String, Either[String, String])]): Seq[String] = {
     val byName = plans.toMap
-    rules.groupBy(_.query).toSeq.sortBy(_._1).flatMap { case (name, rs) =>
+    rules.groupBy(r => if (r.sparkPath) r.query + SparkPathSuffix else r.query)
+        .toSeq.sortBy(_._1).flatMap { case (name, rs) =>
       byName.get(name) match {
         case None => Seq(s"$name: audit rule references an unknown query")
         case Some(Left(err)) => Seq(s"$name: ERROR $err")

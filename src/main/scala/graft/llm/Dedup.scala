@@ -1,8 +1,11 @@
 package graft.llm
 
+import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.ops.Tuning
 import graft.ops.Tuning.materialize
 
 /** Deduplication operators for large-scale training-data pipelines — the
@@ -637,39 +640,113 @@ object Dedup {
     * verified with an exact array-intersection count; the threshold test
     * is pure integer arithmetic (common·10⁶ ≥ t_ppm·(|A|+|B|−common)).
     *
+    * Rows: `(a_id, b_id, common, na, nb, jaccard)` with `a_id < b_id`,
+    * `common` the count of distinct shared shingle hashes, `na` and `nb`
+    * each side's hash count and `jaccard = common / (na + nb − common)`
+    * in double division. Documents with a null id count toward document
+    * frequencies but never pair.
+    *
+    * Two paths, chosen as [[graft.ops.Relational.connectedComponents]]
+    * chooses, by one bounded collect ([[graft.ops.Tuning.broadcastRows]])
+    * of the token rows `(doc_id, n, s)`, one per shingle hash of each
+    * document:
+    *   - Driver path: when those rows are broadcast-sized, the document
+    *     frequencies, each document's rarest-first prefix, the inverted
+    *     index over prefix tokens and the exact verify run on the driver
+    *     (`driverPairs`), ids compared by Catalyst's interpreted ordering,
+    *     and the pairs come back as a local relation. No job runs after
+    *     the collect. Two inputs take the Spark path instead: duplicate
+    *     `doc_id`s, and a candidate bound Σ C(k, 2) over prefix tokens (k
+    *     documents hold the token in their prefix) whose pair rows Spark
+    *     would not broadcast, so a stop-shingle corpus never builds a
+    *     quadratic candidate set on one driver thread.
+    *   - Spark path: over the threshold, at `-1`, or for those two inputs,
+    *     the plan below runs. It pays one evaluation of the shingles up to
+    *     the bounded collect besides its own.
+    * Both return the same rows.
+    *
     * Scale: at t = 0.5 the prefix is ~half of each document's shingles,
     * and because prefixes hold each document's RAREST tokens, the join's
     * Σdf² collapses — stop-shingles (the df² blowup in
     * [[ngramJaccardPairs]], see SCALE.md) land at the END of the order
     * and never enter the join. Unlike the `maxDf` relief valve this
     * prunes with NO approximation: the output is exactly the brute-force
-    * pair set, which is what the driver oracle checks. Shuffles: df
-    * count, one doc-key window for prefix positions, the prefix-token
-    * join, and a broadcastable candidate verify.
+    * pair set, which is what the driver oracle checks. Shuffles of the
+    * Spark path: df count, one doc-key window for prefix positions, the
+    * prefix-token join, and a broadcastable candidate verify.
     */
   def prefixFilteredJaccardPairs(docs: DataFrame,
       thresholdPpm: Long = 500000L, textCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(thresholdPpm > 0 && thresholdPpm <= 1000000L,
       "thresholdPpm must be in (0, 1e6]")
-    // the shingle-set table feeds THREE consumers (prefix tokens + both
-    // verify sides); materializing it computes the O(len)-per-row
-    // shingling once instead of three times, and shingles carry as 8-byte
-    // xxhash64 keys everywhere (df count, prefix join, verify intersect) —
-    // the same key compression as [[ngramJaccardPairs]], same negligible
-    // collision odds. Together measured 48 s → 11 s on the StressCheck
-    // stop-shingle corpus (vs 22 s for the uncapped inverted index there).
-    // Checkpoint storage is released when the result reference is dropped
-    // (same contract as [[minHashDedup]]).
-    // (r20 note: a cores-wide spread of this checkpoint was tried and
-    // REVERTED — the expensive pair verify is reduce-side and already
-    // parallel; spreading only added a shuffle and task count.)
-    val sets = materialize(withShingles(
+    // shingles carry as 8-byte xxhash64 keys everywhere (df count, prefix
+    // join, verify intersect) — the same key compression as
+    // [[ngramJaccardPairs]], same negligible collision odds
+    val sets = withShingles(
         docs.filter(size(split(col(textCol), " ")) >= 3), textCol)
       .select(col("doc_id"),
         expr("transform(shingles, x -> xxhash64(x))").as("hs"))
-      .select(col("doc_id"), size(col("hs")).cast("long").as("n"), col("hs")))
-    val tok = sets.select(col("doc_id"), col("n"), explode(col("hs")).as("s"))
+      .select(col("doc_id"), size(col("hs")).cast("long").as("n"), col("hs"))
+    Tuning.broadcastRows(tokens(sets))
+      .flatMap(driverPairs(sets, _, thresholdPpm))
+      .getOrElse(sparkPairs(materialize(sets), thresholdPpm))
+  }
+
+  /** One `(doc_id, n, s)` row per shingle hash `s` of each document. */
+  private def tokens(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), col("n"), explode(col("hs")).as("s"))
+
+  /** [[prefixFilteredJaccardPairs]] on the driver over its token rows, or
+    * None when an id's token rows outnumber its `n` (a duplicate id) or
+    * when the candidate bound's pair rows are not broadcast-sized.
+    * Documents are keyed by their [[graft.ops.Relational.IdIndex]]
+    * position, so a position order is the id order.
+    */
+  private def driverPairs(sets: DataFrame, rows: Array[InternalRow],
+      thresholdPpm: Long): Option[DataFrame] = {
+    val t = sets.schema.head.dataType
+    val index = new graft.ops.Relational.IdIndex(rows.iterator.map(_.get(0, t)), t)
+    val pos = rows.map(r => if (r.isNullAt(0)) -1 else index(r.get(0, t)))
+    val byDoc = rows.indices.filter(pos(_) >= 0).groupBy(pos(_))
+    val n = index.ids.indices.map(i => rows(byDoc(i).head).getLong(1))
+    // document frequencies count every token row, a null id's included
+    val df = mutable.LongMap.empty[Long]
+    rows.foreach(r => df(r.getLong(2)) = df.getOrElse(r.getLong(2), 0L) + 1L)
+    val toks = index.ids.indices.map(i => byDoc(i).map(rows(_).getLong(2)))
+    val unique = toks.indices.forall(i => toks(i).length == n(i))
+    // the inverted index over each document's rarest-first prefix
+    val holders = mutable.LongMap.empty[mutable.ArrayBuffer[Int]]
+    toks.indices.foreach { i =>
+      val p = n(i) - (n(i) * thresholdPpm + 999999L) / 1000000L + 1L
+      toks(i).sortBy(s => (df(s), s)).take(p.toInt).distinct
+        .foreach(s => holders.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += i)
+    }
+    val bound = holders.valuesIterator.map(h => h.length.toLong * (h.length - 1) / 2).sum
+    // the Spark path's schema: its ids, sizes and division keep the
+    // nullability of these columns of `sets`
+    val schema = sets.select(col("doc_id").as("a_id"), col("doc_id").as("b_id"),
+      col("n").as("common"), col("n").as("na"), col("n").as("nb"),
+      (col("n").cast("double") / col("n")).as("jaccard")).schema
+    Option.when(unique && Tuning.broadcastRowCap(sets.sparkSession, schema).exists(bound <= _)) {
+      val cand = mutable.HashSet.empty[(Int, Int)]
+      holders.valuesIterator.foreach(h => for (a <- h; b <- h if a < b) cand += ((a, b)))
+      val sorted = toks.map(_.distinct.sorted.toArray)
+      val out = cand.toSeq.sorted.flatMap { case (a, b) =>
+        val common = sorted(a).count(java.util.Arrays.binarySearch(sorted(b), _) >= 0).toLong
+        val union = n(a) + n(b) - common
+        Option.when(common * 1000000L >= thresholdPpm * union)(InternalRow(
+          index.ids(a), index.ids(b), common, n(a), n(b), common.toDouble / union.toDouble))
+      }
+      org.apache.spark.sql.GraftBridge.localFrame(sets.sparkSession, schema, out)
+    }
+  }
+
+  /** [[prefixFilteredJaccardPairs]] as a Spark plan over the materialized
+    * shingle-hash sets `sets`, which feed three consumers (prefix tokens
+    * and both verify sides).
+    */
+  private def sparkPairs(sets: DataFrame, thresholdPpm: Long): DataFrame = {
+    val tok = tokens(sets)
     val dfreq = tok.groupBy(col("s")).agg(count(lit(1)).as("df"))
     val prefix = tok.join(dfreq, "s")
       .withColumn("pos", row_number().over(
@@ -710,6 +787,13 @@ object Dedup {
     * the driver under the broadcast threshold, pointer-jumping O(log
     * chain) rounds over it) — corpus-sized input never enters the
     * iteration. The histogram is |clusters| rows aggregated twice.
+    *
+    * Both steps choose their path by the session's one broadcast rule
+    * ([[graft.ops.Tuning.broadcastRows]]): a corpus whose token rows are
+    * broadcast-sized, and whose prefix candidate bound is too, gets its
+    * pairs as a local relation from the driver, and a pair graph under
+    * the threshold is labeled by union-find; either step over it (or at
+    * `-1`) runs as Spark jobs. Every combination returns the same rows.
     */
   def dedupClusterStats(docs: DataFrame,
       thresholdPpm: Long = 500000L): DataFrame = {
@@ -842,6 +926,12 @@ object Dedup {
     * pass. `n_removed_greedy` counts distinct larger-ids in qualifying
     * pairs (transitivity-free lower bound on the purge;
     * [[dedupClusterStats]] is the component-exact sibling).
+    *
+    * The pair list takes [[prefixFilteredJaccardPairs]]' path: a
+    * broadcast-sized corpus (token rows and candidate bound both under
+    * the threshold) gets it as a local relation from the driver, which
+    * the sweep reads as it is; otherwise it is computed as Spark jobs and
+    * checkpointed once.
     */
   def thresholdSweep(docs: DataFrame, thresholdsPpm: Seq[Long],
       textCol: String = "text"): DataFrame = {
@@ -853,8 +943,8 @@ object Dedup {
     // the pair list feeds THREE consumers (pairAgg + both union legs of
     // docAgg); materializing it prices the prefix-filtered join
     // pipeline ONCE — without it each consumer replays the Σdf² join and
-    // the 'computed once' contract in the scaladoc is a lie (same rule as
-    // dedupClusterStats' checkpointed pair list)
+    // the 'computed once' contract in the scaladoc is a lie. The driver
+    // path's local relation comes back from it as it is.
     val base = materialize(prefixFilteredJaccardPairs(docs, thresholds.min, textCol)
       .select(col("a_id"), col("b_id"), col("common"), col("na"), col("nb")))
     val ts = explode(array(thresholds.map(lit): _*)).as("threshold_ppm")

@@ -641,13 +641,12 @@ object TextAnalysis {
     * than `rounds` rows come back if the corpus runs out of pairs.
     *
     * The corpus collapses to its word-frequency table first (one
-    * map-side-combined shuffle — |vocab| rows, not corpus rows), and
-    * that `(wc, s)` table is materialized ONCE, so the collapse runs one
-    * time whichever path the rounds take. The symbol stream `s` is
-    * [[bpeEncode]]'s boundary-wrapped form, so each merge is the same
-    * greedy whole-symbol replace the encoder applies. Then one bounded
-    * collect of the table ([[graft.ops.Tuning.broadcastRows]]) picks the
-    * path:
+    * map-side-combined shuffle — |vocab| rows, not corpus rows). The
+    * symbol stream `s` is [[bpeEncode]]'s boundary-wrapped form, so each
+    * merge is the same greedy whole-symbol replace the encoder applies.
+    * Then one bounded collect of that `(wc, s)` table
+    * ([[graft.ops.Tuning.broadcastRows]]), read straight from the
+    * collapse, picks the path:
     *   - Driver path: a table at or under
     *     `spark.sql.autoBroadcastJoinThreshold` is learned on the driver
     *     (`driverMerges`), evaluating Spark's own `StringTrim`,
@@ -656,6 +655,8 @@ object TextAnalysis {
     *     `y` in `UTF8String` binary order). The merges are returned as a
     *     local relation. No job runs per round.
     *   - Loop path: over the threshold, or with the threshold at `-1`,
+    *     the table is materialized once (one more evaluation of the
+    *     collapse than the bounded collect's), and
     *     each round's winning pair is a 1-row argmax frame, materialized
     *     by [[graft.ops.Tuning.materialize]] (the loop-flattening
     *     discipline — a 1-row deterministic frame, so partition
@@ -676,23 +677,22 @@ object TextAnalysis {
   def bpeLearnMerges(docs: DataFrame, rounds: Int = 8,
       textCol: String = "text"): DataFrame = {
     require(rounds > 0 && rounds <= 64, "rounds must be in 1..64")
-    // materialize the vocab-sized collapse ONCE: the path's bounded
-    // collect and each loop round's argmax are actions of their own, and
-    // an unmaterialized `words` would replay the corpus scan + collapse
-    // shuffle for each. (r20 note: a cores-wide spread of the collapse
-    // was tried and REVERTED — the measured loop cost is per-job
-    // scheduling, ~49 jobs on 56 tasks, not map-side compute, so the
-    // spread only added a shuffle and 6× the task count for
-    // flat-to-worse time.)
-    val words = graft.ops.Tuning.materialize(docs
+    // the bounded collect reads the collapse itself; only the loop
+    // materializes it, since each round's argmax is an action of its own
+    // and would otherwise replay the corpus scan + collapse shuffle.
+    // (r20 note: a cores-wide spread of the collapse was tried and
+    // REVERTED — the measured loop cost is per-job scheduling, ~49 jobs
+    // on 56 tasks, not map-side compute, so the spread only added a
+    // shuffle and 6× the task count for flat-to-worse time.)
+    val words = docs
       .select(explode(split(lower(coalesce(col(textCol), lit(""))), WsSplitRegex)).as("word"))
       .filter(length(col("word")) >= 2)
       .groupBy(col("word")).agg(count(lit(1)).as("wc"))
       .select(col("wc"),
-        regexp_replace(col("word"), AnyCharCapture, BpeSep + "$1" + BpeSep).as("s")))
+        regexp_replace(col("word"), AnyCharCapture, BpeSep + "$1" + BpeSep).as("s"))
     val merges = graft.ops.Tuning.broadcastRows(words) match {
       case Some(vocab) => driverMerges(docs.sparkSession, vocab, rounds)
-      case None => mergeLoop(words, rounds)
+      case None => mergeLoop(graft.ops.Tuning.materialize(words), rounds)
     }
     merges.orderBy(col("round"))
   }

@@ -608,10 +608,11 @@ object Relational {
   /** The sorted distinct non-null node ids among `values` (Catalyst values
     * of type `t`), compared with Catalyst's interpreted ordering, so every
     * id type the loops join on indexes the same way; `apply` is an id's
-    * position. The driver paths of [[connectedComponents]] and
-    * [[pageRank]] key their per-node arrays by it.
+    * position. The driver paths of [[connectedComponents]],
+    * [[pageRank]] and [[graft.llm.Dedup.prefixFilteredJaccardPairs]] key
+    * their per-node arrays by it.
     */
-  private final class IdIndex(values: Iterator[Any], t: DataType) {
+  private[graft] final class IdIndex(values: Iterator[Any], t: DataType) {
     private val ord = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(t)
     val ids: scala.collection.IndexedSeq[Any] = {
       val out = scala.collection.mutable.ArrayBuffer.empty[Any]
@@ -625,15 +626,13 @@ object Relational {
 
   /** `(node, component)` for every node of `nodeIds` (of `labels` when
     * None): its label, or the node itself when `labels` has none. The
-    * join to `nodeIds` is computed now by [[Tuning.materialize]], so the
-    * result never replays the labeling; without `nodeIds` the labels are
-    * the driver path's local relation, which has no labeling to replay.
+    * result is computed now by [[Tuning.materialize]], so it never
+    * replays the labeling; without `nodeIds` the labels are the driver
+    * path's local relation, which materialize returns as it is.
     */
-  private def restoreUniverse(nodeIds: Option[DataFrame], labels: DataFrame): DataFrame = {
-    def component(df: DataFrame) = df.select(col("node"), coalesce(col("lbl"), col("node")).as("component"))
-    nodeIds.fold(component(labels))(n =>
-      Tuning.materialize(component(n.join(labels.select(col("node"), col("lbl")), Seq("node"), "left"))))
-  }
+  private def restoreUniverse(nodeIds: Option[DataFrame], labels: DataFrame): DataFrame =
+    Tuning.materialize(nodeIds.fold(labels)(_.join(labels.select(col("node"), col("lbl")), Seq("node"), "left"))
+      .select(col("node"), coalesce(col("lbl"), col("node")).as("component")))
 
   /** `(node, lbl)` for every endpoint of the symmetric edge set `sym`
     * (columns `__a`, `__b`), labeled with the smallest id of its component

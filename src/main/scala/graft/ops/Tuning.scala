@@ -2,20 +2,28 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.types.StructType
 
 /** Path choice, materialization and the loop scaffold of the iterative
-  * operators (connected components, PageRank, BPE induction).
+  * operators (connected components, PageRank, BPE induction) and of the
+  * exact similarity join (`Dedup.prefixFilteredJaccardPairs`).
   *
   * Path choice: each of them reads its working set once through
   * [[broadcastRows]]. A working set Spark would broadcast (rows times
   * Catalyst's estimated row size at or under
   * `spark.sql.autoBroadcastJoinThreshold`) comes back as driver rows,
-  * and the operator runs its rounds on the driver over Catalyst values:
-  * no per-round job, working cache or conf write. Measured (sf0.001,
+  * and the operator runs on the driver over Catalyst values: no
+  * per-round job, working cache or conf write. The working sets are
+  * components' undirected edges, PageRank's distinct edges, BPE's
+  * `(wc, s)` vocab and the similarity join's `(doc_id, n, s)` token
+  * rows; the join also needs its prefix candidate bound under the
+  * threshold ([[broadcastRowCap]] of its pair rows). Measured (sf0.001,
   * `local[4]`, registered tables): `op_graph_pagerank` builds in 2 jobs
   * on the driver path against 30 on the loop path, `llm_bpe_learn` and
-  * `llm_bpe_pipeline` in 3 against 46 each. Anything larger, or any
-  * session with the threshold at `-1`, takes the distributed loop.
+  * `llm_bpe_pipeline` in 2 against 46 each, `llm_dedup_cluster_stats`
+  * in 3 against 8. Anything larger, or any session with the threshold
+  * at `-1`, takes the distributed loop or plan.
   *
   * The loops run many small actions over working frames that are orders
   * of magnitude smaller than the input the session conf was sized for,
@@ -55,9 +63,14 @@ object Tuning {
     * `spark.sql.autoBroadcastJoinThreshold`. None when the threshold is
     * negative. Runs no job.
     */
-  def broadcastRowCap(df: DataFrame): Option[Long] = {
-    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    if (threshold < 0) None else Some(threshold / GraftBridge.estimatedRowBytes(df))
+  def broadcastRowCap(df: DataFrame): Option[Long] = broadcastRowCap(df.sparkSession, df.schema)
+
+  /** [[broadcastRowCap]] for rows of `schema` in `spark`'s session, for a
+    * frame not built yet.
+    */
+  def broadcastRowCap(spark: SparkSession, schema: StructType): Option[Long] = {
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold < 0) None else Some(threshold / GraftBridge.estimatedRowBytes(schema))
   }
 
   /** Compute `df` now and cut its lineage: the one materialization rule
@@ -76,9 +89,15 @@ object Tuning {
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true` is set; a
     * job that materializes repeatedly should set it, or point the
     * checkpoint dir at a per-run path it deletes afterwards.
+    *
+    * A frame whose optimized plan is a `LocalRelation` (a driver path's
+    * result, or a projection of one) comes back as it is, with no job:
+    * its rows are already held on the driver, so there is no lineage to
+    * cut.
     */
   def materialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) df
+    else if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint()
 
   /** Run `body` with SQL confs temporarily overridden, restoring the

@@ -57,15 +57,15 @@ object GraftBridge {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       catalyst.plans.logical.LocalRelation(catalyst.types.DataTypeUtils.toAttributes(schema), rows))
 
-  /** Catalyst's size estimate for one row of `df`, in bytes
+  /** Catalyst's size estimate for one row of `schema`, in bytes
     * (`EstimationUtils.getSizePerRow`: 8 bytes of row overhead plus each
     * column type's default size): the per-row figure Spark multiplies by
     * a row count when it sizes a relation against
     * `spark.sql.autoBroadcastJoinThreshold`.
     */
-  def estimatedRowBytes(df: Dataset[Row]): Long =
+  def estimatedRowBytes(schema: types.StructType): Long =
     catalyst.plans.logical.statsEstimation.EstimationUtils.getSizePerRow(
-      df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed.output).toLong
+      catalyst.types.DataTypeUtils.toAttributes(schema)).toLong
 
   /** Wrap a one-row/one-column DataFrame as an uncorrelated scalar
     * subquery expression — the vehicle Spark's own runtime row-level

@@ -5,19 +5,54 @@ package graft
   * stray shuffles) must hold on the sf0.001 plans. A regression — a filter
   * that stops pushing, a dim join degrading to sort-merge, a top-k turning
   * into a global sort — fails `sbt test`, not just a human reading the
-  * PlanCheck report.
+  * PlanCheck report. The same pass is the construction-job census: no
+  * query may run more Spark jobs while its DataFrame is built than its
+  * checked-in ceiling.
   */
 class PlanGateSpec extends SparkSpec {
-  // ONE planning pass shared by both gate tests — some gate queries run
-  // real work (eager checkpoints, staging) just to build their DataFrame
+  private val sfDir = "/root/testdata/sf0.001"
+
+  /** The Spark jobs each query's DataFrame ran while it was built, in
+    * the planning pass.
+    */
+  private val buildJobs = scala.collection.concurrent.TrieMap.empty[String, Int]
+
+  // ONE planning pass shared by the gate tests — some gate queries run
+  // real work (eager checkpoints, staging) just to build their DataFrame.
+  // Registered tables hand `Tables.load` its schema, so no
+  // footer-inference job counts as a build job, whatever ran earlier in
+  // this JVM.
   private lazy val plans = {
     initLog()
-    PlanCheck.planStrings(spark, "/root/testdata/sf0.001")
+    val s = spark.newSession()
+    Tables.register(s, sfDir)
+    PlanCheck.planStrings(s, sfDir, (name, build) => {
+      val (df, jobs) = jobsUnderGroup(build())
+      buildJobs(name) = jobs
+      df
+    })
   }
 
   test("audited physical plans keep their scale invariants at sf0.001") {
     val violations = PlanCheck.audit(plans)
     assert(violations.isEmpty, "\n" + violations.mkString("\n"))
+  }
+
+  test("no driver query builds its DataFrame in more jobs than its ceiling") {
+    // build_jobs.tsv: `query<TAB>ceiling`, the build jobs each query ran
+    // at sf0.001 in a fresh JVM. A change that adds construction jobs
+    // fails here; one that removes some lowers the ceiling.
+    plans
+    val ceilings = scala.io.Source.fromResource("build_jobs.tsv").getLines()
+      .filterNot(l => l.isEmpty || l.startsWith("#"))
+      .map(_.split('\t')).map(f => f(0) -> f(1).toInt).toMap
+    val unknown = ceilings.keySet -- SparkEntry.queries.keySet
+    assert(unknown.isEmpty, s"ceilings for unknown queries: $unknown")
+    val over = buildJobs.toSeq.sortBy(_._1).collect {
+      case (q, n) if ceilings.get(q).forall(n > _) =>
+        s"$q\t$n (ceiling ${ceilings.get(q).fold("none")(_.toString)})"
+    }
+    assert(over.isEmpty, "\n" + over.mkString("\n"))
   }
 
   test("rules only reference real driver queries") {
@@ -41,7 +76,7 @@ class PlanGateSpec extends SparkSpec {
     // the reused stage is duplicated. This is a RUNTIME property the
     // static PlanCheck audit cannot see, so it is pinned here on the
     // finalized adaptive plan.
-    val df = ops.DialectQueries.tsqlDistinctTopPercent.fn(spark, "/root/testdata/sf0.001")
+    val df = ops.DialectQueries.tsqlDistinctTopPercent.fn(spark, sfDir)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("isFinalPlan=true"), "expected a finalized adaptive plan")

@@ -95,7 +95,25 @@ class DedupSpec extends SparkSpec {
     assert(math.abs(out.head.getAs[Double]("jaccard") - 15.0 / 21.0) < 1e-12)
   }
 
-  test("prefixFilteredJaccardPairs equals brute force on a randomized corpus") {
+  /** Whether `df` is a driver path's result: a local relation. */
+  private def onDriver(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** Whether the session threshold lets a broadcast-sized input take a
+    * driver path ([[bothPathsTest]] runs its second registration at -1).
+    */
+  private def driverPathsOn: Boolean =
+    spark.sessionState.conf.autoBroadcastJoinThreshold >= 0
+
+  /** Every column of every row, binary values as byte sequences. */
+  private def rowSet(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    df.collect().map(r => (0 until r.length).map(r.get(_) match {
+      case b: Array[Byte] => b.toSeq
+      case v => v
+    })).toSet
+
+  bothPathsTest("prefixFilteredJaccardPairs equals brute force on a randomized corpus") {
     // 40 docs over a small token universe (forced overlaps: shared prefixes,
     // common stop-tokens, exact dups) — seeds chosen so every similarity
     // band is populated
@@ -110,7 +128,9 @@ class DedupSpec extends SparkSpec {
       if (t == null) texts(i - 1) else t }
     val docs = mkDocs(fixed)
     for (tPpm <- Seq(300000L, 500000L, 800000L)) {
-      val got = Dedup.prefixFilteredJaccardPairs(docs, tPpm)
+      val pairs = Dedup.prefixFilteredJaccardPairs(docs, tPpm)
+      assert(onDriver(pairs) === driverPathsOn, s"threshold $tPpm")
+      val got = pairs
         .select("a_id", "b_id", "common").orderBy("a_id", "b_id")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       // brute force: full inverted-index pairs, thresholded with the same
@@ -128,6 +148,79 @@ class DedupSpec extends SparkSpec {
       assert(got === brute, s"threshold $tPpm: prefix-filtered != brute force")
       assert(brute.nonEmpty, s"threshold $tPpm: degenerate test corpus")
     }
+  }
+
+  bothPathsTest("prefixFilteredJaccardPairs pairs string, int, decimal, binary and null ids alike") {
+    // docs 0 and 1 are copies, doc 2 adds two words (10 shingles, 8 of
+    // them shared: jaccard 0.8), doc 3 shares nothing, and a null-id copy
+    // counts toward document frequencies but never pairs. The rows come
+    // in a shuffled order, and the ids of each type are listed ascending
+    // under Catalyst's ordering: 9 < 10 < 200 < 3000 as ints, not as text
+    val shared = (1 to 10).map(i => s"w$i").mkString(" ")
+    val texts = Seq(shared, shared, shared + " x y", "q r s t u")
+    val types = Seq(
+      "string" -> Seq("b", "bb", "c", "x"),
+      "int" -> Seq("9", "10", "200", "3000"),
+      "decimal(6,2)" -> Seq("2.25", "3.00", "10.50", "11.00"),
+      "binary" -> Seq("a", "b", "c", "d"))
+    types.foreach { case (t, ids) =>
+      val docs = (Seq(2, 0, 3, 1).map(i => (ids(i), texts(i))) :+ ((null: String) -> shared))
+        .toDF("doc_id", "text").select(col("doc_id").cast(t), col("text"))
+      val pairs = Dedup.prefixFilteredJaccardPairs(docs)
+      assert(onDriver(pairs) === driverPathsOn, t)
+      assert(pairs.schema ===
+        withBroadcastThreshold(-1)(Dedup.prefixFilteredJaccardPairs(docs)).schema, t)
+      val id = ids.toDF("v").select(col("v").cast(t)).collect().map(_.get(0) match {
+        case b: Array[Byte] => b.toSeq
+        case v => v
+      })
+      assert(rowSet(pairs) === Set(Seq(id(0), id(1), 8L, 8L, 8L, 1.0),
+        Seq(id(0), id(2), 8L, 8L, 10L, 0.8), Seq(id(1), id(2), 8L, 8L, 10L, 0.8)), t)
+    }
+  }
+
+  bothPathsTest("prefixFilteredJaccardPairs returns the Spark path's rows for duplicate ids") {
+    // id 1 names two documents: the Spark path's window and verify joins
+    // read them as one id, and the driver path leaves such input to it
+    val shared = (1 to 10).map(i => s"w$i").mkString(" ")
+    val docs = Seq((1L, shared), (1L, shared + " x y"), (2L, shared), (3L, "q r s t u"))
+      .toDF("doc_id", "text")
+    val pairs = Dedup.prefixFilteredJaccardPairs(docs)
+    assert(!onDriver(pairs))
+    val spark1 = withBroadcastThreshold(-1)(rowSet(Dedup.prefixFilteredJaccardPairs(docs)))
+    assert(rowSet(pairs) === spark1 && spark1.nonEmpty)
+  }
+
+  test("prefixFilteredJaccardPairs takes the driver path exactly up to the broadcast threshold") {
+    // four docs of 18 shingles: 72 token rows of 8 + 8 (doc_id) + 8 (n)
+    // + 8 (s) estimated bytes each, so 2,304 bytes fit and 2,303 do not;
+    // the seven shared prefix tokens bound the candidates at 7 pairs
+    // (392 bytes), which fits at both
+    val docs = mkDocs(Seq(base, nearDup, unrelated, unrelated2))
+    def run(t: Long) = withBroadcastThreshold(t) {
+      val pairs = Dedup.prefixFilteredJaccardPairs(docs)
+      (onDriver(pairs), pairs.schema, rowSet(pairs))
+    }
+    val (atCapLocal, atCapSchema, atCap) = run(2304)
+    val (overCapLocal, overCapSchema, overCap) = run(2303)
+    assert(atCapLocal && !overCapLocal)
+    assert(atCapSchema === overCapSchema)
+    assert(atCap === overCap && atCap === Set(Seq(0L, 1L, 15L, 18L, 18L, 15.0 / 21.0)))
+  }
+
+  test("prefixFilteredJaccardPairs leaves a candidate set over the threshold to the Spark path") {
+    // 40 copies of one 2-shingle text: 80 token rows (2,560 bytes) fit a
+    // 10,000-byte threshold, but both tokens sit in all 40 prefixes, so
+    // the candidate bound is 2 · C(40, 2) = 1,560 pair rows of 56 bytes
+    val docs = mkDocs(Seq.fill(40)("a b c d"))
+    def run(t: Option[Long]) = {
+      def go = { val p = Dedup.prefixFilteredJaccardPairs(docs); (onDriver(p), rowSet(p)) }
+      t.fold(go)(withBroadcastThreshold(_)(go))
+    }
+    val (bigLocal, driverRows) = run(None)
+    val (smallLocal, sparkRows) = run(Some(10000L))
+    assert(bigLocal && !smallLocal)
+    assert(sparkRows === driverRows && driverRows.size == 780)
   }
 
   test("decontaminate flags exactly the docs sharing a shingle with the blocklist") {
@@ -531,7 +624,7 @@ class DedupSpec extends SparkSpec {
     assert(rows.head.getDouble(2) === 1.0)       // doc 1 is an exact copy
   }
 
-  test("thresholdSweep: monotone counts, each row ≡ an independent pair query") {
+  bothPathsTest("thresholdSweep: monotone counts, each row ≡ an independent pair query") {
     val docs = graft.Tables.load(spark, "/root/testdata/sf0.01", "documents")
       .filter(org.apache.spark.sql.functions.col("doc_id") < 300)
     val thresholds = Seq(500000L, 700000L, 900000L)

@@ -160,10 +160,10 @@ class TextAnalysisSpec extends SparkSpec {
     val (atCap, driverJobs) = run(180)
     val (overCap, loopJobs) = run(179)
     assert(atCap === overCap && atCap.length == 4)
-    // driver path: the vocab checkpoint (its shuffle map stage and the
-    // checkpoint itself) and the bounded collect; the loop adds a
-    // checkpointed argmax per round
-    assert(driverJobs <= 4, s"driver path built in $driverJobs jobs")
+    // driver path: the bounded collect of the vocab collapse (its
+    // shuffle map stage and a partition scan); the loop adds the vocab
+    // checkpoint and a checkpointed argmax per round
+    assert(driverJobs <= 2, s"driver path built in $driverJobs jobs")
     assert(loopJobs >= 10, s"loop path built in $loopJobs jobs")
   }
 

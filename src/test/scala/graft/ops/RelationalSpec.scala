@@ -376,17 +376,21 @@ class RelationalSpec extends SparkSpec {
   test("iterative queries build and collect in pinned job counts every time") {
     // (build jobs, collect jobs) over registered sf0.001 tables, where
     // every one of these queries takes its operator's driver path; the
-    // loop built op_graph_pagerank in 30 jobs and each BPE query in 46.
+    // loop built op_graph_pagerank in 30 jobs and each BPE query in 46,
+    // and the Spark path of the similarity join built
+    // llm_dedup_cluster_stats in 8 and llm_dedup_minhash_ml in 16.
     // The driver paths return their local relations uncheckpointed
-    // (op_graph_components keeps its checkpoint of the join to `nodes`).
+    // (op_graph_components keeps its checkpoint of the join to `nodes`),
+    // and BPE's bounded collect reads its vocab collapse unmaterialized.
     // Registered tables hand `Tables.load` its schema, so no
     // footer-inference job counts, whatever ran earlier in this JVM.
     val pins = Seq(
       "op_graph_components" -> (6, 3),
       "op_graph_pagerank" -> (2, 3),
-      "llm_bpe_learn" -> (3, 3),
-      "llm_bpe_pipeline" -> (3, 7),
-      "llm_dedup_cluster_stats" -> (8, 5))
+      "llm_bpe_learn" -> (2, 3),
+      "llm_bpe_pipeline" -> (2, 7),
+      "llm_dedup_cluster_stats" -> (3, 5),
+      "llm_dedup_minhash_ml" -> (10, 13))
     // the ceiling a driver path must keep its build under
     val buildCeiling = Set("op_graph_pagerank", "llm_bpe_learn", "llm_bpe_pipeline")
     val (s, dir) = (spark.newSession(), "/root/testdata/sf0.001")

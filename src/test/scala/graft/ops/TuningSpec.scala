@@ -1,13 +1,16 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.{col, greatest, lit}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** [[Tuning.loopPartitions]] takes its row count by name: the count is a
   * Spark job, and at a session no wider than the floor it cannot change
   * the width, so it must not run there. [[Tuning.loop]] is the scaffold of
   * the distributed loops: its conf, caches, rounds and job descriptions
-  * must come back whatever the loop body does.
+  * must come back whatever the loop body does. [[Tuning.materialize]]
+  * runs no job for rows the driver already holds.
   */
 class TuningSpec extends SparkSpec {
 
@@ -27,6 +30,24 @@ class TuningSpec extends SparkSpec {
     assert(evaluated)
     assert(Tuning.loopPartitions(10000000L, 16) == 16)
     assert(Tuning.loopPartitions(750000L, 16) == 8)
+  }
+
+  test("materialize leaves a local relation as it is, with or without a checkpoint dir") {
+    initLog()
+    val local = org.apache.spark.sql.GraftBridge.localFrame(spark,
+      org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, v STRING"),
+      Seq(InternalRow(1L, UTF8String.fromString("a")), InternalRow(2L, null)))
+    // a projection over it is a local relation too once optimized
+    Seq(local, local.select((col("id") + 1).as("id"), col("v"))).foreach { df =>
+      val rows = df.collect().toSeq
+      Seq(false, true).foreach { reliable =>
+        def run = jobsUnderGroup(Tuning.materialize(df))
+        val (out, jobs) = if (reliable) withCheckpointDir(run) else run
+        assert(jobs === 0, s"reliable = $reliable")
+        assert(out eq df)
+        assert(out.collect().toSeq === rows)
+      }
+    }
   }
 
   test("loop sets the AQE cache flag while it runs and unsets it after") {
