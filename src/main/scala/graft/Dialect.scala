@@ -504,7 +504,8 @@ object Dialect {
 
   /** T-SQL-ish (SQL Server) surface: `SELECT TOP n` → LIMIT (subquery-
     * and UNION-aware placement), `[bracket]` identifiers → backticks,
-    * `CONVERT(type, expr)` → CAST with SQL Server type names mapped,
+    * `CONVERT(type, expr)` → CAST and `CAST`/`TRY_CAST` with SQL Server
+    * type names mapped,
     * `DATEADD`/`DATEDIFF`/`DATEPART` with T-SQL part abbreviations
     * (DATEDIFF counts boundary crossings; weeks roll at Sunday per
     * `@@DATEFIRST = 7`), `OFFSET n ROWS FETCH NEXT m ROWS ONLY` →
@@ -526,7 +527,7 @@ object Dialect {
     // STRING_SPLIT call lies inside the APPLY site, so that site applies
     // the string_split entry to the call it emits.
     override private[graft] val table = Table(Seq(rewriteTsqlPivot, tsqlApply(stringSplit(_)), stringSplit,
-      tsqlConvert, tsqlDateAdd, tsqlDateDiff, tsqlDatePart, tsqlLen),
+      tsqlConvert, tsqlCast, tsqlDateAdd, tsqlDateDiff, tsqlDatePart, tsqlLen),
       renames = Map(
         "isnull" -> "coalesce", "iif" -> "if", "charindex" -> "locate",
         "getdate" -> "current_timestamp",
@@ -700,8 +701,9 @@ object Dialect {
 
   /** Exasol-ish surface — Oracle-family SQL with Exasol's date-arithmetic
     * function set: `ADD_DAYS`/`ADD_WEEKS`/`ADD_MONTHS`/`ADD_YEARS`/
-    * `ADD_HOURS`/`ADD_MINUTES`/`ADD_SECONDS` (type-preserving on DATE for
-    * the day-granular forms, timestamp for the sub-day ones),
+    * `ADD_HOURS`/`ADD_MINUTES`/`ADD_SECONDS` (type-preserving: a DATE
+    * stays a DATE and a TIMESTAMP keeps its time of day; the sub-day
+    * forms return TIMESTAMP),
     * `DAYS_BETWEEN`/`HOURS_BETWEEN`/`MINUTES_BETWEEN`/`SECONDS_BETWEEN`
     * (first-minus-second ordering; the sub-day forms return fractional
     * values like Exasol's DECIMAL results), `TO_CHAR`/`TO_DATE` templates
@@ -971,45 +973,6 @@ object Dialect {
     */
   private[graft] val rewriteIntDiv: Pass = tokens("//".r)(_ => " DIV ")
 
-  /** C strftime codes → Java SimpleDateFormat-style pattern for
-    * `date_format`. Literal letters are quoted ('T'), `'` becomes `''`.
-    * Unknown `%` codes raise [[graft.UnsupportedError]] (a silently wrong
-    * format string is worse than an error).
-    */
-  private[graft] def translateStrftimeFormat(fmt: String): String = {
-    val codes = Map(
-      'Y' -> "yyyy", 'y' -> "yy", 'm' -> "MM", 'd' -> "dd",
-      'H' -> "HH", 'I' -> "hh", 'M' -> "mm", 'S' -> "ss",
-      'j' -> "DDD", 'a' -> "EEE", 'A' -> "EEEE", 'b' -> "MMM",
-      'B' -> "MMMM", 'p' -> "a", 'f' -> "SSSSSS", 'Z' -> "zz", 'z' -> "xx")
-    val out = new StringBuilder
-    val lit = new StringBuilder
-    // literal runs are quoted as ONE section: per-char quoting would emit
-    // 'd''a''y', which Java reads as d-quote-a-quote-y ('' = literal quote)
-    def flush(): Unit = if (lit.nonEmpty) {
-      val s = lit.toString
-      if (s.exists(_.isLetter)) out.append('\'').append(s.replace("'", "''")).append('\'')
-      else out.append(s.replace("'", "''"))
-      lit.clear()
-    }
-    var i = 0
-    while (i < fmt.length) {
-      val c = fmt.charAt(i)
-      if (c == '%' && i + 1 < fmt.length) {
-        val code = fmt.charAt(i + 1)
-        if (code == '%') { lit.append('%'); i += 2 }
-        else {
-          flush()
-          out.append(codes.getOrElse(code,
-            throw new graft.UnsupportedError(s"strftime code %$code is not supported")))
-          i += 2
-        }
-      } else { lit.append(c); i += 1 }
-    }
-    flush()
-    out.toString
-  }
-
   /** The innermost parenthesized span enclosing position `at`:
     * Some((open, close)) indices of the paren pair, None at depth 0 or
     * on unbalanced text.
@@ -1088,14 +1051,11 @@ object Dialect {
   private[graft] val strftime: Calls = Calls("strftime") { (_, args) =>
     if (args.length != 2)
       throw new graft.UnsupportedError("strftime expects (expr, 'format')")
-    val fmt = args(1) match {
-      case SingleLiteral(f) => translateStrftimeFormat(f)
+    args(1) match {
+      case SingleLiteral(f) => Some(s"date_format(${args(0)}, ${formatLiteral(f, StrftimeFormat)})")
       case _ => throw new graft.UnsupportedError(
         "strftime format must be a string literal")
     }
-    // the Java pattern may itself contain quotes ('day 'dd) — double
-    // them so the embedded SQL literal stays balanced
-    Some("date_format(" + args(0) + ", '" + fmt.replace("'", "''") + "')")
   }
 
   /** `string_split(s, sep)` → `split(s, <regex>)`. DuckDB's separator is a
@@ -2634,64 +2594,96 @@ object Dialect {
       }
     }
 
-  // ---- Snowflake constructs -----------------------------------------------
+  // ---- date and time vocabulary ------------------------------------------
+  //
+  // One part canonicalizer, one add spelling, one boundary-diff emitter and
+  // one format translator; each dialect supplies data (its part names, its
+  // format tokens), not code.
 
-  /** Normalize a Snowflake date-part argument: optionally quoted, many
-    * abbreviations (dd, mon, yyyy …) per Snowflake's docs.
-    */
-  private def snowPart(arg: String, fn: String): String = {
-    val p = arg.stripPrefix("'").stripSuffix("'").toLowerCase
-    val canon = Map(
-      "day" -> "day", "d" -> "day", "dd" -> "day", "dayofmonth" -> "day",
-      "week" -> "week", "w" -> "week", "wk" -> "week",
-      "month" -> "month", "mm" -> "month", "mon" -> "month",
-      "quarter" -> "quarter", "q" -> "quarter", "qtr" -> "quarter",
-      "year" -> "year", "y" -> "year", "yy" -> "year", "yyyy" -> "year",
-      "hour" -> "hour", "hh" -> "hour",
-      "minute" -> "minute", "mi" -> "minute",
-      "second" -> "second", "s" -> "second", "ss" -> "second")
-    canon.getOrElse(p,
-      throw new graft.UnsupportedError(s"$fn date part '$p' is not supported"))
-  }
+  /** The canonical date parts every dialect's part names map into. */
+  private[graft] val DateParts: Set[String] = Set("year", "quarter", "month", "week", "day",
+    "hour", "minute", "second", "dayofyear", "weekday")
 
-  /** Snowflake `DATEADD(part, n, expr)`. day/week/month/quarter/year keep
-    * DATE inputs DATE (date_add/add_months), sub-day parts go through
-    * `timestampadd`.
+  /** One dialect's date-part names. `aliases` maps each accepted spelling
+    * (lowercase) to its canonical part in [[DateParts]]; the maps stay per
+    * dialect because they disagree (`m` is month in T-SQL and minute in
+    * Redshift, and T-SQL's `y` is day-of-year). `weekAnchor` is a
+    * first-day-of-week date far in the past, where the dialect's DATEDIFF
+    * weeks roll (proleptic 0001-01-01 is a Monday, 0001-01-07 a Sunday),
+    * so a DIV 7 never sees a negative dividend. `quoted` demands the
+    * `'part'` literal form; otherwise the quotes are optional.
     */
-  /** Spark spelling of part-wise date addition — shared by the Snowflake
-    * and T-SQL DATEADD rewrites (identical (part, n, expr) signature and
-    * calendar semantics in both dialects).
-    */
-  private def dateAddExpr(part: String, n: String, x: String): String =
-    part match {
-      case "day" => s"date_add($x, ($n))"
-      case "week" => s"date_add($x, 7 * ($n))"
-      case "month" => s"add_months($x, ($n))"
-      case "quarter" => s"add_months($x, 3 * ($n))"
-      case "year" => s"add_months($x, 12 * ($n))"
-      case sub => s"timestampadd(${sub.toUpperCase}, ($n), $x)"
+  private[graft] final case class PartNames(aliases: Map[String, String],
+      weekAnchor: String = "0001-01-07", quoted: Boolean = false) {
+    require(aliases.values.forall(p => DateParts(p) && aliases.get(p).contains(p)))
+
+    /** The canonical part `arg` names in a call of `fn`; unknown names raise. */
+    def apply(arg: String, fn: String): String = {
+      val isQuoted = arg.length >= 2 && arg.head == '\'' && arg.last == '\''
+      if (quoted && !isQuoted)
+        throw new graft.UnsupportedError(s"$fn expects a quoted date-part literal, got: $arg")
+      val p = (if (isQuoted) arg.substring(1, arg.length - 1) else arg).toLowerCase(java.util.Locale.ROOT)
+      aliases.getOrElse(p, throw new graft.UnsupportedError(s"$fn date part '$p' is not supported"))
     }
-
-  private[graft] val snowDateAdd: Calls = Calls("dateadd") { (fn, args) =>
-    if (args.length != 3)
-      throw new graft.UnsupportedError(s"$fn expects (part, n, expr)")
-    Some(dateAddExpr(snowPart(args(0), fn), args(1), args(2)))
   }
 
-  /** Count of `part` boundaries crossed from `start` to `end` — Snowflake's
-    * and BigQuery's DATEDIFF/DATE_DIFF semantics (2 months minus 1 day is
-    * still 2 month boundaries), NOT Spark `timestampdiff`'s complete
-    * intervals. Exact calendar arithmetic, no epoch math. `dayFn` picks
-    * which Spark spelling (`date_diff` vs `datediff`) to emit. `weekAnchor`
-    * is a day-1-of-week date far in the past (proleptic 0001-01-01 is a
-    * Monday) so the DIV 7 never sees a negative dividend.
+  /** Part names from `part -> "its other spellings"` pairs; each part also names itself. */
+  private def partNames(spellings: (String, String)*): Map[String, String] =
+    spellings.flatMap { case (p, more) => (p +: more.split(' ').filter(_.nonEmpty)).map(_ -> p) }.toMap
+
+  /** Snowflake's part names (its abbreviation table); weeks start Monday,
+    * Snowflake's WEEK_START = 0 default.
     */
-  private def boundaryDateDiff(part: String, start: String, end: String,
-      weekAnchor: String, dayFn: String): String =
+  private[graft] val SnowParts = PartNames(partNames("day" -> "d dd dayofmonth", "week" -> "w wk",
+    "month" -> "mm mon", "quarter" -> "q qtr", "year" -> "y yy yyyy", "hour" -> "hh",
+    "minute" -> "mi", "second" -> "s ss"), weekAnchor = "0001-01-01")
+
+  /** SQL Server's part names; weeks roll at Sunday (`@@DATEFIRST = 7`). */
+  private[graft] val TsqlParts = PartNames(partNames("year" -> "yy yyyy", "quarter" -> "qq q",
+    "month" -> "mm m", "week" -> "wk ww", "day" -> "dd d", "hour" -> "hh", "minute" -> "mi n",
+    "second" -> "ss s"))
+
+  /** Redshift's part names, plurals and abbreviations; weeks roll at Sunday. */
+  private[graft] val RsParts = PartNames(partNames("day" -> "days d", "week" -> "weeks w",
+    "month" -> "months mon mons", "quarter" -> "quarters qtr qtrs", "year" -> "years y yr yrs",
+    "hour" -> "hours h hr hrs", "minute" -> "minutes m min mins",
+    "second" -> "seconds s sec secs"))
+
+  /** BigQuery's part names (no abbreviations); weeks start Sunday, its WEEK default. */
+  private[graft] val BqParts = PartNames(partNames(
+    Seq("year", "quarter", "month", "week", "day", "hour", "minute", "second").map(_ -> ""): _*))
+
+  /** Tableau's part names: quoted literals only; weeks start Sunday, its default. */
+  private[graft] val TableauParts = PartNames(partNames(DateParts.toSeq.map(_ -> ""): _*), quoted = true)
+
+  /** `x` plus `n` of canonical `part`, keeping the type of `x`: a DATE
+    * stays a DATE, a TIMESTAMP or TIMESTAMP_NTZ keeps its time of day,
+    * month arithmetic clamps to the month's end (2024-01-31 plus a month
+    * is 2024-02-29) and a NULL `n` gives NULL. A string `x` gives the
+    * timestamp's string. Sub-day parts go through `timestampadd`: Spark
+    * refuses a DATE plus an interval with a time part.
+    */
+  private[graft] def dateAdd(part: String, n: String, x: String): String = part match {
+    case "year" => s"(($x) + make_interval(($n)))"
+    case "quarter" => s"(($x) + make_interval(0, 3 * ($n)))"
+    case "month" => s"(($x) + make_interval(0, ($n)))"
+    case "week" => s"(($x) + make_interval(0, 0, ($n)))"
+    case "day" => s"(($x) + make_interval(0, 0, 0, ($n)))"
+    case "hour" | "minute" | "second" => s"timestampadd(${part.toUpperCase}, ($n), $x)"
+    case p => throw new graft.UnsupportedError(s"date part '$p' is not supported in DATEADD")
+  }
+
+  /** Count of canonical `part` boundaries crossed from `start` to `end`:
+    * the DATEDIFF of Snowflake, T-SQL, Redshift, Tableau and BigQuery (2
+    * months minus 1 day is still 2 month boundaries), NOT Spark
+    * `timestampdiff`'s complete intervals. Exact calendar arithmetic, no
+    * epoch math; weeks roll at `weekAnchor` ([[PartNames]]).
+    */
+  private[graft] def dateDiff(part: String, start: String, end: String, weekAnchor: String): String =
     part match {
-      case "day" => s"$dayFn(($end), ($start))"
+      case "day" => s"date_diff(($end), ($start))"
       case "week" =>
-        s"(($dayFn(($end), DATE '$weekAnchor') DIV 7) - ($dayFn(($start), DATE '$weekAnchor') DIV 7))"
+        s"((date_diff(($end), DATE '$weekAnchor') DIV 7) - (date_diff(($start), DATE '$weekAnchor') DIV 7))"
       case "month" =>
         s"((year($end) * 12 + month($end)) - (year($start) * 12 + month($start)))"
       case "quarter" =>
@@ -2701,45 +2693,107 @@ object Dialect {
         throw new graft.UnsupportedError(s"date part '$sub' is not supported in DATEDIFF")
     }
 
-  /** Snowflake `DATEDIFF(part, start, end)` (boundary crossings; weeks start
-    * Monday — Snowflake's WEEK_START=0 ISO-like default).
-    */
-  private[graft] val snowDateDiff: Calls = Calls("datediff") { (fn, args) =>
+  /** `DATEADD(part, n, expr)` over one dialect's part names. */
+  private def dateAddCall(parts: PartNames): Calls = Calls("dateadd") { (fn, args) =>
     if (args.length != 3)
-      throw new graft.UnsupportedError(s"$fn expects (part, start, end)")
-    Some(boundaryDateDiff(snowPart(args(0), fn), args(1), args(2), "0001-01-01", "date_diff"))
+      throw new graft.UnsupportedError(s"$fn expects (part, n, expr)")
+    Some(dateAdd(parts(args(0), fn), args(1), args(2)))
   }
 
-  /** Snowflake date format elements → Java pattern, longest token first
-    * (HH24 before HH, MON before MM). Unknown letters raise.
+  /** `DATEDIFF(part, start, end)` over one dialect's part names. */
+  private def dateDiffCall(parts: PartNames): Calls = Calls("datediff") { (fn, args) =>
+    if (args.length != 3)
+      throw new graft.UnsupportedError(s"$fn expects (part, start, end)")
+    Some(dateDiff(parts(args(0), fn), args(1), args(2), parts.weekAnchor))
+  }
+
+  /** A date-format vocabulary: `tokens` with their Java patterns, tried
+    * in order at each position (a token that prefixes another comes after
+    * it). In a `percent` vocabulary `%` starts a code, `%%` is a literal
+    * `%` and every other character is literal; otherwise each letter must
+    * start a token (in any case when `caseless`) and the rest is literal.
+    * Unknown elements raise: a silently wrong format is worse than an
+    * error.
     */
-  private[graft] def translateSnowflakeFormat(fmt: String): String = {
-    val tokens = Seq(
-      "YYYY" -> "yyyy", "YY" -> "yy", "MON" -> "MMM", "MM" -> "MM",
-      "DY" -> "EEE", "DD" -> "dd", "HH24" -> "HH", "HH12" -> "hh",
-      "HH" -> "HH", "MI" -> "mm", "SS" -> "ss", "AM" -> "a", "PM" -> "a")
+  private[graft] final case class DateFormat(name: String, tokens: Seq[(String, String)],
+      percent: Boolean = false, caseless: Boolean = false)
+
+  /** C strftime codes (DuckDB, SQLite, BigQuery). */
+  private[graft] val StrftimeFormat = DateFormat("strftime", Seq(
+    "%Y" -> "yyyy", "%y" -> "yy", "%m" -> "MM", "%d" -> "dd",
+    "%H" -> "HH", "%I" -> "hh", "%M" -> "mm", "%S" -> "ss",
+    "%j" -> "DDD", "%a" -> "EEE", "%A" -> "EEEE", "%b" -> "MMM",
+    "%B" -> "MMMM", "%p" -> "a", "%f" -> "SSSSSS", "%Z" -> "zz", "%z" -> "xx"), percent = true)
+
+  /** MySQL's codes (MySQL, Trino, ClickHouse). NOT the C strftime table:
+    * `%i` is minutes (strftime `%M`), `%M` is the month NAME, `%s`/`%S`
+    * are both seconds, `%c`/`%e` are unpadded month/day.
+    */
+  private[graft] val MysqlFormat = DateFormat("MySQL", Seq(
+    "%Y" -> "yyyy", "%y" -> "yy", "%m" -> "MM", "%c" -> "M",
+    "%d" -> "dd", "%e" -> "d", "%H" -> "HH", "%k" -> "H",
+    "%h" -> "hh", "%I" -> "hh", "%i" -> "mm", "%s" -> "ss", "%S" -> "ss",
+    "%p" -> "a", "%M" -> "MMMM", "%b" -> "MMM", "%a" -> "EEE", "%W" -> "EEEE",
+    "%j" -> "DDD", "%f" -> "SSSSSS", "%T" -> "HH:mm:ss", "%r" -> "hh:mm:ss a"), percent = true)
+
+  /** Snowflake's format elements, in any case (HH24 before HH, MON before MM). */
+  private[graft] val SnowFormat = DateFormat("TO_VARCHAR", Seq(
+    "YYYY" -> "yyyy", "YY" -> "yy", "MON" -> "MMM", "MM" -> "MM",
+    "DY" -> "EEE", "DD" -> "dd", "HH24" -> "HH", "HH12" -> "hh",
+    "HH" -> "HH", "MI" -> "mm", "SS" -> "ss", "AM" -> "a", "PM" -> "a"), caseless = true)
+
+  /** Postgres/Oracle TO_CHAR template patterns, case-sensitive (HH24
+    * before HH12 before bare HH, which is an alias for HH12; Month before
+    * Mon before MM).
+    */
+  private[graft] val PgFormat = DateFormat("TO_CHAR", Seq(
+    "HH24" -> "HH", "HH12" -> "hh", "HH" -> "hh",
+    "Month" -> "MMMM", "Mon" -> "MMM",
+    "YYYY" -> "yyyy", "YY" -> "yy", "MM" -> "MM", "DDD" -> "DDD",
+    "DD" -> "dd", "Day" -> "EEEE", "Dy" -> "EEE", "MI" -> "mm",
+    "SS" -> "ss", "MS" -> "SSS", "AM" -> "a", "PM" -> "a", "TZ" -> "z"))
+
+  /** `fmt` in `f`'s vocabulary as a Java pattern for `date_format`. Literal
+    * letters are quoted ('T') and `'` becomes `''`.
+    */
+  private[graft] def translateFormat(fmt: String, f: DateFormat): String = {
     val out = new StringBuilder
     val lit = new StringBuilder
+    // literal runs are quoted as ONE section: per-char quoting would emit
+    // 'd''a''y', which Java reads as d-quote-a-quote-y ('' = literal quote)
     def flush(): Unit = if (lit.nonEmpty) {
-      val s = lit.toString
-      if (s.exists(_.isLetter)) out.append('\'').append(s.replace("'", "''")).append('\'')
-      else out.append(s.replace("'", "''"))
+      val s = lit.toString.replace("'", "''")
+      out.append(if (s.exists(_.isLetter)) s"'$s'" else s)
       lit.clear()
     }
     var i = 0
     while (i < fmt.length) {
-      tokens.find { case (t, _) => fmt.regionMatches(true, i, t, 0, t.length) } match {
-        case Some((t, j)) => flush(); out.append(j); i += t.length
+      f.tokens.find { case (t, _) => fmt.regionMatches(f.caseless, i, t, 0, t.length) } match {
+        case Some((t, java)) => flush(); out.append(java); i += t.length
         case None =>
           val c = fmt.charAt(i)
-          if (c.isLetter)
-            throw new graft.UnsupportedError(s"TO_VARCHAR format element '$c' is not supported")
-          lit.append(c); i += 1
+          val code = f.percent && c == '%' && i + 1 < fmt.length
+          if (code && fmt.charAt(i + 1) == '%') { lit.append('%'); i += 2 }
+          else if (code || !f.percent && c.isLetter)
+            throw new graft.UnsupportedError(s"${f.name} format element " +
+              s"'${fmt.substring(i, if (code) i + 2 else i + 1)}' is not supported in '$fmt'")
+          else { lit.append(c); i += 1 }
       }
     }
     flush()
     out.toString
   }
+
+  /** [[translateFormat]] as a Spark string literal. */
+  private def formatLiteral(fmt: String, f: DateFormat): String =
+    "'" + translateFormat(fmt, f).replace("'", "''") + "'"
+
+  // ---- Snowflake constructs -----------------------------------------------
+
+  private[graft] val snowDateAdd: Calls = dateAddCall(SnowParts)
+
+  /** Snowflake `DATEDIFF(part, start, end)`: boundary crossings, weeks from Monday. */
+  private[graft] val snowDateDiff: Calls = dateDiffCall(SnowParts)
 
   /** Snowflake `TO_VARCHAR(x)` → CAST AS STRING; `TO_VARCHAR(x, 'fmt')` →
     * `date_format` with the translated pattern (date/timestamp formats only;
@@ -2748,9 +2802,7 @@ object Dialect {
   private[graft] val toVarchar: Calls = Calls("to_varchar") { (fn, args) =>
     args match {
       case Seq(x) => Some(s"CAST($x AS STRING)")
-      case Seq(x, SingleLiteral(f)) =>
-        val java = translateSnowflakeFormat(f)
-        Some(s"date_format($x, '${java.replace("'", "''")}')")
+      case Seq(x, SingleLiteral(f)) => Some(s"date_format($x, ${formatLiteral(f, SnowFormat)})")
       case _ =>
         throw new graft.UnsupportedError(s"$fn expects (expr) or (expr, 'format')")
     }
@@ -2763,63 +2815,22 @@ object Dialect {
     */
   private[graft] val formatDate: Calls = Calls("format_date|format_timestamp") { (fn, args) =>
     args match {
-      case Seq(SingleLiteral(f), x) =>
-        val java = translateStrftimeFormat(f)
-        Some(s"date_format($x, '${java.replace("'", "''")}')")
+      case Seq(SingleLiteral(f), x) => Some(s"date_format($x, ${formatLiteral(f, StrftimeFormat)})")
       case _ =>
         throw new graft.UnsupportedError(s"$fn expects ('format', expr)")
     }
   }
 
   /** BigQuery `DATE_DIFF(end, start, PART)` — note end-first argument order
-    * and the trailing unquoted part; boundary-crossing semantics like
-    * Snowflake's DATEDIFF (weeks start Sunday, BigQuery's WEEK default —
-    * proleptic 0001-01-07 is a Sunday).
+    * and the trailing unquoted part; boundary crossings, weeks from Sunday.
     */
   private[graft] val bqDateDiff: Calls = Calls("date_diff|timestamp_diff") { (fn, args) =>
     if (args.length != 3)
       throw new graft.UnsupportedError(s"$fn expects (end, start, part)")
-    Some(boundaryDateDiff(snowPart(args(2), fn), args(1), args(0), "0001-01-07", "datediff"))
+    Some(dateDiff(BqParts(args(2), fn), args(1), args(0), BqParts.weekAnchor))
   }
 
   // ---- MySQL constructs ---------------------------------------------------
-
-  /** MySQL date format codes → Java pattern. NOT the C strftime table:
-    * `%i` is minutes (strftime `%M`), `%M` is the month NAME, `%s`/`%S` are
-    * both seconds, `%c`/`%e` are unpadded month/day. Unknown codes raise.
-    */
-  private[graft] def translateMysqlFormat(fmt: String): String = {
-    val codes = Map(
-      'Y' -> "yyyy", 'y' -> "yy", 'm' -> "MM", 'c' -> "M",
-      'd' -> "dd", 'e' -> "d", 'H' -> "HH", 'k' -> "H",
-      'h' -> "hh", 'I' -> "hh", 'i' -> "mm", 's' -> "ss", 'S' -> "ss",
-      'p' -> "a", 'M' -> "MMMM", 'b' -> "MMM", 'a' -> "EEE", 'W' -> "EEEE",
-      'j' -> "DDD", 'f' -> "SSSSSS", 'T' -> "HH:mm:ss", 'r' -> "hh:mm:ss a")
-    val out = new StringBuilder
-    val lit = new StringBuilder
-    def flush(): Unit = if (lit.nonEmpty) {
-      val s = lit.toString
-      if (s.exists(_.isLetter)) out.append('\'').append(s.replace("'", "''")).append('\'')
-      else out.append(s.replace("'", "''"))
-      lit.clear()
-    }
-    var i = 0
-    while (i < fmt.length) {
-      val c = fmt.charAt(i)
-      if (c == '%' && i + 1 < fmt.length) {
-        val code = fmt.charAt(i + 1)
-        if (code == '%') { lit.append('%'); i += 2 }
-        else {
-          flush()
-          out.append(codes.getOrElse(code,
-            throw new graft.UnsupportedError(s"MySQL format code %$code is not supported")))
-          i += 2
-        }
-      } else { lit.append(c); i += 1 }
-    }
-    flush()
-    out.toString
-  }
 
   private val MysqlCodeRe = """%[A-Za-z]""".r
 
@@ -2838,7 +2849,7 @@ object Dialect {
   private[graft] val mysqlDateFns: Calls = Calls("date_format|str_to_date") { (fn, args) =>
     args match {
       case Seq(x, SingleLiteral(f)) =>
-        val java = translateMysqlFormat(f).replace("'", "''")
+        val java = formatLiteral(f, MysqlFormat)
         if (fn.equalsIgnoreCase("str_to_date")) {
           if (MysqlCodeRe.findFirstIn(f).isEmpty)
             throw new graft.UnsupportedError(
@@ -2846,8 +2857,8 @@ object Dialect {
           val hasTime =
             MysqlCodeRe.findAllIn(f).exists(m => "HkhIisSTrf".contains(m.charAt(1)))
           val target = if (hasTime) "to_timestamp" else "to_date"
-          Some(s"$target($x, '$java')")
-        } else Some(s"date_format($x, '$java')")
+          Some(s"$target($x, $java)")
+        } else Some(s"date_format($x, $java)")
       case Seq(_, other) => throw new graft.UnsupportedError(
         s"$fn format must be a string literal, got: $other")
       case _ => throw new graft.UnsupportedError(s"$fn expects (expr, 'format')")
@@ -2925,22 +2936,26 @@ object Dialect {
     * `inferSchema` scans the file at planning time (the pandas-equivalent
     * behavior). View registration happens after matching — no side effects
     * inside the regex replace. The CSV scan stays a distributed Spark
-    * source — filters/pruning still push into it.
+    * source — filters/pruning still push into it. A READ_CSV inside a
+    * comment or a literal is text, not a call: it is left alone.
     */
   private[graft] def rewriteReadCsv(spark: SparkSession, sql: String,
       schemas: Map[String, StructType] = Map.empty): String = {
     var n = 0
     val pending = Seq.newBuilder[(String, String, String, Option[StructType])]
-    val rewritten = ReadCsvRe.replaceAllIn(sql, { m =>
-      val path = m.group(1)
-      val delim = Option(m.group(2)).getOrElse(",")
-      val alias = Option(m.group(3))
-      n += 1
-      val view = alias.getOrElse(s"__read_csv_$n")
-      pending += ((view, path, delim, alias.flatMap(schemas.get)))
-      // keep the alias binding intact for the surrounding SQL
-      java.util.regex.Matcher.quoteReplacement(
-        view + alias.map(a => s" AS $a").getOrElse(""))
+    lazy val spans = lex(sql)
+    val rewritten = ReadCsvRe.replaceSomeIn(sql, { m =>
+      Option.when(spans.outside(m.start)) {
+        val path = m.group(1)
+        val delim = Option(m.group(2)).getOrElse(",")
+        val alias = Option(m.group(3))
+        n += 1
+        val view = alias.getOrElse(s"__read_csv_$n")
+        pending += ((view, path, delim, alias.flatMap(schemas.get)))
+        // keep the alias binding intact for the surrounding SQL
+        java.util.regex.Matcher.quoteReplacement(
+          view + alias.map(a => s" AS $a").getOrElse(""))
+      }
     })
     pending.result().foreach { case (view, path, delim, schema) =>
       val reader = spark.read.option("header", "true").option("sep", delim)
@@ -2961,8 +2976,7 @@ object Dialect {
   private[graft] val sqliteStrftime: Calls = Calls("strftime") { (_, args) =>
     args match {
       case Seq(SingleLiteral(f), x) =>
-        Some(s"date_format(${x.trim}, " +
-          s"'${translateStrftimeFormat(f).replace("'", "''")}')")
+        Some(s"date_format(${x.trim}, ${formatLiteral(f, StrftimeFormat)})")
       case _ => throw new graft.UnsupportedError(
         "SQLite strftime expects ('format', expr)")
     }
@@ -2996,49 +3010,13 @@ object Dialect {
 
   // ---- Postgres-ish helpers ----------------------------------------------
 
-  /** Postgres TO_CHAR template patterns → Java date pattern. Longest match
-    * first (HH24 before HH12 before bare HH — Postgres HH is an alias for
-    * HH12; Month before Mon before MM … order matters only for same-prefix
-    * templates). Unknown alphabetic patterns raise.
-    */
-  private[graft] def translatePgFormat(fmt: String): String = {
-    val templates = Seq(
-      "HH24" -> "HH", "HH12" -> "hh", "HH" -> "hh",
-      "Month" -> "MMMM", "Mon" -> "MMM",
-      "YYYY" -> "yyyy", "YY" -> "yy", "MM" -> "MM", "DDD" -> "DDD",
-      "DD" -> "dd", "Day" -> "EEEE", "Dy" -> "EEE", "MI" -> "mm",
-      "SS" -> "ss", "MS" -> "SSS", "AM" -> "a", "PM" -> "a", "TZ" -> "z")
-    val out = new StringBuilder
-    val lit = new StringBuilder
-    def flush(): Unit = if (lit.nonEmpty) {
-      val s = lit.toString
-      if (s.exists(_.isLetter)) out.append('\'').append(s.replace("'", "''")).append('\'')
-      else out.append(s)
-      lit.clear()
-    }
-    var i = 0
-    while (i < fmt.length) {
-      templates.find { case (pg, _) => fmt.startsWith(pg, i) } match {
-        case Some((pg, java)) => flush(); out.append(java); i += pg.length
-        case None =>
-          val c = fmt.charAt(i)
-          if (c.isLetter)
-            throw new graft.UnsupportedError(
-              s"Postgres TO_CHAR pattern not supported at '$c' in '$fmt'")
-          lit.append(c); i += 1
-      }
-    }
-    flush()
-    out.toString
-  }
-
   /** `TO_CHAR(x, 'templates')` → `date_format(x, 'java pattern')`. A
     * non-literal format raises (translating it would need runtime info).
     */
   private[graft] val pgToChar: Calls = Calls("to_char") { (_, args) =>
     args match {
       case Seq(x, SingleLiteral(f)) =>
-        Some(s"date_format($x, '${translatePgFormat(f).replace("'", "''")}')")
+        Some(s"date_format($x, ${formatLiteral(f, PgFormat)})")
       case _ =>
         throw new graft.UnsupportedError("TO_CHAR format must be a string literal")
     }
@@ -3054,7 +3032,7 @@ object Dialect {
   private[graft] val oracleToDate: Calls = Calls("to_date") { (_, args) =>
     args match {
       case Seq(x, SingleLiteral(f)) =>
-        val t = try translatePgFormat(f)
+        val t = try translateFormat(f, PgFormat)
                 catch { case _: graft.UnsupportedError => f }
         if (t == f) None
         else Some(s"to_date($x, '${t.replace("'", "''")}')")
@@ -3087,25 +3065,6 @@ object Dialect {
 
   // ---- T-SQL-ish helpers --------------------------------------------------
 
-  /** Normalize a T-SQL date-part argument (SQL Server's abbreviation set:
-    * `yy`/`yyyy`, `qq`/`q`, `mm`/`m`, `wk`/`ww`, `dd`/`d`, `hh`,
-    * `mi`/`n`, `ss`/`s`). Unknown parts raise.
-    */
-  private def tsqlPart(arg: String, fn: String): String = {
-    val p = arg.stripPrefix("'").stripSuffix("'").toLowerCase
-    val canon = Map(
-      "year" -> "year", "yy" -> "year", "yyyy" -> "year",
-      "quarter" -> "quarter", "qq" -> "quarter", "q" -> "quarter",
-      "month" -> "month", "mm" -> "month", "m" -> "month",
-      "week" -> "week", "wk" -> "week", "ww" -> "week",
-      "day" -> "day", "dd" -> "day", "d" -> "day",
-      "hour" -> "hour", "hh" -> "hour",
-      "minute" -> "minute", "mi" -> "minute", "n" -> "minute",
-      "second" -> "second", "ss" -> "second", "s" -> "second")
-    canon.getOrElse(p,
-      throw new graft.UnsupportedError(s"$fn date part '$p' is not supported"))
-  }
-
   /** `CONVERT(type, expr)` → `CAST(expr AS type)` with SQL Server type
     * names mapped to Spark's (`NVARCHAR`→STRING, `DATETIME`→TIMESTAMP,
     * `BIT`→BOOLEAN, `FLOAT`→DOUBLE, `MONEY`→DECIMAL(19,4)). The optional
@@ -3116,48 +3075,47 @@ object Dialect {
     if (args.length != 2)
       throw new graft.UnsupportedError(
         s"$fn expects (type, expr); style arguments are not supported")
-    Some(s"CAST(${args(1)} AS ${tsqlType(args(0), fn)})")
+    Some(s"CAST(${args(1)} AS ${tsqlType(args(0)).getOrElse(
+      throw new graft.UnsupportedError(s"$fn type '${args(0)}' is not supported"))})")
   }
 
-  private def tsqlType(raw: String, fn: String): String = {
-    val m = """(?i)^([A-Za-z]+)\s*(\(\s*\d+(?:\s*,\s*\d+)?\s*\))?$""".r
-      .findFirstMatchIn(raw.trim)
-      .getOrElse(throw new graft.UnsupportedError(
-        s"$fn type '$raw' is not supported"))
-    val parens = Option(m.group(2)).map(_.replaceAll("\\s", "")).getOrElse("")
-    m.group(1).toUpperCase match {
-      case "NVARCHAR" | "VARCHAR" | "NCHAR" | "CHAR" | "TEXT" => "STRING"
-      case "DATETIME" | "DATETIME2" | "SMALLDATETIME" => "TIMESTAMP"
-      case "BIT" => "BOOLEAN"
-      case "FLOAT" => "DOUBLE" // T-SQL FLOAT defaults to float(53) = binary64
-      case "REAL" => "FLOAT"
-      case "MONEY" => "DECIMAL(19,4)"
-      case "NUMERIC" | "DECIMAL" => "DECIMAL" + parens
-      case t @ ("INT" | "INTEGER" | "BIGINT" | "SMALLINT" | "TINYINT" | "DATE") => t
-      case other => throw new graft.UnsupportedError(
-        s"$fn type '$other' is not supported")
+  /** `CAST|TRY_CAST(x AS type)` with a SQL Server type name mapped as in
+    * [[tsqlConvert]] (`DATETIME2` → TIMESTAMP, `FLOAT` → DOUBLE …); a name
+    * the map does not know, or one Spark spells the same, passes through.
+    */
+  private[graft] val tsqlCast: Calls = Calls("cast|try_cast") { (fn, args) =>
+    args match {
+      case Seq(one) =>
+        """(?is)^(.*\sAS\s+)(\S.*)$""".r.findFirstMatchIn(one).flatMap { g =>
+          tsqlType(g.group(2)).filter(_ != g.group(2).replaceAll("\\s", "").toUpperCase)
+            .map(t => s"$fn(${g.group(1)}$t)")
+        }
+      case _ => None
     }
   }
 
-  /** T-SQL `DATEADD(part, n, expr)` — same signature and calendar
-    * behavior as Snowflake's, different part-abbreviation set.
-    */
-  private[graft] val tsqlDateAdd: Calls = Calls("dateadd") { (fn, args) =>
-    if (args.length != 3)
-      throw new graft.UnsupportedError(s"$fn expects (part, n, expr)")
-    Some(dateAddExpr(tsqlPart(args(0), fn), args(1), args(2)))
-  }
+  /** The Spark type for a SQL Server type name, None for one it does not know. */
+  private def tsqlType(raw: String): Option[String] =
+    """(?i)^([A-Za-z][A-Za-z0-9]*)\s*(\(\s*\d+(?:\s*,\s*\d+)?\s*\))?$""".r
+      .findFirstMatchIn(raw.trim).flatMap { m =>
+        val parens = Option(m.group(2)).map(_.replaceAll("\\s", "")).getOrElse("")
+        m.group(1).toUpperCase match {
+          case "NVARCHAR" | "VARCHAR" | "NCHAR" | "CHAR" | "TEXT" => Some("STRING")
+          case "DATETIME" | "DATETIME2" | "SMALLDATETIME" => Some("TIMESTAMP")
+          case "BIT" => Some("BOOLEAN")
+          case "FLOAT" => Some("DOUBLE") // T-SQL FLOAT defaults to float(53) = binary64
+          case "REAL" => Some("FLOAT")
+          case "MONEY" => Some("DECIMAL(19,4)")
+          case "NUMERIC" | "DECIMAL" => Some("DECIMAL" + parens)
+          case t @ ("INT" | "INTEGER" | "BIGINT" | "SMALLINT" | "TINYINT" | "DATE") => Some(t)
+          case _ => None
+        }
+      }
 
-  /** T-SQL `DATEDIFF(part, start, end)` — boundary crossings like
-    * Snowflake/BigQuery, but weeks roll at SUNDAY (SQL Server's default
-    * `@@DATEFIRST = 7`): the week anchor is a Sunday (proleptic
-    * 0001-01-07) where Snowflake's is a Monday.
-    */
-  private[graft] val tsqlDateDiff: Calls = Calls("datediff") { (fn, args) =>
-    if (args.length != 3)
-      throw new graft.UnsupportedError(s"$fn expects (part, start, end)")
-    Some(boundaryDateDiff(tsqlPart(args(0), fn), args(1), args(2), "0001-01-07", "date_diff"))
-  }
+  private[graft] val tsqlDateAdd: Calls = dateAddCall(TsqlParts)
+
+  /** T-SQL `DATEDIFF(part, start, end)`: boundary crossings, weeks from Sunday. */
+  private[graft] val tsqlDateDiff: Calls = dateDiffCall(TsqlParts)
 
   /** T-SQL/ANSI paging: `OFFSET n ROWS [FETCH NEXT|FIRST m ROWS ONLY]` →
     * `LIMIT m OFFSET n` (or bare `OFFSET n`, which Spark parses
@@ -3195,7 +3153,7 @@ object Dialect {
   private[graft] val tsqlDatePart: Calls = Calls("datepart") { (fn, args) =>
     if (args.length != 2)
       throw new graft.UnsupportedError(s"$fn expects (part, expr)")
-    tsqlPart(args(0), fn) match {
+    TsqlParts(args(0), fn) match {
       case "week" => throw new graft.UnsupportedError(
         "DATEPART(week, …) has DATEFIRST-dependent numbering with no Spark equivalent")
       case p => Some(s"$p(${args(1)})")
@@ -3841,43 +3799,10 @@ object Dialect {
 
   // ---- Redshift-ish helpers ----------------------------------------------
 
-  /** Normalize a Redshift date-part argument (long names, plurals, and
-    * abbreviations per the Redshift datetime-parts table; `m` means
-    * MINUTE there, not month).
-    */
-  private def rsPart(arg: String, fn: String): String = {
-    val p = arg.stripPrefix("'").stripSuffix("'").toLowerCase
-    val canon = Map(
-      "day" -> "day", "days" -> "day", "d" -> "day",
-      "week" -> "week", "weeks" -> "week", "w" -> "week",
-      "month" -> "month", "months" -> "month", "mon" -> "month", "mons" -> "month",
-      "quarter" -> "quarter", "quarters" -> "quarter", "qtr" -> "quarter", "qtrs" -> "quarter",
-      "year" -> "year", "years" -> "year", "y" -> "year", "yr" -> "year", "yrs" -> "year",
-      "hour" -> "hour", "hours" -> "hour", "h" -> "hour", "hr" -> "hour", "hrs" -> "hour",
-      "minute" -> "minute", "minutes" -> "minute", "m" -> "minute", "min" -> "minute", "mins" -> "minute",
-      "second" -> "second", "seconds" -> "second", "s" -> "second", "sec" -> "second", "secs" -> "second")
-    canon.getOrElse(p,
-      throw new graft.UnsupportedError(s"$fn date part '$p' is not supported"))
-  }
+  private[graft] val rsDateAdd: Calls = dateAddCall(RsParts)
 
-  /** Redshift `DATEADD(part, n, expr)` — same calendar semantics as the
-    * Snowflake/T-SQL spelling, Redshift part vocabulary.
-    */
-  private[graft] val rsDateAdd: Calls = Calls("dateadd") { (fn, args) =>
-    if (args.length != 3)
-      throw new graft.UnsupportedError(s"$fn expects (part, n, expr)")
-    Some(dateAddExpr(rsPart(args(0), fn), args(1), args(2)))
-  }
-
-  /** Redshift `DATEDIFF(part, start, end)` — boundary crossings with the
-    * week rolling at SUNDAY (proleptic 0001-01-07), Redshift's
-    * DATEDIFF(week) boundary.
-    */
-  private[graft] val rsDateDiff: Calls = Calls("datediff") { (fn, args) =>
-    if (args.length != 3)
-      throw new graft.UnsupportedError(s"$fn expects (part, start, end)")
-    Some(boundaryDateDiff(rsPart(args(0), fn), args(1), args(2), "0001-01-07", "date_diff"))
-  }
+  /** Redshift `DATEDIFF(part, start, end)`: boundary crossings, weeks from Sunday. */
+  private[graft] val rsDateDiff: Calls = dateDiffCall(RsParts)
 
   /** Bare `VARCHAR`/`TEXT`/`BPCHAR` (no length) in a type position →
     * STRING — Redshift, Postgres and DuckDB cast to unsized VARCHAR
@@ -3977,7 +3902,7 @@ object Dialect {
   private[graft] val chFormatDateTime: Calls = Calls("formatDateTime|fromUnixTimestamp") { (fn, args) =>
     if (fn.equalsIgnoreCase("formatdatetime")) args match {
       case Seq(x, SingleLiteral(f)) =>
-        Some(s"date_format($x, '${translateMysqlFormat(f).replace("'", "''")}')")
+        Some(s"date_format($x, ${formatLiteral(f, MysqlFormat)})")
       case _ => throw new graft.UnsupportedError(
         "formatDateTime expects (expr, 'format') with a literal format")
     } else args match {
@@ -4128,13 +4053,13 @@ object Dialect {
           // %-free formats included: every non-% character is LITERAL in
           // Trino (the translator quotes it) — passing 'yyyy' through to
           // Spark's pattern language would silently emit the year
-          val java = translateMysqlFormat(f).replace("'", "''")
+          val java = formatLiteral(f, MysqlFormat)
           if (fn.equalsIgnoreCase("date_parse")) {
             if (MysqlCodeRe.findFirstIn(f).isEmpty)
               throw new graft.UnsupportedError(
                 s"date_parse format '$f' has no %-codes — nothing to parse")
-            Some(s"to_timestamp($x, '$java')")
-          } else Some(s"date_format($x, '$java')")
+            Some(s"to_timestamp($x, $java)")
+          } else Some(s"date_format($x, $java)")
         case Seq(_, other) => throw new graft.UnsupportedError(
           s"$fn format must be a string literal, got: $other")
         case _ => throw new graft.UnsupportedError(s"$fn expects (expr, 'format')")
@@ -4502,7 +4427,7 @@ object Dialect {
   }
 
   /** BigQuery `DATE_ADD/DATE_SUB/TIMESTAMP_ADD/TIMESTAMP_SUB(expr,
-    * INTERVAL n part)` → the shared calendar-add spelling ([[dateAddExpr]]
+    * INTERVAL n part)` → the shared calendar-add spelling ([[dateAdd]]
     * — `_SUB` negates n). A 2-argument `date_add(date, days)` without
     * INTERVAL is Spark's own signature and passes through untouched.
     */
@@ -4512,15 +4437,9 @@ object Dialect {
       case Seq(x, iv) =>
         """(?is)^INTERVAL\s+(.*\S)\s+([a-zA-Z]+)$""".r
           .findFirstMatchIn(iv.trim).map { g =>
-            val part = g.group(2).toLowerCase match {
-              case p @ ("year" | "quarter" | "month" | "week" | "day" |
-                        "hour" | "minute" | "second") => p
-              case other => throw new graft.UnsupportedError(
-                s"$fn INTERVAL part '$other' is not supported")
-            }
             val n = if (fn.toLowerCase.endsWith("_sub")) s"-(${g.group(1)})"
                     else g.group(1)
-            dateAddExpr(part, n, x)
+            dateAdd(BqParts(g.group(2), fn), n, x)
           }
       case _ => None
     }
@@ -5365,47 +5284,13 @@ object Dialect {
     Some(s"count(DISTINCT ${args(0)})")
   }
 
-  /** Tableau date-part argument — REQUIRED single-quoted literal (the
-    * Tableau functions take `'month'`-style strings, not bare
-    * keywords). Unknown parts raise.
+  /** Tableau `DATEADD('part', n, expr)`; `'weekday'`/`'dayofyear'` are
+    * extraction-only parts and raise.
     */
-  private def tableauPart(arg: String, fn: String): String = {
-    val m = """(?s)^'(.*)'$""".r.findFirstMatchIn(arg.trim).getOrElse(
-      throw new graft.UnsupportedError(
-        s"$fn expects a quoted date-part literal, got: $arg"))
-    val p = m.group(1).toLowerCase
-    val known = Set("year", "quarter", "month", "week", "day",
-      "dayofyear", "weekday", "hour", "minute", "second")
-    if (!known.contains(p))
-      throw new graft.UnsupportedError(s"$fn date part '$p' is not supported")
-    p
-  }
+  private[graft] val tableauDateAdd: Calls = dateAddCall(TableauParts)
 
-  /** Tableau `DATEADD('part', n, expr)` — calendar addition, the same
-    * Spark spelling as the Snowflake/T-SQL/Redshift shims share.
-    * `'weekday'`/`'dayofyear'` are extraction-only parts and raise.
-    */
-  private[graft] val tableauDateAdd: Calls = Calls("dateadd") { (fn, args) =>
-    if (args.length != 3)
-      throw new graft.UnsupportedError(s"$fn expects ('part', n, expr)")
-    tableauPart(args(0), fn) match {
-      case p @ ("weekday" | "dayofyear") => throw new graft.UnsupportedError(
-        s"DATEADD date part '$p' is not supported")
-      case p => Some(dateAddExpr(p, args(1), args(2)))
-    }
-  }
-
-  /** Tableau `DATEDIFF('part', start, end)` — boundary crossings (2
-    * months minus a day is still 2 month boundaries) with weeks rolling
-    * at SUNDAY, Tableau's default week start (the proleptic Sunday
-    * anchor the T-SQL/Redshift shims use).
-    */
-  private[graft] val tableauDateDiff: Calls = Calls("datediff") { (fn, args) =>
-    if (args.length != 3)
-      throw new graft.UnsupportedError(s"$fn expects ('part', start, end)")
-    Some(boundaryDateDiff(tableauPart(args(0), fn), args(1), args(2),
-      "0001-01-07", "date_diff"))
-  }
+  /** Tableau `DATEDIFF('part', start, end)`: boundary crossings, weeks from Sunday. */
+  private[graft] val tableauDateDiff: Calls = dateDiffCall(TableauParts)
 
   /** Tableau `DATEPART('part', expr)` → the matching Spark extraction.
     * `'weekday'` → `dayofweek` (both number 1 = Sunday under Tableau's
@@ -5416,7 +5301,7 @@ object Dialect {
   private[graft] val tableauDatePart: Calls = Calls("datepart") { (fn, args) =>
     if (args.length != 2)
       throw new graft.UnsupportedError(s"$fn expects ('part', expr)")
-    tableauPart(args(0), fn) match {
+    TableauParts(args(0), fn) match {
       case "week" => throw new graft.UnsupportedError(
         "DATEPART('week', …) numbering depends on the data source's week start — no Spark equivalent")
       case "weekday" => Some(s"dayofweek(${args(1)})")
@@ -5432,7 +5317,7 @@ object Dialect {
   private[graft] val tableauDateTrunc: Calls = Calls("datetrunc") { (fn, args) =>
     if (args.length != 2)
       throw new graft.UnsupportedError(s"$fn expects ('part', expr)")
-    tableauPart(args(0), fn) match {
+    TableauParts(args(0), fn) match {
       case "week" => throw new graft.UnsupportedError(
         "DATETRUNC('week', …) depends on the data source's week start — no Spark equivalent")
       case p @ ("weekday" | "dayofyear") => throw new graft.UnsupportedError(
@@ -5449,7 +5334,7 @@ object Dialect {
   private[graft] val tableauDateName: Calls = Calls("datename") { (fn, args) =>
     if (args.length != 2)
       throw new graft.UnsupportedError(s"$fn expects ('part', expr)")
-    tableauPart(args(0), fn) match {
+    TableauParts(args(0), fn) match {
       case "week" => throw new graft.UnsupportedError(
         "DATENAME('week', …) numbering depends on the data source's week start — no Spark equivalent")
       case "month" => Some(s"date_format(${args(1)}, 'MMMM')")
@@ -5477,48 +5362,19 @@ object Dialect {
     }
   }
 
-  /** Exasol ADD_unit date arithmetic. Exasol's forms are TYPE-PRESERVING
-    * (DATE in → DATE out, TIMESTAMP in → TIMESTAMP out):
-    *
-    *  - ADD_MONTHS/ADD_YEARS emit `x + INTERVAL '1' MONTH/YEAR * n` — a
-    *    typed year-month interval, which Spark adds type-preservingly
-    *    (date+YM → DATE, timestamp+YM → TIMESTAMP, month-end clamping on
-    *    both), where a bare `add_months` would truncate a timestamp's
-    *    time-of-day to DATE. (`make_interval`'s CalendarIntervalType is
-    *    NOT usable here: Spark promotes date+CalendarInterval to
-    *    timestamp.)
-    *  - ADD_DAYS/ADD_WEEKS: Spark has no type-preserving day addition
-    *    (date + day-time interval promotes to TIMESTAMP), so they emit
-    *    `date_add` guarded by a per-row assertion that the input carries
-    *    no time-of-day — a midnight timestamp truncates losslessly, any
-    *    other raises (the shim family's fail-fast convention) instead of
-    *    silently drifting.
-    *  - Sub-day forms return TIMESTAMP via timestampadd (Exasol promotes
-    *    a DATE input to TIMESTAMP for those too).
+  /** Exasol ADD_unit date arithmetic through the shared add spelling
+    * ([[dateAdd]]): type-preserving like Exasol's (DATE in → DATE out,
+    * TIMESTAMP in → TIMESTAMP out with its time of day, month-end clamping
+    * on both). The sub-day forms return TIMESTAMP (Exasol promotes a DATE
+    * input to TIMESTAMP for those too).
     */
   private[graft] val exasolAddUnits: Calls = Calls(
       "add_days|add_weeks|add_months|add_years|add_hours|add_minutes|add_seconds") { (fn, args) =>
     if (args.length != 2)
       throw new graft.UnsupportedError(s"$fn expects (datetime, count)")
-    val (x, n) = (args(0), args(1))
-    // the IS NULL arm keeps Exasol's NULL-propagation: without it a NULL
-    // input makes the midnight predicate NULL, the ELSE branch fires, and
-    // raise_error aborts the query where ADD_DAYS(NULL, n) must be NULL
-    def guardedDateAdd(days: String): String =
-      s"(CASE WHEN ($x) IS NULL " +
-        s"OR CAST(CAST(($x) AS DATE) AS TIMESTAMP) = CAST(($x) AS TIMESTAMP) " +
-        s"THEN date_add(($x), $days) ELSE raise_error(" +
-        s"'${fn.toUpperCase}: TIMESTAMP input with time-of-day is outside the " +
-        "shimmed surface (Exasol preserves it; Spark date_add would truncate)') END)"
-    Some(fn.toLowerCase match {
-      case "add_days"    => guardedDateAdd(s"CAST($n AS INT)")
-      case "add_weeks"   => guardedDateAdd(s"(7 * CAST($n AS INT))")
-      case "add_months"  => s"(($x) + INTERVAL '1' MONTH * CAST($n AS INT))"
-      case "add_years"   => s"(($x) + INTERVAL '1' YEAR * CAST($n AS INT))"
-      case "add_hours"   => s"timestampadd(HOUR, CAST($n AS INT), CAST($x AS TIMESTAMP))"
-      case "add_minutes" => s"timestampadd(MINUTE, CAST($n AS INT), CAST($x AS TIMESTAMP))"
-      case _             => s"timestampadd(SECOND, CAST($n AS INT), CAST($x AS TIMESTAMP))"
-    })
+    val part = fn.toLowerCase.stripPrefix("add_").stripSuffix("s")
+    val x = if (Set("hour", "minute", "second")(part)) s"CAST(${args(0)} AS TIMESTAMP)" else args(0)
+    Some(dateAdd(part, s"CAST(${args(1)} AS INT)", x))
   }
 
   /** Exasol `*_BETWEEN(a, b)` = a − b (first minus second). DAYS_BETWEEN

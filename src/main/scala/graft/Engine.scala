@@ -63,10 +63,9 @@ object Engine {
       registerTable(spark, normalizeName(name, dialect), typed)
     }
     // schemas also reach the dialect: READ_CSV applies a declared schema for
-    // its alias instead of an inference scan (reference executor.py:303-305)
-    val rewritten = dialect.rewrite(spark,
-      flattenQualifiedNames(sql, tables.keys, dialect), schemas)
-    try spark.sql(rewritten)
+    // its alias instead of an inference scan (reference executor.py:303-305),
+    // so the rewrite itself can raise a Spark error (a missing CSV path)
+    try spark.sql(dialect.rewrite(spark, flattenQualifiedNames(sql, tables.keys, dialect), schemas))
     catch {
       case e: org.apache.spark.sql.catalyst.parser.ParseException =>
         throw new ExecuteError(s"parse error: ${e.getMessage}", e)

@@ -734,8 +734,8 @@ object DialectQueries {
           |  STARTS_WITH(o_orderpriority, '1') AS sw,
           |  ENDS_WITH(o_orderpriority, 'T') AS ew,
           |  FORMAT('%05d|%s', o_orderkey, o_orderstatus) AS tag,
-          |  CAST(DATE_ADD(o_orderdate, INTERVAL 2 MONTH) AS STRING) AS due,
-          |  CAST(DATE_SUB(o_orderdate, INTERVAL 1 WEEK) AS STRING) AS wk_before
+          |  CAST(DATE_ADD(CAST(o_orderdate AS DATE), INTERVAL 2 MONTH) AS STRING) AS due,
+          |  CAST(DATE_SUB(CAST(o_orderdate AS DATE), INTERVAL 1 WEEK) AS STRING) AS wk_before
           |FROM orders WHERE o_orderkey <= 400
           |ORDER BY o_orderkey""".stripMargin,
         dialect = Dialect.BigQueryish)
@@ -1232,7 +1232,7 @@ object DialectQueries {
           |  CAST(MIN(DATEPART('year', o_orderdate)) AS BIGINT) AS y_min,
           |  CAST(MAX(DATEPART('weekday', o_orderdate)) AS BIGINT) AS dow_max,
           |  CAST(MAX(DATEPART('dayofyear', o_orderdate)) AS BIGINT) AS doy_max,
-          |  CAST(MIN(DATEADD('month', 2, o_orderdate)) AS STRING) AS first_due,
+          |  CAST(MIN(DATEADD('month', 2, CAST(o_orderdate AS DATE))) AS STRING) AS first_due,
           |  CAST(MAX(DATEDIFF('day', o_orderdate, DATE '1998-12-31')) AS BIGINT)
           |    AS max_days_left,
           |  CAST(MAX(DATEDIFF('month', o_orderdate, DATE '1998-12-31')) AS BIGINT)
@@ -1282,7 +1282,8 @@ object DialectQueries {
     * unit_BETWEEN date-arithmetic family — ADD_MONTHS/ADD_YEARS are
     * TYPE-PRESERVING (o_orderdate ships as midnight timestamps, so
     * due3m/due1y stay timestamps, rendered 'YYYY-MM-DD HH:MM:SS' on both
-    * engines; ADD_DAYS/ADD_WEEKS date_add through the midnight guard) —
+    * engines; ADD_DAYS/ADD_WEEKS run over the DATE cast, so due30/due2w
+    * stay DATEs) —
     * ZEROIFNULL/NULLIFZERO,
     * Oracle-style DECODE / TO_CHAR / TO_DATE, 2-arg TRUNC with Oracle
     * format names, and NVL/NULLIF/MOD pass-throughs. o_orderdate is
@@ -1295,8 +1296,8 @@ object DialectQueries {
       Tables.register(s, d)
       Engine.execute(s,
         """SELECT o_orderkey,
-          |  CAST(ADD_DAYS(o_orderdate, 30) AS VARCHAR(10)) AS due30,
-          |  CAST(ADD_WEEKS(o_orderdate, 2) AS VARCHAR(10)) AS due2w,
+          |  CAST(ADD_DAYS(CAST(o_orderdate AS DATE), 30) AS VARCHAR(10)) AS due30,
+          |  CAST(ADD_WEEKS(CAST(o_orderdate AS DATE), 2) AS VARCHAR(10)) AS due2w,
           |  CAST(ADD_MONTHS(o_orderdate, 3) AS VARCHAR(19)) AS due3m,
           |  CAST(ADD_YEARS(o_orderdate, 1) AS VARCHAR(19)) AS due1y,
           |  ADD_HOURS(o_orderdate, 6) AS t6h,

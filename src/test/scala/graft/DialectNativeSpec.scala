@@ -49,6 +49,7 @@ class DialectNativeSpec extends SparkSpec {
       "date" -> "takes modifiers ('+1 months', 'start of month'); date(x) passes through"),
     OracleIsh -> Map("to_char" -> templates, "to_date" -> templates),
     TsqlIsh -> Map("dateadd" -> dateAddType, "datediff" -> boundaries,
+      "cast" -> "SQL Server type names: DATETIME2 is no Spark type, and FLOAT is 64-bit",
       "datepart" -> "T-SQL part abbreviations (yy, qq, dd, mi, …)",
       "isnull" -> "T-SQL's is a 2-argument coalesce; Spark's a 1-argument predicate",
       "len" -> "T-SQL's excludes trailing spaces; Spark's counts them"),

@@ -286,11 +286,11 @@ class DialectPropertySpec extends SparkSpec {
   }
 
   test("translatePgFormat: template table, literal infixes, unknown letters raise") {
-    assert(Dialect.translatePgFormat("YYYY-MM-DD") === "yyyy-MM-dd")
-    assert(Dialect.translatePgFormat("HH24:MI:SS") === "HH:mm:ss")
-    assert(Dialect.translatePgFormat("DD Mon YYYY") === "dd MMM yyyy")
-    assert(Dialect.translatePgFormat("HH:MI AM") === "hh:mm a") // bare HH = HH12
-    intercept[UnsupportedError](Dialect.translatePgFormat("YYYY-QQ"))
+    assert(Dialect.translateFormat("YYYY-MM-DD", Dialect.PgFormat) === "yyyy-MM-dd")
+    assert(Dialect.translateFormat("HH24:MI:SS", Dialect.PgFormat) === "HH:mm:ss")
+    assert(Dialect.translateFormat("DD Mon YYYY", Dialect.PgFormat) === "dd MMM yyyy")
+    assert(Dialect.translateFormat("HH:MI AM", Dialect.PgFormat) === "hh:mm a") // bare HH = HH12
+    intercept[UnsupportedError](Dialect.translateFormat("YYYY-QQ", Dialect.PgFormat))
   }
 
   test("rewritePgRegexMatch: binary ~ and !~ only; literals and unary ~ untouched") {
@@ -582,8 +582,8 @@ class DialectPropertySpec extends SparkSpec {
   }
 
   test("tsql date functions: T-SQL abbreviations, Sunday week anchor, week DATEPART raises") {
-    assert(Dialect.tsqlDateAdd("DATEADD(mm, 2, d)") === "add_months(d, (2))")
-    assert(Dialect.tsqlDateAdd("DATEADD(dd, -1, d)") === "date_add(d, (-1))")
+    assert(Dialect.tsqlDateAdd("DATEADD(mm, 2, d)") === "((d) + make_interval(0, (2)))")
+    assert(Dialect.tsqlDateAdd("DATEADD(dd, -1, d)") === "((d) + make_interval(0, 0, 0, (-1)))")
     // weeks anchor on a SUNDAY (0001-01-07), not Snowflake's Monday
     assert(Dialect.tsqlDateDiff("DATEDIFF(wk, a, b)").contains("0001-01-07"))
     assert(Dialect.tsqlDateDiff("DATEDIFF(yy, a, b)") ===
@@ -594,8 +594,8 @@ class DialectPropertySpec extends SparkSpec {
   }
 
   test("redshift: part abbreviations, Sunday week anchor, bare-type casts") {
-    assert(Dialect.rsDateAdd("DATEADD(mons, 2, d)") === "add_months(d, (2))")
-    assert(Dialect.rsDateAdd("DATEADD('yrs', 1, d)") === "add_months(d, 12 * (1))")
+    assert(Dialect.rsDateAdd("DATEADD(mons, 2, d)") === "((d) + make_interval(0, (2)))")
+    assert(Dialect.rsDateAdd("DATEADD('yrs', 1, d)") === "((d) + make_interval((1)))")
     // 'm' is MINUTE in Redshift's part table, not month
     assert(Dialect.rsDateAdd("DATEADD(m, 5, t)") === "timestampadd(MINUTE, (5), t)")
     assert(Dialect.rsDateDiff("DATEDIFF(w, a, b)").contains("0001-01-07"))
@@ -723,9 +723,9 @@ class DialectPropertySpec extends SparkSpec {
     // BigQuery DATE_ADD/DATE_SUB with INTERVAL — single-digit quantities
     // and expressions both bind; Spark's own 2-arg date_add passes through
     assert(Dialect.bqDateAddSub("DATE_ADD(d, INTERVAL 2 MONTH)") ===
-      "add_months(d, (2))")
+      "((d) + make_interval(0, (2)))")
     assert(Dialect.bqDateAddSub("DATE_SUB(d, INTERVAL 1 WEEK)") ===
-      "date_add(d, 7 * (-(1)))")
+      "((d) + make_interval(0, 0, (-(1))))")
     assert(Dialect.bqDateAddSub("TIMESTAMP_ADD(t, INTERVAL n + 1 HOUR)") ===
       "timestampadd(HOUR, (n + 1), t)")
     assert(Dialect.bqDateAddSub("date_add(d, 5)") === "date_add(d, 5)")
@@ -915,7 +915,7 @@ class DialectPropertySpec extends SparkSpec {
     intercept[UnsupportedError](Dialect.tableauIif("IIF(c, t)"))
     assert(Dialect.tableauCountd("COUNTD(x)") === "count(DISTINCT x)")
     assert(Dialect.tableauDateAdd("DATEADD('month', 2, d)") ===
-      "add_months(d, (2))")
+      "((d) + make_interval(0, (2)))")
     // weeks anchor on a SUNDAY (Tableau's default week start)
     assert(Dialect.tableauDateDiff("DATEDIFF('week', a, b)")
       .contains("0001-01-07"))
@@ -951,25 +951,21 @@ class DialectPropertySpec extends SparkSpec {
   }
 
   test("exasol: ADD_unit family, unit_BETWEEN, TRUNC formats, zeroifnull") {
-    // ADD_MONTHS/ADD_YEARS: typed year-month interval — type-preserving
-    // (date+YM → DATE, timestamp+YM → TIMESTAMP; a bare add_months would
-    // silently truncate a timestamp input to DATE)
+    // the ADD_unit family goes through the shared, type-preserving add
+    // spelling (DATE in → DATE out, TIMESTAMP keeps its time of day)
     assert(Dialect.exasolAddUnits("ADD_MONTHS(d, 2)") ===
-      "((d) + INTERVAL '1' MONTH * CAST(2 AS INT))")
+      "((d) + make_interval(0, (CAST(2 AS INT))))")
     assert(Dialect.exasolAddUnits("ADD_YEARS(d, 1)") ===
-      "((d) + INTERVAL '1' YEAR * CAST(1 AS INT))")
-    // ADD_DAYS/ADD_WEEKS: date_add guarded by a midnight assertion — a
-    // timestamp WITH time-of-day raises instead of silently truncating
-    val days = Dialect.exasolAddUnits("ADD_DAYS(d, 30)")
-    assert(days.contains("date_add((d), CAST(30 AS INT))"))
-    assert(days.contains("raise_error") && days.startsWith("(CASE WHEN"))
-    assert(Dialect.exasolAddUnits("ADD_WEEKS(d, n)")
-      .contains("date_add((d), (7 * CAST(n AS INT)))"))
+      "((d) + make_interval((CAST(1 AS INT))))")
+    assert(Dialect.exasolAddUnits("ADD_DAYS(d, 30)") ===
+      "((d) + make_interval(0, 0, 0, (CAST(30 AS INT))))")
+    assert(Dialect.exasolAddUnits("ADD_WEEKS(d, n)") ===
+      "((d) + make_interval(0, 0, (CAST(n AS INT))))")
     assert(Dialect.exasolAddUnits("ADD_HOURS(t, 6)") ===
-      "timestampadd(HOUR, CAST(6 AS INT), CAST(t AS TIMESTAMP))")
+      "timestampadd(HOUR, (CAST(6 AS INT)), CAST(t AS TIMESTAMP))")
     // nested calls rewrite inside-out in one pass
-    assert(Dialect.exasolAddUnits("ADD_DAYS(ADD_MONTHS(d, 1), 2)")
-      .contains("date_add((((d) + INTERVAL '1' MONTH * CAST(1 AS INT))), CAST(2 AS INT))"))
+    assert(Dialect.exasolAddUnits("ADD_DAYS(ADD_MONTHS(d, 1), 2)") ===
+      "((((d) + make_interval(0, (CAST(1 AS INT))))) + make_interval(0, 0, 0, (CAST(2 AS INT))))")
     intercept[UnsupportedError](Dialect.exasolAddUnits("ADD_DAYS(d)"))
     assert(Dialect.exasolBetweenUnits("DAYS_BETWEEN(a, b)") ===
       "datediff(CAST(a AS DATE), CAST(b AS DATE))")
@@ -993,8 +989,8 @@ class DialectPropertySpec extends SparkSpec {
     // full pipeline: quoted idents, Spark's own ZEROIFNULL, ADD_DAYS
     val full = Dialect.ExasolIsh.rewrite(spark,
       "SELECT ZEROIFNULL(\"v\") AS z, ADD_DAYS(d, 1) AS d1 FROM t")
-    assert(full.startsWith("SELECT ZEROIFNULL(`v`) AS z, (CASE WHEN"))
-    assert(full.contains("date_add((d), CAST(1 AS INT))"))
+    assert(full ===
+      "SELECT ZEROIFNULL(`v`) AS z, ((d) + make_interval(0, 0, 0, (CAST(1 AS INT)))) AS d1 FROM t")
     assert(Dialect.forName("exasol") === Dialect.ExasolIsh)
     assert(Dialect.ExasolIsh.nameFold === Dialect.NameFold.Upper)
   }
@@ -2424,6 +2420,30 @@ class DialectPropertySpec extends SparkSpec {
       "ORDER BY CASE WHEN SYSDATE IS NULL THEN 0 ELSE k END FETCH FIRST 50 PERCENT ROWS ONLY")
     assert(oracle.contains("approx_percentile"), oracle)
     sameRows(oracle, "SELECT k FROM t ORDER BY k LIMIT 3")
+  }
+
+  test("date-part vocabulary: each dialect's names land in the canonical parts, conflicts kept apart") {
+    val vocab = Seq("snowflake" -> Dialect.SnowParts, "tsql" -> Dialect.TsqlParts,
+      "redshift" -> Dialect.RsParts, "bigquery" -> Dialect.BqParts, "tableau" -> Dialect.TableauParts)
+    for ((name, v) <- vocab; (alias, part) <- v.aliases) {
+      assert(Dialect.DateParts(part), s"$name: $alias -> $part")
+      assert(v.aliases.get(part).contains(part), s"$name: $part does not name itself")
+      assert(v(if (v.quoted) s"'$alias'" else alias, "f") === part)
+    }
+    // the maps disagree, which is why they stay per dialect
+    assert(Dialect.TsqlParts("m", "DATEADD") === "month")
+    assert(Dialect.RsParts("m", "DATEADD") === "minute")
+    // T-SQL's y is day-of-year, not year
+    intercept[UnsupportedError](Dialect.TsqlParts("y", "DATEADD"))
+    assert(Dialect.SnowParts("y", "DATEADD") === "year")
+    // Tableau takes quoted names only
+    intercept[UnsupportedError](Dialect.TableauParts("month", "DATEADD"))
+    assert(Dialect.TableauParts("'MONTH'", "DATEADD") === "month")
+    intercept[UnsupportedError](Dialect.tableauDateAdd("DATEADD('weekday', 1, d)"))
+    // BigQuery has no abbreviations; weeks roll Monday in Snowflake, Sunday elsewhere
+    intercept[UnsupportedError](Dialect.BqParts("dd", "DATE_DIFF"))
+    assert(vocab.map(_._2.weekAnchor) ===
+      Seq("0001-01-01", "0001-01-07", "0001-01-07", "0001-01-07", "0001-01-07"))
   }
 }
 

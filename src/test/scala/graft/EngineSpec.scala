@@ -581,16 +581,16 @@ class EngineSpec extends SparkSpec {
 
   test("dialect: Snowflakeish constructs — textual rewrites") {
     assert(Dialect.snowDateAdd("SELECT DATEADD(day, 5, d)") ===
-      "SELECT date_add(d, (5))")
+      "SELECT ((d) + make_interval(0, 0, 0, (5)))")
     assert(Dialect.snowDateAdd("SELECT DATEADD('month', n, d)") ===
-      "SELECT add_months(d, (n))")
+      "SELECT ((d) + make_interval(0, (n)))")
     assert(Dialect.snowDateAdd("SELECT DATEADD(yyyy, 1, d)") ===
-      "SELECT add_months(d, 12 * (1))")
+      "SELECT ((d) + make_interval((1)))")
     assert(Dialect.snowDateDiff("SELECT DATEDIFF(year, a, b)") ===
       "SELECT (year(b) - year(a))")
     assert(Dialect.snowDateDiff("SELECT DATEDIFF(day, a, b)") ===
       "SELECT date_diff((b), (a))")
-    assert(Dialect.translateSnowflakeFormat("YYYY-MM-DD HH24:MI:SS") ===
+    assert(Dialect.translateFormat("YYYY-MM-DD HH24:MI:SS", Dialect.SnowFormat) ===
       "yyyy-MM-dd HH:mm:ss")
     assert(Dialect.toVarchar("SELECT TO_VARCHAR(x)") ===
       "SELECT CAST(x AS STRING)")
@@ -613,7 +613,7 @@ class EngineSpec extends SparkSpec {
   test("dialect: BigQueryish — SAFE_CAST/type names/FORMAT_DATE/DATE_DIFF") {
     val r = Dialect.BigQueryish.rewrite(spark,
       "SELECT SAFE_CAST(x AS INT64) AS a, FORMAT_DATE('%Y', d) AS b, DATE_DIFF(e2, e1, DAY) AS c")
-    assert(r === "SELECT try_cast(x AS BIGINT) AS a, date_format(d, 'yyyy') AS b, datediff((e2), (e1)) AS c")
+    assert(r === "SELECT try_cast(x AS BIGINT) AS a, date_format(d, 'yyyy') AS b, date_diff((e2), (e1)) AS c")
     val out = Engine.execute(spark,
       "SELECT SAFE_CAST(a AS FLOAT64) AS bad, SAFE_CAST(c AS STRING) AS cs FROM t1 ORDER BY `a` LIMIT 1",
       Map("t1" -> t1), Dialect.BigQueryish)
@@ -624,10 +624,10 @@ class EngineSpec extends SparkSpec {
 
   test("dialect: MySqlish constructs — textual rewrites") {
     // MySQL's table, NOT strftime: %i = minutes, %M = month name, %e unpadded
-    assert(Dialect.translateMysqlFormat("%Y-%m-%d") === "yyyy-MM-dd")
-    assert(Dialect.translateMysqlFormat("%d/%m/%Y %H:%i:%s") === "dd/MM/yyyy HH:mm:ss")
-    assert(Dialect.translateMysqlFormat("%W, %M %e") === "EEEE, MMMM d")
-    intercept[UnsupportedError](Dialect.translateMysqlFormat("%Q"))
+    assert(Dialect.translateFormat("%Y-%m-%d", Dialect.MysqlFormat) === "yyyy-MM-dd")
+    assert(Dialect.translateFormat("%d/%m/%Y %H:%i:%s", Dialect.MysqlFormat) === "dd/MM/yyyy HH:mm:ss")
+    assert(Dialect.translateFormat("%W, %M %e", Dialect.MysqlFormat) === "EEEE, MMMM d")
+    intercept[UnsupportedError](Dialect.translateFormat("%Q", Dialect.MysqlFormat))
     assert(Dialect.mysqlDateFns("SELECT DATE_FORMAT(d, '%Y-%m') AS ym") ===
       "SELECT date_format(d, 'yyyy-MM') AS ym")
     // %-free literals are LITERAL TEXT in MySQL ("characters are copied
@@ -701,10 +701,10 @@ class EngineSpec extends SparkSpec {
   }
 
   test("dialect: strftime format translation and letter-run quoting") {
-    assert(Dialect.translateStrftimeFormat("%Y-%m-%d") === "yyyy-MM-dd")
-    assert(Dialect.translateStrftimeFormat("day %d of %B") === "'day 'dd' of 'MMMM")
-    assert(Dialect.translateStrftimeFormat("%H:%M:%S%%") === "HH:mm:ss%")
-    intercept[UnsupportedError](Dialect.translateStrftimeFormat("%Q"))
+    assert(Dialect.translateFormat("%Y-%m-%d", Dialect.StrftimeFormat) === "yyyy-MM-dd")
+    assert(Dialect.translateFormat("day %d of %B", Dialect.StrftimeFormat) === "'day 'dd' of 'MMMM")
+    assert(Dialect.translateFormat("%H:%M:%S%%", Dialect.StrftimeFormat) === "HH:mm:ss%")
+    intercept[UnsupportedError](Dialect.translateFormat("%Q", Dialect.StrftimeFormat))
     assert(Dialect.strftime("SELECT strftime(d, '%Y-%m') FROM t") ===
       "SELECT date_format(d, 'yyyy-MM') FROM t")
     // nested call in the first argument survives the arg split
@@ -1067,5 +1067,101 @@ class EngineSpec extends SparkSpec {
     sameRows(256, Dialect.BigQueryish, "ORDER BY a")(
       i => s"array(c, c + 1, c + 2)[SAFE_OFFSET(${i % 4})]",
       i => s"try_element_at(array(c, c + 1, c + 2), ${i % 4 + 1})")
+  }
+
+  /** The single value `stmt` returns in dialect `d`: its type name and
+    * its string form (NULL as null).
+    */
+  private def typedValue(stmt: String, d: Dialect,
+      tables: Map[String, org.apache.spark.sql.DataFrame] = Map.empty): (String, String) = {
+    val df = Engine.execute(spark, stmt, tables, d)
+    (df.schema.head.dataType.typeName,
+      df.selectExpr(s"CAST(`${df.columns.head}` AS STRING)").head().getString(0))
+  }
+
+  test("DATEADD family keeps a timestamp's time of day in every dialect") {
+    initLog()
+    val ts = "TIMESTAMP '2024-01-31 10:30:00'"
+    val want = Seq("day" -> "2024-02-01", "week" -> "2024-02-07", "month" -> "2024-02-29",
+      "quarter" -> "2024-04-30", "year" -> "2025-01-31")
+    for (d <- Seq(Dialect.Snowflakeish, Dialect.TsqlIsh, Dialect.RedshiftIsh); (part, day) <- want)
+      assert(typedValue(s"SELECT DATEADD($part, 1, $ts) AS x", d) ===
+        (("timestamp", s"$day 10:30:00")), s"$d $part")
+    assert(typedValue(s"SELECT DATEADD('day', 1, $ts) AS x", Dialect.TableauIsh) ===
+      (("timestamp", "2024-02-01 10:30:00")))
+    assert(typedValue(s"SELECT TIMESTAMP_ADD($ts, INTERVAL 1 DAY) AS x", Dialect.BigQueryish) ===
+      (("timestamp", "2024-02-01 10:30:00")))
+    assert(typedValue(s"SELECT TIMESTAMP_SUB($ts, INTERVAL 1 MONTH) AS x", Dialect.BigQueryish) ===
+      (("timestamp", "2023-12-31 10:30:00")))
+    assert(typedValue("SELECT ADD_DAYS(TIMESTAMP '2020-01-02 03:04:05', 1) AS x", Dialect.ExasolIsh) ===
+      (("timestamp", "2020-01-03 03:04:05")))
+    // Snowflake's own TO_VARCHAR over DATEADD reads the time of day
+    assert(typedValue(s"SELECT TO_VARCHAR(DATEADD(day, 1, TIMESTAMP '2024-01-05 10:30:00'), " +
+      "'YYYY-MM-DD HH24:MI') AS x", Dialect.Snowflakeish) === (("string", "2024-01-06 10:30")))
+  }
+
+  test("DATEADD family: DATE in gives DATE out, month ends clamp, NULL and BIGINT counts") {
+    initLog()
+    val want = Seq("day" -> "2024-02-01", "week" -> "2024-02-07", "month" -> "2024-02-29",
+      "quarter" -> "2024-04-30", "year" -> "2025-01-31")
+    for (d <- Seq(Dialect.Snowflakeish, Dialect.TsqlIsh, Dialect.RedshiftIsh); (part, day) <- want)
+      assert(typedValue(s"SELECT DATEADD($part, 1, DATE '2024-01-31') AS x", d) ===
+        (("date", day)), s"$d $part")
+    assert(typedValue("SELECT DATE_ADD(DATE '2024-01-31', INTERVAL 1 MONTH) AS x",
+      Dialect.BigQueryish) === (("date", "2024-02-29")))
+    assert(typedValue("SELECT DATEADD('month', 1, DATE '2024-01-31') AS x",
+      Dialect.TableauIsh) === (("date", "2024-02-29")))
+    assert(typedValue("SELECT ADD_MONTHS(DATE '2024-01-31', 1) AS x",
+      Dialect.ExasolIsh) === (("date", "2024-02-29")))
+    for (part <- Seq("day", "month"))
+      assert(typedValue(s"SELECT DATEADD($part, CAST(NULL AS INT), DATE '2024-01-05') AS x",
+        Dialect.Snowflakeish) === (("date", null)))
+    import spark.implicits._
+    val t = Seq((java.sql.Date.valueOf("2024-01-05"), 3L)).toDF("d", "n")
+    assert(typedValue("SELECT DATEADD(day, n, d) AS x FROM t", Dialect.TsqlIsh, Map("t" -> t)) ===
+      (("date", "2024-01-08")))
+    assert(typedValue("SELECT DATEADD(month, n, d) AS x FROM t", Dialect.TsqlIsh, Map("t" -> t)) ===
+      (("date", "2024-04-05")))
+  }
+
+  test("DATEADD over a string gives the timestamp's string") {
+    initLog()
+    // Spark adds the interval to the string read as a timestamp
+    assert(typedValue("SELECT DATEADD(day, 1, '2024-01-05') AS x", Dialect.Snowflakeish) ===
+      (("string", "2024-01-06 00:00:00")))
+  }
+
+  test("tsql: CAST, TRY_CAST and CONVERT map SQL Server type names") {
+    initLog()
+    val v = "'2024-01-05 10:30:00'"
+    for (q <- Seq(s"SELECT CONVERT(DATETIME2, $v) AS x", s"SELECT CAST($v AS DATETIME) AS x",
+        s"SELECT CAST($v AS DATETIME2) AS x", s"SELECT TRY_CAST($v AS SMALLDATETIME) AS x"))
+      assert(typedValue(q, Dialect.TsqlIsh) === (("timestamp", "2024-01-05 10:30:00")), q)
+    assert(typedValue("SELECT TRY_CAST('x' AS DATETIME2) AS x", Dialect.TsqlIsh) ===
+      (("timestamp", null)))
+    // T-SQL FLOAT is binary64, as CONVERT already maps it
+    assert(typedValue("SELECT CAST(1.5 AS FLOAT) AS x", Dialect.TsqlIsh) === (("double", "1.5")))
+    assert(typedValue("SELECT CAST(1 AS BIT) AS x", Dialect.TsqlIsh) === (("boolean", "true")))
+    // a name the map does not know passes through to Spark, as before
+    assert(typedValue("SELECT CAST(7 AS STRING) AS x", Dialect.TsqlIsh) === (("string", "7")))
+    assert(Dialect.tsqlCast("CAST(x AS INT), TRY_CAST(y AS GEOGRAPHY)") ===
+      "CAST(x AS INT), TRY_CAST(y AS GEOGRAPHY)")
+    assert(Dialect.tsqlCast("CAST(CAST(x AS DATE) AS DATETIME2)") ===
+      "CAST(CAST(x AS DATE) AS TIMESTAMP)")
+  }
+
+  test("dialect: READ_CSV inside a comment is text, not a call") {
+    initLog()
+    for (q <- Seq("SELECT 1 AS f -- READ_CSV('/nonexistent/x.csv') AS t",
+        "SELECT 1 AS f /* READ_CSV('/nonexistent/x.csv') AS t */",
+        "SELECT 'READ_CSV(''/nonexistent/x.csv'')' AS f"))
+      assert(Engine.execute(spark, q, dialect = Dialect.DuckDbish).count() === 1, q)
+  }
+
+  test("dialect: a Spark error raised while rewriting reaches the caller as ExecuteError") {
+    initLog()
+    val e = intercept[ExecuteError](Engine.execute(spark,
+      "SELECT * FROM READ_CSV('/nonexistent/x.csv') AS t", dialect = Dialect.DuckDbish))
+    assert(e.getCause.isInstanceOf[org.apache.spark.sql.AnalysisException])
   }
 }

@@ -64,7 +64,7 @@ class SemanticsSpec extends SparkSpec {
 
   test("Exasol ADD_unit forms never silently truncate a timestamp's time-of-day") {
     initLog()
-    // ADD_MONTHS/ADD_YEARS are fully type-preserving (typed YM interval)
+    // ADD_MONTHS/ADD_YEARS are type-preserving
     val row = Engine.execute(spark,
       """SELECT ADD_MONTHS(TIMESTAMP '2020-01-31 23:59:59', 1) AS ts2,
         |       ADD_YEARS(DATE '2020-02-29', 1) AS d2,
@@ -78,16 +78,15 @@ class SemanticsSpec extends SparkSpec {
     assert(r.getAs[java.sql.Timestamp]("ts2").toString === "2020-02-29 23:59:59.0")
     assert(r.getAs[java.sql.Date]("d2").toString === "2021-02-28")
     assert(r.getAs[java.sql.Date]("d1").toString === "2020-01-03")
-    // ADD_DAYS on a midnight timestamp truncates losslessly…
-    val mid = Engine.execute(spark,
-      "SELECT ADD_DAYS(TIMESTAMP '2020-01-02 00:00:00', 1) AS d",
-      dialect = Dialect.ExasolIsh).head().getAs[java.sql.Date]("d")
-    assert(mid.toString === "2020-01-03")
-    // …but a real time-of-day raises instead of silently drifting
-    intercept[Exception](Engine.execute(spark,
-      "SELECT ADD_DAYS(TIMESTAMP '2020-01-02 03:04:05', 1) AS d",
-      dialect = Dialect.ExasolIsh).collect())
-    // NULL input propagates NULL (never trips the guard's raise_error)
+    // ADD_DAYS/ADD_WEEKS keep a timestamp's time of day
+    val ts = Engine.execute(spark,
+      """SELECT ADD_DAYS(TIMESTAMP '2020-01-02 03:04:05', 1) AS d,
+        |       ADD_WEEKS(TIMESTAMP '2020-01-02 03:04:05', 2) AS w""".stripMargin,
+      dialect = Dialect.ExasolIsh)
+    assert(ts.schema.map(_.dataType.typeName) === Seq("timestamp", "timestamp"))
+    assert(ts.head().getAs[java.sql.Timestamp]("d").toString === "2020-01-03 03:04:05.0")
+    assert(ts.head().getAs[java.sql.Timestamp]("w").toString === "2020-01-16 03:04:05.0")
+    // NULL input propagates NULL
     assert(Engine.execute(spark,
       "SELECT ADD_DAYS(CAST(NULL AS TIMESTAMP), 1) AS d",
       dialect = Dialect.ExasolIsh).head().isNullAt(0))
